@@ -1,49 +1,57 @@
-"""Distributed, deterministic gradient-boosted-tree TRAINING.
+"""Distributed, deterministic gradient-boosted-tree TRAINING — the one
+boosting engine every trainer in ext/ runs on.
 
 The reference's actual model family is XGBoost with histogram split
 finding (`ml/models/fraud_detector.py:36,154` —
 ``XGBClassifier(tree_method="hist")``, fitted by `train.py:201` after
-pulling the feature table to one machine). The engine already *serves*
-a GBT (`q_gbt_scores` compiles an ensemble to CASE expressions); this
-module closes the loop by FITTING one, in the only shape that survives
-100 TB — the insight being that ``tree_method=hist`` is literally an
-aggregation pipeline:
+pulling the feature table to one machine), tuned by a 3-fold CV
+Optuna study. ``tree_method=hist`` is literally an aggregation
+pipeline, so this module fits it as Spark aggregates:
 
 - **Binning**: each feature quantizes once into ``GBT_BINS`` fixed
-  buckets of its scaled [0,1] range (the FEATURE_SCALES discipline) —
-  row-local, computed once, reused by every round and level.
-- **Split finding**: per boosting round × per tree level, ONE groupBy
-  over (node, feature, bin) summing micro-floored gradient/hessian
-  integers through exact BIGINT folds (map-side combined; ≤
-  nodes·d·B cells — bytes, not rows, cross the wire). Cumulative
-  sums over bins give every candidate split's (G_L, H_L); the greedy
-  argmax of the standard XGBoost gain
-  ``G_L²/(H_L+λ) + G_R²/(H_R+λ) − G²/(H+λ)``
-  is a deterministic fold over ≤ d·B candidates (gain desc, feature
-  index asc, bin asc — the q_bpe_merges argmax-per-round pattern).
-- **Leaf values**: ``w = −G_leaf/(H_leaf+λ)`` from the SAME collected
-  histogram — no extra pass.
-- **Boosting**: the partial ensemble compiles to nested CASE
-  expressions (exactly the q_gbt_scores / q_naive_bayes_score
-  model-as-Catalyst-expression discipline), so next round's gradients
-  are row-local inside codegen: ``p = round6(σ(f)), g = p − y,
-  h = p·(1−p)`` micro-floored to integers.
+  buckets of its scaled [0,1] range (the FEATURE_SCALES discipline).
+  :func:`_binned_frame` then collapses the rows to distinct
+  (label, fold, subsample-bucket, bin) vectors with exact ``__cnt``
+  multiplicities — histogram boosting's weighted-instance form.
+- **Descent** (:func:`_descend`): the input is that one frame plus a
+  list of (fold, nine-axis config) models. Per round every model's
+  sigmoid and micro-floored gradient/hessian integers are staged once
+  and the working frame is persisted; per (round, level) ONE stacked
+  ``groupBy(m, node, feature, bin)`` sums every model's integer
+  micros side by side (≤ models·2^L·d·B cells — bytes, not rows,
+  cross the wire). The greedy argmax of the XGBoost gain
+  ``G_L²/(H_L+λ) + G_R²/(H_R+λ) − G²/(H+λ)`` over each node's
+  cumulative bins is a deterministic driver fold (gain desc, feature
+  index asc, bin asc), and leaf values ``w = −G/(H+λ)`` come from the
+  SAME histogram. Trees are heap-indexed (root=1, children of n are
+  2n/2n+1).
+- **Axes**: depth; row subsample (a per-round content-hash bucket and
+  a post-stack filter); column subsample (plan-time stack entries);
+  scale_pos_weight (inside the staged gm/hm); min_child_weight and
+  reg_alpha (driver-side, in :func:`_argmax_split_sub`); CV folds (a
+  post-stack ``fold != __fold`` filter keeps each model's complement).
+- **Boosting**: each model's partial ensemble logit rides as a
+  persisted ``__f_<m>`` column, so no plan holds more than one tree
+  cascade per model.
 
-Driver state is the tree list (3 trees × 7 structure fields — the
-sanctioned model-broadcast scalar class); per round the engine runs
-exactly TWO aggregate jobs (root histogram, children histogram).
+Every public trainer — :func:`train_gbt`, :func:`train_gbt_grid`,
+ext/gbt_deep's ``train_gbt_deep`` / ``train_gbt_grid_deep`` /
+``train_gbt_grid_full`` and ext/gbt_cv's ``train_gbt_grid_cv`` /
+``train_gbt_grid_full_cv`` — is a thin mapping of its arguments onto
+engine models. The depth-2 trainers return the ``{"root", "left",
+"right", "w_ll"…}`` dict the serving and SHAP code reads.
 
 Determinism contract (the q_logreg_train conventions, extended to
 tree structure): probabilities det-round to 6 before the gradient;
 gradient/hessian contributions are integer micros summed exactly;
 gains are IEEE doubles computed by the identical expression in Spark
-(driver Python), generated DuckDB SQL, and the NumPy replay
-(tests/test_gbt.py), so the argmax — and therefore the TREE ITSELF —
-is bit-identical across engines and partition layouts. The oracle
-unrolls the same rounds as generated MATERIALIZED CTE blocks
-(per-row node/side resolution goes through the stacked long form
-joined to the 1-row best-split tables, the standard trick for
-"CASE on a data-dependent column name" in SQL).
+(driver Python), generated DuckDB SQL, and the NumPy replays
+(tests/test_gbt*.py), so the argmax — and therefore the TREE ITSELF —
+is bit-identical across engines, partition layouts, and model
+stackings. The oracle unrolls the same rounds as generated
+MATERIALIZED CTE blocks (per-row node/side resolution goes through
+the stacked long form joined to the 1-row best-split tables, the
+standard trick for "CASE on a data-dependent column name" in SQL).
 
 Cites: reference `ml/models/fraud_detector.py:36,154` (XGBClassifier,
 tree_method=hist), `ml/models/train.py:201` (fit call),
@@ -53,12 +61,14 @@ reproduced, execution re-architected.
 
 from __future__ import annotations
 
+import hashlib
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import _x_expr, _x_sql
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
 
@@ -82,82 +92,6 @@ def _r6(x: float) -> float:
     return math.floor(x * 1e6 + 0.5) / 1e6
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Spread a CPU-bound trainer working frame to the session's full
-    parallelism when its input arrives narrower (r17, guide §2.6/§1.2
-    step 2). Used ONLY by the fold-fused CV trainers, whose stacked
-    scans carry folds × configs × features entries per row (~14M
-    generated rows/level at bench scale) — there the 4-partition fv
-    layout leaves 7/8 of a local[32] session idle and spreading
-    measured 19 vs 31 s on q_model_selection_cv_full. The single-fold
-    trainers measured FASTER without it (grid_full 5.9 vs 7-10 s,
-    depth-2 grid 2.4 vs 4.2 s: with the partial-logit __f columns
-    their scans are scheduling-bound, and 32 tasks × 2 stages per
-    tiny aggregate cost more than the 4-way compute saves) — rejected
-    there after interleaved A/B. Exact integer micro-sums make every
-    downstream histogram layout-independent, so the trees are
-    bit-identical either way (law-pinned). On a cluster whose fv
-    already carries ≥ defaultParallelism partitions this is a no-op."""
-    sc = df.sparkSession.sparkContext
-    p = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < p:
-        df = df.repartition(p)
-    return df
-
-
-def _compress_binned(binned: DataFrame, wide: bool = False) -> DataFrame:
-    """Collapse a trainer's binned working frame to ONE row per
-    distinct column vector with an exact ``__cnt`` multiplicity (r17,
-    guide §2.3 "shuffle keys and metadata instead of payloads" applied
-    to the trainer's own scans). Every per-row quantity the descent
-    computes — the staged sigmoid, gradients, hessians, node paths,
-    partial logits — is a pure function of the frame's columns (label,
-    bin vector, and any fold/sample keys the caller kept), so rows
-    with equal vectors contribute IDENTICAL integer micros to every
-    histogram cell; summing ``__cnt·gm`` over the distinct rows is the
-    same integer as summing ``gm`` over the raw rows — the trees are
-    bit-identical (NumPy-replay- and law-pinned). At bench scale this
-    is a 43× row cut (600k → 14,022 distinct (label, 8-bin) vectors),
-    taken once up front by one exchange of the un-amplified rows;
-    every subsequent (round, level) histogram job then scans the
-    compressed frame. At 100 TB the compression ratio is the
-    cardinality of the binned feature space (≤ label·B^d, data-bounded
-    by the distinct vectors actually present) over the row count —
-    histogram boosting's standard weighted-instance form.
-
-    The compressed frame coalesces to defaultParallelism/8 partitions
-    (override: ``spark.rtfril.gbt.compress.parts``): after the 40×
-    row cut every (round, level) histogram job is task-launch-bound,
-    and 32 shuffle partitions × 2 stages of setup cost more than the
-    remaining compute (measured on train_gbt_deep at local[32]:
-    4.9 s at 32 parts → 2.2 s at 4). The divisor keeps the setting
-    scale-adaptive — a 1000-core cluster still fans the (possibly
-    millions-of-rows) compressed frame across 125 tasks.
-
-    ``wide=True`` (the fold-fused CV trainers) keeps the frame at full
-    defaultParallelism instead: their stacks multiply every row by
-    folds × configs × features (~200 arms), so even the compressed
-    frame feeds a compute-bound generate+aggregate — there narrow
-    layouts measured 25 s vs 17 s on q_model_selection_cv_full."""
-    spark = binned.sparkSession
-    dp = spark.sparkContext.defaultParallelism
-    parts = (
-        dp
-        if wide
-        else int(
-            spark.conf.get(
-                "spark.rtfril.gbt.compress.parts",
-                str(max(1, dp // 8)),
-            )
-        )
-    )
-    return (
-        binned.groupBy(*binned.columns)
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-        .coalesce(parts)
-    )
-
-
 def _bin_expr(f: str, scales: dict[str, float] | None, bins: int) -> Column:
     """least(greatest(floor(x_scaled·B), 0), B−1) — identical text in
     :func:`_bin_sql`; features are scaled into [0,1] so the clamp only
@@ -173,15 +107,33 @@ def _bin_sql(f: str, bins: int) -> str:
     )
 
 
-def _gain(glm: int, hlm: int, gm: int, hm: int, lam: float) -> float:
-    """XGBoost split gain from integer micro-sums — the EXACT
-    expression the SQL oracle writes (same operation order, so the
-    resulting doubles are bit-identical and the argmax transfers)."""
-    gl = glm / 1e6
+# --- split finding ------------------------------------------------------------
+
+
+def _thr(g_micro: int, alpha_micro: int) -> int:
+    """XGBoost's ThresholdL1 on an integer micro gradient sum — EXACT
+    integer arithmetic, identical on both engines: g−α if g>α, g+α if
+    g<−α, else 0. α=0 is the identity (the unregularized path)."""
+    if g_micro > alpha_micro:
+        return g_micro - alpha_micro
+    if g_micro < -alpha_micro:
+        return g_micro + alpha_micro
+    return 0
+
+
+def _gain(
+    glm: int, hlm: int, gm: int, hm: int, lam: float, alpha_micro: int = 0
+) -> float:
+    """XGBoost split gain from integer micro-sums, every gradient sum
+    L1-thresholded by reg_alpha (`fraud_detector.py:266`; α=0 is the
+    identity) — the EXACT expression the SQL oracles write (same
+    operation order, so the resulting doubles are bit-identical and
+    the argmax transfers)."""
+    gl = _thr(glm, alpha_micro) / 1e6
     hl = hlm / 1e6
-    gr = (gm - glm) / 1e6
+    gr = _thr(gm - glm, alpha_micro) / 1e6
     hr = (hm - hlm) / 1e6
-    g = gm / 1e6
+    g = _thr(gm, alpha_micro) / 1e6
     h = hm / 1e6
     return (gl * gl) / (hl + lam) + (gr * gr) / (hr + lam) - (g * g) / (h + lam)
 
@@ -199,34 +151,36 @@ def _gain_sql(glm: str, hlm: str, gm: str, hm: str, lam: float) -> str:
     )
 
 
-def _leaf_w(glm: int, hlm: int, lam: float) -> float:
-    """w = −G/(H+λ) from integer micro-sums — same text as the SQL."""
-    return -(glm / 1e6) / ((hlm / 1e6) + lam)
+def _leaf_w(glm: int, hlm: int, lam: float, alpha_micro: int = 0) -> float:
+    """w = −ThresholdL1(G)/(H+λ) from integer micro-sums — same text as
+    the SQL; α=0 is XGBoost's plain −G/(H+λ)."""
+    return -(_thr(glm, alpha_micro) / 1e6) / ((hlm / 1e6) + lam)
 
 
-def _argmax_split(
+def _argmax_split_sub(
     cells: list[tuple[int, int, int, int]],
-    features: tuple[str, ...],
+    active: tuple[int, ...],
     lam: float,
+    mcw_micro: int = 0,
+    alpha_micro: int = 0,
 ) -> tuple[int, int, int, int, int, int, float]:
-    """Greedy best split over histogram cells (fidx, bin, gs, hs):
-    returns (fidx, bin, gl_m, hl_m, g_m, h_m, gain). Deterministic
-    fold: strictly-greater gain wins, so ties keep the smallest
-    (fidx, bin) — matching ORDER BY gain DESC, fidx, bin LIMIT 1.
+    """Greedy best split over histogram cells (fidx, bin, gs, hs) of
+    the eligible features ``active``: returns (fidx, bin, gl_m, hl_m,
+    g_m, h_m, gain). Node totals come from the smallest eligible
+    feature's cells (every row carries every feature, so any one
+    feature's cells partition the node). Strictly-greater gain wins,
+    so ties keep the smallest (fidx, bin) — matching ORDER BY gain
+    DESC, fidx, bin LIMIT 1.
 
     Candidates are INTERIOR only — each feature's last occupied bin
     is excluded (its "split" sends every row left; XGBoost's
-    enumeration never proposes a split with an empty child). Found
-    at r15: on a weak-signal fold a large λ can push every interior
-    gain below the boundary's exact 0.0, so including the boundary
-    turned an over-regularized-but-valid config into a degenerate
-    crash. A node with a single occupied bin in EVERY feature has no
-    admissible split at all → ValueError (the gated-domain
-    contract; the SQL oracles' chk CTEs error() identically)."""
+    enumeration never proposes a split with an empty child). With
+    ``mcw_micro`` (min_child_weight, `fraud_detector.py:265`) both
+    children must also carry that much hessian. A node with no
+    admissible candidate raises ValueError, and so does an empty
+    frame (the gated-domain contract; the SQL oracles' chk CTEs
+    error() identically)."""
     if not cells:
-        # empty input frame (ADVICE r15): fail with the gated-domain
-        # contract, not a raw KeyError — the SQL oracles' nz guard
-        # error()s identically
         raise ValueError(
             "empty feature frame: GBT training needs at least one row "
             "— outside the gated GBT domain"
@@ -234,45 +188,467 @@ def _argmax_split(
     by_f: dict[int, list[tuple[int, int, int]]] = {}
     for fidx, b, gs, hs in cells:
         by_f.setdefault(fidx, []).append((b, gs, hs))
-    # node totals from feature 0's cells (every row carries every
-    # feature, so any one feature's cells partition the node)
-    g_m = sum(gs for b, gs, hs in by_f[0])
-    h_m = sum(hs for b, gs, hs in by_f[0])
+    f0 = min(active)
+    g_m = sum(gs for _b, gs, _hs in by_f[f0])
+    h_m = sum(hs for _b, _gs, hs in by_f[f0])
     best = None
-    for fidx in range(len(features)):
+    for fidx in active:
         glm = 0
         hlm = 0
-        occupied = sorted(by_f.get(fidx, []))
-        for b, gs, hs in occupied[:-1]:  # interior candidates only
+        for b, gs, hs in sorted(by_f.get(fidx, []))[:-1]:
             glm += gs
             hlm += hs
-            gain = _gain(glm, hlm, g_m, h_m, lam)
+            if mcw_micro and (hlm < mcw_micro or (h_m - hlm) < mcw_micro):
+                continue
+            gain = _gain(glm, hlm, g_m, h_m, lam, alpha_micro)
             if best is None or gain > best[0]:
                 best = (gain, fidx, b, glm, hlm)
     if best is None:
         raise ValueError(
-            "unsplittable node: every feature has a single occupied bin "
-            "— no admissible (non-empty-child) split exists; the input "
-            "is outside the gated GBT domain"
+            "unsplittable node: no admissible split exists (every "
+            "eligible feature single-bin, or no candidate satisfies "
+            "min_child_weight) — the input is outside the gated GBT domain"
         )
     gain_v, fidx, b, glm, hlm = best
     return fidx, b, glm, hlm, g_m, h_m, gain_v
 
 
-def _tree_logit_on_bins(tree: dict, features: tuple[str, ...]) -> Column:
-    """Tree value over the b_<feature> bin columns of the working
-    frame (the trainer's inner loop — the raw-feature form for
-    serving is :func:`gbt_trained_logit_expr`)."""
-    rf, rb = tree["root"]
-    lf, lb = tree["left"]
-    rrf, rrb = tree["right"]
-    left = F.when(
-        F.col(f"b_{features[lf]}") <= lb, F.lit(tree["w_ll"])
-    ).otherwise(F.lit(tree["w_lr"]))
-    right = F.when(
-        F.col(f"b_{features[rrf]}") <= rrb, F.lit(tree["w_rl"])
-    ).otherwise(F.lit(tree["w_rr"]))
-    return F.when(F.col(f"b_{features[rf]}") <= rb, left).otherwise(right)
+def _argmax_split(
+    cells: list[tuple[int, int, int, int]],
+    features: tuple[str, ...],
+    lam: float,
+) -> tuple[int, int, int, int, int, int, float]:
+    """:func:`_argmax_split_sub` over every feature."""
+    return _argmax_split_sub(cells, tuple(range(len(features))), lam)
+
+
+# --- deterministic sampling schedules -----------------------------------------
+
+
+def col_subset(
+    features: tuple[str, ...], t: int, colsample: float | None
+) -> tuple[int, ...]:
+    """The round-``t`` eligible feature INDICES under
+    ``colsample_bytree``: rank by md5(feature || '#r<t>'), keep the
+    first max(1, floor(colsample·d)), return in ascending original
+    index order (the argmax tie-break iterates original order). Pure
+    plan-time function — engine and oracle call the same code."""
+    if colsample is None or colsample >= 1.0:
+        return tuple(range(len(features)))
+    k = max(1, math.floor(colsample * len(features)))
+    ranked = sorted(
+        range(len(features)),
+        key=lambda i: hashlib.md5(
+            f"{features[i]}#r{t}".encode()
+        ).hexdigest(),
+    )
+    return tuple(sorted(ranked[:k]))
+
+
+def _sub_pct(subsample: float) -> int:
+    return int(round(subsample * 100))
+
+
+def _sub_ranks(configs) -> tuple[list[int], list[int]]:
+    """(thresholds, ranks) for the row subsample: the configs' distinct
+    percentages ascending, and each config's 1-based rank among them
+    (len+1 = no sampling). A row's round-t selection hash
+    ``h = hash60(o_orderkey ‖ '#r<t>') % 100`` enters the frame only
+    as its bucket ``#{thr ≤ h}``, and ``h < pct_c ⟺ bucket < rank_c``
+    — the bucket carries every per-(row, config, round) decision bit."""
+    pcts = [
+        100 if c[5] is None or c[5] >= 1.0 else _sub_pct(c[5]) for c in configs
+    ]
+    thrs = sorted({p for p in pcts if p < 100})
+    ranks = [thrs.index(p) + 1 if p < 100 else len(thrs) + 1 for p in pcts]
+    return thrs, ranks
+
+
+# --- tree expressions over the working frame's bin columns ---------------------
+
+
+def deep_tree_logit_on_bins(tree: dict, features: tuple[str, ...]) -> Column:
+    """Heap tree value over the b_<feature> bin columns of a binned
+    frame (the engine's inner loop and the holdout scorers)."""
+
+    def node_expr(n: int) -> Column:
+        if n in tree["leaves"]:
+            return F.lit(float(tree["leaves"][n]))
+        fidx, b = tree["splits"][n]
+        return F.when(
+            F.col(f"b_{features[fidx]}") <= b, node_expr(2 * n)
+        ).otherwise(node_expr(2 * n + 1))
+
+    return node_expr(1)
+
+
+def _ensemble_on_bins(
+    trees: list[dict], eta: float, features: tuple[str, ...]
+) -> Column:
+    """Left-associated ensemble logit Σ η·tree over the bin columns."""
+    z: Column = F.lit(0.0)
+    for tr in trees:
+        z = z + F.lit(float(eta)) * deep_tree_logit_on_bins(tr, features)
+    return z
+
+
+def _stack_scores(
+    frame: DataFrame,
+    ensembles: list[list[dict]],
+    etas: list[float],
+    features: tuple[str, ...],
+) -> DataFrame:
+    """(label, __cnt, cfg, s): each config's round6 sigmoid staged as a
+    column of ``frame`` (label, b_* bins, __cnt), stacked long."""
+    staged = frame.select(
+        "label",
+        "__cnt",
+        *[
+            det_round(
+                F.lit(1.0)
+                / (F.lit(1.0) + F.exp(-_ensemble_on_bins(trs, eta, features))),
+                6,
+            ).alias(f"s_{i}")
+            for i, (trs, eta) in enumerate(zip(ensembles, etas))
+        ],
+    )
+    pairs = ", ".join(f"{i}, s_{i}" for i in range(len(ensembles)))
+    return staged.selectExpr(
+        "label", "__cnt", f"stack({len(ensembles)}, {pairs}) AS (cfg, s)"
+    )
+
+
+def _rank_sum_aucs(scored: DataFrame, keys: tuple[str, ...]) -> dict:
+    """Round6 exact Mann-Whitney AUC (average-rank ties) per ``keys``
+    group of a (keys…, s, label, __cnt) frame — q_model_card's
+    reduction, windowed per group over the bounded distinct-score
+    table and reduced by ONE aggregate (one scalar per group to the
+    driver). A one-class group scores 0.0, as the oracles write."""
+    grp = scored.groupBy(*keys, "s").agg(
+        F.sum("__cnt").alias("n"),
+        F.sum(F.col("label").cast("long") * F.col("__cnt")).alias("np"),
+    )
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy("s")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    cum = grp.withColumn("cum_n", F.coalesce(F.sum("n").over(w), F.lit(0)))
+    # the model_metrics avg-rank text
+    avg_rank = (F.col("cum_n") + (F.col("n") + 1) / 2.0).cast("decimal(28,1)")
+    rs = F.col("np").cast("decimal(28,1)") * avg_rank
+    agg = cum.groupBy(*keys).agg(
+        F.sum(rs).alias("rank_sum"),
+        F.sum("np").alias("n_pos"),
+        (F.sum("n") - F.sum("np")).alias("n_neg"),
+    )
+    out = {}
+    for r in agg.collect():
+        n_pos, n_neg = int(r["n_pos"]), int(r["n_neg"])
+        raw = (
+            0.0
+            if n_pos == 0 or n_neg == 0
+            else (float(r["rank_sum"]) - float(n_pos) * (n_pos + 1) / 2)
+            / (float(n_pos) * n_neg)
+        )
+        out[tuple(r[k] for k in keys)] = _r6(raw)
+    return out
+
+
+# --- the engine -----------------------------------------------------------------
+
+#: An engine config: (name, rounds, eta, lam, depth, subsample,
+#: colsample, min_child_weight, reg_alpha, pos_weight) — the nine
+#: axes of the reference's Optuna space plus a name. subsample /
+#: colsample None or ≥1, and pos_weight None or 1, switch the axis off.
+FullConfig = tuple[str, int, float, float, int, float, float, float, float, float]
+
+
+def _cfg(
+    name: str,
+    rounds: int,
+    eta: float,
+    lam: float,
+    depth: int = 2,
+    subsample: float | None = None,
+    colsample: float | None = None,
+    min_child_weight: float = 0.0,
+    reg_alpha: float = 0.0,
+    pos_weight: float | None = None,
+) -> FullConfig:
+    """Widen a trainer's arguments (or a 4-/5-field grid config) to a
+    nine-axis engine config."""
+    return (name, rounds, eta, lam, depth, subsample, colsample,
+            min_child_weight, reg_alpha, pos_weight)
+
+
+def _binned_frame(
+    fv: DataFrame,
+    configs,
+    features: tuple[str, ...],
+    bins: int,
+    label: str,
+    scales: dict[str, float] | None,
+    fold_col: Column | None = None,
+) -> DataFrame:
+    """The engine's one input frame for ``configs``: distinct (label,
+    __fold?, __k_<t> subsample buckets, b_* bins) vectors with an exact
+    ``__cnt`` multiplicity. Every per-row quantity the descent computes
+    is a pure function of these columns, so summing ``__cnt·gm`` over
+    the distinct rows is the same integer as summing ``gm`` over the
+    raw rows — trees are bit-identical (NumPy-replay- and law-pinned)
+    — and at bench scale the rows drop 43× (600k → 14,022). The id
+    itself never enters the frame: subsampling reads only the
+    per-round bucket (see :func:`_sub_ranks`).
+
+    Single-fold frames coalesce to defaultParallelism/8 partitions:
+    after the row cut every (round, level) histogram job is
+    task-launch-bound (train_gbt_deep at local[32]: 4.9 s at 32 parts
+    → 2.2 s at 4), and the divisor keeps a 1000-core cluster at 125
+    tasks. Fold frames (``fold_col`` set) stay at full parallelism:
+    their stacks multiply every row by folds × configs × features, a
+    compute-bound generate+aggregate (25 s narrow vs 17 s wide on
+    q_model_selection_cv_full)."""
+    thrs, _ranks = _sub_ranks(configs)
+    key_rounds = max(c[1] for c in configs) if thrs else 0
+
+    def bucket(t: int) -> Column:
+        key = F.concat(F.col("o_orderkey").cast("string"), F.lit(f"#r{t}"))
+        h = hash60(key) % 100
+        b: Column = F.lit(0)
+        for thr in thrs:
+            b = b + (h >= F.lit(thr)).cast("int")
+        return b.alias(f"__k_{t}")
+
+    vec = fv.select(
+        F.col(label).alias("label"),
+        *([] if fold_col is None else [fold_col.cast("int").alias("__fold")]),
+        *[bucket(t) for t in range(key_rounds)],
+        *[_bin_expr(f, scales, bins).alias(f"b_{f}") for f in features],
+    )
+    dp = fv.sparkSession.sparkContext.defaultParallelism
+    return (
+        vec.groupBy(*vec.columns)
+        .agg(F.count(F.lit(1)).alias("__cnt"))
+        .coalesce(dp if fold_col is not None else max(1, dp // 8))
+    )
+
+
+def _models(configs, folds: int | None) -> list[tuple[int | None, FullConfig]]:
+    """Engine models: one per config, or every (fold, config) pair
+    fold-major when ``folds`` is set."""
+    if folds is None:
+        return [(None, c) for c in configs]
+    return [(f, c) for f in range(folds) for c in configs]
+
+
+def _descend(
+    binned: DataFrame,
+    models: list[tuple[int | None, FullConfig]],
+    features: tuple[str, ...],
+) -> list[list[dict]]:
+    """Fit every (fold, config) model over ONE :func:`_binned_frame`
+    built from the same configs (with ``__fold`` iff the models carry
+    folds). Returns each model's heap-indexed trees::
+
+        {"depth": d, "splits": {node: (fidx, bin)},
+         "gains": {node: gain}, "leaves": {leaf: w}}
+
+    Per round: each live model's sigmoid (det-round 6) and micro-
+    floored gm/hm (×scale_pos_weight in the g·w·1e6 op order, ×__cnt)
+    are staged once into a persisted working frame — the SQL oracle's
+    own rows{t} discipline; the persist materializes inside the level-0
+    job and the previous round's frame is released once its successor
+    exists (and every held frame on any failure). Per (round, level):
+    ONE stacked aggregate over every model still descending; model
+    m's entries enumerate only its round's eligible features, the
+    post-stack filters keep its complement fold and subsampled rows,
+    and its node column is its own heap path. Per-model arithmetic is
+    independent and identically ordered, so each model's trees are
+    bit-identical to fitting it alone (law-pinned), and the job count
+    is set by the (rounds, depth) envelope, not the model count."""
+    cfgs = [c for _f, c in models]
+    folded = models[0][0] is not None
+    thrs, ranks = _sub_ranks(cfgs)
+    max_rounds = max(c[1] for c in cfgs)
+    keep = [
+        "label",
+        *(["__fold"] if folded else []),
+        *[f"b_{f}" for f in features],
+        "__cnt",
+    ]
+    # each stack entry leads with its model id (and fold)
+    key = [
+        f"{m}, " + ("" if f is None else f"{f}, ")
+        for m, (f, _c) in enumerate(models)
+    ]
+    trees: list[list[dict]] = [[] for _ in models]
+    state = binned
+    held: list[DataFrame] = []
+    try:
+        for t in range(max_rounds):
+            live = [m for m, c in enumerate(cfgs) if c[1] > t]
+            ks = [f"__k_{t_}" for t_ in range(t, max_rounds)] if thrs else []
+            staged = state
+            for m in live:
+                z = F.col(f"__f_{m}") if t else F.lit(0.0)
+                staged = staged.withColumn(
+                    f"__p_{m}",
+                    det_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6),
+                )
+            cols: list = [*keep, *ks, *([f"__f_{m}" for m in live] if t else [])]
+            for m in live:
+                p = F.col(f"__p_{m}")
+                g = p - F.col("label").cast("double")
+                h = p * (F.lit(1.0) - p)
+                spw = cfgs[m][9]
+                if spw is not None and float(spw) != 1.0:
+                    wgt = F.when(
+                        F.col("label") == 1, F.lit(float(spw))
+                    ).otherwise(F.lit(1.0))
+                    g, h = g * wgt, h * wgt
+                # ×__cnt: the distinct row stands for cnt identical raw
+                # rows (see _binned_frame) — sums stay exact integers
+                for name, v in ((f"gm_{m}", g), (f"hm_{m}", h)):
+                    cols.append(
+                        (F.floor(v * F.lit(_MICRO) + F.lit(0.5)).cast("long")
+                         * F.col("__cnt")).alias(name)
+                    )
+            work = staged.select(*cols).persist()
+            held.append(work)
+            active = {m: col_subset(features, t, cfgs[m][6]) for m in live}
+            node: dict[int, Column] = {m: F.lit(1) for m in live}
+            new = {
+                m: {"depth": cfgs[m][4], "splits": {}, "gains": {}, "leaves": {}}
+                for m in live
+            }
+            for lvl in range(max(cfgs[m][4] for m in live)):
+                lv = [m for m in live if cfgs[m][4] > lvl]
+                work_l = work
+                for m in lv:
+                    work_l = work_l.withColumn(f"node_{m}", node[m])
+                entries = ", ".join(
+                    f"{key[m]}node_{m}, {i}, b_{features[i]}, gm_{m}, hm_{m}"
+                    for m in lv
+                    for i in active[m]
+                )
+                stacked = work_l.selectExpr(
+                    *(["__fold"] if folded else []),
+                    *([f"__k_{t}"] if thrs else []),
+                    f"stack({sum(len(active[m]) for m in lv)}, {entries}) AS "
+                    f"(m, {'fold, ' if folded else ''}node, fidx, bin, gm, hm)",
+                )
+                if folded:
+                    stacked = stacked.filter("fold != __fold")
+                if thrs:
+                    rank = F.element_at(
+                        F.array(*[F.lit(r) for r in ranks]), F.col("m") + 1
+                    )
+                    stacked = stacked.filter(F.col(f"__k_{t}") < rank)
+                cells: dict[tuple[int, int], list] = {}
+                for r in (
+                    stacked.groupBy("m", "node", "fidx", "bin")
+                    .agg(F.sum("gm").alias("gs"), F.sum("hm").alias("hs"))
+                    .collect()
+                ):
+                    cells.setdefault((r["m"], r["node"]), []).append(
+                        (r["fidx"], r["bin"], r["gs"], r["hs"])
+                    )
+                nodes_at = range(2**lvl, 2 ** (lvl + 1))
+                for m in lv:
+                    name, _r, _e, lam, depth, _s, _c, mcw, alpha, _w = cfgs[m]
+                    lam = float(lam)
+                    mcw_m = int(round(float(mcw) * 1e6))
+                    alpha_m = int(round(float(alpha) * 1e6))
+                    empty = [n for n in nodes_at if (m, n) not in cells]
+                    if lvl and empty:  # an empty frame fails in the argmax
+                        fold = models[m][0]
+                        raise ValueError(
+                            f"degenerate split in round {t} level {lvl} of "
+                            f"config {name!r}{'' if fold is None else f' fold {fold}'}"
+                            f": node(s) {empty} received no rows — outside "
+                            f"the gated depth-{depth} GBT domain"
+                        )
+                    tree = new[m]
+                    branch = None
+                    for n_id in nodes_at:
+                        fidx, b, glm, hlm, g_m, h_m, gain = _argmax_split_sub(
+                            cells.get((m, n_id), []), active[m], lam, mcw_m,
+                            alpha_m,
+                        )
+                        tree["splits"][n_id] = (fidx, b)
+                        tree["gains"][n_id] = gain
+                        if lvl == depth - 1:
+                            tree["leaves"][2 * n_id] = _leaf_w(
+                                glm, hlm, lam, alpha_m
+                            )
+                            tree["leaves"][2 * n_id + 1] = _leaf_w(
+                                g_m - glm, h_m - hlm, lam, alpha_m
+                            )
+                        else:
+                            side = F.when(
+                                F.col(f"b_{features[fidx]}") <= b, 0
+                            ).otherwise(1)
+                            cond = node[m] == n_id
+                            branch = (
+                                F.when(cond, side)
+                                if branch is None
+                                else branch.when(cond, side)
+                            )
+                    if lvl < depth - 1:
+                        node[m] = node[m] * 2 + branch
+            # the level-0 job materialized this round's frame, so its
+            # lineage parent can go
+            while len(held) > 1:
+                held.pop(0).unpersist()
+            for m in live:
+                trees[m].append(new[m])
+            if t + 1 < max_rounds:
+                state = work.select(
+                    *keep,
+                    *ks[1:],
+                    *[
+                        (
+                            (F.col(f"__f_{m}") if t else F.lit(0.0))
+                            + F.lit(float(cfgs[m][2]))
+                            * deep_tree_logit_on_bins(new[m], features)
+                        ).alias(f"__f_{m}")
+                        for m in live
+                        if cfgs[m][1] > t + 1
+                    ],
+                )
+    finally:
+        for w in held:
+            w.unpersist()
+    return trees
+
+
+def _fit(
+    fv: DataFrame,
+    configs,
+    features: tuple[str, ...],
+    bins: int,
+    label: str,
+    scales: dict[str, float] | None,
+    fold_col: Column | None = None,
+    folds: int | None = None,
+) -> list[list[dict]]:
+    """Build the engine frame for ``configs`` and descend it: one model
+    per config, or per (fold, config) fold-major when ``fold_col``
+    assigns ``folds`` folds (each model trains on its complement)."""
+    binned = _binned_frame(fv, configs, features, bins, label, scales, fold_col)
+    return _descend(binned, _models(configs, folds), features)
+
+
+def _depth2(tree: dict) -> dict:
+    """A depth-2 heap tree in the {"root", "left", "right", "w_ll"…}
+    shape ext/scoring, ext/shap and the catalogs read."""
+    s, g, w = tree["splits"], tree["gains"], tree["leaves"]
+    return {
+        "root": s[1], "gain_root": g[1],
+        "left": s[2], "gain_left": g[2], "w_ll": w[4], "w_lr": w[5],
+        "right": s[3], "gain_right": g[3], "w_rl": w[6], "w_rr": w[7],
+    }
 
 
 def train_gbt(
@@ -286,134 +662,17 @@ def train_gbt(
     scales: dict[str, float] | None = None,
     pos_weight: float | None = None,
 ) -> list[dict]:
-    """Fit ``rounds`` depth-2 trees by histogram gradient boosting.
-
-    Each round: compile the partial ensemble to a row-local logit,
-    micro-floor gradients/hessians, then TWO distributed aggregates —
-    (feature, bin) for the root split, (node, feature, bin) for the
-    child splits — each collecting ≤ nodes·d·B integer cells (the
-    sanctioned model-broadcast class). Returns the tree list; leaf
-    values are full-precision doubles (round only at the output
-    boundary).
+    """Fit ``rounds`` depth-2 trees by histogram gradient boosting —
+    one engine model, two aggregate jobs per round. Leaf values are
+    full-precision doubles (round only at the output boundary).
 
     ``pos_weight`` is XGBoost's scale_pos_weight, the exact parameter
     the reference sets (`fraud_detector.py:148`): positive rows'
     gradient AND hessian contributions multiply by it before the
-    micro-floor — splits then optimize weighted loss and leaves
-    −G/(H+λ) are naturally weighted (no n_eff: the weights flow
-    through both numerator and denominator).
-    """
-    binned = _compress_binned(
-        fv.select(
-            F.col(label).alias("label"),
-            *[_bin_expr(f, scales, bins).alias(f"b_{f}") for f in features],
-        )
-    )
-    wgt: Column | None = (
-        None
-        if pos_weight is None
-        else F.when(F.col("label") == 1, F.lit(float(pos_weight))).otherwise(
-            F.lit(1.0)
-        )
-    )
-    trees: list[dict] = []
-    # r17 (guide §3.3 plan truncation / §1.2): the partial ensemble's
-    # logit rides as a materialized __f column in a per-round persisted
-    # frame — the SQL oracle's own rows{t} discipline — so no plan ever
-    # holds more than ONE tree cascade and both level jobs (root +
-    # children histograms) read the computed gm/hm once. f accumulates
-    # left-associated in the identical op order (f + η·tree): the
-    # doubles — and the trees — are bit-identical (law-pinned).
-    state = binned
-    prev_work = None
-    for _t in range(rounds):
-        z: Column = F.col("__f") if trees else F.lit(0.0)
-        # stage p as a real column (the q_kmeans_train staged-argmin
-        # discipline): gm and hm both read ONE computed sigmoid value
-        staged = state.withColumn(
-            "__p", det_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
-        )
-        p = F.col("__p")
-        g = p - F.col("label").cast("double")
-        h = p * (F.lit(1.0) - p)
-        gc = g * F.lit(_MICRO) if wgt is None else g * wgt * F.lit(_MICRO)
-        hc = h * F.lit(_MICRO) if wgt is None else h * wgt * F.lit(_MICRO)
-        work = staged.select(
-            "label",
-            *[f"b_{f}" for f in features],
-            "__cnt",
-            *([F.col("__f")] if trees else []),
-            # gm/hm carry the row's multiplicity: cnt·floor(g·1e6+.5)
-            # sums to the exact raw-row total (see _compress_binned)
-            (F.floor(gc + F.lit(0.5)).cast("long") * F.col("__cnt")).alias("gm"),
-            (F.floor(hc + F.lit(0.5)).cast("long") * F.col("__cnt")).alias("hm"),
-        ).persist()
-        n_f = len(features)
-        pairs = ", ".join(f"{i}, b_{f}" for i, f in enumerate(features))
-        stacked = work.selectExpr(
-            "gm", "hm", f"stack({n_f}, {pairs}) AS (fidx, bin)"
-        )
-        h1 = (
-            stacked.groupBy("fidx", "bin")
-            .agg(F.sum("gm").alias("gs"), F.sum("hm").alias("hs"))
-            .collect()
-        )
-        cells = [(r["fidx"], r["bin"], r["gs"], r["hs"]) for r in h1]
-        rfidx, rbin, _glm, _hlm, _gm, _hm, rgain = _argmax_split(
-            cells, features, lam
-        )
-
-        node = F.when(F.col(f"b_{features[rfidx]}") <= rbin, 0).otherwise(1)
-        stacked2 = work.withColumn("node", node).selectExpr(
-            "node", "gm", "hm", f"stack({n_f}, {pairs}) AS (fidx, bin)"
-        )
-        h2 = (
-            stacked2.groupBy("node", "fidx", "bin")
-            .agg(F.sum("gm").alias("gs"), F.sum("hm").alias("hs"))
-            .collect()
-        )
-        if prev_work is not None:
-            prev_work.unpersist()
-        prev_work = work
-        by_node: dict[int, list] = {}
-        for r in h2:
-            by_node.setdefault(r["node"], []).append(
-                (r["fidx"], r["bin"], r["gs"], r["hs"])
-            )
-        if sorted(by_node) != [0, 1]:
-            raise ValueError(
-                f"degenerate root split in round {_t}: child node(s) "
-                f"{sorted({0, 1} - set(by_node))} are empty — the input "
-                "frame has too little feature variation for depth-2 trees"
-            )
-        tree = {"root": (rfidx, rbin), "gain_root": rgain}
-        for n_id, side in ((0, "left"), (1, "right")):
-            cfidx, cbin, glm, hlm, g_m, h_m, cgain = _argmax_split(
-                by_node[n_id], features, lam
-            )
-            tree[side] = (cfidx, cbin)
-            tree[f"gain_{side}"] = cgain
-            wl = _leaf_w(glm, hlm, lam)
-            wr = _leaf_w(g_m - glm, h_m - hlm, lam)
-            if n_id == 0:
-                tree["w_ll"], tree["w_lr"] = wl, wr
-            else:
-                tree["w_rl"], tree["w_rr"] = wl, wr
-        had_trees = bool(trees)
-        trees.append(tree)
-        if _t + 1 < rounds:
-            state = work.select(
-                "label",
-                *[f"b_{f}" for f in features],
-                "__cnt",
-                (
-                    (F.col("__f") if had_trees else F.lit(0.0))
-                    + F.lit(float(eta)) * _tree_logit_on_bins(tree, features)
-                ).alias("__f"),
-            )
-    if prev_work is not None:
-        prev_work.unpersist()
-    return trees
+    micro-floor, so splits optimize weighted loss and leaves
+    −G/(H+λ) are naturally weighted."""
+    cfg = _cfg("", rounds, eta, lam, pos_weight=pos_weight)
+    return [_depth2(tr) for tr in _fit(fv, [cfg], features, bins, label, scales)[0]]
 
 
 def gbt_trained_logit_expr(
@@ -854,162 +1113,16 @@ def train_gbt_grid(
     label: str = "label",
     scales: dict[str, float] | None = None,
 ) -> list[list[dict]]:
-    """Fit EVERY grid config in max(rounds)·2 shared scans — the
-    multi-model fusion of :func:`train_gbt` (train_logreg_grid's
-    shared-scan discipline for boosting): per round, ONE stacked
-    aggregate computes all still-active configs' (feature, bin) root
-    histograms side by side, and ONE their (node, feature, bin) child
-    histograms (each config's gradients come from its own partial
-    ensemble staged as its own sigmoid column; its node column from
-    its own root split). Per-config arithmetic is INDEPENDENT and
-    written in the identical operation order as the sequential fold,
-    so the returned tree lists are bit-identical to calling train_gbt
-    per config (law-pinned in tests/test_gbt.py) and the unrolled
-    per-config SQL oracle still gates them. At 100 TB each extra
-    config is ≤ 2·d·B more integer cells in the same map-side
-    combine — the scan is shared, the histograms stay bytes."""
-    binned = fv.select(
-        F.col(label).alias("label"),
-        *[_bin_expr(f, scales, bins).alias(f"b_{f}") for f in features],
-    )
-    binned = _compress_binned(binned)
-    k = len(configs)
-    trees_all: list[list[dict]] = [[] for _ in configs]
-    max_rounds = max(r for _n, r, _e, _l in configs)
-    n_f = len(features)
-    # r17: partial-logit __f_<c> columns + per-round persisted frame —
-    # the rows{t} plan-truncation discipline (see train_gbt's comment);
-    # every plan holds at most one tree per config.
-    state = binned
-    carried: list[int] = []
-    prev_work = None
-    for t in range(max_rounds):
-        active = [c for c in range(k) if configs[c][1] > t]
+    """Fit EVERY grid config in max(rounds)·2 shared scans — one engine
+    model per config, so the tree lists are bit-identical to calling
+    train_gbt per config (law-pinned in tests/test_gbt.py) and the
+    unrolled per-config SQL oracle still gates them. At 100 TB each
+    extra config is ≤ 2·d·B more integer cells in the same map-side
+    combine."""
+    trees = _fit(fv, [_cfg(*c) for c in configs], features, bins, label, scales)
+    return [[_depth2(tr) for tr in ts] for ts in trees]
 
-        def f_expr(c: int) -> Column:
-            return F.col(f"__f_{c}") if c in carried else F.lit(0.0)
 
-        staged = state
-        for c in active:
-            staged = staged.withColumn(
-                f"__p_{c}",
-                det_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-f_expr(c))), 6),
-            )
-        cols = [
-            "label",
-            *[f"b_{f}" for f in features],
-            "__cnt",
-            *[F.col(f"__f_{c}") for c in carried if c in active],
-        ]
-        for c in active:
-            p = F.col(f"__p_{c}")
-            g = p - F.col("label").cast("double")
-            h = p * (F.lit(1.0) - p)
-            # ×__cnt: the distinct row stands for cnt identical raw
-            # rows (see _compress_binned) — sums stay exact integers
-            cols.append(
-                (F.floor(g * F.lit(_MICRO) + F.lit(0.5)).cast("long")
-                 * F.col("__cnt")).alias(f"gm_{c}")
-            )
-            cols.append(
-                (F.floor(h * F.lit(_MICRO) + F.lit(0.5)).cast("long")
-                 * F.col("__cnt")).alias(f"hm_{c}")
-            )
-        work = staged.select(*cols).persist()
-        entries = ", ".join(
-            f"{c}, {i}, b_{f}, gm_{c}, hm_{c}"
-            for c in active
-            for i, f in enumerate(features)
-        )
-        stacked = work.selectExpr(
-            f"stack({len(active) * n_f}, {entries}) AS (cfg, fidx, bin, gm, hm)"
-        )
-        h1 = (
-            stacked.groupBy("cfg", "fidx", "bin")
-            .agg(F.sum("gm").alias("gs"), F.sum("hm").alias("hs"))
-            .collect()
-        )
-        roots: dict[int, tuple[int, int, float]] = {}
-        for c in active:
-            lam_c = float(configs[c][3])
-            cells = [
-                (r["fidx"], r["bin"], r["gs"], r["hs"]) for r in h1 if r["cfg"] == c
-            ]
-            rfidx, rbin, _glm, _hlm, _gm, _hm, rgain = _argmax_split(
-                cells, features, lam_c
-            )
-            roots[c] = (rfidx, rbin, rgain)
-        work2 = work
-        for c in active:
-            rfidx, rbin, _g = roots[c]
-            work2 = work2.withColumn(
-                f"node_{c}",
-                F.when(F.col(f"b_{features[rfidx]}") <= rbin, 0).otherwise(1),
-            )
-        entries2 = ", ".join(
-            f"{c}, node_{c}, {i}, b_{f}, gm_{c}, hm_{c}"
-            for c in active
-            for i, f in enumerate(features)
-        )
-        stacked2 = work2.selectExpr(
-            f"stack({len(active) * n_f}, {entries2}) AS (cfg, node, fidx, bin, gm, hm)"
-        )
-        h2 = (
-            stacked2.groupBy("cfg", "node", "fidx", "bin")
-            .agg(F.sum("gm").alias("gs"), F.sum("hm").alias("hs"))
-            .collect()
-        )
-        if prev_work is not None:
-            prev_work.unpersist()
-        prev_work = work
-        for c in active:
-            lam_c = float(configs[c][3])
-            rfidx, rbin, rgain = roots[c]
-            by_node: dict[int, list] = {}
-            for r in h2:
-                if r["cfg"] == c:
-                    by_node.setdefault(r["node"], []).append(
-                        (r["fidx"], r["bin"], r["gs"], r["hs"])
-                    )
-            if sorted(by_node) != [0, 1]:
-                raise ValueError(
-                    f"degenerate root split in round {t} of config "
-                    f"{configs[c][0]}: child node(s) "
-                    f"{sorted({0, 1} - set(by_node))} are empty"
-                )
-            tree = {"root": (rfidx, rbin), "gain_root": rgain}
-            for n_id, side in ((0, "left"), (1, "right")):
-                cfidx, cbin, glm, hlm, g_m, h_m, cgain = _argmax_split(
-                    by_node[n_id], features, lam_c
-                )
-                tree[side] = (cfidx, cbin)
-                tree[f"gain_{side}"] = cgain
-                wl = _leaf_w(glm, hlm, lam_c)
-                wr = _leaf_w(g_m - glm, h_m - hlm, lam_c)
-                if n_id == 0:
-                    tree["w_ll"], tree["w_lr"] = wl, wr
-                else:
-                    tree["w_rl"], tree["w_rr"] = wl, wr
-            trees_all[c].append(tree)
-        if t + 1 < max_rounds:
-            nxt = [c for c in range(k) if configs[c][1] > t + 1]
-            state = work.select(
-                "label",
-                *[f"b_{f}" for f in features],
-                "__cnt",
-                *[
-                    (
-                        f_expr(c)
-                        + F.lit(float(configs[c][2]))
-                        * _tree_logit_on_bins(trees_all[c][-1], features)
-                    ).alias(f"__f_{c}")
-                    for c in nxt
-                ],
-            )
-            carried = nxt
-    if prev_work is not None:
-        prev_work.unpersist()
-    return trees_all
 
 
 _H60_OK = "('0x' || substr(md5(o_orderkey::VARCHAR), 1, 15))::BIGINT % 100"

@@ -5,23 +5,24 @@ The reference ranks hyperparameter configs by 3-fold cross-validated
 ROC AUC (`ml/models/fraud_detector.py:268-271`:
 ``cross_val_score(model, X, y, cv=3, scoring="roc_auc").mean()``);
 q_gbt_model_selection ranks by single-holdout log-loss. This module
-closes that gap as a COMPOSITION of machinery already proven green:
+closes that gap on ext/gbt.py's one boosting engine:
 
 - **Folds**: ``hash60(o_orderkey) % 3`` — q_kfold's deterministic
   assignment (disjoint + exhaustive by construction, RNG-free,
   append-stable).
-- **Training**: per fold, the FUSED depth-2 grid trainer
-  (ext/gbt.train_gbt_grid) fits every config on the fold's
-  complement — 3 fused runs, each sharing its per-round scans across
-  all 4 configs (bit-identical trees to the sequential fold by the
-  grid law).
-- **Scoring**: per fold, ONE scan of the held-out fold stages every
-  config's sigmoid as a column and stacks them long — the union of
-  the 3 folds feeds one (fold, cfg, s) score-group aggregate.
+- **Training**: every (fold, config) pair is one engine model over
+  ONE compressed (label, fold, bins) frame; per (round, level) one
+  stacked aggregate carries them all and a post-stack
+  ``fold != __fold`` filter keeps each model's complement rows, so
+  the trees are bit-identical to training each fold separately
+  (law-pinned in tests/test_gbt_deep.py).
+- **Scoring** (:func:`_cv_fold_aucs`): the same frame, persisted,
+  feeds the holdout scorer — per fold every config's sigmoid is a
+  staged column stacked long, and one (fold, cfg, s) score-group
+  aggregate counts Σ __cnt / Σ __cnt·label over the distinct vectors.
 - **AUC**: exact Mann-Whitney rank-sum with average-rank ties —
   q_model_card's reduction, windowed per (fold, cfg) over the
-  distinct-score table (bounded: a compiled depth-2 booster emits
-  ≤ 4^trees distinct scores per config).
+  distinct-score table.
 - **Objective**: per config, the round6 mean of its 3 round6 fold
   AUCs (left-associated — the determinism contract the oracle's
   scalar-subquery sum mirrors token for token); winner = max mean
@@ -32,10 +33,10 @@ The SQL oracle unrolls all 3 folds × |configs| boosting chains
 computes the identical rank-sum AUCs — CROSS-VALIDATION ITSELF
 hash-gates.
 
-Scale: the engine's extra cost over q_gbt_model_selection is 3×
-the fused grid (histograms stay ≤ 2·d·B integer cells per config
-per round) plus one stacked score-group aggregate; nothing all-pairs,
-nothing driver-side beyond 3·|configs| AUC scalars.
+Scale: the scan count is the single-fold grid's; stacked rows grow
+×(folds−1) and every byte stays in the same map-side combine — the
+histograms remain ≤ folds·k·2^L·d·B integer cells; nothing
+all-pairs, nothing driver-side beyond folds·|configs| AUC scalars.
 
 Cites: reference `ml/models/fraud_detector.py:268-271` (cv=3
 roc_auc objective), `train.py:201` (study driver) — semantics
@@ -44,258 +45,91 @@ reproduced, execution re-architected.
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
+    _R6,
     GBT_BINS,
     GBT_MS_CONFIGS,
-    _argmax_split,
-    _bin_expr,
-    _compress_binned,
+    _binned_frame,
+    _cfg,
+    _depth2,
+    _descend,
+    _fit,
     _gbt_ctes,
     _gbt_holdout_ctes,
-    _leaf_w,
-    _tree_logit_on_bins,
+    _models,
+    _r6,
+    _rank_sum_aucs,
+    _stack_scores,
+)
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
+    _gbt_deep_ctes,
+    _gbt_deep_holdout_ctes,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
 
 CV_FOLDS = 3
 
-_R6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
 _H60_FOLD = "('0x' || substr(md5(o_orderkey::VARCHAR), 1, 15))::BIGINT % 3"
-
-
-def _r6(x: float) -> float:
-    return math.floor(x * 1e6 + 0.5) / 1e6
-
-
-def cv_binned_frame(
-    fv: DataFrame,
-    fold_col,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    bins: int = GBT_BINS,
-    label: str = "label",
-    scales: dict[str, float] | None = None,
-) -> DataFrame:
-    """The depth-2 CV working frame: distinct (label, fold, bins)
-    vectors with exact __cnt multiplicities (see _compress_binned).
-    Built ONCE per CV selection and shared by the fold-fused trainer
-    AND the holdout scorer — the scorer's per-(fold, cfg, score)
-    group counts are Σ __cnt / Σ __cnt·label over the same vectors,
-    the identical integers the raw rows would count (r17, guide
-    §1.2: one pass for sums several consumers need)."""
-    return _compress_binned(
-        fv.select(
-            F.col(label).alias("label"),
-            fold_col.cast("int").alias("__fold"),
-            *[_bin_expr(f, scales, bins).alias(f"b_{f}") for f in features],
-        ),
-        wide=True,
-    )
 
 
 def train_gbt_grid_cv(
     fv: DataFrame,
-    fold_col,
+    fold_col: Column,
     configs: tuple[tuple[str, int, float, float], ...] = GBT_MS_CONFIGS,
     folds: int = CV_FOLDS,
     features: tuple[str, ...] = SCORE_FEATURES,
     bins: int = GBT_BINS,
     label: str = "label",
     scales: dict[str, float] | None = None,
-    binned: DataFrame | None = None,
 ) -> list[list[list[dict]]]:
     """Fit EVERY (fold, config) depth-2 model in max(rounds)·2 shared
-    scans — ext/gbt.train_gbt_grid with the CV FOLD LOOP fused into
-    the same stacked aggregate (guide §1.2/§2.3: the fold loop re-ran
-    the whole grid trainer per complement, 3× the scans and 3× the
-    eager jobs for sums a single pass can produce side by side).
-
-    Per (round, level) ONE stacked aggregate carries every
-    (fold, config) pair: each pair's gradients come from its own
-    partial ensemble staged as its own sigmoid column, and a
-    post-stack ``fold != __fold`` filter keeps exactly the complement
-    rows — model (f, c) therefore sums the identical integer micros
-    over the identical row set as ``train_gbt_grid(fv.filter(fold_col
-    != f))``, so the returned tree lists are bit-identical to the
-    per-fold loop (law-pinned in tests/test_gbt_deep.py). Returns
-    ``trees[fold][cfg]``.
-
-    Scale: stacked rows grow (folds−1)/folds · folds / 1 = ×(folds−1)
-    per scan versus one fold's scan, but the SCAN COUNT drops ×folds
-    and every byte stays in the same map-side combine — at 100 TB the
-    histograms remain ≤ folds·k·2·d·B integer cells."""
-    # _compress_binned folds the frame to distinct (label, fold, bins)
-    # rows with exact __cnt multiplicities (see its docstring); its
-    # groupBy exchange also lands the frame on shuffle_partitions
-    # partitions, which subsumes the former _spread repartition. The
-    # caller may pass the (persisted) frame in so the holdout scorer
-    # reads the same vectors without re-scanning fv.
-    if binned is None:
-        binned = cv_binned_frame(fv, fold_col, features, bins, label, scales)
+    scans: model (f, c) sums the identical integer micros over the
+    identical rows as ``train_gbt_grid(fv.filter(fold_col != f))``, so
+    the trees are bit-identical to the per-fold loop (law-pinned).
+    Returns ``trees[fold][cfg]``."""
     k = len(configs)
-    trees_cv: list[list[list[dict]]] = [[[] for _ in configs] for _ in range(folds)]
-    max_rounds = max(r for _n, r, _e, _l in configs)
-    n_f = len(features)
-    # r17: partial-logit __f_<fold>_<cfg> columns + per-round persisted
-    # frame — the rows{t} plan-truncation discipline (see
-    # ext/gbt.train_gbt's comment); every plan holds at most one tree
-    # per (fold, config) model.
-    state = binned
-    carried: list[tuple[int, int]] = []
-    prev_work = None
-    for t in range(max_rounds):
-        active = [c for c in range(k) if configs[c][1] > t]
+    trees = _fit(fv, [_cfg(*c) for c in configs], features, bins, label,
+                 scales, fold_col, folds)
+    return [[[_depth2(tr) for tr in ts] for ts in trees[f * k:(f + 1) * k]]
+            for f in range(folds)]
 
-        def f_expr(f: int, c: int):
-            return (
-                F.col(f"__f_{f}_{c}") if (f, c) in carried else F.lit(0.0)
-            )
 
-        staged = state
+def _cv_fold_aucs(
+    fv: DataFrame,
+    configs,
+    folds: int,
+    features: tuple[str, ...],
+    scales: dict[str, float] | None,
+) -> list[list[float]]:
+    """The one holdout scorer: ``out[cfg][fold]`` round6 AUCs of every
+    nine-axis config under ``folds``-fold CV. ONE compressed frame,
+    built here from the same configs, feeds both the engine and the
+    per-fold holdout scoring (the held-out rows are exactly the
+    frame's ``__fold == f`` vectors, weighted by __cnt); it is
+    released when the call ends, also on failure."""
+    fold_col = F.pmod(hash60(F.col("o_orderkey").cast("string")), F.lit(folds))
+    binned = _binned_frame(
+        fv, configs, features, GBT_BINS, "label", scales, fold_col
+    ).persist()
+    k = len(configs)
+    etas = [c[2] for c in configs]
+    try:
+        trees = _descend(binned, _models(configs, folds), features)
+        scored = None
         for f in range(folds):
-            for c in active:
-                staged = staged.withColumn(
-                    f"__p_{f}_{c}",
-                    det_round(
-                        F.lit(1.0) / (F.lit(1.0) + F.exp(-f_expr(f, c))), 6
-                    ),
-                )
-        cols = [
-            "label",
-            "__fold",
-            *[f"b_{feat}" for feat in features],
-            "__cnt",
-            *[F.col(f"__f_{f}_{c}") for (f, c) in carried if c in active],
-        ]
-        for f in range(folds):
-            for c in active:
-                p = F.col(f"__p_{f}_{c}")
-                g = p - F.col("label").cast("double")
-                h = p * (F.lit(1.0) - p)
-                # ×__cnt: the distinct row stands for cnt identical
-                # raw rows (_compress_binned) — sums stay exact ints
-                cols.append(
-                    (F.floor(g * F.lit(1e6) + F.lit(0.5)).cast("long")
-                     * F.col("__cnt")).alias(f"gm_{f}_{c}")
-                )
-                cols.append(
-                    (F.floor(h * F.lit(1e6) + F.lit(0.5)).cast("long")
-                     * F.col("__cnt")).alias(f"hm_{f}_{c}")
-                )
-        work = staged.select(*cols).persist()
-        entries = ", ".join(
-            f"{f}, {c}, {i}, b_{feat}, gm_{f}_{c}, hm_{f}_{c}"
-            for f in range(folds)
-            for c in active
-            for i, feat in enumerate(features)
-        )
-        stacked = work.selectExpr(
-            "__fold",
-            f"stack({folds * len(active) * n_f}, {entries}) "
-            "AS (fold, cfg, fidx, bin, gm, hm)",
-        ).filter("fold != __fold")
-        h1 = (
-            stacked.groupBy("fold", "cfg", "fidx", "bin")
-            .agg(F.sum("gm").alias("gs"), F.sum("hm").alias("hs"))
-            .collect()
-        )
-        roots: dict[tuple[int, int], tuple[int, int, float]] = {}
-        for f in range(folds):
-            for c in active:
-                lam_c = float(configs[c][3])
-                cells = [
-                    (r["fidx"], r["bin"], r["gs"], r["hs"])
-                    for r in h1
-                    if r["fold"] == f and r["cfg"] == c
-                ]
-                rfidx, rbin, _glm, _hlm, _gm, _hm, rgain = _argmax_split(
-                    cells, features, lam_c
-                )
-                roots[(f, c)] = (rfidx, rbin, rgain)
-        work2 = work
-        for f in range(folds):
-            for c in active:
-                rfidx, rbin, _g = roots[(f, c)]
-                work2 = work2.withColumn(
-                    f"node_{f}_{c}",
-                    F.when(F.col(f"b_{features[rfidx]}") <= rbin, 0).otherwise(1),
-                )
-        entries2 = ", ".join(
-            f"{f}, {c}, node_{f}_{c}, {i}, b_{feat}, gm_{f}_{c}, hm_{f}_{c}"
-            for f in range(folds)
-            for c in active
-            for i, feat in enumerate(features)
-        )
-        stacked2 = work2.selectExpr(
-            "__fold",
-            f"stack({folds * len(active) * n_f}, {entries2}) "
-            "AS (fold, cfg, node, fidx, bin, gm, hm)",
-        ).filter("fold != __fold")
-        h2 = (
-            stacked2.groupBy("fold", "cfg", "node", "fidx", "bin")
-            .agg(F.sum("gm").alias("gs"), F.sum("hm").alias("hs"))
-            .collect()
-        )
-        if prev_work is not None:
-            prev_work.unpersist()
-        prev_work = work
-        for f in range(folds):
-            for c in active:
-                lam_c = float(configs[c][3])
-                rfidx, rbin, rgain = roots[(f, c)]
-                by_node: dict[int, list] = {}
-                for r in h2:
-                    if r["fold"] == f and r["cfg"] == c:
-                        by_node.setdefault(r["node"], []).append(
-                            (r["fidx"], r["bin"], r["gs"], r["hs"])
-                        )
-                if sorted(by_node) != [0, 1]:
-                    raise ValueError(
-                        f"degenerate root split in round {t} of config "
-                        f"{configs[c][0]} fold {f}: child node(s) "
-                        f"{sorted({0, 1} - set(by_node))} are empty"
-                    )
-                tree = {"root": (rfidx, rbin), "gain_root": rgain}
-                for n_id, side in ((0, "left"), (1, "right")):
-                    cfidx, cbin, glm, hlm, g_m, h_m, cgain = _argmax_split(
-                        by_node[n_id], features, lam_c
-                    )
-                    tree[side] = (cfidx, cbin)
-                    tree[f"gain_{side}"] = cgain
-                    wl = _leaf_w(glm, hlm, lam_c)
-                    wr = _leaf_w(g_m - glm, h_m - hlm, lam_c)
-                    if n_id == 0:
-                        tree["w_ll"], tree["w_lr"] = wl, wr
-                    else:
-                        tree["w_rl"], tree["w_rr"] = wl, wr
-                trees_cv[f][c].append(tree)
-        if t + 1 < max_rounds:
-            nxt = [c for c in range(k) if configs[c][1] > t + 1]
-            state = work.select(
-                "label",
-                "__fold",
-                *[f"b_{feat}" for feat in features],
-                "__cnt",
-                *[
-                    (
-                        f_expr(f, c)
-                        + F.lit(float(configs[c][2]))
-                        * _tree_logit_on_bins(trees_cv[f][c][-1], features)
-                    ).alias(f"__f_{f}_{c}")
-                    for f in range(folds)
-                    for c in nxt
-                ],
-            )
-            carried = [(f, c) for f in range(folds) for c in nxt]
-    if prev_work is not None:
-        prev_work.unpersist()
-    return trees_cv
+            part = _stack_scores(
+                binned.filter(F.col("__fold") == f),
+                trees[f * k:(f + 1) * k], etas, features,
+            ).withColumn("fold", F.lit(f))
+            scored = part if scored is None else scored.unionAll(part)
+        auc = _rank_sum_aucs(scored, ("fold", "cfg"))
+    finally:
+        binned.unpersist()
+    return [[auc[(f, i)] for f in range(folds)] for i in range(k)]
 
 
 def gbt_cv_fold_aucs(
@@ -305,100 +139,9 @@ def gbt_cv_fold_aucs(
     features: tuple[str, ...] = SCORE_FEATURES,
     scales: dict[str, float] | None = None,
 ) -> list[list[float]]:
-    """Per-config per-fold round6 holdout AUCs: ``out[cfg][fold]``.
-
-    Trains ALL folds × configs through the fold-fused grid trainer
-    (one stacked aggregate per round-level — r17, guide §1.2/§2.3;
-    bit-identical trees to the per-fold loop), scores each held-out
-    fold in one stacked scan, and reduces all folds × configs AUCs
-    through ONE distributed rank-sum aggregate (3·|configs| scalar
-    rows to the driver — the sanctioned bounded collect class)."""
-    fold_col = F.pmod(
-        hash60(F.col("o_orderkey").cast("string")), F.lit(folds)
-    )
-    # ONE compressed (label, fold, bins, __cnt) frame feeds both the
-    # fold-fused trainer and the holdout scorer (r17): the scorer's
-    # group counts become Σ __cnt / Σ __cnt·label over the distinct
-    # vectors — the identical integers — and the per-fold raw fv
-    # re-scans disappear.
-    binned = cv_binned_frame(fv, fold_col, features, GBT_BINS, "label", scales).persist()
-    trees_cv = train_gbt_grid_cv(
-        fv, fold_col, configs=configs, folds=folds, features=features,
-        scales=scales, binned=binned,
-    )
-    scored_parts = []
-    for f in range(folds):
-        va = binned.filter(F.col("__fold") == f)
-        trees_all = trees_cv[f]
-
-        # r17: cascades run on the staged bin columns (same long bins
-        # → same comparisons → same leaf doubles, bit-identical
-        # scores), over the compressed vectors.
-        def ens(i: int):
-            z = F.lit(0.0)
-            for tr_ in trees_all[i]:
-                z = z + F.lit(float(configs[i][2])) * _tree_logit_on_bins(
-                    tr_, features
-                )
-            return z
-
-        staged = va.select(
-            "label",
-            "__cnt",
-            *[
-                det_round(
-                    F.lit(1.0) / (F.lit(1.0) + F.exp(-ens(i))), 6
-                ).alias(f"s_{i}")
-                for i in range(len(configs))
-            ],
-        )
-        pairs = ", ".join(f"{i}, s_{i}" for i in range(len(configs)))
-        scored_parts.append(
-            staged.selectExpr(
-                f"{f} AS fold",
-                "label",
-                "__cnt",
-                f"stack({len(configs)}, {pairs}) AS (cfg, s)",
-            )
-        )
-    scored = scored_parts[0]
-    for part in scored_parts[1:]:
-        scored = scored.unionAll(part)
-    grp = scored.groupBy("fold", "cfg", "s").agg(
-        F.sum("__cnt").alias("n"),
-        F.sum(F.col("label").cast("long") * F.col("__cnt")).alias("np"),
-    )
-    w = (
-        Window.partitionBy("fold", "cfg")
-        .orderBy("s")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = grp.withColumn("cum_n", F.coalesce(F.sum("n").over(w), F.lit(0)))
-    # the model_metrics avg-rank text, per (fold, cfg)
-    avg_rank = (F.col("cum_n") + (F.col("n") + 1) / 2.0).cast("decimal(28,1)")
-    rs = F.col("np").cast("decimal(28,1)") * avg_rank
-    agg = cum.groupBy("fold", "cfg").agg(
-        F.sum(rs).alias("rank_sum"),
-        F.sum("np").alias("n_pos"),
-        (F.sum("n") - F.sum("np")).alias("n_neg"),
-    )
-    by_key = {(r["fold"], r["cfg"]): r for r in agg.collect()}
-    binned.unpersist()
-    out: list[list[float]] = []
-    for i in range(len(configs)):
-        row = []
-        for f in range(folds):
-            r = by_key[(f, i)]
-            n_pos, n_neg = int(r["n_pos"]), int(r["n_neg"])
-            if n_pos == 0 or n_neg == 0:
-                row.append(0.0)
-            else:
-                raw = (
-                    float(r["rank_sum"]) - float(n_pos) * (n_pos + 1) / 2
-                ) / (float(n_pos) * n_neg)
-                row.append(_r6(raw))
-        out.append(row)
-    return out
+    """Per-config per-fold round6 holdout AUCs: ``out[cfg][fold]`` for
+    the depth-2 grid (see :func:`_cv_fold_aucs`)."""
+    return _cv_fold_aucs(fv, [_cfg(*c) for c in configs], folds, features, scales)
 
 
 def cv_mean(aucs: list[float]) -> float:
@@ -525,300 +268,23 @@ def gbt_cv_selection_sql(
 CV_FULL_TRIALS = 4
 
 
-def cv_full_binned_frame(
-    fv: DataFrame,
-    fold_col,
-    configs,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    bins: int = GBT_BINS,
-    label: str = "label",
-    scales: dict[str, float] | None = None,
-) -> DataFrame:
-    """The full-space CV working frame (see :func:`cv_binned_frame`):
-    distinct (label, fold, subsample-buckets, bins) vectors with
-    exact __cnt multiplicities. Per-round subsample BUCKET instead of
-    the raw hash (see ext/gbt_deep.train_gbt_grid_full): h < thr_j ⟺
-    bucket(h) < j, so the buckets carry every per-(row, trial, round)
-    decision bit and _compress_binned can fold rows that agree on
-    them. Shared by the fold-fused full trainer AND the holdout
-    scorer (scores never read the buckets, so the frame is merely
-    less compressed for scoring — still exact)."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import _sub_pct
-
-    sampling = any(c[5] is not None and c[5] < 1.0 for c in configs)
-    max_rounds = max(c[1] for c in configs)
-    pcts = [
-        100 if c[5] is None or c[5] >= 1.0 else _sub_pct(c[5]) for c in configs
-    ]
-    thrs = sorted({p for p in pcts if p < 100})
-
-    def _bucket(t_: int):
-        key = F.concat(F.col("o_orderkey").cast("string"), F.lit(f"#r{t_}"))
-        h = hash60(key) % 100
-        b = F.lit(0)
-        for thr in thrs:
-            b = b + (h >= F.lit(thr)).cast("int")
-        return b
-
-    return _compress_binned(
-        fv.select(
-            F.col(label).alias("label"),
-            fold_col.cast("int").alias("__fold"),
-            *(
-                [_bucket(t_).alias(f"__k_{t_}") for t_ in range(max_rounds)]
-                if sampling
-                else []
-            ),
-            *[_bin_expr(f, scales, bins).alias(f"b_{f}") for f in features],
-        ),
-        wide=True,
-    )
-
-
 def train_gbt_grid_full_cv(
     fv: DataFrame,
-    fold_col,
+    fold_col: Column,
     configs,
     folds: int = CV_FOLDS,
     features: tuple[str, ...] = SCORE_FEATURES,
     bins: int = GBT_BINS,
     label: str = "label",
     scales: dict[str, float] | None = None,
-    binned: DataFrame | None = None,
 ) -> list[list[list[dict]]]:
-    """:func:`train_gbt_grid_cv` over FULL nine-axis trials —
-    ext/gbt_deep.train_gbt_grid_full with the CV fold loop fused into
-    the shared per-(round, level) stacked aggregate. Every stochastic
-    / regularization axis rides exactly as in the single-fold fused
-    trainer (subsample = the shared per-round hash column + per-trial
-    post-stack threshold; colsample = per-trial plan-time stack
-    entries; scale_pos_weight inside each (fold, trial)'s staged
-    gm/hm; mcw/L1 driver-side), and the ``fold != __fold`` post-stack
-    filter restricts model (f, c) to its complement rows — the sums
-    are the identical integer micros over the identical row sets, so
-    the trees are bit-identical to the per-fold loop. Returns
-    ``trees[fold][cfg]``."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
-        _argmax_split_sub,
-        _leaf_w_l1,
-        _sub_pct,
-        col_subset,
-        deep_tree_logit_on_bins,
-    )
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import _leaf_w
-
-    sampling = any(c[5] is not None and c[5] < 1.0 for c in configs)
+    """:func:`train_gbt_grid_cv` over FULL nine-axis trials: every
+    axis rides exactly as in ext/gbt_deep.train_gbt_grid_full, and the
+    fold filter restricts model (f, c) to its complement rows — trees
+    bit-identical to the per-fold loop. Returns ``trees[fold][cfg]``."""
     k = len(configs)
-    trees_cv: list[list[list[dict]]] = [[[] for _ in configs] for _ in range(folds)]
-    max_rounds = max(c[1] for c in configs)
-    pcts = [
-        100 if c[5] is None or c[5] >= 1.0 else _sub_pct(c[5]) for c in configs
-    ]
-    thrs = sorted({p for p in pcts if p < 100})
-    ranks = [
-        (thrs.index(p) + 1) if p < 100 else (len(thrs) + 1) for p in pcts
-    ]
-    if binned is None:
-        binned = cv_full_binned_frame(
-            fv, fold_col, configs, features, bins, label, scales
-        )
-    # r17: partial-logit __f_<fold>_<cfg> columns + per-round persisted
-    # frame — the rows{t} plan-truncation discipline; see
-    # ext/gbt.train_gbt's comment.
-    state = binned
-    carried: list[tuple[int, int]] = []
-    prev_work = None
-    for t in range(max_rounds):
-        round_active = [c for c in range(k) if configs[c][1] > t]
-
-        def f_expr(f: int, c: int):
-            return (
-                F.col(f"__f_{f}_{c}") if (f, c) in carried else F.lit(0.0)
-            )
-
-        staged = state
-        for f in range(folds):
-            for c in round_active:
-                staged = staged.withColumn(
-                    f"__p_{f}_{c}",
-                    det_round(
-                        F.lit(1.0) / (F.lit(1.0) + F.exp(-f_expr(f, c))), 6
-                    ),
-                )
-        cols = [
-            "label",
-            "__fold",
-            *(
-                [f"__k_{t_}" for t_ in range(t, max_rounds)]
-                if sampling
-                else []
-            ),
-            *[f"b_{feat}" for feat in features],
-            "__cnt",
-            *[F.col(f"__f_{f}_{c}") for (f, c) in carried if c in round_active],
-        ]
-        for f in range(folds):
-            for c in round_active:
-                p = F.col(f"__p_{f}_{c}")
-                g = p - F.col("label").cast("double")
-                h = p * (F.lit(1.0) - p)
-                spw_c = configs[c][9]
-                if spw_c is not None and float(spw_c) != 1.0:
-                    wgt = F.when(
-                        F.col("label") == 1, F.lit(float(spw_c))
-                    ).otherwise(F.lit(1.0))
-                    gc, hc = g * wgt * F.lit(1e6), h * wgt * F.lit(1e6)
-                else:
-                    gc, hc = g * F.lit(1e6), h * F.lit(1e6)
-                # ×__cnt: the distinct row stands for cnt identical
-                # raw rows (_compress_binned) — sums stay exact ints
-                cols.append(
-                    (F.floor(gc + F.lit(0.5)).cast("long")
-                     * F.col("__cnt")).alias(f"gm_{f}_{c}")
-                )
-                cols.append(
-                    (F.floor(hc + F.lit(0.5)).cast("long")
-                     * F.col("__cnt")).alias(f"hm_{f}_{c}")
-                )
-        # sigmoid cascades + micro-floors computed once per round; the
-        # depth levels re-read the cached columns (within-query persist)
-        work = staged.select(*cols).persist()
-        actives = {
-            c: col_subset(features, t, configs[c][6]) for c in round_active
-        }
-        nodes: dict[tuple[int, int], object] = {
-            (f, c): F.lit(1) for f in range(folds) for c in round_active
-        }
-        trees_new: dict[tuple[int, int], dict] = {
-            (f, c): {
-                "depth": configs[c][4],
-                "splits": {},
-                "gains": {},
-                "leaves": {},
-            }
-            for f in range(folds)
-            for c in round_active
-        }
-        max_depth = max(configs[c][4] for c in round_active)
-        for lvl in range(max_depth):
-            lvl_active = [c for c in round_active if configs[c][4] > lvl]
-            work_l = work
-            for f in range(folds):
-                for c in lvl_active:
-                    work_l = work_l.withColumn(f"node_{f}_{c}", nodes[(f, c)])
-            entries = ", ".join(
-                f"{f}, {c}, node_{f}_{c}, {i}, b_{features[i]}, gm_{f}_{c}, hm_{f}_{c}"
-                for f in range(folds)
-                for c in lvl_active
-                for i in actives[c]
-            )
-            n_entries = folds * sum(len(actives[c]) for c in lvl_active)
-            stacked = work_l.selectExpr(
-                "__fold",
-                *([f"__k_{t}"] if sampling else []),
-                f"stack({n_entries}, {entries}) "
-                "AS (fold, cfg, node, fidx, bin, gm, hm)",
-            ).filter("fold != __fold")
-            if sampling:
-                # h < pct_c ⟺ bucket < rank_c (see _bucket above)
-                rnk = F.element_at(
-                    F.array(*[F.lit(r_) for r_ in ranks]), F.col("cfg") + 1
-                )
-                stacked = stacked.filter(F.col(f"__k_{t}") < rnk)
-            rows = (
-                stacked.groupBy("fold", "cfg", "node", "fidx", "bin")
-                .agg(F.sum("gm").alias("gs"), F.sum("hm").alias("hs"))
-                .collect()
-            )
-            nodes_at = list(range(2**lvl, 2 ** (lvl + 1)))
-            for f in range(folds):
-                for c in lvl_active:
-                    lam_c = float(configs[c][3])
-                    depth_c = configs[c][4]
-                    mcw_micro = int(round(float(configs[c][7]) * 1e6))
-                    alpha_micro = int(round(float(configs[c][8]) * 1e6))
-                    by_node: dict[int, list] = {}
-                    for r in rows:
-                        if r["fold"] == f and r["cfg"] == c:
-                            by_node.setdefault(r["node"], []).append(
-                                (r["fidx"], r["bin"], r["gs"], r["hs"])
-                            )
-                    if sorted(by_node) != nodes_at:
-                        raise ValueError(
-                            f"degenerate split in round {t} level {lvl} of "
-                            f"config {configs[c][0]} fold {f}: node(s) "
-                            f"{sorted(set(nodes_at) - set(by_node))} received "
-                            "no selected rows"
-                        )
-                    branch = None
-                    for n_id in nodes_at:
-                        fidx, b, glm, hlm, g_m, h_m, gain = _argmax_split_sub(
-                            by_node[n_id], actives[c], lam_c, mcw_micro,
-                            alpha_micro,
-                        )
-                        trees_new[(f, c)]["splits"][n_id] = (fidx, b)
-                        trees_new[(f, c)]["gains"][n_id] = gain
-                        if lvl == depth_c - 1:
-                            if alpha_micro:
-                                trees_new[(f, c)]["leaves"][2 * n_id] = _leaf_w_l1(
-                                    glm, hlm, lam_c, alpha_micro
-                                )
-                                trees_new[(f, c)]["leaves"][2 * n_id + 1] = (
-                                    _leaf_w_l1(
-                                        g_m - glm, h_m - hlm, lam_c, alpha_micro
-                                    )
-                                )
-                            else:
-                                trees_new[(f, c)]["leaves"][2 * n_id] = _leaf_w(
-                                    glm, hlm, lam_c
-                                )
-                                trees_new[(f, c)]["leaves"][2 * n_id + 1] = _leaf_w(
-                                    g_m - glm, h_m - hlm, lam_c
-                                )
-                        else:
-                            side = F.when(
-                                F.col(f"b_{features[fidx]}") <= b, 0
-                            ).otherwise(1)
-                            cond = nodes[(f, c)] == n_id
-                            branch = (
-                                F.when(cond, side)
-                                if branch is None
-                                else branch.when(cond, side)
-                            )
-                    if lvl < depth_c - 1:
-                        nodes[(f, c)] = nodes[(f, c)] * 2 + branch
-        if prev_work is not None:
-            prev_work.unpersist()
-        prev_work = work
-        for f in range(folds):
-            for c in round_active:
-                trees_cv[f][c].append(trees_new[(f, c)])
-        if t + 1 < max_rounds:
-            nxt = [c for c in range(k) if configs[c][1] > t + 1]
-            state = work.select(
-                "label",
-                "__fold",
-                *(
-                    [f"__k_{t_}" for t_ in range(t + 1, max_rounds)]
-                    if sampling
-                    else []
-                ),
-                *[f"b_{feat}" for feat in features],
-                "__cnt",
-                *[
-                    (
-                        f_expr(f, c)
-                        + F.lit(float(configs[c][2]))
-                        * deep_tree_logit_on_bins(trees_cv[f][c][-1], features)
-                    ).alias(f"__f_{f}_{c}")
-                    for f in range(folds)
-                    for c in nxt
-                ],
-            )
-            carried = [(f, c) for f in range(folds) for c in nxt]
-    if prev_work is not None:
-        prev_work.unpersist()
-    return trees_cv
+    trees = _fit(fv, list(configs), features, bins, label, scales, fold_col, folds)
+    return [trees[f * k:(f + 1) * k] for f in range(folds)]
 
 
 def gbt_cv_fold_aucs_full(
@@ -828,99 +294,8 @@ def gbt_cv_fold_aucs_full(
     features: tuple[str, ...] = SCORE_FEATURES,
     scales: dict[str, float] | None = None,
 ) -> list[list[float]]:
-    """:func:`gbt_cv_fold_aucs` over FULL nine-axis trials: ALL
-    folds × trials fit through the fold-fused full-space trainer
-    (one stacked aggregate per round-level — r17, guide §1.2/§2.3;
-    bit-identical trees to the per-fold loop), then the SAME
-    one-aggregate rank-sum tail yields all folds x trials AUCs."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
-        deep_tree_logit_on_bins,
-    )
-
-    fold_col = F.pmod(
-        hash60(F.col("o_orderkey").cast("string")), F.lit(folds)
-    )
-    # ONE compressed frame shared by trainer and scorer (see
-    # gbt_cv_fold_aucs): the scorer's group counts become weighted
-    # sums over the distinct vectors — identical integers.
-    binned = cv_full_binned_frame(
-        fv, fold_col, configs, features, GBT_BINS, "label", scales
-    ).persist()
-    trees_cv = train_gbt_grid_full_cv(
-        fv, fold_col, configs, folds=folds, features=features, scales=scales,
-        binned=binned,
-    )
-    scored_parts = []
-    for f in range(folds):
-        va = binned.filter(F.col("__fold") == f)
-        trees_all = trees_cv[f]
-
-        # r17: cascades on the staged bin columns (bit-identical
-        # scores), over the compressed vectors.
-        def ens(i: int):
-            z = F.lit(0.0)
-            for tr_ in trees_all[i]:
-                z = z + F.lit(float(configs[i][2])) * deep_tree_logit_on_bins(
-                    tr_, features
-                )
-            return z
-
-        staged = va.select(
-            "label",
-            "__cnt",
-            *[
-                det_round(
-                    F.lit(1.0) / (F.lit(1.0) + F.exp(-ens(i))), 6
-                ).alias(f"s_{i}")
-                for i in range(len(configs))
-            ],
-        )
-        pairs = ", ".join(f"{i}, s_{i}" for i in range(len(configs)))
-        scored_parts.append(
-            staged.selectExpr(
-                f"{f} AS fold",
-                "label",
-                "__cnt",
-                f"stack({len(configs)}, {pairs}) AS (cfg, s)",
-            )
-        )
-    scored = scored_parts[0]
-    for part in scored_parts[1:]:
-        scored = scored.unionAll(part)
-    grp = scored.groupBy("fold", "cfg", "s").agg(
-        F.sum("__cnt").alias("n"),
-        F.sum(F.col("label").cast("long") * F.col("__cnt")).alias("np"),
-    )
-    w = (
-        Window.partitionBy("fold", "cfg")
-        .orderBy("s")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = grp.withColumn("cum_n", F.coalesce(F.sum("n").over(w), F.lit(0)))
-    avg_rank = (F.col("cum_n") + (F.col("n") + 1) / 2.0).cast("decimal(28,1)")
-    rs = F.col("np").cast("decimal(28,1)") * avg_rank
-    agg = cum.groupBy("fold", "cfg").agg(
-        F.sum(rs).alias("rank_sum"),
-        F.sum("np").alias("n_pos"),
-        (F.sum("n") - F.sum("np")).alias("n_neg"),
-    )
-    by_key = {(r["fold"], r["cfg"]): r for r in agg.collect()}
-    binned.unpersist()
-    out: list[list[float]] = []
-    for i in range(len(configs)):
-        row = []
-        for f in range(folds):
-            r = by_key[(f, i)]
-            n_pos, n_neg = int(r["n_pos"]), int(r["n_neg"])
-            if n_pos == 0 or n_neg == 0:
-                row.append(0.0)
-            else:
-                raw = (
-                    float(r["rank_sum"]) - float(n_pos) * (n_pos + 1) / 2
-                ) / (float(n_pos) * n_neg)
-                row.append(_r6(raw))
-        out.append(row)
-    return out
+    """:func:`gbt_cv_fold_aucs` over FULL nine-axis trials."""
+    return _cv_fold_aucs(fv, list(configs), folds, features, scales)
 
 
 def gbt_cv_selection_full_sql(
@@ -936,11 +311,6 @@ def gbt_cv_selection_full_sql(
     scale_pos_weight) + a held-out-fold replay + a rank-sum AUC;
     per trial the round6 left-associated fold mean; is_best ranks by
     (cv_auc DESC, config)."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
-        _gbt_deep_ctes,
-        _gbt_deep_holdout_ctes,
-    )
-
     parts = [f"base AS ({fv_sql})"]
     for f in range(folds):
         parts.append(

@@ -1,27 +1,22 @@
 """Depth-d histogram gradient boosting + deterministic row/column
 subsampling — the rest of the XGBoost space the reference tunes.
 
-ext/gbt.py fixes the tree shape at depth 2; the reference's Optuna
-study sweeps ``max_depth`` 3-9 and the stochastic dimensions
+ext/gbt.py fixes the production tree at depth 2; the reference's
+Optuna study sweeps ``max_depth`` 3-9 and the stochastic dimensions
 ``subsample`` / ``colsample_bytree`` 0.6-1.0
 (`ml/models/fraud_detector.py:258-266`, called from `train.py:201`).
-This module generalizes the SAME machinery to arbitrary depth and
-adds the sampling axes without RNG (plus ``pos_weight`` — XGBoost's
-scale_pos_weight in ext/gbt.py's exact weighted op order — so the
-FULL nine-dimensional study space fits through one fused fold,
-:func:`train_gbt_grid_full`):
+Every trainer here is a thin wrapper over ext/gbt.py's one boosting
+engine (``_descend``: one stacked aggregate per (round, level) over
+(fold, nine-axis config) models); this module owns the axes'
+semantics, their generated DuckDB oracles, and the sampled studies:
 
 - **Depth**: a complete binary tree with heap-indexed nodes (root=1,
   children of n are 2n/2n+1; internal nodes 1..2^d-1, leaves
-  2^d..2^(d+1)-1). Per boosting round the trainer runs ``d``
+  2^d..2^(d+1)-1). Per boosting round the engine runs ``d``
   distributed aggregates — level L's histogram groups
-  (node, feature, bin) with ≤ 2^L·d·B integer cells (bytes, not
-  rows, cross the wire; at depth 3 the widest level is 4·8·16 cells).
-  Split finding, gains, and leaf values reuse ext/gbt.py's exact
-  integer-micro arithmetic, so trees stay bit-identical across
-  partition layouts — and at depth=2 the generalized trainer
-  reproduces :func:`ext.gbt.train_gbt`'s trees EXACTLY (law-pinned
-  in tests/test_gbt_deep.py).
+  (node, feature, bin) with ≤ 2^L·d·B integer cells. At depth=2 the
+  trees are :func:`ext.gbt.train_gbt`'s EXACTLY (law-pinned in
+  tests/test_gbt_deep.py).
 - **Row subsample** (XGBoost ``subsample``): per-round row selection
   by content hash — ``hash60(o_orderkey || '#r<t>') % 100 <
   round(100·subsample)`` (the q_train_test_split discipline with a
@@ -32,10 +27,12 @@ FULL nine-dimensional study space fits through one fused fold,
   SQL oracle applies the IDENTICAL predicate.
 - **Column subsample** (XGBoost ``colsample_bytree``): per round,
   features rank by ``md5(feature || '#r<t>')`` and the first
-  ``max(1, floor(colsample·d))`` are eligible for splits. The
-  schedule is a pure function of (feature names, round) computed at
-  plan time — both engine and generated oracle enumerate the same
-  subsets, no data dependence.
+  ``max(1, floor(colsample·d))`` are eligible for splits
+  (:func:`ext.gbt.col_subset`, a pure function of (feature names,
+  round) that engine and oracle share).
+- **min_child_weight / reg_alpha / scale_pos_weight**: XGBoost's
+  candidate validity rule, ThresholdL1 shrinkage and positive-class
+  weight, all in exact integer micros.
 
 Degenerate-frame contract (inherited from ext/gbt.py): if any node
 at any level receives ZERO (selected) rows, the trainer raises
@@ -52,29 +49,32 @@ semantics reproduced, execution re-architected as Spark aggregates.
 from __future__ import annotations
 
 import hashlib
-import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # noqa: F401  (re-exports)
+    _H60_OK,
+    _R6,
     GBT_BINS,
     GBT_ETA,
     GBT_LAMBDA,
     GBT_ROUNDS,
+    FullConfig,
+    _argmax_split_sub,
     _bin_expr,
     _bin_sql,
-    _compress_binned,
-    _gain,
+    _cfg,
+    _fit,
     _gain_sql,
     _leaf_w,
-    _MICRO,
-    _R6,
+    _rank_sum_aucs,
+    _stack_scores,
+    _sub_pct,
+    _thr,
+    col_subset,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import _x_sql  # noqa: F401  (oracle twin of _bin_expr)
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
 
 #: The deep default: one level past ext/gbt.py, the floor of the
 #: reference's max_depth range (3-9). Deeper is the same machinery
@@ -82,153 +82,16 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars impo
 GBT_DEPTH = 3
 
 
-def _r6(x: float) -> float:
-    return math.floor(x * 1e6 + 0.5) / 1e6
-
-
-# --- deterministic sampling schedules -----------------------------------------
-
-
-def col_subset(
-    features: tuple[str, ...], t: int, colsample: float | None
-) -> tuple[int, ...]:
-    """The round-``t`` eligible feature INDICES under
-    ``colsample_bytree``: rank by md5(feature || '#r<t>'), keep the
-    first max(1, floor(colsample·d)), return in ascending original
-    index order (the argmax tie-break iterates original order). Pure
-    plan-time function — engine and oracle call the same code."""
-    if colsample is None or colsample >= 1.0:
-        return tuple(range(len(features)))
-    k = max(1, math.floor(colsample * len(features)))
-    ranked = sorted(
-        range(len(features)),
-        key=lambda i: hashlib.md5(
-            f"{features[i]}#r{t}".encode()
-        ).hexdigest(),
-    )
-    return tuple(sorted(ranked[:k]))
-
-
-def _sub_pct(subsample: float) -> int:
-    return int(round(subsample * 100))
-
-
-def _sub_pred_expr(t: int, subsample: float) -> Column:
-    """Round-``t`` row-selection predicate, Spark side — the exact
-    twin of :func:`_sub_pred_sql` (hash60 ≡ the H60 SQL form)."""
-    key = F.concat(F.col("o_orderkey").cast("string"), F.lit(f"#r{t}"))
-    return (hash60(key) % 100) < F.lit(_sub_pct(subsample))
-
-
 def _sub_pred_sql(t: int, subsample: float) -> str:
+    """Round-``t`` row-selection predicate, DuckDB side — the engine's
+    subsample bucket (ext/gbt._sub_ranks) encodes the same test."""
     return (
         f"(('0x' || substr(md5(o_orderkey::VARCHAR || '#r{t}'), 1, 15))::BIGINT"
         f" % 100) < {_sub_pct(subsample)}"
     )
 
 
-# --- split finding over a feature subset ---------------------------------------
-
-
-def _thr(g_micro: int, alpha_micro: int) -> int:
-    """XGBoost's ThresholdL1 on an integer micro gradient sum — EXACT
-    integer arithmetic, identical on both engines: g−α if g>α, g+α if
-    g<−α, else 0. α=0 is the identity (the unregularized path)."""
-    if g_micro > alpha_micro:
-        return g_micro - alpha_micro
-    if g_micro < -alpha_micro:
-        return g_micro + alpha_micro
-    return 0
-
-
-def _gain_l1(
-    glm: int, hlm: int, gm: int, hm: int, lam: float, alpha_micro: int
-) -> float:
-    """ext/gbt._gain with L1-thresholded gradient sums (reg_alpha,
-    `fraud_detector.py:266`) — at α=0 the thresholds are identities
-    and this IS _gain (same operation order, bit-identical)."""
-    gl = _thr(glm, alpha_micro) / 1e6
-    hl = hlm / 1e6
-    gr = _thr(gm - glm, alpha_micro) / 1e6
-    hr = (hm - hlm) / 1e6
-    g = _thr(gm, alpha_micro) / 1e6
-    h = hm / 1e6
-    return (gl * gl) / (hl + lam) + (gr * gr) / (hr + lam) - (g * g) / (h + lam)
-
-
-def _leaf_w_l1(glm: int, hlm: int, lam: float, alpha_micro: int) -> float:
-    """w = −ThresholdL1(G)/(H+λ) — XGBoost's L1-shrunk leaf; α=0 is
-    ext/gbt._leaf_w exactly."""
-    return -(_thr(glm, alpha_micro) / 1e6) / ((hlm / 1e6) + lam)
-
-
-def _argmax_split_sub(
-    cells: list[tuple[int, int, int, int]],
-    active: tuple[int, ...],
-    lam: float,
-    mcw_micro: int = 0,
-    alpha_micro: int = 0,
-) -> tuple[int, int, int, int, int, int, float]:
-    """ext/gbt._argmax_split over an eligible-feature subset:
-    (fidx, bin, gl_m, hl_m, g_m, h_m, gain). Node totals come from
-    the smallest eligible feature's cells (every row carries every
-    feature, so any one feature's cells partition the node — exact
-    integer sums are feature-independent). Strictly-greater gain
-    wins, so ties keep the smallest (fidx, bin) — matching
-    ORDER BY gain DESC, fidx, bin LIMIT 1."""
-    by_f: dict[int, list[tuple[int, int, int]]] = {}
-    for fidx, b, gs, hs in cells:
-        by_f.setdefault(fidx, []).append((b, gs, hs))
-    f0 = min(active)
-    g_m = sum(gs for _b, gs, _hs in by_f[f0])
-    h_m = sum(hs for _b, _gs, hs in by_f[f0])
-    best = None
-    for fidx in active:
-        glm = 0
-        hlm = 0
-        occupied = sorted(by_f.get(fidx, []))
-        # interior candidates only — the last occupied bin's "split"
-        # sends every row left (ext/gbt._argmax_split's r15 rule)
-        for b, gs, hs in occupied[:-1]:
-            glm += gs
-            hlm += hs
-            # min_child_weight (fraud_detector.py:265): both children
-            # must carry ≥ mcw total hessian — XGBoost's candidate
-            # validity rule, exact in integer micros
-            if mcw_micro and (hlm < mcw_micro or (h_m - hlm) < mcw_micro):
-                continue
-            if alpha_micro:
-                gain = _gain_l1(glm, hlm, g_m, h_m, lam, alpha_micro)
-            else:
-                gain = _gain(glm, hlm, g_m, h_m, lam)
-            if best is None or gain > best[0]:
-                best = (gain, fidx, b, glm, hlm)
-    if best is None:
-        raise ValueError(
-            "unsplittable node: no admissible split exists (every "
-            "eligible feature single-bin, or no candidate satisfies "
-            "min_child_weight) — the input is outside the gated GBT domain"
-        )
-    gain_v, fidx, b, glm, hlm = best
-    return fidx, b, glm, hlm, g_m, h_m, gain_v
-
-
 # --- tree expression compilers --------------------------------------------------
-
-
-def deep_tree_logit_on_bins(tree: dict, features: tuple[str, ...]) -> Column:
-    """Tree value over the working frame's b_<feature> bin columns
-    (the trainer's inner loop)."""
-
-    def node_expr(n: int) -> Column:
-        if n in tree["leaves"]:
-            return F.lit(float(tree["leaves"][n]))
-        fidx, b = tree["splits"][n]
-        return F.when(
-            F.col(f"b_{features[fidx]}") <= b, node_expr(2 * n)
-        ).otherwise(node_expr(2 * n + 1))
-
-    return node_expr(1)
 
 
 def deep_tree_logit_raw(
@@ -287,173 +150,28 @@ def train_gbt_deep(
     pos_weight: float | None = None,
 ) -> list[dict]:
     """Fit ``rounds`` depth-``depth`` trees by histogram gradient
-    boosting — ext/gbt.train_gbt generalized one axis at a time.
+    boosting — one engine model carrying every axis.
 
     ``min_child_weight`` (fraud_detector.py:265, swept 1-10): a split
     candidate is admissible only if BOTH children carry at least this
-    much total hessian — enforced exactly in integer micros.
-    ``reg_alpha`` (fraud_detector.py:266, swept 0-1): L1 shrinkage —
-    every gradient sum passes ThresholdL1 before entering gains and
-    leaf values (exact integer thresholding; α=0 is bit-identical to
-    the unregularized fit).
-    ``pos_weight`` (XGBoost's scale_pos_weight, `fraud_detector.py:148`
-    and the study's imbalance axis): positive rows' gradient AND
-    hessian contributions multiply by it before the micro-floor —
-    the exact op order of :func:`ext.gbt.train_gbt`'s weighted fold
-    (g·w·1e6), so depth-2 weighted fits are bit-identical across the
-    two trainers (law-pinned).
-
-    Per round: compile the partial ensemble to a row-local logit,
-    micro-floor gradients/hessians (over the round's hash-selected
-    row subset when ``subsample`` is set), then ``depth`` distributed
-    aggregates — level L groups (node, feature, bin) over the
-    round's eligible features, collecting ≤ 2^L·d·B integer cells.
+    much total hessian. ``reg_alpha`` (fraud_detector.py:266, swept
+    0-1): every gradient sum passes ThresholdL1 before entering gains
+    and leaf values (α=0 is bit-identical to the unregularized fit).
+    ``pos_weight`` (XGBoost's scale_pos_weight): positive rows'
+    gradient AND hessian contributions multiply by it before the
+    micro-floor. ``subsample`` selects each round's histogram rows by
+    content hash (the id column ``o_orderkey`` is then required).
     Tree dicts are heap-indexed::
 
         {"depth": d, "splits": {node: (fidx, bin)},
          "gains": {node: gain}, "leaves": {leaf: w}}
 
-    At depth=2 (full sample, all columns) the returned trees are
-    bit-identical to :func:`ext.gbt.train_gbt`'s modulo
+    At depth=2 the trees are :func:`ext.gbt.train_gbt`'s modulo
     representation (root=splits[1], left=splits[2], right=splits[3],
     w_ll..w_rr = leaves[4..7])."""
-    mcw_micro = int(round(min_child_weight * 1e6))
-    alpha_micro = int(round(reg_alpha * 1e6))
-    sampling = subsample is not None and subsample < 1.0
-    binned = fv.select(
-        F.col(label).alias("label"),
-        # subsample keys on o_orderkey, but the descent only ever
-        # reads the per-round MEMBERSHIP BIT — stage all rounds' bits
-        # up front so the id itself never enters the working frame and
-        # _compress_binned can fold rows that agree on (label, bins,
-        # s_0..s_{T-1}); exact fits don't need an id column (synthetic
-        # test frames omit it)
-        *(
-            [
-                _sub_pred_expr(t_, subsample).alias(f"__s_{t_}")
-                for t_ in range(rounds)
-            ]
-            if sampling
-            else []
-        ),
-        *[_bin_expr(f, scales, bins).alias(f"b_{f}") for f in features],
-    )
-    binned = _compress_binned(binned)
-    wgt: Column | None = (
-        None
-        if pos_weight is None
-        else F.when(F.col("label") == 1, F.lit(float(pos_weight))).otherwise(
-            F.lit(1.0)
-        )
-    )
-    trees: list[dict] = []
-    first_leaf = 2**depth
-    # r17: partial-logit __f column + per-round persisted frame — the
-    # rows{t} plan-truncation discipline (see train_gbt_grid_deep);
-    # every plan holds at most one tree.
-    state = binned
-    prev_work = None
-    for t in range(rounds):
-        z: Column = F.col("__f") if trees else F.lit(0.0)
-        staged = state.withColumn(
-            "__p", det_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
-        )
-        p = F.col("__p")
-        g = p - F.col("label").cast("double")
-        h = p * (F.lit(1.0) - p)
-        gc = g * F.lit(_MICRO) if wgt is None else g * wgt * F.lit(_MICRO)
-        hc = h * F.lit(_MICRO) if wgt is None else h * wgt * F.lit(_MICRO)
-        work = staged.select(
-            "label",
-            *([f"__s_{t_}" for t_ in range(t, rounds)] if sampling else []),
-            *[f"b_{f}" for f in features],
-            "__cnt",
-            *([F.col("__f")] if trees else []),
-            # ×__cnt: the distinct row stands for cnt identical raw
-            # rows (see _compress_binned) — sums stay exact integers
-            (F.floor(gc + F.lit(0.5)).cast("long") * F.col("__cnt")).alias("gm"),
-            (F.floor(hc + F.lit(0.5)).cast("long") * F.col("__cnt")).alias("hm"),
-        ).persist()
-        hist_src = work.filter(F.col(f"__s_{t}")) if sampling else work
-        active = col_subset(features, t, colsample)
-        pairs = ", ".join(f"{i}, b_{features[i]}" for i in active)
-        n_act = len(active)
-        tree = {"depth": depth, "splits": {}, "gains": {}, "leaves": {}}
-        node: Column = F.lit(1)
-        for lvl in range(depth):
-            nodes_at = list(range(2**lvl, 2 ** (lvl + 1)))
-            stacked = hist_src.withColumn("node", node).selectExpr(
-                "node", "gm", "hm", f"stack({n_act}, {pairs}) AS (fidx, bin)"
-            )
-            rows = (
-                stacked.groupBy("node", "fidx", "bin")
-                .agg(F.sum("gm").alias("gs"), F.sum("hm").alias("hs"))
-                .collect()
-            )
-            by_node: dict[int, list] = {}
-            for r in rows:
-                by_node.setdefault(r["node"], []).append(
-                    (r["fidx"], r["bin"], r["gs"], r["hs"])
-                )
-            if sorted(by_node) != nodes_at:
-                raise ValueError(
-                    f"degenerate split in round {t} level {lvl}: node(s) "
-                    f"{sorted(set(nodes_at) - set(by_node))} received no "
-                    f"{'selected ' if subsample else ''}rows — the input is "
-                    f"outside the gated depth-{depth} GBT domain"
-                )
-            branch = None
-            for n_id in nodes_at:
-                fidx, b, glm, hlm, g_m, h_m, gain = _argmax_split_sub(
-                    by_node[n_id], active, lam, mcw_micro, alpha_micro
-                )
-                tree["splits"][n_id] = (fidx, b)
-                tree["gains"][n_id] = gain
-                if lvl == depth - 1:
-                    if alpha_micro:
-                        tree["leaves"][2 * n_id] = _leaf_w_l1(
-                            glm, hlm, lam, alpha_micro
-                        )
-                        tree["leaves"][2 * n_id + 1] = _leaf_w_l1(
-                            g_m - glm, h_m - hlm, lam, alpha_micro
-                        )
-                    else:
-                        tree["leaves"][2 * n_id] = _leaf_w(glm, hlm, lam)
-                        tree["leaves"][2 * n_id + 1] = _leaf_w(
-                            g_m - glm, h_m - hlm, lam
-                        )
-                else:
-                    side = F.when(
-                        F.col(f"b_{features[fidx]}") <= b, 0
-                    ).otherwise(1)
-                    cond = node == n_id  # noqa: E712  (Column equality)
-                    branch = (
-                        F.when(cond, side)
-                        if branch is None
-                        else branch.when(cond, side)
-                    )
-            if lvl < depth - 1:
-                node = node * 2 + branch
-        if prev_work is not None:
-            prev_work.unpersist()
-        prev_work = work
-        assert len(tree["splits"]) == first_leaf - 1
-        had_trees = bool(trees)
-        trees.append(tree)
-        if t + 1 < rounds:
-            state = work.select(
-                "label",
-                *([f"__s_{t_}" for t_ in range(t + 1, rounds)] if sampling else []),
-                *[f"b_{f}" for f in features],
-                "__cnt",
-                (
-                    (F.col("__f") if had_trees else F.lit(0.0))
-                    + F.lit(float(eta)) * deep_tree_logit_on_bins(tree, features)
-                ).alias("__f"),
-            )
-    if prev_work is not None:
-        prev_work.unpersist()
-    return trees
+    cfg = _cfg("", rounds, eta, lam, depth, subsample, colsample,
+               min_child_weight, reg_alpha, pos_weight)
+    return _fit(fv, [cfg], features, bins, label, scales)[0]
 
 
 # --- generated DuckDB oracle -----------------------------------------------------
@@ -467,7 +185,7 @@ def _thr_sql(x: str, a: int) -> str:
 def _gain_l1_sql(
     glm: str, hlm: str, gm: str, hm: str, lam: float, a: int
 ) -> str:
-    """SQL twin of :func:`_gain_l1` — ext/gbt._gain_sql with the
+    """SQL twin of :func:`ext.gbt._gain` at α>0 — _gain_sql with the
     three gradient sums L1-thresholded before the double division."""
     gl = f"(CAST({_thr_sql(glm, a)} AS DOUBLE) / 1000000.0)"
     hl = f"(CAST({hlm} AS DOUBLE) / 1000000.0)"
@@ -837,6 +555,7 @@ GBT_DEPTH_CONFIGS: tuple[tuple[str, int, float, float, int], ...] = (
 )
 
 
+
 def train_gbt_grid_deep(
     fv: DataFrame,
     configs: tuple[tuple[str, int, float, float, int], ...] = GBT_DEPTH_CONFIGS,
@@ -846,176 +565,12 @@ def train_gbt_grid_deep(
     scales: dict[str, float] | None = None,
 ) -> list[list[dict]]:
     """Fit every depth-grid config in max(rounds)·max(depth) shared
-    scans — ext/gbt.train_gbt_grid with a level loop: per round, per
-    LEVEL, one stacked aggregate carries every config still active at
-    that (round, level) — each config's gradients from its own staged
-    sigmoid, its node path from its own heap column. Per-config
-    arithmetic is written in the identical operation order as
-    :func:`train_gbt_deep`, so the returned tree lists are
-    bit-identical to the sequential fold (law-pinned in
-    tests/test_gbt_deep.py). At 100 TB each extra config adds
-    ≤ 2^L·d·B integer cells to level L's map-side combine — the scan
-    is shared, the histograms stay bytes."""
-    binned = _compress_binned(
-        fv.select(
-            F.col(label).alias("label"),
-            *[_bin_expr(f, scales, bins).alias(f"b_{f}") for f in features],
-        )
-    )
-    k = len(configs)
-    trees_all: list[list[dict]] = [[] for _ in configs]
-    max_rounds = max(r for _n, r, _e, _l, _d in configs)
-    n_f = len(features)
-    all_fidx = tuple(range(n_f))
-    # r17 (guide §3.3 plan truncation / §1.2 re-execution): the round-t
-    # ensemble logit is carried as a materialized __f_<c> column in a
-    # per-round persisted working frame — the SQL oracle's own rows{t}
-    # discipline. Without it every level job re-plans and re-evaluates
-    # the whole prior-tree CASE cascade (measured: round cost grew
-    # 2.6 → 2.2 → 3.2+ s across 3 rounds); with it every plan holds at
-    # most ONE tree. The persist materializes inside the level-0 job
-    # (no dedicated checkpoint job); the previous round's frame — the
-    # current one's lineage parent — unpersists only after the level
-    # loop materialized its successor. f accumulates left-associated
-    # in the identical op order (f + η·tree), so the doubles — and the
-    # trees — are bit-identical (law-pinned).
-    state = binned
-    carried: list[int] = []
-    prev_work = None
-    for t in range(max_rounds):
-        round_active = [c for c in range(k) if configs[c][1] > t]
-
-        def f_expr(c: int) -> Column:
-            return F.col(f"__f_{c}") if c in carried else F.lit(0.0)
-
-        staged = state
-        for c in round_active:
-            staged = staged.withColumn(
-                f"__p_{c}",
-                det_round(
-                    F.lit(1.0) / (F.lit(1.0) + F.exp(-f_expr(c))), 6
-                ),
-            )
-        cols = [
-            "label",
-            *[f"b_{f}" for f in features],
-            "__cnt",
-            *[F.col(f"__f_{c}").alias(f"__f_{c}") for c in carried if c in round_active],
-        ]
-        for c in round_active:
-            p = F.col(f"__p_{c}")
-            g = p - F.col("label").cast("double")
-            h = p * (F.lit(1.0) - p)
-            # ×__cnt: the distinct row stands for cnt identical raw
-            # rows (see _compress_binned) — sums stay exact integers
-            cols.append(
-                (F.floor(g * F.lit(_MICRO) + F.lit(0.5)).cast("long")
-                 * F.col("__cnt")).alias(f"gm_{c}")
-            )
-            cols.append(
-                (F.floor(h * F.lit(_MICRO) + F.lit(0.5)).cast("long")
-                 * F.col("__cnt")).alias(f"hm_{c}")
-            )
-        work = staged.select(*cols).persist()
-        nodes: dict[int, Column] = {c: F.lit(1) for c in round_active}
-        trees_new: dict[int, dict] = {
-            c: {
-                "depth": configs[c][4],
-                "splits": {},
-                "gains": {},
-                "leaves": {},
-            }
-            for c in round_active
-        }
-        max_depth = max(configs[c][4] for c in round_active)
-        for lvl in range(max_depth):
-            lvl_active = [c for c in round_active if configs[c][4] > lvl]
-            work_l = work
-            for c in lvl_active:
-                work_l = work_l.withColumn(f"node_{c}", nodes[c])
-            entries = ", ".join(
-                f"{c}, node_{c}, {i}, b_{features[i]}, gm_{c}, hm_{c}"
-                for c in lvl_active
-                for i in all_fidx
-            )
-            stacked = work_l.selectExpr(
-                f"stack({len(lvl_active) * n_f}, {entries}) "
-                "AS (cfg, node, fidx, bin, gm, hm)"
-            )
-            rows = (
-                stacked.groupBy("cfg", "node", "fidx", "bin")
-                .agg(F.sum("gm").alias("gs"), F.sum("hm").alias("hs"))
-                .collect()
-            )
-            nodes_at = list(range(2**lvl, 2 ** (lvl + 1)))
-            for c in lvl_active:
-                lam_c = float(configs[c][3])
-                depth_c = configs[c][4]
-                by_node: dict[int, list] = {}
-                for r in rows:
-                    if r["cfg"] == c:
-                        by_node.setdefault(r["node"], []).append(
-                            (r["fidx"], r["bin"], r["gs"], r["hs"])
-                        )
-                if sorted(by_node) != nodes_at:
-                    raise ValueError(
-                        f"degenerate split in round {t} level {lvl} of "
-                        f"config {configs[c][0]}: node(s) "
-                        f"{sorted(set(nodes_at) - set(by_node))} are empty"
-                    )
-                branch = None
-                for n_id in nodes_at:
-                    fidx, b, glm, hlm, g_m, h_m, gain = _argmax_split_sub(
-                        by_node[n_id], all_fidx, lam_c
-                    )
-                    trees_new[c]["splits"][n_id] = (fidx, b)
-                    trees_new[c]["gains"][n_id] = gain
-                    if lvl == depth_c - 1:
-                        trees_new[c]["leaves"][2 * n_id] = _leaf_w(
-                            glm, hlm, lam_c
-                        )
-                        trees_new[c]["leaves"][2 * n_id + 1] = _leaf_w(
-                            g_m - glm, h_m - hlm, lam_c
-                        )
-                    else:
-                        side = F.when(
-                            F.col(f"b_{features[fidx]}") <= b, 0
-                        ).otherwise(1)
-                        cond = nodes[c] == n_id
-                        branch = (
-                            F.when(cond, side)
-                            if branch is None
-                            else branch.when(cond, side)
-                        )
-                if lvl < depth_c - 1:
-                    nodes[c] = nodes[c] * 2 + branch
-        if prev_work is not None:
-            prev_work.unpersist()
-        prev_work = work
-        for c in round_active:
-            trees_all[c].append(trees_new[c])
-        if t + 1 < max_rounds:
-            nxt = [c for c in range(k) if configs[c][1] > t + 1]
-            state = work.select(
-                "label",
-                *[f"b_{f}" for f in features],
-                "__cnt",
-                *[
-                    (
-                        f_expr(c)
-                        + F.lit(float(configs[c][2]))
-                        * deep_tree_logit_on_bins(trees_new[c], features)
-                    ).alias(f"__f_{c}")
-                    for c in nxt
-                ],
-            )
-            carried = nxt
-    if prev_work is not None:
-        prev_work.unpersist()
-    return trees_all
-
-
-_H60_OK = "('0x' || substr(md5(o_orderkey::VARCHAR), 1, 15))::BIGINT % 100"
+    scans — one engine model per config, so the tree lists are
+    bit-identical to the sequential :func:`train_gbt_deep` fold
+    (law-pinned in tests/test_gbt_deep.py). At 100 TB each extra
+    config adds ≤ 2^L·d·B integer cells to level L's map-side
+    combine."""
+    return _fit(fv, [_cfg(*c) for c in configs], features, bins, label, scales)
 
 
 def gbt_depth_selection_sql(
@@ -1131,74 +686,21 @@ def grid_holdout_aucs(
     scales: dict[str, float] | None = None,
 ) -> list[float]:
     """Per-config holdout rank-sum AUCs from ONE stacked scan — the
-    gbt_cv machinery on a single hash-split fold: every config's
+    CV scorer's machinery on a single hash-split fold: every config's
     round6 sigmoid is a staged column, the stack unpivots to
-    (cfg, s, label), and one exact Mann-Whitney aggregate (windowed
-    per cfg over the bounded distinct-score table) yields every
-    config's AUC. Driver state: 3·|configs| scalars."""
-    from pyspark.sql import Window
-
-    # r17: stage the bin columns once and run every config's cascade
-    # on them — the raw-feature form re-derived each feature's bin at
-    # every split node (configs × trees × nodes derivations per row,
-    # and as many extra expression nodes for Catalyst/codegen). Same
-    # long bins → same comparisons → same leaf doubles, bit-identical
-    # scores.
+    (cfg, s, label), and one exact Mann-Whitney aggregate yields every
+    config's AUC. Driver state: |configs| scalars."""
+    # the bin columns are staged once and every config's cascade runs
+    # on them (same long bins → same comparisons → bit-identical
+    # scores); each raw holdout row counts once
     vab = va.select(
         "label",
+        F.lit(1).alias("__cnt"),
         *[_bin_expr(f, scales, GBT_BINS).alias(f"b_{f}") for f in features],
     )
-
-    def ens(i: int) -> Column:
-        z: Column = F.lit(0.0)
-        for tr_ in trees_all[i]:
-            z = z + F.lit(float(configs[i][2])) * deep_tree_logit_on_bins(
-                tr_, features
-            )
-        return z
-
-    staged = vab.select(
-        "label",
-        *[
-            det_round(
-                F.lit(1.0) / (F.lit(1.0) + F.exp(-ens(i))), 6
-            ).alias(f"s_{i}")
-            for i in range(len(configs))
-        ],
-    )
-    pairs = ", ".join(f"{i}, s_{i}" for i in range(len(configs)))
-    scored = staged.selectExpr(
-        "label", f"stack({len(configs)}, {pairs}) AS (cfg, s)"
-    )
-    grp = scored.groupBy("cfg", "s").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("label").alias("np")
-    )
-    w = (
-        Window.partitionBy("cfg")
-        .orderBy("s")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = grp.withColumn("cum_n", F.coalesce(F.sum("n").over(w), F.lit(0)))
-    avg_rank = (F.col("cum_n") + (F.col("n") + 1) / 2.0).cast("decimal(28,1)")
-    rs = F.col("np").cast("decimal(28,1)") * avg_rank
-    agg = cum.groupBy("cfg").agg(
-        F.sum(rs).alias("rank_sum"),
-        F.sum("np").alias("n_pos"),
-        (F.sum("n") - F.sum("np")).alias("n_neg"),
-    )
-    by_cfg = {r["cfg"]: r for r in agg.collect()}
-    out = []
-    for i in range(len(configs)):
-        r = by_cfg[i]
-        n_pos, n_neg = int(r["n_pos"]), int(r["n_neg"])
-        if n_pos == 0 or n_neg == 0:
-            out.append(0.0)
-        else:
-            raw = (
-                float(r["rank_sum"]) - float(n_pos) * (n_pos + 1) / 2
-            ) / (float(n_pos) * n_neg)
-            out.append(_r6(raw))
-    return out
+    etas = [c[2] for c in configs]
+    auc = _rank_sum_aucs(_stack_scores(vab, trees_all, etas, features), ("cfg",))
+    return [auc[(i,)] for i in range(len(configs))]
 
 
 def gbt_random_search_sql(
@@ -1290,10 +792,6 @@ def gbt_random_search_sql(
 #: scale, all NINE dimensions swept per trial.
 RS_FULL_TRIALS = 8
 
-#: A full-space trial: (name, rounds, eta, lam, depth, subsample,
-#: colsample, min_child_weight, reg_alpha, pos_weight).
-FullConfig = tuple[str, int, float, float, int, float, float, float, float, float]
-
 
 def sampled_search_configs_full(n: int = RS_FULL_TRIALS) -> tuple[FullConfig, ...]:
     """:func:`sampled_search_configs` extended to the study's FULL
@@ -1341,245 +839,15 @@ def train_gbt_grid_full(
     scales: dict[str, float] | None = None,
 ) -> list[list[dict]]:
     """:func:`train_gbt_grid_deep` widened to the FULL study space —
-    per (round, level) still ONE stacked aggregate shared by every
-    config active there, with each config's stochastic/regularization
-    axes riding the same scan:
-
-    - **subsample**: one shared per-round hash column
-      (hash60(o_orderkey ‖ '#r<t>') % 100 — the salt is per ROUND, so
-      every config reads the SAME hash and differs only in its
-      threshold); a post-stack filter keeps a (cfg, row) pair iff the
-      hash clears that config's percentage, exactly
-      :func:`_sub_pred_expr`'s predicate.
-    - **colsample**: plan-time — config c's stack entries enumerate
-      only col_subset(features, t, colsample_c).
-    - **scale_pos_weight**: per-config gm/hm columns already exist
-      (each config stages its own sigmoid), so the weight multiplies
-      in the train_gbt op order (g·w·1e6) before the micro-floor.
-    - **min_child_weight / reg_alpha**: driver-side, inside the same
-      _argmax_split_sub / _leaf_w_l1 the sequential fold uses.
-
-    Per-config results are bit-identical to the sequential
-    :func:`train_gbt_deep` with the same axes (law-pinned). The scan
-    count stays config-width independent: extra trials only add
-    integer histogram cells (and stack rows) to the map-side combine."""
-    sampling = any(c[5] is not None and c[5] < 1.0 for c in configs)
-    k = len(configs)
-    trees_all: list[list[dict]] = [[] for _ in configs]
-    max_rounds = max(c[1] for c in configs)
-    pcts = [
-        100 if c[5] is None or c[5] >= 1.0 else _sub_pct(c[5]) for c in configs
-    ]
-    # Per-round subsample BUCKET instead of the raw hash: the descent
-    # only ever compares h against the configs' distinct thresholds,
-    # so bucket(h) = #{thr ≤ h} carries every decision bit — h < thr_j
-    # ⟺ bucket < j (thresholds ascending; pct=100 maps past the last
-    # bucket, always true). Staging all rounds' buckets up front lets
-    # _compress_binned fold rows agreeing on (label, bins, buckets)
-    # and drops o_orderkey from the working frame entirely.
-    thrs = sorted({p for p in pcts if p < 100})
-    ranks = [
-        (thrs.index(p) + 1) if p < 100 else (len(thrs) + 1) for p in pcts
-    ]
-
-    def _bucket(t_: int) -> Column:
-        key = F.concat(F.col("o_orderkey").cast("string"), F.lit(f"#r{t_}"))
-        h = hash60(key) % 100
-        b: Column = F.lit(0)
-        for thr in thrs:
-            b = b + (h >= F.lit(thr)).cast("int")
-        return b
-
-    binned = fv.select(
-        F.col(label).alias("label"),
-        *(
-            [_bucket(t_).alias(f"__k_{t_}") for t_ in range(max_rounds)]
-            if sampling
-            else []
-        ),
-        *[_bin_expr(f, scales, bins).alias(f"b_{f}") for f in features],
-    )
-    binned = _compress_binned(binned)
-    # r17: partial-logit __f_<c> columns + per-round persisted frame —
-    # the rows{t} plan-truncation discipline of train_gbt_grid_deep
-    # (see its comment); every plan holds at most one tree per trial.
-    state = binned
-    carried: list[int] = []
-    prev_work = None
-    for t in range(max_rounds):
-        round_active = [c for c in range(k) if configs[c][1] > t]
-
-        def f_expr(c: int) -> Column:
-            return F.col(f"__f_{c}") if c in carried else F.lit(0.0)
-
-        staged = state
-        for c in round_active:
-            staged = staged.withColumn(
-                f"__p_{c}",
-                det_round(
-                    F.lit(1.0) / (F.lit(1.0) + F.exp(-f_expr(c))), 6
-                ),
-            )
-        cols = [
-            "label",
-            *(
-                [f"__k_{t_}" for t_ in range(t, max_rounds)]
-                if sampling
-                else []
-            ),
-            *[f"b_{f}" for f in features],
-            "__cnt",
-            *[F.col(f"__f_{c}") for c in carried if c in round_active],
-        ]
-        for c in round_active:
-            p = F.col(f"__p_{c}")
-            g = p - F.col("label").cast("double")
-            h = p * (F.lit(1.0) - p)
-            spw_c = configs[c][9]
-            if spw_c is not None and float(spw_c) != 1.0:
-                wgt = F.when(
-                    F.col("label") == 1, F.lit(float(spw_c))
-                ).otherwise(F.lit(1.0))
-                gc, hc = g * wgt * F.lit(_MICRO), h * wgt * F.lit(_MICRO)
-            else:
-                # spw=1.0 multiplies by exactly 1.0 — skip the branch so
-                # the plan (not the bits) matches the unweighted fold
-                gc, hc = g * F.lit(_MICRO), h * F.lit(_MICRO)
-            # ×__cnt: the distinct row stands for cnt identical raw
-            # rows (see _compress_binned) — sums stay exact integers
-            cols.append(
-                (F.floor(gc + F.lit(0.5)).cast("long")
-                 * F.col("__cnt")).alias(f"gm_{c}")
-            )
-            cols.append(
-                (F.floor(hc + F.lit(0.5)).cast("long")
-                 * F.col("__cnt")).alias(f"hm_{c}")
-            )
-        work = staged.select(*cols).persist()
-        actives = {
-            c: col_subset(features, t, configs[c][6]) for c in round_active
-        }
-        nodes: dict[int, Column] = {c: F.lit(1) for c in round_active}
-        trees_new: dict[int, dict] = {
-            c: {
-                "depth": configs[c][4],
-                "splits": {},
-                "gains": {},
-                "leaves": {},
-            }
-            for c in round_active
-        }
-        max_depth = max(configs[c][4] for c in round_active)
-        for lvl in range(max_depth):
-            lvl_active = [c for c in round_active if configs[c][4] > lvl]
-            work_l = work
-            for c in lvl_active:
-                work_l = work_l.withColumn(f"node_{c}", nodes[c])
-            entries = ", ".join(
-                f"{c}, node_{c}, {i}, b_{features[i]}, gm_{c}, hm_{c}"
-                for c in lvl_active
-                for i in actives[c]
-            )
-            n_entries = sum(len(actives[c]) for c in lvl_active)
-            stacked = work_l.selectExpr(
-                *([f"__k_{t}"] if sampling else []),
-                f"stack({n_entries}, {entries}) "
-                "AS (cfg, node, fidx, bin, gm, hm)",
-            )
-            if sampling:
-                # h < pct_c ⟺ bucket < rank_c (see _bucket above)
-                rnk = F.element_at(
-                    F.array(*[F.lit(r_) for r_ in ranks]), F.col("cfg") + 1
-                )
-                stacked = stacked.filter(F.col(f"__k_{t}") < rnk)
-            rows = (
-                stacked.groupBy("cfg", "node", "fidx", "bin")
-                .agg(F.sum("gm").alias("gs"), F.sum("hm").alias("hs"))
-                .collect()
-            )
-            nodes_at = list(range(2**lvl, 2 ** (lvl + 1)))
-            for c in lvl_active:
-                lam_c = float(configs[c][3])
-                depth_c = configs[c][4]
-                mcw_micro = int(round(float(configs[c][7]) * 1e6))
-                alpha_micro = int(round(float(configs[c][8]) * 1e6))
-                by_node: dict[int, list] = {}
-                for r in rows:
-                    if r["cfg"] == c:
-                        by_node.setdefault(r["node"], []).append(
-                            (r["fidx"], r["bin"], r["gs"], r["hs"])
-                        )
-                if sorted(by_node) != nodes_at:
-                    raise ValueError(
-                        f"degenerate split in round {t} level {lvl} of "
-                        f"config {configs[c][0]}: node(s) "
-                        f"{sorted(set(nodes_at) - set(by_node))} received "
-                        "no selected rows"
-                    )
-                branch = None
-                for n_id in nodes_at:
-                    fidx, b, glm, hlm, g_m, h_m, gain = _argmax_split_sub(
-                        by_node[n_id], actives[c], lam_c, mcw_micro,
-                        alpha_micro,
-                    )
-                    trees_new[c]["splits"][n_id] = (fidx, b)
-                    trees_new[c]["gains"][n_id] = gain
-                    if lvl == depth_c - 1:
-                        if alpha_micro:
-                            trees_new[c]["leaves"][2 * n_id] = _leaf_w_l1(
-                                glm, hlm, lam_c, alpha_micro
-                            )
-                            trees_new[c]["leaves"][2 * n_id + 1] = _leaf_w_l1(
-                                g_m - glm, h_m - hlm, lam_c, alpha_micro
-                            )
-                        else:
-                            trees_new[c]["leaves"][2 * n_id] = _leaf_w(
-                                glm, hlm, lam_c
-                            )
-                            trees_new[c]["leaves"][2 * n_id + 1] = _leaf_w(
-                                g_m - glm, h_m - hlm, lam_c
-                            )
-                    else:
-                        side = F.when(
-                            F.col(f"b_{features[fidx]}") <= b, 0
-                        ).otherwise(1)
-                        cond = nodes[c] == n_id
-                        branch = (
-                            F.when(cond, side)
-                            if branch is None
-                            else branch.when(cond, side)
-                        )
-                if lvl < depth_c - 1:
-                    nodes[c] = nodes[c] * 2 + branch
-        if prev_work is not None:
-            prev_work.unpersist()
-        prev_work = work
-        for c in round_active:
-            trees_all[c].append(trees_new[c])
-        if t + 1 < max_rounds:
-            nxt = [c for c in range(k) if configs[c][1] > t + 1]
-            state = work.select(
-                "label",
-                *(
-                    [f"__k_{t_}" for t_ in range(t + 1, max_rounds)]
-                    if sampling
-                    else []
-                ),
-                *[f"b_{f}" for f in features],
-                "__cnt",
-                *[
-                    (
-                        f_expr(c)
-                        + F.lit(float(configs[c][2]))
-                        * deep_tree_logit_on_bins(trees_new[c], features)
-                    ).alias(f"__f_{c}")
-                    for c in nxt
-                ],
-            )
-            carried = nxt
-    if prev_work is not None:
-        prev_work.unpersist()
-    return trees_all
+    one engine model per nine-axis trial, so per (round, level) still
+    ONE stacked aggregate: subsample rides one shared per-round bucket
+    column and a per-trial post-stack threshold, colsample the trial's
+    plan-time stack entries, scale_pos_weight the trial's staged
+    gm/hm, min_child_weight / reg_alpha the driver-side argmax.
+    Per-trial trees are bit-identical to the sequential
+    :func:`train_gbt_deep` with the same axes (law-pinned), and extra
+    trials only add integer histogram cells, never scans."""
+    return _fit(fv, list(configs), features, bins, label, scales)
 
 
 def gbt_random_search_full_sql(

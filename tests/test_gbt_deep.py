@@ -785,3 +785,54 @@ def test_fold_fused_cv_trainers_match_per_fold_loop(spark):
             df.filter(fold_col != f), configs=cfgsF, features=FEATS, scales={}
         )
         assert fusedF[f] == seqF, f"full-space fold {f} diverged"
+
+
+def test_failed_fits_release_their_persisted_frames(spark):
+    """A constant frame has no admissible split, so the ValueError
+    fires after the level-0 job has materialized the round's persisted
+    working frame (and, in the CV scorer, the shared binned frame).
+    No persisted frame may outlive the failed call."""
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_cv import gbt_cv_fold_aucs
+
+    rows = [(i, 0.5, 0.5, i % 2) for i in range(60)]
+    df = spark.createDataFrame(
+        rows, "o_orderkey long, x1 double, x2 double, label int"
+    )
+    feats = ("x1", "x2")
+    jsc = spark.sparkContext._jsc
+    for fit in (
+        lambda: train_gbt(df, features=feats, scales={}),
+        lambda: train_gbt_deep(df, features=feats, scales={}, depth=3),
+        lambda: gbt_cv_fold_aucs(
+            df, configs=(("a", 2, 0.3, 1.0),), features=feats, scales={}
+        ),
+    ):
+        before = jsc.getPersistentRDDs().size()
+        with pytest.raises(ValueError, match="unsplittable"):
+            fit()
+        assert jsc.getPersistentRDDs().size() == before
+
+
+def test_single_model_job_count_is_bounded(spark):
+    """The single-model path (q_gbt_train's plan build) schedules at
+    most rounds·(2·depth+1)+1 Spark jobs: ≤2 per (round, level)
+    aggregate action, ≤1 per round for the persisted working frame,
+    plus 1 for the compressing groupBy before round 0 — the bound the
+    fused-grid pins use, held by train_gbt and train_gbt_deep."""
+    df, *_ = _frame(spark)
+    sc = spark.sparkContext
+
+    def jobs_for(fit, group):
+        sc.setJobGroup(group, group)
+        try:
+            fit()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    n2 = jobs_for(lambda: train_gbt(df, features=FEATS, scales={}), "one_d2")
+    assert n2 <= GBT_ROUNDS * (2 * 2 + 1) + 1, n2
+    n3 = jobs_for(
+        lambda: train_gbt_deep(df, features=FEATS, scales={}, depth=3), "one_d3"
+    )
+    assert n3 <= GBT_ROUNDS * (2 * 3 + 1) + 1, n3
