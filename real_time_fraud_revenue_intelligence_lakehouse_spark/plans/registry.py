@@ -61,18 +61,34 @@ def _load_all() -> None:
 # Verification priority: the driver's correctness gate walks queries()
 # in dict order with a hard 50-entry per-round budget (every registered
 # id is green in the r01-r15 union), so ids needing a fresh driver row
-# come FIRST. Recomputed at round 16 (VERDICT r15 #5) from the
-# CORRECTNESS_r01-r15 union. Layout of this head:
-#   1-8:   round-16's NEW ids (no driver row can exist yet);
-#   9-24:  the 16 ids whose last driver row is r09 (the tail past
+# come FIRST. Layout of this head:
+#   1-11:  ids whose code was rewritten since their last sampled row —
+#          the stateful-fold batch twins (q_ewma_recursive,
+#          q_stateful_profile), the GBT ids on the one boosting engine,
+#          then the two scale probes;
+#   12-17: the rest of round-16's new ids;
+#   18-33: the 16 ids whose last sampled row is r09 (the tail past
 #          r15's 50-cap);
-#   25-74: the 50 ids whose last driver row is r10 — the first ~26
-#          fill the rest of r16's 50-cap, the tail leads r17.
+#   34-83: the 50 ids whose last sampled row is r10.
 # Names not listed keep their registration order after these (the
 # r11-r15 blocks rotated out: all driver-green at r11-r15).
 # Planned-but-not-yet-registered names are harmless: _ordered()
 # filters on membership.
 _FRONT: tuple[str, ...] = (
+    # — rewritten onto the one stateful-fold driver —
+    "q_ewma_recursive",
+    "q_stateful_profile",
+    # — rewritten onto the one boosting engine —
+    "q_gbt_train",
+    "q_model_selection_cv",
+    "q_model_selection_cv_full",
+    "q_gbt_depth_selection",
+    "q_retrain_best",
+    "q_gbt_model_selection",
+    "q_gbt_random_search_full",
+    # — scale probes —
+    "q_scale_probe_scan",
+    "q_scale_probe_join",
     # — new in round 16, never driver-verified —
     "q_standard_scale_train",
     "q_logreg_train_scaled",
@@ -80,8 +96,6 @@ _FRONT: tuple[str, ...] = (
     "q_gbt_random_search",
     "q_score_input_gate",
     "q_gbt_train_depth4",
-    "q_gbt_random_search_full",
-    "q_model_selection_cv_full",
     # — last driver row r09 (the 16 past r15's 50-cap) —
     "q_quality_score",
     "q_record_linkage",

@@ -1,49 +1,66 @@
-"""Custom stateful streaming operators via applyInPandasWithState.
+"""Custom stateful streaming operators: six fold specs, one
+applyInPandasWithState driver, one batch replay.
 
 Spark's built-in stateful operators (windows, stream dedup) cover the
 reference's surface; this module adds the escape hatch for semantics
 they can't express — arbitrary per-key state machines over Arrow
-batches. The shipped operator is a per-user running profile (event
-count + value total across micro-batches), the streaming form of the
-per-entity aggregates in `fraud_summary.py:91-134`: where the batch
-job recomputes user profiles from all history every 2 h, the stateful
-stream maintains them incrementally with O(keys) state.
+batches. Every operator is a `_Fold` spec: an initial state tuple, a
+``step(state, frame) -> (state, batch_rows)`` over one key's rows, an
+``emit`` of the post-batch output row, the output and state schemas,
+and an optional in-batch row order. Two drivers run the specs:
 
-Both forms share one accumulator:
+- `_stateful` — the module's one applyInPandasWithState call. Per key
+  per micro-batch it concatenates every Arrow chunk into ONE frame,
+  sorts it by the spec's order, and applies ``step`` once, so no
+  result depends on how Arrow splits a micro-batch
+  (``spark.sql.execution.arrow.maxRecordsPerBatch``). It also owns the
+  one event-time expiry protocol (below).
+- `_replay` — the batch twin: the same ``step`` once over each key's
+  full history via applyInPandas (`running_cusum_batch`,
+  `running_ewma_batch`).
 
-- `running_user_profiles` — the real applyInPandasWithState stream
-  (state survives micro-batch boundaries; exercised against file
-  micro-batches in tests/test_streaming.py).
-- `running_user_profiles_batch` — the deterministic batch twin via
-  `applyInPandas`: the same per-key state machine replayed over an
-  explicit, data-derived batch key (e.g. event month). This is the
-  oracle-checkable face of the operator (`q_stateful_profile`).
+The six specs, each behind a public operator of a few lines:
+
+- running user profiles (`running_user_profiles`) — the streaming form
+  of the per-entity aggregates in `fraud_summary.py:91-134`: where the
+  batch job recomputes user profiles from all history every 2 h, the
+  stream maintains them incrementally with O(keys) state;
+- Misra-Gries heavy hitters, decimal log-histogram and HLL registers
+  (`running_heavy_hitters`, `running_value_histogram`,
+  `running_distinct_hll`) — per-shard, size-capped sketches
+  (`_sketch_fold`);
+- CUSUM drift alarm and recursive EWMA (`running_cusum`,
+  `running_ewma`) — order-sensitive integer-micros recursions over
+  (ts, event_id)-sorted micro-batches.
+
+The other batch twins are independent of the drivers on purpose: the
+vectorized per-partition profile fold behind q_stateful_profile
+(`running_user_profiles_batch`), `heavy_hitters_batch`, and the
+JVM-only `value_histogram_batch` / `distinct_hll_batch`.
 
 Exactness: values accumulate as integer CENTS (int64), never float —
 float summation is order-dependent and pandas' pairwise sum would
-drift from any SQL oracle. The batch entry point expects a Spark-side
-`cents` column (decimal-cast, see `with_cents`); the streaming form
-derives cents from `value` per batch, which is exact for 2-decimal
+drift from any SQL oracle. The batch profile twin computes a
+Spark-side `cents` column (decimal cast, `cents_col`); the stream
+folds use that column when the input carries one and otherwise derive
+HALF_UP cents from `value` (`_frame_cents`), exact for 2-decimal
 inputs.
 
 Scale: state lives in the executor state store partitioned by key
-(one shuffle per micro-batch); Arrow batches flow per key-partition.
-`running_user_profiles(events, expire_after_ms=...)`,
-`running_cusum(..., expire_after_ms=...)`, and
-`running_ewma(..., expire_after_ms=...)` — the operators that may key
-on unbounded-cardinality columns — arm watermark-based
+(one shuffle per micro-batch). The operators that may key on
+unbounded-cardinality columns — profiles, CUSUM and EWMA — take
+``expire_after_ms``, which arms watermark-based
 `GroupStateTimeout.EventTimeTimeout` so abandoned keys expire instead
 of accumulating forever: state is bounded by ACTIVE keys, the guard
 that keeps a 100 TB-of-keys state store alive. The shard-keyed
-MG/histogram sketches are exempt by design (fixed shard cardinality +
-size-capped per-shard state; see running_cusum's docstring).
-The batch twin is one applyInPandas shuffle on the key; per-key
-history (a handful of batch rows) is tiny regardless of corpus size.
+sketches are exempt by design (fixed shard cardinality + size-capped
+per-shard state; see running_cusum's docstring).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass
 from typing import TYPE_CHECKING, Any
 
 from pyspark.sql import Column, DataFrame
@@ -70,17 +87,6 @@ def cents_col(value_col: str = "value") -> Column:
     return (F.col(value_col).cast("decimal(18,2)") * 100).cast("long")
 
 
-def _acc(pdf: "pd.DataFrame") -> tuple[int, int]:
-    """Per-batch reduction: (row count, value cents) for one batch.
-    Uses the exact `cents` column when the caller provided it,
-    otherwise derives cents from `value` (exact for 2-dp inputs)."""
-    if "cents" in pdf.columns:
-        cents = int(pdf["cents"].sum())
-    else:
-        cents = int(_half_up_cents(pdf["value"]).sum())
-    return len(pdf), cents
-
-
 def _half_up_cents(values: "pd.Series"):
     """Pandas twin of :func:`cents_col`: floor(v·100 + 0.5) is
     ROUND_HALF_UP for non-negative money (Spark's decimal(18,2) cast
@@ -92,6 +98,15 @@ def _half_up_cents(values: "pd.Series"):
     import numpy as np
 
     return np.floor(values.astype(float) * 100 + 0.5).astype("int64")
+
+
+def _frame_cents(pdf: "pd.DataFrame", value_col: str = "value") -> "pd.Series":
+    """Integer cents of a batch: the exact `cents` column when the
+    caller provided one, otherwise the HALF_UP derivation from
+    ``value_col`` (:func:`_half_up_cents`)."""
+    if "cents" in pdf.columns:
+        return pdf["cents"].astype("int64")
+    return _half_up_cents(pdf[value_col])
 
 
 def _event_timeout_ms(max_ts, session_tz: str, expire_ms: int, state: GroupState) -> int:
@@ -116,49 +131,62 @@ def _event_timeout_ms(max_ts, session_tz: str, expire_ms: int, state: GroupState
     return max(event_ms + expire_ms, state.getCurrentWatermarkMs() + 1)
 
 
-def _step(state: tuple[int, int], n: int, cents: int) -> tuple[int, int]:
-    """THE state transition both forms share: fold one batch's
-    (count, cents) reduction into the running (events, cents) state."""
-    total_events, total_cents = state
-    return total_events + n, total_cents + cents
+# --- the fold spec and its two drivers ----------------------------------------
 
 
-def _update_user_profile(
-    key: tuple[Any, ...], pdfs: Iterator["pd.DataFrame"], state: GroupState
-) -> Iterator["pd.DataFrame"]:
+@dataclass(frozen=True)
+class _Fold:
+    """One per-key state machine. ``step(state, frame)`` folds a key's
+    rows (one micro-batch, or its whole history) into the state and
+    returns ``(state, batch_rows)``; ``emit(key, state, batch_rows)``
+    builds the output row; ``order`` sorts the frame before ``step``
+    (empty: order-free)."""
+
+    init: tuple
+    step: Callable[[tuple, "pd.DataFrame"], tuple[tuple, int]]
+    emit: Callable[[Any, tuple, int], dict]
+    output_schema: str
+    state_schema: str
+    order: tuple[str, ...] = ()
+
+    def apply(self, state: tuple, pdf: "pd.DataFrame") -> tuple[tuple, int]:
+        """``step`` over ``pdf`` sorted by ``order``."""
+        if self.order:
+            pdf = pdf.sort_values(list(self.order))
+        return self.step(state, pdf)
+
+
+#: deterministic in-batch order of the recursions: event time, then
+#: the unique event id
+_TIME_ORDER = ("ts", "event_id")
+
+
+def _one_row(row: dict) -> "pd.DataFrame":
     import pandas as pd
 
-    st = state.get if state.exists else (0, 0)
-    batch_events = 0
-    batch_cents = 0
-    for pdf in pdfs:
-        n, c = _acc(pdf)
-        batch_events += n
-        batch_cents += c
-    st = _step(st, batch_events, batch_cents)
-    state.update(st)
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "batch_events": [batch_events],
-            "total_events": [st[0]],
-            "total_value": [st[1] / 100.0],
-        }
-    )
+    return pd.DataFrame({c: [v] for c, v in row.items()})
 
 
-def _update_user_profile_expiring(expire_ms: int, session_tz: str):
-    """EventTimeTimeout-armed variant of :func:`_update_user_profile`:
-    every batch re-arms the key's timeout at (max event time in batch
-    + expire_ms); when the stream's WATERMARK passes that stamp
-    without new data, Spark invokes this once more with
+def _stateful(
+    events: DataFrame, key_col: str, fold: _Fold, expire_after_ms: int | None = None
+) -> DataFrame:
+    """Run ``fold`` per ``key_col`` across micro-batches: one output
+    row per (key, micro-batch) with the post-batch state.
+
+    ``step`` sees the key's whole micro-batch as one frame — every
+    Arrow chunk concatenated, then sorted by ``fold.order`` — so the
+    result is independent of the Arrow batch size.
+
+    With ``expire_after_ms`` the state machine runs under
+    ``GroupStateTimeout.EventTimeTimeout`` (``events`` must carry a
+    watermark): every batch re-arms the key's timeout at (max event
+    time in batch + expire_after_ms); when the WATERMARK passes that
+    stamp without new data, Spark calls once more with
     ``state.hasTimedOut`` and the key's state is dropped — a later
-    event re-creates it from zero. The re-arm stamp derives from
-    EVENT time (never wall clock), so replays expire identically.
-
-    Stamp pitfalls (tz-naive Arrow timestamps, DST transitions, the
-    late-only-key watermark clamp) are handled in
-    :func:`_event_timeout_ms`, shared with the expiring CUSUM."""
+    event re-creates it from ``fold.init``. The stamp derives from
+    EVENT time (never wall clock), so replays expire identically; its
+    pitfalls are handled in :func:`_event_timeout_ms`."""
+    tz = events.sparkSession.conf.get("spark.sql.session.timeZone")
 
     def update(
         key: tuple[Any, ...], pdfs: Iterator["pd.DataFrame"], state: GroupState
@@ -170,32 +198,59 @@ def _update_user_profile_expiring(expire_ms: int, session_tz: str):
             # free the key's state store entry (the 100 TB OOM guard)
             state.remove()
             return
-        st = state.get if state.exists else (0, 0)
-        batch_events = 0
-        batch_cents = 0
-        max_ts = None
-        for pdf in pdfs:
-            n, c = _acc(pdf)
-            batch_events += n
-            batch_cents += c
-            m = pdf["ts"].max()
-            max_ts = m if max_ts is None else max(max_ts, m)
-        st = _step(st, batch_events, batch_cents)
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        st, n = fold.apply(state.get if state.exists else fold.init, pdf)
         state.update(st)
-        if max_ts is not None:
+        if expire_after_ms is not None:
             state.setTimeoutTimestamp(
-                _event_timeout_ms(max_ts, session_tz, expire_ms, state)
+                _event_timeout_ms(pdf["ts"].max(), tz, expire_after_ms, state)
             )
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "batch_events": [batch_events],
-                "total_events": [st[0]],
-                "total_value": [st[1] / 100.0],
-            }
-        )
+        yield _one_row(fold.emit(key[0], st, n))
 
-    return update
+    return events.groupBy(key_col).applyInPandasWithState(
+        update,
+        fold.output_schema,
+        fold.state_schema,
+        "update",
+        GroupStateTimeout.NoTimeout
+        if expire_after_ms is None
+        else GroupStateTimeout.EventTimeTimeout,
+    )
+
+
+def _replay(events: DataFrame, key_col: str, fold: _Fold) -> DataFrame:
+    """Batch twin of :func:`_stateful`: ``step`` once over each key's
+    full history (sorted by ``fold.order``) from ``fold.init`` — the
+    stream's FINAL state when the whole history is one micro-batch."""
+
+    def run(key: tuple[Any, ...], pdf: "pd.DataFrame") -> "pd.DataFrame":
+        st, n = fold.apply(fold.init, pdf)
+        return _one_row(fold.emit(key[0], st, n))
+
+    return events.groupBy(key_col).applyInPandas(run, fold.output_schema)
+
+
+# --- running user profiles ----------------------------------------------------
+
+
+def _profile_step(st: tuple, pdf: "pd.DataFrame") -> tuple[tuple, int]:
+    """Fold one batch's (count, cents) into the running (events, cents)."""
+    n = len(pdf)
+    return (st[0] + n, st[1] + int(_frame_cents(pdf).sum())), n
+
+
+_PROFILE = _Fold(
+    init=(0, 0),
+    step=_profile_step,
+    emit=lambda user, st, n: {
+        "user_id": user,
+        "batch_events": n,
+        "total_events": st[0],
+        "total_value": st[1] / 100.0,
+    },
+    output_schema=OUTPUT_SCHEMA,
+    state_schema=STATE_SCHEMA,
+)
 
 
 def running_user_profiles(
@@ -215,29 +270,15 @@ def running_user_profiles(
     (tests/test_streaming.py::test_stateful_state_expiry exercises
     drop + fresh re-creation). Default (None) keeps NoTimeout for
     replay-style jobs where every key must stay resumable."""
-    if expire_after_ms is not None:
-        tz = events.sparkSession.conf.get("spark.sql.session.timeZone")
-        return events.groupBy("user_id").applyInPandasWithState(
-            _update_user_profile_expiring(expire_after_ms, tz),
-            OUTPUT_SCHEMA,
-            STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_user_profile,
-        OUTPUT_SCHEMA,
-        STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
+    return _stateful(events, "user_id", _PROFILE, expire_after_ms)
 
 
 def _fold_partition(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
     """Replay the state machine for EVERY user in one partition with
     one vectorized pass: rows arrive hash-partitioned by user and
     sorted by (user, batch), so a grouped cumulative sum IS repeated
-    `_step` (integer addition is associative) applied in batch order.
+    `_profile_step` (integer addition is associative) applied in batch
+    order.
 
     One Python invocation per partition — NOT per key. Per-group
     applyInPandas costs ~2 ms of Arrow/call overhead per key, which
@@ -267,7 +308,6 @@ def running_user_profiles_batch(
     events: DataFrame,
     batch_key: Column,
     value_col: str = "value",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Deterministic batch twin of :func:`running_user_profiles`:
     replays the per-user state machine over `batch_key` (a data-derived
@@ -279,15 +319,14 @@ def running_user_profiles_batch(
        in the JVM as a map-side-combined groupBy BEFORE any Python —
        never ship raw rows into Python when an associative reduce
        works; only the (user × batch) summary rows cross Arrow;
-    2. an EXPLICIT repartition(N, user) — explicit so AQE cannot
-       coalesce the (bytes-tiny, group-heavy) exchange into one
-       partition and serialize the Python stage;
+    2. an EXPLICIT repartition(defaultParallelism, user) — explicit so
+       AQE cannot coalesce the (bytes-tiny, group-heavy) exchange into
+       one partition and serialize the Python stage;
     3. sortWithinPartitions(user, batch) + one mapInPandas fold per
        partition (`_fold_partition`) — per-partition, not per-key,
        Python invocation.
     """
-    sc = events.sparkSession.sparkContext
-    n_parts = num_partitions or sc.defaultParallelism
+    n_parts = events.sparkSession.sparkContext.defaultParallelism
     reduced = (
         events.select(
             "user_id",
@@ -301,6 +340,43 @@ def running_user_profiles_batch(
         reduced.repartition(n_parts, "user_id")
         .sortWithinPartitions("user_id", "batch_key")
         .mapInPandas(_fold_partition, BATCH_OUTPUT_SCHEMA)
+    )
+
+
+# --- per-shard sketches ---------------------------------------------------------
+
+
+def _sketch_fold(
+    cells: str,
+    values: str,
+    output_schema: str,
+    state_schema: str,
+    add: Callable[["pd.DataFrame"], tuple[dict, int]],
+    merge: Callable[[list, list, dict], tuple[list, list]],
+) -> _Fold:
+    """Spec of a per-shard sketch held as two parallel arrays plus a
+    row total: ``add(frame)`` reduces a batch to ({cell: value},
+    batch_rows) and ``merge`` folds that into the (cells, values)
+    arrays in canonical order."""
+
+    def step(st: tuple, pdf: "pd.DataFrame") -> tuple[tuple, int]:
+        xs, ys, total = st
+        batch, n = add(pdf)
+        xs, ys = merge(list(xs), list(ys), batch)
+        return (xs, ys, int(total) + n), n
+
+    return _Fold(
+        init=([], [], 0),
+        step=step,
+        emit=lambda shard, st, n: {
+            "shard": shard,
+            "batch_rows": n,
+            "total_rows": st[2],
+            cells: st[0],
+            values: st[1],
+        },
+        output_schema=output_schema,
+        state_schema=state_schema,
     )
 
 
@@ -336,37 +412,6 @@ def _mg_merge(
     return [it for it, _ in pairs], [int(c) for _, c in pairs]
 
 
-def _update_mg(k: int, item_col: str):
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator["pd.DataFrame"], state: GroupState
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        items, counts, total = (
-            state.get if state.exists else ([], [], 0)
-        )
-        batch: dict = {}
-        n = 0
-        for pdf in pdfs:
-            for it, c in pdf[item_col].value_counts().items():
-                batch[it] = batch.get(it, 0) + int(c)
-            n += len(pdf)
-        items, counts = _mg_merge(list(items), list(counts), batch, k)
-        total = int(total) + n
-        state.update((items, counts, total))
-        yield pd.DataFrame(
-            {
-                "shard": [key[0]],
-                "batch_rows": [n],
-                "total_rows": [total],
-                "items": [items],
-                "counts": [counts],
-            }
-        )
-
-    return update
-
-
 def running_heavy_hitters(
     events: DataFrame,
     k: int = 8,
@@ -385,17 +430,12 @@ def running_heavy_hitters(
     summary per (shard, micro-batch); the latest row per shard (max
     total_rows) is the current summary."""
     shard = shard if shard is not None else F.pmod(F.col("user_id"), F.lit(4))
-    return (
-        events.withColumn("shard", shard.cast("long"))
-        .groupBy("shard")
-        .applyInPandasWithState(
-            _update_mg(k, item_col),
-            MG_OUTPUT_SCHEMA,
-            MG_STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
+    fold = _sketch_fold(
+        "items", "counts", MG_OUTPUT_SCHEMA, MG_STATE_SCHEMA,
+        add=lambda pdf: (pdf[item_col].value_counts().to_dict(), len(pdf)),
+        merge=lambda items, counts, add: _mg_merge(items, counts, add, k),
     )
+    return _stateful(events.withColumn("shard", shard.cast("long")), "shard", fold)
 
 
 def heavy_hitters_batch(
@@ -480,45 +520,6 @@ def _qh_merge(buckets: list, counts: list, add: dict) -> tuple[list, list]:
     return [lo for lo, _ in pairs], [int(c) for _, c in pairs]
 
 
-def _update_qh(value_col: str):
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator["pd.DataFrame"], state: GroupState
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        buckets, counts, total = state.get if state.exists else ([], [], 0)
-        add: dict = {}
-        n = 0
-        for pdf in pdfs:
-            # exact `cents` column when the caller provides one (the
-            # _acc convention); else the HALF_UP derivation that
-            # matches value_histogram_batch's decimal(18,2) cast —
-            # pandas' half-to-even round() would bucket half-cent
-            # doubles (2.125 → 212) differently from the JVM (213).
-            if "cents" in pdf.columns:
-                cents = pdf["cents"].astype("int64")
-            else:
-                cents = _half_up_cents(pdf[value_col])
-            cents = cents[cents >= 10]
-            for v, c in cents.map(_qh_lo).value_counts().items():
-                add[int(v)] = add.get(int(v), 0) + int(c)
-            n += int(len(cents))
-        buckets, counts = _qh_merge(list(buckets), list(counts), add)
-        total = int(total) + n
-        state.update((buckets, counts, total))
-        yield pd.DataFrame(
-            {
-                "shard": [key[0]],
-                "batch_rows": [n],
-                "total_rows": [total],
-                "buckets": [buckets],
-                "counts": [counts],
-            }
-        )
-
-    return update
-
-
 def running_value_histogram(
     events: DataFrame,
     value_col: str = "value",
@@ -535,18 +536,18 @@ def running_value_histogram(
     stream's final state equals the batch computation EXACTLY — the
     strongest stream≡batch law in this module (MG is split-dependent,
     CUSUM order-dependent; this is neither)."""
+
+    def add(pdf: "pd.DataFrame") -> tuple[dict, int]:
+        cents = _frame_cents(pdf, value_col)
+        cents = cents[cents >= 10]
+        counts = cents.map(_qh_lo).value_counts()
+        return {int(lo): int(c) for lo, c in counts.items()}, len(cents)
+
     shard = shard if shard is not None else F.pmod(F.col("user_id"), F.lit(4))
-    return (
-        events.withColumn("shard", shard.cast("long"))
-        .groupBy("shard")
-        .applyInPandasWithState(
-            _update_qh(value_col),
-            QH_OUTPUT_SCHEMA,
-            QH_STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
+    fold = _sketch_fold(
+        "buckets", "counts", QH_OUTPUT_SCHEMA, QH_STATE_SCHEMA, add, _qh_merge
     )
+    return _stateful(events.withColumn("shard", shard.cast("long")), "shard", fold)
 
 
 def value_histogram_batch(
@@ -643,80 +644,28 @@ def _cusum_fold(
     return s_micros, n_alarms, n
 
 
-def _update_cusum(mean: float, std: float, k: float, h: float):
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        st = state.get if state.exists else (0, 0, 0)
+def _cusum_spec(mean: float, std: float, k: float, h: float) -> _Fold:
+    def step(st: tuple, pdf: "pd.DataFrame") -> tuple[tuple, int]:
         s_micros, total_rows, n_alarms = st
-        batch_rows = 0
-        for pdf in pdfs:
-            # deterministic in-batch order: event time then unique id
-            pdf = pdf.sort_values(["ts", "event_id"])
-            s_micros, n_alarms, n = _cusum_fold(
-                s_micros, n_alarms, pdf["value"].tolist(), mean, std, k, h
-            )
-            batch_rows += n
-        total_rows += batch_rows
-        state.update((s_micros, total_rows, n_alarms))
-        yield pd.DataFrame(
-            {
-                "series_key": [key[0]],
-                "batch_rows": [batch_rows],
-                "total_rows": [total_rows],
-                "s_end": [s_micros / _M],
-                "n_alarms": [n_alarms],
-            }
+        s_micros, n_alarms, n = _cusum_fold(
+            s_micros, n_alarms, pdf["value"].tolist(), mean, std, k, h
         )
+        return (s_micros, total_rows + n, n_alarms), n
 
-    return update
-
-
-def _update_cusum_expiring(
-    mean: float, std: float, k: float, h: float, expire_ms: int, session_tz: str
-):
-    """EventTimeTimeout-armed :func:`_update_cusum`: same integer-
-    micros fold, plus the profile operator's expiry protocol — re-arm
-    at (max batch event time + expire_ms), drop state when the
-    watermark passes it (stamp handling shared via
-    :func:`_event_timeout_ms`). A dropped key's recursion restarts at
-    s = 0 on its next event, exactly a fresh detector."""
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        st = state.get if state.exists else (0, 0, 0)
-        s_micros, total_rows, n_alarms = st
-        batch_rows = 0
-        max_ts = None
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            s_micros, n_alarms, n = _cusum_fold(
-                s_micros, n_alarms, pdf["value"].tolist(), mean, std, k, h
-            )
-            batch_rows += n
-            m = pdf["ts"].max()
-            max_ts = m if max_ts is None else max(max_ts, m)
-        total_rows += batch_rows
-        state.update((s_micros, total_rows, n_alarms))
-        if max_ts is not None:
-            state.setTimeoutTimestamp(
-                _event_timeout_ms(max_ts, session_tz, expire_ms, state)
-            )
-        yield pd.DataFrame(
-            {
-                "series_key": [key[0]],
-                "batch_rows": [batch_rows],
-                "total_rows": [total_rows],
-                "s_end": [s_micros / _M],
-                "n_alarms": [n_alarms],
-            }
-        )
-
-    return update
+    return _Fold(
+        init=(0, 0, 0),
+        step=step,
+        emit=lambda key, st, n: {
+            "series_key": key,
+            "batch_rows": n,
+            "total_rows": st[1],
+            "s_end": st[0] / _M,
+            "n_alarms": st[2],
+        },
+        output_schema=CUSUM_OUTPUT_SCHEMA,
+        state_schema=CUSUM_STATE_SCHEMA,
+        order=_TIME_ORDER,
+    )
 
 
 def running_cusum(
@@ -751,22 +700,7 @@ def running_cusum(
     so state is bounded without expiry — and expiring a shard would
     silently discard the whole-history summary those sketches exist
     to maintain."""
-    if expire_after_ms is not None:
-        tz = events.sparkSession.conf.get("spark.sql.session.timeZone")
-        return events.groupBy(key_col).applyInPandasWithState(
-            _update_cusum_expiring(mean, std, k, h, expire_after_ms, tz),
-            CUSUM_OUTPUT_SCHEMA,
-            CUSUM_STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    return events.groupBy(key_col).applyInPandasWithState(
-        _update_cusum(mean, std, k, h),
-        CUSUM_OUTPUT_SCHEMA,
-        CUSUM_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
+    return _stateful(events, key_col, _cusum_spec(mean, std, k, h), expire_after_ms)
 
 
 def running_cusum_batch(
@@ -789,25 +723,7 @@ def running_cusum_batch(
     partitions satisfies this; an out-of-order event-time stream
     needs watermark-based reordering before the fold (integer-micros
     state removes float drift, not ordering sensitivity)."""
-
-    def run(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values(["ts", "event_id"])
-        s_micros, n_alarms, n = _cusum_fold(
-            0, 0, pdf["value"].tolist(), mean, std, k, h
-        )
-        return pd.DataFrame(
-            {
-                "series_key": [pdf[key_col].iloc[0]],
-                "batch_rows": [n],
-                "total_rows": [n],
-                "s_end": [s_micros / _M],
-                "n_alarms": [n_alarms],
-            }
-        )
-
-    return events.groupBy(key_col).applyInPandas(run, CUSUM_OUTPUT_SCHEMA)
+    return _replay(events, key_col, _cusum_spec(mean, std, k, h))
 
 
 # --- streaming recursive EWMA -------------------------------------------------
@@ -848,43 +764,27 @@ def _ewma_fold(
     return s_micros, started, n
 
 
-def _update_ewma(alpha_micros: int, expire_ms: int | None, session_tz: str | None):
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        s_micros, total_rows, started = (
-            state.get if state.exists else (0, 0, False)
+def _ewma_spec(alpha_micros: int) -> _Fold:
+    def step(st: tuple, pdf: "pd.DataFrame") -> tuple[tuple, int]:
+        s_micros, total_rows, started = st
+        s_micros, started, n = _ewma_fold(
+            s_micros, started, pdf["value"].tolist(), alpha_micros
         )
-        batch_rows = 0
-        max_ts = None
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            s_micros, started, n = _ewma_fold(
-                s_micros, started, pdf["value"].tolist(), alpha_micros
-            )
-            batch_rows += n
-            if expire_ms is not None:
-                m = pdf["ts"].max()
-                max_ts = m if max_ts is None else max(max_ts, m)
-        total_rows += batch_rows
-        state.update((s_micros, total_rows, started))
-        if expire_ms is not None and max_ts is not None:
-            state.setTimeoutTimestamp(
-                _event_timeout_ms(max_ts, session_tz, expire_ms, state)
-            )
-        yield pd.DataFrame(
-            {
-                "series_key": [key[0]],
-                "batch_rows": [batch_rows],
-                "total_rows": [total_rows],
-                "ewma": [s_micros / _M],
-            }
-        )
+        return (s_micros, total_rows + n, started), n
 
-    return update
+    return _Fold(
+        init=(0, 0, False),
+        step=step,
+        emit=lambda key, st, n: {
+            "series_key": key,
+            "batch_rows": n,
+            "total_rows": st[1],
+            "ewma": st[0] / _M,
+        },
+        output_schema=EWMA_OUTPUT_SCHEMA,
+        state_schema=EWMA_STATE_SCHEMA,
+        order=_TIME_ORDER,
+    )
 
 
 def running_ewma(
@@ -904,22 +804,7 @@ def running_ewma(
     event_type key is bounded. Stream ≡ batch twin exactly under
     in-order arrival (integer-micros state; the same caveat as
     running_cusum_batch documents)."""
-    if expire_after_ms is not None:
-        tz = events.sparkSession.conf.get("spark.sql.session.timeZone")
-        return events.groupBy(key_col).applyInPandasWithState(
-            _update_ewma(alpha_micros, expire_after_ms, tz),
-            EWMA_OUTPUT_SCHEMA,
-            EWMA_STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    return events.groupBy(key_col).applyInPandasWithState(
-        _update_ewma(alpha_micros, None, None),
-        EWMA_OUTPUT_SCHEMA,
-        EWMA_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
+    return _stateful(events, key_col, _ewma_spec(alpha_micros), expire_after_ms)
 
 
 def running_ewma_batch(
@@ -929,22 +814,7 @@ def running_ewma_batch(
 ) -> DataFrame:
     """Batch twin: one applyInPandas pass per key over the full
     history in (ts, event_id) order — the stream's FINAL state."""
-
-    def run(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values(["ts", "event_id"])
-        s_micros, started, n = _ewma_fold(0, False, pdf["value"].tolist(), alpha_micros)
-        return pd.DataFrame(
-            {
-                "series_key": [pdf[key_col].iloc[0]],
-                "batch_rows": [n],
-                "total_rows": [n],
-                "ewma": [s_micros / _M],
-            }
-        )
-
-    return events.groupBy(key_col).applyInPandas(run, EWMA_OUTPUT_SCHEMA)
+    return _replay(events, key_col, _ewma_spec(alpha_micros))
 
 
 # --- streaming HyperLogLog distinct count -------------------------------------
@@ -979,34 +849,14 @@ def hll_rho_cols(events: DataFrame, key_col: str = "user_id") -> DataFrame:
     ).withColumn("shard", F.pmod(F.col("idx"), F.lit(HLL_SHARDS)).cast("long"))
 
 
-def _update_hll():
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        idxs, rs, total = state.get if state.exists else ([], [], 0)
-        m = dict(zip(idxs, rs))
-        n = 0
-        for pdf in pdfs:
-            for idx, r in (
-                pdf.groupby("idx")["r"].max().items()
-            ):
-                m[int(idx)] = max(m.get(int(idx), 0), int(r))
-            n += len(pdf)
-        total = int(total) + n
-        pairs = sorted(m.items())
-        idxs, rs = [i for i, _ in pairs], [int(r) for _, r in pairs]
-        state.update((idxs, rs, total))
-        yield pd.DataFrame(
-            {
-                "shard": [key[0]],
-                "batch_rows": [n],
-                "total_rows": [total],
-                "idxs": [idxs],
-                "rs": [rs],
-            }
-        )
-
-    return update
+def _hll_merge(idxs: list, rs: list, add: dict) -> tuple[list, list]:
+    """Register merge: elementwise max, in ascending-idx order — like
+    the histogram merge, a pure function of the multiset."""
+    m = dict(zip(idxs, rs))
+    for idx, r in add.items():
+        m[int(idx)] = max(m.get(int(idx), 0), int(r))
+    pairs = sorted(m.items())
+    return [i for i, _ in pairs], [int(r) for _, r in pairs]
 
 
 def running_distinct_hll(events: DataFrame, key_col: str = "user_id") -> DataFrame:
@@ -1021,17 +871,12 @@ def running_distinct_hll(events: DataFrame, key_col: str = "user_id") -> DataFra
     any point-in-time estimate reads off the merged shard registers
     via `hll_estimate` (catalog_behavior.py). State never grows with
     key cardinality: the size-capped NoTimeout exemption class."""
-    return (
-        hll_rho_cols(events, key_col)
-        .groupBy("shard")
-        .applyInPandasWithState(
-            _update_hll(),
-            HLL_OUTPUT_SCHEMA,
-            HLL_STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
+    fold = _sketch_fold(
+        "idxs", "rs", HLL_OUTPUT_SCHEMA, HLL_STATE_SCHEMA,
+        add=lambda pdf: (pdf.groupby("idx")["r"].max().to_dict(), len(pdf)),
+        merge=_hll_merge,
     )
+    return _stateful(hll_rho_cols(events, key_col), "shard", fold)
 
 
 def distinct_hll_batch(events: DataFrame, key_col: str = "user_id") -> DataFrame:

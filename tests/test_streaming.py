@@ -11,6 +11,7 @@ import json
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.streaming.ingest import (
@@ -1360,6 +1361,91 @@ def test_streaming_hll_registers_equal_batch_exactly(spark, tmp_path):
     est = hll_estimate(df, ["g"]).collect()[0]["est"]
     true_n = len({e["user_id"] for b in batches for e in b})
     assert abs(est - true_n) / true_n < 0.25
+
+
+def _chunk_twins():
+    """(stream builder, batch twin, key column) per stateful operator."""
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.streaming import stateful as S
+
+    def cusum(fn):
+        return lambda ev: fn(ev, mean=10.0, std=2.0, k=0.5, h=5.0)
+
+    return {
+        "running_user_profiles": (
+            S.running_user_profiles,
+            lambda ev: S.running_user_profiles_batch(ev, F.lit("all")),
+            "user_id",
+        ),
+        "running_heavy_hitters": (
+            lambda ev: S.running_heavy_hitters(ev, k=2),
+            lambda ev: S.heavy_hitters_batch(ev, F.lit("all"), k=2),
+            "shard",
+        ),
+        "running_value_histogram": (
+            S.running_value_histogram, S.value_histogram_batch, "shard"
+        ),
+        "running_cusum": (cusum(S.running_cusum), cusum(S.running_cusum_batch), "series_key"),
+        "running_ewma": (S.running_ewma, S.running_ewma_batch, "series_key"),
+        "running_distinct_hll": (S.running_distinct_hll, S.distinct_hll_batch, "shard"),
+    }
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "running_user_profiles",
+        "running_heavy_hitters",
+        "running_value_histogram",
+        "running_cusum",
+        "running_ewma",
+        "running_distinct_hll",
+    ],
+)
+def test_stateful_ops_invariant_to_arrow_chunking(spark, tmp_path, op):
+    """Every stateful operator folds a key's WHOLE micro-batch, however
+    Arrow splits it: with maxRecordsPerBatch=3 and one file (one
+    micro-batch) whose rows run in DESCENDING event time, each key's
+    stream row equals its batch twin. Sorting each 3-row chunk on its
+    own would feed the order-sensitive recursions the newest chunk
+    first: CUSUM would end at s=12.0 with 10 alarms instead of 15.0
+    with 4, and EWMA at 11.57 instead of 14.43."""
+    stream_fn, batch_fn, key = _chunk_twins()[op]
+    src = tmp_path / "chunk_src"
+    src.mkdir()
+    # one series in time order: six readings at 10.0, then six at 16.0
+    # (mean=10, std=2, k=0.5: dev -0.5 then +2.5 per row); the file
+    # lists them newest first
+    rows = [
+        _ev(t, f"2024-01-01 10:{t:02d}:00", user=1 + t % 5, etype="a",
+            value=10.0 if t < 6 else 16.0)
+        for t in range(12)
+    ][::-1]
+    _write_json(str(src / "b0.json"), rows, time.time())
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        q = (
+            stream_fn(read_file_stream(spark, str(src)))
+            .writeStream.format("memory")
+            .queryName(f"chunk_{op}")
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        stream = [r.asDict() for r in spark.table(f"chunk_{op}").collect()]
+        hist = spark.read.schema(EVENTS_SCHEMA).json(str(src))
+        batch = [r.asDict() for r in batch_fn(hist).collect()]
+    finally:
+        spark.conf.set(conf, old)
+
+    cols = list(stream[0])
+    assert len(stream) == len({r[key] for r in stream}) == len(batch)
+    got = {r[key]: r for r in stream}
+    want = {r[key]: {c: r[c] for c in cols} for r in batch}
+    assert got == want
 
 
 def test_split_corrupt_quarantines_malformed_payloads(spark):
