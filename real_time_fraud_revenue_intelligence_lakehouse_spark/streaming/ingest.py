@@ -194,7 +194,23 @@ def start_append_sink(
     """S6: the bronze append sink (`ingest_stream.py:99-114`) —
     checkpointed, partitioned, append-only. Delta in production;
     parquet here. `availableNow` drains all pending input then stops
-    (the testable trigger)."""
+    (the testable trigger).
+
+    With ``partition_by``, each micro-batch is hash-repartitioned by
+    those columns into ``spark.sql.shuffle.partitions`` writer tasks,
+    so it writes one file per (micro-batch, partition value) instead
+    of one per (scan task, value). All rows of one value go to one
+    task, so the writes use every core only when a micro-batch holds
+    more values than there are tasks. A micro-batch of a single
+    ``event_date`` (live traffic) pays for the shuffle and is written
+    by one task; unlike Delta's ``optimizeWrite``, no value is split
+    by size (OPTIMIZATION_r18.md has the measured cost). The count is
+    explicit because AQE would coalesce a bare ``repartition(*cols)``
+    of a small micro-batch into a single writer task. Unpartitioned
+    sinks keep their shuffle-free plan."""
+    if partition_by:
+        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        df = df.repartition(n, *partition_by)
     writer = (
         df.writeStream.format(fmt)
         .outputMode("append")

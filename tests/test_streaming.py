@@ -146,6 +146,45 @@ def test_bronze_append_sink_and_stamping(spark, tmp_path):
     assert (out / "event_date=2024-01-01").exists()
 
 
+@pytest.mark.parametrize("partitioned", [True, False], ids=["partitioned", "unpartitioned"])
+def test_append_sink_writes_one_file_per_partition_value(spark, tmp_path, capsys, partitioned):
+    """One micro-batch of 4 files (4 scan tasks), each holding one
+    event on each of 3 dates. The partitioned sink hash-repartitions
+    by event_date first, so each date gets ONE file, not one per scan
+    task (4); the unpartitioned sink keeps its shuffle-free plan."""
+    src, out, ckpt = tmp_path / "s", tmp_path / "bronze", tmp_path / "ckpt"
+    src.mkdir()
+    days = ["2024-01-01", "2024-01-02", "2024-01-03"]
+    now = time.time()
+    for f in range(4):
+        _write_json(
+            str(src / f"f{f}.json"),
+            [_ev(10 * f + d, f"{day} 12:00:00") for d, day in enumerate(days)],
+            now,
+        )
+    q = start_append_sink(
+        stamp_bronze(read_file_stream(spark, str(src), max_files_per_trigger=4)),
+        str(out),
+        str(ckpt),
+        partition_by=["event_date"] if partitioned else None,
+        available_now=True,
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert spark.read.parquet(str(out)).count() == 12
+    q.explain()
+    plan = capsys.readouterr().out
+    if partitioned:
+        files = {
+            day: sum(p.endswith(".parquet") for p in os.listdir(out / f"event_date={day}"))
+            for day in days
+        }
+        assert files == dict.fromkeys(days, 1)
+        assert "Exchange" in plan, plan
+    else:
+        assert "Exchange" not in plan, plan
+
+
 def test_session_windows_in_stream(spark, tmp_path):
     """Gap-based session windows under writeStream (the batch form is
     oracle-checked as q_session_window): a 5-min gap splits a user's
