@@ -32,16 +32,6 @@ from pyspark.sql import types as T
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
-#: Metadata struct carried next to every binary payload.
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("byte_len", T.LongType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
 #: Output schema of the (stubbed) decode/feature-extract stage.
 DECODE_FEATURES_SCHEMA = T.StructType(
     [

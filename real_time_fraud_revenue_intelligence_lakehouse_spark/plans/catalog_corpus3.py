@@ -36,7 +36,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_ext impo
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import text as X
-from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import doc_tokens
+from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import doc_tokens, memo
 
 # --- inverted index ---------------------------------------------------------
 
@@ -249,25 +249,13 @@ def _bpe_apply(frame: DataFrame, best: DataFrame, keep: list) -> DataFrame:
     )
 
 
-_BPE_TRAINED: dict[tuple, list] = {}
-
-from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import register_cache  # noqa: E402
-
-register_cache(_BPE_TRAINED)
-
-
 def _bpe_train_shared(spark: SparkSession, sf_dir: str) -> list:
     """Memoized :func:`_bpe_train` — trainer (q_bpe_merges) and
     encoder (q_bpe_encode) share one learned merge list per process
-    (the shared_frames discipline, in list-of-1-row-frames form; each
-    frame is already localCheckpointed by the trainer). Keying,
-    dead-session eviction, locking, and clear_cache block-freeing all
-    come from shared_frames.shared_value — no hand-rolled replica."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import shared_value
-
-    return shared_value(
-        spark, sf_dir, _BPE_TRAINED, lambda: _bpe_train(spark, sf_dir)
-    )
+    (a list of 1-row frames, each already localCheckpointed by the
+    trainer). Keying, dead-session eviction, locking, and clear_cache
+    block-freeing all come from shared_frames.memo."""
+    return memo(spark, sf_dir, "bpe_merges", lambda: _bpe_train(spark, sf_dir))
 
 
 def _bpe_train(spark: SparkSession, sf_dir: str) -> list:

@@ -39,7 +39,6 @@ def _r(expr: str, digits: int = 4) -> str:
     return R.format(c=expr, s=float(10**digits))
 
 
-NTOKS = TOKS.format(c="{c}")
 UNIQ_RATIO = (
     f"len(list_distinct({TOKS.format(c='{c}')})) / greatest(len({TOKS.format(c='{c}')}), 1)"
 )

@@ -170,21 +170,10 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import (  
     risk_label,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import (  # noqa: E402
-    register_cache,
+    memo,
+    memo_get,
     shared_frame,
 )
-
-#: memoized trained weights per (applicationId, sf_dir) — training is
-#: a pure function of the input tables, so q_logreg_train_score
-#: reuses q_logreg_train's fold inside one process exactly like the
-#: ivf_corpus_cells reuse (shared_frames.py's determinism argument).
-#: Bench note: like every shared_frame consumer, bench.py's pass 1
-#: pays the full descent (reported in its cold series) and later
-#: passes read the memo; scale_probe.py clear_cache()s per timed run
-#: and therefore times the full build. tools/scale_probe and the
-#: BASELINE row document the cold cost explicitly.
-_LOGREG_WEIGHTS: dict = {}
-register_cache(_LOGREG_WEIGHTS)
 
 
 def _logreg_fv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -210,12 +199,19 @@ def _logreg_fv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _trained_weights(spark: SparkSession, sf_dir: str) -> tuple[dict, int]:
-    import os as _os
-
-    k = (spark.sparkContext.applicationId, _os.path.realpath(sf_dir))
-    if k not in _LOGREG_WEIGHTS:
-        _LOGREG_WEIGHTS[k] = train_logreg(_logreg_fv(spark, sf_dir))
-    return _LOGREG_WEIGHTS[k]
+    """Trained weights, memoized per process — training is a pure
+    function of the input tables, so q_logreg_train_score reuses
+    q_logreg_train's fold exactly like the ivf_corpus_cells reuse
+    (shared_frames.py's determinism argument). Bench note: like every
+    memo consumer, bench.py's pass 1 pays the full descent (reported
+    in its cold series) and later passes read the memo;
+    scale_probe.py clear_cache()s per timed run and therefore times
+    the full build. tools/scale_probe and the BASELINE row document
+    the cold cost explicitly."""
+    return memo(
+        spark, sf_dir, "logreg_weights",
+        lambda: train_logreg(_logreg_fv(spark, sf_dir)),
+    )
 
 
 @query(
@@ -255,14 +251,10 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import ( 
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60  # noqa: E402
 
-#: memoized weighted weights / grid results per (applicationId,
-#: sf_dir) — the logreg-weights discipline (pure functions of the
-#: input tables; bench.py's trainer_cold series reports the honest
-#: cache-cleared descent for every member of this family).
-_WEIGHTED: dict = {}
-_MODELSEL: dict = {}
-register_cache(_WEIGHTED)
-register_cache(_MODELSEL)
+# The weighted weights and the grid's holdout row below are memoized
+# like _trained_weights (pure functions of the input tables; bench.py's
+# trainer_cold series reports the honest cache-cleared descent for
+# every member of this family).
 
 
 @query(
@@ -285,14 +277,13 @@ def q_logreg_train_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle computes the identical double from its own counts and
     the whole weighted descent hash-gates like the unweighted one."""
     import math
-    import os as _os
 
-    key = (spark.sparkContext.applicationId, _os.path.realpath(sf_dir))
-    if key not in _WEIGHTED:
+    def build():
         fv = _logreg_fv(spark, sf_dir)
         pw, n_eff = scale_pos_weight(fv)
-        _WEIGHTED[key] = train_logreg(fv, pos_weight=pw, n_eff=n_eff)
-    w, _n = _WEIGHTED[key]
+        return train_logreg(fv, pos_weight=pw, n_eff=n_eff)
+
+    w, _n = memo(spark, sf_dir, "logreg_weighted", build)
     names = ["bias"] + list(SCORE_FEATURES)
     rows = [(m, math.floor(w[m] * 1e6 + 0.5) / 1e6) for m in names]
     return spark.createDataFrame(rows, "feature string, weight double")
@@ -319,10 +310,8 @@ def q_model_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECTION ITSELF hash-gates — the q_ivf_nprobe_curve
     decision-artifact pattern applied to training."""
     import math
-    import os as _os
 
-    key = (spark.sparkContext.applicationId, _os.path.realpath(sf_dir))
-    if key not in _MODELSEL:
+    def build():
         fv = _logreg_fv(spark, sf_dir)
         b = hash60(F.col("o_orderkey").cast("string")) % 100
         tr = fv.filter(b < 80)
@@ -339,8 +328,9 @@ def q_model_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
                     _loss_expr(_z_expr(w, SCORE_FEATURES)).cast("decimal(18,6)")
                 ).alias(f"L_{i}")
             )
-        _MODELSEL[key] = va.agg(*aggs).first()
-    row = _MODELSEL[key]
+        return va.agg(*aggs).first()
+
+    row = memo(spark, sf_dir, "logreg_model_selection", build)
     n = row["n"]
     r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
     losses = [r6(float(row[f"L_{i}"]) / n) for i in range(len(MS_CONFIGS))]
@@ -556,19 +546,12 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import ( 
 )
 
 
-#: memoized trained centroids per (applicationId, sf_dir) — the
-#: logreg-weights discipline; q_kmeans_inertia reuses the fold.
-_KMEANS: dict = {}
-register_cache(_KMEANS)
-
-
 def _trained_kmeans(spark: SparkSession, sf_dir: str):
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.realpath(sf_dir))
-    if key not in _KMEANS:
-        _KMEANS[key] = train_kmeans(_logreg_fv(spark, sf_dir))
-    return _KMEANS[key]
+    """Trained centroids, memoized like _trained_weights;
+    q_kmeans_inertia reuses the fold."""
+    return memo(
+        spark, sf_dir, "kmeans", lambda: train_kmeans(_logreg_fv(spark, sf_dir))
+    )
 
 
 @query(
@@ -671,19 +654,10 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # no
     train_gbt,
 )
 
-#: memoized trained trees per (applicationId, sf_dir) — the logreg
-#: weights discipline; q_gbt_train_score reuses q_gbt_train's fit.
-_GBT: dict = {}
-register_cache(_GBT)
-
-
 def _trained_gbt(spark: SparkSession, sf_dir: str) -> list[dict]:
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.realpath(sf_dir))
-    if key not in _GBT:
-        _GBT[key] = train_gbt(_logreg_fv(spark, sf_dir))
-    return _GBT[key]
+    """Trained trees, memoized like _trained_weights;
+    q_gbt_train_score reuses q_gbt_train's fit."""
+    return memo(spark, sf_dir, "gbt", lambda: train_gbt(_logreg_fv(spark, sf_dir)))
 
 
 @query(
@@ -830,19 +804,13 @@ def q_gbt_train_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GBT_W: dict = {}
-register_cache(_GBT_W)
-
-
 def _trained_gbt_weighted(spark: SparkSession, sf_dir: str) -> list[dict]:
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.realpath(sf_dir))
-    if key not in _GBT_W:
+    def build():
         fv = _logreg_fv(spark, sf_dir)
         pw, _n_eff = scale_pos_weight(fv)
-        _GBT_W[key] = train_gbt(fv, pos_weight=pw)
-    return _GBT_W[key]
+        return train_gbt(fv, pos_weight=pw)
+
+    return memo(spark, sf_dir, "gbt_weighted", build)
 
 
 @query(
@@ -949,13 +917,6 @@ def _model_card_oracle() -> str:
     )
 
 
-#: memoized card row per (applicationId, sf_dir) — the card is a pure
-#: function of the trained trees + feature frame; q_model_promotion
-#: reuses it instead of re-running the distinct-score reduction.
-#: bench.py's trainer_cold series reports the cache-cleared cost.
-_CARD: dict = {}
-register_cache(_CARD)
-
 _CARD_SCHEMA = (
     "threshold double, n long, n_pos long, roc_auc double, "
     "avg_precision double, precision_at double, recall_at double, "
@@ -964,18 +925,21 @@ _CARD_SCHEMA = (
 
 
 def _card_row(spark: SparkSession, sf_dir: str):
-    import os as _os
+    """The model card row, memoized per process — the card is a pure
+    function of the trained trees + feature frame; q_model_promotion
+    reuses it instead of re-running the distinct-score reduction.
+    bench.py's trainer_cold series reports the cache-cleared cost."""
 
-    key = (spark.sparkContext.applicationId, _os.path.realpath(sf_dir))
-    if key not in _CARD:
+    def build():
         fv = _logreg_fv(spark, sf_dir)
         trees = _trained_gbt(spark, sf_dir)
         s = det_round(
             F.lit(1.0) / (F.lit(1.0) + F.exp(-gbt_trained_logit_expr(trees))), 6
         )
         scored = fv.select("label", s.alias("s"))
-        _CARD[key] = model_metrics(scored).collect()[0]
-    return _CARD[key]
+        return model_metrics(scored).collect()[0]
+
+    return memo(spark, sf_dir, "model_card", build)
 
 
 @query(
@@ -1133,20 +1097,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # no
     train_gbt_grid,
 )
 
-#: memoized grid tree-lists / selection row / train-fold booster per
-#: (applicationId, sf_dir) — config 0 is the production default, so
-#: the early-stopping ladder reuses the grid's trees when the grid
-#: already trained, and otherwise fits ONLY config 0 (bit-identical
-#: by the grid law) so its honest cold cost is one booster, not four.
-#: trainer_cold reports every cache-cleared cost.
-_GBT_GRID: dict = {}
-_GBT_MS: dict = {}
-_GBT_ES: dict = {}
-register_cache(_GBT_GRID)
-register_cache(_GBT_MS)
-register_cache(_GBT_ES)
-
-
 def _fold_splits(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(train, holdout) — the q_model_selection hash split
     (bucket(o_orderkey) < 80, append-stable and RNG-free)."""
@@ -1158,13 +1108,24 @@ def _fold_splits(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
 def _grid_trees(spark: SparkSession, sf_dir: str) -> tuple[list[list[dict]], DataFrame, DataFrame]:
     """(trees per config, train split, holdout split) — the grid
     trains once per process on the hash-split train fold."""
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.realpath(sf_dir))
     tr, va = _fold_splits(spark, sf_dir)
-    if key not in _GBT_GRID:
-        _GBT_GRID[key] = train_gbt_grid(tr)
-    return _GBT_GRID[key], tr, va
+    return memo(spark, sf_dir, "gbt_grid", lambda: train_gbt_grid(tr)), tr, va
+
+
+def _default_booster(spark: SparkSession, sf_dir: str) -> list[dict]:
+    """Config 0's trees on the train fold — the production default
+    both early-stopping ladders evaluate. Reuses the grid's config-0
+    booster when the grid already trained this process (the memo
+    makes a ladder one extra scan); otherwise fits ONLY config 0 —
+    bit-identical trees by the fused-grid law — so trainer_cold
+    reports one booster's honest cold cost, not four."""
+    grid = memo_get(spark, sf_dir, "gbt_grid")
+    if grid is not None:
+        return grid[0]
+    return memo(
+        spark, sf_dir, "gbt_default",
+        lambda: train_gbt(_fold_splits(spark, sf_dir)[0]),
+    )
 
 
 def _gbt_selection(spark: SparkSession, sf_dir: str) -> tuple[list[float], int]:
@@ -1172,19 +1133,18 @@ def _gbt_selection(spark: SparkSession, sf_dir: str) -> tuple[list[float], int]:
     4-ensemble holdout loss aggregate over the grid's trees, memoized
     per process; the winner tie-breaks (val_logloss, config id)."""
     import math
-    import os as _os
 
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import gbt_trained_logit_expr
 
-    key = (spark.sparkContext.applicationId, _os.path.realpath(sf_dir))
-    if key not in _GBT_MS:
+    def build():
         trees_all, _tr, va = _grid_trees(spark, sf_dir)
         aggs = [F.count(F.lit(1)).alias("n")]
         for i, (name, rounds, eta, lam) in enumerate(GBT_MS_CONFIGS):
             z = gbt_trained_logit_expr(trees_all[i], eta=eta)
             aggs.append(F.sum(_loss_expr(z).cast("decimal(18,6)")).alias(f"L_{i}"))
-        _GBT_MS[key] = va.agg(*aggs).first()
-    row = _GBT_MS[key]
+        return va.agg(*aggs).first()
+
+    row = memo(spark, sf_dir, "gbt_selection", build)
     n = row["n"]
     r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
     losses = [r6(float(row[f"L_{i}"]) / n) for i in range(len(GBT_MS_CONFIGS))]
@@ -1247,25 +1207,14 @@ def q_gbt_early_stop(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE scan (each partial logit is a staged column in the same
     decimal-folded aggregate); the rule itself runs on the round6
     ladder in the driver, identically to the oracle's window-function
-    form. Reuses the grid's config-0 booster when the grid already
-    trained this process (the memo makes the ladder one extra scan);
-    cold, it fits ONLY config 0 — bit-identical trees by the fused-
-    grid law, so trainer_cold reports one booster's honest cost, not
-    four."""
+    form. The booster is _default_booster's (the grid's config 0 when
+    already trained, else one config-0 fit)."""
     import math
-    import os as _os
 
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import GBT_ETA as _ETA
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import train_gbt
 
-    key = (spark.sparkContext.applicationId, _os.path.realpath(sf_dir))
-    tr_split, va = _fold_splits(spark, sf_dir)
-    if key in _GBT_GRID:
-        trees = _GBT_GRID[key][0]
-    else:
-        if key not in _GBT_ES:
-            _GBT_ES[key] = train_gbt(tr_split)
-        trees = _GBT_ES[key]
+    _tr, va = _fold_splits(spark, sf_dir)
+    trees = _default_booster(spark, sf_dir)
     zs = [F.lit(0.0)]
     for tr_ in trees:
         zs.append(zs[-1] + F.lit(float(_ETA)) * _gbt_tree_expr_raw(tr_))
@@ -1332,33 +1281,23 @@ def _gbt_covers(fv: DataFrame, trees: list[dict]) -> list[tuple[int, ...]]:
     return out
 
 
-#: r16: per-process memo of the training covers (and the φ6 tables
-#: derived from them) — q_gbt_shap AND q_gbt_shap_top both re-ran the
-#: identical covers aggregate for the identical memoized booster every
-#: bench pass. Covers are training-derived statistics of the memoized
-#: model, so this is the same registered-cache class as the trained
-#: trees themselves: clear_cache() empties it, so the bench's
-#: trainer_cold series still reports the full cache-cleared descent.
-_SHAP_COVERS: dict = {}
-register_cache(_SHAP_COVERS)
-
-
 def _shap_phi_columns(
-    fv: DataFrame, trees: list[dict], memo_key: tuple | None = None
+    spark: SparkSession, sf_dir: str, fv: DataFrame, trees: list[dict]
 ) -> list:
     """Per-feature φ6 columns for the fitted ensemble: covers from
     one aggregate, per-(tree, branch-pattern) values precomputed
     driver-side (shap_terms), compiled by the generic
-    ext/shap.shap_phi_columns (shared with the streaming explainer)."""
+    ext/shap.shap_phi_columns (shared with the streaming explainer).
+    The covers are memoized per process: q_gbt_shap AND
+    q_gbt_shap_top would otherwise re-run the identical aggregate for
+    the identical memoized booster every bench pass. They are
+    training-derived statistics of that booster, so clear_cache()
+    drops them with it and the bench's trainer_cold series still
+    reports the full cache-cleared descent."""
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import GBT_ETA
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.shap import shap_phi_columns
 
-    if memo_key is not None and memo_key in _SHAP_COVERS:
-        covers = _SHAP_COVERS[memo_key]
-    else:
-        covers = _gbt_covers(fv, trees)
-        if memo_key is not None:
-            _SHAP_COVERS[memo_key] = covers
+    covers = memo(spark, sf_dir, "shap_covers", lambda: _gbt_covers(fv, trees))
     tables = [shap_terms(tr, cov, GBT_ETA) for tr, cov in zip(trees, covers)]
     return shap_phi_columns(trees, tables, SCORE_FEATURES, None)
 
@@ -1390,11 +1329,7 @@ def q_gbt_shap(spark: SparkSession, sf_dir: str) -> DataFrame:
     trees = _trained_gbt(spark, sf_dir)
     cols = [
         c.alias(f"p6_{i}")
-        for i, c in enumerate(
-            _shap_phi_columns(
-                fv, trees, memo_key=("shap", spark.sparkContext.applicationId, sf_dir)
-            )
-        )
+        for i, c in enumerate(_shap_phi_columns(spark, sf_dir, fv, trees))
     ]
     s = det_round(
         F.lit(1.0) / (F.lit(1.0) + F.exp(-gbt_trained_logit_expr(trees))), 6
@@ -1443,9 +1378,7 @@ def q_gbt_shap_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-gates."""
     fv = _logreg_fv(spark, sf_dir)
     trees = _trained_gbt(spark, sf_dir)
-    phis = _shap_phi_columns(
-        fv, trees, memo_key=("shap", spark.sparkContext.applicationId, sf_dir)
-    )
+    phis = _shap_phi_columns(spark, sf_dir, fv, trees)
     s = det_round(
         F.lit(1.0) / (F.lit(1.0) + F.exp(-gbt_trained_logit_expr(trees))), 6
     )
@@ -1483,12 +1416,6 @@ def q_gbt_shap_top(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import gbt_retrain_best_sql  # noqa: E402
 
-#: memoized (trees, card) of the full-frame WINNER fit per
-#: (applicationId, sf_dir, config) — the final model train.py ships.
-_GBT_BEST: dict = {}
-register_cache(_GBT_BEST)
-
-
 @query(
     "q_retrain_best",
     oracle=gbt_retrain_best_sql(_FV_SQL),
@@ -1523,13 +1450,14 @@ def q_retrain_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         gbt_doc,
         promote_model,
     )
-    import os as _os
 
     losses, best = _gbt_selection(spark, sf_dir)
     name, rounds, eta, lam = GBT_MS_CONFIGS[best]
     fv = _logreg_fv(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, _os.path.realpath(sf_dir), name)
-    if key not in _GBT_BEST:
+
+    # (trees, card) of the full-frame WINNER fit, memoized per config
+    # — the final model train.py ships.
+    def build():
         trees = train_gbt(fv, rounds=rounds, eta=eta, lam=lam)
         s = det_round(
             F.lit(1.0)
@@ -1537,8 +1465,9 @@ def q_retrain_best(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         )
         card = model_metrics(fv.select("label", s.alias("s"))).collect()[0]
-        _GBT_BEST[key] = (trees, card)
-    trees, card_row = _GBT_BEST[key]
+        return (trees, card)
+
+    trees, card_row = memo(spark, sf_dir, f"gbt_best:{name}", build)
     card = card_row.asDict()
     kind, params = gbt_doc(trees, SCORE_FEATURES)
     tdir = tempfile.mkdtemp(prefix="rtfril_retrain_")

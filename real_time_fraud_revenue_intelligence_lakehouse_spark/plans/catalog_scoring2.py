@@ -40,7 +40,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_scoring 
     _logreg_fv,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
-from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import register_cache
+from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import memo
 
 #: Subsampled-booster hyperparameters — the deterministic stand-ins
 #: for the reference's stochastic subsample/colsample_bytree draws
@@ -50,32 +50,14 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames im
 SUB_ROWS = 0.8
 SUB_COLS = 0.75
 
-#: memoized tree lists / CV AUCs per (applicationId, sf_dir) — the
-#: _trained_gbt discipline; bench.py's trainer_cold series reports
-#: every member's honest cache-cleared cost.
-_GBT_DEEP: dict = {}
-_GBT_SUB: dict = {}
-_GBT_DEPTH_GRID: dict = {}
-_GBT_CV: dict = {}
-_DEEP_COVERS: dict = {}
-register_cache(_DEEP_COVERS)
-register_cache(_GBT_DEEP)
-register_cache(_GBT_SUB)
-register_cache(_GBT_DEPTH_GRID)
-register_cache(_GBT_CV)
 
-
-def _key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    import os as _os
-
-    return (spark.sparkContext.applicationId, _os.path.realpath(sf_dir))
-
-
+# Tree lists, CV AUCs and covers below are memoized per process like
+# _trained_gbt; bench.py's trainer_cold series reports every member's
+# honest cache-cleared cost.
 def _trained_deep(spark: SparkSession, sf_dir: str) -> list[dict]:
-    k = _key(spark, sf_dir)
-    if k not in _GBT_DEEP:
-        _GBT_DEEP[k] = train_gbt_deep(_logreg_fv(spark, sf_dir))
-    return _GBT_DEEP[k]
+    return memo(
+        spark, sf_dir, "gbt_deep", lambda: train_gbt_deep(_logreg_fv(spark, sf_dir))
+    )
 
 
 def _deep_tree_rows(trees: list[dict]) -> list[tuple]:
@@ -195,15 +177,16 @@ def q_gbt_train_subsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     full fit but is bit-stable across repartitions) — and the oracle
     applies the IDENTICAL predicate and column schedule, so the
     sampled trees hash-gate like the exact ones."""
-    k = _key(spark, sf_dir)
-    if k not in _GBT_SUB:
-        _GBT_SUB[k] = train_gbt_deep(
+    trees = memo(
+        spark, sf_dir, "gbt_subsample",
+        lambda: train_gbt_deep(
             _logreg_fv(spark, sf_dir),
             depth=2,
             subsample=SUB_ROWS,
             colsample=SUB_COLS,
-        )
-    return spark.createDataFrame(_deep_tree_rows(_GBT_SUB[k]), _DEEP_SCHEMA)
+        ),
+    )
+    return spark.createDataFrame(_deep_tree_rows(trees), _DEEP_SCHEMA)
 
 
 def _fold_splits2(spark: SparkSession, sf_dir: str):
@@ -240,8 +223,7 @@ def q_gbt_depth_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     large data."""
     import math
 
-    k = _key(spark, sf_dir)
-    if k not in _GBT_DEPTH_GRID:
+    def build():
         tr, va = _fold_splits2(spark, sf_dir)
         grid = train_gbt_grid_deep(tr)
         aggs = [F.count(F.lit(1)).alias("n")]
@@ -250,8 +232,9 @@ def q_gbt_depth_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
             aggs.append(
                 F.sum(_loss_expr(z).cast("decimal(18,6)")).alias(f"L_{i}")
             )
-        _GBT_DEPTH_GRID[k] = va.agg(*aggs).first()
-    row = _GBT_DEPTH_GRID[k]
+        return va.agg(*aggs).first()
+
+    row = memo(spark, sf_dir, "gbt_depth_grid", build)
     n = row["n"]
     r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
     losses = [
@@ -291,10 +274,9 @@ def q_model_selection_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-associated mean ranks the grid (max AUC, config tie-break).
     The oracle unrolls all 12 boosting chains + fold replays +
     rank-sum AUCs — CROSS-VALIDATION ITSELF hash-gates."""
-    k = _key(spark, sf_dir)
-    if k not in _GBT_CV:
-        _GBT_CV[k] = gbt_cv_fold_aucs(_logreg_fv(spark, sf_dir))
-    aucs = _GBT_CV[k]
+    aucs = memo(
+        spark, sf_dir, "gbt_cv", lambda: gbt_cv_fold_aucs(_logreg_fv(spark, sf_dir))
+    )
     means = [cv_mean(a) for a in aucs]
     # max with config-id tie-break ASC == the oracle's row_number
     # ORDER BY cv_auc DESC, config
@@ -396,13 +378,10 @@ def q_gbt_shap_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     fv = _logreg_fv(spark, sf_dir)
     trees = _trained_deep(spark, sf_dir)
-    # r16: covers memoized per process beside the trained trees they
-    # derive from (registered cache — clear_cache() empties it, so
-    # trainer_cold still reports the full cache-cleared descent).
-    ck = ("deep_covers", *_key(spark, sf_dir))
-    if ck not in _DEEP_COVERS:
-        _DEEP_COVERS[ck] = _deep_covers(fv, trees)
-    covers = _DEEP_COVERS[ck]
+    # covers memoized per process beside the trained trees they
+    # derive from (clear_cache() drops both, so trainer_cold still
+    # reports the full cache-cleared descent)
+    covers = memo(spark, sf_dir, "deep_covers", lambda: _deep_covers(fv, trees))
     tables = [shap_terms_deep(tr, cov, GBT_ETA) for tr, cov in zip(trees, covers)]
     phis = deep_shap_phi_columns(trees, tables, SCORE_FEATURES, None)
     s = det_round(
@@ -442,11 +421,6 @@ def q_gbt_shap_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
 MCW = 5.0
 REG_ALPHA = 0.5
 
-_GBT_MCW: dict = {}
-_GBT_L1: dict = {}
-register_cache(_GBT_MCW)
-register_cache(_GBT_L1)
-
 
 @query(
     "q_gbt_train_mcw",
@@ -465,12 +439,13 @@ def q_gbt_train_mcw(spark: SparkSession, sf_dir: str) -> DataFrame:
     in its candidate WHERE (plus the per-node admissibility error()
     twin, since a node can now be non-degenerate yet have no valid
     candidate). Output: the q_gbt_train_deep row shape at depth 2."""
-    k = _key(spark, sf_dir)
-    if k not in _GBT_MCW:
-        _GBT_MCW[k] = train_gbt_deep(
+    trees = memo(
+        spark, sf_dir, "gbt_mcw",
+        lambda: train_gbt_deep(
             _logreg_fv(spark, sf_dir), depth=2, min_child_weight=MCW
-        )
-    return spark.createDataFrame(_deep_tree_rows(_GBT_MCW[k]), _DEEP_SCHEMA)
+        ),
+    )
+    return spark.createDataFrame(_deep_tree_rows(trees), _DEEP_SCHEMA)
 
 
 @query(
@@ -492,9 +467,10 @@ def q_gbt_train_l1(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_estimators (rounds), learning_rate (eta), max_depth, subsample,
     colsample_bytree, min_child_weight, reg_alpha, reg_lambda, and
     scale_pos_weight."""
-    k = _key(spark, sf_dir)
-    if k not in _GBT_L1:
-        _GBT_L1[k] = train_gbt_deep(
+    trees = memo(
+        spark, sf_dir, "gbt_l1",
+        lambda: train_gbt_deep(
             _logreg_fv(spark, sf_dir), depth=2, reg_alpha=REG_ALPHA
-        )
-    return spark.createDataFrame(_deep_tree_rows(_GBT_L1[k]), _DEEP_SCHEMA)
+        ),
+    )
+    return spark.createDataFrame(_deep_tree_rows(trees), _DEEP_SCHEMA)

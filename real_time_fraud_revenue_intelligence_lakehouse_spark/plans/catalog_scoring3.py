@@ -21,28 +21,16 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_scoring 
     _logreg_fv,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
-from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import register_cache
-
-#: memoized fitted stats / weights per (applicationId, sf_dir) — the
-#: _trained_weights discipline; bench.py's trainer_cold series
-#: reports the honest cache-cleared descent.
-_SCALER: dict = {}
-_LOGREG_SCALED: dict = {}
-register_cache(_SCALER)
-register_cache(_LOGREG_SCALED)
+from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import memo
 
 
-def _key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    import os as _os
-
-    return (spark.sparkContext.applicationId, _os.path.realpath(sf_dir))
-
-
+# Fitted stats, weights and search results below are memoized per
+# process like _trained_weights; bench.py's trainer_cold series
+# reports the honest cache-cleared descent.
 def _fitted_scaler(spark: SparkSession, sf_dir: str) -> dict:
-    k = _key(spark, sf_dir)
-    if k not in _SCALER:
-        _SCALER[k] = fit_standard_scaler(_logreg_fv(spark, sf_dir))
-    return _SCALER[k]
+    return memo(
+        spark, sf_dir, "scaler", lambda: fit_standard_scaler(_logreg_fv(spark, sf_dir))
+    )
 
 
 @query(
@@ -91,12 +79,12 @@ def q_logreg_train_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     params={weights, scaler} and compile_registry_model re-applies
     the document's own scaler at serving (round-trip-tested in
     tests/test_model_registry.py)."""
-    k = _key(spark, sf_dir)
-    if k not in _LOGREG_SCALED:
+    def build():
         stats = _fitted_scaler(spark, sf_dir)
         w, _n = train_logreg(_logreg_fv(spark, sf_dir), scales=stats)
-        _LOGREG_SCALED[k] = w
-    w = _LOGREG_SCALED[k]
+        return w
+
+    w = memo(spark, sf_dir, "logreg_scaled", build)
     import math
 
     r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
@@ -112,7 +100,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # no
     GBT_ETA,
     early_stop_decision_auc,
     gbt_early_stop_auc_sql,
-    train_gbt,
 )
 
 #: patience window at test scale — the reference's
@@ -198,24 +185,16 @@ def q_gbt_early_stop_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ONE stacked scan + one exact rank-sum aggregate
     (holdout_auc_ladder); the patience-k rule runs on the round6
     ladder in the driver, identically to the oracle's
-    last-improving-round window form. Reuses the grid's config-0
-    booster when this process already trained it (the q_gbt_early_stop
-    memo discipline)."""
+    last-improving-round window form. The booster is
+    q_gbt_early_stop's (catalog_scoring._default_booster)."""
     from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_scoring import (
-        _GBT_ES,
-        _GBT_GRID,
+        _default_booster,
         _fold_splits,
         _gbt_tree_expr_raw,
     )
 
-    key = _key(spark, sf_dir)
-    tr_split, va = _fold_splits(spark, sf_dir)
-    if key in _GBT_GRID:
-        trees = _GBT_GRID[key][0]
-    else:
-        if key not in _GBT_ES:
-            _GBT_ES[key] = train_gbt(tr_split)
-        trees = _GBT_ES[key]
+    _tr, va = _fold_splits(spark, sf_dir)
+    trees = _default_booster(spark, sf_dir)
     aucs = holdout_auc_ladder(va, trees, _gbt_tree_expr_raw)
     stop_at, best_round = early_stop_decision_auc(aucs, ES_PATIENCE)
     out = [
@@ -237,9 +216,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import ( 
 )
 
 RS_CONFIGS = sampled_search_configs()
-
-_RS: dict = {}
-register_cache(_RS)
 
 
 @query(
@@ -267,14 +243,14 @@ def q_gbt_random_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth-3 trials are out of the gated domain on the toy sf0.001
     frame's 80% fold (gated ValueError on both engines); the
     correctness gate (sf0.01) and bench (sf0.1) are in-domain."""
-    k = _key(spark, sf_dir)
-    if k not in _RS:
+    def build():
         from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_scoring import _fold_splits
 
         tr, va = _fold_splits(spark, sf_dir)
         trees_all = train_gbt_grid_deep(tr, configs=RS_CONFIGS)
-        _RS[k] = grid_holdout_aucs(va, trees_all, RS_CONFIGS)
-    aucs = _RS[k]
+        return grid_holdout_aucs(va, trees_all, RS_CONFIGS)
+
+    aucs = memo(spark, sf_dir, "gbt_random_search", build)
     best = 0
     for i in range(1, len(RS_CONFIGS)):
         if aucs[i] > aucs[best]:
@@ -299,9 +275,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import ( 
 )
 
 RS_FULL_CONFIGS = sampled_search_configs_full()
-
-_RS_FULL: dict = {}
-register_cache(_RS_FULL)
 
 
 @query(
@@ -330,14 +303,14 @@ def q_gbt_random_search_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     Domain note: depth-3 trials are outside the gated domain on the
     toy sf0.001 frame (ValueError on both engines); the correctness
     gate (sf0.01) and bench (sf0.1) are in-domain."""
-    k = _key(spark, sf_dir)
-    if k not in _RS_FULL:
+    def build():
         from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_scoring import _fold_splits
 
         tr, va = _fold_splits(spark, sf_dir)
         trees_all = train_gbt_grid_full(tr, configs=RS_FULL_CONFIGS)
-        _RS_FULL[k] = grid_holdout_aucs(va, trees_all, RS_FULL_CONFIGS)
-    aucs = _RS_FULL[k]
+        return grid_holdout_aucs(va, trees_all, RS_FULL_CONFIGS)
+
+    aucs = memo(spark, sf_dir, "gbt_random_search_full", build)
     best = 0
     for i in range(1, len(RS_FULL_CONFIGS)):
         if aucs[i] > aucs[best]:
@@ -371,9 +344,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_cv import (  #
 #: q_model_selection_cv already proved tractable.
 CV_FULL_CONFIGS = RS_FULL_CONFIGS[:CV_FULL_TRIALS]
 
-_CV_FULL: dict = {}
-register_cache(_CV_FULL)
-
 
 @query(
     "q_model_selection_cv_full",
@@ -396,12 +366,10 @@ def q_model_selection_cv_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     Domain note: depth-3 trials on 2/3-of-sf0.001 complements are
     outside the gated domain (ValueError both engines); sf0.01+ is
     in-domain."""
-    k = _key(spark, sf_dir)
-    if k not in _CV_FULL:
-        _CV_FULL[k] = gbt_cv_fold_aucs_full(
-            _logreg_fv(spark, sf_dir), CV_FULL_CONFIGS
-        )
-    aucs = _CV_FULL[k]
+    aucs = memo(
+        spark, sf_dir, "gbt_cv_full",
+        lambda: gbt_cv_fold_aucs_full(_logreg_fv(spark, sf_dir), CV_FULL_CONFIGS),
+    )
     means = [cv_mean(a) for a in aucs]
     best = 0
     for i in range(1, len(CV_FULL_CONFIGS)):
@@ -521,9 +489,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_scoring2
 #: bounded so the unrolled 4-level oracle stays tractable at sf0.01.
 D4_ROUNDS = 2
 
-_GBT_D4: dict = {}
-register_cache(_GBT_D4)
-
 
 @query(
     "q_gbt_train_depth4",
@@ -543,9 +508,8 @@ def q_gbt_train_depth4(spark: SparkSession, sf_dir: str) -> DataFrame:
     full polynomial-time descent — documented, not silently claimed).
     In-domain down to the toy sf0.001 frame (trained on the FULL
     feature frame, not a fold — unlike the split-fold grids)."""
-    k = _key(spark, sf_dir)
-    if k not in _GBT_D4:
-        _GBT_D4[k] = train_gbt_deep(
-            _logreg_fv(spark, sf_dir), depth=4, rounds=D4_ROUNDS
-        )
-    return spark.createDataFrame(_deep_tree_rows(_GBT_D4[k]), _DEEP_SCHEMA)
+    trees = memo(
+        spark, sf_dir, "gbt_depth4",
+        lambda: train_gbt_deep(_logreg_fv(spark, sf_dir), depth=4, rounds=D4_ROUNDS),
+    )
+    return spark.createDataFrame(_deep_tree_rows(trees), _DEEP_SCHEMA)

@@ -62,40 +62,69 @@ def _load_all() -> None:
 # in dict order with a hard 50-entry per-round budget (every registered
 # id is green in the r01-r15 union), so ids needing a fresh driver row
 # come FIRST. Layout of this head:
-#   1-11:  ids whose code was rewritten since their last sampled row —
-#          the stateful-fold batch twins (q_ewma_recursive,
-#          q_stateful_profile), the GBT ids on the one boosting engine,
-#          then the two scale probes;
-#   12-17: the rest of round-16's new ids;
-#   18-33: the 16 ids whose last sampled row is r09 (the tail past
-#          r15's 50-cap);
-#   34-83: the 50 ids whose last sampled row is r10.
+#   1-40:   ids whose trained or selected artifact now reads through
+#           the one keyed memo (shared_frames.memo), BPE and GBT first;
+#   41-42:  the stateful-fold batch twins (q_ewma_recursive,
+#           q_stateful_profile);
+#   43-44:  the two scale probes (44 ≤ the 50-cap);
+#   45:     the last round-16 id not above (q_score_input_gate);
+#   46-61:  the 16 ids whose last sampled row is r09;
+#   62-109: the 48 ids whose last sampled row is r10 and that are not
+#           above.
 # Names not listed keep their registration order after these (the
 # r11-r15 blocks rotated out: all driver-green at r11-r15).
 # Planned-but-not-yet-registered names are harmless: _ordered()
 # filters on membership.
 _FRONT: tuple[str, ...] = (
+    # — read through the one keyed memo (shared_frames.memo) —
+    "q_bpe_encode",
+    "q_bpe_merges",
+    "q_gbt_calibration",
+    "q_gbt_deep_score",
+    "q_gbt_depth_selection",
+    "q_gbt_early_stop",
+    "q_gbt_early_stop_auc",
+    "q_gbt_importance",
+    "q_gbt_learning_curve",
+    "q_gbt_model_selection",
+    "q_gbt_random_search",
+    "q_gbt_random_search_full",
+    "q_gbt_roc",
+    "q_gbt_shap",
+    "q_gbt_shap_deep",
+    "q_gbt_shap_top",
+    "q_gbt_train",
+    "q_gbt_train_deep",
+    "q_gbt_train_depth4",
+    "q_gbt_train_l1",
+    "q_gbt_train_mcw",
+    "q_gbt_train_score",
+    "q_gbt_train_subsample",
+    "q_gbt_train_weighted",
+    "q_kmeans_inertia",
+    "q_kmeans_train",
+    "q_logreg_ablation",
+    "q_logreg_roc",
+    "q_logreg_train",
+    "q_logreg_train_scaled",
+    "q_logreg_train_score",
+    "q_logreg_train_weighted",
+    "q_model_card",
+    "q_model_promotion",
+    "q_model_selection",
+    "q_model_selection_cv",
+    "q_model_selection_cv_full",
+    "q_retrain_best",
+    "q_score_drift_psi",
+    "q_standard_scale_train",
     # — rewritten onto the one stateful-fold driver —
     "q_ewma_recursive",
     "q_stateful_profile",
-    # — rewritten onto the one boosting engine —
-    "q_gbt_train",
-    "q_model_selection_cv",
-    "q_model_selection_cv_full",
-    "q_gbt_depth_selection",
-    "q_retrain_best",
-    "q_gbt_model_selection",
-    "q_gbt_random_search_full",
     # — scale probes —
     "q_scale_probe_scan",
     "q_scale_probe_join",
     # — new in round 16, never driver-verified —
-    "q_standard_scale_train",
-    "q_logreg_train_scaled",
-    "q_gbt_early_stop_auc",
-    "q_gbt_random_search",
     "q_score_input_gate",
-    "q_gbt_train_depth4",
     # — last driver row r09 (the 16 past r15's 50-cap) —
     "q_quality_score",
     "q_record_linkage",
@@ -113,12 +142,10 @@ _FRONT: tuple[str, ...] = (
     "q_unigram_logprob",
     "q_vector_norms",
     "q_vocab_coverage",
-    # — last driver row r10 (50 ids; the head of this block
-    #   fills the rest of r16's 50-cap, the tail leads r17) —
+    # — last driver row r10 (48 ids; q_bpe_encode and q_bpe_merges
+    #   moved to the memo block) —
     "q_agg_join",
-    "q_bpe_encode",
     "q_bpe_encode_external",
-    "q_bpe_merges",
     "q_bucket_tier",
     "q_casts",
     "q_clean_filter",
@@ -166,6 +193,7 @@ _FRONT: tuple[str, ...] = (
     "q_union_all",
     "q_user_scores",
 )
+
 
 def _ordered() -> dict[str, QuerySpec]:
     front = [n for n in _FRONT if n in _REGISTRY]

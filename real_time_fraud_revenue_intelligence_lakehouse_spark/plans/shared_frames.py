@@ -1,29 +1,39 @@
-"""Process-level shared materializations for cross-query reuse.
+"""Process-level memo for cross-query reuse: frames and values.
 
 Several declared queries derive from the SAME deterministic
 intermediate — the distinct customer↔supplier trade edge list, the
 co-service similarity pairs, the kNN supplier graph, the tokenized
-document corpus. Re-deriving those per query is wasted work both in a
-bench run (the suite rebuilds the cust-supp distinct five times) and
-on a real cluster (where the tokenized corpus or the trade graph
-would be a materialized table every downstream job reads — tokenize
-once, reuse everywhere, the standard training-data-pipeline layout).
+document corpus, the checkpointed feature frame — or the SAME trained
+artifact: logreg weights, boosted trees, grid-search losses, SHAP
+covers, the BPE merge list. Re-deriving those per query is wasted
+work both in a bench run (the suite rebuilds the cust-supp distinct
+five times) and on a real cluster (where the tokenized corpus or the
+trade graph would be a materialized table every downstream job reads,
+and a trained model a persisted artifact every scorer loads — the
+reference trains and scores from persisted silver tables,
+`ml/models/train.py:44-60`).
 
-`shared_frame` memoizes a localCheckpointed DataFrame per
-(SparkSession application, sf_dir, key). Reuse is sound because every
-cached frame is a DETERMINISTIC pure function of the input tables:
-a query answered from the cache is bit-identical to one answered from
-a fresh build (distinct/count intermediates are exact integers; float
-consumers downstream quantize through decimals, so partition-layout
-differences cannot leak into oracle hashes). The checkpoint doubles
-as the CollapseProject / lineage barrier the per-query builds already
-used.
+`memo` is the one keyed store: any value per (SparkSession
+application, realpath(sf_dir), key), built outside the lock and
+stored put-if-absent, with dead-session entries evicted on the next
+miss and every DataFrame reachable from an evicted or cleared value
+freed. `shared_frame` is `memo` over a materializing build (a
+localCheckpoint, or a persist for frames whose partitioning must
+survive). Reuse is sound because every memoized value is a
+DETERMINISTIC pure function of the input tables: a query answered
+from the memo is bit-identical to one answered from a fresh build
+(distinct/count intermediates are exact integers; trainers fold
+integer micros; float consumers downstream quantize through
+decimals, so partition-layout differences cannot leak into oracle
+hashes). The checkpoint doubles as the CollapseProject / lineage
+barrier the per-query builds already used. `clear_cache` empties
+the memo, so bench harnesses can time a query's full cold cost.
 
 At 100 TB the analog is a bucketed table (or Delta/parquet
-materialization) maintained by the pipeline; the per-process
-localCheckpoint is the local[32] stand-in with identical semantics.
+materialization) and a model registry maintained by the pipeline;
+the per-process memo is the local[32] stand-in with identical
+semantics.
 """
-
 from __future__ import annotations
 
 import os
@@ -35,21 +45,12 @@ from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
 
-_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+_CACHE: dict[tuple[str, str, str], object] = {}
 
-#: guards _CACHE / _EXTRA_CACHES mutation (a multithreaded driver may
-#: run queries concurrently). Builds happen OUTSIDE the lock with a
-#: put-if-absent on completion — a lost race unpersists its own frame.
+#: guards _CACHE mutation (a multithreaded driver may run queries
+#: concurrently). Builds happen OUTSIDE the lock with a put-if-absent
+#: on completion — a lost race frees its own value's frames.
 _LOCK = threading.RLock()
-
-
-#: auxiliary per-module memo dicts (e.g. the BPE merge list) that
-#: clear_cache must also drop — registered by their owning modules.
-_EXTRA_CACHES: list[dict] = []
-
-
-def register_cache(cache: dict) -> None:
-    _EXTRA_CACHES.append(cache)
 
 
 #: application ids whose iterative loops dropped UNREFERENCED
@@ -71,8 +72,9 @@ def note_dropped_checkpoints(spark: SparkSession) -> None:
 
 
 def _frames_of(obj) -> list[DataFrame]:
-    """Every DataFrame reachable from a memoized value (a frame, or a
-    list of frames like the BPE merge list)."""
+    """Every DataFrame reachable from a memoized value (a frame, a
+    list of frames like the BPE merge list, or none for trained
+    weights and trees)."""
     if isinstance(obj, DataFrame):
         return [obj]
     if isinstance(obj, (list, tuple)):
@@ -103,8 +105,15 @@ def _unpersist_frame(df: DataFrame) -> None:
         pass  # racing a concurrent session stop — blocks already gone
 
 
+def _release(values) -> None:
+    """Free every frame reachable from each of ``values``."""
+    for v in values:
+        for df in _frames_of(v):
+            _unpersist_frame(df)
+
+
 def clear_cache() -> None:
-    """Drop every memoized frame AND free its checkpoint blocks
+    """Drop every memoized value AND free its frames' blocks
     (benchmark harnesses call this to time a query's FULL cost
     including its shared builds — e.g. tools/scale_probe.py, where a
     warm-run-primed cache would otherwise exclude the dominant pass
@@ -113,18 +122,13 @@ def clear_cache() -> None:
     Unpersists per-entry — one dead-session entry can't mask live
     blocks, and checkpoints owned by code outside the registry are
     never touched. Previously-returned frames become unusable —
-    callers re-request through shared_frame, which rebuilds."""
+    callers re-request through memo / shared_frame, which rebuild."""
     with _LOCK:
         entries: list = list(_CACHE.values())
         _CACHE.clear()
-        for cache in _EXTRA_CACHES:
-            entries.extend(cache.values())
-            cache.clear()
         iter_apps = set(_ITER_CONTEXTS)
         _ITER_CONTEXTS.clear()
-    for obj in entries:
-        for df in _frames_of(obj):
-            _unpersist_frame(df)
+    _release(entries)
     if not iter_apps:
         return
     # Best-effort: nudge GC so Spark's ContextCleaner reaps
@@ -152,17 +156,48 @@ def clear_cache() -> None:
             pass
 
 
+def _memo_key(spark: SparkSession, sf_dir: str, key: str) -> tuple[str, str, str]:
+    return (spark.sparkContext.applicationId, os.path.realpath(sf_dir), key)
+
+
+def memo(spark: SparkSession, sf_dir: str, key: str, build: Callable[[], object]):
+    """Return the memoized result of ``build()``.
+
+    Keyed by (applicationId, realpath(sf_dir), key): a new
+    SparkSession or a different scale factor never sees another run's
+    values. Entries from dead sessions are dropped (and their frames
+    freed, a no-op for stopped contexts) on the next miss so
+    long-lived test processes can't accumulate orphaned references.
+    ``build`` runs outside the lock; if a concurrent caller stored
+    the key first, its value wins and this build's frames are freed."""
+    k = _memo_key(spark, sf_dir, key)
+    with _LOCK:
+        if k in _CACHE:
+            return _CACHE[k]
+        stale = [_CACHE.pop(c) for c in list(_CACHE) if c[0] != k[0]]
+    _release(stale)
+    val = build()
+    with _LOCK:
+        winner = _CACHE.setdefault(k, val)
+    if winner is not val:
+        _release([val])
+    return winner
+
+
+def memo_get(spark: SparkSession, sf_dir: str, key: str):
+    """The value ``memo`` holds for ``key``, or None — a lookup that
+    never builds, for callers that reuse an entry only when some
+    other query already paid for it."""
+    with _LOCK:
+        return _CACHE.get(_memo_key(spark, sf_dir, key))
+
+
 def shared_frame(
     spark: SparkSession, sf_dir: str, key: str, build: Callable[[], DataFrame],
     storage: str = "checkpoint",
 ) -> DataFrame:
-    """Return the memoized, localCheckpointed result of ``build()``.
-
-    Keyed by (applicationId, sf_dir, key): a new SparkSession or a
-    different scale factor never sees another run's blocks. Entries
-    from dead sessions are dropped (and their blocks freed, a no-op
-    for stopped contexts) on the next miss so long-lived test
-    processes can't accumulate orphaned references.
+    """Return the memoized, localCheckpointed result of ``build()``
+    (``memo`` over a materializing build, same keying and lifecycle).
 
     ``storage="persist"`` memoizes via ``.persist()`` + an eager
     materialization instead of ``localCheckpoint()``. Same content,
@@ -175,49 +210,15 @@ def shared_frame(
     (guide §2.4: two operations keyed the same way share one
     exchange; the 100 TB analog is a bucketed edge table). Use it for
     frames whose BUILD pins a reusable partitioning."""
-    app = spark.sparkContext.applicationId
-    k = (app, os.path.realpath(sf_dir), key)
-    with _LOCK:
-        df = _CACHE.get(k)
-        if df is not None:
-            return df
-        stale = [_CACHE.pop(c) for c in list(_CACHE) if c[0] != app]
-    for old in stale:
-        _unpersist_frame(old)
-    if storage == "persist":
+
+    def materialize() -> DataFrame:
+        if storage != "persist":
+            return build().localCheckpoint()
         df = build().persist()
         df.write.format("noop").mode("overwrite").save()
-    else:
-        df = build().localCheckpoint()
-    with _LOCK:
-        winner = _CACHE.setdefault(k, df)
-    if winner is not df:  # lost a build race — free the duplicate
-        _unpersist_frame(df)
-    return winner
+        return df
 
-
-def shared_value(spark: SparkSession, sf_dir: str, cache: dict, build: Callable[[], object]):
-    """shared_frame's keying/eviction/locking for NON-frame memo
-    values (e.g. the BPE merge list — a list of 1-row checkpointed
-    frames). The owning module registers ``cache`` via
-    :func:`register_cache` so clear_cache frees the reachable frames
-    per-entry like any other."""
-    app = spark.sparkContext.applicationId
-    k = (app, os.path.realpath(sf_dir))
-    with _LOCK:
-        if k in cache:
-            return cache[k]
-        stale = [cache.pop(c) for c in list(cache) if c[0] != app]
-    for old in stale:
-        for f in _frames_of(old):
-            _unpersist_frame(f)
-    val = build()
-    with _LOCK:
-        winner = cache.setdefault(k, val)
-    if winner is not val:
-        for f in _frames_of(val):
-            _unpersist_frame(f)
-    return winner
+    return memo(spark, sf_dir, key, materialize)
 
 
 def cust_supp(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -39,9 +39,6 @@ EVENTS_SCHEMA = T.StructType(
     ]
 )
 
-#: Schema for the JSON payload carried in ``props`` (S2 analog).
-PROPS_SCHEMA = T.StructType([T.StructField("k", T.LongType())])
-
 
 def read_kafka_stream(
     spark: SparkSession,

@@ -78,4 +78,30 @@ def test_bpe_memo_registered_with_clear_cache(spark):
     bests = C._bpe_train_shared(spark, SF_SMOKE)
     assert C._bpe_train_shared(spark, SF_SMOKE) is bests, "merge list must memoize"
     S.clear_cache()
-    assert not C._BPE_TRAINED, "clear_cache must also drop registered extra caches"
+    assert not S._CACHE, "clear_cache must drop the memoized merge list"
+    assert C._bpe_train_shared(spark, SF_SMOKE) is not bests, "a cleared memo must rebuild"
+
+
+def test_model_memo_reuses_clears_and_evicts_dead_sessions(spark):
+    """A non-frame memo value (the fitted scaler's stats dict) keeps
+    shared_frame's lifecycle: a hit returns the same object,
+    clear_cache drops it, and an entry left by another Spark
+    application is evicted on the next miss."""
+    import os
+
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.plans import catalog_scoring3 as C3
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.plans import shared_frames as S
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_scoring import _logreg_fv
+
+    S.clear_cache()
+    _logreg_fv(spark, SF_SMOKE)  # memoize the input frame: the next miss is the scaler's own
+    dead = ("app-of-a-stopped-session", os.path.realpath(SF_SMOKE), "scaler")
+    S._CACHE[dead] = {"stale": True}
+    stats = C3._fitted_scaler(spark, SF_SMOKE)
+    assert dead not in S._CACHE, "a miss must evict entries of other applications"
+    live = (spark.sparkContext.applicationId, os.path.realpath(SF_SMOKE), "scaler")
+    assert S._CACHE[live] is stats, "the fitted stats must live in the one memo"
+    assert C3._fitted_scaler(spark, SF_SMOKE) is stats, "a hit must return the memoized object"
+    S.clear_cache()
+    assert not S._CACHE, "clear_cache must drop model memo entries"
+    assert C3._fitted_scaler(spark, SF_SMOKE) is not stats, "a cleared memo must refit"
