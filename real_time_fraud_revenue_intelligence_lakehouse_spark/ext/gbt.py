@@ -38,8 +38,12 @@ Every public trainer — :func:`train_gbt`, :func:`train_gbt_grid`,
 ext/gbt_deep's ``train_gbt_deep`` / ``train_gbt_grid_deep`` /
 ``train_gbt_grid_full`` and ext/gbt_cv's ``train_gbt_grid_cv`` /
 ``train_gbt_grid_full_cv`` — is a thin mapping of its arguments onto
-engine models. The depth-2 trainers return the ``{"root", "left",
-"right", "w_ll"…}`` dict the serving and SHAP code reads.
+engine models, and every one returns the engine's heap trees as they
+come. One node recursion reads them: :func:`tree_logit_raw` (raw
+feature columns, the serving form), :func:`gbt_trained_logit_expr`
+(its ensemble) and :func:`deep_tree_logit_on_bins` (the engine's own
+bin columns); ext/shap explains them and ext/model_registry stores
+them, at any depth.
 
 Determinism contract (the q_logreg_train conventions, extended to
 tree structure): probabilities det-round to 6 before the gradient;
@@ -267,19 +271,37 @@ def _sub_ranks(configs) -> tuple[list[int], list[int]]:
 # --- tree expressions over the working frame's bin columns ---------------------
 
 
-def deep_tree_logit_on_bins(tree: dict, features: tuple[str, ...]) -> Column:
-    """Heap tree value over the b_<feature> bin columns of a binned
-    frame (the engine's inner loop and the holdout scorers)."""
+def _tree_logit(tree: dict, bcol) -> Column:
+    """Heap tree value: node n sends a row left when ``bcol(fidx)``,
+    its bin of the split feature, is ≤ the split bin; leaves are
+    literals. The one node recursion every compiler shares."""
 
     def node_expr(n: int) -> Column:
         if n in tree["leaves"]:
             return F.lit(float(tree["leaves"][n]))
         fidx, b = tree["splits"][n]
-        return F.when(
-            F.col(f"b_{features[fidx]}") <= b, node_expr(2 * n)
-        ).otherwise(node_expr(2 * n + 1))
+        return F.when(bcol(fidx) <= b, node_expr(2 * n)).otherwise(
+            node_expr(2 * n + 1)
+        )
 
     return node_expr(1)
+
+
+def deep_tree_logit_on_bins(tree: dict, features: tuple[str, ...]) -> Column:
+    """Heap tree value over the b_<feature> bin columns of a binned
+    frame (the engine's inner loop and the holdout scorers)."""
+    return _tree_logit(tree, lambda fidx: F.col(f"b_{features[fidx]}"))
+
+
+def tree_logit_raw(
+    tree: dict,
+    features: tuple[str, ...] = SCORE_FEATURES,
+    bins: int = GBT_BINS,
+    scales: dict[str, float] | None = None,
+) -> Column:
+    """Heap tree value over RAW feature columns (bins recomputed
+    row-locally) — the serving form, at any depth."""
+    return _tree_logit(tree, lambda fidx: _bin_expr(features[fidx], scales, bins))
 
 
 def _ensemble_on_bins(
@@ -640,17 +662,6 @@ def _fit(
     return _descend(binned, _models(configs, folds), features)
 
 
-def _depth2(tree: dict) -> dict:
-    """A depth-2 heap tree in the {"root", "left", "right", "w_ll"…}
-    shape ext/scoring, ext/shap and the catalogs read."""
-    s, g, w = tree["splits"], tree["gains"], tree["leaves"]
-    return {
-        "root": s[1], "gain_root": g[1],
-        "left": s[2], "gain_left": g[2], "w_ll": w[4], "w_lr": w[5],
-        "right": s[3], "gain_right": g[3], "w_rl": w[6], "w_rr": w[7],
-    }
-
-
 def train_gbt(
     fv: DataFrame,
     features: tuple[str, ...] = SCORE_FEATURES,
@@ -662,7 +673,7 @@ def train_gbt(
     scales: dict[str, float] | None = None,
     pos_weight: float | None = None,
 ) -> list[dict]:
-    """Fit ``rounds`` depth-2 trees by histogram gradient boosting —
+    """Fit ``rounds`` depth-2 heap trees by histogram gradient boosting —
     one engine model, two aggregate jobs per round. Leaf values are
     full-precision doubles (round only at the output boundary).
 
@@ -672,7 +683,7 @@ def train_gbt(
     micro-floor, so splits optimize weighted loss and leaves
     −G/(H+λ) are naturally weighted."""
     cfg = _cfg("", rounds, eta, lam, pos_weight=pos_weight)
-    return [_depth2(tr) for tr in _fit(fv, [cfg], features, bins, label, scales)[0]]
+    return _fit(fv, [cfg], features, bins, label, scales)[0]
 
 
 def gbt_trained_logit_expr(
@@ -683,25 +694,12 @@ def gbt_trained_logit_expr(
     scales: dict[str, float] | None = None,
 ) -> Column:
     """The trained ensemble's logit over RAW feature columns (bins
-    recomputed row-locally) — the train→serve closure; shape-identical
-    to ext/scoring.gbt_logit_expr's compiled-CASE serving form."""
-
-    def bcol(fidx: int) -> Column:
-        return _bin_expr(features[fidx], scales, bins)
-
+    recomputed row-locally) — the train→serve closure for any depth.
+    Left-associated, term order = tree order (the determinism
+    contract shared with the oracles' rows{t} fold)."""
     z: Column = F.lit(0.0)
     for tr in trees:
-        rf, rb = tr["root"]
-        lf, lb = tr["left"]
-        rrf, rrb = tr["right"]
-        left = F.when(bcol(lf) <= lb, F.lit(tr["w_ll"])).otherwise(
-            F.lit(tr["w_lr"])
-        )
-        right = F.when(bcol(rrf) <= rrb, F.lit(tr["w_rl"])).otherwise(
-            F.lit(tr["w_rr"])
-        )
-        t_val = F.when(bcol(rf) <= rb, left).otherwise(right)
-        z = z + F.lit(float(eta)) * t_val
+        z = z + F.lit(float(eta)) * tree_logit_raw(tr, features, bins, scales)
     return z
 
 
@@ -1119,8 +1117,7 @@ def train_gbt_grid(
     unrolled per-config SQL oracle still gates them. At 100 TB each
     extra config is ≤ 2·d·B more integer cells in the same map-side
     combine."""
-    trees = _fit(fv, [_cfg(*c) for c in configs], features, bins, label, scales)
-    return [[_depth2(tr) for tr in ts] for ts in trees]
+    return _fit(fv, [_cfg(*c) for c in configs], features, bins, label, scales)
 
 
 

@@ -54,7 +54,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
     GBT_MS_CONFIGS,
     _binned_frame,
     _cfg,
-    _depth2,
     _descend,
     _fit,
     _gbt_ctes,
@@ -94,8 +93,7 @@ def train_gbt_grid_cv(
     k = len(configs)
     trees = _fit(fv, [_cfg(*c) for c in configs], features, bins, label,
                  scales, fold_col, folds)
-    return [[[_depth2(tr) for tr in ts] for ts in trees[f * k:(f + 1) * k]]
-            for f in range(folds)]
+    return [trees[f * k:(f + 1) * k] for f in range(folds)]
 
 
 def _cv_fold_aucs(

@@ -50,7 +50,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # noqa: F401  (re-exports)
@@ -91,45 +91,6 @@ def _sub_pred_sql(t: int, subsample: float) -> str:
     )
 
 
-# --- tree expression compilers --------------------------------------------------
-
-
-def deep_tree_logit_raw(
-    tree: dict,
-    features: tuple[str, ...],
-    bins: int = GBT_BINS,
-    scales: dict[str, float] | None = None,
-) -> Column:
-    """Tree value over RAW feature columns (bins recomputed
-    row-locally) — the serving form."""
-
-    def node_expr(n: int) -> Column:
-        if n in tree["leaves"]:
-            return F.lit(float(tree["leaves"][n]))
-        fidx, b = tree["splits"][n]
-        return F.when(
-            _bin_expr(features[fidx], scales, bins) <= b, node_expr(2 * n)
-        ).otherwise(node_expr(2 * n + 1))
-
-    return node_expr(1)
-
-
-def gbt_deep_logit_expr(
-    trees: list[dict],
-    features: tuple[str, ...] = SCORE_FEATURES,
-    bins: int = GBT_BINS,
-    eta: float = GBT_ETA,
-    scales: dict[str, float] | None = None,
-) -> Column:
-    """The trained deep ensemble's logit over raw features —
-    left-associated, term order = tree order (the determinism
-    contract shared with the oracle's rows{t} fold)."""
-    z: Column = F.lit(0.0)
-    for tr in trees:
-        z = z + F.lit(float(eta)) * deep_tree_logit_raw(tr, features, bins, scales)
-    return z
-
-
 # --- the trainer ---------------------------------------------------------------
 
 
@@ -166,9 +127,7 @@ def train_gbt_deep(
         {"depth": d, "splits": {node: (fidx, bin)},
          "gains": {node: gain}, "leaves": {leaf: w}}
 
-    At depth=2 the trees are :func:`ext.gbt.train_gbt`'s modulo
-    representation (root=splits[1], left=splits[2], right=splits[3],
-    w_ll..w_rr = leaves[4..7])."""
+    At depth=2 the trees are :func:`ext.gbt.train_gbt`'s exactly."""
     cfg = _cfg("", rounds, eta, lam, depth, subsample, colsample,
                min_child_weight, reg_alpha, pos_weight)
     return _fit(fv, [cfg], features, bins, label, scales)[0]

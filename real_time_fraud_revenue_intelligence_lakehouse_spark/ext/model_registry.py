@@ -24,10 +24,17 @@ the same commit discipline sources/versioned.py uses for tables:
   class of bug `delta_utils.py`'s history-vs-files mismatch warns
   about); `load_model(path)` with no version reads the head.
 
-A loaded model re-compiles to the same Catalyst expression the
-trainer produced (`ext/gbt.gbt_trained_logit_expr`), so
-save → load → score is bit-identical to training → score —
-round-trip-tested in tests/test_model_registry.py.
+Boosters have one document: :func:`gbt_doc` writes the engine's heap
+trees (``depth`` plus [node, …] lists for splits, gains and leaves)
+under kind ``gbt``, at any depth, and :func:`gbt_from_doc` reads them
+back. The reader also loads the two formats earlier versions wrote:
+``gbt`` documents of depth-2 ``{"root", "left", "right", "w_ll"…}``
+trees, converted to heap form in that one place, and ``gbt_deep``
+documents, which are already heap-shaped. A loaded model re-compiles
+to the same Catalyst expression the trainer produced
+(`ext/gbt.gbt_trained_logit_expr`), so save → load → score is
+bit-identical to training → score — round-trip-tested in
+tests/test_model_registry.py.
 """
 
 from __future__ import annotations
@@ -214,64 +221,28 @@ def promote_model(
     return version, report
 
 
+_HEAP_KEYS = ("depth", "splits", "gains", "leaves")
+
+#: The depth-2 tree dict earlier versions stored: key → heap node.
+_LEGACY_SPLITS = {"root": 1, "left": 2, "right": 3}
+_LEGACY_LEAVES = {"w_ll": 4, "w_lr": 5, "w_rl": 6, "w_rr": 7}
+_LEGACY_KEYS = (
+    *_LEGACY_SPLITS, *(f"gain_{k}" for k in _LEGACY_SPLITS), *_LEGACY_LEAVES
+)
+
+
 def gbt_doc(trees: list[dict], features: tuple[str, ...]) -> tuple[str, dict]:
-    """(kind, params) for a fitted DEPTH-2 booster (ext/gbt.train_gbt
-    shape: root/left/right splits) — tuples JSON-ify to lists, so
-    :func:`gbt_from_doc` restores them on load.
-
-    Shape is VALIDATED at save time (ADVICE r15): a heap-indexed deep
-    tree from ext/gbt_deep.train_gbt_deep used to commit fine here and
-    then brick the hot-reload serving path with a raw KeyError('root')
-    at compile time — a committed model must never fail to load, so
-    the mismatch errors loudly BEFORE it becomes a version. Deep trees
-    go through :func:`gbt_deep_doc`."""
-    for i, tr in enumerate(trees):
-        missing = [k for k in ("root", "left", "right") if k not in tr]
-        if missing:
-            hint = (
-                " (heap-indexed deep tree? use gbt_deep_doc)"
-                if "splits" in tr
-                else ""
-            )
-            raise ValueError(
-                f"gbt_doc: tree {i} lacks depth-2 keys {missing}{hint}"
-            )
-    return "gbt", {"trees": trees}
-
-
-def gbt_from_doc(doc: dict) -> list[dict]:
-    """Restore the tree list from a loaded document (JSON turned the
-    (fidx, bin) tuples into lists; scoring needs indexable pairs, so
-    lists are fine — but tests compare against the trainer's tuples,
-    so normalize back)."""
-    trees = []
-    for i, tr in enumerate(doc["params"]["trees"]):
-        out = dict(tr)
-        for k in ("root", "left", "right"):
-            if k not in out:
-                raise ValueError(
-                    f"gbt document v{doc.get('version')}: tree {i} lacks "
-                    f"depth-2 key {k!r} — not a train_gbt booster "
-                    "(deep models load via gbt_deep_from_doc)"
-                )
-            out[k] = tuple(out[k])
-        trees.append(out)
-    return trees
-
-
-def gbt_deep_doc(trees: list[dict], features: tuple[str, ...]) -> tuple[str, dict]:
-    """(kind, params) for a HEAP-INDEXED deep booster
-    (ext/gbt_deep.train_gbt_deep shape: depth + splits/gains/leaves
-    keyed by heap node id). JSON objects key by string, so the int
-    node ids are serialized as sorted [node, ...] pair lists;
-    :func:`gbt_deep_from_doc` restores the int-keyed dicts."""
+    """(kind, params) for a fitted booster of any depth — the engine's
+    heap trees. JSON objects key by string, so the int node ids are
+    serialized as sorted [node, ...] lists; :func:`gbt_from_doc`
+    restores the int-keyed dicts. A tree without the heap keys is
+    rejected here, BEFORE it becomes a version: a committed model must
+    never fail to load on the serving path."""
     out = []
     for i, tr in enumerate(trees):
-        if not ("depth" in tr and "splits" in tr and "leaves" in tr):
-            raise ValueError(
-                f"gbt_deep_doc: tree {i} lacks heap keys "
-                "(depth/splits/leaves) — depth-2 boosters go through gbt_doc"
-            )
+        missing = [k for k in _HEAP_KEYS if k not in tr]
+        if missing:
+            raise ValueError(f"gbt_doc: tree {i} lacks heap keys {missing}")
         out.append(
             {
                 "depth": int(tr["depth"]),
@@ -283,25 +254,46 @@ def gbt_deep_doc(trees: list[dict], features: tuple[str, ...]) -> tuple[str, dic
                 "leaves": [[n, tr["leaves"][n]] for n in sorted(tr["leaves"])],
             }
         )
-    return "gbt_deep", {"trees": out}
+    return "gbt", {"trees": out}
 
 
-def gbt_deep_from_doc(doc: dict) -> list[dict]:
-    """Restore train_gbt_deep's int-keyed heap dicts from a loaded
-    `gbt_deep` document (inverse of :func:`gbt_deep_doc`)."""
+def gbt_from_doc(doc: dict) -> list[dict]:
+    """The int-keyed heap trees of a loaded booster document — the
+    inverse of :func:`gbt_doc`. Documents written before the one tree
+    shape load too: a ``gbt_deep`` document is already heap-shaped,
+    and a ``gbt`` document of depth-2 ``root``/``left``/``right``
+    trees is converted here. Anything else raises ValueError."""
     trees = []
     for i, tr in enumerate(doc["params"]["trees"]):
-        if "splits" not in tr or "depth" not in tr:
-            raise ValueError(
-                f"gbt_deep document v{doc.get('version')}: tree {i} lacks "
-                "heap keys — not a train_gbt_deep booster"
+        if all(k in tr for k in _HEAP_KEYS):
+            trees.append(
+                {
+                    "depth": int(tr["depth"]),
+                    "splits": {
+                        int(n): (int(f), int(b)) for n, f, b in tr["splits"]
+                    },
+                    "gains": {int(n): float(g) for n, g in tr["gains"]},
+                    "leaves": {int(n): float(w) for n, w in tr["leaves"]},
+                }
             )
-        trees.append(
-            {
-                "depth": int(tr["depth"]),
-                "splits": {int(n): (int(f), int(b)) for n, f, b in tr["splits"]},
-                "gains": {int(n): float(g) for n, g in tr["gains"]},
-                "leaves": {int(n): float(w) for n, w in tr["leaves"]},
-            }
-        )
+        elif all(k in tr for k in _LEGACY_KEYS):
+            trees.append(
+                {
+                    "depth": 2,
+                    "splits": {
+                        n: (int(tr[k][0]), int(tr[k][1]))
+                        for k, n in _LEGACY_SPLITS.items()
+                    },
+                    "gains": {
+                        n: float(tr[f"gain_{k}"]) for k, n in _LEGACY_SPLITS.items()
+                    },
+                    "leaves": {n: float(tr[k]) for k, n in _LEGACY_LEAVES.items()},
+                }
+            )
+        else:
+            raise ValueError(
+                f"{doc.get('kind')} document v{doc.get('version')}: tree {i} "
+                f"is neither a heap tree {list(_HEAP_KEYS)} nor a depth-2 "
+                f"tree {list(_LEGACY_KEYS)}"
+            )
     return trees

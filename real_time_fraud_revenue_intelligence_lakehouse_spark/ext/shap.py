@@ -1,55 +1,53 @@
-"""Exact per-prediction attribution (TreeSHAP) for the depth-2 booster.
+"""Exact per-prediction attribution (TreeSHAP) for the fitted boosters.
 
 The reference explains individual predictions with SHAP over its
 fitted XGBoost (`ml/models/fraud_detector.py:185-191`, ``explain()``
-building a ``shap.TreeExplainer``). For depth-2 trees the
-path-dependent TreeSHAP value is CLOSED FORM: a tree touches at most
-3 features (root a, left-child b, right-child c — possibly
-coincident), so the Shapley sum runs over ≤ 2³ subsets of its unique
+building a ``shap.TreeExplainer``) at whatever ``max_depth`` its study
+picks (3-9, `:258`). Path-dependent TreeSHAP of one heap tree is
+CLOSED FORM here: a depth-d tree has 2^d−1 internal nodes, so the
+Shapley sum runs over the subsets of its ≤ 2^d−1 unique split
 features, with the conditional expectation
 
-    v(S) = Σ_leaves w_leaf · Π_nodes factor(node, S)
-    factor = [feature ∈ S] → follow x's branch (0/1)
-             [feature ∉ S] → cover(child)/cover(node)
+    v(S) = Σ_leaves w_leaf · Π_path factor(node, S)
+    factor = [player(node) ∈ S] → the row's branch indicator (0/1)
+             [player(node) ∉ S] → cover(child)/cover(node)
 
 — Lundberg's cover-weighted descent, which needs only the per-node
-TRAINING row counts (covers) the fitted splits already induce.
+TRAINING row counts (covers) the fitted splits already induce
+(:func:`tree_covers`, one count aggregate).
 
 Determinism contract (the ext/gbt.py conventions): covers are exact
-integers from one count aggregate; per (tree, subset) terms
-``coef · (v(S∪f) − v(S)) · eta`` are evaluated in ONE fixed
-parenthesization written identically in driver Python and in the
-generated DuckDB SQL, then micro-floored to integers BEFORE any
-aggregation — so per-row φ values are integer micros, sums are
-order-independent on any partition layout, and the whole artifact
-hash-gates. Coincident features (the same feature splitting root and
-a child, or both children) are handled by the subset enumeration
-itself: equal features share one Shapley player, and the mask →
-position-membership mapping ties their factors together.
+integers; per (tree, subset) terms ``coef · (v(S∪f) − v(S)) · eta``
+are evaluated by the recursion ``(L(k)·v(2k)) + (R(k)·v(2k+1))`` —
+the ONE parenthesization the generated DuckDB SQL writes token for
+token (:func:`_v_sql` at depth 2, ext/shap_deep's ``_v_deep_sql`` at
+depth 3) — and the coefficient is the exact factorial ratio
+:func:`shap_coef`, the same double as the SQL's literals. Every term
+micro-floors to an integer BEFORE any aggregation, so per-row φ
+values are integer micros, sums are order-independent on any
+partition layout, and the whole artifact hash-gates. Coincident
+features (one feature splitting several nodes) are handled by the
+subset enumeration itself: equal features share one Shapley player,
+and the mask → node-membership mapping ties their factors together.
 
-Per row the engine's φ is a CASE literal on the row's 3 branch
-indicators (≤ 8 patterns/tree, precomputed driver-side from the
-collected covers — the sanctioned model-broadcast scalar class);
-scoring stays row-local inside codegen, and the only aggregation is
-the final (band, feature) rollup. The additivity law
-Σ_f φ_f = v(full) − v(∅) per tree is pinned EXACTLY in Fractions in
-tests/test_shap.py, alongside an independent brute-force Shapley
-replay.
+Per row, φ is one ``element_at`` into a per-(tree, feature) literal
+array indexed by the row's branch PATTERN (bit k−1 = node k's
+indicator; 8 patterns at depth 2, 128 at depth 3), precomputed
+driver-side from the collected covers — the sanctioned
+model-broadcast scalar class. Scoring stays row-local inside
+codegen; the only aggregation is the final (band, feature) rollup.
+The bins are never NULL (``greatest`` skips a NULL scaled value), so
+the pattern is total. Additivity Σ_f φ_f = v(full) − v(∅) per tree is
+pinned EXACTLY in Fractions against independent brute-force Shapley
+replays at both depths (tests/test_shap.py, tests/test_shap_deep.py).
 
-Depth contract (VERDICT r14): this module is DEPTH-2-SPECIFIC by
-design — the closed form enumerates the ≤ 2³ subsets of a depth-2
-tree's ≤ 3 unique features, and the per-row CASE compiler keys on
-the 3 branch indicators (root/left/right). It serves q_gbt_shap /
-q_gbt_shap_top / explain_stream, all of which explain the
-PRODUCTION depth-2 booster (ext/gbt.py's q_gbt_train family). The
-depth-3 trainer (ext/gbt_deep.py, q_gbt_train_deep) is a selection
-/ benchmarking axis, not the served model; explaining a depth-d
-booster exactly means enumerating ≤ 2^(2^d−1) subsets of ≤ 2^d−1
-unique features per tree (128 at depth 3) — the same construction,
-a wider table. Generalize HERE (subset enumeration over heap trees)
-if a deep booster is ever promoted to serving; do not bolt a
-different approximation (e.g. Saabas) onto the serving path, which
-would silently change attribution semantics.
+Depth contract: the engine explains heap trees of depth ≤ 3
+(:data:`MAX_SHAP_DEPTH`). Depth 4 would mean 32,768 patterns per tree
+and 2^15 subsets per feature; a deeper booster needs the polynomial
+path algorithm, not a wider table, so a deeper tree raises
+ValueError naming its depth. Do not bolt a different approximation
+(e.g. Saabas) onto the serving path, which would silently change
+attribution semantics.
 
 Cites: reference `ml/models/fraud_detector.py:185-191` (explain,
 shap.TreeExplainer) — semantics reproduced, execution re-architected.
@@ -64,131 +62,215 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
     GBT_ETA,
     GBT_LAMBDA,
     GBT_ROUNDS,
+    _bin_expr,
     _gbt_ctes,
     _R6,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
 
-#: Covers of a fitted depth-2 tree, as exact training-row counts:
-#: (n, nL, nR, nLL, nLR, nRL, nRR) — root, root children, leaves.
-Covers = tuple[int, int, int, int, int, int, int]
+#: The deepest tree the exact engine explains (128 branch patterns).
+MAX_SHAP_DEPTH = 3
 
 
-def _coef(u: int, size: int) -> float:
-    """Shapley weight |S|!·(u−|S|−1)!/u! as the identical double the
-    SQL writes: u=1 → 1.0; u=2 → 0.5; u=3 → 1/3, 1/6, 1/3."""
-    if u == 1:
-        return 1.0
-    if u == 2:
-        return 0.5
-    return (1.0 / 3.0) if size in (0, 2) else (1.0 / 6.0)
+def _internal(tree: dict) -> range:
+    """Heap ids of the tree's internal nodes, 1..2^d−1."""
+    depth = tree["depth"]
+    if depth > MAX_SHAP_DEPTH:
+        raise ValueError(
+            f"exact TreeSHAP explains trees of depth <= {MAX_SHAP_DEPTH}; "
+            f"this tree has depth {depth}"
+        )
+    return range(1, 1 << depth)
+
+
+def shap_coef(u: int, size: int) -> float:
+    """|S|!·(u−|S|−1)!/u! as the exact double both engines read —
+    Python true division of exact integers is correctly rounded, so
+    it equals the SQL's literals (1/3, 1/6, 0.5, or the repr-literals
+    ext/shap_deep emits)."""
+    return math.factorial(size) * math.factorial(u - size - 1) / math.factorial(u)
+
+
+def cover_ratios(covers: dict[int, int]) -> dict[int, float]:
+    """child → cover(child)/cover(parent) as the same float division
+    the SQL writes (CAST(c AS DOUBLE) / CAST(p AS DOUBLE))."""
+    return {c: float(covers[c]) / float(covers[c // 2]) for c in covers if c > 1}
 
 
 def _v(
-    bA: int,
-    bB: int,
-    bC: int,
-    ia: float,
-    ib: float,
-    ic: float,
-    pl: float,
-    pr: float,
-    pll: float,
-    plr: float,
-    prl: float,
-    prr: float,
-    wll: float,
-    wlr: float,
-    wrl: float,
-    wrr: float,
+    k: int,
+    bits: dict[int, int],
+    inds: dict[int, float],
+    ps: dict[int, float],
+    ws: dict[int, float],
 ) -> float:
-    """Cover-weighted conditional expectation for one membership
-    pattern — the EXACT parenthesization :func:`_v_sql` emits, so
-    driver Python and DuckDB produce bit-identical doubles."""
-    fa_l = ia if bA == 1 else pl
-    fa_r = (1.0 - ia) if bA == 1 else pr
-    gb_l = ib if bB == 1 else pll
-    gb_r = (1.0 - ib) if bB == 1 else plr
-    gc_l = ic if bC == 1 else prl
-    gc_r = (1.0 - ic) if bC == 1 else prr
-    return (fa_l * ((gb_l * wll) + (gb_r * wlr))) + (
-        fa_r * ((gc_l * wrl) + (gc_r * wrr))
+    """Cover-weighted conditional expectation of the subtree at node
+    ``k`` for one membership pattern: ``(L(k)·v(2k)) + (R(k)·v(2k+1))``,
+    the parenthesization the SQL oracles emit."""
+    if k in ws:
+        return ws[k]
+    on = bits[k] == 1
+    left = inds[k] if on else ps[2 * k]
+    right = (1.0 - inds[k]) if on else ps[2 * k + 1]
+    return (left * _v(2 * k, bits, inds, ps, ws)) + (
+        right * _v(2 * k + 1, bits, inds, ps, ws)
     )
 
 
 def shap_terms(
-    tree: dict, covers: Covers, eta: float = GBT_ETA
-) -> dict[tuple[int, int, int], dict[int, int]]:
-    """Per branch-pattern (iA, iB, iC) → {fidx: φ6} integer micros of
-    the eta-scaled Shapley values of ONE fitted tree.
+    tree: dict, covers: dict[int, int], eta: float = GBT_ETA
+) -> dict[int, dict[int, int]]:
+    """Per branch pattern → {fidx: φ6} integer micros of the
+    eta-scaled Shapley values of ONE fitted heap tree. Pattern bit
+    k−1 is node k's indicator (pattern = Σ i_k · 2^(k−1), heap order).
 
     Subset enumeration over the tree's unique features: ranks are
     1-based in ascending fidx order (the SQL's row_number ORDER BY
-    fidx); masks run 0..2^u−1; a position's membership bit is its
+    fidx); masks run 0..2^u−1; a node's membership bit is its
     feature's rank bit, so coincident features share bits by
     construction. Each term micro-floors INDEPENDENTLY (the
     q_gbt_importance round-before-sum discipline) so φ6 sums are
     order-free in any engine."""
-    fa, ba = tree["root"]
-    fb, _bb = tree["left"]
-    fc, _bc = tree["right"]
-    n, nl, nr, nll, nlr, nrl, nrr = covers
-    pl = float(nl) / float(n)
-    pr = float(nr) / float(n)
-    pll = float(nll) / float(nl)
-    plr = float(nlr) / float(nl)
-    prl = float(nrl) / float(nr)
-    prr = float(nrr) / float(nr)
-    ws = (tree["w_ll"], tree["w_lr"], tree["w_rl"], tree["w_rr"])
-    uniq = sorted({fa, fb, fc})
+    internal = _internal(tree)
+    splits = tree["splits"]
+    ws = {leaf: float(w) for leaf, w in tree["leaves"].items()}
+    ps = cover_ratios(covers)
+    uniq = sorted({splits[k][0] for k in internal})
     u = len(uniq)
     rank = {f: i + 1 for i, f in enumerate(uniq)}
-    ra, rb, rc = rank[fa], rank[fb], rank[fc]
-    out: dict[tuple[int, int, int], dict[int, int]] = {}
-    for iA in (0, 1):
-        for iB in (0, 1):
-            for iC in (0, 1):
-                ia, ib, ic = float(iA), float(iB), float(iC)
-                phis: dict[int, int] = {}
-                for f in uniq:
-                    rf = rank[f]
-                    p6 = 0
-                    for m in range(1 << u):
-                        if (m >> (rf - 1)) & 1:
-                            continue
-                        size = ((m & 1) + ((m >> 1) & 1)) + ((m >> 2) & 1)
-                        coef = _coef(u, size)
-                        m1 = m | (1 << (rf - 1))
-                        v0 = _v(
-                            (m >> (ra - 1)) & 1,
-                            (m >> (rb - 1)) & 1,
-                            (m >> (rc - 1)) & 1,
-                            ia, ib, ic,
-                            pl, pr, pll, plr, prl, prr,
-                            *ws,
-                        )
-                        v1 = _v(
-                            (m1 >> (ra - 1)) & 1,
-                            (m1 >> (rb - 1)) & 1,
-                            (m1 >> (rc - 1)) & 1,
-                            ia, ib, ic,
-                            pl, pr, pll, plr, prl, prr,
-                            *ws,
-                        )
-                        p6 += math.floor(
-                            (coef * (v1 - v0)) * eta * 1000000.0 + 0.5
-                        )
-                    phis[f] = p6
-                out[(iA, iB, iC)] = phis
+    # a mask's node-membership bits do not depend on the pattern
+    bits = [
+        {k: (m >> (rank[splits[k][0]] - 1)) & 1 for k in internal}
+        for m in range(1 << u)
+    ]
+    out: dict[int, dict[int, int]] = {}
+    for pattern in range(1 << len(internal)):
+        inds = {k: float((pattern >> (k - 1)) & 1) for k in internal}
+        phis: dict[int, int] = {}
+        for f in uniq:
+            fbit = 1 << (rank[f] - 1)
+            p6 = 0
+            for m in range(1 << u):
+                if m & fbit:
+                    continue
+                coef = shap_coef(u, bin(m).count("1"))
+                v0 = _v(1, bits[m], inds, ps, ws)
+                v1 = _v(1, bits[m | fbit], inds, ps, ws)
+                p6 += math.floor((coef * (v1 - v0)) * eta * 1000000.0 + 0.5)
+            phis[f] = p6
+        out[pattern] = phis
     return out
+
+
+def tree_covers(
+    fv,
+    trees: list[dict],
+    features: tuple[str, ...] = SCORE_FEATURES,
+    scales: dict[str, float] | None = None,
+    bins: int = GBT_BINS,
+) -> list[dict[int, int]]:
+    """Per-tree training covers {heap node: row count} from ONE count
+    aggregate over the feature frame: a node's reach is its parent's
+    reach AND the parent's branch test (the fitted splits re-evaluated
+    as row-local bin comparisons) — exact integer sums, the sanctioned
+    bounded-histogram collect class."""
+    from pyspark.sql import functions as F
+
+    nodes = [range(2, 2 * len(_internal(tr)) + 2) for tr in trees]
+    aggs = [F.count(F.lit(1)).alias("n")]
+    for t, tr in enumerate(trees):
+        reach = {1: F.lit(True)}
+        for k in _internal(tr):
+            fidx, b = tr["splits"][k]
+            ind = _bin_expr(features[fidx], scales, bins) <= b
+            reach[2 * k] = reach[k] & ind
+            reach[2 * k + 1] = reach[k] & ~ind
+        for node in nodes[t]:
+            aggs.append(F.sum(reach[node].cast("long")).alias(f"c{t}_{node}"))
+    row = fv.agg(*aggs).first()
+    return [
+        {1: int(row["n"]), **{node: int(row[f"c{t}_{node}"]) for node in ns}}
+        for t, ns in enumerate(nodes)
+    ]
+
+
+def _pattern_sql(
+    tree: dict, features: tuple[str, ...], scales: dict[str, float] | None, bins: int
+) -> str:
+    """The row's branch pattern Σ i_k · 2^(k−1) as SQL text over RAW
+    feature columns; each bin is rendered byte-for-byte as
+    ext/gbt._bin_sql renders it for the oracles."""
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import _x_sql
+
+    terms = []
+    for k in _internal(tree):
+        fidx, b = tree["splits"][k]
+        bin_sql = (
+            f"CAST(least(greatest(floor(({_x_sql(features[fidx], scales)})"
+            f" * {float(bins)!r}), 0), {bins - 1}) AS BIGINT)"
+        )
+        terms.append(f"(CAST(({bin_sql} <= {int(b)}) AS INT) * {1 << (k - 1)})")
+    return "(" + " + ".join(terms) + ")"
+
+
+def branch_pattern(
+    tree: dict,
+    features: tuple[str, ...] = SCORE_FEATURES,
+    scales: dict[str, float] | None = None,
+    bins: int = GBT_BINS,
+):
+    """The row's branch pattern over RAW feature columns — the index
+    :func:`shap_terms` keys its table by."""
+    from pyspark.sql import functions as F
+
+    return F.expr(_pattern_sql(tree, features, scales, bins))
+
+
+def shap_phi_columns(
+    trees: list[dict],
+    tables: list[dict[int, dict[int, int]]],
+    features: tuple[str, ...] = SCORE_FEATURES,
+    scales: dict[str, float] | None = None,
+    bins: int = GBT_BINS,
+) -> list:
+    """Per-feature φ6 Spark columns ``phi6_<feature>`` for a fitted
+    ensemble, given the per-(tree, branch-pattern) tables
+    (:func:`shap_terms` over training covers): per (tree,
+    feature-in-tree) one element_at into the literal array of that
+    feature's φ6 per pattern, indexed by the row's branch pattern —
+    row-local and STATELESS, so the same columns score batch frames
+    and streaming micro-batches identically
+    (streaming/scoring.explain_stream rides them inside ingest)."""
+    from pyspark.sql import functions as F
+
+    pats = [_pattern_sql(tr, features, scales, bins) for tr in trees]
+    cols = []
+    for fidx in range(len(features)):
+        col = F.lit(0).cast("long")
+        for t, tr in enumerate(trees):
+            internal = _internal(tr)
+            if fidx not in {tr["splits"][k][0] for k in internal}:
+                continue
+            # one F.expr per (tree, feature): rendering the pattern and
+            # the literal array as SQL text keeps driver-side plan
+            # building to one py4j call (the r16 driver-overhead rule)
+            arr = ",".join(
+                str(int(tables[t][p].get(fidx, 0))) for p in range(1 << len(internal))
+            )
+            col = col + F.expr(
+                f"CAST(element_at(array({arr}), {pats[t]} + 1) AS BIGINT)"
+            )
+        cols.append(col.alias(f"phi6_{features[fidx]}"))
+    return cols
 
 
 # --- generated DuckDB oracle -------------------------------------------------
 
 
 def _v_sql(bA: str, bB: str, bC: str) -> str:
-    """The :func:`_v` template with membership bits as SQL integer
-    expressions — same parenthesization, token for token."""
+    """The :func:`_v` recursion unrolled at depth 2, with membership
+    bits as SQL integer expressions — same parenthesization, token
+    for token."""
     fa_l = f"(CASE WHEN {bA} = 1 THEN ia ELSE pl END)"
     fa_r = f"(CASE WHEN {bA} = 1 THEN (1.0 - ia) ELSE pr END)"
     gb_l = f"(CASE WHEN {bB} = 1 THEN ib ELSE pll END)"
@@ -379,61 +461,3 @@ def gbt_shap_top_sql(
     SELECT risk_label, fname AS top_feature, count(*) AS n,
            {mean_abs} AS mean_abs_phi
     FROM ranked WHERE rn = 1 GROUP BY 1, 2"""
-
-
-def shap_phi_columns(
-    trees: list[dict],
-    tables: list[dict[tuple[int, int, int], dict[int, int]]],
-    features: tuple[str, ...] = SCORE_FEATURES,
-    scales: dict[str, float] | None = None,
-    bins: int = GBT_BINS,
-) -> list:
-    """Per-feature φ6 Spark columns for a fitted ensemble, given the
-    precomputed per-(tree, branch-pattern) tables (:func:`shap_terms`
-    over training covers): pure CASE literals on the row's bin
-    comparisons — row-local and STATELESS, so the same columns score
-    batch frames and streaming micro-batches identically
-    (streaming/scoring.explain_stream rides them inside ingest)."""
-    from pyspark.sql import functions as F
-
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import _x_sql
-
-    # r16 (guide §1 driver-overhead rule): the CASE cascade was built
-    # as hundreds of individual py4j when()/&/~ calls per query (~1 s
-    # of measured driver time); rendering the SAME expression as SQL
-    # text and parsing it with one F.expr per (tree, feature) keeps the
-    # plan and values identical (the bin text below is byte-for-byte
-    # _bin_sql / the oracle's binning; NOT/AND mirror ~/& null
-    # semantics).
-    def bsql(fidx: int) -> str:
-        return (
-            f"CAST(least(greatest(floor(({_x_sql(features[fidx], scales)})"
-            f" * {float(bins)!r}), 0), {bins - 1}) AS BIGINT)"
-        )
-
-    cols = []
-    for fidx in range(len(features)):
-        col = F.lit(0).cast("long")
-        for t, tr in enumerate(trees):
-            if fidx not in {tr["root"][0], tr["left"][0], tr["right"][0]}:
-                continue
-            rf, rb = tr["root"]
-            lf, lb = tr["left"]
-            rrf, rrb = tr["right"]
-            i_a = f"({bsql(rf)} <= {int(rb)})"
-            i_b = f"({bsql(lf)} <= {int(lb)})"
-            i_c = f"({bsql(rrf)} <= {int(rrb)})"
-            arms = []
-            for (a, b, c), phis in tables[t].items():
-                cond = " AND ".join(
-                    ind if on else f"(NOT {ind})"
-                    for ind, on in ((i_a, a), (i_b, b), (i_c, c))
-                )
-                arms.append(
-                    f"WHEN {cond} THEN CAST({int(phis.get(fidx, 0))} AS BIGINT)"
-                )
-            col = col + F.expr(
-                "CASE " + " ".join(arms) + " ELSE CAST(0 AS BIGINT) END"
-            )
-        cols.append(col)
-    return cols

@@ -1,37 +1,22 @@
-"""Exact TreeSHAP for the depth-3 booster — ext/shap.py generalized
-to heap trees.
+"""The generated DuckDB oracle for exact TreeSHAP of the depth-3
+booster (q_gbt_shap_deep).
 
-ext/shap.py's closed form enumerates the ≤ 2³ subsets of a depth-2
-tree's ≤ 3 unique features; this module runs the SAME construction
-over ext/gbt_deep.py's heap-indexed depth-3 trees: 7 internal nodes,
-≤ 7 unique features, ≤ 2⁷ = 128 subsets, and per row a 7-bit branch
-PATTERN (one indicator per internal node) instead of 3. The
-conditional expectation is the identical cover-weighted descent —
+The Spark side is ext/shap.py's one engine, which explains heap trees
+of any depth ≤ 3. This module keeps the independent relational
+reference at depth 3: ext/gbt_deep.py's heap-indexed trees have 7
+internal nodes, ≤ 7 unique features and ≤ 2⁷ = 128 subsets, and the
+oracle re-trains the deep chain, derives every node's cover from the
+chain's level frames, and runs the identical subset enumeration with
+membership bits per node — the same cover-weighted descent
 
     v(S) = Σ_leaves w_leaf · Π_path factor(node, S)
     factor = [player(node) ∈ S] → the row's branch indicator (0/1)
              [player(node) ∉ S] → cover(child)/cover(node)
 
-— evaluated in ONE fixed parenthesization written identically in
-driver Python (:func:`_v_deep`) and generated DuckDB SQL
-(:func:`_v_deep_sql`), so every double matches bit-for-bit and the
-whole artifact hash-gates. Shapley coefficients are the exact
-factorial ratio |S|!·(u−|S|−1)!/u! computed once in Python and
-emitted as repr-literals into the SQL (both sides read the same
-double). Terms micro-floor independently before any aggregation
-(the q_gbt_importance discipline), so per-row φ values are integer
-micros and order-independent on any layout.
-
-Per-row cost: the 7 indicators ride the scoring scan; φ per feature
-is one element_at into a 128-literal array indexed by the row's
-pattern (per tree, per feature-in-tree) — row-local, stateless, zero
-joins. Covers come from ONE 14-sums-per-tree count aggregate. At
-100 TB the explanation is still a codegen projection plus a
-(band, feature) rollup.
-
-Additivity Σ_f φ_f = v(full) − v(∅) per (tree, pattern) is pinned
-EXACTLY in Fractions against an independent brute-force Shapley
-replay over the 7-player game (tests/test_shap_deep.py).
+in the parenthesization ext/shap's recursion evaluates
+(:func:`_v_deep_sql`), with the exact factorial-ratio coefficients
+emitted as repr-literals of ``ext.shap.shap_coef`` — so every double
+matches bit-for-bit and the whole artifact hash-gates.
 
 Cites: reference `ml/models/fraud_detector.py:185-191` (explain,
 shap.TreeExplainer over the fitted XGBoost, whose max_depth the
@@ -40,8 +25,6 @@ re-architected.
 """
 
 from __future__ import annotations
-
-import math
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
     GBT_BINS,
@@ -55,157 +38,20 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
     _gbt_deep_ctes,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.shap import shap_coef
 
 #: heap layout of a depth-3 tree
 INTERNAL = tuple(range(1, 8))  # nodes 1..7
 LEAVES = tuple(range(8, 16))  # nodes 8..15
 
 
-def shap_coef(u: int, size: int) -> float:
-    """|S|!·(u−|S|−1)!/u! as the exact double both engines read —
-    Python true division of exact integers is correctly rounded, and
-    the SQL carries repr() of this very value."""
-    return math.factorial(size) * math.factorial(u - size - 1) / math.factorial(u)
-
-
-def _v_deep(
-    bits: dict[int, int],
-    inds: dict[int, float],
-    ps: dict[int, float],
-    ws: dict[int, float],
-) -> float:
-    """Cover-weighted conditional expectation of one depth-3 tree for
-    one membership pattern — the EXACT parenthesization
-    :func:`_v_deep_sql` emits."""
-
-    def L(k: int) -> float:
-        return inds[k] if bits[k] == 1 else ps[2 * k]
-
-    def R(k: int) -> float:
-        return (1.0 - inds[k]) if bits[k] == 1 else ps[2 * k + 1]
-
-    return (
-        L(1)
-        * (
-            (L(2) * ((L(4) * ws[8]) + (R(4) * ws[9])))
-            + (R(2) * ((L(5) * ws[10]) + (R(5) * ws[11])))
-        )
-    ) + (
-        R(1)
-        * (
-            (L(3) * ((L(6) * ws[12]) + (R(6) * ws[13])))
-            + (R(3) * ((L(7) * ws[14]) + (R(7) * ws[15])))
-        )
-    )
-
-
-def deep_covers_ratios(covers: dict[int, int]) -> dict[int, float]:
-    """child → cover(child)/cover(parent) as the same float division
-    text the SQL writes (CAST(c AS DOUBLE) / CAST(p AS DOUBLE))."""
-    return {
-        c: float(covers[c]) / float(covers[c // 2])
-        for c in list(range(2, 16))
-    }
-
-
-def shap_terms_deep(
-    tree: dict, covers: dict[int, int], eta: float = GBT_ETA
-) -> dict[int, dict[int, int]]:
-    """Per 7-bit branch pattern → {fidx: φ6} integer micros for ONE
-    fitted depth-3 tree. Pattern bit k−1 is node k's indicator
-    (pattern = Σ i_k · 2^(k−1), heap order). Ranks are 1-based over
-    the tree's unique split features in ascending fidx order (the
-    SQL's row_number ORDER BY fidx); coincident features share one
-    Shapley player by construction."""
-    splits = tree["splits"]
-    ws = {leaf: float(w) for leaf, w in tree["leaves"].items()}
-    ps = deep_covers_ratios(covers)
-    uniq = sorted({splits[k][0] for k in INTERNAL})
-    u = len(uniq)
-    rank = {f: i + 1 for i, f in enumerate(uniq)}
-    node_rank = {k: rank[splits[k][0]] for k in INTERNAL}
-    out: dict[int, dict[int, int]] = {}
-    for pattern in range(128):
-        inds = {k: float((pattern >> (k - 1)) & 1) for k in INTERNAL}
-        phis: dict[int, int] = {}
-        for f in uniq:
-            rf = rank[f]
-            p6 = 0
-            for m in range(1 << u):
-                if (m >> (rf - 1)) & 1:
-                    continue
-                size = bin(m).count("1")
-                coef = shap_coef(u, size)
-                m1 = m | (1 << (rf - 1))
-                bits0 = {k: (m >> (node_rank[k] - 1)) & 1 for k in INTERNAL}
-                bits1 = {k: (m1 >> (node_rank[k] - 1)) & 1 for k in INTERNAL}
-                v0 = _v_deep(bits0, inds, ps, ws)
-                v1 = _v_deep(bits1, inds, ps, ws)
-                p6 += math.floor((coef * (v1 - v0)) * eta * 1000000.0 + 0.5)
-            phis[f] = p6
-        out[pattern] = phis
-    return out
-
-
-def deep_pattern_expr(tree: dict, features: tuple[str, ...],
-                      scales: dict[str, float] | None = None,
-                      bins: int = GBT_BINS):
-    """The row's 7-bit branch pattern over RAW feature columns."""
-    from pyspark.sql import functions as F
-
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import _bin_expr
-
-    pat = F.lit(0)
-    for k in INTERNAL:
-        fidx, b = tree["splits"][k]
-        ind = (_bin_expr(features[fidx], scales, bins) <= b).cast("int")
-        pat = pat + ind * F.lit(1 << (k - 1))
-    return pat
-
-
-def deep_shap_phi_columns(
-    trees: list[dict],
-    tables: list[dict[int, dict[int, int]]],
-    features: tuple[str, ...] = SCORE_FEATURES,
-    scales: dict[str, float] | None = None,
-    bins: int = GBT_BINS,
-) -> list:
-    """Per-feature φ6 Spark columns for the fitted deep ensemble:
-    per (tree, feature-in-tree) one element_at into a 128-literal
-    array indexed by the row's staged pattern — row-local, stateless
-    (the shap_phi_columns discipline, array-indexed instead of
-    CASE-cascaded because the pattern space is 16× wider)."""
-    from pyspark.sql import functions as F
-
-    # r16 (guide §1 driver-overhead rule): the 128-literal arrays were
-    # built as 128 individual F.lit() py4j calls per (tree, feature) —
-    # ~2700 driver round-trips ≈ 1.9 s of build time per query. One
-    # F.expr over the rendered integer list parses the identical
-    # literal array in a single call (same plan, same values).
-    pats = [deep_pattern_expr(tr, features, scales, bins) for tr in trees]
-    cols = []
-    for fidx in range(len(features)):
-        col = F.lit(0).cast("long")
-        for t, tr in enumerate(trees):
-            tree_feats = {tr["splits"][k][0] for k in INTERNAL}
-            if fidx not in tree_feats:
-                continue
-            arr = F.expr(
-                "array("
-                + ",".join(str(int(tables[t][p].get(fidx, 0))) for p in range(128))
-                + ")"
-            )
-            col = col + F.element_at(arr, pats[t] + F.lit(1)).cast("long")
-        cols.append(col.alias(f"phi6_{features[fidx]}"))
-    return cols
-
-
 # --- generated DuckDB oracle ---------------------------------------------------
 
 
 def _v_deep_sql(bit: dict[int, str]) -> str:
-    """The :func:`_v_deep` template with membership bits as SQL
-    integer expressions — same parenthesization, token for token.
+    """ext/shap's ``_v`` recursion unrolled at depth 3, with membership
+    bits as SQL integer expressions — same parenthesization, token
+    for token.
     Reads i1..i7 (indicators), p2..p15 (cover ratios), w8..w15."""
 
     def L(k: int) -> str:

@@ -35,7 +35,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars impo
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_ext import NORM, TOKS
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import text as X
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import doc_tokens, memo
 
 # --- inverted index ---------------------------------------------------------

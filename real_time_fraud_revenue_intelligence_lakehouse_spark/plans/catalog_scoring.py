@@ -647,11 +647,12 @@ def q_hbos_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- histogram gradient-boosted-tree trainer (VERDICT r12 #1) ----------------
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # noqa: E402
-    GBT_ROUNDS,
+    _r6,
     gbt_score_band_sql,
     gbt_train_sql,
     gbt_trained_logit_expr,
     train_gbt,
+    tree_logit_raw,
 )
 
 def _trained_gbt(spark: SparkSession, sf_dir: str) -> list[dict]:
@@ -685,25 +686,22 @@ def q_gbt_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bit-identical on any partition layout; the oracle re-runs the
     identical rounds as unrolled MATERIALIZED CTE blocks. Output: one
     row per tree (split features/bins + round6 leaf weights)."""
-    trees = _trained_gbt(spark, sf_dir)
-    import math
+    return _gbt_tree_frame(spark, _trained_gbt(spark, sf_dir))
 
-    r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
+
+def _gbt_tree_frame(spark: SparkSession, trees: list[dict]) -> DataFrame:
+    """One row per depth-2 heap tree: the split feature/bin of nodes
+    1..3 (root, left, right) and the round6 leaf weights of 4..7 —
+    the rows gbt_train_sql emits for q_gbt_train and
+    q_gbt_train_weighted."""
     rows = []
     for t, tr in enumerate(trees):
+        s, w = tr["splits"], tr["leaves"]
         rows.append(
             (
                 t,
-                SCORE_FEATURES[tr["root"][0]],
-                tr["root"][1],
-                SCORE_FEATURES[tr["left"][0]],
-                tr["left"][1],
-                SCORE_FEATURES[tr["right"][0]],
-                tr["right"][1],
-                r6(tr["w_ll"]),
-                r6(tr["w_lr"]),
-                r6(tr["w_rl"]),
-                r6(tr["w_rr"]),
+                *[v for k in (1, 2, 3) for v in (SCORE_FEATURES[s[k][0]], s[k][1])],
+                *[_r6(w[k]) for k in (4, 5, 6, 7)],
             )
         )
     return spark.createDataFrame(
@@ -775,33 +773,7 @@ def q_gbt_train_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     imbalanced planted boundary the weighted booster's minority
     leaves cross the decision line where the unweighted one's don't
     (tests/test_gbt.py)."""
-    import math
-
-    trees = _trained_gbt_weighted(spark, sf_dir)
-    r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
-    rows = []
-    for t, tr in enumerate(trees):
-        rows.append(
-            (
-                t,
-                SCORE_FEATURES[tr["root"][0]],
-                tr["root"][1],
-                SCORE_FEATURES[tr["left"][0]],
-                tr["left"][1],
-                SCORE_FEATURES[tr["right"][0]],
-                tr["right"][1],
-                r6(tr["w_ll"]),
-                r6(tr["w_lr"]),
-                r6(tr["w_rl"]),
-                r6(tr["w_rr"]),
-            )
-        )
-    return spark.createDataFrame(
-        rows,
-        "tree int, root_feature string, root_bin long, "
-        "l_feature string, l_bin long, r_feature string, r_bin long, "
-        "w_ll double, w_lr double, w_rl double, w_rr double",
-    )
+    return _gbt_tree_frame(spark, _trained_gbt_weighted(spark, sf_dir))
 
 
 def _trained_gbt_weighted(spark: SparkSession, sf_dir: str) -> list[dict]:
@@ -836,9 +808,8 @@ def q_gbt_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     micros: dict[int, int] = {i: 0 for i in range(len(SCORE_FEATURES))}
     n_splits: dict[int, int] = {i: 0 for i in range(len(SCORE_FEATURES))}
     for tr in trees:
-        for part, gkey in (("root", "gain_root"), ("left", "gain_left"), ("right", "gain_right")):
-            fidx = tr[part][0]
-            micros[fidx] += math.floor(tr[gkey] * 1e6 + 0.5)
+        for k, (fidx, _b) in tr["splits"].items():
+            micros[fidx] += math.floor(tr["gains"][k] * 1e6 + 0.5)
             n_splits[fidx] += 1
     rows = [
         (f, micros[i] / 1e6, n_splits[i]) for i, f in enumerate(SCORE_FEATURES)
@@ -869,9 +840,7 @@ def q_gbt_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     trees = _trained_gbt(spark, sf_dir)
     zs = [F.lit(0.0)]
     for tr in trees:
-        zs.append(
-            zs[-1] + F.lit(float(GBT_ETA)) * _gbt_tree_expr_raw(tr)
-        )
+        zs.append(zs[-1] + F.lit(float(GBT_ETA)) * tree_logit_raw(tr))
     aggs = [F.count(F.lit(1)).alias("n")]
     for t, z in enumerate(zs):
         aggs.append(
@@ -882,22 +851,6 @@ def q_gbt_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
     out = [(t, r6(float(row[f"L_{t}"]) / n)) for t in range(len(zs))]
     return spark.createDataFrame(out, "round int, train_logloss double")
-
-
-def _gbt_tree_expr_raw(tr: dict):
-    """One tree's value over raw feature columns (bins recomputed
-    row-locally) — the single-tree slice of gbt_trained_logit_expr."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import GBT_BINS, _bin_expr
-
-    def bcol(fidx: int):
-        return _bin_expr(SCORE_FEATURES[fidx], None, GBT_BINS)
-
-    rf, rb = tr["root"]
-    lf, lb = tr["left"]
-    rrf, rrb = tr["right"]
-    left = F.when(bcol(lf) <= lb, F.lit(tr["w_ll"])).otherwise(F.lit(tr["w_lr"]))
-    right = F.when(bcol(rrf) <= rrb, F.lit(tr["w_rl"])).otherwise(F.lit(tr["w_rr"]))
-    return F.when(bcol(rf) <= rb, left).otherwise(right)
 
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import _gbt_ctes  # noqa: E402
@@ -1217,7 +1170,7 @@ def q_gbt_early_stop(spark: SparkSession, sf_dir: str) -> DataFrame:
     trees = _default_booster(spark, sf_dir)
     zs = [F.lit(0.0)]
     for tr_ in trees:
-        zs.append(zs[-1] + F.lit(float(_ETA)) * _gbt_tree_expr_raw(tr_))
+        zs.append(zs[-1] + F.lit(float(_ETA)) * tree_logit_raw(tr_))
     aggs = [F.count(F.lit(1)).alias("n")]
     for t, z in enumerate(zs):
         aggs.append(F.sum(_loss_expr(z).cast("decimal(18,6)")).alias(f"L_{t}"))
@@ -1238,110 +1191,54 @@ def q_gbt_early_stop(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- r14: exact TreeSHAP for the depth-2 booster -------------------------------
+# --- r14: exact TreeSHAP for the trained boosters -----------------------------
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.shap import (  # noqa: E402
     gbt_shap_sql,
+    shap_phi_columns,
     shap_terms,
+    tree_covers,
 )
 
 
-def _gbt_covers(fv: DataFrame, trees: list[dict]) -> list[tuple[int, ...]]:
-    """Per-tree training covers (n, nL, nR, nLL, nLR, nRL, nRR) from
-    ONE count aggregate over the feature frame — 1 + 3·|trees| exact
-    integer sums (the fitted splits re-evaluated as row-local bin
-    comparisons), the sanctioned bounded-histogram collect class."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import GBT_BINS, _bin_expr
-
-    def bcol(fidx: int):
-        return _bin_expr(SCORE_FEATURES[fidx], None, GBT_BINS)
-
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for t, tr in enumerate(trees):
-        rf, rb = tr["root"]
-        lf, lb = tr["left"]
-        rrf, rrb = tr["right"]
-        i_a = bcol(rf) <= rb
-        i_b = bcol(lf) <= lb
-        i_c = bcol(rrf) <= rrb
-        aggs.append(F.sum(i_a.cast("long")).alias(f"nl_{t}"))
-        aggs.append(F.sum((i_a & i_b).cast("long")).alias(f"nll_{t}"))
-        aggs.append(F.sum(((~i_a) & i_c).cast("long")).alias(f"nrl_{t}"))
-    row = fv.agg(*aggs).first()
-    n = int(row["n"])
-    out = []
-    for t in range(len(trees)):
-        nl = int(row[f"nl_{t}"])
-        nr = n - nl
-        nll = int(row[f"nll_{t}"])
-        nlr = nl - nll
-        nrl = int(row[f"nrl_{t}"])
-        nrr = nr - nrl
-        out.append((n, nl, nr, nll, nlr, nrl, nrr))
-    return out
-
-
 def _shap_phi_columns(
-    spark: SparkSession, sf_dir: str, fv: DataFrame, trees: list[dict]
+    spark: SparkSession, sf_dir: str, fv: DataFrame, trees: list[dict], key: str
 ) -> list:
-    """Per-feature φ6 columns for the fitted ensemble: covers from
-    one aggregate, per-(tree, branch-pattern) values precomputed
-    driver-side (shap_terms), compiled by the generic
+    """Per-feature φ6 columns ``phi6_<feature>`` for a fitted
+    ensemble of any depth ≤ 3: covers from one aggregate
+    (ext/shap.tree_covers), per-(tree, branch-pattern) values
+    precomputed driver-side (shap_terms), compiled by
     ext/shap.shap_phi_columns (shared with the streaming explainer).
-    The covers are memoized per process: q_gbt_shap AND
-    q_gbt_shap_top would otherwise re-run the identical aggregate for
-    the identical memoized booster every bench pass. They are
-    training-derived statistics of that booster, so clear_cache()
-    drops them with it and the bench's trainer_cold series still
-    reports the full cache-cleared descent."""
+    The covers are memoized under ``key`` beside the booster they
+    derive from: q_gbt_shap and q_gbt_shap_top would otherwise re-run
+    the identical aggregate for the identical memoized booster every
+    bench pass. They are training-derived statistics of that booster,
+    so clear_cache() drops them with it and the bench's trainer_cold
+    series still reports the full cache-cleared descent."""
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import GBT_ETA
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.shap import shap_phi_columns
 
-    covers = memo(spark, sf_dir, "shap_covers", lambda: _gbt_covers(fv, trees))
+    covers = memo(spark, sf_dir, key, lambda: tree_covers(fv, trees))
     tables = [shap_terms(tr, cov, GBT_ETA) for tr, cov in zip(trees, covers)]
     return shap_phi_columns(trees, tables, SCORE_FEATURES, None)
 
 
-@query(
-    "q_gbt_shap",
-    oracle=gbt_shap_sql(_FV_SQL),
-    tags=("training", "evaluation", "explanation", "trees"),
-)
-def q_gbt_shap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-prediction attribution for the TRAINED booster — the last
-    FraudDetector method without an engine counterpart: the reference
-    explains single predictions with SHAP over its fitted XGBoost
-    (`ml/models/fraud_detector.py:185-191`, shap.TreeExplainer). For
-    depth-2 trees path-dependent TreeSHAP is CLOSED FORM (ext/shap.py:
-    ≤ 2³ subsets of each tree's ≤ 3 unique features, cover-weighted
-    conditional expectations from the training row counts the fitted
-    splits induce — coincident split features handled by the subset
-    algebra itself), so per-row φ compiles to CASE LITERALS on the
-    row's three branch indicators: zero joins, zero Python, one scan.
-    Covers come from one 10-column count aggregate; per-term values
-    micro-floor before summation so the artifact is order-independent
-    and hash-gates. Output: per (risk band, feature) — mean φ and
-    mean |φ| (the global explanation summary; additivity
-    Σφ = tree − base pinned exactly in Fractions in tests/
-    test_shap.py). The oracle re-trains via the unrolled rounds and
-    runs the identical enumeration relationally."""
+def _shap_band_means(
+    spark: SparkSession, sf_dir: str, trees: list[dict], key: str
+) -> DataFrame:
+    """Per (risk band, feature): row count, mean φ and mean |φ| of a
+    fitted booster — the q_gbt_shap / q_gbt_shap_deep artifact."""
     fv = _logreg_fv(spark, sf_dir)
-    trees = _trained_gbt(spark, sf_dir)
-    cols = [
-        c.alias(f"p6_{i}")
-        for i, c in enumerate(_shap_phi_columns(spark, sf_dir, fv, trees))
-    ]
+    phis = _shap_phi_columns(spark, sf_dir, fv, trees, key)
     s = det_round(
         F.lit(1.0) / (F.lit(1.0) + F.exp(-gbt_trained_logit_expr(trees))), 6
     )
-    wide = fv.select(risk_label(s).alias("risk_label"), *cols)
-    pairs = ", ".join(
-        f"'{f}', p6_{i}" for i, f in enumerate(SCORE_FEATURES)
-    )
-    stacked = wide.selectExpr(
+    scored = fv.select(risk_label(s).alias("risk_label"), *phis)
+    # unpivot the φ6 columns to (risk_label, feature, p6) and roll up
+    pairs = ", ".join(f"'{f}', phi6_{f}" for f in SCORE_FEATURES)
+    longf = scored.selectExpr(
         "risk_label", f"stack({len(SCORE_FEATURES)}, {pairs}) AS (feature, p6)"
     )
-    return stacked.groupBy("risk_label", "feature").agg(
+    return longf.groupBy("risk_label", "feature").agg(
         F.count(F.lit(1)).alias("n"),
         det_round(
             F.sum("p6").cast("double") / F.count(F.lit(1)) / F.lit(1000000.0), 6
@@ -1353,6 +1250,33 @@ def q_gbt_shap(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("mean_abs_phi"),
     )
+
+
+@query(
+    "q_gbt_shap",
+    oracle=gbt_shap_sql(_FV_SQL),
+    tags=("training", "evaluation", "explanation", "trees"),
+)
+def q_gbt_shap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-prediction attribution for the TRAINED booster — the last
+    FraudDetector method without an engine counterpart: the reference
+    explains single predictions with SHAP over its fitted XGBoost
+    (`ml/models/fraud_detector.py:185-191`, shap.TreeExplainer).
+    Path-dependent TreeSHAP of a heap tree is CLOSED FORM (ext/shap.py:
+    ≤ 2³ subsets of each depth-2 tree's ≤ 3 unique features,
+    cover-weighted conditional expectations from the training row
+    counts the fitted splits induce — coincident split features
+    handled by the subset algebra itself), so per-row φ compiles to
+    one element_at per (tree, feature) into an 8-literal array indexed
+    by the row's 3-bit branch pattern: zero joins, zero Python, one
+    scan. Covers come from one count aggregate; per-term values
+    micro-floor before summation so the artifact is order-independent
+    and hash-gates. Output: per (risk band, feature) — mean φ and
+    mean |φ| (the global explanation summary; additivity
+    Σφ = tree − base pinned exactly in Fractions in tests/
+    test_shap.py). The oracle re-trains via the unrolled rounds and
+    runs the identical enumeration relationally."""
+    return _shap_band_means(spark, sf_dir, _trained_gbt(spark, sf_dir), "shap_covers")
 
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.shap import gbt_shap_top_sql  # noqa: E402
@@ -1368,8 +1292,8 @@ def q_gbt_shap_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's /predict returns the SHAP-ranked driver of each
     score (`fraud_detector.py:185-191`, served by `ml/serving/
     api.py`); here every row's TOP feature (largest |φ6|, first
-    feature index on ties) is computed row-locally — the φ6 CASE
-    literals land in an array and array_position(arr, array_max(arr))
+    feature index on ties) is computed row-locally — the φ6
+    columns land in an array and array_position(arr, array_max(arr))
     is the argmax fold, no per-row window, no shuffle beyond the
     final (band, top_feature) rollup — then aggregated per risk band
     with the mean |φ| the top feature carried. The oracle ranks the
@@ -1378,13 +1302,13 @@ def q_gbt_shap_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-gates."""
     fv = _logreg_fv(spark, sf_dir)
     trees = _trained_gbt(spark, sf_dir)
-    phis = _shap_phi_columns(spark, sf_dir, fv, trees)
+    phis = _shap_phi_columns(spark, sf_dir, fv, trees, "shap_covers")
     s = det_round(
         F.lit(1.0) / (F.lit(1.0) + F.exp(-gbt_trained_logit_expr(trees))), 6
     )
     # stage the |φ| array as ONE computed column (the q_kmeans
     # staged-argmin discipline): argmax/element_at then read the
-    # staged value instead of re-expanding 24 CASE cascades 3x each
+    # staged value instead of re-expanding the φ columns 3x each
     staged = fv.select(
         risk_label(s).alias("risk_label"),
         F.array(*[F.abs(c) for c in phis]).alias("absarr"),

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import gbt_trained_logit_expr
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_cv import (
     GBT_MS_CONFIGS,
     cv_mean,
@@ -24,7 +25,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_cv import (
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
     GBT_DEPTH_CONFIGS,
-    gbt_deep_logit_expr,
     gbt_deep_score_sql,
     gbt_depth_selection_sql,
     gbt_train_deep_sql,
@@ -135,7 +135,7 @@ def q_gbt_deep_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     fv = _logreg_fv(spark, sf_dir)
     trees = _trained_deep(spark, sf_dir)
     s = det_round(
-        F.lit(1.0) / (F.lit(1.0) + F.exp(-gbt_deep_logit_expr(trees))), 6
+        F.lit(1.0) / (F.lit(1.0) + F.exp(-gbt_trained_logit_expr(trees))), 6
     )
     banded = fv.select("label", s.alias("s")).withColumn(
         "risk_label",
@@ -228,7 +228,7 @@ def q_gbt_depth_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         grid = train_gbt_grid_deep(tr)
         aggs = [F.count(F.lit(1)).alias("n")]
         for i, (_name, _r, eta, _l, _d) in enumerate(GBT_DEPTH_CONFIGS):
-            z = gbt_deep_logit_expr(grid[i], eta=eta)
+            z = gbt_trained_logit_expr(grid[i], eta=eta)
             aggs.append(
                 F.sum(_loss_expr(z).cast("decimal(18,6)")).alias(f"L_{i}")
             )
@@ -309,47 +309,10 @@ def q_model_selection_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- exact TreeSHAP for the depth-3 booster (ext/shap_deep.py) ----------------
+# --- exact TreeSHAP for the depth-3 booster (ext/shap.py) ---------------------
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.shap_deep import (  # noqa: E402
-    INTERNAL,
-    deep_pattern_expr,
-    deep_shap_phi_columns,
-    gbt_shap_deep_sql,
-    shap_terms_deep,
-)
-
-
-def _deep_covers(fv: DataFrame, trees: list[dict]) -> list[dict[int, int]]:
-    """Per-tree training covers {node: count} for heap nodes 1..15
-    from ONE count aggregate (14 exact integer sums per tree — the
-    fitted splits re-evaluated as row-local bin comparisons, the
-    sanctioned bounded-histogram collect class)."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import GBT_BINS, _bin_expr
-
-    def bcol(fidx: int):
-        return _bin_expr(SCORE_FEATURES[fidx], None, GBT_BINS)
-
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for t, tr in enumerate(trees):
-        inds = {}
-        for k in INTERNAL:
-            fidx, b = tr["splits"][k]
-            inds[k] = bcol(fidx) <= b
-        reach = {1: F.lit(True)}
-        for k in INTERNAL:
-            reach[2 * k] = reach[k] & inds[k]
-            reach[2 * k + 1] = reach[k] & ~inds[k]
-        for node in range(2, 16):
-            aggs.append(F.sum(reach[node].cast("long")).alias(f"c{t}_{node}"))
-    row = fv.agg(*aggs).first()
-    out = []
-    for t in range(len(trees)):
-        cov = {1: int(row["n"])}
-        for node in range(2, 16):
-            cov[node] = int(row[f"c{t}_{node}"])
-        out.append(cov)
-    return out
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.shap_deep import gbt_shap_deep_sql  # noqa: E402
+from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_scoring import _shap_band_means  # noqa: E402
 
 
 @query(
@@ -367,49 +330,15 @@ def q_gbt_shap_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional expectations from training row counts (ONE
     14-sums-per-tree aggregate), per-(tree, 7-bit branch pattern) φ6
     tables precomputed driver-side, per-row φ as one element_at into
-    a 128-literal array indexed by the row's staged pattern —
-    row-local, stateless, zero joins. Terms micro-floor before
-    summation, so the (risk band, feature) mean-φ/mean-|φ| artifact
-    is order-independent and hash-gates; the oracle re-trains the
+    a 128-literal array indexed by the row's branch pattern —
+    row-local, stateless, zero joins: q_gbt_shap's ext/shap engine
+    and catalog helper, fed the depth-3 trees. Terms micro-floor
+    before summation, so the (risk band, feature) mean-φ/mean-|φ|
+    artifact is order-independent and hash-gates; the oracle re-trains the
     deep chain and runs the identical enumeration relationally.
     Additivity Σφ = tree − base pinned exactly in Fractions against
     a brute-force 7-player Shapley replay (tests/test_shap_deep.py)."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import GBT_ETA
-
-    fv = _logreg_fv(spark, sf_dir)
-    trees = _trained_deep(spark, sf_dir)
-    # covers memoized per process beside the trained trees they
-    # derive from (clear_cache() drops both, so trainer_cold still
-    # reports the full cache-cleared descent)
-    covers = memo(spark, sf_dir, "deep_covers", lambda: _deep_covers(fv, trees))
-    tables = [shap_terms_deep(tr, cov, GBT_ETA) for tr, cov in zip(trees, covers)]
-    phis = deep_shap_phi_columns(trees, tables, SCORE_FEATURES, None)
-    s = det_round(
-        F.lit(1.0) / (F.lit(1.0) + F.exp(-gbt_deep_logit_expr(trees))), 6
-    )
-    scored = fv.select(
-        F.when(s >= 0.7, "high").when(s >= 0.4, "medium").otherwise("low").alias("risk_label"),
-        *phis,
-    )
-    # unpivot the φ6 columns to (risk_label, feature, p6) and roll up
-    pairs = ", ".join(
-        f"'{f}', phi6_{f}" for f in SCORE_FEATURES
-    )
-    longf = scored.selectExpr(
-        "risk_label", f"stack({len(SCORE_FEATURES)}, {pairs}) AS (feature, p6)"
-    )
-    return longf.groupBy("risk_label", "feature").agg(
-        F.count(F.lit(1)).alias("n"),
-        det_round(
-            F.sum("p6").cast("double") / F.count(F.lit(1)) / F.lit(1000000.0), 6
-        ).alias("mean_phi"),
-        det_round(
-            F.sum(F.abs(F.col("p6"))).cast("double")
-            / F.count(F.lit(1))
-            / F.lit(1000000.0),
-            6,
-        ).alias("mean_abs_phi"),
-    )
+    return _shap_band_means(spark, sf_dir, _trained_deep(spark, sf_dir), "deep_covers")
 
 
 # --- the last two Optuna dimensions: min_child_weight, reg_alpha --------------

@@ -100,6 +100,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # no
     GBT_ETA,
     early_stop_decision_auc,
     gbt_early_stop_auc_sql,
+    tree_logit_raw,
 )
 
 #: patience window at test scale — the reference's
@@ -107,7 +108,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # no
 ES_PATIENCE = 2
 
 
-def holdout_auc_ladder(va: DataFrame, trees: list[dict], tree_expr,
+def holdout_auc_ladder(va: DataFrame, trees: list[dict],
                        eta: float = GBT_ETA) -> list[float]:
     """Per-round holdout AUCs from ONE stacked scan: every partial
     ensemble's round6 sigmoid is a staged column, the stack unpivots
@@ -124,7 +125,7 @@ def holdout_auc_ladder(va: DataFrame, trees: list[dict], tree_expr,
 
     zs = [F.lit(0.0)]
     for tr_ in trees:
-        zs.append(zs[-1] + F.lit(float(eta)) * tree_expr(tr_))
+        zs.append(zs[-1] + F.lit(float(eta)) * tree_logit_raw(tr_))
     staged = va.select(
         "label",
         *[
@@ -190,12 +191,11 @@ def q_gbt_early_stop_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_scoring import (
         _default_booster,
         _fold_splits,
-        _gbt_tree_expr_raw,
     )
 
     _tr, va = _fold_splits(spark, sf_dir)
     trees = _default_booster(spark, sf_dir)
-    aucs = holdout_auc_ladder(va, trees, _gbt_tree_expr_raw)
+    aucs = holdout_auc_ladder(va, trees)
     stop_at, best_round = early_stop_decision_auc(aucs, ES_PATIENCE)
     out = [
         (t, aucs[t], 1 if t <= stop_at else 0, 1 if t == best_round else 0)

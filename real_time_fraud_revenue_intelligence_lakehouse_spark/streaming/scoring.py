@@ -114,13 +114,16 @@ def explain_stream(
     payload (`fraud_detector.py:185-191`, served by `ml/serving/
     api.py`) fused into the ingest micro-batch.
 
-    ``tables`` are the per-(tree, branch-pattern) φ6 tables from
-    ext/shap.shap_terms over TRAINING covers — training-time
-    constants, so the per-row attribution is pure CASE literals plus
-    one staged array argmax: stateless, append-safe, zero shuffle,
-    and bit-identical between a streaming micro-batch and its batch
-    twin (tests/test_streaming.py). At 100 TB ingest the explanation
-    adds one codegen projection — no Python, no joins, no state."""
+    ``trees`` are heap trees of any depth ≤ 3 and ``tables`` their
+    per-(tree, branch-pattern) φ6 tables from ext/shap.shap_terms over
+    TRAINING covers — training-time constants, so the per-row
+    attribution is the φ columns q_gbt_shap compiles (one element_at
+    into a literal array per tree and feature, indexed by the row's
+    branch pattern) plus one staged array argmax: stateless,
+    append-safe, zero shuffle, and bit-identical between a streaming
+    micro-batch and its batch twin (tests/test_streaming.py). At
+    100 TB ingest the explanation adds one codegen projection — no
+    Python, no joins, no state."""
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
         GBT_BINS,
         GBT_ETA,
@@ -260,24 +263,20 @@ def gate_report(gated: DataFrame) -> DataFrame:
 def compile_registry_model(doc: dict, feature_cols: tuple[str, ...],
                            scales: dict[str, float] | None = None):
     """Registry document → round6 scoring Column — the serving-side
-    twin of the trainer's save: `gbt` documents re-compile through
+    twin of the trainer's save: booster documents (`gbt`, and the
+    `gbt_deep` kind earlier versions wrote) load through
+    gbt_from_doc as heap trees of any depth and re-compile through
     gbt_trained_logit_expr (save → load → score is bit-identical to
-    train → score, the ext/model_registry round-trip law), `gbt_deep`
-    heap boosters through gbt_deep_logit_expr (ADVICE r15: a promoted
-    depth-3 model used to brick the hot-reload path with a raw
-    KeyError — now a first-class kind), `logreg` documents through
-    trained_score_expr (whose per-feature scale may be a divisor or a
-    fitted (mean, std) pair — the persisted StandardScaler)."""
+    train → score, the ext/model_registry round-trip law); `logreg`
+    documents go through trained_score_expr (whose per-feature scale
+    may be a divisor or a fitted (mean, std) pair — the persisted
+    StandardScaler)."""
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import gbt_trained_logit_expr
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import gbt_deep_logit_expr
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.model_registry import gbt_deep_from_doc, gbt_from_doc
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.model_registry import gbt_from_doc
     from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
 
-    if doc["kind"] == "gbt":
+    if doc["kind"] in ("gbt", "gbt_deep"):
         z = gbt_trained_logit_expr(gbt_from_doc(doc), feature_cols, scales=scales)
-        return det_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
-    if doc["kind"] == "gbt_deep":
-        z = gbt_deep_logit_expr(gbt_deep_from_doc(doc), feature_cols, scales=scales)
         return det_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
     if doc["kind"] == "logreg":
         sc = doc["params"].get("scaler")

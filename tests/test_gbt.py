@@ -57,11 +57,10 @@ def gbt_numpy_replay(X, y, features, rounds, bins, lam, eta, scales):
     for _t in range(rounds):
         z = np.zeros(n)
         for tr in trees:
-            rf, rb = tr["root"]
-            lf, lb = tr["left"]
-            rrf, rrb = tr["right"]
-            left = np.where(B[:, lf] <= lb, tr["w_ll"], tr["w_lr"])
-            right = np.where(B[:, rrf] <= rrb, tr["w_rl"], tr["w_rr"])
+            (rf, rb), (lf, lb), (rrf, rrb) = (tr["splits"][k] for k in (1, 2, 3))
+            w = tr["leaves"]
+            left = np.where(B[:, lf] <= lb, w[4], w[5])
+            right = np.where(B[:, rrf] <= rrb, w[6], w[7])
             z = z + eta * np.where(B[:, rf] <= rb, left, right)
         p = np.floor((1.0 / (1.0 + np.exp(-z))) * 1e6 + 0.5) / 1e6
         g = p - y
@@ -72,21 +71,22 @@ def gbt_numpy_replay(X, y, features, rounds, bins, lam, eta, scales):
         rfidx, rbin, _glm, _hlm, _gm, _hm, rgain = _argmax_split(
             _hist(fidxs, B, gm, hm, all_rows), features, lam
         )
-        tree = {"root": (rfidx, rbin), "gain_root": rgain}
+        tree = {
+            "depth": 2,
+            "splits": {1: (rfidx, rbin)},
+            "gains": {1: rgain},
+            "leaves": {},
+        }
         left_mask = B[:, rfidx] <= rbin
-        for n_id, side, mask in ((0, "left", left_mask), (1, "right", ~left_mask)):
+        for n_id, mask in ((2, left_mask), (3, ~left_mask)):
             assert mask.any(), "degenerate split in replay"
             cfidx, cbin, glm, hlm, g_m, h_m, cgain = _argmax_split(
                 _hist(fidxs, B, gm, hm, mask), features, lam
             )
-            tree[side] = (cfidx, cbin)
-            tree[f"gain_{side}"] = cgain
-            wl = _leaf_w(glm, hlm, lam)
-            wr = _leaf_w(g_m - glm, h_m - hlm, lam)
-            if n_id == 0:
-                tree["w_ll"], tree["w_lr"] = wl, wr
-            else:
-                tree["w_rl"], tree["w_rr"] = wl, wr
+            tree["splits"][n_id] = (cfidx, cbin)
+            tree["gains"][n_id] = cgain
+            tree["leaves"][2 * n_id] = _leaf_w(glm, hlm, lam)
+            tree["leaves"][2 * n_id + 1] = _leaf_w(g_m - glm, h_m - hlm, lam)
         trees.append(tree)
     return trees
 
@@ -122,16 +122,17 @@ def test_booster_recovers_planted_boundary_and_boosts(spark):
     trees = train_gbt(df, features=("x1", "x2"), scales={})
     # the root split finds the planted feature at the planted edge:
     # x2 > 0.55 → bin boundary at floor(0.55·16) = 8
-    rfidx, rbin = trees[0]["root"]
+    rfidx, rbin = trees[0]["splits"][1]
     assert rfidx == 1
     assert rbin == 8
     # left child (x2 ≤ 0.55) is the negative class, right positive:
     # leaf values push the logit the right way
-    assert trees[0]["w_ll"] < 0 and trees[0]["w_lr"] < 0
+    w0 = trees[0]["leaves"]
+    assert w0[4] < 0 and w0[5] < 0
     # (an empty leaf yields -0.0 = -(0/1e6)/(0/1e6+λ); no row can
     # reach it, so only the populated right leaf carries the sign)
-    assert trees[0]["w_rl"] > 0
-    assert trees[0]["w_rr"] >= 0 or trees[0]["w_rr"] == 0.0
+    assert w0[6] > 0
+    assert w0[7] >= 0 or w0[7] == 0.0
     # boosting is real: per-round log-loss decreases monotonically
     bins = GBT_BINS
     B = np.minimum(np.maximum(np.floor(X * bins), 0), bins - 1).astype(int)
@@ -139,11 +140,10 @@ def test_booster_recovers_planted_boundary_and_boosts(spark):
     def logloss(upto):
         z = np.zeros(len(y))
         for tr in trees[:upto]:
-            rf, rb = tr["root"]
-            lf, lb = tr["left"]
-            rrf, rrb = tr["right"]
-            left = np.where(B[:, lf] <= lb, tr["w_ll"], tr["w_lr"])
-            right = np.where(B[:, rrf] <= rrb, tr["w_rl"], tr["w_rr"])
+            (rf, rb), (lf, lb), (rrf, rrb) = (tr["splits"][k] for k in (1, 2, 3))
+            w = tr["leaves"]
+            left = np.where(B[:, lf] <= lb, w[4], w[5])
+            right = np.where(B[:, rrf] <= rrb, w[6], w[7])
             z = z + GBT_ETA * np.where(B[:, rf] <= rb, left, right)
         p = np.clip(1.0 / (1.0 + np.exp(-z)), 1e-9, 1 - 1e-9)
         return float(-(y * np.log(p) + (1 - y) * np.log(1 - p)).mean())
@@ -153,11 +153,10 @@ def test_booster_recovers_planted_boundary_and_boosts(spark):
     # and the model actually classifies the planted boundary
     z = np.zeros(len(y))
     for tr in trees:
-        rf, rb = tr["root"]
-        lf, lb = tr["left"]
-        rrf, rrb = tr["right"]
-        left = np.where(B[:, lf] <= lb, tr["w_ll"], tr["w_lr"])
-        right = np.where(B[:, rrf] <= rrb, tr["w_rl"], tr["w_rr"])
+        (rf, rb), (lf, lb), (rrf, rrb) = (tr["splits"][k] for k in (1, 2, 3))
+        w = tr["leaves"]
+        left = np.where(B[:, lf] <= lb, w[4], w[5])
+        right = np.where(B[:, rrf] <= rrb, w[6], w[7])
         z = z + GBT_ETA * np.where(B[:, rf] <= rb, left, right)
     acc = ((z > 0).astype(int) == y).mean()
     assert acc > 0.85, acc
@@ -247,11 +246,10 @@ def test_scale_pos_weight_booster_recovers_imbalanced_boundary(spark):
         B = np.minimum(np.maximum(np.floor(X * GBT_BINS), 0), GBT_BINS - 1).astype(int)
         z = np.zeros(len(y))
         for tr in trees:
-            rf, rb = tr["root"]
-            lf, lb = tr["left"]
-            rrf, rrb = tr["right"]
-            left = np.where(B[:, lf] <= lb, tr["w_ll"], tr["w_lr"])
-            right = np.where(B[:, rrf] <= rrb, tr["w_rl"], tr["w_rr"])
+            (rf, rb), (lf, lb), (rrf, rrb) = (tr["splits"][k] for k in (1, 2, 3))
+            w = tr["leaves"]
+            left = np.where(B[:, lf] <= lb, w[4], w[5])
+            right = np.where(B[:, rrf] <= rrb, w[6], w[7])
             z = z + GBT_ETA * np.where(B[:, rf] <= rb, left, right)
         pred = (z > 0).astype(int)
         return float(((pred == 1) & (y == 1)).sum() / (y == 1).sum())
@@ -360,7 +358,7 @@ def test_early_stop_halts_when_round_overfits_planted_noise(spark):
     tr = spark.createDataFrame(mk(80), "x1 double, x2 double, label int")
     va = spark.createDataFrame(mk(400), "x1 double, x2 double, label int")
     trees = train_gbt(tr, features=("x1", "x2"), scales={})
-    assert trees[2]["root"][0] == 0, "round-3 tree should root on the noise feature"
+    assert trees[2]["splits"][1][0] == 0, "round-3 tree should root on the noise feature"
     zs = [F.lit(0.0)]
     for t in trees:
         zs.append(
@@ -402,11 +400,10 @@ def _numpy_holdout_losses(trees_list, Xv, yv, etas, scales, feats):
         for t in range(len(trees) + 1):
             if t > 0:
                 tr = trees[t - 1]
-                rf, rb = tr["root"]
-                lf, lb = tr["left"]
-                rrf, rrb = tr["right"]
-                left = np.where(B[:, lf] <= lb, tr["w_ll"], tr["w_lr"])
-                right = np.where(B[:, rrf] <= rrb, tr["w_rl"], tr["w_rr"])
+                (rf, rb), (lf, lb), (rrf, rrb) = (tr["splits"][k] for k in (1, 2, 3))
+                w = tr["leaves"]
+                left = np.where(B[:, lf] <= lb, w[4], w[5])
+                right = np.where(B[:, rrf] <= rrb, w[6], w[7])
                 z = z + eta * np.where(B[:, rf] <= rb, left, right)
             p = r6a(1.0 / (1.0 + np.exp(-z)))
             l6 = r6a(np.where(yv == 1, -np.log(p), -np.log(1.0 - p)))

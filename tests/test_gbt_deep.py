@@ -167,13 +167,13 @@ def test_depth2_reproduces_train_gbt_bit_exactly(spark):
     old = train_gbt(df, features=FEATS, scales={})
     new = train_gbt_deep(df, features=FEATS, scales={}, depth=2)
     for a, b in zip(old, new):
-        assert a["root"] == b["splits"][1]
-        assert a["left"] == b["splits"][2]
-        assert a["right"] == b["splits"][3]
-        assert a["gain_root"] == b["gains"][1]
-        assert a["gain_left"] == b["gains"][2]
-        assert a["gain_right"] == b["gains"][3]
-        assert (a["w_ll"], a["w_lr"], a["w_rl"], a["w_rr"]) == (
+        assert a["splits"][1] == b["splits"][1]
+        assert a["splits"][2] == b["splits"][2]
+        assert a["splits"][3] == b["splits"][3]
+        assert a["gains"][1] == b["gains"][1]
+        assert a["gains"][2] == b["gains"][2]
+        assert a["gains"][3] == b["gains"][3]
+        assert tuple(a["leaves"][k] for k in (4, 5, 6, 7)) == (
             b["leaves"][4],
             b["leaves"][5],
             b["leaves"][6],
@@ -311,11 +311,10 @@ def test_cv_fold_aucs_match_numpy_replay(spark):
             z = np.zeros(int(va_mask.sum()))
             Bv = B[va_mask]
             for t_ in trees:
-                rf, rb = t_["root"]
-                lf, lb = t_["left"]
-                rrf, rrb = t_["right"]
-                left = np.where(Bv[:, lf] <= lb, t_["w_ll"], t_["w_lr"])
-                right = np.where(Bv[:, rrf] <= rrb, t_["w_rl"], t_["w_rr"])
+                (rf, rb), (lf, lb), (rrf, rrb) = (t_["splits"][k] for k in (1, 2, 3))
+                w = t_["leaves"]
+                left = np.where(Bv[:, lf] <= lb, w[4], w[5])
+                right = np.where(Bv[:, rrf] <= rrb, w[6], w[7])
                 z = z + eta * np.where(Bv[:, rf] <= rb, left, right)
             s = np.floor((1.0 / (1.0 + np.exp(-z))) * 1e6 + 0.5) / 1e6
             want[i][f] = _auc_numpy(s, y[va_mask])
@@ -583,10 +582,10 @@ def test_deep_pos_weight_depth2_matches_train_gbt_weighted(spark):
         df, features=FEATS, scales={}, depth=2, pos_weight=3.0
     )
     for a, b in zip(old, new):
-        assert a["root"] == b["splits"][1]
-        assert a["left"] == b["splits"][2]
-        assert a["right"] == b["splits"][3]
-        assert (a["w_ll"], a["w_lr"], a["w_rl"], a["w_rr"]) == (
+        assert a["splits"][1] == b["splits"][1]
+        assert a["splits"][2] == b["splits"][2]
+        assert a["splits"][3] == b["splits"][3]
+        assert tuple(a["leaves"][k] for k in (4, 5, 6, 7)) == (
             b["leaves"][4],
             b["leaves"][5],
             b["leaves"][6],

@@ -267,55 +267,146 @@ def test_stale_tmp_files_are_swept_on_save(tmp_path):
     assert MR.list_models(p) == [0]
 
 
-def test_gbt_doc_rejects_deep_trees_at_save_time(spark):
-    """ADVICE r15: a heap-indexed deep booster used to commit fine
-    through gbt_doc and then brick the hot-reload serving path with a
-    raw KeyError('root') at compile time. The shape mismatch must
-    error loudly BEFORE it becomes a committed version."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import train_gbt_deep
-
-    df, _ = _fit(spark)
-    deep = train_gbt_deep(df, features=("x1", "x2"), scales={}, rounds=1)
-    with pytest.raises(ValueError, match="gbt_deep_doc"):
-        gbt_doc(deep, ("x1", "x2"))
-    # and a hand-corrupted document fails to LOAD with a clear error,
-    # not a KeyError
-    with pytest.raises(ValueError, match="depth-2 key"):
-        gbt_from_doc({"version": 9, "params": {"trees": [{"splits": []}]}})
+def test_gbt_doc_rejects_non_heap_trees_and_reader_rejects_malformed_docs():
+    """One writer, one reader: gbt_doc refuses a tree without the heap
+    keys BEFORE it can become a committed version, and gbt_from_doc
+    refuses a document whose trees are neither heap trees nor the
+    depth-2 dicts earlier versions wrote — a clear ValueError, not a
+    KeyError on the hot-reload serving path."""
+    with pytest.raises(ValueError, match="lacks heap keys"):
+        gbt_doc([{"splits": {1: (0, 3)}, "leaves": {2: 0.1, 3: -0.1}}], ("x1",))
+    with pytest.raises(ValueError, match="lacks heap keys"):
+        gbt_doc([json.loads(_PARENT_GBT_DOC)["params"]["trees"][0]], ("x1", "x2"))
+    for trees in ([{"splits": []}], [{"root": [0, 3], "left": [0, 1], "right": [1, 2]}]):
+        with pytest.raises(ValueError, match="neither a heap tree"):
+            gbt_from_doc({"version": 9, "kind": "gbt", "params": {"trees": trees}})
 
 
 def test_gbt_deep_doc_roundtrip_compiles_on_serving_path(spark, tmp_path):
-    """save → load → score for the DEEP booster kind: the registry
+    """save → load → score for the DEEP booster: the one `gbt`
     document restores train_gbt_deep's int-keyed heap dicts exactly,
-    and compile_registry_model('gbt_deep') reproduces the trainer's
-    own scores bit-for-bit (the round-trip law, extended to the kind
-    ADVICE r15 found missing)."""
+    and compile_registry_model reproduces the trainer's own scores
+    bit-for-bit (the round-trip law at depth 3)."""
     from pyspark.sql import functions as F
 
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
-        gbt_deep_logit_expr,
-        train_gbt_deep,
-    )
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.model_registry import (
-        gbt_deep_doc,
-        gbt_deep_from_doc,
-    )
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import train_gbt_deep
     from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
     from real_time_fraud_revenue_intelligence_lakehouse_spark.streaming.scoring import compile_registry_model
 
     df, _ = _fit(spark)
     deep = train_gbt_deep(df, features=("x1", "x2"), scales={}, rounds=2)
     reg = str(tmp_path / "deepreg")
-    kind, params = gbt_deep_doc(deep, ("x1", "x2"))
-    assert kind == "gbt_deep"
+    kind, params = gbt_doc(deep, ("x1", "x2"))
+    assert kind == "gbt"
     save_model(reg, kind, params, ["x1", "x2"])
     doc = load_model(reg)
-    assert gbt_deep_from_doc(doc) == deep  # exact heap-dict restore
+    assert gbt_from_doc(doc) == deep  # exact heap-dict restore
     expr = compile_registry_model(doc, ("x1", "x2"), {})
     direct = det_round(
         F.lit(1.0)
-        / (F.lit(1.0) + F.exp(-gbt_deep_logit_expr(deep, ("x1", "x2"), scales={}))),
+        / (F.lit(1.0) + F.exp(-gbt_trained_logit_expr(deep, ("x1", "x2"), scales={}))),
         6,
     )
     got = df.select(expr.alias("a"), direct.alias("b")).collect()
     assert all(r["a"] == r["b"] for r in got)
+
+
+#: A `gbt` document as earlier versions wrote it: two depth-2 trees
+#: fitted by train_gbt, in the {"root", "left", "right", "w_ll"…}
+#: dict shape.
+_PARENT_GBT_DOC = """{"version": 0, "kind": "gbt", "params": {"trees": [
+ {"root": [1, 7], "gain_root": 135.01179365188605,
+  "left": [0, 2], "gain_left": -1.0072847682119246, "w_ll": -1.5, "w_lr": -1.2,
+  "right": [1, 8], "gain_right": -1.0583635908646585,
+  "w_rl": 0.9473684210526315, "w_rr": 1.352112676056338},
+ {"root": [1, 7], "gain_root": 72.27853069598513,
+  "left": [1, 4], "gain_left": -0.4148159917445966,
+  "w_ll": -1.0453389074331476, "w_lr": -0.8041710560957821,
+  "right": [0, 13], "gain_right": -0.2219855443108827,
+  "w_rl": 0.9177599443334422, "w_rr": 1.336314893264672}]},
+ "features": ["x1", "x2"], "metrics": {}, "committed_at": 0.0}"""
+
+#: The heap trees that document encodes.
+_PARENT_GBT_TREES = [
+    {
+        "depth": 2,
+        "splits": {1: (1, 7), 2: (0, 2), 3: (1, 8)},
+        "gains": {1: 135.01179365188605, 2: -1.0072847682119246, 3: -1.0583635908646585},
+        "leaves": {4: -1.5, 5: -1.2, 6: 0.9473684210526315, 7: 1.352112676056338},
+    },
+    {
+        "depth": 2,
+        "splits": {1: (1, 7), 2: (1, 4), 3: (0, 13)},
+        "gains": {1: 72.27853069598513, 2: -0.4148159917445966, 3: -0.2219855443108827},
+        "leaves": {
+            4: -1.0453389074331476, 5: -0.8041710560957821,
+            6: 0.9177599443334422, 7: 1.336314893264672,
+        },
+    },
+]
+
+#: A `gbt_deep` document as earlier versions wrote it: one depth-3
+#: tree fitted by train_gbt_deep, already heap-shaped.
+_PARENT_DEEP_DOC = """{"version": 0, "kind": "gbt_deep", "params": {"trees": [
+ {"depth": 3,
+  "splits": [[1, 1, 7], [2, 0, 2], [3, 1, 8], [4, 1, 0], [5, 0, 3], [6, 0, 7], [7, 0, 2]],
+  "gains": [[1, 135.01179365188605], [2, -1.0072847682119246], [3, -1.0583635908646585],
+            [4, -0.22222222222222143], [5, -0.3487179487179475],
+            [6, -0.44497607655502414], [7, -0.8936111797490582]],
+  "leaves": [[8, -0.5], [9, -1.5555555555555556], [10, -0.6666666666666666],
+             [11, -1.2307692307692308], [12, 0.5454545454545454], [13, 1.0],
+             [14, 1.0526315789473684], [15, 1.4074074074074074]]}]},
+ "features": ["x1", "x2"], "metrics": {}, "committed_at": 0.0}"""
+
+_PARENT_DEEP_TREES = [
+    {
+        "depth": 3,
+        "splits": {1: (1, 7), 2: (0, 2), 3: (1, 8), 4: (1, 0), 5: (0, 3), 6: (0, 7), 7: (0, 2)},
+        "gains": {
+            1: 135.01179365188605, 2: -1.0072847682119246, 3: -1.0583635908646585,
+            4: -0.22222222222222143, 5: -0.3487179487179475,
+            6: -0.44497607655502414, 7: -0.8936111797490582,
+        },
+        "leaves": {
+            8: -0.5, 9: -1.5555555555555556, 10: -0.6666666666666666,
+            11: -1.2307692307692308, 12: 0.5454545454545454, 13: 1.0,
+            14: 1.0526315789473684, 15: 1.4074074074074074,
+        },
+    },
+]
+
+
+@pytest.mark.parametrize(
+    "text, heap",
+    [(_PARENT_GBT_DOC, _PARENT_GBT_TREES), (_PARENT_DEEP_DOC, _PARENT_DEEP_TREES)],
+    ids=["gbt", "gbt_deep"],
+)
+def test_earlier_documents_load_and_score_bit_identically(spark, tmp_path, text, heap):
+    """Both document kinds earlier versions committed stay loadable:
+    gbt_from_doc returns the heap trees each encodes, and
+    compile_registry_model scores the committed version bit-for-bit
+    like those heap trees compiled directly."""
+    from pyspark.sql import functions as F
+
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.streaming.scoring import compile_registry_model
+
+    reg = tmp_path / "reg"
+    reg.mkdir()
+    (reg / "v000000.json").write_text(text)
+    doc = load_model(str(reg))
+    assert gbt_from_doc(doc) == heap
+    rng = np.random.RandomState(13)
+    df = spark.createDataFrame(
+        [(float(a), float(b)) for a, b in rng.uniform(0, 1, (300, 2)).round(4)],
+        "x1 double, x2 double",
+    )
+    expr = compile_registry_model(doc, ("x1", "x2"), {})
+    direct = det_round(
+        F.lit(1.0)
+        / (F.lit(1.0) + F.exp(-gbt_trained_logit_expr(heap, ("x1", "x2"), scales={}))),
+        6,
+    )
+    got = df.select(expr.alias("a"), direct.alias("b")).collect()
+    assert all(r["a"] == r["b"] for r in got)
+    assert len({r["a"] for r in got}) > 2  # the trees really route rows

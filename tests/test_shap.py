@@ -1,4 +1,4 @@
-"""Exact depth-2 TreeSHAP (ext/shap.py).
+"""Exact TreeSHAP of depth-2 heap trees (ext/shap.py).
 
 Three laws, checked against an INDEPENDENT Fraction-exact Shapley
 implementation (direct subset enumeration over feature sets with
@@ -32,13 +32,10 @@ def _v_ref(tree, covers, S, branches):
     Fractions: at each internal node, follow x's branch if the node's
     feature is conditioned on (∈ S), else average children by their
     training covers."""
-    n, nl, nr, nll, nlr, nrl, nrr = covers
-    fa = tree["root"][0]
-    fb = tree["left"][0]
-    fc = tree["right"][0]
+    n, nl, nr, nll, nlr, nrl, nrr = (covers[k] for k in range(1, 8))
+    fa, fb, fc = (tree["splits"][k][0] for k in (1, 2, 3))
     i_a, i_b, i_c = branches
-    wll, wlr = Fraction(tree["w_ll"]), Fraction(tree["w_lr"])
-    wrl, wrr = Fraction(tree["w_rl"]), Fraction(tree["w_rr"])
+    wll, wlr, wrl, wrr = (Fraction(tree["leaves"][k]) for k in (4, 5, 6, 7))
     if fb in S:
         left = wll if i_b else wlr
     else:
@@ -55,7 +52,7 @@ def _v_ref(tree, covers, S, branches):
 def _phi_ref(tree, covers, branches):
     """Exact Shapley values per unique feature — the brute-force
     definition over feature subsets."""
-    uniq = sorted({tree["root"][0], tree["left"][0], tree["right"][0]})
+    uniq = sorted({tree["splits"][k][0] for k in (1, 2, 3)})
     u = len(uniq)
     phis = {}
     for f in uniq:
@@ -75,17 +72,34 @@ def _phi_ref(tree, covers, branches):
     return phis
 
 
-_COVERS = (100, 60, 40, 35, 25, 10, 30)
-_WS = dict(w_ll=0.41, w_lr=-0.27, w_rl=-0.64, w_rr=0.13)
+#: heap covers: root, its children (2, 3), the leaves (4..7)
+_COVERS = dict(zip(range(1, 8), (100, 60, 40, 35, 25, 10, 30)))
+_WS = (0.41, -0.27, -0.64, 0.13)
+
+
+def _tree(root, left, right):
+    """Depth-2 heap tree: splits at nodes 1..3, leaves 4..7 = _WS."""
+    return {
+        "depth": 2,
+        "splits": {1: root, 2: left, 3: right},
+        "gains": {1: 0.0, 2: 0.0, 3: 0.0},
+        "leaves": dict(zip((4, 5, 6, 7), _WS)),
+    }
+
+
+def _branches(pattern):
+    """(i_a, i_b, i_c) of a branch pattern: bit k−1 is node k."""
+    return (pattern & 1, (pattern >> 1) & 1, (pattern >> 2) & 1)
+
 
 #: one tree per coincidence shape — the subset algebra must tie
 #: coincident features into one Shapley player in every case
 _SHAPES = {
-    "distinct": dict(root=(0, 7), left=(1, 3), right=(2, 11), **_WS),
-    "root_eq_right": dict(root=(0, 7), left=(1, 3), right=(0, 11), **_WS),
-    "root_eq_left": dict(root=(0, 7), left=(0, 2), right=(2, 11), **_WS),
-    "children_eq": dict(root=(0, 7), left=(1, 3), right=(1, 12), **_WS),
-    "all_same": dict(root=(0, 7), left=(0, 2), right=(0, 11), **_WS),
+    "distinct": _tree((0, 7), (1, 3), (2, 11)),
+    "root_eq_right": _tree((0, 7), (1, 3), (0, 11)),
+    "root_eq_left": _tree((0, 7), (0, 2), (2, 11)),
+    "children_eq": _tree((0, 7), (1, 3), (1, 12)),
+    "all_same": _tree((0, 7), (0, 2), (0, 11)),
 }
 
 
@@ -109,12 +123,12 @@ def test_module_phi_matches_bruteforce_shapley(shape):
     bound of 0.5 micro per term (≤ 4 terms per feature)."""
     tree = _SHAPES[shape]
     table = shap_terms(tree, _COVERS, eta=GBT_ETA)
-    for (i_a, i_b, i_c), phis6 in table.items():
-        ref = _phi_ref(tree, _COVERS, (i_a, i_b, i_c))
+    for pattern, phis6 in table.items():
+        ref = _phi_ref(tree, _COVERS, _branches(pattern))
         assert set(phis6) == set(ref)
         for f, p6 in phis6.items():
             exact = float(ref[f]) * GBT_ETA * 1e6
-            assert abs(p6 - exact) <= 2.0 + 1e-9, (shape, (i_a, i_b, i_c), f)
+            assert abs(p6 - exact) <= 2.0 + 1e-9, (shape, _branches(pattern), f)
 
 
 def test_single_feature_tree_phi_is_value_minus_base():
@@ -122,16 +136,14 @@ def test_single_feature_tree_phi_is_value_minus_base():
     the (eta-scaled) tree value at x minus the cover-weighted base."""
     tree = _SHAPES["all_same"]
     table = shap_terms(tree, _COVERS, eta=1.0)
-    n, nl, nr, nll, nlr, nrl, nrr = _COVERS
-    base = (nl / n) * ((nll / nl) * tree["w_ll"] + (nlr / nl) * tree["w_lr"]) + (
+    n, nl, nr, nll, nlr, nrl, nrr = (_COVERS[k] for k in range(1, 8))
+    wll, wlr, wrl, wrr = (tree["leaves"][k] for k in (4, 5, 6, 7))
+    base = (nl / n) * ((nll / nl) * wll + (nlr / nl) * wlr) + (
         nr / n
-    ) * ((nrl / nr) * tree["w_rl"] + (nrr / nr) * tree["w_rr"])
-    for (i_a, i_b, i_c), phis in table.items():
-        val = (
-            (tree["w_ll"] if i_b else tree["w_lr"])
-            if i_a
-            else (tree["w_rl"] if i_c else tree["w_rr"])
-        )
+    ) * ((nrl / nr) * wrl + (nrr / nr) * wrr)
+    for pattern, phis in table.items():
+        i_a, i_b, i_c = _branches(pattern)
+        val = (wll if i_b else wlr) if i_a else (wrl if i_c else wrr)
         assert abs(phis[0] / 1e6 - (val - base)) < 2e-6
 
 
@@ -161,9 +173,7 @@ def test_signal_feature_dominates_attribution(spark):
 
     mean_abs = {0: 0.0, 1: 0.0}
     for tr in trees:
-        i_a = bcol(tr["root"][0]) <= tr["root"][1]
-        i_b = bcol(tr["left"][0]) <= tr["left"][1]
-        i_c = bcol(tr["right"][0]) <= tr["right"][1]
+        i_a, i_b, i_c = (bcol(f) <= b for f, b in (tr["splits"][k] for k in (1, 2, 3)))
         row = df.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(i_a.cast("long")).alias("nl"),
@@ -171,14 +181,19 @@ def test_signal_feature_dominates_attribution(spark):
             F.sum(((~i_a) & i_c).cast("long")).alias("nrl"),
         ).first()
         nn, nl = int(row["n"]), int(row["nl"])
-        covers = (
-            nn,
-            nl,
-            nn - nl,
-            int(row["nll"]),
-            nl - int(row["nll"]),
-            int(row["nrl"]),
-            (nn - nl) - int(row["nrl"]),
+        covers = dict(
+            zip(
+                range(1, 8),
+                (
+                    nn,
+                    nl,
+                    nn - nl,
+                    int(row["nll"]),
+                    nl - int(row["nll"]),
+                    int(row["nrl"]),
+                    (nn - nl) - int(row["nrl"]),
+                ),
+            )
         )
         table = shap_terms(tr, covers, eta=GBT_ETA)
         # fold |φ| over the data distribution via the branch patterns
@@ -188,7 +203,7 @@ def test_signal_feature_dominates_attribution(spark):
             i_c.cast("int").alias("c"),
         ).groupBy("a", "b", "c").count().collect()
         for r in pat:
-            phis = table[(r["a"], r["b"], r["c"])]
+            phis = table[r["a"] + 2 * r["b"] + 4 * r["c"]]
             for f, p6 in phis.items():
                 mean_abs[f] += abs(p6) * r["count"] / n / 1e6
     assert mean_abs[1] > 5 * max(mean_abs[0], 1e-9), mean_abs

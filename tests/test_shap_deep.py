@@ -1,4 +1,4 @@
-"""Exact TreeSHAP for the depth-3 booster (ext/shap_deep.py).
+"""Exact TreeSHAP of depth-3 heap trees (ext/shap.py's one engine).
 
 The test_shap.py laws generalized to 7-player games, checked against
 an INDEPENDENT Fraction-exact Shapley replay over heap trees:
@@ -10,8 +10,10 @@ an INDEPENDENT Fraction-exact Shapley replay over heap trees:
 2. Additivity: Σ_f φ_f = v(full) − v(∅) holds EXACTLY in Fractions
    for every one of the 128 patterns.
 3. The per-row pattern/array compilation reproduces the driver-side
-   tables on a real fitted booster (engine law; the relational
-   enumeration is gated by q_gbt_shap_deep's oracle in selfcheck).
+   tables on a real fitted booster at depths 2 and 3 (engine law; the
+   relational enumerations are gated by the q_gbt_shap and
+   q_gbt_shap_deep oracles in selfcheck).
+4. A tree deeper than the engine's bound is refused by name.
 """
 
 from __future__ import annotations
@@ -23,12 +25,14 @@ from itertools import combinations
 import pytest
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import GBT_ETA
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.shap import (
+    cover_ratios,
+    shap_coef,
+    shap_terms,
+)
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.shap_deep import (
     INTERNAL,
     LEAVES,
-    deep_covers_ratios,
-    shap_coef,
-    shap_terms_deep,
 )
 
 
@@ -127,11 +131,11 @@ def test_additivity_is_exact_in_fractions(shape):
 
 @pytest.mark.parametrize("shape", sorted(_SHAPES))
 def test_module_phi_matches_bruteforce_shapley(shape):
-    """shap_terms_deep's mask-algebra φ6 (micro-floored per term,
+    """shap_terms' mask-algebra φ6 (micro-floored per term,
     eta-scaled) vs the independent exact Shapley values: within the
     floor bound of 0.5 micro per term (≤ 2^(u−1) terms per feature)."""
     tree = _SHAPES[shape]
-    table = shap_terms_deep(tree, _COVERS, eta=GBT_ETA)
+    table = shap_terms(tree, _COVERS, eta=GBT_ETA)
     uniq = sorted({tree["splits"][k][0] for k in INTERNAL})
     u = len(uniq)
     bound = 0.5 * (1 << max(0, u - 1)) + 1e-9
@@ -154,25 +158,27 @@ def test_coef_matches_fraction_exactly():
 
 
 def test_covers_ratios_shape():
-    ps = deep_covers_ratios(_COVERS)
+    ps = cover_ratios(_COVERS)
     assert set(ps) == set(range(2, 16))
     # children of each node partition it
     for k in range(1, 8):
         assert _COVERS[2 * k] + _COVERS[2 * k + 1] == _COVERS[k]
 
 
-def test_engine_columns_reproduce_tables_on_fitted_booster(spark):
-    """Fit a real depth-3 booster, compile the pattern/array columns,
-    and check each row's φ6 equals the driver-side table entry at
-    that row's pattern — the engine compilation law (the relational
-    oracle is gated separately by selfcheck)."""
+@pytest.mark.parametrize("depth", [2, 3])
+def test_engine_columns_reproduce_tables_on_fitted_booster(spark, depth):
+    """Fit a real booster of ``depth``, compile the pattern/array
+    columns, and check each row's φ6 equals the driver-side table
+    entry at that row's pattern — the engine compilation law, row by
+    row, for both boosters the catalog explains (the relational
+    oracles are gated separately by selfcheck)."""
     import numpy as np
-    from pyspark.sql import functions as F
 
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import train_gbt_deep
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.shap_deep import (
-        deep_pattern_expr,
-        deep_shap_phi_columns,
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.shap import (
+        branch_pattern,
+        shap_phi_columns,
+        tree_covers,
     )
 
     rng = np.random.RandomState(5)
@@ -186,31 +192,13 @@ def test_engine_columns_reproduce_tables_on_fitted_booster(spark):
         "x1 double, x2 double, x3 double, label int",
     )
     feats = ("x1", "x2", "x3")
-    trees = train_gbt_deep(df, features=feats, scales={}, depth=3, rounds=2)
-    # covers via the same indicator construction the query uses
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import GBT_BINS, _bin_expr
-
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for t, tr in enumerate(trees):
-        inds = {
-            k: _bin_expr(feats[tr["splits"][k][0]], {}, GBT_BINS) <= tr["splits"][k][1]
-            for k in INTERNAL
-        }
-        reach = {1: F.lit(True)}
-        for k in INTERNAL:
-            reach[2 * k] = reach[k] & inds[k]
-            reach[2 * k + 1] = reach[k] & ~inds[k]
-        for node in range(2, 16):
-            aggs.append(F.sum(reach[node].cast("long")).alias(f"c{t}_{node}"))
-    row = df.agg(*aggs).first()
-    covers = []
-    for t in range(len(trees)):
-        cov = {1: int(row["n"])}
-        cov.update({node: int(row[f"c{t}_{node}"]) for node in range(2, 16)})
-        covers.append(cov)
-    tables = [shap_terms_deep(tr, cov) for tr, cov in zip(trees, covers)]
-    phis = deep_shap_phi_columns(trees, tables, feats, {})
-    pats = [deep_pattern_expr(tr, feats, {}) for tr in trees]
+    trees = train_gbt_deep(df, features=feats, scales={}, depth=depth, rounds=2)
+    internal = range(1, 1 << depth)
+    # covers via the same reach construction the queries use
+    covers = tree_covers(df, trees, feats, {})
+    tables = [shap_terms(tr, cov) for tr, cov in zip(trees, covers)]
+    phis = shap_phi_columns(trees, tables, feats, {})
+    pats = [branch_pattern(tr, feats, {}) for tr in trees]
     got = df.select(
         *[p.alias(f"pat_{t}") for t, p in enumerate(pats)], *phis
     ).collect()
@@ -219,6 +207,31 @@ def test_engine_columns_reproduce_tables_on_fitted_booster(spark):
             want = sum(
                 tables[t][r[f"pat_{t}"]].get(i, 0)
                 for t in range(len(trees))
-                if i in {trees[t]["splits"][k][0] for k in INTERNAL}
+                if i in {trees[t]["splits"][k][0] for k in internal}
             )
             assert r[f"phi6_{f}"] == want
+
+
+def test_engine_refuses_trees_deeper_than_three():
+    """A depth-4 heap tree (15 internal nodes, 32,768 branch patterns)
+    is outside the exact engine: every entry point raises ValueError
+    naming the depth, not a KeyError from a missing node."""
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.shap import (
+        shap_phi_columns,
+        shap_terms,
+        tree_covers,
+    )
+
+    deep = {
+        "depth": 4,
+        "splits": {k: (k % 3, k) for k in range(1, 16)},
+        "gains": {k: 0.0 for k in range(1, 16)},
+        "leaves": {leaf: 0.1 * (leaf - 24) for leaf in range(16, 32)},
+    }
+    covers = {k: 1 << (5 - k.bit_length()) for k in range(1, 32)}
+    with pytest.raises(ValueError, match="depth 4"):
+        shap_terms(deep, covers)
+    with pytest.raises(ValueError, match="depth 4"):
+        shap_phi_columns([deep], [{}], ("x1", "x2", "x3"), {})
+    with pytest.raises(ValueError, match="depth 4"):
+        tree_covers(None, [deep], ("x1", "x2", "x3"), {})

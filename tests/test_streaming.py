@@ -1664,7 +1664,7 @@ def test_stream_explained_scoring_matches_batch(spark, tmp_path):
     """Streaming GBT serving WITH per-row attribution
     (streaming/scoring.explain_stream): the fitted booster's score,
     band, top SHAP driver, and its |φ| ride the micro-batch as pure
-    CASE-literal projections (φ tables are training-time constants),
+    literal-array projections (φ tables are training-time constants),
     so every stream row is bit-identical to the batch twin — the
     reference's /predict + explain payload with the REST hop removed."""
     import numpy as np
@@ -1688,9 +1688,9 @@ def test_stream_explained_scoring_matches_batch(spark, tmp_path):
     # covers from the training frame (the q_gbt_shap recipe)
     tables = []
     for tr in trees:
-        i_a = _bin_expr("value", scales, GBT_BINS) <= tr["root"][1]
-        i_b = _bin_expr("value", scales, GBT_BINS) <= tr["left"][1]
-        i_c = _bin_expr("value", scales, GBT_BINS) <= tr["right"][1]
+        i_a, i_b, i_c = (
+            _bin_expr("value", scales, GBT_BINS) <= tr["splits"][k][1] for k in (1, 2, 3)
+        )
         row = train.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(i_a.cast("long")).alias("nl"),
@@ -1698,8 +1698,10 @@ def test_stream_explained_scoring_matches_batch(spark, tmp_path):
             F.sum(((~i_a) & i_c).cast("long")).alias("nrl"),
         ).first()
         n, nl = int(row["n"]), int(row["nl"])
-        covers = (n, nl, n - nl, int(row["nll"]), nl - int(row["nll"]),
-                  int(row["nrl"]), (n - nl) - int(row["nrl"]))
+        covers = dict(zip(range(1, 8), (
+            n, nl, n - nl, int(row["nll"]), nl - int(row["nll"]),
+            int(row["nrl"]), (n - nl) - int(row["nrl"]),
+        )))
         tables.append(shap_terms(tr, covers, GBT_ETA))
 
     src = tmp_path / "explain_src"
