@@ -436,28 +436,6 @@ def connected_components_star(
     return members.unionByName(roots).distinct()
 
 
-def dup_clusters_star(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.5,
-    max_iters: int = 25,
-    sig: DataFrame | None = None,
-    toks: DataFrame | None = None,
-) -> DataFrame:
-    """:func:`dup_clusters` with the large-star/small-star engine —
-    same (doc_id, cluster_id, cluster_size) contract, O(log d)
-    rounds; prefer it when components may be deep (long dup chains)."""
-    pairs = minhash_lsh_pairs(
-        df, id_col, text_col, threshold=threshold, sig=sig, toks=toks
-    ).select("id_a", "id_b")
-    labels = connected_components_star(pairs, max_iters=max_iters)
-    sizes = labels.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return labels.join(sizes, "cluster_id").select(
-        F.col("node").alias(id_col), "cluster_id", "cluster_size"
-    )
-
-
 def dup_clusters(
     df: DataFrame,
     id_col: str,
@@ -529,6 +507,9 @@ def dup_clusters(
         labels = new_labels.drop("_changed")
         if changed == 0:
             break
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import note_dropped_checkpoints
+
+    note_dropped_checkpoints(labels.sparkSession)  # per-round checkpoints dropped above
     sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("cluster_size"))
     return labels.join(sizes, "lbl").select(
         F.col("node").alias(id_col),

@@ -703,6 +703,13 @@ def gbt_trained_logit_expr(
     return z
 
 
+def gbt_trained_score_expr(trees: list[dict], eta: float = GBT_ETA) -> Column:
+    """round6(σ(ensemble logit)) with TRAINED trees — the booster's
+    twin of ext/training.trained_score_expr."""
+    z = gbt_trained_logit_expr(trees, eta=eta)
+    return det_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
+
+
 # --- generated DuckDB oracle -------------------------------------------------
 
 

@@ -35,7 +35,11 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars impo
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_ext import NORM, TOKS
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
-from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import doc_tokens, memo
+from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import (
+    doc_tokens,
+    memo,
+    note_dropped_checkpoints,
+)
 
 # --- inverted index ---------------------------------------------------------
 
@@ -284,8 +288,6 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> list:
         bests.append(best)
         if r < BPE_ROUNDS:
             seqs = _bpe_apply(seqs, best, ["word", "freq"])
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import note_dropped_checkpoints
-
     note_dropped_checkpoints(spark)  # per-round seqs checkpoints dropped above
     return bests
 
@@ -508,8 +510,6 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for best in bests:
         aw = _bpe_apply(aw, best, ["word"])
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import note_dropped_checkpoints
-
     note_dropped_checkpoints(spark)  # per-round aw checkpoints dropped above
     enc = sw.join(aw, "word")
     n_tokens = F.sum(F.col("cnt") * F.size("toks"))

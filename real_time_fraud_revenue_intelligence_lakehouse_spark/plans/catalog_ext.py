@@ -391,15 +391,6 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# NOTE: the large-star/small-star variant (ext/dedup.dup_clusters_star)
-# deliberately has NO separate registered query: it must produce
-# byte-identical output to q_dup_clusters (equivalence asserted in
-# tests/test_ext.py::test_star_cc_equals_label_propagation against the
-# same corpus, plus a deep-chain test), so registering it would only
-# re-run the same oracle while its extra O(log d) rounds pay off on
-# graph depths the test corpus cannot produce.
-
-
 _V_COLS = ", ".join(
     f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
     for b in range(X.SIMHASH_BITS)

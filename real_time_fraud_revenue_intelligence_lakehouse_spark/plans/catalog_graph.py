@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.dedup import connected_components_star
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import (
@@ -37,6 +38,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames im
     basket_singles,
     co_service_sim,
     cust_supp,
+    note_dropped_checkpoints,
     shared_frame,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
@@ -452,8 +454,6 @@ def q_graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitive closure with a recursive CTE. kNN capping keeps the
     edge set O(k·n) at any scale; each CC round is two groupBy-join
     passes over the CURRENT (shrinking) edge set."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.dedup import connected_components_star
-
     edges = _knn_edges(spark, sf_dir).select(
         F.col("a").alias("id_a"), F.col("b").alias("id_b")
     )
@@ -521,6 +521,55 @@ def _bf_oracle() -> str:
     )
 
 
+def _bf_relax(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """BF_ROUNDS Bellman-Ford relaxation rounds from the minimum
+    supplier over the co-service graph (edge cost 1/common_customers)
+    → (the 1-row ``src_node`` frame, the last round's candidates
+    (node, dist, pred), the LAZY (node, dist) state). Each round is
+    one join of the node-sized state against the edge list plus a
+    per-node min; costs add in round order, so the doubles are
+    deterministic. q_cheapest_route reads the state;
+    q_route_reconstruct takes each node's (dist, pred) argmin over the
+    last round's candidates.
+
+    The rounds compose LAZILY (the star-CC round-fusing trick,
+    ext/dedup): min-plus arithmetic is unchanged, so every checkpoint
+    dropped is one fewer Spark action barrier buying the same bits. r16
+    interleaved A/B at sf0.1: checkpoint every 2 rounds 3.17 s vs
+    every 4 rounds 2.76 s — the 4-round horizon fuses into ONE lazy
+    DAG. Also measured and REJECTED (r16): a per-round
+    broadcast(state) hint — it collects the fused round chain into
+    a broadcast every round (2.9 s → 4.2 s), while the AQE-coalesced
+    sort-merge join of two node-sized frames is free. And (r18): an
+    argmin by min(struct(dist, pred)) in every round — a struct
+    buffer plans as SortAggregate instead of HashAggregate, which
+    cost q_cheapest_route about 1.3 s (9%) at sf0.1."""
+    sim = co_service_sim(spark, sf_dir)
+    w = (F.lit(1.0) / F.col("common_cust")).alias("w")
+
+    def build_ew() -> DataFrame:
+        return sim.select(F.col("s1").alias("src"), F.col("s2").alias("dst"), w).unionByName(
+            sim.select(F.col("s2").alias("src"), F.col("s1").alias("dst"), w)
+        )
+
+    ew = shared_frame(spark, sf_dir, "co_service_ew", build_ew)
+    src1 = cust_supp(spark, sf_dir).agg(F.min("supp").alias("src_node"))
+    dist = src1.select(F.col("src_node").alias("node"), F.lit(0.0).alias("dist")).localCheckpoint()
+    for _ in range(BF_ROUNDS):
+        relax = dist.join(ew, dist.node == ew.src).select(
+            F.col("dst").alias("node"),
+            (F.col("dist") + F.col("w")).alias("dist"),
+            dist.node.alias("pred"),
+        )
+        dist = (
+            dist.unionByName(relax.drop("pred"))
+            .groupBy("node")
+            .agg(F.min("dist").alias("dist"))
+        )
+    note_dropped_checkpoints(spark)  # the round-0 checkpoint is superseded
+    return src1, relax, dist
+
+
 @query("q_cheapest_route", oracle=_bf_oracle(), tags=("graph", "shortest-path", "iterative"))
 def q_cheapest_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded weighted shortest path: {BF_ROUNDS} Bellman-Ford
@@ -535,44 +584,7 @@ def q_cheapest_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     cyclic graphs — bounding the horizon is what makes the shape
     well-defined on both engines). Costs add in round order on both
     sides, so the doubles agree bit-for-bit."""
-    sim = co_service_sim(spark, sf_dir)
-    w = (F.lit(1.0) / F.col("common_cust")).alias("w")
-
-    def build_ew() -> DataFrame:
-        return sim.select(F.col("s1").alias("src"), F.col("s2").alias("dst"), w).unionByName(
-            sim.select(F.col("s2").alias("src"), F.col("s1").alias("dst"), w)
-        )
-
-    ew = shared_frame(spark, sf_dir, "co_service_ew", build_ew)
-    src = (
-        cust_supp(spark, sf_dir)
-        .agg(F.min("supp").alias("node"))
-        .select("node", F.lit(0.0).alias("dist"))
-    )
-    dist = src.localCheckpoint()
-    # Relaxation rounds compose LAZILY (the star-CC round-fusing
-    # trick, ext/dedup): min-plus arithmetic is unchanged — costs
-    # still add in round order — so every checkpoint dropped is one
-    # fewer driver barrier buying the same bits. r16 interleaved A/B
-    # (guide §1.2): checkpoint every 2 rounds 3.17 s vs every 4
-    # rounds 2.76 s at sf0.1 — the 4-round horizon fuses into ONE
-    # lazy DAG. The cadence stays a conf for longer horizons (lineage
-    # must stay capped when BF_ROUNDS grows at scale).
-    # Also measured and REJECTED here (r16): a per-round
-    # broadcast(dist) hint — it materializes the fused round chain on
-    # the driver per round, 2.9 s → 4.2 s, while the SMJ of two tiny
-    # frames AQE-coalesces for free.
-    cadence = int(spark.conf.get("spark.rtfril.graph.ckpt.rounds", "4"))
-    for r in range(BF_ROUNDS):
-        relax = dist.join(ew, dist.node == ew.src).select(
-            F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
-        )
-        dist = dist.unionByName(relax).groupBy("node").agg(F.min("dist").alias("dist"))
-        if (r + 1) % cadence == 0 and (r + 1) < BF_ROUNDS:
-            dist = dist.localCheckpoint()
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import note_dropped_checkpoints
-
-    note_dropped_checkpoints(dist.sparkSession)  # per-round-pair checkpoints dropped
+    _, _, dist = _bf_relax(spark, sf_dir)
     return dist.select("node", det_round(F.col("dist"), 6).alias("dist"))
 
 
@@ -650,8 +662,9 @@ def _route_oracle() -> str:
 def q_route_reconstruct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shortest-path ROUTE reconstruction — q_cheapest_route answers
     "how far", this answers "which way": the same {BF_ROUNDS}
-    Bellman-Ford rounds additionally carry a PREDECESSOR per node
-    (per-round argmin by (dist, pred) — deterministic because
+    Bellman-Ford rounds additionally yield a PREDECESSOR per node
+    (the oracle's per-round argmin by (dist, pred), which equals one
+    argmin over the last round's candidates — deterministic because
     candidate distances are path-ordered float sums both engines
     compute identically, ties broken by pred id), then a fixed
     {WALK_STEPS}-step pred walk prepends node ids into the route
@@ -666,53 +679,29 @@ def q_route_reconstruct(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing next to the relaxation shuffles. The whole walk — state,
     prepends, hop counts — is hash-verified against the unrolled SQL
     twin."""
-    sim = co_service_sim(spark, sf_dir)
-    w = (F.lit(1.0) / F.col("common_cust")).alias("w")
-
-    def build_ew() -> DataFrame:
-        return sim.select(F.col("s1").alias("src"), F.col("s2").alias("dst"), w).unionByName(
-            sim.select(F.col("s2").alias("src"), F.col("s1").alias("dst"), w)
-        )
-
-    ew = shared_frame(spark, sf_dir, "co_service_ew", build_ew)
-    src1 = cust_supp(spark, sf_dir).agg(F.min("supp").alias("src_node"))
+    src1, relax, _ = _bf_relax(spark, sf_dir)
+    # The oracle's per-round argmin by (dist, pred) ends at the argmin
+    # over the LAST round's candidates plus the source row: a node's
+    # state was proposed by some u from an earlier, never smaller
+    # dist(u), and IEEE addition is monotone, so u's last-round
+    # candidate is ≤ that state in (dist, pred) order; the source
+    # keeps (0, itself) because every weight is positive. So one
+    # argmin aggregate replaces one per round.
+    src_row = src1.select(
+        F.col("src_node").alias("node"), F.lit(0.0).alias("dist"), F.col("src_node").alias("pred")
+    )
+    # the pred walk below re-reads the final state 7x (6 broadcast
+    # steps + the walk spine), so it checkpoints once; node-sized
+    # state, many tiny stages: fewer partitions beat per-task
+    # overhead (the q_pagerank coalesce rationale)
     state = (
-        src1.select(
-            F.col("src_node").alias("node"),
-            F.lit(0.0).alias("dist"),
-            F.col("src_node").alias("pred"),
-        )
+        relax.unionByName(src_row)
+        .groupBy("node")
+        .agg(F.min(F.struct("dist", "pred")).alias("b"))
+        .select("node", "b.dist", "b.pred")
+        .coalesce(4)
         .localCheckpoint()
     )
-    # argmin rounds compose lazily without changing the arithmetic
-    # (the q_cheapest_route trick) — r16 fuses the whole 4-round
-    # horizon into one DAG, checkpoint cadence conf'd for longer
-    # horizons at scale. The per-round broadcast(state) hint was
-    # measured and REJECTED (≈0.7 s worse at sf0.1): it materializes
-    # the fused relaxation chain on the driver per round, while the
-    # AQE-coalesced sort-merge join of node-sized frames is free.
-    cadence = int(spark.conf.get("spark.rtfril.graph.ckpt.rounds", "4"))
-    for r in range(BF_ROUNDS):
-        relax = state.join(ew, state.node == ew.src).select(
-            F.col("dst").alias("node"),
-            (F.col("dist") + F.col("w")).alias("dist"),
-            state.node.alias("pred"),
-        )
-        state = (
-            state.unionByName(relax)
-            .groupBy("node")
-            .agg(F.min(F.struct("dist", "pred")).alias("b"))
-            .select("node", "b.dist", "b.pred")
-        )
-        if (r + 1) % cadence == 0 or (r + 1) == BF_ROUNDS:
-            # final state always checkpoints: the pred walk below
-            # re-reads it 7x (6 broadcast steps + the walk spine).
-            # node-sized state, many tiny stages: fewer partitions
-            # beat per-task overhead (the q_pagerank coalesce rationale)
-            state = state.coalesce(4).localCheckpoint()
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import note_dropped_checkpoints
-
-    note_dropped_checkpoints(state.sparkSession)  # per-round checkpoints dropped
     pm = state.select(F.col("node").alias("cn"), F.col("pred").alias("cp"))
     walk = state.crossJoin(F.broadcast(src1)).select(
         "node",

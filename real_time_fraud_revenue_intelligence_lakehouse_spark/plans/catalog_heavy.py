@@ -19,6 +19,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars impo
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import (
     cust_supp,
+    note_dropped_checkpoints,
     shared_frame,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
@@ -216,6 +217,15 @@ PR_DAMP = 0.85
 # sums; a raw double sum would depend on partition order).
 _C14 = "cast({x} as decimal(28,14))"
 
+#: Hash-partition count of the resident trade edge tables (by dst).
+#: ClusteredDistribution is satisfied by ANY hash-partition count on
+#: dst, so the per-round groupBy(dst) skips its Exchange at 8 just as
+#: at 32 — and the node-sized rounds then run 8 tasks instead of 32
+#: mostly-empty ones (measured q_pagerank 4.07 s at 32). On a cluster
+#: the analog is the edge table's bucket count, never the local core
+#: count.
+EDGE_PARTS = 8
+
 
 def _pr_oracle() -> str:
     its = []
@@ -271,31 +281,28 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     end, and the per-round shuffles reuse the same (node) partitioning.
     At 100 TB: localCheckpoint every ~5 rounds to cap lineage (the
     dup_clusters pattern), keep edges bucketed by src."""
-    edges, nodes, stats, deg, ranks = _trade_graph(spark, sf_dir)
+    edges = _trade_graph(spark, sf_dir)
     # r16 (guide §2.4/§1.2): collect |nodes| once, prejoin outdeg
     # once, checkpoint round-0 ranks — each round is then one BHJ +
     # one agg over the dst-partitioned resident edges with NO
-    # stats/nodes subtree re-execution and (thanks to the partitioned
-    # persist) no per-round Exchange. 23 → 10 jobs, same output hash.
-    n = stats.first()["n"]
-    e2 = edges.join(F.broadcast(deg.withColumnRenamed("node", "src")), "src")
-    ranks = nodes.select(
-        "node", F.lit(1.0 / n if n else 0.0).alias("rank")
-    ).localCheckpoint()
+    # stats/nodes subtree re-execution. 23 → 10 jobs, same output hash.
+    e2 = _with_outdeg(edges)
+    n, ranks = _pr_start(edges)
     for _ in range(PR_ITERS):
-        ranks = _pr_round(e2, n, deg, ranks)
+        ranks = _pr_round(e2, n, ranks)
     return ranks.select("node", det_round(F.col("rank"), 8).alias("pagerank"))
 
 
-def _trade_graph(spark, sf_dir, year: int | None = None):
-    """Bidirectional supplier↔customer trade graph + PageRank round-0
-    state (edges materialized once per process via shared_frames —
-    PageRank, its convergence twin, and BFS all iterate over the same
-    table, and within one query the distinct-pair join feeds every
-    round plus deg/nodes/stats). ``year`` restricts to one order year
-    (partition-prunable at scale) for the convergence variant's
-    smaller per-round scans; the unfiltered graph derives from the
-    shared cust_supp distinct instead of re-joining the facts."""
+def _trade_graph(spark, sf_dir, year: int | None = None) -> DataFrame:
+    """Bidirectional supplier↔customer trade graph (src, dst),
+    materialized once per process via shared_frames — PageRank, its
+    convergence twin, personalized PageRank and BFS all iterate over
+    the same table, and within one query the distinct-pair join feeds
+    every round plus the outdegrees and the node set. ``year``
+    restricts to one order year (partition-prunable at scale) for the
+    convergence variant's smaller per-round scans; the unfiltered
+    graph derives from the shared cust_supp distinct instead of
+    re-joining the facts."""
 
     def build_edges() -> DataFrame:
         if year is None:
@@ -324,60 +331,57 @@ def _trade_graph(spark, sf_dir, year: int | None = None):
         # but at bench scale the InMemoryRelation re-scan per round
         # measured SLOWER than the checkpointed RDD + one tiny
         # AQE-coalesced exchange per round (pagerank 2.3 s checkpoint
-        # vs 2.5-3.0 s persist; PPR likewise) — so checkpoint is the
-        # default and the conf flips it where the no-Exchange layout
-        # wins (the 100 TB analog is a dst-bucketed edge table, where
-        # it always does; q_pagerank_converge's 40-round table keeps
-        # persist for exactly that reason).
-        # Partition count: ClusteredDistribution is satisfied by ANY
-        # hash-partition count on dst, so the per-round groupBy(dst)
-        # skips its Exchange at 8 just as at 32 — and the node-sized
-        # rounds then run 8 tasks instead of 32 mostly-empty ones
-        # (the q_pagerank_converge table already used 8; measured
-        # q_pagerank 4.07 s at 32 vs 2.6x baseline-neutral at 8).
-        # On a cluster the analog is the edge table's bucket count —
-        # surfaced as a conf, never the local core count.
-        n_parts = int(spark.conf.get("spark.rtfril.graph.edge.partitions", "8"))
+        # vs 2.5-3.0 s persist; PPR likewise) — so this table keeps
+        # the default checkpoint storage (the 100 TB analog is a
+        # dst-bucketed edge table, where the no-Exchange layout always
+        # wins; q_pagerank_converge's 40-round table persists for
+        # exactly that reason).
         return (
             pairs.select(F.col("s_node").alias("src"), F.col("c_node").alias("dst"))
             .unionByName(pairs.select(F.col("c_node").alias("src"), F.col("s_node").alias("dst")))
-            .repartition(n_parts, "dst")
+            .repartition(EDGE_PARTS, "dst")
         )
 
-    storage = spark.conf.get("spark.rtfril.graph.edge.storage", "checkpoint")
-    edges = shared_frame(spark, sf_dir, f"trade_edges_{year}", build_edges, storage=storage)
+    return shared_frame(spark, sf_dir, f"trade_edges_{year}", build_edges)
+
+
+def _with_outdeg(edges: DataFrame) -> DataFrame:
+    """``edges`` with each src's out-degree prejoined as ``outdeg``
+    (one |nodes|-sized broadcast, once per query, not per round)."""
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+    return edges.join(F.broadcast(deg), "src")
+
+
+def _pr_start(edges: DataFrame) -> tuple[int, DataFrame]:
+    """PageRank round 0: the node count, collected once (the
+    sanctioned tiny scalar collect, the select_kth/IVF-centroid
+    class), and the uniform 1/n ranks behind a localCheckpoint so no
+    round re-executes the nodes-distinct subtree."""
     nodes = edges.select(F.col("src").alias("node")).distinct()
-    stats = nodes.agg(F.count(F.lit(1)).alias("n"))
-    deg = edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("outdeg"))
-    ranks = nodes.crossJoin(F.broadcast(stats)).select(
-        "node", (F.lit(1.0) / F.col("n")).alias("rank")
-    )
-    return edges, nodes, stats, deg, ranks
+    n = nodes.agg(F.count(F.lit(1)).alias("n")).first()["n"]
+    ranks = nodes.select("node", F.lit(1.0 / n if n else 0.0).alias("rank"))
+    return n, ranks.localCheckpoint()
 
 
-def _pr_round(edges, stats, deg, ranks, damp: float = PR_DAMP, teleport: float = 0.15):
-    """One PageRank power-iteration round. Ranks and degrees are
-    |nodes|-sized (≪ edges) — broadcast both so each round is one scan
-    of the resident edge table plus a partial-agg shuffle of
-    (dst, contribution) pairs; contributions quantize through
-    decimal(28,14) for layout-independent sums. ``teleport`` is passed
-    as its own literal (not computed as 1-damp) because 1.0-0.85
-    differs from the literal 0.15 in the last ulp — and the oracle
-    hash sees that ulp.
+def _pr_round(edges, n: int, ranks, damp: float = PR_DAMP, teleport: float = 0.15):
+    """One PageRank power-iteration round over ``edges`` with
+    ``outdeg`` prejoined (:func:`_with_outdeg`) and the collected node
+    count ``n``. Ranks are |nodes|-sized (≪ edges) — broadcast so
+    each round is one scan of the resident edge table plus a
+    partial-agg shuffle of (dst, contribution) pairs; contributions
+    quantize through decimal(28,14) for layout-independent sums.
+    ``teleport`` is passed as its own literal (not computed as
+    1-damp) because 1.0-0.85 differs from the literal 0.15 in the
+    last ulp — and the oracle hash sees that ulp.
 
-    r16: ``stats`` may be the node-count frame OR the collected int.
-    As an int the teleport term becomes ``lit(teleport)/lit(n)`` —
-    the same bigint→double division, bit-identical — and each round
-    drops the stats-subtree BroadcastNestedLoopJoin, whose
-    nodes-distinct lineage AQE re-ran as extra query-stage jobs per
-    action (measured on q_pagerank: 23 → 10 jobs, identical output
-    hash). Collecting one count per query is the sanctioned tiny
-    scalar collect (the select_kth/IVF-centroid class)."""
-    if "outdeg" not in edges.columns:
-        # prejoining deg once (q_pagerank_converge) skips this
-        # per-round broadcast; the division below is identical either
-        # way, so both forms produce the same bits.
-        edges = edges.join(F.broadcast(deg.withColumnRenamed("node", "src")), "src")
+    r16: the teleport term is the Python double ``teleport / n`` —
+    the same bigint→double division the per-row lit/col form ran,
+    bit-identical — so no round carries a node-count
+    BroadcastNestedLoopJoin, whose nodes-distinct lineage AQE re-ran
+    as extra query-stage jobs per action (measured on q_pagerank:
+    23 → 10 jobs, identical output hash). n == 0 (empty graph) is
+    guarded: the frame is rowless there, so the value is unreachable,
+    and a folded 0-division literal would raise."""
     contrib = (
         edges.join(F.broadcast(ranks.withColumnRenamed("node", "src")), "src")
         .select(
@@ -388,23 +392,10 @@ def _pr_round(edges, stats, deg, ranks, damp: float = PR_DAMP, teleport: float =
     agg = contrib.groupBy(F.col("dst").alias("node")).agg(
         F.sum("c").cast("double").alias("_s")
     )
-    if isinstance(stats, int):
-        # Python-side double division = the same IEEE op as the old
-        # per-row lit/col form; n == 0 (empty graph) is guarded — the
-        # frame is rowless there, so the value is unreachable, and a
-        # folded 0-division literal would raise where the per-row
-        # form never evaluated.
-        tele_n = teleport / stats if stats else 0.0
-        return agg.select(
-            "node",
-            (F.lit(tele_n) + F.lit(damp) * F.col("_s")).alias("rank"),
-        )
-    return (
-        agg.crossJoin(F.broadcast(stats))
-        .select(
-            "node",
-            (F.lit(teleport) / F.col("n") + F.lit(damp) * F.col("_s")).alias("rank"),
-        )
+    tele_n = teleport / n if n else 0.0
+    return agg.select(
+        "node",
+        (F.lit(tele_n) + F.lit(damp) * F.col("_s")).alias("rank"),
     )
 
 
@@ -502,7 +493,7 @@ def q_pagerank_converge(spark: SparkSession, sf_dir: str) -> DataFrame:
     year predicate — convergence semantics unchanged), and outdegrees
     prejoin into the resident edge table ONCE instead of
     re-broadcasting every round."""
-    base_edges, nodes, stats, deg, ranks = _trade_graph(spark, sf_dir, year=PR_CONV_YEAR)
+    base_edges = _trade_graph(spark, sf_dir, year=PR_CONV_YEAR)
     edges = shared_frame(
         spark,
         sf_dir,
@@ -513,25 +504,16 @@ def q_pagerank_converge(spark: SparkSession, sf_dir: str) -> DataFrame:
         # persisted so every round's groupBy(dst) reuses the layout —
         # zero per-round Exchange (guide §2.4; the bucketed-edge
         # layout SCALE.md already argues for at 100 TB).
-        lambda: base_edges.join(
-            F.broadcast(deg.withColumnRenamed("node", "src")), "src"
-        ).repartition(8, "dst"),
+        lambda: _with_outdeg(base_edges).repartition(EDGE_PARTS, "dst"),
         storage="persist",
     )
-    # r16: node count as a collected literal (see _pr_round) — drops
-    # the per-round stats BNLJ and its nodes-distinct re-execution.
-    n = stats.first()["n"]
-    ranks = nodes.select(
-        "node", F.lit(1.0 / n if n else 0.0).alias("rank")
-    ).localCheckpoint()
+    n, ranks = _pr_start(base_edges)
     done = 0
     converged = False
     while done < PR_MAX_ITERS:
         new_ranks = ranks
         for _ in range(PR_CHECK_EVERY):
-            new_ranks = _pr_round(
-                edges, n, deg, new_ranks, PR_CONV_DAMP, teleport=0.5
-            )
+            new_ranks = _pr_round(edges, n, new_ranks, PR_CONV_DAMP, teleport=0.5)
         new_ranks = new_ranks.localCheckpoint()
         done += PR_CHECK_EVERY
         delta = (
@@ -545,8 +527,6 @@ def q_pagerank_converge(spark: SparkSession, sf_dir: str) -> DataFrame:
         if delta is not None and delta < PR_EPS:
             converged = True
             break
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import note_dropped_checkpoints
-
     note_dropped_checkpoints(spark)  # per-round checkpoints dropped above
     return ranks.select(
         "node",
@@ -834,7 +814,7 @@ def q_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     visited set grows monotonically and anti-joins shuffle-free while
     it broadcasts; distances are small ints, so BFS traffic is
     ids-only."""
-    edges, _nodes, _stats, _deg, _ranks = _trade_graph(spark, sf_dir)
+    edges = _trade_graph(spark, sf_dir)
     o = read_table(spark, sf_dir, "orders")
     seed = o.agg(F.min("o_custkey").alias("node")).select(
         "node", F.lit(0).alias("dist")
@@ -982,8 +962,6 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(HITS_ITERS):
         auth = half_round(hub, "src", "dst")
         hub = half_round(auth, "dst", "src")
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import note_dropped_checkpoints
-
     note_dropped_checkpoints(spark)  # per-half-round raw checkpoints dropped above
     out_hub = hub.select("node", F.lit("hub").alias("role"), det_round(F.col("score"), 8).alias("score"))
     out_auth = auth.select("node", F.lit("authority").alias("role"), det_round(F.col("score"), 8).alias("score"))
@@ -1059,7 +1037,7 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep their teleport mass regardless. Nodes outside S start at
     rank 0 and are simply absent from r0 (identical join semantics
     both engines)."""
-    edges, nodes, stats, deg, _ = _trade_graph(spark, sf_dir)
+    edges = _trade_graph(spark, sf_dir)
     sup = read_table(spark, sf_dir, "supplier").filter(
         F.col("s_nationkey") == PPR_NATION
     )
@@ -1081,7 +1059,7 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = snodes.select(
         "node", F.lit(1.0 / sn if sn else 0.0).alias("rank")
     ).localCheckpoint()
-    e2 = edges.join(F.broadcast(deg.withColumnRenamed("node", "src")), "src")
+    e2 = _with_outdeg(edges)
     for _ in range(PR_ITERS):
         contrib = (
             e2.join(F.broadcast(ranks.withColumnRenamed("node", "src")), "src")

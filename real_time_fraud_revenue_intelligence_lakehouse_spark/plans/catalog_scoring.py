@@ -122,36 +122,10 @@ def q_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     contribution. Score terms and squared errors det-round then fold
     through decimals, so a probabilistic-calibration artifact
     hash-gates exactly. One feature join + one 10-group agg."""
-    from pyspark.sql import functions as F
-
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
-
     scored = registry._REGISTRY["q_fraud_scores"].fn(spark, sf_dir).select(
         "label", F.col("fraud_score").alias("s")
     )
-    b = scored.select(
-        F.least(F.floor(F.col("s") * 10), F.lit(9)).cast("long").alias("bin"),
-        "label",
-        "s",
-    )
-    sq = det_round((F.col("s") - F.col("label")) * (F.col("s") - F.col("label")), 8)
-    return b.groupBy("bin").agg(
-        F.count(F.lit(1)).alias("n"),
-        det_round(
-            F.sum(F.col("s").cast("decimal(28,6)")).cast("double") / F.count(F.lit(1)), 6
-        ).alias("mean_score"),
-        det_round(
-            F.sum("label").cast("double") / F.count(F.lit(1)), 6
-        ).alias("event_rate"),
-        det_round(
-            F.sum(F.col("s").cast("decimal(28,6)")).cast("double") / F.count(F.lit(1))
-            - F.sum("label").cast("double") / F.count(F.lit(1)),
-            6,
-        ).alias("calib_gap"),
-        det_round(
-            F.sum(sq.cast("decimal(28,8)")).cast("double") / F.count(F.lit(1)), 6
-        ).alias("brier"),
-    )
+    return _calibration_agg(scored)
 
 
 # --- distributed logistic-regression TRAINING (VERDICT r11 #1) --------------
@@ -348,6 +322,21 @@ def q_model_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _band_summary(scored: DataFrame) -> DataFrame:
+    """The train→apply tail over any (label, s) frame: 3-way risk
+    bands (ext/scoring.risk_label), per band the row count, the
+    decimal-folded mean score and the realized event rate."""
+    return scored.withColumn("risk_label", risk_label(F.col("s"))).groupBy("risk_label").agg(
+        F.count(F.lit(1)).alias("n"),
+        det_round(
+            F.sum(F.col("s").cast("decimal(28,6)")).cast("double") / F.count(F.lit(1)), 6
+        ).alias("mean_score"),
+        det_round(
+            F.sum("label").cast("double") / F.count(F.lit(1)), 6
+        ).alias("event_rate"),
+    )
+
+
 @query(
     "q_logreg_train_score",
     oracle=logreg_score_sql(_FV_SQL),
@@ -364,19 +353,7 @@ def q_logreg_train_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature frame; scoring is row-local inside codegen."""
     fv = _logreg_fv(spark, sf_dir)
     w, _n = _trained_weights(spark, sf_dir)
-    banded = fv.select(
-        "label",
-        trained_score_expr(w).alias("s"),
-    ).withColumn("risk_label", risk_label(F.col("s")))
-    return banded.groupBy("risk_label").agg(
-        F.count(F.lit(1)).alias("n"),
-        det_round(
-            F.sum(F.col("s").cast("decimal(28,6)")).cast("double") / F.count(F.lit(1)), 6
-        ).alias("mean_score"),
-        det_round(
-            F.sum("label").cast("double") / F.count(F.lit(1)), 6
-        ).alias("event_rate"),
-    )
+    return _band_summary(fv.select("label", trained_score_expr(w).alias("s")))
 
 
 # --- Naive Bayes trainer (counting-based; the non-iterative end) -------------
@@ -650,7 +627,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # no
     _r6,
     gbt_score_band_sql,
     gbt_train_sql,
-    gbt_trained_logit_expr,
+    gbt_trained_score_expr,
     train_gbt,
     tree_logit_raw,
 )
@@ -729,21 +706,7 @@ def q_gbt_train_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     NB = counting, k-means = centroids, GBT = trees)."""
     fv = _logreg_fv(spark, sf_dir)
     trees = _trained_gbt(spark, sf_dir)
-    s = det_round(
-        F.lit(1.0) / (F.lit(1.0) + F.exp(-gbt_trained_logit_expr(trees))), 6
-    )
-    banded = fv.select("label", s.alias("s")).withColumn(
-        "risk_label", risk_label(F.col("s"))
-    )
-    return banded.groupBy("risk_label").agg(
-        F.count(F.lit(1)).alias("n"),
-        det_round(
-            F.sum(F.col("s").cast("decimal(28,6)")).cast("double") / F.count(F.lit(1)), 6
-        ).alias("mean_score"),
-        det_round(
-            F.sum("label").cast("double") / F.count(F.lit(1)), 6
-        ).alias("event_rate"),
-    )
+    return _band_summary(fv.select("label", gbt_trained_score_expr(trees).alias("s")))
 
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # noqa: E402
@@ -886,10 +849,7 @@ def _card_row(spark: SparkSession, sf_dir: str):
     def build():
         fv = _logreg_fv(spark, sf_dir)
         trees = _trained_gbt(spark, sf_dir)
-        s = det_round(
-            F.lit(1.0) / (F.lit(1.0) + F.exp(-gbt_trained_logit_expr(trees))), 6
-        )
-        scored = fv.select("label", s.alias("s"))
+        scored = fv.select("label", gbt_trained_score_expr(trees).alias("s"))
         return model_metrics(scored).collect()[0]
 
     return memo(spark, sf_dir, "model_card", build)
@@ -1005,11 +965,7 @@ def q_gbt_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled rounds then runs the identical sweep."""
     fv = _logreg_fv(spark, sf_dir)
     trees = _trained_gbt(spark, sf_dir)
-    s = det_round(
-        F.lit(1.0) / (F.lit(1.0) + F.exp(-gbt_trained_logit_expr(trees))), 6
-    )
-    scored = fv.select("label", s.alias("s"))
-    return logreg_roc(scored)
+    return logreg_roc(fv.select("label", gbt_trained_score_expr(trees).alias("s")))
 
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import (  # noqa: E402
@@ -1229,9 +1185,7 @@ def _shap_band_means(
     fitted booster — the q_gbt_shap / q_gbt_shap_deep artifact."""
     fv = _logreg_fv(spark, sf_dir)
     phis = _shap_phi_columns(spark, sf_dir, fv, trees, key)
-    s = det_round(
-        F.lit(1.0) / (F.lit(1.0) + F.exp(-gbt_trained_logit_expr(trees))), 6
-    )
+    s = gbt_trained_score_expr(trees)
     scored = fv.select(risk_label(s).alias("risk_label"), *phis)
     # unpivot the φ6 columns to (risk_label, feature, p6) and roll up
     pairs = ", ".join(f"'{f}', phi6_{f}" for f in SCORE_FEATURES)
@@ -1303,9 +1257,7 @@ def q_gbt_shap_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     fv = _logreg_fv(spark, sf_dir)
     trees = _trained_gbt(spark, sf_dir)
     phis = _shap_phi_columns(spark, sf_dir, fv, trees, "shap_covers")
-    s = det_round(
-        F.lit(1.0) / (F.lit(1.0) + F.exp(-gbt_trained_logit_expr(trees))), 6
-    )
+    s = gbt_trained_score_expr(trees)
     # stage the |φ| array as ONE computed column (the q_kmeans
     # staged-argmin discipline): argmax/element_at then read the
     # staged value instead of re-expanding the φ columns 3x each
@@ -1365,10 +1317,6 @@ def q_retrain_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
-        gbt_trained_logit_expr,
-        train_gbt,
-    )
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.model_registry import (
         QUALITY_GATES,
         gbt_doc,
@@ -1383,11 +1331,7 @@ def q_retrain_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — the final model train.py ships.
     def build():
         trees = train_gbt(fv, rounds=rounds, eta=eta, lam=lam)
-        s = det_round(
-            F.lit(1.0)
-            / (F.lit(1.0) + F.exp(-gbt_trained_logit_expr(trees, eta=eta))),
-            6,
-        )
+        s = gbt_trained_score_expr(trees, eta=eta)
         card = model_metrics(fv.select("label", s.alias("s"))).collect()[0]
         return (trees, card)
 
@@ -1501,7 +1445,5 @@ def q_gbt_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical tail."""
     fv = _logreg_fv(spark, sf_dir)
     trees = _trained_gbt(spark, sf_dir)
-    s = det_round(
-        F.lit(1.0) / (F.lit(1.0) + F.exp(-gbt_trained_logit_expr(trees))), 6
-    )
+    s = gbt_trained_score_expr(trees)
     return _calibration_agg(fv.select("label", s.alias("s")))

@@ -16,7 +16,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import gbt_trained_logit_expr
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
+    gbt_trained_logit_expr,
+    gbt_trained_score_expr,
+)
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_cv import (
     GBT_MS_CONFIGS,
     cv_mean,
@@ -34,9 +37,9 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import _loss_expr
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_scoring import (
     _FV_SQL,
+    _band_summary,
     _logreg_fv,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
@@ -134,26 +137,7 @@ def q_gbt_deep_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end (q_gbt_train_score's shape, one level deeper)."""
     fv = _logreg_fv(spark, sf_dir)
     trees = _trained_deep(spark, sf_dir)
-    s = det_round(
-        F.lit(1.0) / (F.lit(1.0) + F.exp(-gbt_trained_logit_expr(trees))), 6
-    )
-    banded = fv.select("label", s.alias("s")).withColumn(
-        "risk_label",
-        F.when(F.col("s") >= 0.7, "high")
-        .when(F.col("s") >= 0.4, "medium")
-        .otherwise("low"),
-    )
-    return banded.groupBy("risk_label").agg(
-        F.count(F.lit(1)).alias("n"),
-        det_round(
-            F.sum(F.col("s").cast("decimal(28,6)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("mean_score"),
-        det_round(F.sum("label").cast("double") / F.count(F.lit(1)), 6).alias(
-            "event_rate"
-        ),
-    )
+    return _band_summary(fv.select("label", gbt_trained_score_expr(trees).alias("s")))
 
 
 @query(

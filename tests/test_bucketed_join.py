@@ -82,7 +82,13 @@ def test_bucketed_edges_make_graph_round_exchange_free_on_edge_side(
 
     from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_heavy import _trade_graph
 
-    edges, nodes, stats, deg, ranks = _trade_graph(spark, sf_dir)
+    edges = _trade_graph(spark, sf_dir)
+    # PageRank round-0 state: uniform 1/|nodes| ranks and out-degrees
+    nodes = edges.select(F.col("src").alias("node")).distinct()
+    ranks = nodes.crossJoin(
+        F.broadcast(nodes.agg(F.count(F.lit(1)).alias("n")))
+    ).select("node", (F.lit(1.0) / F.col("n")).alias("rank"))
+    deg = edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("outdeg"))
     spark.sql("DROP TABLE IF EXISTS trade_edges_bkt")
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     shutil.rmtree(f"{wh}/trade_edges_bkt", ignore_errors=True)

@@ -414,9 +414,29 @@ def test_star_cc_equals_label_propagation(spark, sf_dir):
     min-id cluster labels, same sizes)."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(F.col("doc_id") % 2 == 0)
     a = sorted(tuple(r) for r in D.dup_clusters(d, "doc_id", "text", threshold=0.5).collect())
-    b = sorted(tuple(r) for r in D.dup_clusters_star(d, "doc_id", "text", threshold=0.5).collect())
+    pairs = D.minhash_lsh_pairs(d, "doc_id", "text", threshold=0.5).select("id_a", "id_b")
+    labels = D.connected_components_star(pairs)
+    sizes = labels.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("cluster_size"))
+    star = labels.join(sizes, "cluster_id").select(
+        F.col("node").alias("doc_id"), "cluster_id", "cluster_size"
+    )
+    b = sorted(tuple(r) for r in star.collect())
     assert a == b
     assert len(a) > 0
+
+
+def test_dup_clusters_notes_dropped_checkpoints(spark):
+    """dup_clusters drops a localCheckpoint every propagation round,
+    so it must register its session for clear_cache's GC nudge (the
+    contract every other iterative loop keeps)."""
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.plans import shared_frames
+
+    base = " ".join(f"w{i}" for i in range(40))
+    df = _docs(spark, [(1, base), (2, base + " extra"), (3, "unrelated text entirely")])
+    shared_frames.clear_cache()
+    assert spark.sparkContext.applicationId not in shared_frames._ITER_CONTEXTS
+    D.dup_clusters(df, "doc_id", "text", threshold=0.5).collect()
+    assert spark.sparkContext.applicationId in shared_frames._ITER_CONTEXTS
 
 
 def test_star_cc_handles_deep_chain(spark):

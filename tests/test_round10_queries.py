@@ -140,3 +140,12 @@ def test_route_reconstruct_paths_are_valid_walks(spark):
                 assert (a, b) in edges, (r["node"], a, b)
     # the unroll horizon must cover essentially the whole frontier
     assert n_complete >= 0.95 * len(rows)
+
+
+def test_cheapest_route_and_route_reconstruct_agree_on_every_dist(spark):
+    """Both queries read one Bellman-Ford relaxation: the two reach
+    the same node set, and every node's dist is the same double."""
+    cheap = {r["node"]: r["dist"] for r in _q("q_cheapest_route")(spark, SF_SMOKE).collect()}
+    route = {r["node"]: r["dist"] for r in _q("q_route_reconstruct")(spark, SF_SMOKE).collect()}
+    assert cheap
+    assert cheap == route

@@ -138,13 +138,16 @@ def test_pagerank_converge_is_a_fixpoint(spark):
         PR_CONV_YEAR,
         PR_EPS,
         _pr_round,
+        _pr_start,
         _trade_graph,
+        _with_outdeg,
     )
 
     out = _q("q_pagerank_converge")(spark, SF_SMOKE)
-    edges, nodes, stats, deg, _ = _trade_graph(spark, SF_SMOKE, year=PR_CONV_YEAR)
+    edges = _trade_graph(spark, SF_SMOKE, year=PR_CONV_YEAR)
+    n, _ = _pr_start(edges)
     ranks = out.select("node", F.col("pagerank").alias("rank"))
-    nxt = _pr_round(edges, stats, deg, ranks, PR_CONV_DAMP, teleport=0.5)
+    nxt = _pr_round(_with_outdeg(edges), n, ranks, PR_CONV_DAMP, teleport=0.5)
     moved = (
         nxt.join(ranks.withColumnRenamed("rank", "_old"), "node")
         .agg(F.max(F.abs(F.col("rank") - F.col("_old"))).alias("d"))
@@ -166,17 +169,20 @@ def test_pagerank_converge_matches_long_unrolled_run(spark):
         PR_CONV_DAMP,
         PR_CONV_YEAR,
         _pr_round,
+        _pr_start,
         _trade_graph,
+        _with_outdeg,
     )
 
     b = {
         r["node"]: r["pagerank"]
         for r in _q("q_pagerank_converge")(spark, SF_SMOKE).collect()
     }
-    edges, nodes, stats, deg, ranks = _trade_graph(spark, SF_SMOKE, year=PR_CONV_YEAR)
-    ranks = ranks.localCheckpoint()
+    edges = _trade_graph(spark, SF_SMOKE, year=PR_CONV_YEAR)
+    n, ranks = _pr_start(edges)
+    e2 = _with_outdeg(edges)
     for i in range(25):
-        ranks = _pr_round(edges, stats, deg, ranks, PR_CONV_DAMP, teleport=0.5)
+        ranks = _pr_round(e2, n, ranks, PR_CONV_DAMP, teleport=0.5)
         if i % 5 == 4:
             ranks = ranks.localCheckpoint()
     a = {r["node"]: r["rank"] for r in ranks.collect()}

@@ -28,6 +28,16 @@ TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()
 )
 
+#: DuckDB buffer-manager cap for the oracle connection (DuckDB's own
+#: default is 80% of RAM). 4 GB is the smallest whole-GB cap under
+#: which every sf0.01 oracle still runs: at 3 GB q_route_reconstruct
+#: fails with "Out of Memory Error", at 2 GB so does
+#: q_model_selection_cv_full. The cap bounds only buffer-managed
+#: memory. The process peak (about 8 GB, reached on the 456 KB
+#: q_model_selection_cv_full oracle) lies mostly outside it: a 1.8 GiB
+#: cap still peaked at 7.8 GB.
+DUCKDB_MEMORY_LIMIT = "4GB"
+
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     """Sort columns by name, normalize cell values, sort rows."""
@@ -125,7 +135,7 @@ def main() -> int:
     from real_time_fraud_revenue_intelligence_lakehouse_spark.session import get_spark
 
     spark = get_spark("selfcheck")
-    con = duckdb.connect()
+    con = duckdb.connect(config={"memory_limit": DUCKDB_MEMORY_LIMIT})
     for t in TABLES:
         p = Path(args.sf) / f"{t}.parquet"
         if p.exists():
