@@ -74,7 +74,13 @@ from pyspark.sql import functions as F
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import _x_expr, _x_sql
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
+    H60_OK_SQL,
+    MICRO,
+    R6_SQL,
+    det_round,
+    r6,
+)
 
 #: Fixed hyper-parameters — part of the query's identity (the oracle
 #: unrolls exactly this many rounds at exactly this shrinkage).
@@ -87,14 +93,6 @@ GBT_ROUNDS = 3
 GBT_BINS = 16
 GBT_LAMBDA = 1.0
 GBT_ETA = 0.3
-
-_MICRO = 1_000_000.0
-_R6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
-
-
-def _r6(x: float) -> float:
-    return math.floor(x * 1e6 + 0.5) / 1e6
-
 
 def _bin_expr(f: str, scales: dict[str, float] | None, bins: int) -> Column:
     """least(greatest(floor(x_scaled·B), 0), B−1) — identical text in
@@ -373,7 +371,7 @@ def _rank_sum_aucs(scored: DataFrame, keys: tuple[str, ...]) -> dict:
             else (float(r["rank_sum"]) - float(n_pos) * (n_pos + 1) / 2)
             / (float(n_pos) * n_neg)
         )
-        out[tuple(r[k] for k in keys)] = _r6(raw)
+        out[tuple(r[k] for k in keys)] = r6(raw)
     return out
 
 
@@ -533,7 +531,7 @@ def _descend(
                 # rows (see _binned_frame) — sums stay exact integers
                 for name, v in ((f"gm_{m}", g), (f"hm_{m}", h)):
                     cols.append(
-                        (F.floor(v * F.lit(_MICRO) + F.lit(0.5)).cast("long")
+                        (F.floor(v * F.lit(MICRO) + F.lit(0.5)).cast("long")
                          * F.col("__cnt")).alias(name)
                     )
             work = staged.select(*cols).persist()
@@ -778,7 +776,7 @@ def _gbt_ctes(
     wgt = "(CASE WHEN label = 1 THEN (n0 / n1) ELSE 1.0 END)"
     b_star = ", ".join(f"b_{f}" for f in features)
     for t in range(1, rounds + 1):
-        p = _R6.format(c="1.0 / (1.0 + exp(-f))")
+        p = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
         gc = f"(({p}) - CAST(label AS DOUBLE))"
         hc = f"(({p}) * (1.0 - ({p})))"
         if weighted:
@@ -940,7 +938,7 @@ def gbt_train_sql(
     tree_sels = []
     for t in range(1, rounds + 1):
         w = lambda node, side: (  # noqa: E731
-            f"(SELECT {_R6.format(c='w')} FROM leafw{t} "
+            f"(SELECT {R6_SQL.format(c='w')} FROM leafw{t} "
             f"WHERE node = {node} AND side = {side})"
         )
         tree_sels.append(
@@ -982,7 +980,7 @@ def gbt_importance_sql(
         arms.append(f"SELECT fidx, gain FROM best2_{t}")
     splits = " UNION ALL ".join(arms)
     fvals = ", ".join(f"({i}, '{f}')" for i, f in enumerate(features))
-    g6 = _R6.format(c="s.gain")
+    g6 = R6_SQL.format(c="s.gain")
     return f"""WITH {ctes},
     splits AS ({splits})
     SELECT fe.fname AS feature,
@@ -1009,10 +1007,10 @@ def gbt_learning_curve_sql(
     ctes, _ = _gbt_ctes(fv_sql, features, rounds, bins, lam, eta)
     arms = []
     for t in range(rounds + 1):
-        p = _R6.format(c="1.0 / (1.0 + exp(-f))")
+        p = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
         raw = f"CASE WHEN label = 1 THEN -ln({p}) ELSE -ln(1.0 - {p}) END"
-        l6 = _R6.format(c=raw)
-        mean = _R6.format(
+        l6 = R6_SQL.format(c=raw)
+        mean = R6_SQL.format(
             c=f"CAST(sum(CAST({l6} AS DECIMAL(18,6))) AS DOUBLE) / count(*)"
         )
         arms.append(
@@ -1038,7 +1036,7 @@ def gbt_roc_sql(
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import ROC_THRESHOLDS
 
     ctes, rows_k = _gbt_ctes(fv_sql, features, rounds, bins, lam, eta)
-    s = _R6.format(c="1.0 / (1.0 + exp(-f))")
+    s = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
     taus = ", ".join(f"({t!r})" for t in ROC_THRESHOLDS)
     return f"""WITH {ctes},
     scored AS (SELECT label, {s} AS s FROM {rows_k}),
@@ -1073,11 +1071,11 @@ def gbt_score_band_sql(
     unrolled rounds, score every row with the final ensemble logit,
     band 3-way, aggregate — the logreg_score_sql shape for trees."""
     ctes, rows_k = _gbt_ctes(fv_sql, features, rounds, bins, lam, eta)
-    s = _R6.format(c="1.0 / (1.0 + exp(-f))")
-    mean_s = _R6.format(
+    s = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
+    mean_s = R6_SQL.format(
         c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*)"
     )
-    rate = _R6.format(c="CAST(sum(label) AS DOUBLE) / count(*)")
+    rate = R6_SQL.format(c="CAST(sum(label) AS DOUBLE) / count(*)")
     return f"""WITH {ctes},
     scored AS (SELECT label, {s} AS s FROM {rows_k}),
     banded AS (
@@ -1125,11 +1123,6 @@ def train_gbt_grid(
     extra config is ≤ 2·d·B more integer cells in the same map-side
     combine."""
     return _fit(fv, [_cfg(*c) for c in configs], features, bins, label, scales)
-
-
-
-
-_H60_OK = "('0x' || substr(md5(o_orderkey::VARCHAR), 1, 15))::BIGINT % 100"
 
 
 def _gbt_holdout_ctes(
@@ -1199,8 +1192,8 @@ def _gbt_ms_parts(
     the selection and retrain-best oracles."""
     parts = [
         f"base AS ({fv_sql})",
-        f"tr AS MATERIALIZED (SELECT * FROM base WHERE {_H60_OK} < 80)",
-        f"va AS MATERIALIZED (SELECT * FROM base WHERE {_H60_OK} >= 80)",
+        f"tr AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} < 80)",
+        f"va AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} >= 80)",
     ]
     loss_ctes = []
     for i, (_name, rounds, eta, lam) in enumerate(configs):
@@ -1211,9 +1204,9 @@ def _gbt_ms_parts(
         parts.append(ctes)
         hctes, hk = _gbt_holdout_ctes(p_, "va", features, rounds, bins, eta)
         parts.append(hctes)
-        p = _R6.format(c="1.0 / (1.0 + exp(-f))")
+        p = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
         raw = f"CASE WHEN label = 1 THEN -ln({p}) ELSE -ln(1.0 - {p}) END"
-        l6 = _R6.format(c=raw)
+        l6 = R6_SQL.format(c=raw)
         loss_ctes.append(f"{p_}loss")
         parts.append(
             f"{p_}loss AS (SELECT count(*) AS n, "
@@ -1221,7 +1214,7 @@ def _gbt_ms_parts(
         )
     joins = " ".join(f"CROSS JOIN {lc} v{i}" for i, lc in enumerate(loss_ctes[1:], 1))
     means = ", ".join(
-        f"{_R6.format(c=f'CAST(v{i}.L AS DOUBLE) / v{i}.n')} AS m_{i}"
+        f"{R6_SQL.format(c=f'CAST(v{i}.L AS DOUBLE) / v{i}.n')} AS m_{i}"
         for i in range(len(configs))
     )
     parts.append(f"m AS (SELECT {means} FROM {loss_ctes[0]} v0 {joins})")
@@ -1289,7 +1282,7 @@ def gbt_retrain_best_sql(
             "SELECT * FROM base", features, rounds, bins, lam, eta, prefix=p_
         )
         parts.append(ctes)
-        s = _R6.format(c="1.0 / (1.0 + exp(-f))")
+        s = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
         parts.append(f"{p_}scored AS (SELECT label, {s} AS s FROM {rk})")
         cctes, card = model_metrics_ctes(prefix=p_, scored_from=f"{p_}scored")
         parts.append(cctes)
@@ -1342,8 +1335,8 @@ def gbt_early_stop_sql(
     p_ = "es_"
     parts = [
         f"base AS ({fv_sql})",
-        f"tr AS MATERIALIZED (SELECT * FROM base WHERE {_H60_OK} < 80)",
-        f"va AS MATERIALIZED (SELECT * FROM base WHERE {_H60_OK} >= 80)",
+        f"tr AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} < 80)",
+        f"va AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} >= 80)",
     ]
     ctes, _rk = _gbt_ctes(
         "SELECT * FROM tr", features, rounds, bins, lam, eta, prefix=p_
@@ -1353,10 +1346,10 @@ def gbt_early_stop_sql(
     parts.append(hctes)
     arms = []
     for t in range(rounds + 1):
-        p = _R6.format(c="1.0 / (1.0 + exp(-f))")
+        p = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
         raw = f"CASE WHEN label = 1 THEN -ln({p}) ELSE -ln(1.0 - {p}) END"
-        l6 = _R6.format(c=raw)
-        mean = _R6.format(
+        l6 = R6_SQL.format(c=raw)
+        mean = R6_SQL.format(
             c=f"CAST(sum(CAST({l6} AS DECIMAL(18,6))) AS DOUBLE) / count(*)"
         )
         arms.append(
@@ -1411,8 +1404,8 @@ def gbt_early_stop_auc_sql(
     p_ = "esa_"
     parts = [
         f"base AS ({fv_sql})",
-        f"tr AS MATERIALIZED (SELECT * FROM base WHERE {_H60_OK} < 80)",
-        f"va AS MATERIALIZED (SELECT * FROM base WHERE {_H60_OK} >= 80)",
+        f"tr AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} < 80)",
+        f"va AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} >= 80)",
     ]
     ctes, _rk = _gbt_ctes(
         "SELECT * FROM tr", features, rounds, bins, lam, eta, prefix=p_
@@ -1420,7 +1413,7 @@ def gbt_early_stop_auc_sql(
     parts.append(ctes)
     hctes, _hk = _gbt_holdout_ctes(p_, "va", features, rounds, bins, eta)
     parts.append(hctes)
-    s6 = _R6.format(c="1.0 / (1.0 + exp(-f))")
+    s6 = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
     arms = [
         f"SELECT CAST({t} AS INTEGER) AS round, {s6} AS s, label "
         f"FROM {p_}hrows{t}"
@@ -1444,7 +1437,7 @@ def gbt_early_stop_auc_sql(
         "- CAST(n_pos AS DOUBLE) * (n_pos + 1) / 2)"
         " / (CAST(n_pos AS DOUBLE) * n_neg)"
     )
-    auc6 = _R6.format(
+    auc6 = R6_SQL.format(
         c=f"CASE WHEN n_pos = 0 OR n_neg = 0 THEN 0.0 ELSE {auc_raw} END"
     )
     parts.append(

@@ -49,7 +49,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
-    _R6,
     GBT_BINS,
     GBT_MS_CONFIGS,
     _binned_frame,
@@ -59,7 +58,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
     _gbt_ctes,
     _gbt_holdout_ctes,
     _models,
-    _r6,
     _rank_sum_aucs,
     _stack_scores,
 )
@@ -69,6 +67,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R6_SQL, r6
 
 CV_FOLDS = 3
 
@@ -148,7 +147,7 @@ def cv_mean(aucs: list[float]) -> float:
     s = 0.0
     for a in aucs:
         s = s + a
-    return _r6(s / float(len(aucs)))
+    return r6(s / float(len(aucs)))
 
 
 def gbt_cv_selection_sql(
@@ -184,7 +183,7 @@ def gbt_cv_selection_sql(
                 p_, f"va{f}", features, rounds, bins, eta
             )
             parts.append(hctes)
-            s6 = _R6.format(c="1.0 / (1.0 + exp(-f))")
+            s6 = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
             parts.append(
                 f"{p_}scored AS (SELECT label, {s6} AS s FROM {hk})"
             )
@@ -213,7 +212,7 @@ def gbt_cv_selection_sql(
                 "- CAST(n_pos AS DOUBLE) * (n_pos + 1) / 2)"
                 " / (CAST(n_pos AS DOUBLE) * n_neg)"
             )
-            auc6 = _R6.format(
+            auc6 = R6_SQL.format(
                 c=f"CASE WHEN n_pos = 0 OR n_neg = 0 THEN 0.0 ELSE {auc_raw} END"
             )
             parts.append(
@@ -226,7 +225,7 @@ def gbt_cv_selection_sql(
             f"(SELECT auc FROM {auc_names[(f, i)]})" for f in range(folds)
         )
         mean_cols.append(
-            f"{_R6.format(c=f'({terms}) / {float(folds)!r}')} AS cv_{i}"
+            f"{R6_SQL.format(c=f'({terms}) / {float(folds)!r}')} AS cv_{i}"
         )
     parts.append("m AS (SELECT " + ", ".join(mean_cols) + ")")
     vals = ", ".join(
@@ -336,7 +335,7 @@ def gbt_cv_selection_full_sql(
                 p_, f"va{f}", features, rounds, bins, eta, depth
             )
             parts.append(hctes)
-            s6 = _R6.format(c="1.0 / (1.0 + exp(-f))")
+            s6 = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
             parts.append(
                 f"{p_}scored AS (SELECT label, {s6} AS s FROM {hk})"
             )
@@ -365,7 +364,7 @@ def gbt_cv_selection_full_sql(
                 "- CAST(n_pos AS DOUBLE) * (n_pos + 1) / 2)"
                 " / (CAST(n_pos AS DOUBLE) * n_neg)"
             )
-            auc6 = _R6.format(
+            auc6 = R6_SQL.format(
                 c=f"CASE WHEN n_pos = 0 OR n_neg = 0 THEN 0.0 ELSE {auc_raw} END"
             )
             parts.append(
@@ -378,7 +377,7 @@ def gbt_cv_selection_full_sql(
             f"(SELECT auc FROM {auc_names[(f, i)]})" for f in range(folds)
         )
         mean_cols.append(
-            f"{_R6.format(c=f'({terms}) / {float(folds)!r}')} AS cv_{i}"
+            f"{R6_SQL.format(c=f'({terms}) / {float(folds)!r}')} AS cv_{i}"
         )
     parts.append("m AS (SELECT " + ", ".join(mean_cols) + ")")
     vals = ", ".join(

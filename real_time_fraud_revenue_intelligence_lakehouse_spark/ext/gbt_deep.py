@@ -54,8 +54,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # noqa: F401  (re-exports)
-    _H60_OK,
-    _R6,
     GBT_BINS,
     GBT_ETA,
     GBT_LAMBDA,
@@ -75,6 +73,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # no
     col_subset,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import H60_OK_SQL, R6_SQL
 
 #: The deep default: one level past ext/gbt.py, the floor of the
 #: reference's max_depth range (3-9). Deeper is the same machinery
@@ -199,7 +198,7 @@ def _gbt_deep_ctes(
     for t in range(1, rounds + 1):
         active = col_subset(features, t - 1, colsample)
         fidx_vals = ", ".join(f"({i})" for i in active)
-        p = _R6.format(c="1.0 / (1.0 + exp(-f))")
+        p = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
         gc = f"(({p}) - CAST(label AS DOUBLE))"
         hc = f"(({p}) * (1.0 - ({p})))"
         if pos_weight is not None:
@@ -375,8 +374,8 @@ def gbt_train_deep_sql(
     fname_case = " ".join(
         f"WHEN {i} THEN '{f}'" for i, f in enumerate(features)
     )
-    g6 = _R6.format(c="b.gain")
-    w6 = _R6.format(c="w")
+    g6 = R6_SQL.format(c="b.gain")
+    w6 = R6_SQL.format(c="w")
     arms = []
     for t in range(1, rounds + 1):
         for lvl in range(depth - 1):
@@ -416,11 +415,11 @@ def gbt_deep_score_sql(
     ctes, rows_k = _gbt_deep_ctes(
         fv_sql, features, rounds, bins, lam, eta, depth
     )
-    s = _R6.format(c="1.0 / (1.0 + exp(-f))")
-    mean_s = _R6.format(
+    s = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
+    mean_s = R6_SQL.format(
         c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*)"
     )
-    rate = _R6.format(c="CAST(sum(label) AS DOUBLE) / count(*)")
+    rate = R6_SQL.format(c="CAST(sum(label) AS DOUBLE) / count(*)")
     return f"""WITH {ctes},
     scored AS (SELECT label, {s} AS s FROM {rows_k}),
     banded AS (
@@ -546,8 +545,8 @@ def gbt_depth_selection_sql(
     with max_depth as a swept axis."""
     parts = [
         f"base AS ({fv_sql})",
-        f"tr AS MATERIALIZED (SELECT * FROM base WHERE {_H60_OK} < 80)",
-        f"va AS MATERIALIZED (SELECT * FROM base WHERE {_H60_OK} >= 80)",
+        f"tr AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} < 80)",
+        f"va AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} >= 80)",
     ]
     loss_ctes = []
     for i, (_name, rounds, eta, lam, depth) in enumerate(configs):
@@ -561,9 +560,9 @@ def gbt_depth_selection_sql(
             p_, "va", features, rounds, bins, eta, depth
         )
         parts.append(hctes)
-        p = _R6.format(c="1.0 / (1.0 + exp(-f))")
+        p = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
         raw = f"CASE WHEN label = 1 THEN -ln({p}) ELSE -ln(1.0 - {p}) END"
-        l6 = _R6.format(c=raw)
+        l6 = R6_SQL.format(c=raw)
         loss_ctes.append(f"{p_}loss")
         parts.append(
             f"{p_}loss AS (SELECT count(*) AS n, "
@@ -573,7 +572,7 @@ def gbt_depth_selection_sql(
         f"CROSS JOIN {lc} v{i}" for i, lc in enumerate(loss_ctes[1:], 1)
     )
     means = ", ".join(
-        f"{_R6.format(c=f'CAST(v{i}.L AS DOUBLE) / v{i}.n')} AS m_{i}"
+        f"{R6_SQL.format(c=f'CAST(v{i}.L AS DOUBLE) / v{i}.n')} AS m_{i}"
         for i in range(len(configs))
     )
     parts.append(f"m AS (SELECT {means} FROM {loss_ctes[0]} v0 {joins})")
@@ -675,8 +674,8 @@ def gbt_random_search_sql(
     configs = sampled_search_configs() if configs is None else configs
     parts = [
         f"base AS ({fv_sql})",
-        f"tr AS MATERIALIZED (SELECT * FROM base WHERE {_H60_OK} < 80)",
-        f"va AS MATERIALIZED (SELECT * FROM base WHERE {_H60_OK} >= 80)",
+        f"tr AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} < 80)",
+        f"va AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} >= 80)",
     ]
     auc_names: list[str] = []
     for i, (_name, rounds, eta, lam, depth) in enumerate(configs):
@@ -690,7 +689,7 @@ def gbt_random_search_sql(
             p_, "va", features, rounds, bins, eta, depth
         )
         parts.append(hctes)
-        s6 = _R6.format(c="1.0 / (1.0 + exp(-f))")
+        s6 = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
         parts.append(f"{p_}scored AS (SELECT label, {s6} AS s FROM {hk})")
         parts.append(
             f"{p_}grp AS (SELECT s, count(*) AS n, sum(label) AS np "
@@ -717,7 +716,7 @@ def gbt_random_search_sql(
             "- CAST(n_pos AS DOUBLE) * (n_pos + 1) / 2)"
             " / (CAST(n_pos AS DOUBLE) * n_neg)"
         )
-        auc6 = _R6.format(
+        auc6 = R6_SQL.format(
             c=f"CASE WHEN n_pos = 0 OR n_neg = 0 THEN 0.0 ELSE {auc_raw} END"
         )
         parts.append(f"{p_}auc AS (SELECT {auc6} AS auc FROM {p_}agg)")
@@ -823,8 +822,8 @@ def gbt_random_search_full_sql(
     configs = sampled_search_configs_full() if configs is None else configs
     parts = [
         f"base AS ({fv_sql})",
-        f"tr AS MATERIALIZED (SELECT * FROM base WHERE {_H60_OK} < 80)",
-        f"va AS MATERIALIZED (SELECT * FROM base WHERE {_H60_OK} >= 80)",
+        f"tr AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} < 80)",
+        f"va AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} >= 80)",
     ]
     auc_names: list[str] = []
     for i, (_nm, rounds, eta, lam, depth, sub, csam, mcw, alpha, spw) in enumerate(
@@ -843,7 +842,7 @@ def gbt_random_search_full_sql(
             p_, "va", features, rounds, bins, eta, depth
         )
         parts.append(hctes)
-        s6 = _R6.format(c="1.0 / (1.0 + exp(-f))")
+        s6 = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
         parts.append(f"{p_}scored AS (SELECT label, {s6} AS s FROM {hk})")
         parts.append(
             f"{p_}grp AS (SELECT s, count(*) AS n, sum(label) AS np "
@@ -870,7 +869,7 @@ def gbt_random_search_full_sql(
             "- CAST(n_pos AS DOUBLE) * (n_pos + 1) / 2)"
             " / (CAST(n_pos AS DOUBLE) * n_neg)"
         )
-        auc6 = _R6.format(
+        auc6 = R6_SQL.format(
             c=f"CASE WHEN n_pos = 0 OR n_neg = 0 THEN 0.0 ELSE {auc_raw} END"
         )
         parts.append(f"{p_}auc AS (SELECT {auc6} AS auc FROM {p_}agg)")

@@ -46,13 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
-
-_MICRO = 1_000_000.0
-_R6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
-
-
-def _r6(x: float) -> float:
-    return math.floor(x * _MICRO + 0.5) / _MICRO
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import MICRO, R6_SQL, r6
 
 
 def fit_standard_scaler(
@@ -70,12 +64,12 @@ def fit_standard_scaler(
         x = F.col(f).cast("double")
         aggs.append(
             F.sum(
-                F.floor(x * F.lit(_MICRO) + F.lit(0.5)).cast("decimal(38,0)")
+                F.floor(x * F.lit(MICRO) + F.lit(0.5)).cast("decimal(38,0)")
             ).alias(f"s_{f}")
         )
         aggs.append(
             F.sum(
-                F.floor(x * x * F.lit(_MICRO) + F.lit(0.5)).cast(
+                F.floor(x * x * F.lit(MICRO) + F.lit(0.5)).cast(
                     "decimal(38,0)"
                 )
             ).alias(f"q_{f}")
@@ -86,10 +80,10 @@ def fit_standard_scaler(
         raise ValueError("cannot fit a scaler on an empty feature frame")
     out: dict[str, tuple[float, float]] = {}
     for f in features:
-        mean = _r6(float(row[f"s_{f}"]) / _MICRO / n)
-        ex2 = _r6(float(row[f"q_{f}"]) / _MICRO / n)
-        var = _r6(ex2 - mean * mean)
-        sd = _r6(math.sqrt(var)) if var > 0.0 else 1.0
+        mean = r6(float(row[f"s_{f}"]) / MICRO / n)
+        ex2 = r6(float(row[f"q_{f}"]) / MICRO / n)
+        var = r6(ex2 - mean * mean)
+        sd = r6(math.sqrt(var)) if var > 0.0 else 1.0
         out[f] = (mean, sd)
     return out
 
@@ -134,16 +128,16 @@ def scaler_ctes(
     means = []
     for f in features:
         means.append(
-            f"{_R6.format(c=f'CAST(s_{f} AS DOUBLE) / 1000000.0 / n')} AS mu_{f}"
+            f"{R6_SQL.format(c=f'CAST(s_{f} AS DOUBLE) / 1000000.0 / n')} AS mu_{f}"
         )
         means.append(
-            f"{_R6.format(c=f'CAST(q_{f} AS DOUBLE) / 1000000.0 / n')} AS e2_{f}"
+            f"{R6_SQL.format(c=f'CAST(q_{f} AS DOUBLE) / 1000000.0 / n')} AS e2_{f}"
         )
     vars_ = [f"mu_{f}" for f in features] + [
-        f"{_R6.format(c=f'e2_{f} - mu_{f} * mu_{f}')} AS v_{f}" for f in features
+        f"{R6_SQL.format(c=f'e2_{f} - mu_{f} * mu_{f}')} AS v_{f}" for f in features
     ]
     stats = [f"mu_{f}" for f in features] + [
-        f"CASE WHEN v_{f} > 0.0 THEN {_R6.format(c=f'sqrt(v_{f})')} "
+        f"CASE WHEN v_{f} > 0.0 THEN {R6_SQL.format(c=f'sqrt(v_{f})')} "
         f"ELSE 1.0 END AS sd_{f}"
         for f in features
     ]

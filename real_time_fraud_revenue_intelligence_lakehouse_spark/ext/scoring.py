@@ -4,22 +4,22 @@ ML serving surface (`ml/serving/api.py:198-258`, SURVEY §3.4).
 The reference computes a 26-feature vector in Spark, then scores with
 XGBoost behind FastAPI (trained artifacts are out of scope for a
 query engine). The engine keeps the part that IS a query-engine
-concern: deterministic batch scoring over the feature table, in two
-interchangeable forms:
+concern: deterministic batch scoring over the feature table, with
+each model compiled to one Catalyst expression:
 
-- :func:`score_expr` — the scorer as a Catalyst expression
-  (logistic model, md5-seeded weights). Fully SQL-expressible, so the
-  DuckDB oracle checks it end-to-end; stays in whole-stage codegen.
-- :func:`score_pandas_udf` — the same model as an Arrow-vectorized
-  pandas UDF (NumPy). This is the integration seam where a real
-  XGBoost/sklearn `predict_proba` plugs in unchanged — the
-  reference's "~40× vectorized batch inference" pattern
-  (`README.md:329`) — with parity to the expression form asserted in
-  tests/test_scoring.py.
+- :func:`score_expr` — a logistic model with md5-seeded weights;
+- :func:`gbt_score_expr` — a depth-2 tree ensemble as nested CASE
+  expressions summed through a sigmoid.
 
-At 100 TB: scoring is row-local (narrow, no shuffle); the pandas-UDF
-path streams Arrow batches through one Python worker per core, so
-model inference parallelizes with the scan.
+Both are fully SQL-expressible, so the DuckDB oracle checks them
+end-to-end, and both stay in whole-stage codegen. A trained artifact
+takes the same route: `ext/model_registry.gbt_from_doc` reads a
+registry document and `streaming/scoring.compile_registry_model`
+compiles it to expressions, so no Python worker sits in the scoring
+path.
+
+At 100 TB: scoring is row-local (narrow, no shuffle) and rides the
+scan, so inference throughput is scan throughput.
 """
 
 from __future__ import annotations
@@ -27,8 +27,6 @@ from __future__ import annotations
 import hashlib
 import math
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -75,33 +73,12 @@ def risk_label(score: Column) -> Column:
     )
 
 
-def score_pandas_udf(features: tuple[str, ...] = SCORE_FEATURES):
-    """The same model via Arrow batches — swap the body for
-    `model.predict_proba(X)[:, 1]` to serve a real artifact."""
-    from pyspark.sql.functions import pandas_udf
-
-    ws = np.array([weight(f) for f in features])
-
-    @pandas_udf("double")
-    def _score(*cols: pd.Series) -> pd.Series:
-        X = np.column_stack([c.to_numpy(dtype=float) for c in cols])
-        z = BIAS + X @ ws
-        return pd.Series(1.0 / (1.0 + np.exp(-z)))
-
-    return _score
-
-
-def score_batch(features_df: DataFrame, use_pandas: bool = False) -> DataFrame:
+def score_batch(features_df: DataFrame) -> DataFrame:
     """Score a feature table → (keys passthrough, fraud_score,
     risk_label), rounded with the engine's portable formula."""
     from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
 
-    if use_pandas:
-        udf = score_pandas_udf()
-        raw = udf(*[F.col(f) for f in SCORE_FEATURES])
-    else:
-        raw = score_expr()
-    scored = features_df.withColumn("fraud_score", det_round(raw, 6))
+    scored = features_df.withColumn("fraud_score", det_round(score_expr(), 6))
     return scored.withColumn("risk_label", risk_label(F.col("fraud_score")))
 
 
@@ -145,7 +122,7 @@ def _seeded(tag: str, lo: float, hi: float) -> float:
 def tree_spec(t: int, features: tuple[str, ...] = SCORE_FEATURES) -> dict:
     """Depth-2 tree t: root split + two child splits + 4 leaf values.
     Pure function of (t, features) — the single source of truth for
-    the Spark expression, the pandas UDF, and the SQL oracle."""
+    the Spark expression and the SQL oracle."""
     n = len(features)
     f_root = features[int(hashlib.md5(f"t{t}:root".encode()).hexdigest()[:8], 16) % n]
     f_l = features[int(hashlib.md5(f"t{t}:l".encode()).hexdigest()[:8], 16) % n]
@@ -207,44 +184,12 @@ def gbt_sql(n_trees: int = N_TREES, features: tuple[str, ...] = SCORE_FEATURES) 
     return " + ".join(terms)
 
 
-def gbt_pandas_udf(n_trees: int = N_TREES, features: tuple[str, ...] = SCORE_FEATURES):
-    """Arrow-vectorized twin of :func:`gbt_score_expr` — the seam
-    where `xgboost.Booster.inplace_predict` (or any
-    `predict_batch_udf`-style artifact) plugs in unchanged; parity
-    with the expression form asserted in tests/test_scoring.py."""
-    from pyspark.sql.functions import pandas_udf
-
-    specs = [tree_spec(t, features) for t in range(n_trees)]
-    idx = {f: i for i, f in enumerate(features)}
-
-    @pandas_udf("double")
-    def _score(*cols: pd.Series) -> pd.Series:
-        X = np.column_stack([c.to_numpy(dtype=float) for c in cols])
-        z = np.full(len(X), float(GBT_BIAS))
-        for s in specs:
-            fr, tr = s["root"]
-            fl, tl = s["left"]
-            frr, trr = s["right"]
-            v = s["leaves"]
-            root = X[:, idx[fr]] < tr
-            left = np.where(X[:, idx[fl]] < tl, v[0], v[1])
-            right = np.where(X[:, idx[frr]] < trr, v[2], v[3])
-            z = z + np.where(root, left, right)
-        return pd.Series(1.0 / (1.0 + np.exp(-z)))
-
-    return _score
-
-
-def gbt_score_batch(features_df: DataFrame, use_pandas: bool = False) -> DataFrame:
+def gbt_score_batch(features_df: DataFrame) -> DataFrame:
     """Tree-ensemble batch scoring → (passthrough, fraud_score,
     risk_label); same lifecycle as :func:`score_batch`."""
     from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
 
-    if use_pandas:
-        raw = gbt_pandas_udf()(*[F.col(f) for f in SCORE_FEATURES])
-    else:
-        raw = gbt_score_expr()
-    scored = features_df.withColumn("fraud_score", det_round(raw, 6))
+    scored = features_df.withColumn("fraud_score", det_round(gbt_score_expr(), 6))
     return scored.withColumn("risk_label", risk_label(F.col("fraud_score")))
 
 

@@ -64,9 +64,9 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
     GBT_ROUNDS,
     _bin_expr,
     _gbt_ctes,
-    _R6,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R6_SQL
 
 #: The deepest tree the exact engine explains (128 branch patterns).
 MAX_SHAP_DEPTH = 3
@@ -299,8 +299,8 @@ def gbt_shap_sql(
     feature) over the full feature grid."""
     parts, _ = _shap_cte_parts(fv_sql, features, rounds, bins, lam, eta)
     fvals = ", ".join(f"({i}, '{f}')" for i, f in enumerate(features))
-    mean_phi = _R6.format(c="CAST(sum(p6) AS DOUBLE) / count(*) / 1000000.0")
-    mean_abs = _R6.format(c="CAST(sum(abs(p6)) AS DOUBLE) / count(*) / 1000000.0")
+    mean_phi = R6_SQL.format(c="CAST(sum(p6) AS DOUBLE) / count(*) / 1000000.0")
+    mean_abs = R6_SQL.format(c="CAST(sum(abs(p6)) AS DOUBLE) / count(*) / 1000000.0")
     cte_block = ",\n    ".join(parts)
     return f"""WITH {cte_block},
     grid AS (
@@ -419,7 +419,7 @@ def _shap_cte_parts(
         + " UNION ALL ".join(phi_arms)
         + ") GROUP BY 1, 2)"
     )
-    s = _R6.format(c="1.0 / (1.0 + exp(-f))")
+    s = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
     parts.append(
         f"banded AS MATERIALIZED (SELECT o_orderkey, "
         f"CASE WHEN {s} >= 0.7 THEN 'high' "
@@ -443,7 +443,7 @@ def gbt_shap_top_sql(
     feature) with the mean |φ| it carried when on top."""
     parts, _ = _shap_cte_parts(fv_sql, features, rounds, bins, lam, eta)
     fvals = ", ".join(f"({i}, '{f}')" for i, f in enumerate(features))
-    mean_abs = _R6.format(c="CAST(sum(abs(p6)) AS DOUBLE) / count(*) / 1000000.0")
+    mean_abs = R6_SQL.format(c="CAST(sum(abs(p6)) AS DOUBLE) / count(*) / 1000000.0")
     cte_block = ",\n    ".join(parts)
     return f"""WITH {cte_block},
     grid AS (

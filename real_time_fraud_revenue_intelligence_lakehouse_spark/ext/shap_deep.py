@@ -31,7 +31,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
     GBT_ETA,
     GBT_LAMBDA,
     GBT_ROUNDS,
-    _R6,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
     GBT_DEPTH,
@@ -39,6 +38,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.shap import shap_coef
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R6_SQL
 
 #: heap layout of a depth-3 tree
 INTERNAL = tuple(range(1, 8))  # nodes 1..7
@@ -201,7 +201,7 @@ def gbt_shap_deep_sql(
         + " UNION ALL ".join(phi_arms)
         + ") GROUP BY 1, 2)"
     )
-    s = _R6.format(c="1.0 / (1.0 + exp(-f))")
+    s = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
     parts.append(
         f"banded AS MATERIALIZED (SELECT o_orderkey, "
         f"CASE WHEN {s} >= 0.7 THEN 'high' "
@@ -209,8 +209,8 @@ def gbt_shap_deep_sql(
         f"FROM {rows_k})"
     )
     fvals = ", ".join(f"({i}, '{f}')" for i, f in enumerate(features))
-    mean_phi = _R6.format(c="CAST(sum(p6) AS DOUBLE) / count(*) / 1000000.0")
-    mean_abs = _R6.format(c="CAST(sum(abs(p6)) AS DOUBLE) / count(*) / 1000000.0")
+    mean_phi = R6_SQL.format(c="CAST(sum(p6) AS DOUBLE) / count(*) / 1000000.0")
+    mean_abs = R6_SQL.format(c="CAST(sum(abs(p6)) AS DOUBLE) / count(*) / 1000000.0")
     cte_block = ",\n    ".join(parts)
     return f"""WITH {cte_block},
     grid AS (

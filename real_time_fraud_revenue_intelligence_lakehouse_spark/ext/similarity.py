@@ -17,6 +17,19 @@ query only shuffles to its candidate partitions; the brute-force tier
 becomes a broadcast of the (small) query set against a bucketed scan.
 All arithmetic is double-precision with sequential folds, matching
 DuckDB's list_dot_product accumulation order for oracle parity.
+
+Each operator has one kernel, chosen by measurement (sf0.1, local[4],
+interleaved pairs, equal outputs on both sides):
+
+- the JVM fold (:func:`dot`) for brute force, top-1 and IVF cell
+  assignment. At 64 dims over a small panel the Python hop costs more
+  than the fold saves, and the IVF query side stays lazy (no
+  centroid collect while the plan is built).
+- Arrow with per-dimension sequential accumulation
+  (:func:`lsh_index_pandas`, :func:`seq_dot_pandas_udf`) for the LSH
+  index and the ANN / near-dup pair dots, where the candidate pair
+  count makes the interpreted fold the cost. Both reproduce the fold's
+  IEEE addition order, so every double equals the oracle's.
 """
 
 from __future__ import annotations
@@ -180,12 +193,11 @@ def brute_force_top1(
     # and ran every pair dot in the panel scan's one task. Values are
     # row-local + det-rounded and top-1 is a max-struct — layout-free.
     # r16 batch 3 (guide §4): the pair dot is the JVM fold, not the
-    # Arrow seq_dot twin — at 64 dims the Python hop costs more than
+    # Arrow seq_dot — at 64 dims the Python hop costs more than
     # the interpreted fold saves (interleaved A/B 1.79 s Arrow vs
     # 1.36 s JVM on the |Q|=50 panel, identical output hash; the
     # brute_force_topk tier made the same call), and it was also the
-    # suite bench's most Python-worker-contention-sensitive row. The
-    # Arrow twin stays bit-parity-tested for wide-vector use.
+    # suite bench's most Python-worker-contention-sensitive row.
     par = corpus.sparkSession.sparkContext.defaultParallelism
     scored = (
         c.repartition(par)
@@ -211,107 +223,38 @@ def brute_force_top1(
     )
 
 
-def cosine_pandas_udf():
-    """Arrow-vectorized cosine as a pandas UDF — the profiling
-    alternative to the JVM fold for very wide vectors (NumPy SIMD dot
-    beats an interpreted HOF fold past ~1k dims; at 64 dims the JVM
-    path wins by skipping the Python hop). Returns a scalar pandas
-    UDF (a, b) -> double; parity with :func:`cosine` is asserted in
-    tests/test_ext.py."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        av = np.stack(a.to_numpy())
-        bv = np.stack(b.to_numpy())
-        num = (av * bv).sum(axis=1)
-        den = np.sqrt((av * av).sum(axis=1)) * np.sqrt((bv * bv).sum(axis=1))
-        return pd.Series(num / den)
-
-    return _cos
-
-
 def neardup_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.35,
     round_digits: int = 6,
-    use_arrow: bool = True,
-    small_sample: bool = False,
 ) -> DataFrame:
     """All pairs with cosine ≥ threshold — the embedding near-dup
     tier's exact form, meant for a (sampled) corpus; the scale path
     takes candidates from the LSH/IVF index first and applies this
     threshold to candidates only.
 
-    Default (``use_arrow=True``): fully distributed — norms projected
-    once per side (JVM fold), the ``id_a < id_b`` self-join generates
-    pairs on executors, and the pair dots run through the Arrow
-    sequential-accumulation UDF. NO driver materialization anywhere in
-    the plan (pinned by tests/test_plans.py), so it survives a corpus
-    that doesn't fit on the driver; doubles are bit-identical to the
-    interpreted JVM fold (``use_arrow=False``, kept as cross-check).
-
-    ``small_sample=True`` additionally allows the legacy driver-side
-    closure capture (collect the sampled matrix, score whole Arrow
-    batches against it) — fastest at tiny n, but O(n·dim) on the
-    driver; only for explicitly-sampled inputs."""
+    Fully distributed: norms projected once per side (JVM fold), the
+    ``id_a < id_b`` self-join generates pairs on executors, and the
+    pair dots run through the Arrow sequential-accumulation UDF. No
+    driver materialization anywhere in the plan (pinned by
+    tests/test_ext.py), so it survives a corpus that doesn't fit on
+    the driver. Arrow is the pair kernel because the pair count is
+    quadratic: at q_embed_neardup's 1/5 sample it ran 1.31 s against
+    the JVM fold's 1.52 s (sf0.1, 6 interleaved pairs), and 9.1 s
+    against 23.3 s at 2M pairs."""
     from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
-
-    if use_arrow and small_sample:
-        rows = sorted(
-            (int(r[0]), np.asarray(r[1], dtype=np.float64))
-            for r in df.select(id_col, vec_col).collect()
-        )
-        ids = np.array([i for i, _ in rows], dtype=np.int64)
-        M = np.stack([v for _, v in rows])  # (n, dim)
-        nrm = np.zeros(len(ids))
-        for d in range(M.shape[1]):
-            nrm += M[:, d] * M[:, d]
-        nrm = np.sqrt(nrm)
-        scale = float(10**round_digits)
-        schema = "id_a long, id_b long, cosine_sim double"
-
-        def gen(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                vids = pdf[id_col].to_numpy()
-                acc = np.zeros((len(pdf), len(ids)))
-                vn = np.zeros(len(pdf))
-                for d in range(V.shape[1]):
-                    acc += V[:, d : d + 1] * M[:, d][None, :]
-                    vn += V[:, d] * V[:, d]
-                sim = acc / (np.sqrt(vn)[:, None] * nrm[None, :])
-                sim = np.floor(sim * scale + 0.5) / scale
-                keep = (vids[:, None] < ids[None, :]) & (sim >= threshold)
-                ai, bj = np.nonzero(keep)
-                yield pd.DataFrame(
-                    {
-                        "id_a": vids[ai],
-                        "id_b": ids[bj],
-                        "cosine_sim": sim[ai, bj],
-                    }
-                )
-
-        return df.select(id_col, vec_col).mapInPandas(gen, schema)
 
     v = df.select(F.col(id_col), as_double(F.col(vec_col)).alias("v")).select(
         id_col, "v", norm(F.col("v")).alias("nrm")
     )
     a = v.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
     b = v.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    if use_arrow:
-        seq_dot = seq_dot_pandas_udf()
-        sim = det_round(
-            seq_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), round_digits
-        )
-    else:
-        sim = det_round(
-            dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), round_digits
-        )
+    seq_dot = seq_dot_pandas_udf()
+    sim = det_round(
+        seq_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), round_digits
+    )
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", sim.alias("cosine_sim"))
@@ -328,61 +271,21 @@ def ivf_assignments(
     nprobe: int = 1,
     id_col: str = "vec_id",
     round_digits: int = 6,
-    use_arrow: bool = False,
 ) -> DataFrame:
     """Assign each vector to its ``nprobe`` nearest centroids by
     cosine (rounded before ranking; centroid-id tie-break).
 
-    Default: the centroid side is broadcast — it's tiny by
-    construction — so assignment is a single narrow pass over the
-    corpus. ``use_arrow=True`` collects the centroid matrix to the
-    driver (tiny, by the same argument that justifies the broadcast)
-    and scores whole Arrow batches in NumPy with per-dimension
-    sequential accumulation plus the det_round formula verbatim —
-    bit-identical sims and therefore identical rank decisions
-    (equality asserted in tests/test_ext.py)."""
+    The centroid side is broadcast — it's tiny by construction — so
+    assignment is a single narrow pass over the corpus, scored by the
+    JVM fold. This one kernel serves the corpus-wide pass
+    (plans/shared_frames.ivf_corpus_cells) and every query side, so a
+    query and the corpus it probes agree on cells by construction,
+    and building the plan runs no centroid collect. The NumPy-over-Arrow
+    query side it replaced was not measurably faster: q_ivf_topk took
+    a median 3.88 s with it and 4.21 s with this kernel, inside the
+    former's quartile spread of 3.71–4.48 s (sf0.1, local[4], 10
+    interleaved pairs)."""
     from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
-
-    if use_arrow:
-        cents = sorted(
-            (int(r[0]), np.asarray(r[1], dtype=np.float64))
-            for r in centroids.select(id_col, "embedding").collect()
-        )
-        cent_ids = np.array([cid for cid, _ in cents], dtype=np.int64)
-        C = np.stack([cv for _, cv in cents]).T  # (dim, n_cent)
-        cn = np.zeros(C.shape[1])
-        for d in range(C.shape[0]):
-            cn += C[d] * C[d]
-        cn = np.sqrt(cn)
-        scale = float(10**round_digits)
-        schema = f"{id_col} long, centroid_id long, crank integer"
-
-        def gen(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                acc = np.zeros((len(pdf), C.shape[1]))
-                vn = np.zeros(len(pdf))
-                for d in range(V.shape[1]):
-                    acc += V[:, d : d + 1] * C[d]
-                    vn += V[:, d] * V[:, d]
-                sim = acc / (np.sqrt(vn)[:, None] * cn[None, :])
-                sim = np.floor(sim * scale + 0.5) / scale
-                # rank by (sim DESC, centroid_id ASC): lexsort is
-                # stable, keys listed least-significant first.
-                order = np.lexsort((np.broadcast_to(cent_ids, sim.shape), -sim), axis=1)
-                top = order[:, :nprobe]
-                n = len(pdf)
-                yield pd.DataFrame(
-                    {
-                        id_col: np.repeat(pdf[id_col].to_numpy(), nprobe),
-                        "centroid_id": cent_ids[top].reshape(-1),
-                        "crank": np.tile(np.arange(1, nprobe + 1), n).astype(np.int32),
-                    }
-                )
-
-        return vectors.select(id_col, "embedding").mapInPandas(gen, schema)
 
     v = vectors.select(
         F.col(id_col), as_double(F.col("embedding")).alias("v")
@@ -413,7 +316,6 @@ def ivf_topk(
     nprobe: int = 2,
     centroid_mod: int = CENTROID_MOD,
     round_digits: int = 6,
-    use_arrow: bool = True,
     corpus_cells: DataFrame | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors live in their single
@@ -433,12 +335,12 @@ def ivf_topk(
         # the expensive corpus-wide pass — callers sharing one
         # assignment across queries pass it precomputed
         # (plans/shared_frames.ivf_corpus_cells)
-        corpus_cells = ivf_assignments(
-            corpus, centroids, nprobe=1, id_col=id_col, use_arrow=use_arrow
-        ).select(F.col(id_col).alias("match_id"), "centroid_id")
-    query_cells = ivf_assignments(
-        queries, centroids, nprobe=nprobe, id_col=id_col, use_arrow=use_arrow
-    ).select(F.col(id_col).alias("query_id"), "centroid_id")
+        corpus_cells = ivf_assignments(corpus, centroids, nprobe=1, id_col=id_col).select(
+            F.col(id_col).alias("match_id"), "centroid_id"
+        )
+    query_cells = ivf_assignments(queries, centroids, nprobe=nprobe, id_col=id_col).select(
+        F.col(id_col).alias("query_id"), "centroid_id"
+    )
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(F.col("embedding")).alias("qv")
     ).withColumn("qn", norm(F.col("qv")))
@@ -549,7 +451,8 @@ def _planes_matrix(
     dim: int = EMBED_DIM,
 ) -> np.ndarray:
     """All L·r hyperplanes as a (dim, L·r) float64 matrix, column
-    order = (table-major, plane-minor) matching :func:`lsh_buckets`."""
+    order = (table-major, plane-minor): table t's columns are
+    :func:`hyperplanes` (t), the planes the oracle's bucket SQL reads."""
     return np.array(
         [
             [_plane_value(t, p, d) for d in range(dim)]
@@ -566,15 +469,18 @@ def lsh_index_pandas(
     n_tables: int = N_TABLES,
 ) -> DataFrame:
     """(id, bucket, vn): every LSH bucket id (L rows per vector) plus
-    the vector norm, in one Arrow-batched NumPy pass.
+    the vector norm, in one Arrow-batched NumPy pass. A table's bucket
+    id is its r sign bits offset into the table's own id space
+    (table * 2^r + bits), so bucket ids never collide across tables.
 
     Accumulation is per-dimension (``acc += v[:, d] * P[d]``), i.e. the
     SAME sequential IEEE addition order as the JVM fold in
-    :func:`dot` / :func:`norm` — every double, and therefore every
-    sign decision at a bucket boundary, is bit-identical to the
-    interpreted-HOF path (asserted in tests/test_ext.py). This is the
-    scale path: the fold costs L·r interpreted lambda evaluations per
-    vector; here the whole batch is dim fused multiply-adds."""
+    :func:`dot` / :func:`norm` and the oracle's list_dot_product —
+    every double, and therefore every sign decision at a bucket
+    boundary, is the oracle's (pinned by the Python replay in
+    tests/test_property_laws7.py). An interpreted fold costs L·r
+    lambda evaluations per vector; here the whole batch is dim fused
+    multiply-adds."""
     P = _planes_matrix(n_tables)
     n_planes = PLANES_PER_TABLE
     schema = f"{id_col} long, bucket long, vn double"
@@ -629,23 +535,6 @@ def seq_dot_pandas_udf():
     return _dot
 
 
-def lsh_table_bucket(vec: Column, table: int) -> Column:
-    """One table's bucket id: sign bits of r plane dots, offset into
-    the table's own id space (table * 2^r + bits) so bucket ids never
-    collide across tables."""
-    planes = hyperplanes(table)
-    out = F.lit(table * (1 << len(planes)))
-    for p, plane in enumerate(planes):
-        lit = F.array(*[F.lit(v) for v in plane])
-        out = out + F.when(dot(vec, lit) > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return out.cast("long")
-
-
-def lsh_buckets(vec: Column, n_tables: int = N_TABLES) -> Column:
-    """All L bucket ids for a vector (one per table)."""
-    return F.array(*[lsh_table_bucket(vec, t) for t in range(n_tables)])
-
-
 def ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -654,7 +543,6 @@ def ann_topk(
     k: int = 5,
     round_digits: int = 6,
     n_tables: int = N_TABLES,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Approximate top-k: exact cosine ranking restricted to LSH
     candidates — rows sharing a bucket with the query in ANY of the L
@@ -665,69 +553,44 @@ def ann_topk(
     bucket-partitioned, so a query touches only its L buckets'
     partitions.
 
-    ``use_arrow=True`` (default) computes the bucket index and the
-    pair dots in NumPy with sequential per-dimension accumulation —
-    bit-identical doubles to the JVM fold (``use_arrow=False``, kept
-    as the cross-check reference; equality asserted in
-    tests/test_ext.py) at a fraction of the interpreted-HOF cost."""
+    The bucket index (:func:`lsh_index_pandas`) and the pair dots
+    (:func:`seq_dot_pandas_udf`) run in NumPy over Arrow batches: on
+    q_ann_topk they took 1.47 s against 6.14 s for the same index and
+    dots as interpreted JVM folds (sf0.1, 6 interleaved pairs, Arrow
+    faster in all 6), with equal outputs."""
     from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
 
-    if use_arrow:
-        q_idx = lsh_index_pandas(queries, id_col, vec_col, n_tables).select(
-            F.col(id_col).alias("query_id"), "bucket", F.col("vn").alias("qn")
-        )
-        c_idx = lsh_index_pandas(corpus, id_col, vec_col, n_tables).select(
-            F.col(id_col).alias("match_id"), "bucket", F.col("vn").alias("cn")
-        )
-        cand = (
-            q_idx.join(c_idx, "bucket")
-            .filter(F.col("query_id") != F.col("match_id"))
-            .select("query_id", "qn", "match_id", "cn")
-            .dropDuplicates(["query_id", "match_id"])
-        )
-        qv = queries.select(
-            F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-        )
-        cv = corpus.select(
-            F.col(id_col).alias("match_id"), as_double(F.col(vec_col)).alias("cv")
-        )
-        seq_dot = seq_dot_pandas_udf()
-        scored = (
-            cand.join(F.broadcast(qv), "query_id")
-            .join(cv, "match_id")
-            .select(
-                "query_id",
-                "match_id",
-                det_round(
-                    seq_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-                    round_digits,
-                ).alias("cosine_sim"),
-            )
-        )
-    else:
-        q = queries.select(
-            F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-        ).withColumn("qn", norm(F.col("qv"))).withColumn(
-            "bucket", F.explode(lsh_buckets(F.col("qv"), n_tables))
-        )
-        c = corpus.select(
-            F.col(id_col).alias("match_id"), as_double(F.col(vec_col)).alias("cv")
-        ).withColumn("cn", norm(F.col("cv"))).withColumn(
-            "bucket", F.explode(lsh_buckets(F.col("cv"), n_tables))
-        )
-        cand = (
-            q.join(c, "bucket")
-            .filter(F.col("query_id") != F.col("match_id"))
-            .select("query_id", "qv", "qn", "match_id", "cv", "cn")
-            .dropDuplicates(["query_id", "match_id"])
-        )
-        scored = cand.select(
+    q_idx = lsh_index_pandas(queries, id_col, vec_col, n_tables).select(
+        F.col(id_col).alias("query_id"), "bucket", F.col("vn").alias("qn")
+    )
+    c_idx = lsh_index_pandas(corpus, id_col, vec_col, n_tables).select(
+        F.col(id_col).alias("match_id"), "bucket", F.col("vn").alias("cn")
+    )
+    cand = (
+        q_idx.join(c_idx, "bucket")
+        .filter(F.col("query_id") != F.col("match_id"))
+        .select("query_id", "qn", "match_id", "cn")
+        .dropDuplicates(["query_id", "match_id"])
+    )
+    qv = queries.select(
+        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
+    )
+    cv = corpus.select(
+        F.col(id_col).alias("match_id"), as_double(F.col(vec_col)).alias("cv")
+    )
+    seq_dot = seq_dot_pandas_udf()
+    scored = (
+        cand.join(F.broadcast(qv), "query_id")
+        .join(cv, "match_id")
+        .select(
             "query_id",
             "match_id",
             det_round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), round_digits
+                seq_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
+                round_digits,
             ).alias("cosine_sim"),
         )
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("match_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))

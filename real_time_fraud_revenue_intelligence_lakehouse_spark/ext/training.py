@@ -41,7 +41,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
+    H60_OK_SQL,
+    MICRO,
+    R6_SQL,
+    det_round,
+    r6,
+)
 
 #: Fixed hyper-parameters — part of the query's identity (the oracle
 #: unrolls exactly this many iterations at exactly this step size).
@@ -67,9 +73,6 @@ FEATURE_SCALES: dict[str, float] = {
     "is_weekend": 1.0,
     "is_urgent": 1.0,
 }
-
-_MICRO = 1_000_000.0
-_R6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
 
 
 def _scale(f: str, scales: dict | None):
@@ -184,7 +187,7 @@ def train_logreg(
         p = det_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
         resid = p - F.col(label).cast("double")
         bias_c = (
-            resid * F.lit(_MICRO) if wgt is None else resid * wgt * F.lit(_MICRO)
+            resid * F.lit(MICRO) if wgt is None else resid * wgt * F.lit(MICRO)
         )
         aggs = [
             F.count(F.lit(1)).alias("n"),
@@ -195,9 +198,9 @@ def train_logreg(
         for f in features:
             contrib = resid * _x_expr(f, scales)
             contrib = (
-                contrib * F.lit(_MICRO)
+                contrib * F.lit(MICRO)
                 if wgt is None
-                else contrib * wgt * F.lit(_MICRO)
+                else contrib * wgt * F.lit(MICRO)
             )
             aggs.append(
                 F.sum(F.floor(contrib + F.lit(0.5)).cast("decimal(38,0)")).alias(
@@ -208,7 +211,7 @@ def train_logreg(
         n = row["n"]
         denom = float(n) if n_eff is None else float(n_eff)
         for m in names:
-            w[m] = w[m] - lr * (float(row[f"g_{m}"]) / _MICRO / denom)
+            w[m] = w[m] - lr * (float(row[f"g_{m}"]) / MICRO / denom)
     return w, n
 
 
@@ -309,7 +312,7 @@ def logreg_train_ctes(
         ["w_bias"] + [f"w_{f} * ({_x_of(f)})" for f in features]
     )
     for t in range(1, iters + 1):
-        p = _R6.format(c=f"1.0 / (1.0 + exp(-({z_terms})))")
+        p = R6_SQL.format(c=f"1.0 / (1.0 + exp(-({z_terms})))")
         resid = f"({p} - CAST(label AS DOUBLE))"
         bias_c = (
             f"{resid} * 1000000.0" if not weighted else f"{resid} * {wgt} * 1000000.0"
@@ -361,7 +364,7 @@ def logreg_weights_sql(
     names = ["bias"] + list(features)
     values = ", ".join(f"('{m}')" for m in names)
     case = " ".join(
-        f"WHEN '{m}' THEN {_R6.format(c=f'w_{m}')}" for m in names
+        f"WHEN '{m}' THEN {R6_SQL.format(c=f'w_{m}')}" for m in names
     )
     return (
         f"WITH {ctes}\n    "
@@ -382,11 +385,11 @@ def logreg_score_sql(
     statement."""
     ctes, wk = logreg_train_ctes(fv_sql, features, lr, iters)
     z = _z_sql("w.", features)
-    s = _R6.format(c=f"1.0 / (1.0 + exp(-({z})))")
-    mean_s = _R6.format(
+    s = R6_SQL.format(c=f"1.0 / (1.0 + exp(-({z})))")
+    mean_s = R6_SQL.format(
         c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*)"
     )
-    rate = _R6.format(c="CAST(sum(label) AS DOUBLE) / count(*)")
+    rate = R6_SQL.format(c="CAST(sum(label) AS DOUBLE) / count(*)")
     return f"""WITH {ctes},
     scored AS (
       SELECT fv.label, {s} AS s FROM fv CROSS JOIN {wk} w
@@ -417,9 +420,6 @@ MS_CONFIGS: tuple[tuple[str, float, int, int], ...] = (
     ("lr1.0_k5_w", 1.0, 5, 1),
 )
 
-_H60_OK = "('0x' || substr(md5(o_orderkey::VARCHAR), 1, 15))::BIGINT % 100"
-
-
 def model_selection_sql(
     fv_sql: str,
     configs: tuple[tuple[str, float, int, int], ...] = MS_CONFIGS,
@@ -431,8 +431,8 @@ def model_selection_sql(
     an is_best rank (val_logloss asc, config id tie-break)."""
     parts = [
         f"base AS ({fv_sql})",
-        f"tr AS MATERIALIZED (SELECT * FROM base WHERE {_H60_OK} < 80)",
-        f"va AS MATERIALIZED (SELECT * FROM base WHERE {_H60_OK} >= 80)",
+        f"tr AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} < 80)",
+        f"va AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} >= 80)",
     ]
     finals = []
     for i, (_name, lr, iters, weighted) in enumerate(configs):
@@ -449,17 +449,17 @@ def model_selection_sql(
     sums = []
     for i in range(len(configs)):
         z = _z_sql(f"m{i}.", features)
-        p = _R6.format(c=f"1.0 / (1.0 + exp(-({z})))")
+        p = R6_SQL.format(c=f"1.0 / (1.0 + exp(-({z})))")
         raw = f"CASE WHEN label = 1 THEN -ln({p}) ELSE -ln(1.0 - {p}) END"
         sums.append(
-            f"sum(CAST({_R6.format(c=raw)} AS DECIMAL(18,6))) AS L_{i}"
+            f"sum(CAST({R6_SQL.format(c=raw)} AS DECIMAL(18,6))) AS L_{i}"
         )
     joins = " ".join(f"CROSS JOIN {wk} m{i}" for i, wk in enumerate(finals))
     parts.append(
         f"wide AS (SELECT count(*) AS n, {', '.join(sums)} FROM va {joins})"
     )
     means = ", ".join(
-        f"{_R6.format(c=f'CAST(L_{i} AS DOUBLE) / n')} AS m_{i}"
+        f"{R6_SQL.format(c=f'CAST(L_{i} AS DOUBLE) / n')} AS m_{i}"
         for i in range(len(configs))
     )
     parts.append(f"m AS (SELECT {means} FROM wide)")
@@ -543,9 +543,9 @@ def train_logreg_grid(
                 )
             )
             bias_c = (
-                resid * F.lit(_MICRO)
+                resid * F.lit(MICRO)
                 if wgt is None
-                else resid * wgt * F.lit(_MICRO)
+                else resid * wgt * F.lit(MICRO)
             )
             aggs.append(
                 F.sum(F.floor(bias_c + F.lit(0.5)).cast("decimal(38,0)")).alias(
@@ -555,9 +555,9 @@ def train_logreg_grid(
             for f in features:
                 contrib = resid * _x_expr(f, scales)
                 contrib = (
-                    contrib * F.lit(_MICRO)
+                    contrib * F.lit(MICRO)
                     if wgt is None
-                    else contrib * wgt * F.lit(_MICRO)
+                    else contrib * wgt * F.lit(MICRO)
                 )
                 aggs.append(
                     F.sum(
@@ -571,7 +571,7 @@ def train_logreg_grid(
             denom = float(n) if n_effs[c] is None else float(n_effs[c])
             for m in names:
                 ws[c][m] = ws[c][m] - lr_c * (
-                    float(row[f"c{c}_g_{m}"]) / _MICRO / denom
+                    float(row[f"c{c}_g_{m}"]) / MICRO / denom
                 )
     return ws
 
@@ -696,9 +696,6 @@ def nb_score_confusion(
         )
     n = sum(n_c.values())
 
-    def r6(x: float) -> float:
-        return math.floor(x * 1e6 + 0.5) / 1e6
-
     def term(f: str, cls: int):
         entries = sorted(by_fc[(f, cls)], key=lambda r: r["value"])
         v_dom = len(
@@ -767,9 +764,9 @@ def nb_score_sql(fv_sql: str, features: tuple[str, ...] = NB_FEATURES) -> str:
     ``otherwise`` — so oracle and engine agree even when the scored
     frame carries feature values the trained table never saw (ADVICE
     r12: the old inner join silently dropped those rows)."""
-    t6 = _R6.format(c="ln(p.p)")
-    unseen = _R6.format(c="ln(1.0 / (l.n_c + d.v))")
-    lp = _R6.format(c="ln(CAST(n_c AS DOUBLE) / (SELECT count(*) FROM f))")
+    t6 = R6_SQL.format(c="ln(p.p)")
+    unseen = R6_SQL.format(c="ln(1.0 / (l.n_c + d.v))")
+    lp = R6_SQL.format(c="ln(CAST(n_c AS DOUBLE) / (SELECT count(*) FROM f))")
     return f"""WITH {_nb_ctes(fv_sql, features)},
     priors AS (
       SELECT label, CAST({lp} AS DECIMAL(18,6)) AS lp FROM lbls
@@ -820,7 +817,7 @@ def logreg_roc_sql(
     engines via CASE."""
     ctes, wk = logreg_train_ctes(fv_sql, features, lr, iters)
     z = _z_sql("w.", features)
-    s = _R6.format(c=f"1.0 / (1.0 + exp(-({z})))")
+    s = R6_SQL.format(c=f"1.0 / (1.0 + exp(-({z})))")
     taus = ", ".join(f"({t!r})" for t in ROC_THRESHOLDS)
     return f"""WITH {ctes},
     scored AS (
@@ -987,7 +984,6 @@ def model_metrics_ctes(
     winner — that asymmetry is an oracle artifact, not a scale
     concern)."""
     p_ = prefix
-    r6 = _R6
     r8 = "(floor(({c}) * 100000000.0 + 0.5) / 100000000.0)"
     ap_term = r8.format(
         c=(
@@ -1030,11 +1026,11 @@ def model_metrics_ctes(
     SELECT {float(tau)!r} AS threshold,
            CAST(n_tot AS BIGINT) AS n,
            CAST(n_pos AS BIGINT) AS n_pos,
-           {r6.format(c=f"CASE WHEN n_pos = 0 OR n_neg = 0 THEN 0.0 ELSE {auc_raw} END")} AS roc_auc,
-           {r6.format(c="CASE WHEN n_pos = 0 THEN 0.0 ELSE CAST(ap_sum AS DOUBLE) END")} AS avg_precision,
-           {r6.format(c=prec)} AS precision_at,
-           {r6.format(c=rec)} AS recall_at,
-           {r6.format(c=f1)} AS f1_at,
+           {R6_SQL.format(c=f"CASE WHEN n_pos = 0 OR n_neg = 0 THEN 0.0 ELSE {auc_raw} END")} AS roc_auc,
+           {R6_SQL.format(c="CASE WHEN n_pos = 0 THEN 0.0 ELSE CAST(ap_sum AS DOUBLE) END")} AS avg_precision,
+           {R6_SQL.format(c=prec)} AS precision_at,
+           {R6_SQL.format(c=rec)} AS recall_at,
+           {R6_SQL.format(c=f1)} AS f1_at,
            CAST(tp AS BIGINT) AS tp,
            CAST(pp - tp AS BIGINT) AS fp,
            CAST(n_pos - tp AS BIGINT) AS fn,
@@ -1148,7 +1144,6 @@ def kmeans_sql(
     centroid CTE exactly once via an id VALUES join + CASE unpivot
     (the logreg_weights_sql single-reference discipline)."""
     r8 = "(floor(({c}) * 100000000.0 + 0.5) / 100000000.0)"
-    _R6L = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
 
     def x(f: str) -> str:
         return _x_sql(f)
@@ -1213,7 +1208,7 @@ def kmeans_sql(
     cols = []
     for f in features:
         c_case = " ".join(
-            f"WHEN {i} THEN {_R6L.format(c=f'c{i}_{f}')}" for i in range(k)
+            f"WHEN {i} THEN {R6_SQL.format(c=f'c{i}_{f}')}" for i in range(k)
         )
         cols.append(f"CASE u.cluster {c_case} END AS c_{f}")
     cte_block = ",\n    ".join(parts)
@@ -1263,7 +1258,6 @@ def kmeans_inertia_sql(
     """Oracle for q_kmeans_inertia: the same unrolled training CTEs,
     then one assign+least staging pass and per-cluster decimal SSE."""
     r8 = "(floor(({c}) * 100000000.0 + 0.5) / 100000000.0)"
-    r6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
     full = kmeans_sql(fv_sql, features, k, iters)
     # reuse everything up to the final select: rebuild the CTE block
     head, _sep, _tail = full.rpartition("\n    SELECT u.cluster")
@@ -1293,7 +1287,7 @@ def kmeans_inertia_sql(
       FROM (SELECT {", ".join(features)}, {dists} FROM fv CROSS JOIN {wk} w)
     )
     SELECT cluster, CAST(count(*) AS BIGINT) AS n,
-           {r6.format(c=f"CAST(sum(CAST({r8.format(c='dmin')} AS DECIMAL(28,8))) AS DOUBLE)")} AS inertia
+           {R6_SQL.format(c=f"CAST(sum(CAST({r8.format(c='dmin')} AS DECIMAL(28,8))) AS DOUBLE)")} AS inertia
     FROM ev GROUP BY 1"""
 
 
@@ -1348,9 +1342,6 @@ def hbos_top_anomalies(
     for r in rows:
         by_f.setdefault(r["feature"], []).append(r)
 
-    def r6(x: float) -> float:
-        return math.floor(x * 1e6 + 0.5) / 1e6
-
     score = None
     for f in features:
         expr = None
@@ -1377,7 +1368,7 @@ def hbos_sql(
     decimal surprise via a probs join, the same top-k ordering."""
     cols = ", ".join(features)
     casts = ", ".join(f"CAST({f} AS BIGINT) AS {f}" for f in features)
-    t6 = _R6.format(c="-ln(p.p)")
+    t6 = R6_SQL.format(c="-ln(p.p)")
     return f"""WITH fv AS ({fv_sql}),
     f AS (SELECT o_orderkey, {casts} FROM fv),
     st AS (
@@ -1426,7 +1417,6 @@ def logreg_ablation(
     from ONE scan (each variant is just another decimal-folded sum
     column), then the 1-row wide aggregate unpivots in-row — zero
     extra passes however many features."""
-    import math
 
     def z_without(skip: str | None) -> Column:
         z: Column = F.lit(float(w["bias"]))
@@ -1468,7 +1458,6 @@ def logreg_ablation_sql(
     """Oracle: re-train via the unrolled CTEs, then the same one-scan
     multi-variant loss aggregate and in-row unpivot."""
     ctes, wk = logreg_train_ctes(fv_sql, features, lr, iters)
-    r6 = _R6
     names = ["full"] + list(features)
 
     def z_without(skip: str | None) -> str:
@@ -1478,16 +1467,16 @@ def logreg_ablation_sql(
         return " + ".join(terms)
 
     def loss(skip: str | None) -> str:
-        p = r6.format(c=f"1.0 / (1.0 + exp(-({z_without(skip)})))")
+        p = R6_SQL.format(c=f"1.0 / (1.0 + exp(-({z_without(skip)})))")
         raw = f"CASE WHEN label = 1 THEN -ln({p}) ELSE -ln(1.0 - {p}) END"
-        return r6.format(c=raw)
+        return R6_SQL.format(c=raw)
 
     sums = ", ".join(
         f"sum(CAST({loss(None if name == 'full' else name)} AS DECIMAL(18,6))) AS L_{name}"
         for name in names
     )
     means = ", ".join(
-        f"{r6.format(c=f'CAST(L_{name} AS DOUBLE) / n')} AS m_{name}"
+        f"{R6_SQL.format(c=f'CAST(L_{name} AS DOUBLE) / n')} AS m_{name}"
         for name in names
     )
     values = ", ".join(f"('{name}')" for name in names)
@@ -1497,5 +1486,5 @@ def logreg_ablation_sql(
     m AS (SELECT {means} FROM wide)
     SELECT u.variant,
            CASE u.variant {m_case} END AS logloss,
-           {r6.format(c=f"(CASE u.variant {m_case} END) - m_full")} AS delta_vs_full
+           {R6_SQL.format(c=f"(CASE u.variant {m_case} END) - m_full")} AS delta_vs_full
     FROM m CROSS JOIN (VALUES {values}) u(variant)"""

@@ -15,6 +15,8 @@ bit-identical AND plan-stable. This replaces the reference's implicit
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -47,6 +49,22 @@ def det_round(col: Column, ndigits: int = 4) -> Column:
 #: SQL twin of :func:`det_round` — format with ``c`` (expression) and
 #: ``s`` (10**ndigits, as a float literal).
 ROUND_SQL = "(floor(({c}) * {s} + 0.5) / {s})"
+
+#: :data:`ROUND_SQL` at 6 digits — format with ``c`` only.
+R6_SQL = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
+
+#: 10**6 as a float: the fixed-point scale of 6-digit micro-unit sums.
+MICRO = 1_000_000.0
+
+
+def r6(x: float) -> float:
+    """:func:`det_round` to 6 digits of a driver-side Python float."""
+    return math.floor(x * MICRO + 0.5) / MICRO
+
+
+#: The 80/20 train/validation split key of an order, as DuckDB SQL:
+#: the first 15 hex digits (60 bits) of md5(o_orderkey), mod 100.
+H60_OK_SQL = "('0x' || substr(md5(o_orderkey::VARCHAR), 1, 15))::BIGINT % 100"
 
 
 def exact_sum(col: str | Column, alias: str | None = None) -> Column:

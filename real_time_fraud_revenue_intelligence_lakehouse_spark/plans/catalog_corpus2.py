@@ -331,15 +331,10 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < IVFPQ_NQUERIES)
     cents = e.filter(F.col("vec_id") % S.CENTROID_MOD == 0)
-    # shared corpus→cell assignment, built on the SAME JVM fold path
-    # (use_arrow=False) as the query-side assignment below — cell
-    # agreement is same-path by construction and never rests on
-    # pandas/pyarrow float behavior (the Arrow path's bit-exactness
-    # is separately pinned in tests/test_ext.py)
     corpus_cells = ivf_corpus_cells(spark, sf_dir)
-    query_cells = S.ivf_assignments(
-        queries, cents, nprobe=IVFPQ_NPROBE, use_arrow=False
-    ).select(F.col("vec_id").alias("query_id"), "centroid_id")
+    query_cells = S.ivf_assignments(queries, cents, nprobe=IVFPQ_NPROBE).select(
+        F.col("vec_id").alias("query_id"), "centroid_id"
+    )
     cand = (
         query_cells.join(corpus_cells, "centroid_id")
         .filter(F.col("query_id") != F.col("match_id"))

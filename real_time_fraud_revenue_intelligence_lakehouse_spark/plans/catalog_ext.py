@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import dedup as D
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import similarity as S
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import text as X
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R6_SQL, det_round
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import (
     doc_minhash_sig,
@@ -558,7 +558,7 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _table_bucket_sql(table: int) -> str:
-    """One LSH table's bucket id as SQL (mirror of lsh_table_bucket)."""
+    """One LSH table's bucket id as SQL (mirror of lsh_index_pandas)."""
     planes = S.hyperplanes(table)
     terms = [str(table * (1 << len(planes)))]
     for p, plane in enumerate(planes):
@@ -2027,7 +2027,6 @@ def q_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- intra-document repetition (Gopher-style filter, round 12) ---------------
 
-_R6X = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
 REP_FLAG = 0.2
 
 
@@ -2043,8 +2042,8 @@ REP_FLAG = 0.2
     SELECT doc_id,
            CAST(len(tri) AS BIGINT) AS n_trigrams,
            CAST(len(list_distinct(tri)) AS BIGINT) AS n_distinct,
-           {_R6X.format(c="1.0 - cast(len(list_distinct(tri)) as double) / len(tri)")} AS rep_ratio,
-           CAST({_R6X.format(c="1.0 - cast(len(list_distinct(tri)) as double) / len(tri)")} > {REP_FLAG!r} AS INT) AS flagged
+           {R6_SQL.format(c="1.0 - cast(len(list_distinct(tri)) as double) / len(tri)")} AS rep_ratio,
+           CAST({R6_SQL.format(c="1.0 - cast(len(list_distinct(tri)) as double) / len(tri)")} > {REP_FLAG!r} AS INT) AS flagged
     FROM tri
     """,
     tags=("ext", "text", "quality", "filter"),

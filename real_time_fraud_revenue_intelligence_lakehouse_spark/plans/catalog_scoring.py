@@ -4,8 +4,8 @@ Composes the registered q_feature_vector (SQL oracle reused verbatim
 as a CTE) with the deterministic logistic scorer — the full
 features→score→risk-band lifecycle of the reference's serving path
 (`ml/serving/api.py:198-258`, `fraud_summary.py:117-133`), minus the
-trained artifact (the pandas-UDF seam for that is
-ext/scoring.score_pandas_udf, parity-tested).
+trained artifact (a trained model reaches the same Catalyst form via
+ext/model_registry.gbt_from_doc → streaming/scoring.compile_registry_model).
 """
 
 from __future__ import annotations
@@ -18,12 +18,12 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import (
     score_batch,
     weights_sql,
 )
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R6_SQL, det_round, r6
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans import catalog_cleanse  # noqa: F401  (registers q_feature_vector)
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans import registry
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 
 _FV_SQL = registry._REGISTRY["q_feature_vector"].oracle
-_R6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
 
 
 @query(
@@ -32,7 +32,7 @@ _R6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
     WITH fv AS ({_FV_SQL}),
     scored AS (
       SELECT o_orderkey, label,
-             {_R6.format(c=f"1.0 / (1.0 + exp(-({weights_sql()})))")} AS fraud_score
+             {R6_SQL.format(c=f"1.0 / (1.0 + exp(-({weights_sql()})))")} AS fraud_score
       FROM fv
     )
     SELECT o_orderkey, label, fraud_score,
@@ -58,7 +58,7 @@ def q_fraud_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH fv AS ({_FV_SQL}),
     scored AS (
       SELECT o_orderkey, label,
-             {_R6.format(c=f"1.0 / (1.0 + exp(-({gbt_sql()})))")} AS fraud_score
+             {R6_SQL.format(c=f"1.0 / (1.0 + exp(-({gbt_sql()})))")} AS fraud_score
       FROM fv
     )
     SELECT o_orderkey, label, fraud_score,
@@ -75,9 +75,8 @@ def q_gbt_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     compile-GBT-to-SQL inference shape (the reference's XGBoost
     `ml/serving/api.py:198-258` surface, made deterministic so the
     oracle can replay the exact model). Row-local, fully inside
-    whole-stage codegen; the Arrow predict-batch seam
-    (ext/scoring.gbt_pandas_udf) is parity-tested for real-artifact
-    swap-in."""
+    whole-stage codegen. A trained booster compiles to the same form
+    (streaming/scoring.compile_registry_model)."""
     fv = registry._REGISTRY["q_feature_vector"].fn(spark, sf_dir)
     return gbt_score_batch(fv).select("o_orderkey", "label", "fraud_score", "risk_label")
 
@@ -103,12 +102,12 @@ def q_gbt_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """.format(
         fv="{fv}",
         r6_score="{r6_score}",
-        r6_mean=_R6.format(c="CAST(sum(CAST({r6s} AS DECIMAL(28,6))) AS DOUBLE) / count(*)".format(r6s="s")),
-        r6_rate=_R6.format(c="CAST(sum(label) AS DOUBLE) / count(*)"),
-        r6_gap=_R6.format(c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*) - CAST(sum(label) AS DOUBLE) / count(*)"),
-        r6_brier=_R6.format(c="CAST(sum(CAST({sq} AS DECIMAL(28,8))) AS DOUBLE) / count(*)".format(
+        r6_mean=R6_SQL.format(c="CAST(sum(CAST({r6s} AS DECIMAL(28,6))) AS DOUBLE) / count(*)".format(r6s="s")),
+        r6_rate=R6_SQL.format(c="CAST(sum(label) AS DOUBLE) / count(*)"),
+        r6_gap=R6_SQL.format(c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*) - CAST(sum(label) AS DOUBLE) / count(*)"),
+        r6_brier=R6_SQL.format(c="CAST(sum(CAST({sq} AS DECIMAL(28,8))) AS DOUBLE) / count(*)".format(
             sq="(floor(((s - label) * (s - label)) * 100000000.0 + 0.5) / 100000000.0)")),
-    ).format(fv=_FV_SQL, r6_score=_R6.format(c=f"1.0 / (1.0 + exp(-({weights_sql()})))")),
+    ).format(fv=_FV_SQL, r6_score=R6_SQL.format(c=f"1.0 / (1.0 + exp(-({weights_sql()})))")),
     tags=("scoring", "evaluation", "calibration"),
 )
 def q_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -132,7 +131,6 @@ def q_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round  # noqa: E402
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import (  # noqa: E402
     logreg_score_sql,
     logreg_weights_sql,
@@ -283,8 +281,6 @@ def q_model_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-trains all four via namespaced unrolled CTE chains, so MODEL
     SELECTION ITSELF hash-gates — the q_ivf_nprobe_curve
     decision-artifact pattern applied to training."""
-    import math
-
     def build():
         fv = _logreg_fv(spark, sf_dir)
         b = hash60(F.col("o_orderkey").cast("string")) % 100
@@ -306,7 +302,6 @@ def q_model_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     row = memo(spark, sf_dir, "logreg_model_selection", build)
     n = row["n"]
-    r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
     losses = [r6(float(row[f"L_{i}"]) / n) for i in range(len(MS_CONFIGS))]
     best = min(
         range(len(MS_CONFIGS)), key=lambda i: (losses[i], MS_CONFIGS[i][0])
@@ -449,8 +444,7 @@ _PSI_EPS = 1e-6
 
 def _score_drift_oracle() -> str:
     ctes, wk = logreg_train_ctes(_FV_SQL)
-    s = _R6.format(c=f"1.0 / (1.0 + exp(-({_z_sql('w.', SCORE_FEATURES)})))")
-    r6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
+    s = R6_SQL.format(c=f"1.0 / (1.0 + exp(-({_z_sql('w.', SCORE_FEATURES)})))")
     r8 = "(floor(({c}) * 100000000.0 + 0.5) / 100000000.0)"
     pa = "cast(n_a as double) / ta"
     pb = "cast(n_b as double) / tb"
@@ -468,8 +462,8 @@ def _score_drift_oracle() -> str:
     ),
     t AS (SELECT sum(n_a) AS ta, sum(n_b) AS tb FROM c)
     SELECT bin, n_a, n_b,
-           {r6.format(c=pa)} AS p_a,
-           {r6.format(c=pb)} AS p_b,
+           {R6_SQL.format(c=pa)} AS p_a,
+           {R6_SQL.format(c=pb)} AS p_b,
            {r8.format(c=f"(({pa}) - ({pb})) * ln((({pa}) + {_PSI_EPS!r}) / (({pb}) + {_PSI_EPS!r}))")} AS psi_term
     FROM c, t"""
 
@@ -553,10 +547,7 @@ def q_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical iterations as assign→aggregate→update CTE triples.
     Output: one row per cluster — size from the final update step +
     round6 centroid coordinates."""
-    import math
-
     cents, sizes = _trained_kmeans(spark, sf_dir)
-    r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
     rows = [
         tuple([i, sizes[i]] + [r6(cents[i][f]) for f in SCORE_FEATURES])
         for i in range(KM_K)
@@ -624,7 +615,6 @@ def q_hbos_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- histogram gradient-boosted-tree trainer (VERDICT r12 #1) ----------------
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # noqa: E402
-    _r6,
     gbt_score_band_sql,
     gbt_train_sql,
     gbt_trained_score_expr,
@@ -678,7 +668,7 @@ def _gbt_tree_frame(spark: SparkSession, trees: list[dict]) -> DataFrame:
             (
                 t,
                 *[v for k in (1, 2, 3) for v in (SCORE_FEATURES[s[k][0]], s[k][1])],
-                *[_r6(w[k]) for k in (4, 5, 6, 7)],
+                *[r6(w[k]) for k in (4, 5, 6, 7)],
             )
         )
     return spark.createDataFrame(
@@ -797,8 +787,6 @@ def q_gbt_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the boosting axis); per-row losses det-round to 6 and fold
     through DECIMAL(18,6). The oracle reuses the MATERIALIZED rows{t}
     frames, whose f column IS the partial logit."""
-    import math
-
     fv = _logreg_fv(spark, sf_dir)
     trees = _trained_gbt(spark, sf_dir)
     zs = [F.lit(0.0)]
@@ -811,7 +799,6 @@ def q_gbt_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     row = fv.agg(*aggs).first()
     n = row["n"]
-    r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
     out = [(t, r6(float(row[f"L_{t}"]) / n)) for t in range(len(zs))]
     return spark.createDataFrame(out, "round int, train_logloss double")
 
@@ -825,7 +812,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import ( 
 
 def _model_card_oracle() -> str:
     ctes, rows_k = _gbt_ctes(_FV_SQL)
-    s = _R6.format(c="1.0 / (1.0 + exp(-f))")
+    s = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
     return (
         f"WITH {ctes},\n"
         f"    scored AS (SELECT label, {s} AS s FROM {rows_k}),\n"
@@ -1041,8 +1028,6 @@ def _gbt_selection(spark: SparkSession, sf_dir: str) -> tuple[list[float], int]:
     """(round6 holdout losses per config, winner index) — ONE
     4-ensemble holdout loss aggregate over the grid's trees, memoized
     per process; the winner tie-breaks (val_logloss, config id)."""
-    import math
-
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import gbt_trained_logit_expr
 
     def build():
@@ -1055,7 +1040,6 @@ def _gbt_selection(spark: SparkSession, sf_dir: str) -> tuple[list[float], int]:
 
     row = memo(spark, sf_dir, "gbt_selection", build)
     n = row["n"]
-    r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
     losses = [r6(float(row[f"L_{i}"]) / n) for i in range(len(GBT_MS_CONFIGS))]
     best = min(
         range(len(GBT_MS_CONFIGS)), key=lambda i: (losses[i], GBT_MS_CONFIGS[i][0])
@@ -1118,8 +1102,6 @@ def q_gbt_early_stop(spark: SparkSession, sf_dir: str) -> DataFrame:
     ladder in the driver, identically to the oracle's window-function
     form. The booster is _default_booster's (the grid's config 0 when
     already trained, else one config-0 fit)."""
-    import math
-
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import GBT_ETA as _ETA
 
     _tr, va = _fold_splits(spark, sf_dir)
@@ -1132,7 +1114,6 @@ def q_gbt_early_stop(spark: SparkSession, sf_dir: str) -> DataFrame:
         aggs.append(F.sum(_loss_expr(z).cast("decimal(18,6)")).alias(f"L_{t}"))
     row = va.agg(*aggs).first()
     n = row["n"]
-    r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
     losses = [r6(float(row[f"L_{t}"]) / n) for t in range(len(zs))]
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import early_stop_decision
 
@@ -1403,15 +1384,15 @@ def _calibration_agg(scored: DataFrame) -> DataFrame:
 
 def _gbt_calibration_oracle() -> str:
     ctes, rows_k = _gbt_ctes(_FV_SQL)
-    s = _R6.format(c="1.0 / (1.0 + exp(-f))")
-    r6_mean = _R6.format(c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*)")
-    r6_rate = _R6.format(c="CAST(sum(label) AS DOUBLE) / count(*)")
-    r6_gap = _R6.format(
+    s = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
+    r6_mean = R6_SQL.format(c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*)")
+    r6_rate = R6_SQL.format(c="CAST(sum(label) AS DOUBLE) / count(*)")
+    r6_gap = R6_SQL.format(
         c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*) "
         "- CAST(sum(label) AS DOUBLE) / count(*)"
     )
     sq = "(floor(((s - label) * (s - label)) * 100000000.0 + 0.5) / 100000000.0)"
-    r6_brier = _R6.format(
+    r6_brier = R6_SQL.format(
         c=f"CAST(sum(CAST({sq} AS DECIMAL(28,8))) AS DOUBLE) / count(*)"
     )
     return f"""WITH {ctes},

@@ -37,6 +37,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import _loss_expr
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import r6
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_scoring import (
     _FV_SQL,
     _band_summary,
@@ -67,9 +68,6 @@ def _deep_tree_rows(trees: list[dict]) -> list[tuple]:
     """One NULL-free row per internal node: heap id, split, round6
     gain, and (for last-level internal nodes) the two round6 child
     leaf values — the exact rows gbt_train_deep_sql emits."""
-    import math
-
-    r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
     rows = []
     for t, tr in enumerate(trees):
         first_leaf_parent = 2 ** (tr["depth"] - 1)
@@ -205,8 +203,6 @@ def q_gbt_depth_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     The driver's correctness gate (sf0.01) and bench (sf0.1) are
     in-domain, as is any realistic scale — the depth axis exists FOR
     large data."""
-    import math
-
     def build():
         tr, va = _fold_splits2(spark, sf_dir)
         grid = train_gbt_grid_deep(tr)
@@ -220,7 +216,6 @@ def q_gbt_depth_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     row = memo(spark, sf_dir, "gbt_depth_grid", build)
     n = row["n"]
-    r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
     losses = [
         r6(float(row[f"L_{i}"]) / n) for i in range(len(GBT_DEPTH_CONFIGS))
     ]

@@ -16,6 +16,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scaler import (
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import logreg_weights_sql, train_logreg
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import r6
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_scoring import (
     _FV_SQL,
     _logreg_fv,
@@ -85,9 +86,6 @@ def q_logreg_train_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
         return w
 
     w = memo(spark, sf_dir, "logreg_scaled", build)
-    import math
-
-    r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
     names = ["bias"] + list(SCORE_FEATURES)
     return spark.createDataFrame(
         [(m, r6(w[m])) for m in names], "feature string, weight double"
@@ -117,8 +115,6 @@ def holdout_auc_ladder(va: DataFrame, trees: list[dict],
     distinct-score table — ≤ leaf-combination many distinct round6
     scores per round, not |rows|) yields all rounds+1 AUCs in one
     aggregate. Driver state: rounds+1 scalar triples."""
-    import math
-
     from pyspark.sql import Window
 
     from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
@@ -154,7 +150,6 @@ def holdout_auc_ladder(va: DataFrame, trees: list[dict],
         (F.sum("n") - F.sum("np")).alias("n_neg"),
     )
     by_round = {r["round"]: r for r in agg.collect()}
-    r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
     out = []
     for t in range(len(zs)):
         r = by_round[t]

@@ -412,12 +412,8 @@ def ivf_corpus_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF nearest-centroid assignment of the FULL embedding corpus
     (match_id, centroid_id) — the one corpus-wide pass under every
     IVF-backed query (approx top-k, the PQ composition, retrieval
-    eval). Built on the JVM fold path (use_arrow=False, explicit):
-    consumers like q_ivfpq_topk also assign their query side with
-    use_arrow=False, so cell agreement is same-path by construction
-    and never rests on pandas/pyarrow float drift. (The Arrow path's
-    bit-exactness vs this one is separately pinned in
-    tests/test_ext.py.) At 100 TB this IS the
+    eval). ivf_assignments has one kernel, so every query side
+    lands on the cells this pass assigns. At 100 TB this IS the
     `PARTITIONED BY (centroid_id)` corpus layout — computed once at
     ingest, read by every query."""
 
@@ -426,7 +422,7 @@ def ivf_corpus_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         e = read_table(spark, sf_dir, "embeddings")
         centroids = e.filter(F.col("vec_id") % S.CENTROID_MOD == 0)
-        return S.ivf_assignments(e, centroids, nprobe=1, use_arrow=False).select(
+        return S.ivf_assignments(e, centroids, nprobe=1).select(
             F.col("vec_id").alias("match_id"), "centroid_id"
         )
 

@@ -6,8 +6,8 @@ geometry (cell membership / bucket sign bits), and ranking within
 candidates is exact rounded cosine. These tests re-derive the full
 pipelines in plain Python — md5-seeded planes, sequential IEEE dots,
 det_round, (sim DESC, id ASC) ranking — and require the DataFrame
-plans (use_arrow=False, the Catalyst reference forms) to match
-exactly, probed-cell selection and all.
+plans (each operator's one kernel) to match exactly, probed-cell
+selection and all.
 """
 
 from __future__ import annotations
@@ -55,7 +55,7 @@ ivf_vecs = st.lists(
 @given(vecs=ivf_vecs, nprobe=st.integers(1, 2), k=st.integers(1, 3))
 @SETTINGS
 def test_ivf_topk_equals_python_pipeline(spark, vecs, nprobe, k):
-    """ivf_topk (Catalyst form) == the Python replay of its own
+    """ivf_topk == the Python replay of its own
     definition: centroids = every 2nd id, each corpus vector in its
     single nearest centroid's cell, each query probing its nprobe
     nearest cells (rounded cosine DESC, centroid_id ASC), exact
@@ -67,9 +67,7 @@ def test_ivf_topk_equals_python_pipeline(spark, vecs, nprobe, k):
     df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
     got = sorted(
         (r["query_id"], r["match_id"], r["cosine_sim"], r["rank"])
-        for r in ivf_topk(
-            df, df, k=k, nprobe=nprobe, centroid_mod=2, use_arrow=False
-        ).collect()
+        for r in ivf_topk(df, df, k=k, nprobe=nprobe, centroid_mod=2).collect()
     )
 
     cents = [(i, v) for i, v in rows if i % 2 == 0]
@@ -124,7 +122,7 @@ lsh_vecs = st.lists(
 @given(vecs=lsh_vecs, k=st.integers(1, 3))
 @SETTINGS
 def test_ann_topk_equals_python_pipeline(spark, vecs, k):
-    """ann_topk (Catalyst form, 2 tables) == the Python replay:
+    """ann_topk (Arrow index and pair dots, 2 tables) == the Python replay:
     bucket = table-offset sign bits of the md5-seeded hyperplane dots
     (sequential fold, strict > 0), candidates = pairs sharing a bucket
     in ANY table, ranking = exact rounded cosine with match-id
@@ -136,7 +134,7 @@ def test_ann_topk_equals_python_pipeline(spark, vecs, k):
     df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
     got = sorted(
         (r["query_id"], r["match_id"], r["cosine_sim"], r["rank"])
-        for r in ann_topk(df, df, k=k, n_tables=2, use_arrow=False).collect()
+        for r in ann_topk(df, df, k=k, n_tables=2).collect()
     )
     buckets = {i: {_bucket_py(v, t) for t in range(2)} for i, v in rows}
     want = []

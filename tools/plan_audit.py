@@ -147,8 +147,7 @@ def single_partition_over_base(tree: str) -> list[str]:
 
 #: Queries allowed to carry Arrow-batched Python stages.
 ARROW_OK_PREFIXES = (
-    "q_multimodal", "q_ann_topk", "q_ivf_topk", "q_embed", "q_greedy_packing",
-    "q_ann_recall",  # rides ivf_topk's Arrow centroid-assignment stage
+    "q_multimodal", "q_ann_topk", "q_embed", "q_greedy_packing",
     "q_stateful_profile",  # applyInPandas IS the operator (batch twin of applyInPandasWithState)
     "q_ewma_recursive",    # same class: the per-key integer-fold applyInPandas IS the operator
 )
