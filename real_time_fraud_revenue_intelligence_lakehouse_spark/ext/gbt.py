@@ -52,10 +52,27 @@ gains are IEEE doubles computed by the identical expression in Spark
 (driver Python), generated DuckDB SQL, and the NumPy replays
 (tests/test_gbt*.py), so the argmax — and therefore the TREE ITSELF —
 is bit-identical across engines, partition layouts, and model
-stackings. The oracle unrolls the same rounds as generated
-MATERIALIZED CTE blocks (per-row node/side resolution goes through
-the stacked long form joined to the 1-row best-split tables, the
-standard trick for "CASE on a data-dependent column name" in SQL).
+stackings.
+
+The DuckDB oracle is one generator per concern, at any depth, and
+every GBT and SHAP oracle is built from them: :func:`_gbt_chain_ctes`
+unrolls one model's rounds as MATERIALIZED CTE blocks (per-row
+node/side resolution goes through the stacked long form joined to
+the per-level best-split tables, the standard trick for "CASE on a
+data-dependent column name" in SQL), :func:`_gbt_replay_ctes` replays
+a trained chain on a holdout frame, :func:`_auc_ctes` is the rank-sum
+AUC, and :func:`_trial_parts` / :func:`_selection_sql` are the
+train/holdout or k-fold selection scaffold. The depth-2 oracles call
+them with depth 2. The oracle shares only pure helpers with the
+engine (bins, gain and leaf formulas, the column schedule); it is
+SQL, so it checks the engine rather than re-running it.
+
+Degenerate-frame contract: the engine raises ValueError on an empty
+frame ("empty feature frame") and on a node with no admissible split
+("unsplittable …"); the oracle calls DuckDB ``error()`` on the same
+inputs (the chain's ``nz`` and per-level guards), so both engines
+fail loudly instead of the oracle inventing NULL-structured trees.
+The toy sf0.001 frame is outside this domain for some depth-3 trials.
 
 Cites: reference `ml/models/fraud_detector.py:36,154` (XGBClassifier,
 tree_method=hist), `ml/models/train.py:201` (fit call),
@@ -140,12 +157,21 @@ def _gain(
     return (gl * gl) / (hl + lam) + (gr * gr) / (hr + lam) - (g * g) / (h + lam)
 
 
-def _gain_sql(glm: str, hlm: str, gm: str, hm: str, lam: float) -> str:
-    gl = f"(CAST({glm} AS DOUBLE) / 1000000.0)"
+def _thr_sql(x: str, a: int) -> str:
+    """SQL twin of :func:`_thr` — exact integer thresholding; α=0 is
+    the identity, as in the engine."""
+    if not a:
+        return x
+    return f"(CASE WHEN {x} > {a} THEN {x} - {a} WHEN {x} < -{a} THEN {x} + {a} ELSE 0 END)"
+
+
+def _gain_sql(glm: str, hlm: str, gm: str, hm: str, lam: float, a: int = 0) -> str:
+    """SQL twin of :func:`_gain` (``a`` = reg_alpha in micros)."""
+    gl = f"(CAST({_thr_sql(glm, a)} AS DOUBLE) / 1000000.0)"
     hl = f"(CAST({hlm} AS DOUBLE) / 1000000.0)"
-    gr = f"(CAST({gm} - {glm} AS DOUBLE) / 1000000.0)"
+    gr = f"(CAST({_thr_sql(f'({gm} - {glm})', a)} AS DOUBLE) / 1000000.0)"
     hr = f"(CAST({hm} - {hlm} AS DOUBLE) / 1000000.0)"
-    g = f"(CAST({gm} AS DOUBLE) / 1000000.0)"
+    g = f"(CAST({_thr_sql(gm, a)} AS DOUBLE) / 1000000.0)"
     h = f"(CAST({hm} AS DOUBLE) / 1000000.0)"
     return (
         f"({gl} * {gl}) / ({hl} + {lam!r}) + ({gr} * {gr}) / ({hr} + {lam!r})"
@@ -157,6 +183,14 @@ def _leaf_w(glm: int, hlm: int, lam: float, alpha_micro: int = 0) -> float:
     """w = −ThresholdL1(G)/(H+λ) from integer micro-sums — same text as
     the SQL; α=0 is XGBoost's plain −G/(H+λ)."""
     return -(_thr(glm, alpha_micro) / 1e6) / ((hlm / 1e6) + lam)
+
+
+def _leaf_sql(gm: str, hm: str, lam: float, a: int = 0) -> str:
+    """SQL twin of :func:`_leaf_w`."""
+    return (
+        f"-(CAST({_thr_sql(gm, a)} AS DOUBLE) / 1000000.0)"
+        f" / ((CAST({hm} AS DOUBLE) / 1000000.0) + {lam!r})"
+    )
 
 
 def _argmax_split_sub(
@@ -709,214 +743,315 @@ def gbt_trained_score_expr(trees: list[dict], eta: float = GBT_ETA) -> Column:
 
 
 # --- generated DuckDB oracle -------------------------------------------------
+#
+# One generator per concern, at any depth: _gbt_chain_ctes (the
+# boosting rounds), _gbt_replay_ctes (a trained chain replayed on a
+# holdout frame), _auc_ctes (the rank-sum AUC) and _trial_parts with
+# _selection_sql (the train/holdout or k-fold selection scaffold).
+# Every GBT and SHAP oracle is built from them; depth-2 ids pass
+# depth=2.
+
+#: The round6 sigmoid of a rows CTE's ensemble logit ``f``.
+_S6_SQL = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
+#: The round6 mean log-loss of a rows CTE: per-row losses round6 and
+#: sum as decimals, so the mean is order-independent.
+_MEAN_LOSS_SQL = R6_SQL.format(
+    c="CAST(sum(CAST({l6} AS DECIMAL(18,6))) AS DOUBLE) / count(*)".format(
+        l6=R6_SQL.format(
+            c=f"CASE WHEN label = 1 THEN -ln({_S6_SQL}) ELSE -ln(1.0 - {_S6_SQL}) END"
+        )
+    )
+)
+#: A row's side at its node: left iff its bin of the split feature is
+#: ≤ the split bin (aliases ``s`` = stacked bins, ``b`` = split).
+_SIDE_SQL = "CASE WHEN s.bin <= b.bin THEN 0 ELSE 1 END"
 
 
-def _gbt_ctes(
+def _sub_pred_sql(t: int, subsample: float) -> str:
+    """Round-``t`` row-selection predicate, DuckDB side — the engine's
+    subsample bucket (:func:`_sub_ranks`) encodes the same test."""
+    return (
+        f"(('0x' || substr(md5(o_orderkey::VARCHAR || '#r{t}'), 1, 15))::BIGINT"
+        f" % 100) < {_sub_pct(subsample)}"
+    )
+
+
+def _route_sql(nd: str, b: str, st: str, lvl: int) -> tuple[str, str]:
+    """(node, FROM clause): the rows at level ``lvl`` — every row at
+    level 0, else the node table ``{nd}_{lvl}`` — joined to their
+    node's split in ``{b}_{lvl}`` and, as ``s.bin``, to their bin of
+    its feature in the stacked frame ``st``."""
+    if lvl == 0:
+        return "1", f"FROM {st} s JOIN {b}_0 b ON s.fidx = b.fidx"
+    return "n.node", (
+        f"FROM {nd}_{lvl} n JOIN {b}_{lvl} b ON b.node = n.node "
+        f"JOIN {st} s ON s.o_orderkey = n.o_orderkey AND s.fidx = b.fidx"
+    )
+
+
+def _gbt_chain_ctes(
     fv_sql: str,
     features: tuple[str, ...] = SCORE_FEATURES,
     rounds: int = GBT_ROUNDS,
     bins: int = GBT_BINS,
     lam: float = GBT_LAMBDA,
     eta: float = GBT_ETA,
-    weighted: bool = False,
+    depth: int = 2,
+    subsample: float | None = None,
+    colsample: float | None = None,
     prefix: str = "",
+    min_child_weight: float = 0.0,
+    reg_alpha: float = 0.0,
+    pos_weight: float | str | None = None,
 ) -> tuple[str, str]:
-    """(cte_block, final_rows_cte): the unrolled boosting rounds.
-    Every arithmetic step mirrors :func:`train_gbt` token for token.
-    Per-row split application resolves the data-dependent split
-    feature through the stacked long form joined to the 1-row best
-    tables; hot CTEs are MATERIALIZED (DuckDB otherwise re-inlines
-    each reference, exponentially re-evaluating the chain).
-    ``weighted=True`` multiplies every gradient/hessian contribution
-    by scale_pos_weight = n0/n1 (from a cnts CTE of exact counts)
-    before the micro-floor — the weighted :func:`train_gbt` fold.
-    ``prefix`` namespaces every CTE so several configs can share one
-    statement (q_gbt_model_selection — the logreg_train_ctes
-    convention).
+    """(cte_block, final_rows_cte): the unrolled boosting rounds of
+    one engine model, every arithmetic step token for token the
+    engine's. Per round t: gh{t} (round6 sigmoid, integer micro
+    gradient/hessian), st{t} (the eligible features stacked long);
+    per level L: nd{t}_L (heap node of every row; level 0 is the
+    root, so its histogram groups st{t} directly), hh{t}_L
+    (histogram over the round's selected rows), bc{t}_L (argmax per
+    node with the node totals), b{t}_L (bc{t}_L behind its guard);
+    then lw{t} (leaf weights), sd{t} (leaf sides) and rows{t}
+    (ensemble update over ALL rows). Hot CTEs are MATERIALIZED
+    (DuckDB otherwise re-inlines each reference); b{t}_L is not,
+    which at depth 2 costs less than materializing the guarded table
+    again. ``prefix`` namespaces every CTE so several chains share
+    one statement.
 
-    Degenerate-frame contract (ADVICE r13): on a frame where the root
-    split leaves a child node EMPTY, :func:`train_gbt` raises
-    ValueError — and so does this oracle: a chk CTE (evaluated on the
-    best2 path every arm reads) calls DuckDB ``error()`` unless both
-    child nodes materialized, so engine and oracle agree on degenerate
-    inputs by BOTH failing loudly instead of the oracle inventing
-    NULL-structured rows."""
+    ``pos_weight`` (scale_pos_weight) multiplies positive rows'
+    gradient and hessian before the micro-floor: a float is written as
+    a literal, a string is SQL (q_gbt_train_weighted's data-derived
+    n0/n1). ``subsample`` adds a per-round ``insub`` flag and filter,
+    only when it is below 1.
+
+    Degenerate-frame contract: where the engine raises ValueError —
+    an empty frame, or a node with no selected rows or no admissible
+    split ("unsplittable root" at level 0) — the oracle calls DuckDB
+    ``error()``, so engine and oracle agree on degenerate inputs by
+    both failing loudly instead of the oracle inventing NULL-structured
+    rows. The ``nz`` guard always has one row: consumers whose final
+    arms are unconditional scan it, and the first level guard reads it
+    before its own error, so on an empty frame nz's error fires."""
     p_ = prefix
-    bin_cols = ", ".join(
-        f"{_bin_sql(f, bins)} AS b_{f}" for f in features
+    bin_cols = ", ".join(f"{_bin_sql(f, bins)} AS b_{f}" for f in features)
+    stack_case = " ".join(f"WHEN {i} THEN g.b_{f}" for i, f in enumerate(features))
+    b_star = ", ".join(f"b_{f}" for f in features)
+    sub = subsample is not None and subsample < 1.0
+    mcw = int(round(min_child_weight * 1e6))
+    a = int(round(reg_alpha * 1e6))
+    admissible = "c.bin < c.maxbin" + (
+        f" AND c.hl_m >= {mcw} AND (t.h_m - c.hl_m) >= {mcw}" if mcw else ""
     )
-    stack_case = " ".join(
-        f"WHEN {i} THEN g.b_{f}" for i, f in enumerate(features)
-    )
-    fidx_vals = ", ".join(f"({i})" for i in range(len(features)))
+    gain = _gain_sql("c.gl_m", "c.hl_m", "t.g_m", "t.h_m", lam, a)
     parts = [
         f"{p_}fv AS ({fv_sql})",
         (
             f"{p_}rows0 AS MATERIALIZED (SELECT o_orderkey, label, "
             f"{bin_cols}, CAST(0.0 AS DOUBLE) AS f FROM {p_}fv)"
         ),
-        # Empty-frame guard (ADVICE r15): ck1/ck2/chk ride join WHEREs,
-        # so on a fully EMPTY frame no row ever evaluates them and the
-        # oracle would return silent NULL/zero-row trees while
-        # train_gbt raises. This 1-row CTE always exists; consumers
-        # whose final arms are unconditional (gbt_train_sql's per-tree
-        # selects) scan it, so the error() provably fires.
         (
-            f"{p_}nz AS (SELECT CASE WHEN (SELECT count(*) FROM {p_}rows0) "
+            f"{p_}nz AS MATERIALIZED (SELECT CASE WHEN (SELECT count(*) FROM {p_}rows0) "
             f">= 1 THEN 1 ELSE CAST(error('empty feature frame: GBT "
             f"training needs at least one row - outside the gated GBT "
             f"domain (train_gbt raises ValueError)') AS INTEGER) END AS oknz)"
         ),
     ]
-    if weighted:
-        parts.append(
-            f"{p_}cnts AS (SELECT CAST(sum(1 - label) AS DOUBLE) AS n0, "
-            f"CAST(sum(label) AS DOUBLE) AS n1 FROM {p_}fv)"
-        )
-    wgt = "(CASE WHEN label = 1 THEN (n0 / n1) ELSE 1.0 END)"
-    b_star = ", ".join(f"b_{f}" for f in features)
     for t in range(1, rounds + 1):
-        p = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
-        gc = f"(({p}) - CAST(label AS DOUBLE))"
-        hc = f"(({p}) * (1.0 - ({p})))"
-        if weighted:
-            gc = f"{gc} * {wgt}"
-            hc = f"{hc} * {wgt}"
+        r = t - 1  # the engine's round index: schedules and messages
+        active = col_subset(features, r, colsample)
+        fidx_vals = ", ".join(f"({i})" for i in active)
+        gc = f"(({_S6_SQL}) - CAST(label AS DOUBLE))"
+        hc = f"(({_S6_SQL}) * (1.0 - ({_S6_SQL})))"
+        if pos_weight not in (None, 1.0):
+            w = pos_weight if isinstance(pos_weight, str) else repr(float(pos_weight))
+            wgt = f"(CASE WHEN label = 1 THEN {w} ELSE 1.0 END)"
+            gc, hc = f"{gc} * {wgt}", f"{hc} * {wgt}"
+        insub = (
+            f"CASE WHEN {_sub_pred_sql(r, subsample)} THEN 1 ELSE 0 END AS insub, "
+            if sub
+            else ""
+        )
+        nd, bt, st = f"{p_}nd{t}", f"{p_}b{t}", f"{p_}st{t}"
         parts.append(
             f"{p_}gh{t} AS MATERIALIZED (SELECT o_orderkey, label, {b_star}, f, "
-            f"CAST(floor({gc} * 1000000.0 + 0.5) AS BIGINT) AS gm, "
+            f"{insub}CAST(floor({gc} * 1000000.0 + 0.5) AS BIGINT) AS gm, "
             f"CAST(floor({hc} * 1000000.0 + 0.5) AS BIGINT) AS hm "
-            f"FROM {p_}rows{t - 1}{f' CROSS JOIN {p_}cnts' if weighted else ''})"
+            f"FROM {p_}rows{r})"
         )
         parts.append(
-            f"{p_}st{t} AS MATERIALIZED (SELECT g.o_orderkey, g.gm, g.hm, fe.fidx, "
+            f"{st} AS MATERIALIZED (SELECT g.o_orderkey, "
+            f"{'g.insub, ' if sub else ''}g.gm, g.hm, fe.fidx, "
             f"CASE fe.fidx {stack_case} END AS bin "
             f"FROM {p_}gh{t} g CROSS JOIN (VALUES {fidx_vals}) fe(fidx))"
         )
+        for lvl in range(depth):
+            hh, bc = f"{p_}hh{t}_{lvl}", f"{p_}bc{t}_{lvl}"
+            if lvl:
+                node, frm = _route_sql(nd, bt, st, lvl - 1)
+                parts.append(
+                    f"{nd}_{lvl} AS MATERIALIZED (SELECT s.o_orderkey, "
+                    f"{node} * 2 + {_SIDE_SQL} AS node {frm})"
+                )
+            src = (
+                f"{st} s JOIN {nd}_{lvl} n ON n.o_orderkey = s.o_orderkey"
+                if lvl
+                else f"{st} s"
+            )
+            parts.append(
+                f"{hh} AS MATERIALIZED (SELECT {'n.node' if lvl else '1'} AS node, "
+                f"s.fidx, s.bin, sum(s.gm) AS gs, sum(s.hm) AS hs FROM {src}"
+                f"{' WHERE s.insub = 1' if sub else ''} GROUP BY 1, 2, 3)"
+            )
+            # the argmax per node over each feature's cumulative bins
+            # (its last occupied bin is not a candidate: interior-only,
+            # as in _argmax_split_sub), node totals alongside
+            cum = (
+                f"SELECT node, fidx, bin, "
+                f"sum(gs) OVER (PARTITION BY node, fidx ORDER BY bin) AS gl_m, "
+                f"sum(hs) OVER (PARTITION BY node, fidx ORDER BY bin) AS hl_m, "
+                f"max(bin) OVER (PARTITION BY node, fidx) AS maxbin FROM {hh}"
+            )
+            tot = (
+                f"SELECT node, sum(gs) AS g_m, sum(hs) AS h_m "
+                f"FROM {hh} WHERE fidx = {min(active)} GROUP BY 1"
+            )
+            parts.append(
+                f"{bc} AS MATERIALIZED (SELECT node, fidx, bin, gl_m, hl_m, g_m, h_m, gain "
+                f"FROM (SELECT c.node, c.fidx, c.bin, c.gl_m, c.hl_m, t.g_m, t.h_m, "
+                f"{gain} AS gain, row_number() OVER (PARTITION BY c.node "
+                f"ORDER BY {gain} DESC, c.fidx, c.bin) AS rn "
+                f"FROM ({cum}) c JOIN ({tot}) t ON t.node = c.node "
+                f"WHERE {admissible}) WHERE rn = 1)"
+            )
+            # the engine's ValueError twin: every one of the level's 2^L
+            # nodes received (selected) rows and has an admissible
+            # candidate, else error(). The first guard reads nz before
+            # its error, so on an empty frame nz's error fires; every
+            # later guard depends on this one's table.
+            msg = (
+                f"unsplittable {'node' if lvl else 'root'} in round {r} level "
+                f"{lvl}: a node has no selected rows or no admissible split "
+                f"candidate - outside the gated GBT domain"
+            )
+            arm = f"WHEN (SELECT oknz FROM {p_}nz) = 1 THEN" if t == 1 and lvl == 0 else "ELSE"
+            parts.append(
+                f"{bt}_{lvl} AS (SELECT b.* FROM {bc} b CROSS JOIN "
+                f"(SELECT CASE WHEN (SELECT count(*) FROM {bc}) = {2 ** lvl} THEN 1 "
+                f"{arm} CAST(error('{msg}') AS INTEGER) END AS ok) k WHERE k.ok = 1)"
+            )
+        last = depth - 1
+        wl = _leaf_sql("b.gl_m", "b.hl_m", lam, a)
+        wr = _leaf_sql("(b.g_m - b.gl_m)", "(b.h_m - b.hl_m)", lam, a)
         parts.append(
-            f"{p_}h1_{t} AS MATERIALIZED (SELECT fidx, bin, "
-            f"sum(gm) AS gs, sum(hm) AS hs FROM {p_}st{t} GROUP BY 1, 2)"
-        )
-        parts.append(
-            f"{p_}tot{t} AS (SELECT sum(gs) AS g_m, sum(hs) AS h_m "
-            f"FROM {p_}h1_{t} WHERE fidx = 0)"
-        )
-        parts.append(
-            f"{p_}cum1_{t} AS (SELECT fidx, bin, "
-            f"sum(gs) OVER (PARTITION BY fidx ORDER BY bin) AS gl_m, "
-            f"sum(hs) OVER (PARTITION BY fidx ORDER BY bin) AS hl_m, "
-            # each feature's LAST occupied bin is not a candidate —
-            # its "split" sends every row left (the r15 interior-only
-            # rule, mirrored in _argmax_split)
-            f"max(bin) OVER (PARTITION BY fidx) AS maxbin "
-            f"FROM {p_}h1_{t})"
-        )
-        # the _argmax_split "unsplittable node" ValueError twin:
-        # admissible candidates exist iff some feature occupies ≥2
-        # bins; evaluated in best1's WHERE, whose input (cum1 × tot)
-        # is non-empty whenever the frame is, so the error() fires
-        parts.append(
-            f"{p_}ck1_{t} AS (SELECT CASE WHEN (SELECT count(*) FROM "
-            f"(SELECT fidx FROM {p_}h1_{t} GROUP BY fidx "
-            f"HAVING count(*) >= 2)) >= 1 THEN 1 "
-            f"ELSE CAST(error('unsplittable root in round {t}: every "
-            f"feature has a single occupied bin - outside the gated GBT "
-            f"domain (train_gbt raises ValueError)') AS INTEGER) END AS ok1)"
-        )
-        gain1 = _gain_sql("c.gl_m", "c.hl_m", "t.g_m", "t.h_m", lam)
-        parts.append(
-            f"{p_}best1_{t} AS MATERIALIZED (SELECT c.fidx, c.bin, {gain1} AS gain "
-            f"FROM {p_}cum1_{t} c CROSS JOIN {p_}tot{t} t "
-            f"CROSS JOIN {p_}ck1_{t} "
-            f"WHERE c.bin < c.maxbin AND ok1 = 1 "
-            f"ORDER BY {gain1} DESC, c.fidx, c.bin LIMIT 1)"
-        )
-        parts.append(
-            f"{p_}nod{t} AS MATERIALIZED (SELECT s.o_orderkey, "
-            f"CASE WHEN s.bin <= b.bin THEN 0 ELSE 1 END AS node "
-            f"FROM {p_}st{t} s JOIN {p_}best1_{t} b ON s.fidx = b.fidx)"
-        )
-        parts.append(
-            f"{p_}h2_{t} AS MATERIALIZED (SELECT n.node, s.fidx, s.bin, "
-            f"sum(s.gm) AS gs, sum(s.hm) AS hs "
-            f"FROM {p_}st{t} s JOIN {p_}nod{t} n ON n.o_orderkey = s.o_orderkey "
-            f"GROUP BY 1, 2, 3)"
-        )
-        parts.append(
-            f"{p_}tot2_{t} AS (SELECT node, sum(gs) AS g_m, sum(hs) AS h_m "
-            f"FROM {p_}h2_{t} WHERE fidx = 0 GROUP BY 1)"
-        )
-        # the train_gbt ValueError twin: an empty child node means no
-        # depth-2 tree exists — refuse to fabricate NULL structure
-        parts.append(
-            f"{p_}chk{t} AS (SELECT CASE WHEN "
-            f"(SELECT count(*) FROM {p_}tot2_{t}) = 2 THEN 1 "
-            f"ELSE CAST(error('degenerate root split in round {t}: a child "
-            f"node is empty - out of the gated GBT domain (train_gbt "
-            f"raises ValueError)') AS INTEGER) END AS ok)"
-        )
-        # per-node admissibility twin for the children (some feature
-        # occupies ≥2 bins in BOTH nodes), evaluated in best2's WHERE
-        parts.append(
-            f"{p_}ck2_{t} AS (SELECT CASE WHEN (SELECT count(*) FROM "
-            f"(SELECT node FROM (SELECT node, fidx FROM {p_}h2_{t} "
-            f"GROUP BY node, fidx HAVING count(*) >= 2) GROUP BY node)) = 2 "
-            f"THEN 1 ELSE CAST(error('unsplittable child node in round {t}: "
-            f"every feature has a single occupied bin - outside the gated "
-            f"GBT domain (train_gbt raises ValueError)') AS INTEGER) "
-            f"END AS ok2)"
-        )
-        parts.append(
-            f"{p_}cum2_{t} AS (SELECT node, fidx, bin, "
-            f"sum(gs) OVER (PARTITION BY node, fidx ORDER BY bin) AS gl_m, "
-            f"sum(hs) OVER (PARTITION BY node, fidx ORDER BY bin) AS hl_m, "
-            f"max(bin) OVER (PARTITION BY node, fidx) AS maxbin "
-            f"FROM {p_}h2_{t})"
-        )
-        gain2 = _gain_sql("c.gl_m", "c.hl_m", "t.g_m", "t.h_m", lam)
-        parts.append(
-            f"{p_}best2_{t} AS MATERIALIZED (SELECT node, fidx, bin, gl_m, hl_m, gain FROM ("
-            f"SELECT c.node, c.fidx, c.bin, c.gl_m, c.hl_m, {gain2} AS gain, "
-            f"row_number() OVER (PARTITION BY c.node "
-            f"ORDER BY {gain2} DESC, c.fidx, c.bin) AS rn "
-            # interior-only BEFORE the row_number, so rn=1 is the best
-            # ADMISSIBLE candidate per node
-            f"FROM {p_}cum2_{t} c JOIN {p_}tot2_{t} t ON t.node = c.node "
-            f"WHERE c.bin < c.maxbin) "
-            # ok rides in the WHERE (not an unused projection DuckDB
-            # would prune away): the filter must evaluate the CASE,
-            # so the error() actually fires on degenerate frames
-            f"CROSS JOIN {p_}chk{t} CROSS JOIN {p_}ck2_{t} "
-            f"WHERE rn = 1 AND ok = 1 AND ok2 = 1)"
-        )
-        wl = (
-            "-(CAST(b.gl_m AS DOUBLE) / 1000000.0)"
-            f" / ((CAST(b.hl_m AS DOUBLE) / 1000000.0) + {lam!r})"
-        )
-        wr = (
-            "-(CAST(t.g_m - b.gl_m AS DOUBLE) / 1000000.0)"
-            f" / ((CAST(t.h_m - b.hl_m AS DOUBLE) / 1000000.0) + {lam!r})"
-        )
-        parts.append(
-            f"{p_}leafw{t} AS MATERIALIZED (SELECT b.node, s.side, "
+            f"{p_}lw{t} AS MATERIALIZED (SELECT b.node, s.side, "
             f"CASE s.side WHEN 0 THEN {wl} ELSE {wr} END AS w "
-            f"FROM {p_}best2_{t} b JOIN {p_}tot2_{t} t ON t.node = b.node "
-            f"CROSS JOIN (VALUES (0), (1)) s(side))"
+            f"FROM {bt}_{last} b CROSS JOIN (VALUES (0), (1)) s(side))"
         )
+        node, frm = _route_sql(nd, bt, st, last)
         parts.append(
-            f"{p_}sides{t} AS (SELECT n.o_orderkey, n.node, "
-            f"CASE WHEN s.bin <= b.bin THEN 0 ELSE 1 END AS side "
-            f"FROM {p_}nod{t} n JOIN {p_}best2_{t} b ON b.node = n.node "
-            f"JOIN {p_}st{t} s ON s.o_orderkey = n.o_orderkey AND s.fidx = b.fidx)"
+            f"{p_}sd{t} AS (SELECT s.o_orderkey, {node} AS node, "
+            f"{_SIDE_SQL} AS side {frm})"
         )
         parts.append(
             f"{p_}rows{t} AS MATERIALIZED (SELECT r.o_orderkey, r.label, {b_star}, "
             f"r.f + {eta!r} * l.w AS f "
-            f"FROM {p_}rows{t - 1} r "
-            f"JOIN {p_}sides{t} sd ON sd.o_orderkey = r.o_orderkey "
-            f"JOIN {p_}leafw{t} l ON l.node = sd.node AND l.side = sd.side)"
+            f"FROM {p_}rows{r} r "
+            f"JOIN {p_}sd{t} sd ON sd.o_orderkey = r.o_orderkey "
+            f"JOIN {p_}lw{t} l ON l.node = sd.node AND l.side = sd.side)"
         )
     return ",\n    ".join(parts), f"{p_}rows{rounds}"
+
+
+def _gbt_replay_ctes(
+    prefix: str,
+    holdout_from: str,
+    features: tuple[str, ...] = SCORE_FEATURES,
+    rounds: int = GBT_ROUNDS,
+    bins: int = GBT_BINS,
+    eta: float = GBT_ETA,
+    depth: int = 2,
+) -> tuple[str, str]:
+    """(cte_block, final_holdout_cte): replay the splits of the chain
+    ``prefix`` trained on a holdout frame — per round, walk its
+    b{t}_L tables level by level (hnd{t}_L, hsd{t}), then accumulate
+    f += eta·w from lw{t} in the exact operation order rows{t} uses,
+    so the holdout logit hr{t} is the same left-associated double the
+    engine's compiled ensemble computes."""
+    p_ = prefix
+    bin_cols = ", ".join(f"{_bin_sql(f, bins)} AS b_{f}" for f in features)
+    stack_case = " ".join(f"WHEN {i} THEN g.b_{f}" for i, f in enumerate(features))
+    all_fidx = ", ".join(f"({i})" for i in range(len(features)))
+    st = f"{p_}hst"
+    parts = [
+        (
+            f"{p_}hr0 AS MATERIALIZED (SELECT o_orderkey, label, "
+            f"{bin_cols}, CAST(0.0 AS DOUBLE) AS f FROM {holdout_from})"
+        ),
+        (
+            f"{st} AS MATERIALIZED (SELECT g.o_orderkey, fe.fidx, "
+            f"CASE fe.fidx {stack_case} END AS bin "
+            f"FROM {p_}hr0 g CROSS JOIN (VALUES {all_fidx}) fe(fidx))"
+        ),
+    ]
+    for t in range(1, rounds + 1):
+        nd, bt = f"{p_}hnd{t}", f"{p_}b{t}"
+        for lvl in range(1, depth):
+            node, frm = _route_sql(nd, bt, st, lvl - 1)
+            parts.append(
+                f"{nd}_{lvl} AS (SELECT s.o_orderkey, "
+                f"{node} * 2 + {_SIDE_SQL} AS node {frm})"
+            )
+        node, frm = _route_sql(nd, bt, st, depth - 1)
+        parts.append(
+            f"{p_}hsd{t} AS (SELECT s.o_orderkey, {node} AS node, "
+            f"{_SIDE_SQL} AS side {frm})"
+        )
+        parts.append(
+            f"{p_}hr{t} AS MATERIALIZED (SELECT r.o_orderkey, r.label, "
+            f"r.f + {eta!r} * l.w AS f "
+            f"FROM {p_}hr{t - 1} r "
+            f"JOIN {p_}hsd{t} sd ON sd.o_orderkey = r.o_orderkey "
+            f"JOIN {p_}lw{t} l ON l.node = sd.node AND l.side = sd.side)"
+        )
+    return ",\n    ".join(parts), f"{p_}hr{rounds}"
+
+
+def _auc_ctes(p_: str, scored: str, key: str | None = None) -> tuple[str, str]:
+    """(cte_block, auc_cte): the round6 exact Mann-Whitney AUC
+    (average-rank ties) of a (label, s) CTE — q_model_card's rank-sum
+    over the bounded distinct-score table, one ``auc`` row per ``key``
+    value when a key is given, else one row. A one-class group scores
+    0.0. The SQL twin of :func:`_rank_sum_aucs`."""
+    k = f"{key}, " if key else ""
+    auc_raw = (
+        "(CAST(rank_sum AS DOUBLE) "
+        "- CAST(n_pos AS DOUBLE) * (n_pos + 1) / 2)"
+        " / (CAST(n_pos AS DOUBLE) * n_neg)"
+    )
+    auc6 = R6_SQL.format(
+        c=f"CASE WHEN n_pos = 0 OR n_neg = 0 THEN 0.0 ELSE {auc_raw} END"
+    )
+    parts = [
+        (
+            f"{p_}grp AS (SELECT {k}s, count(*) AS n, sum(label) AS np "
+            f"FROM {scored} GROUP BY {k}s)"
+        ),
+        (
+            f"{p_}cum AS (SELECT {k}s, n, np, "
+            f"coalesce(sum(n) OVER w, 0) AS cum_n FROM {p_}grp "
+            f"WINDOW w AS ({f'PARTITION BY {key} ' if key else ''}ORDER BY s "
+            f"ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))"
+        ),
+        (
+            f"{p_}agg AS (SELECT {k}sum(np) AS n_pos, sum(n) - sum(np) AS n_neg, "
+            f"sum(CAST(np AS DECIMAL(28,1)) "
+            f"* CAST(cum_n + (n + 1) / 2.0 AS DECIMAL(28,1))) AS rank_sum "
+            f"FROM {p_}cum{f' GROUP BY {key}' if key else ''})"
+        ),
+        f"{p_}auc AS (SELECT {k}{auc6} AS auc FROM {p_}agg)",
+    ]
+    return ",\n    ".join(parts), f"{p_}auc"
 
 
 def gbt_train_sql(
@@ -929,36 +1064,42 @@ def gbt_train_sql(
     weighted: bool = False,
 ) -> str:
     """Complete oracle for q_gbt_train (and its scale_pos_weight
-    twin): one row per tree with the full depth-2 structure — split
-    features by NAME, split bins, and the four round6 leaf values."""
-    ctes, _ = _gbt_ctes(fv_sql, features, rounds, bins, lam, eta, weighted=weighted)
-    fname_case = " ".join(
-        f"WHEN {i} THEN '{f}'" for i, f in enumerate(features)
+    twin): one row per depth-2 tree — split features by NAME, split
+    bins, and the four round6 leaf values. ``weighted=True`` weighs
+    positives by n0/n1 computed in SQL from exact label counts (the
+    weighted :func:`train_gbt` fold)."""
+    cnts = ""
+    if weighted:
+        cnts = (
+            "cnts AS (SELECT CAST(sum(1 - label) AS DOUBLE) AS n0, "
+            f"CAST(sum(label) AS DOUBLE) AS n1 FROM ({fv_sql})),\n    "
+        )
+    ctes, _ = _gbt_chain_ctes(
+        fv_sql, features, rounds, bins, lam, eta,
+        pos_weight="(SELECT n0 / n1 FROM cnts)" if weighted else None,
     )
+    fname = "CASE fidx " + " ".join(
+        f"WHEN {i} THEN '{f}'" for i, f in enumerate(features)
+    ) + " END"
+    w6 = R6_SQL.format(c="w")
     tree_sels = []
     for t in range(1, rounds + 1):
-        w = lambda node, side: (  # noqa: E731
-            f"(SELECT {R6_SQL.format(c='w')} FROM leafw{t} "
-            f"WHERE node = {node} AND side = {side})"
-        )
+        cols = [f"CAST({t - 1} AS INTEGER) AS tree"]
+        for pos, node in (("root", 1), ("l", 2), ("r", 3)):
+            src = f"FROM b{t}_{node // 2} WHERE node = {node}"
+            cols += [f"(SELECT {fname} {src}) AS {pos}_feature", f"(SELECT bin {src}) AS {pos}_bin"]
+        cols += [
+            f"(SELECT {w6} FROM lw{t} WHERE node = {n} AND side = {sd}) AS w_{pos}"
+            for pos, n, sd in (("ll", 2, 0), ("lr", 2, 1), ("rl", 3, 0), ("rr", 3, 1))
+        ]
         tree_sels.append(
-            f"SELECT CAST({t - 1} AS INTEGER) AS tree, "
-            f"(SELECT CASE fidx {fname_case} END FROM best1_{t}) AS root_feature, "
-            f"(SELECT bin FROM best1_{t}) AS root_bin, "
-            f"(SELECT CASE fidx {fname_case} END FROM best2_{t} WHERE node = 0) AS l_feature, "
-            f"(SELECT bin FROM best2_{t} WHERE node = 0) AS l_bin, "
-            f"(SELECT CASE fidx {fname_case} END FROM best2_{t} WHERE node = 1) AS r_feature, "
-            f"(SELECT bin FROM best2_{t} WHERE node = 1) AS r_bin, "
-            f"{w(0, 0)} AS w_ll, {w(0, 1)} AS w_lr, "
-            f"{w(1, 0)} AS w_rl, {w(1, 1)} AS w_rr "
+            f"SELECT {', '.join(cols)} "
             # the empty-frame guard: nz always has exactly 1 row, so
             # this arm still emits 1 tree row — but the WHERE forces
             # oknz's CASE to evaluate, erroring loudly on empty input
-            f"FROM nz WHERE oknz = 1"
+            "FROM nz WHERE oknz = 1"
         )
-        if t < rounds:
-            tree_sels.append("UNION ALL")
-    return f"WITH {ctes}\n    " + "\n    ".join(tree_sels)
+    return f"WITH {cnts}{ctes}\n    " + "\n    UNION ALL\n    ".join(tree_sels)
 
 
 def gbt_importance_sql(
@@ -973,12 +1114,12 @@ def gbt_importance_sql(
     all rounds×levels (XGBoost's gain-mode feature_importances_).
     Per-split gains round6 to decimals BEFORE summing so the per-
     feature total is order-independent across the UNION arms."""
-    ctes, _ = _gbt_ctes(fv_sql, features, rounds, bins, lam, eta)
-    arms = []
-    for t in range(1, rounds + 1):
-        arms.append(f"SELECT fidx, gain FROM best1_{t}")
-        arms.append(f"SELECT fidx, gain FROM best2_{t}")
-    splits = " UNION ALL ".join(arms)
+    ctes, _ = _gbt_chain_ctes(fv_sql, features, rounds, bins, lam, eta)
+    splits = " UNION ALL ".join(
+        f"SELECT fidx, gain FROM b{t}_{lvl}"
+        for t in range(1, rounds + 1)
+        for lvl in range(2)
+    )
     fvals = ", ".join(f"({i}, '{f}')" for i, f in enumerate(features))
     g6 = R6_SQL.format(c="s.gain")
     return f"""WITH {ctes},
@@ -1004,20 +1145,12 @@ def gbt_learning_curve_sql(
     constant 0-logit model) — the loss ladder that proves each tree
     earns its keep. Every rows{t} CTE already carries the partial
     logit f, so each arm is one aggregate over a MATERIALIZED frame."""
-    ctes, _ = _gbt_ctes(fv_sql, features, rounds, bins, lam, eta)
-    arms = []
-    for t in range(rounds + 1):
-        p = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
-        raw = f"CASE WHEN label = 1 THEN -ln({p}) ELSE -ln(1.0 - {p}) END"
-        l6 = R6_SQL.format(c=raw)
-        mean = R6_SQL.format(
-            c=f"CAST(sum(CAST({l6} AS DECIMAL(18,6))) AS DOUBLE) / count(*)"
-        )
-        arms.append(
-            f"SELECT CAST({t} AS INTEGER) AS round, {mean} AS train_logloss "
-            f"FROM rows{t}"
-        )
-    body = "\n    UNION ALL ".join(arms)
+    ctes, _ = _gbt_chain_ctes(fv_sql, features, rounds, bins, lam, eta)
+    body = "\n    UNION ALL ".join(
+        f"SELECT CAST({t} AS INTEGER) AS round, {_MEAN_LOSS_SQL} AS train_logloss "
+        f"FROM rows{t}"
+        for t in range(rounds + 1)
+    )
     return f"WITH {ctes}\n    {body}"
 
 
@@ -1035,11 +1168,10 @@ def gbt_roc_sql(
     CTE differs)."""
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import ROC_THRESHOLDS
 
-    ctes, rows_k = _gbt_ctes(fv_sql, features, rounds, bins, lam, eta)
-    s = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
+    ctes, rows_k = _gbt_chain_ctes(fv_sql, features, rounds, bins, lam, eta)
     taus = ", ".join(f"({t!r})" for t in ROC_THRESHOLDS)
     return f"""WITH {ctes},
-    scored AS (SELECT label, {s} AS s FROM {rows_k}),
+    scored AS (SELECT label, {_S6_SQL} AS s FROM {rows_k}),
     sweep AS (
       SELECT t.tau, scored.label, scored.s
       FROM scored CROSS JOIN (VALUES {taus}) t(tau)
@@ -1066,18 +1198,19 @@ def gbt_score_band_sql(
     bins: int = GBT_BINS,
     lam: float = GBT_LAMBDA,
     eta: float = GBT_ETA,
+    depth: int = 2,
 ) -> str:
-    """Complete oracle for q_gbt_train_score: re-train via the
-    unrolled rounds, score every row with the final ensemble logit,
-    band 3-way, aggregate — the logreg_score_sql shape for trees."""
-    ctes, rows_k = _gbt_ctes(fv_sql, features, rounds, bins, lam, eta)
-    s = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
+    """Complete oracle for q_gbt_train_score (and, at depth 3,
+    q_gbt_deep_score): re-train via the unrolled rounds, score every
+    row with the final ensemble logit, band 3-way, aggregate — the
+    logreg_score_sql shape for trees."""
+    ctes, rows_k = _gbt_chain_ctes(fv_sql, features, rounds, bins, lam, eta, depth)
     mean_s = R6_SQL.format(
         c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*)"
     )
     rate = R6_SQL.format(c="CAST(sum(label) AS DOUBLE) / count(*)")
     return f"""WITH {ctes},
-    scored AS (SELECT label, {s} AS s FROM {rows_k}),
+    scored AS (SELECT label, {_S6_SQL} AS s FROM {rows_k}),
     banded AS (
       SELECT label, s,
              CASE WHEN s >= 0.7 THEN 'high'
@@ -1125,133 +1258,132 @@ def train_gbt_grid(
     return _fit(fv, [_cfg(*c) for c in configs], features, bins, label, scales)
 
 
-def _gbt_holdout_ctes(
-    prefix: str,
-    holdout_from: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    rounds: int = GBT_ROUNDS,
-    bins: int = GBT_BINS,
-    eta: float = GBT_ETA,
+#: The q_model_selection 80/20 train/holdout split as one (train,
+#: holdout) pair of predicates over ``base``.
+_HOLDOUT_80 = ((f"{H60_OK_SQL} < 80", f"{H60_OK_SQL} >= 80"),)
+
+
+def _split_ctes(fv_sql: str, splits=_HOLDOUT_80) -> list[str]:
+    """``base`` and, per split f, its MATERIALIZED tr{f} / va{f}."""
+    parts = [f"base AS ({fv_sql})"]
+    for f, (train, holdout) in enumerate(splits):
+        parts.append(f"tr{f} AS MATERIALIZED (SELECT * FROM base WHERE {train})")
+        parts.append(f"va{f} AS MATERIALIZED (SELECT * FROM base WHERE {holdout})")
+    return parts
+
+
+def _trial_ctes(
+    prefix: str, f: int, cfg, features: tuple[str, ...], bins: int
 ) -> tuple[str, str]:
-    """(cte_block, final_holdout_cte): replay the TRAINED splits on a
-    holdout frame — per round, resolve each holdout row's node and
-    side against the training chain's {prefix}best1/{prefix}best2
-    tables and accumulate f += eta·w from {prefix}leafw, in the exact
-    operation order rows{t} uses, so the holdout logit is the same
-    left-associated double the engine's compiled ensemble computes."""
-    p_ = prefix
-    bin_cols = ", ".join(f"{_bin_sql(f, bins)} AS b_{f}" for f in features)
-    stack_case = " ".join(
-        f"WHEN {i} THEN g.b_{f}" for i, f in enumerate(features)
+    """(cte_block, final_holdout_cte): one grid config (a 4-, 5- or
+    nine-axis tuple, widened by :func:`_cfg`) trained on tr{f} and
+    replayed on va{f}."""
+    _name, rounds, eta, lam, depth, sub, csam, mcw, alpha, spw = _cfg(*cfg)
+    ctes, _ = _gbt_chain_ctes(
+        f"SELECT * FROM tr{f}", features, rounds, bins, lam, eta, depth,
+        sub, csam, prefix, mcw, alpha, spw,
     )
-    fidx_vals = ", ".join(f"({i})" for i in range(len(features)))
-    parts = [
-        (
-            f"{p_}hrows0 AS MATERIALIZED (SELECT o_orderkey, label, "
-            f"{bin_cols}, CAST(0.0 AS DOUBLE) AS f FROM {holdout_from})"
-        ),
-        (
-            f"{p_}hst AS MATERIALIZED (SELECT g.o_orderkey, fe.fidx, "
-            f"CASE fe.fidx {stack_case} END AS bin "
-            f"FROM {p_}hrows0 g CROSS JOIN (VALUES {fidx_vals}) fe(fidx))"
-        ),
-    ]
-    for t in range(1, rounds + 1):
-        parts.append(
-            f"{p_}hnod{t} AS (SELECT s.o_orderkey, "
-            f"CASE WHEN s.bin <= b.bin THEN 0 ELSE 1 END AS node "
-            f"FROM {p_}hst s JOIN {p_}best1_{t} b ON s.fidx = b.fidx)"
-        )
-        parts.append(
-            f"{p_}hsides{t} AS (SELECT n.o_orderkey, n.node, "
-            f"CASE WHEN s.bin <= b.bin THEN 0 ELSE 1 END AS side "
-            f"FROM {p_}hnod{t} n JOIN {p_}best2_{t} b ON b.node = n.node "
-            f"JOIN {p_}hst s ON s.o_orderkey = n.o_orderkey AND s.fidx = b.fidx)"
-        )
-        parts.append(
-            f"{p_}hrows{t} AS MATERIALIZED (SELECT r.o_orderkey, r.label, "
-            f"r.f + {eta!r} * l.w AS f "
-            f"FROM {p_}hrows{t - 1} r "
-            f"JOIN {p_}hsides{t} sd ON sd.o_orderkey = r.o_orderkey "
-            f"JOIN {p_}leafw{t} l ON l.node = sd.node AND l.side = sd.side)"
-        )
-    return ",\n    ".join(parts), f"{p_}hrows{rounds}"
+    hctes, hk = _gbt_replay_ctes(prefix, f"va{f}", features, rounds, bins, eta, depth)
+    return f"{ctes},\n    {hctes}", hk
 
 
-def _gbt_ms_parts(
-    fv_sql: str,
-    configs: tuple[tuple[str, int, float, float], ...] = GBT_MS_CONFIGS,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    bins: int = GBT_BINS,
-) -> tuple[list[str], str, str]:
-    """(cte parts through the selection, vals, loss_case): hash-split
-    train/holdout, one unrolled boosting chain per config (namespaced
-    g{i}_), a holdout split-replay per config, per-config decimal-
-    folded holdout losses folded into the 1-row ``m`` CTE, plus the
-    VALUES/CASE strings consumers need to label configs — shared by
-    the selection and retrain-best oracles."""
-    parts = [
-        f"base AS ({fv_sql})",
-        f"tr AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} < 80)",
-        f"va AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} >= 80)",
-    ]
-    loss_ctes = []
-    for i, (_name, rounds, eta, lam) in enumerate(configs):
-        p_ = f"g{i}_"
-        ctes, _rk = _gbt_ctes(
-            "SELECT * FROM tr", features, rounds, bins, lam, eta, prefix=p_
-        )
-        parts.append(ctes)
-        hctes, hk = _gbt_holdout_ctes(p_, "va", features, rounds, bins, eta)
-        parts.append(hctes)
-        p = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
-        raw = f"CASE WHEN label = 1 THEN -ln({p}) ELSE -ln(1.0 - {p}) END"
-        l6 = R6_SQL.format(c=raw)
-        loss_ctes.append(f"{p_}loss")
-        parts.append(
-            f"{p_}loss AS (SELECT count(*) AS n, "
-            f"sum(CAST({l6} AS DECIMAL(18,6))) AS L FROM {hk})"
-        )
-    joins = " ".join(f"CROSS JOIN {lc} v{i}" for i, lc in enumerate(loss_ctes[1:], 1))
-    means = ", ".join(
-        f"{R6_SQL.format(c=f'CAST(v{i}.L AS DOUBLE) / v{i}.n')} AS m_{i}"
-        for i in range(len(configs))
+def _loss_score(p_: str, rows: str) -> tuple[str, str]:
+    """(cte, scalar SQL): a holdout frame's round6 mean log-loss."""
+    return (
+        f"{p_}loss AS (SELECT {_MEAN_LOSS_SQL} AS m FROM {rows})",
+        f"(SELECT m FROM {p_}loss)",
     )
-    parts.append(f"m AS (SELECT {means} FROM {loss_ctes[0]} v0 {joins})")
+
+
+def _auc_score(p_: str, rows: str) -> tuple[str, str]:
+    """(ctes, scalar SQL): a holdout frame's round6 rank-sum AUC."""
+    ctes, auc = _auc_ctes(p_, f"{p_}scored")
+    return (
+        f"{p_}scored AS (SELECT label, {_S6_SQL} AS s FROM {rows}),\n    {ctes}",
+        f"(SELECT auc FROM {auc})",
+    )
+
+
+def _trial_parts(
+    fv_sql: str, configs, features: tuple[str, ...], bins: int, score, splits=_HOLDOUT_80
+) -> tuple[list[str], dict[tuple[int, int], str]]:
+    """The selection scaffold: (CTE parts, {(split, config): score
+    SQL}). Per (split f, config i) one chain on tr{f}, its replay on
+    va{f}, and ``score(prefix, holdout_rows)`` → (ctes, scalar)."""
+    parts = _split_ctes(fv_sql, splits)
+    out = {}
+    for f in range(len(splits)):
+        for i, cfg in enumerate(configs):
+            p_ = f"k{f}c{i}_"
+            ctes, hk = _trial_ctes(p_, f, cfg, features, bins)
+            sctes, out[f, i] = score(p_, hk)
+            parts += [ctes, sctes]
+    return parts, out
+
+
+#: A grid config's fields, and how a selection oracle outputs each;
+#: a 4-, 5- or nine-axis grid outputs its prefix.
+_AXES = (
+    "config", "rounds", "eta", "lam", "depth", "subsample", "colsample",
+    "min_child_weight", "reg_alpha", "pos_weight",
+)
+_AXIS_OUT = (
+    "config", "CAST(rounds AS INTEGER) AS rounds", "eta", "lam",
+    "CAST(depth AS INTEGER) AS depth",
+    *(f"CAST({a} AS DOUBLE) AS {a}" for a in _AXES[5:]),
+)
+
+
+def _longf_cte(configs, scores: list[tuple[str, list[str]]]) -> str:
+    """``longf``: one row per config — its grid fields, then each
+    (column, per-config scalar SQL) score."""
+    axes = _AXES[: len(configs[0])]
     vals = ", ".join(
-        f"('{name}', {rounds}, {eta!r}, {lam!r})"
-        for name, rounds, eta, lam in configs
+        "(" + ", ".join([f"'{c[0]}'", *map(repr, c[1:])]) + ")" for c in configs
     )
-    loss_case = " ".join(
-        f"WHEN '{name}' THEN m_{i}"
-        for i, (name, _r, _e, _l) in enumerate(configs)
+    cols = ", ".join(
+        "CASE c.config "
+        + " ".join(f"WHEN '{c[0]}' THEN {e}" for c, e in zip(configs, exprs))
+        + f" END AS {name}"
+        for name, exprs in scores
     )
-    return parts, vals, loss_case
+    fields = ", ".join(f"c.{a}" for a in axes)
+    return (
+        f"longf AS (\n      SELECT {fields},\n             {cols}\n"
+        f"      FROM (VALUES {vals}) c({', '.join(axes)})\n    )"
+    )
+
+
+def _selection_sql(
+    parts: list[str], configs, scores: list[tuple[str, list[str]]], rank: str
+) -> str:
+    """A selection oracle's statement: ``parts``, then ``longf`` and
+    per config its fields, scores and is_best (the first by ``rank``,
+    config-id tie-break)."""
+    out = ", ".join([*_AXIS_OUT[: len(configs[0])], *(n for n, _ in scores)])
+    cte_block = ",\n    ".join([*parts, _longf_cte(configs, scores)])
+    return f"""WITH {cte_block}
+    SELECT {out},
+           CAST(CASE WHEN row_number() OVER (ORDER BY {rank}, config) = 1
+                THEN 1 ELSE 0 END AS INTEGER) AS is_best
+    FROM longf"""
 
 
 def gbt_model_selection_sql(
     fv_sql: str,
-    configs: tuple[tuple[str, int, float, float], ...] = GBT_MS_CONFIGS,
+    configs=GBT_MS_CONFIGS,
     features: tuple[str, ...] = SCORE_FEATURES,
     bins: int = GBT_BINS,
 ) -> str:
-    """Oracle for q_gbt_model_selection: hash-split train/holdout
-    (the q_model_selection split), one unrolled boosting chain per
-    config (namespaced by prefix), a holdout split-replay per config,
-    then per-config decimal-folded holdout log-loss and an is_best
-    rank (val_logloss asc, config id tie-break)."""
-    parts, vals, loss_case = _gbt_ms_parts(fv_sql, configs, features, bins)
-    cte_block = ",\n    ".join(parts)
-    return f"""WITH {cte_block},
-    longf AS (
-      SELECT c.config, c.rounds, c.eta, c.lam,
-             CASE c.config {loss_case} END AS val_logloss
-      FROM (VALUES {vals}) c(config, rounds, eta, lam) CROSS JOIN m
-    )
-    SELECT config, CAST(rounds AS INTEGER) AS rounds, eta, lam, val_logloss,
-           CAST(CASE WHEN row_number() OVER (ORDER BY val_logloss, config) = 1
-                THEN 1 ELSE 0 END AS INTEGER) AS is_best
-    FROM longf"""
+    """Oracle for q_gbt_model_selection and, over the depth grid,
+    q_gbt_depth_selection: hash-split train/holdout (the
+    q_model_selection split), one unrolled boosting chain per config,
+    a holdout split-replay per config, then per-config decimal-folded
+    holdout log-loss and an is_best rank (val_logloss asc, config id
+    tie-break)."""
+    parts, loss = _trial_parts(fv_sql, configs, features, bins, _loss_score)
+    scores = [("val_logloss", [loss[0, i] for i in range(len(configs))])]
+    return _selection_sql(parts, configs, scores, "val_logloss")
 
 
 def gbt_retrain_best_sql(
@@ -1274,25 +1406,20 @@ def gbt_retrain_best_sql(
         gates = QUALITY_GATES
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import model_metrics_ctes
 
-    parts, vals, loss_case = _gbt_ms_parts(fv_sql, configs, features, bins)
+    parts, loss = _trial_parts(fv_sql, configs, features, bins, _loss_score)
     card_arms = []
     for i, (name, rounds, eta, lam) in enumerate(configs):
         p_ = f"f{i}_"
-        ctes, rk = _gbt_ctes(
+        ctes, rk = _gbt_chain_ctes(
             "SELECT * FROM base", features, rounds, bins, lam, eta, prefix=p_
         )
         parts.append(ctes)
-        s = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
-        parts.append(f"{p_}scored AS (SELECT label, {s} AS s FROM {rk})")
+        parts.append(f"{p_}scored AS (SELECT label, {_S6_SQL} AS s FROM {rk})")
         cctes, card = model_metrics_ctes(prefix=p_, scored_from=f"{p_}scored")
         parts.append(cctes)
         card_arms.append(f"SELECT '{name}' AS config, * FROM {card}")
     parts.append(
-        f"""longf AS (
-      SELECT c.config, c.rounds, c.eta, c.lam,
-             CASE c.config {loss_case} END AS val_logloss
-      FROM (VALUES {vals}) c(config, rounds, eta, lam) CROSS JOIN m
-    )"""
+        _longf_cte(configs, [("val_logloss", [loss[0, i] for i in range(len(configs))])])
     )
     parts.append(
         "win AS (SELECT config, rounds, eta, lam, val_logloss "
@@ -1318,6 +1445,17 @@ def gbt_retrain_best_sql(
     FROM wcard CROSS JOIN win w CROSS JOIN (VALUES {gate_vals}) g(metric, floor)"""
 
 
+def _ladder_parts(
+    fv_sql: str, prefix: str, cfg, features: tuple[str, ...], bins: int, arm
+) -> list[str]:
+    """The early-stopping scaffold: the 80/20 split, one chain on tr0
+    and its replay on va0, then ``lad`` — per round t the
+    ``arm(t, holdout_rows_t)`` select, UNION ALL."""
+    ctes, _hk = _trial_ctes(prefix, 0, cfg, features, bins)
+    arms = "\n      UNION ALL ".join(arm(t, f"{prefix}hr{t}") for t in range(cfg[1] + 1))
+    return [*_split_ctes(fv_sql), ctes, f"lad AS ({arms})"]
+
+
 def gbt_early_stop_sql(
     fv_sql: str,
     features: tuple[str, ...] = SCORE_FEATURES,
@@ -1332,31 +1470,13 @@ def gbt_early_stop_sql(
     stop at the first round that fails to improve the running best
     (eval_set + early_stopping_rounds, `fraud_detector.py:157,246`);
     is_best marks the argmin among reached rounds."""
-    p_ = "es_"
-    parts = [
-        f"base AS ({fv_sql})",
-        f"tr AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} < 80)",
-        f"va AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} >= 80)",
-    ]
-    ctes, _rk = _gbt_ctes(
-        "SELECT * FROM tr", features, rounds, bins, lam, eta, prefix=p_
+    parts = _ladder_parts(
+        fv_sql, "es_", ("es", rounds, eta, lam), features, bins,
+        lambda t, rows: (
+            f"SELECT CAST({t} AS INTEGER) AS round, {_MEAN_LOSS_SQL} AS val_logloss "
+            f"FROM {rows}"
+        ),
     )
-    parts.append(ctes)
-    hctes, _hk = _gbt_holdout_ctes(p_, "va", features, rounds, bins, eta)
-    parts.append(hctes)
-    arms = []
-    for t in range(rounds + 1):
-        p = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
-        raw = f"CASE WHEN label = 1 THEN -ln({p}) ELSE -ln(1.0 - {p}) END"
-        l6 = R6_SQL.format(c=raw)
-        mean = R6_SQL.format(
-            c=f"CAST(sum(CAST({l6} AS DECIMAL(18,6))) AS DOUBLE) / count(*)"
-        )
-        arms.append(
-            f"SELECT CAST({t} AS INTEGER) AS round, {mean} AS val_logloss "
-            f"FROM {p_}hrows{t}"
-        )
-    parts.append("lad AS (" + "\n      UNION ALL ".join(arms) + ")")
     parts.append(
         "pb AS (SELECT round, val_logloss, "
         "min(val_logloss) OVER (ORDER BY round "
@@ -1396,65 +1516,27 @@ def gbt_early_stop_auc_sql(
 ) -> str:
     """Oracle for q_gbt_early_stop_auc: train on the hash-split train
     fold, replay the splits on the holdout fold, emit the per-round
-    HOLDOUT rank-sum AUC ladder, then apply the patience-k rule in
-    window form: boosting stops at the first round whose distance to
-    the last improving round reaches ``patience`` (the reference's
+    HOLDOUT rank-sum AUC ladder (the q_model_card machinery,
+    partitioned by round), then apply the patience-k rule in window
+    form: boosting stops at the first round whose distance to the
+    last improving round reaches ``patience`` (the reference's
     eval_metric='auc' + early_stopping_rounds, `fraud_detector.py:
     245-247`); is_best marks the argmax among reached rounds."""
-    p_ = "esa_"
-    parts = [
-        f"base AS ({fv_sql})",
-        f"tr AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} < 80)",
-        f"va AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} >= 80)",
-    ]
-    ctes, _rk = _gbt_ctes(
-        "SELECT * FROM tr", features, rounds, bins, lam, eta, prefix=p_
+    parts = _ladder_parts(
+        fv_sql, "esa_", ("esa", rounds, eta, lam), features, bins,
+        lambda t, rows: (
+            f"SELECT CAST({t} AS INTEGER) AS round, {_S6_SQL} AS s, label FROM {rows}"
+        ),
     )
-    parts.append(ctes)
-    hctes, _hk = _gbt_holdout_ctes(p_, "va", features, rounds, bins, eta)
-    parts.append(hctes)
-    s6 = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
-    arms = [
-        f"SELECT CAST({t} AS INTEGER) AS round, {s6} AS s, label "
-        f"FROM {p_}hrows{t}"
-        for t in range(rounds + 1)
-    ]
-    parts.append("sc AS (" + "\n      UNION ALL ".join(arms) + ")")
-    # the q_model_card rank-sum machinery, windowed per round: exact
-    # Mann-Whitney over the bounded distinct-score table
-    parts.append(
-        "grp AS (SELECT round, s, count(*) AS n, sum(label) AS np "
-        "FROM sc GROUP BY 1, 2)"
-    )
-    parts.append(
-        "cum AS (SELECT round, s, n, np, "
-        "coalesce(sum(n) OVER w, 0) AS cum_n FROM grp "
-        "WINDOW w AS (PARTITION BY round ORDER BY s "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))"
-    )
-    auc_raw = (
-        "(CAST(rank_sum AS DOUBLE) "
-        "- CAST(n_pos AS DOUBLE) * (n_pos + 1) / 2)"
-        " / (CAST(n_pos AS DOUBLE) * n_neg)"
-    )
-    auc6 = R6_SQL.format(
-        c=f"CASE WHEN n_pos = 0 OR n_neg = 0 THEN 0.0 ELSE {auc_raw} END"
-    )
-    parts.append(
-        "agg AS (SELECT round, sum(np) AS n_pos, sum(n) - sum(np) AS n_neg, "
-        "sum(CAST(np AS DECIMAL(28,1)) "
-        "* CAST(cum_n + (n + 1) / 2.0 AS DECIMAL(28,1))) AS rank_sum "
-        "FROM cum GROUP BY 1)"
-    )
-    parts.append(f"lad AS (SELECT round, {auc6} AS val_auc FROM agg)")
+    actes, auc = _auc_ctes("esa_", "lad", key="round")
+    parts.append(actes)
     # patience-k in window form: improved = strictly beats the running
     # best; streak at t = t − (last improving round ≤ t); round 0
     # improves by definition
     parts.append(
-        "pb AS (SELECT round, val_auc, "
-        "max(val_auc) OVER (ORDER BY round "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_best "
-        "FROM lad)"
+        "pb AS (SELECT round, auc AS val_auc, "
+        "max(auc) OVER (ORDER BY round "
+        f"ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_best FROM {auc})"
     )
     parts.append(
         "fl AS (SELECT round, val_auc, "

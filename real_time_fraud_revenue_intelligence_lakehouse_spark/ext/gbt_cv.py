@@ -28,10 +28,12 @@ closes that gap on ext/gbt.py's one boosting engine:
   scalar-subquery sum mirrors token for token); winner = max mean
   AUC, config-id tie-break.
 
-The SQL oracle unrolls all 3 folds × |configs| boosting chains
-(namespaced c{fold}{cfg}_), replays each on its held-out fold, and
-computes the identical rank-sum AUCs — CROSS-VALIDATION ITSELF
-hash-gates.
+The SQL oracle (:func:`gbt_cv_selection_sql`, ext/gbt's selection
+scaffold over the k-fold split) unrolls all 3 folds × |configs|
+boosting chains (namespaced k{fold}c{cfg}_), replays each on its
+held-out fold, and computes the identical rank-sum AUCs —
+CROSS-VALIDATION ITSELF hash-gates. Depth-2 grid configs and
+nine-axis trials share it; only the output's config columns differ.
 
 Scale: the scan count is the single-fold grid's; stacked rows grow
 ×(folds−1) and every byte stays in the same map-side combine — the
@@ -51,19 +53,16 @@ from pyspark.sql import functions as F
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
     GBT_BINS,
     GBT_MS_CONFIGS,
+    _auc_score,
     _binned_frame,
     _cfg,
     _descend,
     _fit,
-    _gbt_ctes,
-    _gbt_holdout_ctes,
     _models,
     _rank_sum_aucs,
+    _selection_sql,
     _stack_scores,
-)
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
-    _gbt_deep_ctes,
-    _gbt_deep_holdout_ctes,
+    _trial_parts,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
@@ -71,7 +70,9 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars impo
 
 CV_FOLDS = 3
 
-_H60_FOLD = "('0x' || substr(md5(o_orderkey::VARCHAR), 1, 15))::BIGINT % 3"
+#: An order's fold, DuckDB side: hash60(o_orderkey) mod ``folds``, the
+#: engine's ``pmod(hash60(o_orderkey), folds)``.
+_H60_FOLD = "('0x' || substr(md5(o_orderkey::VARCHAR), 1, 15))::BIGINT % {folds}"
 
 
 def train_gbt_grid_cv(
@@ -152,107 +153,32 @@ def cv_mean(aucs: list[float]) -> float:
 
 def gbt_cv_selection_sql(
     fv_sql: str,
-    configs: tuple[tuple[str, int, float, float], ...] = GBT_MS_CONFIGS,
+    configs=GBT_MS_CONFIGS,
     features: tuple[str, ...] = SCORE_FEATURES,
     bins: int = GBT_BINS,
     folds: int = CV_FOLDS,
 ) -> str:
-    """Oracle for q_model_selection_cv: per (fold, config) an
-    unrolled boosting chain on the fold complement + a split-replay
-    on the held-out fold + a rank-sum AUC; per config the round6
-    left-associated mean of its fold AUCs; is_best ranks by
+    """Oracle for q_model_selection_cv and, over nine-axis trials,
+    q_model_selection_cv_full: per (fold, config) an unrolled boosting
+    chain carrying all of the config's axes on the fold complement, a
+    split-replay on the held-out fold and a rank-sum AUC; per config
+    the round6 left-associated mean of its fold AUCs; is_best ranks by
     (cv_auc DESC, config)."""
-    parts = [f"base AS ({fv_sql})"]
-    for f in range(folds):
-        parts.append(
-            f"tr{f} AS MATERIALIZED (SELECT * FROM base WHERE {_H60_FOLD} <> {f})"
-        )
-        parts.append(
-            f"va{f} AS MATERIALIZED (SELECT * FROM base WHERE {_H60_FOLD} = {f})"
-        )
-    auc_names: dict[tuple[int, int], str] = {}
-    for f in range(folds):
-        for i, (_name, rounds, eta, lam) in enumerate(configs):
-            p_ = f"c{f}{i}_"
-            ctes, _rk = _gbt_ctes(
-                f"SELECT * FROM tr{f}", features, rounds, bins, lam, eta,
-                prefix=p_,
+    fold = _H60_FOLD.format(folds=folds)
+    splits = tuple((f"{fold} <> {f}", f"{fold} = {f}") for f in range(folds))
+    parts, auc = _trial_parts(fv_sql, configs, features, bins, _auc_score, splits)
+    cfgs = range(len(configs))
+    scores = [(f"auc_fold{f}", [auc[f, i] for i in cfgs]) for f in range(folds)]
+    scores.append((
+        "cv_auc",
+        [
+            R6_SQL.format(
+                c=f"({' + '.join(auc[f, i] for f in range(folds))}) / {float(folds)!r}"
             )
-            parts.append(ctes)
-            hctes, hk = _gbt_holdout_ctes(
-                p_, f"va{f}", features, rounds, bins, eta
-            )
-            parts.append(hctes)
-            s6 = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
-            parts.append(
-                f"{p_}scored AS (SELECT label, {s6} AS s FROM {hk})"
-            )
-            parts.append(
-                f"{p_}grp AS (SELECT s, count(*) AS n, sum(label) AS np "
-                f"FROM {p_}scored GROUP BY 1)"
-            )
-            parts.append(
-                f"{p_}cum AS (SELECT s, n, np, "
-                f"coalesce(sum(n) OVER w, 0) AS cum_n FROM {p_}grp "
-                f"WINDOW w AS (ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING "
-                f"AND 1 PRECEDING))"
-            )
-            parts.append(
-                f"{p_}t AS (SELECT sum(np) AS n_pos, "
-                f"sum(n) - sum(np) AS n_neg FROM {p_}grp)"
-            )
-            parts.append(
-                f"{p_}agg AS (SELECT n_pos, n_neg, "
-                f"sum(CAST(np AS DECIMAL(28,1)) "
-                f"* CAST(cum_n + (n + 1) / 2.0 AS DECIMAL(28,1))) AS rank_sum "
-                f"FROM {p_}cum CROSS JOIN {p_}t GROUP BY 1, 2)"
-            )
-            auc_raw = (
-                "(CAST(rank_sum AS DOUBLE) "
-                "- CAST(n_pos AS DOUBLE) * (n_pos + 1) / 2)"
-                " / (CAST(n_pos AS DOUBLE) * n_neg)"
-            )
-            auc6 = R6_SQL.format(
-                c=f"CASE WHEN n_pos = 0 OR n_neg = 0 THEN 0.0 ELSE {auc_raw} END"
-            )
-            parts.append(
-                f"{p_}auc AS (SELECT {auc6} AS auc FROM {p_}agg)"
-            )
-            auc_names[(f, i)] = f"{p_}auc"
-    mean_cols = []
-    for i in range(len(configs)):
-        terms = " + ".join(
-            f"(SELECT auc FROM {auc_names[(f, i)]})" for f in range(folds)
-        )
-        mean_cols.append(
-            f"{R6_SQL.format(c=f'({terms}) / {float(folds)!r}')} AS cv_{i}"
-        )
-    parts.append("m AS (SELECT " + ", ".join(mean_cols) + ")")
-    vals = ", ".join(
-        f"('{name}', {rounds}, {eta!r}, {lam!r})"
-        for name, rounds, eta, lam in configs
-    )
-    auc_case = " ".join(
-        f"WHEN '{name}' THEN cv_{i}"
-        for i, (name, _r, _e, _l) in enumerate(configs)
-    )
-    fold_cols = ", ".join(
-        f"CASE c.config {' '.join(f'''WHEN '{name}' THEN (SELECT auc FROM {auc_names[(f, i)]})''' for i, (name, _r, _e, _l) in enumerate(configs))} END AS auc_fold{f}"
-        for f in range(folds)
-    )
-    cte_block = ",\n    ".join(parts)
-    return f"""WITH {cte_block},
-    longf AS (
-      SELECT c.config, c.rounds, c.eta, c.lam,
-             {fold_cols},
-             CASE c.config {auc_case} END AS cv_auc
-      FROM (VALUES {vals}) c(config, rounds, eta, lam) CROSS JOIN m
-    )
-    SELECT config, CAST(rounds AS INTEGER) AS rounds, eta, lam,
-           {", ".join(f"auc_fold{f}" for f in range(folds))}, cv_auc,
-           CAST(CASE WHEN row_number() OVER (ORDER BY cv_auc DESC, config) = 1
-                THEN 1 ELSE 0 END AS INTEGER) AS is_best
-    FROM longf"""
+            for i in cfgs
+        ],
+    ))
+    return _selection_sql(parts, configs, scores, "cv_auc DESC")
 
 
 # --- CV over the FULL sampled space (trial x fold, every dimension) ---------------
@@ -293,124 +219,3 @@ def gbt_cv_fold_aucs_full(
 ) -> list[list[float]]:
     """:func:`gbt_cv_fold_aucs` over FULL nine-axis trials."""
     return _cv_fold_aucs(fv, list(configs), folds, features, scales)
-
-
-def gbt_cv_selection_full_sql(
-    fv_sql: str,
-    configs,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    bins: int = GBT_BINS,
-    folds: int = CV_FOLDS,
-) -> str:
-    """Oracle for q_model_selection_cv_full: per (fold, trial) an
-    unrolled DEEP chain carrying ALL of the trial's axes (subsample
-    predicate, colsample schedule, mcw admissibility, ThresholdL1,
-    scale_pos_weight) + a held-out-fold replay + a rank-sum AUC;
-    per trial the round6 left-associated fold mean; is_best ranks by
-    (cv_auc DESC, config)."""
-    parts = [f"base AS ({fv_sql})"]
-    for f in range(folds):
-        parts.append(
-            f"tr{f} AS MATERIALIZED (SELECT * FROM base WHERE {_H60_FOLD} <> {f})"
-        )
-        parts.append(
-            f"va{f} AS MATERIALIZED (SELECT * FROM base WHERE {_H60_FOLD} = {f})"
-        )
-    auc_names: dict[tuple[int, int], str] = {}
-    for f in range(folds):
-        for i, (_nm, rounds, eta, lam, depth, sub, csam, mcw, alpha, spw) in enumerate(
-            configs
-        ):
-            p_ = f"v{f}{i}_"
-            ctes, _rk = _gbt_deep_ctes(
-                f"SELECT * FROM tr{f}", features, rounds, bins, lam, eta,
-                depth,
-                subsample=(None if sub is None or sub >= 1.0 else sub),
-                colsample=(None if csam is None or csam >= 1.0 else csam),
-                prefix=p_, min_child_weight=mcw, reg_alpha=alpha,
-                pos_weight=(None if spw is None or float(spw) == 1.0 else spw),
-            )
-            parts.append(ctes)
-            hctes, hk = _gbt_deep_holdout_ctes(
-                p_, f"va{f}", features, rounds, bins, eta, depth
-            )
-            parts.append(hctes)
-            s6 = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
-            parts.append(
-                f"{p_}scored AS (SELECT label, {s6} AS s FROM {hk})"
-            )
-            parts.append(
-                f"{p_}grp AS (SELECT s, count(*) AS n, sum(label) AS np "
-                f"FROM {p_}scored GROUP BY 1)"
-            )
-            parts.append(
-                f"{p_}cum AS (SELECT s, n, np, "
-                f"coalesce(sum(n) OVER w, 0) AS cum_n FROM {p_}grp "
-                f"WINDOW w AS (ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING "
-                f"AND 1 PRECEDING))"
-            )
-            parts.append(
-                f"{p_}t AS (SELECT sum(np) AS n_pos, "
-                f"sum(n) - sum(np) AS n_neg FROM {p_}grp)"
-            )
-            parts.append(
-                f"{p_}agg AS (SELECT n_pos, n_neg, "
-                f"sum(CAST(np AS DECIMAL(28,1)) "
-                f"* CAST(cum_n + (n + 1) / 2.0 AS DECIMAL(28,1))) AS rank_sum "
-                f"FROM {p_}cum CROSS JOIN {p_}t GROUP BY 1, 2)"
-            )
-            auc_raw = (
-                "(CAST(rank_sum AS DOUBLE) "
-                "- CAST(n_pos AS DOUBLE) * (n_pos + 1) / 2)"
-                " / (CAST(n_pos AS DOUBLE) * n_neg)"
-            )
-            auc6 = R6_SQL.format(
-                c=f"CASE WHEN n_pos = 0 OR n_neg = 0 THEN 0.0 ELSE {auc_raw} END"
-            )
-            parts.append(
-                f"{p_}auc AS (SELECT {auc6} AS auc FROM {p_}agg)"
-            )
-            auc_names[(f, i)] = f"{p_}auc"
-    mean_cols = []
-    for i in range(len(configs)):
-        terms = " + ".join(
-            f"(SELECT auc FROM {auc_names[(f, i)]})" for f in range(folds)
-        )
-        mean_cols.append(
-            f"{R6_SQL.format(c=f'({terms}) / {float(folds)!r}')} AS cv_{i}"
-        )
-    parts.append("m AS (SELECT " + ", ".join(mean_cols) + ")")
-    vals = ", ".join(
-        f"('{nm}', {rounds}, {eta!r}, {lam!r}, {depth}, {sub!r}, {csam!r}, "
-        f"{mcw!r}, {alpha!r}, {spw!r})"
-        for nm, rounds, eta, lam, depth, sub, csam, mcw, alpha, spw in configs
-    )
-    auc_case = " ".join(
-        f"WHEN '{c[0]}' THEN cv_{i}" for i, c in enumerate(configs)
-    )
-    fold_cols = ", ".join(
-        f"CASE c.config {' '.join(f'''WHEN '{c[0]}' THEN (SELECT auc FROM {auc_names[(f, i)]})''' for i, c in enumerate(configs))} END AS auc_fold{f}"
-        for f in range(folds)
-    )
-    cte_block = ",\n    ".join(parts)
-    return f"""WITH {cte_block},
-    longf AS (
-      SELECT c.config, c.rounds, c.eta, c.lam, c.depth, c.subsample,
-             c.colsample, c.min_child_weight, c.reg_alpha, c.pos_weight,
-             {fold_cols},
-             CASE c.config {auc_case} END AS cv_auc
-      FROM (VALUES {vals}) c(config, rounds, eta, lam, depth, subsample,
-                             colsample, min_child_weight, reg_alpha,
-                             pos_weight) CROSS JOIN m
-    )
-    SELECT config, CAST(rounds AS INTEGER) AS rounds, eta, lam,
-           CAST(depth AS INTEGER) AS depth,
-           CAST(subsample AS DOUBLE) AS subsample,
-           CAST(colsample AS DOUBLE) AS colsample,
-           CAST(min_child_weight AS DOUBLE) AS min_child_weight,
-           CAST(reg_alpha AS DOUBLE) AS reg_alpha,
-           CAST(pos_weight AS DOUBLE) AS pos_weight,
-           {", ".join(f"auc_fold{f}" for f in range(folds))}, cv_auc,
-           CAST(CASE WHEN row_number() OVER (ORDER BY cv_auc DESC, config) = 1
-                THEN 1 ELSE 0 END AS INTEGER) AS is_best
-    FROM longf"""

@@ -19,11 +19,11 @@ TRAINING row counts (covers) the fitted splits already induce
 Determinism contract (the ext/gbt.py conventions): covers are exact
 integers; per (tree, subset) terms ``coef · (v(S∪f) − v(S)) · eta``
 are evaluated by the recursion ``(L(k)·v(2k)) + (R(k)·v(2k+1))`` —
-the ONE parenthesization the generated DuckDB SQL writes token for
-token (:func:`_v_sql` at depth 2, ext/shap_deep's ``_v_deep_sql`` at
-depth 3) — and the coefficient is the exact factorial ratio
-:func:`shap_coef`, the same double as the SQL's literals. Every term
-micro-floors to an integer BEFORE any aggregation, so per-row φ
+the ONE parenthesization the generated DuckDB oracle
+(:func:`_shap_ctes`, at depth 2 and depth 3) writes token for token —
+and the coefficient is the exact factorial ratio :func:`shap_coef`,
+the same double as the oracle's DOUBLE-typed repr literals. Every
+term micro-floors to an integer BEFORE any aggregation, so per-row φ
 values are integer micros, sums are order-independent on any
 partition layout, and the whole artifact hash-gates. Coincident
 features (one feature splitting several nodes) are handled by the
@@ -62,8 +62,9 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
     GBT_ETA,
     GBT_LAMBDA,
     GBT_ROUNDS,
+    _S6_SQL,
     _bin_expr,
-    _gbt_ctes,
+    _gbt_chain_ctes,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R6_SQL
@@ -86,8 +87,9 @@ def _internal(tree: dict) -> range:
 def shap_coef(u: int, size: int) -> float:
     """|S|!·(u−|S|−1)!/u! as the exact double both engines read —
     Python true division of exact integers is correctly rounded, so
-    it equals the SQL's literals (1/3, 1/6, 0.5, or the repr-literals
-    ext/shap_deep emits)."""
+    it equals the oracle's literals: ``repr`` of this value typed
+    DOUBLE (an untyped decimal literal can land 1 ulp away, as
+    0.03333333333333333 does in DuckDB)."""
     return math.factorial(size) * math.factorial(u - size - 1) / math.factorial(u)
 
 
@@ -267,20 +269,126 @@ def shap_phi_columns(
 # --- generated DuckDB oracle -------------------------------------------------
 
 
-def _v_sql(bA: str, bB: str, bC: str) -> str:
-    """The :func:`_v` recursion unrolled at depth 2, with membership
-    bits as SQL integer expressions — same parenthesization, token
-    for token."""
-    fa_l = f"(CASE WHEN {bA} = 1 THEN ia ELSE pl END)"
-    fa_r = f"(CASE WHEN {bA} = 1 THEN (1.0 - ia) ELSE pr END)"
-    gb_l = f"(CASE WHEN {bB} = 1 THEN ib ELSE pll END)"
-    gb_r = f"(CASE WHEN {bB} = 1 THEN (1.0 - ib) ELSE plr END)"
-    gc_l = f"(CASE WHEN {bC} = 1 THEN ic ELSE prl END)"
-    gc_r = f"(CASE WHEN {bC} = 1 THEN (1.0 - ic) ELSE prr END)"
-    return (
-        f"(({fa_l} * ((({gb_l} * wll)) + (({gb_r} * wlr))))"
-        f" + ({fa_r} * ((({gc_l} * wrl)) + (({gc_r} * wrr)))))"
+def _shap_ctes(
+    fv_sql: str,
+    features: tuple[str, ...] = SCORE_FEATURES,
+    rounds: int = GBT_ROUNDS,
+    bins: int = GBT_BINS,
+    lam: float = GBT_LAMBDA,
+    eta: float = GBT_ETA,
+    depth: int = 2,
+) -> list[str]:
+    """The TreeSHAP oracle's CTE parts, through the per-row
+    per-feature φ6 table (``phis``) and the score banding
+    (``banded``), for the depth-``depth`` booster (depth ≤
+    :data:`MAX_SHAP_DEPTH`): re-train via ext/gbt's one boosting
+    chain, take every node's cover from the chain's level frames
+    (nd{t}_L, sd{t}), and run :func:`shap_terms`' subset enumeration
+    relationally — uniq ranks → masks → membership bits → the
+    :func:`_v` recursion ``(L(k)·v(2k)) + (R(k)·v(2k+1))`` written out
+    token for token, with the coefficients as ``repr`` literals of
+    :func:`shap_coef` typed DOUBLE (the same doubles) — then
+    micro-floor each term."""
+    if depth > MAX_SHAP_DEPTH:
+        raise ValueError(f"exact TreeSHAP explains trees of depth <= {MAX_SHAP_DEPTH}")
+    ctes, rows_k = _gbt_chain_ctes(fv_sql, features, rounds, bins, lam, eta, depth)
+    internal = range(1, 1 << depth)
+    leaves = range(1 << depth, 2 << depth)
+    size = " + ".join(f"((p.m >> {i}) & 1)" for i in range(len(internal)))
+    coef = "(CASE p.u " + " ".join(
+        f"WHEN {u} THEN (CASE ({size}) "
+        + " ".join(f"WHEN {s} THEN {shap_coef(u, s)!r}::DOUBLE" for s in range(u))
+        + " END)"
+        for u in range(1, len(internal) + 1)
+    ) + " END)"
+
+    def v(k: int, bit) -> str:
+        if k in leaves:
+            return f"w{k}"
+        left = f"(CASE WHEN {bit(k)} = 1 THEN i{k} ELSE p{2 * k} END)"
+        right = f"(CASE WHEN {bit(k)} = 1 THEN (1.0 - i{k}) ELSE p{2 * k + 1} END)"
+        return f"(({left} * {v(2 * k, bit)}) + ({right} * {v(2 * k + 1, bit)}))"
+
+    m1 = "(p.m | (1 << (p.rk - 1)))"
+    v0 = v(1, lambda k: f"((p.m >> (rk.r{k} - 1)) & 1)")
+    v1 = v(1, lambda k: f"(({m1} >> (rk.r{k} - 1)) & 1)")
+    masks = ", ".join(f"({m})" for m in range(1 << len(internal)))
+    parts = [ctes]
+    for t in range(1, rounds + 1):
+
+        def cover(k: int, t=t) -> str:
+            lvl = k.bit_length() - 1
+            if lvl == 0:
+                return f"(SELECT count(*) FROM gh{t})"
+            if lvl == depth:
+                return f"(SELECT count(*) FROM sd{t} WHERE node = {k // 2} AND side = {k % 2})"
+            return f"(SELECT count(*) FROM nd{t}_{lvl} WHERE node = {k})"
+
+        ratios = ", ".join(
+            f"CAST({cover(k)} AS DOUBLE) / CAST({cover(k // 2)} AS DOUBLE) AS p{k}"
+            for k in range(2, 2 << depth)
+        )
+        parts.append(f"covs{t} AS MATERIALIZED (SELECT {ratios})")
+        struct = [
+            f"(SELECT {c} FROM b{t}_{k.bit_length() - 1} WHERE node = {k}) AS {c[0]}{k}"
+            for k in internal
+            for c in ("fidx", "bin")
+        ] + [
+            f"(SELECT w FROM lw{t} WHERE node = {k // 2} AND side = {k % 2}) AS w{k}"
+            for k in leaves
+        ]
+        parts.append(f"struct{t} AS MATERIALIZED (SELECT {', '.join(struct)})")
+        uf = " UNION ".join(f"SELECT f{k} AS f FROM struct{t}" for k in internal)
+        parts.append(
+            f"uniq{t} AS MATERIALIZED (SELECT f AS fidx, "
+            f"CAST(row_number() OVER (ORDER BY f) AS INTEGER) AS rk, "
+            f"CAST(count(*) OVER () AS INTEGER) AS u FROM ({uf}) uf)"
+        )
+        rk_cols = ", ".join(
+            f"(SELECT rk FROM uniq{t} un, struct{t} s WHERE un.fidx = s.f{k}) AS r{k}"
+            for k in internal
+        )
+        parts.append(f"rks{t} AS MATERIALIZED (SELECT {rk_cols})")
+        ind_cols = ", ".join(
+            f"CASE WHEN s{k}.bin <= st.b{k} THEN 1.0 ELSE 0.0 END AS i{k}"
+            for k in internal
+        )
+        ind_joins = " ".join(
+            f"JOIN st{t} s{k} ON s{k}.o_orderkey = s1.o_orderkey AND s{k}.fidx = st.f{k}"
+            for k in internal[1:]
+        )
+        parts.append(
+            f"ind{t} AS MATERIALIZED (SELECT s1.o_orderkey, {ind_cols} "
+            f"FROM struct{t} st JOIN st{t} s1 ON s1.fidx = st.f1 {ind_joins})"
+        )
+        parts.append(
+            f"pm{t} AS MATERIALIZED (SELECT un.fidx, un.rk, un.u, mm.m "
+            f"FROM uniq{t} un JOIN (VALUES {masks}) "
+            f"mm(m) ON mm.m < (1 << un.u) AND ((mm.m >> (un.rk - 1)) & 1) = 0)"
+        )
+        parts.append(
+            f"terms{t} AS (SELECT i.o_orderkey, p.fidx, "
+            f"CAST(floor(({coef} * ({v1} - {v0})) * {eta!r} * 1000000.0 + 0.5) "
+            f"AS BIGINT) AS t6 "
+            f"FROM ind{t} i CROSS JOIN pm{t} p CROSS JOIN covs{t} "
+            f"CROSS JOIN struct{t} CROSS JOIN rks{t} rk)"
+        )
+        parts.append(
+            f"phi{t} AS MATERIALIZED (SELECT o_orderkey, fidx, "
+            f"sum(t6) AS p6 FROM terms{t} GROUP BY 1, 2)"
+        )
+    phi_arms = " UNION ALL ".join(f"SELECT * FROM phi{t}" for t in range(1, rounds + 1))
+    parts.append(
+        f"phis AS MATERIALIZED (SELECT o_orderkey, fidx, sum(p6) AS p6 FROM ("
+        f"{phi_arms}) GROUP BY 1, 2)"
     )
+    parts.append(
+        f"banded AS MATERIALIZED (SELECT o_orderkey, "
+        f"CASE WHEN {_S6_SQL} >= 0.7 THEN 'high' "
+        f"WHEN {_S6_SQL} >= 0.4 THEN 'medium' ELSE 'low' END AS risk_label "
+        f"FROM {rows_k})"
+    )
+    return parts
 
 
 def gbt_shap_sql(
@@ -290,14 +398,13 @@ def gbt_shap_sql(
     bins: int = GBT_BINS,
     lam: float = GBT_LAMBDA,
     eta: float = GBT_ETA,
+    depth: int = 2,
 ) -> str:
-    """Complete oracle for q_gbt_shap: re-train via the unrolled
-    rounds, derive each tree's covers from its nod/sides frames, run
-    the identical subset enumeration relationally (uniq ranks →
-    masks → membership bits → the :func:`_v_sql` template), micro-
-    floor each term, and aggregate mean φ / mean |φ| per (risk band,
-    feature) over the full feature grid."""
-    parts, _ = _shap_cte_parts(fv_sql, features, rounds, bins, lam, eta)
+    """Complete oracle for q_gbt_shap (and, at depth 3,
+    q_gbt_shap_deep): the :func:`_shap_ctes` φ6 table, aggregated to
+    mean φ / mean |φ| per (risk band, feature) over the full feature
+    grid."""
+    parts = _shap_ctes(fv_sql, features, rounds, bins, lam, eta, depth)
     fvals = ", ".join(f"({i}, '{f}')" for i, f in enumerate(features))
     mean_phi = R6_SQL.format(c="CAST(sum(p6) AS DOUBLE) / count(*) / 1000000.0")
     mean_abs = R6_SQL.format(c="CAST(sum(abs(p6)) AS DOUBLE) / count(*) / 1000000.0")
@@ -314,121 +421,6 @@ def gbt_shap_sql(
     FROM grid GROUP BY 1, 2"""
 
 
-def _shap_cte_parts(
-    fv_sql: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    rounds: int = GBT_ROUNDS,
-    bins: int = GBT_BINS,
-    lam: float = GBT_LAMBDA,
-    eta: float = GBT_ETA,
-) -> tuple[list[str], str]:
-    """(cte parts, final rows cte): everything through the per-row
-    per-feature φ6 table (``phis``) and the score banding (``banded``)
-    — shared by the band-mean and top-feature oracles."""
-    ctes, rows_k = _gbt_ctes(fv_sql, features, rounds, bins, lam, eta)
-    parts = [ctes]
-    phi_arms = []
-    for t in range(1, rounds + 1):
-        parts.append(
-            f"covs{t} AS MATERIALIZED (SELECT "
-            f"CAST((SELECT count(*) FROM nod{t} WHERE node = 0) AS DOUBLE) / "
-            f"CAST((SELECT count(*) FROM nod{t}) AS DOUBLE) AS pl, "
-            f"CAST((SELECT count(*) FROM nod{t} WHERE node = 1) AS DOUBLE) / "
-            f"CAST((SELECT count(*) FROM nod{t}) AS DOUBLE) AS pr, "
-            f"CAST((SELECT count(*) FROM sides{t} WHERE node = 0 AND side = 0) AS DOUBLE) / "
-            f"CAST((SELECT count(*) FROM nod{t} WHERE node = 0) AS DOUBLE) AS pll, "
-            f"CAST((SELECT count(*) FROM sides{t} WHERE node = 0 AND side = 1) AS DOUBLE) / "
-            f"CAST((SELECT count(*) FROM nod{t} WHERE node = 0) AS DOUBLE) AS plr, "
-            f"CAST((SELECT count(*) FROM sides{t} WHERE node = 1 AND side = 0) AS DOUBLE) / "
-            f"CAST((SELECT count(*) FROM nod{t} WHERE node = 1) AS DOUBLE) AS prl, "
-            f"CAST((SELECT count(*) FROM sides{t} WHERE node = 1 AND side = 1) AS DOUBLE) / "
-            f"CAST((SELECT count(*) FROM nod{t} WHERE node = 1) AS DOUBLE) AS prr)"
-        )
-        parts.append(
-            f"struct{t} AS MATERIALIZED (SELECT "
-            f"(SELECT fidx FROM best1_{t}) AS fa, "
-            f"(SELECT bin FROM best1_{t}) AS ba, "
-            f"(SELECT fidx FROM best2_{t} WHERE node = 0) AS fb, "
-            f"(SELECT bin FROM best2_{t} WHERE node = 0) AS bb, "
-            f"(SELECT fidx FROM best2_{t} WHERE node = 1) AS fc, "
-            f"(SELECT bin FROM best2_{t} WHERE node = 1) AS bc, "
-            f"(SELECT w FROM leafw{t} WHERE node = 0 AND side = 0) AS wll, "
-            f"(SELECT w FROM leafw{t} WHERE node = 0 AND side = 1) AS wlr, "
-            f"(SELECT w FROM leafw{t} WHERE node = 1 AND side = 0) AS wrl, "
-            f"(SELECT w FROM leafw{t} WHERE node = 1 AND side = 1) AS wrr)"
-        )
-        parts.append(
-            f"uniq{t} AS MATERIALIZED (SELECT f AS fidx, "
-            f"CAST(row_number() OVER (ORDER BY f) AS INTEGER) AS rk, "
-            f"CAST(count(*) OVER () AS INTEGER) AS u FROM "
-            f"(SELECT fa AS f FROM struct{t} UNION "
-            f"SELECT fb FROM struct{t} UNION SELECT fc FROM struct{t}) uf)"
-        )
-        parts.append(
-            f"rks{t} AS MATERIALIZED (SELECT "
-            f"(SELECT rk FROM uniq{t} un, struct{t} s WHERE un.fidx = s.fa) AS ra, "
-            f"(SELECT rk FROM uniq{t} un, struct{t} s WHERE un.fidx = s.fb) AS rb, "
-            f"(SELECT rk FROM uniq{t} un, struct{t} s WHERE un.fidx = s.fc) AS rc)"
-        )
-        parts.append(
-            f"ind{t} AS MATERIALIZED (SELECT sa.o_orderkey, "
-            f"CASE WHEN sa.bin <= st.ba THEN 1.0 ELSE 0.0 END AS ia, "
-            f"CASE WHEN sb.bin <= st.bb THEN 1.0 ELSE 0.0 END AS ib, "
-            f"CASE WHEN sc.bin <= st.bc THEN 1.0 ELSE 0.0 END AS ic "
-            f"FROM struct{t} st "
-            f"JOIN st{t} sa ON sa.fidx = st.fa "
-            f"JOIN st{t} sb ON sb.o_orderkey = sa.o_orderkey AND sb.fidx = st.fb "
-            f"JOIN st{t} sc ON sc.o_orderkey = sa.o_orderkey AND sc.fidx = st.fc)"
-        )
-        parts.append(
-            f"pm{t} AS MATERIALIZED (SELECT un.fidx, un.rk, un.u, mm.m "
-            f"FROM uniq{t} un JOIN (VALUES (0), (1), (2), (3), (4), (5), (6), (7)) "
-            f"mm(m) ON mm.m < (1 << un.u) AND ((mm.m >> (un.rk - 1)) & 1) = 0)"
-        )
-        size = "(((p.m & 1) + ((p.m >> 1) & 1)) + ((p.m >> 2) & 1))"
-        coef = (
-            f"(CASE WHEN p.u = 1 THEN 1.0 WHEN p.u = 2 THEN 0.5 "
-            f"ELSE (CASE {size} WHEN 0 THEN (1.0 / 3.0) "
-            f"WHEN 1 THEN (1.0 / 6.0) ELSE (1.0 / 3.0) END) END)"
-        )
-        m1 = "(p.m | (1 << (p.rk - 1)))"
-        v0 = _v_sql(
-            "((p.m >> (rk.ra - 1)) & 1)",
-            "((p.m >> (rk.rb - 1)) & 1)",
-            "((p.m >> (rk.rc - 1)) & 1)",
-        )
-        v1 = _v_sql(
-            f"(({m1} >> (rk.ra - 1)) & 1)",
-            f"(({m1} >> (rk.rb - 1)) & 1)",
-            f"(({m1} >> (rk.rc - 1)) & 1)",
-        )
-        parts.append(
-            f"terms{t} AS (SELECT i.o_orderkey, p.fidx, "
-            f"CAST(floor(({coef} * ({v1} - {v0})) * {eta!r} * 1000000.0 + 0.5) "
-            f"AS BIGINT) AS t6 "
-            f"FROM ind{t} i CROSS JOIN pm{t} p CROSS JOIN covs{t} "
-            f"CROSS JOIN struct{t} CROSS JOIN rks{t} rk)"
-        )
-        parts.append(
-            f"phi{t} AS MATERIALIZED (SELECT o_orderkey, fidx, "
-            f"sum(t6) AS p6 FROM terms{t} GROUP BY 1, 2)"
-        )
-        phi_arms.append(f"SELECT * FROM phi{t}")
-    parts.append(
-        "phis AS MATERIALIZED (SELECT o_orderkey, fidx, sum(p6) AS p6 FROM ("
-        + " UNION ALL ".join(phi_arms)
-        + ") GROUP BY 1, 2)"
-    )
-    s = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
-    parts.append(
-        f"banded AS MATERIALIZED (SELECT o_orderkey, "
-        f"CASE WHEN {s} >= 0.7 THEN 'high' "
-        f"WHEN {s} >= 0.4 THEN 'medium' ELSE 'low' END AS risk_label "
-        f"FROM {rows_k})"
-    )
-    return parts, rows_k
-
-
 def gbt_shap_top_sql(
     fv_sql: str,
     features: tuple[str, ...] = SCORE_FEATURES,
@@ -441,7 +433,7 @@ def gbt_shap_top_sql(
     the largest |φ6| (FIRST index on ties — matching the engine's
     array_position-of-max fold), aggregated per (risk band, top
     feature) with the mean |φ| it carried when on top."""
-    parts, _ = _shap_cte_parts(fv_sql, features, rounds, bins, lam, eta)
+    parts = _shap_ctes(fv_sql, features, rounds, bins, lam, eta)
     fvals = ", ".join(f"({i}, '{f}')" for i, f in enumerate(features))
     mean_abs = R6_SQL.format(c="CAST(sum(abs(p6)) AS DOUBLE) / count(*) / 1000000.0")
     cte_block = ",\n    ".join(parts)

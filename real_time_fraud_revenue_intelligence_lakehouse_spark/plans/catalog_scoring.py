@@ -803,7 +803,7 @@ def q_gbt_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(out, "round int, train_logloss double")
 
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import _gbt_ctes  # noqa: E402
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import _gbt_chain_ctes  # noqa: E402
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import (  # noqa: E402
     model_metrics,
     model_metrics_sql_tail,
@@ -811,7 +811,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import ( 
 
 
 def _model_card_oracle() -> str:
-    ctes, rows_k = _gbt_ctes(_FV_SQL)
+    ctes, rows_k = _gbt_chain_ctes(_FV_SQL)
     s = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
     return (
         f"WITH {ctes},\n"
@@ -1383,7 +1383,7 @@ def _calibration_agg(scored: DataFrame) -> DataFrame:
 
 
 def _gbt_calibration_oracle() -> str:
-    ctes, rows_k = _gbt_ctes(_FV_SQL)
+    ctes, rows_k = _gbt_chain_ctes(_FV_SQL)
     s = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
     r6_mean = R6_SQL.format(c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*)")
     r6_rate = R6_SQL.format(c="CAST(sum(label) AS DOUBLE) / count(*)")

@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
+    gbt_model_selection_sql,
+    gbt_score_band_sql,
     gbt_trained_logit_expr,
     gbt_trained_score_expr,
 )
@@ -27,9 +29,8 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_cv import (
     gbt_cv_selection_sql,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
+    GBT_DEPTH,
     GBT_DEPTH_CONFIGS,
-    gbt_deep_score_sql,
-    gbt_depth_selection_sql,
     gbt_train_deep_sql,
     train_gbt_deep,
     train_gbt_grid_deep,
@@ -122,7 +123,7 @@ def q_gbt_train_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_gbt_deep_score",
-    oracle=gbt_deep_score_sql(_FV_SQL),
+    oracle=gbt_score_band_sql(_FV_SQL, depth=GBT_DEPTH),
     tags=("training", "scoring", "iterative", "trees"),
 )
 def q_gbt_deep_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -179,7 +180,7 @@ def _fold_splits2(spark: SparkSession, sf_dir: str):
 
 @query(
     "q_gbt_depth_selection",
-    oracle=gbt_depth_selection_sql(_FV_SQL),
+    oracle=gbt_model_selection_sql(_FV_SQL, GBT_DEPTH_CONFIGS),
     tags=("training", "evaluation", "selection", "trees"),
 )
 def q_gbt_depth_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -290,13 +291,13 @@ def q_model_selection_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- exact TreeSHAP for the depth-3 booster (ext/shap.py) ---------------------
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.shap_deep import gbt_shap_deep_sql  # noqa: E402
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.shap import gbt_shap_sql  # noqa: E402
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_scoring import _shap_band_means  # noqa: E402
 
 
 @query(
     "q_gbt_shap_deep",
-    oracle=gbt_shap_deep_sql(_FV_SQL),
+    oracle=gbt_shap_sql(_FV_SQL, depth=GBT_DEPTH),
     tags=("training", "evaluation", "explanation", "trees"),
 )
 def q_gbt_shap_deep(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -264,7 +264,6 @@ def q_gbt_random_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- FULL-space sampled search (all nine study dimensions per trial) -------------
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (  # noqa: E402
-    gbt_random_search_full_sql,
     sampled_search_configs_full,
     train_gbt_grid_full,
 )
@@ -274,7 +273,7 @@ RS_FULL_CONFIGS = sampled_search_configs_full()
 
 @query(
     "q_gbt_random_search_full",
-    oracle=gbt_random_search_full_sql(_FV_SQL, RS_FULL_CONFIGS),
+    oracle=gbt_random_search_sql(_FV_SQL, RS_FULL_CONFIGS),
     tags=("training", "evaluation", "selection", "trees"),
 )
 def q_gbt_random_search_full(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -330,7 +329,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_cv import (  #
     CV_FULL_TRIALS,
     cv_mean,
     gbt_cv_fold_aucs_full,
-    gbt_cv_selection_full_sql,
+    gbt_cv_selection_sql,
 )
 
 #: The CV'd trials: the first 4 full-space draws — every one of the
@@ -342,7 +341,7 @@ CV_FULL_CONFIGS = RS_FULL_CONFIGS[:CV_FULL_TRIALS]
 
 @query(
     "q_model_selection_cv_full",
-    oracle=gbt_cv_selection_full_sql(_FV_SQL, CV_FULL_CONFIGS),
+    oracle=gbt_cv_selection_sql(_FV_SQL, CV_FULL_CONFIGS),
     tags=("training", "evaluation", "selection", "trees"),
 )
 def q_model_selection_cv_full(spark: SparkSession, sf_dir: str) -> DataFrame:

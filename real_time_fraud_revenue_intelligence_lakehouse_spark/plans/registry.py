@@ -62,23 +62,26 @@ def _load_all() -> None:
 # in dict order with a hard 50-entry per-round budget (every registered
 # id is green in the r01-r15 union), so ids needing a fresh driver row
 # come FIRST. Layout of this head:
-#   1-40:   ids whose trained or selected artifact now reads through
-#           the one keyed memo (shared_frames.memo), BPE and GBT first;
-#   41-42:  the stateful-fold batch twins (q_ewma_recursive,
+#   1-27:   the GBT and SHAP ids whose oracle text the one-oracle
+#           generators regenerate (q_gbt_* and the model card,
+#           promotion, CV selection and retrain ids);
+#   28-39:  the ids the one-loop graph change and the one-kernel
+#           vector and scoring change touched;
+#   40-52:  the other ids whose trained or selected artifact reads
+#           through the one keyed memo (shared_frames.memo);
+#   53-54:  the stateful-fold batch twins (q_ewma_recursive,
 #           q_stateful_profile);
-#   43-44:  the two scale probes (44 ≤ the 50-cap);
-#   45:     the last round-16 id not above (q_score_input_gate);
-#   46-61:  the 16 ids whose last sampled row is r09;
-#   62-109: the 48 ids whose last sampled row is r10 and that are not
+#   55-56:  the two scale probes;
+#   57:     the last round-16 id not above (q_score_input_gate);
+#   58-73:  the 16 ids whose last sampled row is r09;
+#   74-120: the ids whose last sampled row is r10 and that are not
 #           above.
 # Names not listed keep their registration order after these (the
 # r11-r15 blocks rotated out: all driver-green at r11-r15).
 # Planned-but-not-yet-registered names are harmless: _ordered()
 # filters on membership.
 _FRONT: tuple[str, ...] = (
-    # — read through the one keyed memo (shared_frames.memo) —
-    "q_bpe_encode",
-    "q_bpe_merges",
+    # — oracle regenerated by the one-oracle GBT/SHAP generators —
     "q_gbt_calibration",
     "q_gbt_deep_score",
     "q_gbt_depth_selection",
@@ -101,6 +104,27 @@ _FRONT: tuple[str, ...] = (
     "q_gbt_train_score",
     "q_gbt_train_subsample",
     "q_gbt_train_weighted",
+    "q_model_card",
+    "q_model_promotion",
+    "q_model_selection_cv",
+    "q_model_selection_cv_full",
+    "q_retrain_best",
+    # — one loop per graph algorithm; one vector / scoring kernel —
+    "q_cheapest_route",
+    "q_route_reconstruct",
+    "q_pagerank",
+    "q_pagerank_converge",
+    "q_dup_clusters",
+    "q_ivf_topk",
+    "q_ann_recall",
+    "q_ann_topk",
+    "q_embed_neardup",
+    "q_ivfpq_topk",
+    "q_fraud_scores",
+    "q_gbt_scores",
+    # — read through the one keyed memo (shared_frames.memo) —
+    "q_bpe_encode",
+    "q_bpe_merges",
     "q_kmeans_inertia",
     "q_kmeans_train",
     "q_logreg_ablation",
@@ -109,12 +133,7 @@ _FRONT: tuple[str, ...] = (
     "q_logreg_train_scaled",
     "q_logreg_train_score",
     "q_logreg_train_weighted",
-    "q_model_card",
-    "q_model_promotion",
     "q_model_selection",
-    "q_model_selection_cv",
-    "q_model_selection_cv_full",
-    "q_retrain_best",
     "q_score_drift_psi",
     "q_standard_scale_train",
     # — rewritten onto the one stateful-fold driver —
@@ -142,8 +161,8 @@ _FRONT: tuple[str, ...] = (
     "q_unigram_logprob",
     "q_vector_norms",
     "q_vocab_coverage",
-    # — last driver row r10 (48 ids; q_bpe_encode and q_bpe_merges
-    #   moved to the memo block) —
+    # — last sampled row r10 (47 ids here; q_bpe_encode and q_bpe_merges
+    #   are in the memo block, q_route_reconstruct in the graph one) —
     "q_agg_join",
     "q_bpe_encode_external",
     "q_bucket_tier",
@@ -183,7 +202,6 @@ _FRONT: tuple[str, ...] = (
     "q_quantile_sketch",
     "q_readability",
     "q_revenue_daily",
-    "q_route_reconstruct",
     "q_scalar_math",
     "q_star_join",
     "q_stg_payments",

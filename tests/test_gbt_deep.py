@@ -18,6 +18,9 @@ The test_gbt.py laws, one axis at a time:
    structure) — the gated-domain contract.
 7. CV fold AUCs match an independent NumPy rank-sum replay, and the
    mean is the exact left-associated round6 fold the oracle writes.
+8. The generated DuckDB chain (the one every GBT oracle is built
+   from) reproduces the NumPy replay's trees at depths 2 and 3, and
+   the k-fold oracle's folds follow the fold count.
 """
 
 from __future__ import annotations
@@ -835,3 +838,77 @@ def test_single_model_job_count_is_bounded(spark):
         lambda: train_gbt_deep(df, features=FEATS, scales={}, depth=3), "one_d3"
     )
     assert n3 <= GBT_ROUNDS * (2 * 3 + 1) + 1, n3
+
+
+def test_oracle_chain_matches_numpy_replay():
+    """The oracle-side pin (DuckDB only, no Spark session): the one
+    generated boosting chain's tree rows — gbt_train_deep_sql at
+    depths 2 and 3, and gbt_train_sql's depth-2 rows — equal the NumPy
+    replay's splits, bins, round6 gains and round6 leaves on the toy
+    frame, so the depth-2 oracle ids and the deep ones read the same
+    trees the engine pins hold to."""
+    from types import SimpleNamespace
+
+    import duckdb
+    import pandas as pd
+
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import gbt_train_sql
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
+        gbt_train_deep_sql,
+    )
+
+    # the toy frame's arrays, without building a Spark frame
+    _df, X, y, ids = _frame(SimpleNamespace(createDataFrame=lambda rows, schema: None))
+    con = duckdb.connect()
+    con.register(
+        "toy",
+        pd.DataFrame(
+            {"o_orderkey": ids, **{f: X[:, i] for i, f in enumerate(FEATS)},
+             "label": y.astype(int)}
+        ),
+    )
+    fv = "SELECT * FROM toy"
+
+    def r6(x):
+        return math.floor(x * 1e6 + 0.5) / 1e6
+
+    for depth in (2, 3):
+        want = gbt_deep_numpy_replay(
+            X, y, FEATS, GBT_ROUNDS, GBT_BINS, GBT_LAMBDA, GBT_ETA, {}, depth
+        )
+        exp = {}
+        for t, tr in enumerate(want):
+            for node, (fidx, b) in tr["splits"].items():
+                last = node >= 1 << (depth - 1)
+                wl, wr = (
+                    (r6(tr["leaves"][2 * node]), r6(tr["leaves"][2 * node + 1]))
+                    if last
+                    else (0.0, 0.0)
+                )
+                exp[t, node] = (FEATS[fidx], b, r6(tr["gains"][node]), wl, wr, int(last))
+        rows = con.execute(gbt_train_deep_sql(fv, features=FEATS, depth=depth)).fetchall()
+        assert {(r[0], r[1]): tuple(r[2:]) for r in rows} == exp
+        if depth == 2:
+            got = sorted(con.execute(gbt_train_sql(fv, features=FEATS)).fetchall())
+            assert got == [
+                (t, *exp[t, 1][:2], *exp[t, 2][:2], *exp[t, 3][:2],
+                 *exp[t, 2][3:5], *exp[t, 3][3:5])
+                for t in range(GBT_ROUNDS)
+            ]
+
+
+def test_cv_oracle_fold_follows_the_fold_count():
+    """The k-fold oracle's fold of an order is hash60(o_orderkey) mod
+    ``folds`` — the engine's pmod(hash60, folds) — for any fold count,
+    not mod 3 whatever the count (DuckDB only)."""
+    import duckdb
+
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_cv import _H60_FOLD
+
+    con = duckdb.connect()
+    for folds in (2, 3, 5):
+        got = con.execute(
+            f"SELECT o_orderkey, {_H60_FOLD.format(folds=folds)} "
+            "FROM range(1, 200) t(o_orderkey) ORDER BY 1"
+        ).fetchall()
+        assert got == [(i, _h60(str(i)) % folds) for i in range(1, 200)]

@@ -40,3 +40,18 @@ def test_real_value_mismatch_still_fails():
     sdf = pd.DataFrame({"n": [5, 7]})
     odf = pd.DataFrame({"n": [5, 8]})
     assert selfcheck.compare("t", sdf, odf)
+
+
+def test_result_hash_ignores_row_and_column_order():
+    a = pd.DataFrame({"k": [1, 2], "x": [0.5, None], "s": ["a", None]})
+    b = pd.DataFrame({"s": [None, "a"], "x": [None, 0.5], "k": [2, 1]})
+    assert selfcheck.result_hash(a) == selfcheck.result_hash(b)
+
+
+def test_result_hash_tells_int_from_float():
+    ints = pd.DataFrame({"n": pd.array([5, 7], dtype="int64")})
+    floats = pd.DataFrame({"n": [5.0, 7.0]})
+    assert selfcheck.result_hash(ints) != selfcheck.result_hash(floats)
+    assert selfcheck.result_hash(ints) != selfcheck.result_hash(
+        pd.DataFrame({"n": [5, 8]})
+    )

@@ -30,10 +30,10 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.shap import (
     shap_coef,
     shap_terms,
 )
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.shap_deep import (
-    INTERNAL,
-    LEAVES,
-)
+
+#: heap layout of a depth-3 tree
+INTERNAL = tuple(range(1, 8))  # nodes 1..7
+LEAVES = tuple(range(8, 16))  # nodes 8..15
 
 
 def _v_ref(tree, covers, S, pattern):

@@ -6,13 +6,22 @@ order-insensitive values (exact for non-floats; floats must match
 bit-for-bit after the queries' own rounding — any drift is reported
 with max-abs-diff so the query can be made deterministic).
 
+With ``--oracle-only`` it starts no Spark session: it runs only the
+DuckDB oracles and prints, per query, the seconds taken and a sha256
+of the canonical result (:func:`result_hash`), then the process's peak
+RSS. ``--json PATH`` also writes those figures as JSON, for comparing
+an oracle generator's results before and after a change.
+
 Usage:
     python tools/selfcheck.py [--sf /root/testdata/sf0.01] [query ...]
+    python tools/selfcheck.py --oracle-only [--json out.json] [query ...]
 """
 
 from __future__ import annotations
 
 import argparse
+import hashlib
+import json
 import math
 import sys
 import time
@@ -88,6 +97,51 @@ def same(a, b) -> bool:
     return a == b
 
 
+def result_hash(df: pd.DataFrame) -> str:
+    """sha256 of :func:`canon`'s columns and rows with every value
+    tagged by its type, as :func:`same` compares: independent of row
+    and column order, and 5 hashes apart from 5.0."""
+
+    def tag(v):
+        if isinstance(v, tuple):
+            return ("tuple", tuple(tag(x) for x in v))
+        return (type(v).__name__, v)
+
+    rows, cols = canon(df)
+    h = hashlib.sha256(repr(cols).encode())
+    for r in rows:
+        h.update(repr(tuple(tag(v) for v in r)).encode())
+    return h.hexdigest()
+
+
+def peak_rss_mib() -> float | None:
+    """This process's VmHWM in MiB (None where /proc is absent)."""
+    try:
+        for line in Path("/proc/self/status").read_text().splitlines():
+            if line.startswith("VmHWM:"):
+                return int(line.split()[1]) / 1024.0
+    except OSError:
+        pass
+    return None
+
+
+def oracle_pass(con, oracles: dict[str, str], names: list[str]) -> dict:
+    """Run each named oracle on ``con`` alone: {name: {"s": seconds,
+    "sha256": result_hash}} or {"s", "error"} when the oracle raises."""
+    out = {}
+    for name in names:
+        t0 = time.time()
+        try:
+            odf = con.execute(oracles[name]).fetchdf()
+            rec = {"sha256": result_hash(odf), "rows": len(odf)}
+        except Exception as e:
+            rec = {"error": str(e).splitlines()[0][:200]}
+        rec["s"] = round(time.time() - t0, 2)
+        out[name] = rec
+        print(f"ORACLE {name} [{rec['s']:.2f}s] {rec.get('sha256') or 'error: ' + rec['error']}")
+    return out
+
+
 def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
     issues = []
     if sorted(sdf.columns) != sorted(odf.columns):
@@ -128,13 +182,13 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
+    ap.add_argument("--oracle-only", action="store_true")
+    ap.add_argument("--json")
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
     from real_time_fraud_revenue_intelligence_lakehouse_spark.plans import registry
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.session import get_spark
 
-    spark = get_spark("selfcheck")
     con = duckdb.connect(config={"memory_limit": DUCKDB_MEMORY_LIMIT})
     for t in TABLES:
         p = Path(args.sf) / f"{t}.parquet"
@@ -144,6 +198,19 @@ def main() -> int:
     qs = registry.all_queries()
     oracles = registry.all_oracles()
     names = args.queries or list(qs)
+    if args.oracle_only:
+        res = oracle_pass(con, oracles, [n for n in names if n in oracles])
+        rss = peak_rss_mib()
+        print(f"\n{len(res)} oracles, peak RSS {rss:.0f} MiB" if rss else f"\n{len(res)} oracles")
+        if args.json:
+            Path(args.json).write_text(
+                json.dumps({"sf": args.sf, "peak_rss_mib": rss, "oracles": res}, indent=1)
+            )
+        return 0
+
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.session import get_spark
+
+    spark = get_spark("selfcheck")
     ok = fail = rows_only = 0
     for name in names:
         t0 = time.time()
