@@ -90,11 +90,12 @@ from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import _x_expr, _x_sql
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import ROC_SWEEP_SQL, _x_expr, _x_sql, model_metrics_ctes
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
     H60_OK_SQL,
     MICRO,
     R6_SQL,
+    SIGMOID6_F_SQL,
     det_round,
     r6,
 )
@@ -374,10 +375,15 @@ def _stack_scores(
 
 def _rank_sum_aucs(scored: DataFrame, keys: tuple[str, ...]) -> dict:
     """Round6 exact Mann-Whitney AUC (average-rank ties) per ``keys``
-    group of a (keys…, s, label, __cnt) frame — q_model_card's
-    reduction, windowed per group over the bounded distinct-score
-    table and reduced by ONE aggregate (one scalar per group to the
-    driver). A one-class group scores 0.0, as the oracles write."""
+    group of a (keys…, s, label, __cnt) frame — the keyed AUC
+    reduction (selection, CV and early-stopping ladders), windowed
+    per group over the BOUNDED distinct-score table (a compiled
+    ensemble emits few distinct round6 scores) and reduced by ONE
+    aggregate (one scalar per group to the driver). A one-class group
+    scores 0.0, as the oracles write. Its global twin, for one
+    unbounded score table, is ext/training.model_metrics; each group
+    here equals model_metrics on that group alone (pinned in
+    tests/test_training.py). :func:`_auc_ctes` is the SQL twin."""
     grp = scored.groupBy(*keys, "s").agg(
         F.sum("__cnt").alias("n"),
         F.sum(F.col("label").cast("long") * F.col("__cnt")).alias("np"),
@@ -388,7 +394,7 @@ def _rank_sum_aucs(scored: DataFrame, keys: tuple[str, ...]) -> dict:
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     cum = grp.withColumn("cum_n", F.coalesce(F.sum("n").over(w), F.lit(0)))
-    # the model_metrics avg-rank text
+    # model_metrics' avg-rank text
     avg_rank = (F.col("cum_n") + (F.col("n") + 1) / 2.0).cast("decimal(28,1)")
     rs = F.col("np").cast("decimal(28,1)") * avg_rank
     agg = cum.groupBy(*keys).agg(
@@ -751,14 +757,12 @@ def gbt_trained_score_expr(trees: list[dict], eta: float = GBT_ETA) -> Column:
 # Every GBT and SHAP oracle is built from them; depth-2 ids pass
 # depth=2.
 
-#: The round6 sigmoid of a rows CTE's ensemble logit ``f``.
-_S6_SQL = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
 #: The round6 mean log-loss of a rows CTE: per-row losses round6 and
 #: sum as decimals, so the mean is order-independent.
 _MEAN_LOSS_SQL = R6_SQL.format(
     c="CAST(sum(CAST({l6} AS DECIMAL(18,6))) AS DOUBLE) / count(*)".format(
         l6=R6_SQL.format(
-            c=f"CASE WHEN label = 1 THEN -ln({_S6_SQL}) ELSE -ln(1.0 - {_S6_SQL}) END"
+            c=f"CASE WHEN label = 1 THEN -ln({SIGMOID6_F_SQL}) ELSE -ln(1.0 - {SIGMOID6_F_SQL}) END"
         )
     )
 )
@@ -861,8 +865,8 @@ def _gbt_chain_ctes(
         r = t - 1  # the engine's round index: schedules and messages
         active = col_subset(features, r, colsample)
         fidx_vals = ", ".join(f"({i})" for i in active)
-        gc = f"(({_S6_SQL}) - CAST(label AS DOUBLE))"
-        hc = f"(({_S6_SQL}) * (1.0 - ({_S6_SQL})))"
+        gc = f"(({SIGMOID6_F_SQL}) - CAST(label AS DOUBLE))"
+        hc = f"(({SIGMOID6_F_SQL}) * (1.0 - ({SIGMOID6_F_SQL})))"
         if pos_weight not in (None, 1.0):
             w = pos_weight if isinstance(pos_weight, str) else repr(float(pos_weight))
             wgt = f"(CASE WHEN label = 1 THEN {w} ELSE 1.0 END)"
@@ -1019,7 +1023,7 @@ def _gbt_replay_ctes(
 
 def _auc_ctes(p_: str, scored: str, key: str | None = None) -> tuple[str, str]:
     """(cte_block, auc_cte): the round6 exact Mann-Whitney AUC
-    (average-rank ties) of a (label, s) CTE — q_model_card's rank-sum
+    (average-rank ties) of a (label, s) CTE — the keyed rank-sum
     over the bounded distinct-score table, one ``auc`` row per ``key``
     value when a key is given, else one row. A one-class group scores
     0.0. The SQL twin of :func:`_rank_sum_aucs`."""
@@ -1163,32 +1167,12 @@ def gbt_roc_sql(
     eta: float = GBT_ETA,
 ) -> str:
     """Oracle for q_gbt_roc: re-train via the unrolled rounds, then
-    the fixed-threshold confusion sweep with the logreg_roc_sql
-    zero-denominator guards (identical sweep text — only the scored
-    CTE differs)."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import ROC_THRESHOLDS
-
+    logreg_roc_sql's sweep tail (:data:`ROC_SWEEP_SQL`) — only the
+    scored CTE differs."""
     ctes, rows_k = _gbt_chain_ctes(fv_sql, features, rounds, bins, lam, eta)
-    taus = ", ".join(f"({t!r})" for t in ROC_THRESHOLDS)
     return f"""WITH {ctes},
-    scored AS (SELECT label, {_S6_SQL} AS s FROM {rows_k}),
-    sweep AS (
-      SELECT t.tau, scored.label, scored.s
-      FROM scored CROSS JOIN (VALUES {taus}) t(tau)
-    )
-    SELECT tau,
-           CAST(sum(CASE WHEN s >= tau AND label = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-           CAST(sum(CASE WHEN s >= tau AND label = 0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-           CASE WHEN sum(label) = 0 THEN 0.0
-                ELSE CAST(sum(CASE WHEN s >= tau AND label = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                     / sum(label) END AS tpr,
-           CASE WHEN sum(1 - label) = 0 THEN 0.0
-                ELSE CAST(sum(CASE WHEN s >= tau AND label = 0 THEN 1 ELSE 0 END) AS DOUBLE)
-                     / sum(1 - label) END AS fpr,
-           CASE WHEN sum(CASE WHEN s >= tau THEN 1 ELSE 0 END) = 0 THEN 0.0
-                ELSE CAST(sum(CASE WHEN s >= tau AND label = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                     / sum(CASE WHEN s >= tau THEN 1 ELSE 0 END) END AS precision_at
-    FROM sweep GROUP BY 1"""
+    scored AS (SELECT label, {SIGMOID6_F_SQL} AS s FROM {rows_k}),
+    {ROC_SWEEP_SQL}"""
 
 
 def gbt_score_band_sql(
@@ -1210,7 +1194,7 @@ def gbt_score_band_sql(
     )
     rate = R6_SQL.format(c="CAST(sum(label) AS DOUBLE) / count(*)")
     return f"""WITH {ctes},
-    scored AS (SELECT label, {_S6_SQL} AS s FROM {rows_k}),
+    scored AS (SELECT label, {SIGMOID6_F_SQL} AS s FROM {rows_k}),
     banded AS (
       SELECT label, s,
              CASE WHEN s >= 0.7 THEN 'high'
@@ -1299,7 +1283,7 @@ def _auc_score(p_: str, rows: str) -> tuple[str, str]:
     """(ctes, scalar SQL): a holdout frame's round6 rank-sum AUC."""
     ctes, auc = _auc_ctes(p_, f"{p_}scored")
     return (
-        f"{p_}scored AS (SELECT label, {_S6_SQL} AS s FROM {rows}),\n    {ctes}",
+        f"{p_}scored AS (SELECT label, {SIGMOID6_F_SQL} AS s FROM {rows}),\n    {ctes}",
         f"(SELECT auc FROM {auc})",
     )
 
@@ -1404,7 +1388,6 @@ def gbt_retrain_best_sql(
         from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.model_registry import QUALITY_GATES
 
         gates = QUALITY_GATES
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import model_metrics_ctes
 
     parts, loss = _trial_parts(fv_sql, configs, features, bins, _loss_score)
     card_arms = []
@@ -1414,7 +1397,7 @@ def gbt_retrain_best_sql(
             "SELECT * FROM base", features, rounds, bins, lam, eta, prefix=p_
         )
         parts.append(ctes)
-        parts.append(f"{p_}scored AS (SELECT label, {_S6_SQL} AS s FROM {rk})")
+        parts.append(f"{p_}scored AS (SELECT label, {SIGMOID6_F_SQL} AS s FROM {rk})")
         cctes, card = model_metrics_ctes(prefix=p_, scored_from=f"{p_}scored")
         parts.append(cctes)
         card_arms.append(f"SELECT '{name}' AS config, * FROM {card}")
@@ -1516,8 +1499,8 @@ def gbt_early_stop_auc_sql(
 ) -> str:
     """Oracle for q_gbt_early_stop_auc: train on the hash-split train
     fold, replay the splits on the holdout fold, emit the per-round
-    HOLDOUT rank-sum AUC ladder (the q_model_card machinery,
-    partitioned by round), then apply the patience-k rule in window
+    HOLDOUT rank-sum AUC ladder (:func:`_auc_ctes` keyed by round),
+    then apply the patience-k rule in window
     form: boosting stops at the first round whose distance to the
     last improving round reaches ``patience`` (the reference's
     eval_metric='auc' + early_stopping_rounds, `fraud_detector.py:
@@ -1525,7 +1508,7 @@ def gbt_early_stop_auc_sql(
     parts = _ladder_parts(
         fv_sql, "esa_", ("esa", rounds, eta, lam), features, bins,
         lambda t, rows: (
-            f"SELECT CAST({t} AS INTEGER) AS round, {_S6_SQL} AS s, label FROM {rows}"
+            f"SELECT CAST({t} AS INTEGER) AS round, {SIGMOID6_F_SQL} AS s, label FROM {rows}"
         ),
     )
     actes, auc = _auc_ctes("esa_", "lad", key="round")

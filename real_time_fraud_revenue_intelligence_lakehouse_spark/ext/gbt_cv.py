@@ -66,13 +66,13 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R6_SQL, r6
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import H60_SQL, R6_SQL, r6
 
 CV_FOLDS = 3
 
 #: An order's fold, DuckDB side: hash60(o_orderkey) mod ``folds``, the
 #: engine's ``pmod(hash60(o_orderkey), folds)``.
-_H60_FOLD = "('0x' || substr(md5(o_orderkey::VARCHAR), 1, 15))::BIGINT % {folds}"
+_H60_FOLD = H60_SQL.format(x="o_orderkey::VARCHAR") + " % {folds}"
 
 
 def train_gbt_grid_cv(

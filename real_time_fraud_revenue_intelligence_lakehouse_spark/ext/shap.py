@@ -62,12 +62,11 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
     GBT_ETA,
     GBT_LAMBDA,
     GBT_ROUNDS,
-    _S6_SQL,
     _bin_expr,
     _gbt_chain_ctes,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R6_SQL
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R6_SQL, SIGMOID6_F_SQL
 
 #: The deepest tree the exact engine explains (128 branch patterns).
 MAX_SHAP_DEPTH = 3
@@ -384,8 +383,8 @@ def _shap_ctes(
     )
     parts.append(
         f"banded AS MATERIALIZED (SELECT o_orderkey, "
-        f"CASE WHEN {_S6_SQL} >= 0.7 THEN 'high' "
-        f"WHEN {_S6_SQL} >= 0.4 THEN 'medium' ELSE 'low' END AS risk_label "
+        f"CASE WHEN {SIGMOID6_F_SQL} >= 0.7 THEN 'high' "
+        f"WHEN {SIGMOID6_F_SQL} >= 0.4 THEN 'medium' ELSE 'low' END AS risk_label "
         f"FROM {rows_k})"
     )
     return parts

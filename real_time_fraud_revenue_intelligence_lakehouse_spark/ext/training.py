@@ -45,6 +45,8 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars impo
     H60_OK_SQL,
     MICRO,
     R6_SQL,
+    R8_SQL,
+    SIGMOID6_SQL,
     det_round,
     r6,
 )
@@ -312,7 +314,7 @@ def logreg_train_ctes(
         ["w_bias"] + [f"w_{f} * ({_x_of(f)})" for f in features]
     )
     for t in range(1, iters + 1):
-        p = R6_SQL.format(c=f"1.0 / (1.0 + exp(-({z_terms})))")
+        p = SIGMOID6_SQL.format(z=z_terms)
         resid = f"({p} - CAST(label AS DOUBLE))"
         bias_c = (
             f"{resid} * 1000000.0" if not weighted else f"{resid} * {wgt} * 1000000.0"
@@ -385,7 +387,7 @@ def logreg_score_sql(
     statement."""
     ctes, wk = logreg_train_ctes(fv_sql, features, lr, iters)
     z = _z_sql("w.", features)
-    s = R6_SQL.format(c=f"1.0 / (1.0 + exp(-({z})))")
+    s = SIGMOID6_SQL.format(z=z)
     mean_s = R6_SQL.format(
         c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*)"
     )
@@ -449,7 +451,7 @@ def model_selection_sql(
     sums = []
     for i in range(len(configs)):
         z = _z_sql(f"m{i}.", features)
-        p = R6_SQL.format(c=f"1.0 / (1.0 + exp(-({z})))")
+        p = SIGMOID6_SQL.format(z=z)
         raw = f"CASE WHEN label = 1 THEN -ln({p}) ELSE -ln(1.0 - {p}) END"
         sums.append(
             f"sum(CAST({R6_SQL.format(c=raw)} AS DECIMAL(18,6))) AS L_{i}"
@@ -803,29 +805,14 @@ def nb_score_sql(fv_sql: str, features: tuple[str, ...] = NB_FEATURES) -> str:
 #: DuckDB SQL (0.05 * k would not: 0.05*3 != parse("0.15")).
 ROC_THRESHOLDS = tuple(k / 20 for k in range(1, 11))
 
-
-def logreg_roc_sql(
-    fv_sql: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    lr: float = LR,
-    iters: int = ITERS,
-) -> str:
-    """Oracle for q_logreg_roc: re-train via the unrolled CTEs, score,
-    then confusion counts + TPR/FPR/precision at each fixed
-    threshold. Rates are ratios of exact integers — no rounding
-    convention needed; zero-prediction precision pins to 0.0 in both
-    engines via CASE."""
-    ctes, wk = logreg_train_ctes(fv_sql, features, lr, iters)
-    z = _z_sql("w.", features)
-    s = R6_SQL.format(c=f"1.0 / (1.0 + exp(-({z})))")
-    taus = ", ".join(f"({t!r})" for t in ROC_THRESHOLDS)
-    return f"""WITH {ctes},
-    scored AS (
-      SELECT fv.label, {s} AS s FROM fv CROSS JOIN {wk} w
-    ),
-    sweep AS (
+#: The SQL twin of :func:`logreg_roc`, to append after a ``scored``
+#: CTE of (label, s) — every ROC oracle's sweep tail: confusion
+#: counts + TPR/FPR/precision at each fixed threshold. Rates are
+#: ratios of exact integers — no rounding convention needed; each
+#: pins to 0.0 on an empty denominator via CASE in both engines.
+ROC_SWEEP_SQL = f"""sweep AS (
       SELECT t.tau, scored.label, scored.s
-      FROM scored CROSS JOIN (VALUES {taus}) t(tau)
+      FROM scored CROSS JOIN (VALUES {", ".join(f"({t!r})" for t in ROC_THRESHOLDS)}) t(tau)
     )
     SELECT tau,
            CAST(sum(CASE WHEN s >= tau AND label = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
@@ -840,6 +827,23 @@ def logreg_roc_sql(
                 ELSE CAST(sum(CASE WHEN s >= tau AND label = 1 THEN 1 ELSE 0 END) AS DOUBLE)
                      / sum(CASE WHEN s >= tau THEN 1 ELSE 0 END) END AS precision_at
     FROM sweep GROUP BY 1"""
+
+
+def logreg_roc_sql(
+    fv_sql: str,
+    features: tuple[str, ...] = SCORE_FEATURES,
+    lr: float = LR,
+    iters: int = ITERS,
+) -> str:
+    """Oracle for q_logreg_roc: re-train via the unrolled CTEs, score,
+    then the :data:`ROC_SWEEP_SQL` tail."""
+    ctes, wk = logreg_train_ctes(fv_sql, features, lr, iters)
+    s = SIGMOID6_SQL.format(z=_z_sql("w.", features))
+    return f"""WITH {ctes},
+    scored AS (
+      SELECT fv.label, {s} AS s FROM fv CROSS JOIN {wk} w
+    ),
+    {ROC_SWEEP_SQL}"""
 
 
 def logreg_roc(
@@ -888,16 +892,23 @@ def model_metrics(scored: DataFrame, tau: float = MODEL_CARD_TAU) -> DataFrame:
     """The reference's ModelMetrics dataclass (`fraud_detector.py:
     76-89`, computed by `_evaluate` :278-320) as ONE distributed
     query over a (label, s) frame: exact ROC AUC (Mann-Whitney
-    rank-sum with average-rank ties — the q_auc machinery), average
-    precision (the sklearn Σ(R_k−R_{k−1})·P_k step sum over
-    descending score groups, each term round8-decimal-folded so the
-    sum is order-independent), precision/recall/F1 at the reference's
-    0.70 threshold (zero_division=0 guards, like sklearn's), and the
-    confusion counts. Everything reduces to the distinct-score table
-    (a compiled GBT emits ≤ leaves^trees distinct scores), cumulative
-    offsets come from distributed_cumsum (no single-partition
-    window), and the only floats are final divisions of exact
-    integers — a model card that hash-gates."""
+    rank-sum with average-rank ties), average precision (the sklearn
+    Σ(R_k−R_{k−1})·P_k step sum over descending score groups, each
+    term round8-decimal-folded so the sum is order-independent),
+    precision/recall/F1 at the reference's 0.70 threshold
+    (zero_division=0 guards, like sklearn's; a one-class frame scores
+    AUC 0.0), and the confusion counts. The global (ungrouped) AUC
+    reduction: q_auc, q_model_card, q_model_promotion and
+    q_retrain_best all read it; :func:`ext.gbt._rank_sum_aucs` is the
+    keyed one. Everything reduces to the distinct-score table, which
+    may be as large as the input (q_auc's continuous amounts):
+    cumulative offsets come from distributed_cumsum (no
+    single-partition window), and the class totals ride its eager
+    boundary job as exact integer sums folded back in as literals (no
+    totals subtree, no crossJoin). The only floats are final
+    divisions of exact integers — a model card that hash-gates. An
+    empty frame gives no row. :func:`model_metrics_ctes` is the SQL
+    twin."""
     from real_time_fraud_revenue_intelligence_lakehouse_spark.operators.ranking import (
         distributed_cumsum,
     )
@@ -905,52 +916,45 @@ def model_metrics(scored: DataFrame, tau: float = MODEL_CARD_TAU) -> DataFrame:
     c = scored.groupBy("s").agg(
         F.count(F.lit(1)).alias("n"), F.sum("label").alias("np")
     ).localCheckpoint()
-    cum = distributed_cumsum(c, "s", ["n", "np"], exclusive=True)
-    t = c.agg(
-        F.sum("np").alias("n_pos"),
-        (F.sum("n") - F.sum("np")).alias("n_neg"),
-        F.sum("n").alias("n_tot"),
+    cum, tot = distributed_cumsum(
+        c, "s", ["n", "np"], exclusive=True, total_sums=["n", "np"]
     )
-    j = cum.crossJoin(F.broadcast(t))
+    n_tot, n_pos = int(tot["n"] or 0), int(tot["np"] or 0)
+    n_neg = n_tot - n_pos
+    n_tot_c, n_pos_c = F.lit(n_tot).cast("long"), F.lit(n_pos).cast("long")
     avg_rank = (F.col("cum_n") + (F.col("n") + 1) / 2.0).cast("decimal(28,1)")
     rs = F.col("np").cast("decimal(28,1)") * avg_rank
-    # term-level n_pos guard: ANSI mode evaluates the division per
-    # row before any aggregate-level CASE could mask it
     ap_term = det_round(
-        F.when(F.col("n_pos") == 0, 0.0).otherwise(
-            (F.col("np").cast("double") / F.col("n_pos"))
-            * (
-                (F.col("n_pos") - F.col("cum_np")).cast("double")
-                / (F.col("n_tot") - F.col("cum_n"))
-            )
-        ),
+        F.lit(0.0) if n_pos == 0
+        else (F.col("np").cast("double") / n_pos_c)
+        * ((n_pos_c - F.col("cum_np")).cast("double") / (n_tot_c - F.col("cum_n"))),
         8,
     ).cast("decimal(18,8)")
-    agg = j.groupBy("n_pos", "n_neg", "n_tot").agg(
+    agg = cum.agg(
         F.sum(rs).alias("rank_sum"),
         F.sum(ap_term).alias("ap_sum"),
         F.sum(F.when(F.col("s") >= F.lit(tau), F.col("np")).otherwise(F.lit(0))).alias("tp"),
         F.sum(F.when(F.col("s") >= F.lit(tau), F.col("n")).otherwise(F.lit(0))).alias("pp"),
     )
-    auc_raw = (
-        F.col("rank_sum").cast("double")
-        - F.col("n_pos").cast("double") * (F.col("n_pos") + 1) / 2
-    ) / (F.col("n_pos").cast("double") * F.col("n_neg"))
-    auc = F.when((F.col("n_pos") == 0) | (F.col("n_neg") == 0), 0.0).otherwise(auc_raw)
-    ap = F.when(F.col("n_pos") == 0, 0.0).otherwise(F.col("ap_sum").cast("double"))
+    auc = (
+        F.lit(0.0) if n_pos == 0 or n_neg == 0
+        else (
+            F.col("rank_sum").cast("double")
+            - n_pos_c.cast("double") * (n_pos_c + 1) / 2
+        ) / (n_pos_c.cast("double") * F.lit(n_neg).cast("long"))
+    )
+    ap = F.lit(0.0) if n_pos == 0 else F.col("ap_sum").cast("double")
     prec = F.when(F.col("pp") == 0, 0.0).otherwise(
         F.col("tp").cast("double") / F.col("pp")
     )
-    rec = F.when(F.col("n_pos") == 0, 0.0).otherwise(
-        F.col("tp").cast("double") / F.col("n_pos")
-    )
+    rec = F.lit(0.0) if n_pos == 0 else F.col("tp").cast("double") / n_pos_c
     f1 = F.when(prec + rec == 0.0, 0.0).otherwise(
         F.lit(2.0) * prec * rec / (prec + rec)
     )
-    return agg.select(
+    return agg.where(F.lit(n_tot > 0)).select(
         F.lit(float(tau)).alias("threshold"),
-        F.col("n_tot").cast("long").alias("n"),
-        F.col("n_pos").cast("long").alias("n_pos"),
+        n_tot_c.alias("n"),
+        n_pos_c.alias("n_pos"),
         det_round(auc, 6).alias("roc_auc"),
         det_round(ap, 6).alias("avg_precision"),
         det_round(prec, 6).alias("precision_at"),
@@ -958,10 +962,8 @@ def model_metrics(scored: DataFrame, tau: float = MODEL_CARD_TAU) -> DataFrame:
         det_round(f1, 6).alias("f1_at"),
         F.col("tp").cast("long").alias("tp"),
         (F.col("pp") - F.col("tp")).cast("long").alias("fp"),
-        (F.col("n_pos") - F.col("tp")).cast("long").alias("fn"),
-        (F.col("n_tot") - F.col("pp") - (F.col("n_pos") - F.col("tp")))
-        .cast("long")
-        .alias("tn"),
+        (n_pos_c - F.col("tp")).cast("long").alias("fn"),
+        (n_tot_c - F.col("pp") - (n_pos_c - F.col("tp"))).cast("long").alias("tn"),
     )
 
 
@@ -984,8 +986,7 @@ def model_metrics_ctes(
     winner — that asymmetry is an oracle artifact, not a scale
     concern)."""
     p_ = prefix
-    r8 = "(floor(({c}) * 100000000.0 + 0.5) / 100000000.0)"
-    ap_term = r8.format(
+    ap_term = R8_SQL.format(
         c=(
             "CASE WHEN n_pos = 0 THEN 0.0 ELSE "
             "(CAST(np AS DOUBLE) / n_pos)"
@@ -1143,7 +1144,6 @@ def kmeans_sql(
     select emits one row per cluster (long form) referencing the last
     centroid CTE exactly once via an id VALUES join + CASE unpivot
     (the logreg_weights_sql single-reference discipline)."""
-    r8 = "(floor(({c}) * 100000000.0 + 0.5) / 100000000.0)"
 
     def x(f: str) -> str:
         return _x_sql(f)
@@ -1186,7 +1186,7 @@ def kmeans_sql(
             for f in features:
                 gsel.append(
                     f"sum(CASE WHEN asg = {i} THEN "
-                    f"CAST({r8.format(c=x(f))} AS DECIMAL(28,8)) END) AS s_{i}_{f}"
+                    f"CAST({R8_SQL.format(c=x(f))} AS DECIMAL(28,8)) END) AS s_{i}_{f}"
                 )
         parts.append(f"g{t} AS (SELECT {', '.join(gsel)} FROM a{t})")
         usel = []
@@ -1257,7 +1257,6 @@ def kmeans_inertia_sql(
 ) -> str:
     """Oracle for q_kmeans_inertia: the same unrolled training CTEs,
     then one assign+least staging pass and per-cluster decimal SSE."""
-    r8 = "(floor(({c}) * 100000000.0 + 0.5) / 100000000.0)"
     full = kmeans_sql(fv_sql, features, k, iters)
     # reuse everything up to the final select: rebuild the CTE block
     head, _sep, _tail = full.rpartition("\n    SELECT u.cluster")
@@ -1287,7 +1286,7 @@ def kmeans_inertia_sql(
       FROM (SELECT {", ".join(features)}, {dists} FROM fv CROSS JOIN {wk} w)
     )
     SELECT cluster, CAST(count(*) AS BIGINT) AS n,
-           {R6_SQL.format(c=f"CAST(sum(CAST({r8.format(c='dmin')} AS DECIMAL(28,8))) AS DOUBLE)")} AS inertia
+           {R6_SQL.format(c=f"CAST(sum(CAST({R8_SQL.format(c='dmin')} AS DECIMAL(28,8))) AS DOUBLE)")} AS inertia
     FROM ev GROUP BY 1"""
 
 
@@ -1467,7 +1466,7 @@ def logreg_ablation_sql(
         return " + ".join(terms)
 
     def loss(skip: str | None) -> str:
-        p = R6_SQL.format(c=f"1.0 / (1.0 + exp(-({z_without(skip)})))")
+        p = SIGMOID6_SQL.format(z=z_without(skip))
         raw = f"CASE WHEN label = 1 THEN -ln({p}) ELSE -ln(1.0 - {p}) END"
         return R6_SQL.format(c=raw)
 

@@ -50,8 +50,46 @@ def det_round(col: Column, ndigits: int = 4) -> Column:
 #: ``s`` (10**ndigits, as a float literal).
 ROUND_SQL = "(floor(({c}) * {s} + 0.5) / {s})"
 
-#: :data:`ROUND_SQL` at 6 digits — format with ``c`` only.
-R6_SQL = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
+
+def det_round_sql(c: str, ndigits: int = 4) -> str:
+    """:data:`ROUND_SQL` of the SQL expression ``c`` at ``ndigits``."""
+    return ROUND_SQL.format(c=c, s=float(10**ndigits))
+
+
+#: :data:`ROUND_SQL` at 2, 4, 6 and 8 digits — format with ``c`` only.
+R2_SQL, R4_SQL, R6_SQL, R8_SQL = (det_round_sql("{c}", k) for k in (2, 4, 6, 8))
+
+#: The round6 sigmoid of a logit ``z`` (SQL text, format with ``z``).
+SIGMOID6_SQL = R6_SQL.format(c="1.0 / (1.0 + exp(-({z})))")
+#: The round6 sigmoid of a rows CTE's ensemble logit column ``f``.
+SIGMOID6_F_SQL = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
+
+#: SQL twins of :func:`exact_sum` / :func:`exact_avg` (4 digits) —
+#: format with ``c``, a column name.
+SUM_SQL = f"cast(sum(cast({{c}} as {MONEY_DEC})) as double)"
+AVG_SQL = R4_SQL.format(c=f"{SUM_SQL} / count({{c}})")
+
+#: A sum at 4 decimal places in a wide accumulator, double out (SQL,
+#: format with ``c``) — for values with four decimals, such as
+#: price × (1 − discount).
+WIDE_SUM_SQL = "cast(sum(cast({c} as decimal(38,4))) as double)"
+
+#: Decimal-exact lineitem revenue sum, Σ extendedprice · (1 − discount),
+#: as a double (SQL; :func:`rev_sum` is the Spark twin).
+REV_SUM_SQL = (
+    f"cast(sum(cast(l_extendedprice as {MONEY_DEC}) "
+    f"* (1 - cast(l_discount as {MONEY_DEC}))) as double)"
+)
+
+#: 52-bit md5 fraction numerator of the VARCHAR ``x`` (SQL): 13 hex
+#: chars = 52 bits < 2^53, so the integer is EXACT in a double and
+#: h / TWO52 is one correctly-rounded IEEE division — bit-identical in
+#: any engine. :func:`h52` is the Spark twin.
+H52_SQL = "('0x' || substr(md5({x}), 1, 13))::BIGINT"
+TWO52 = float(2**52)
+
+#: The first 15 hex digits (60 bits) of md5 of the VARCHAR ``x`` (SQL).
+H60_SQL = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 
 #: 10**6 as a float: the fixed-point scale of 6-digit micro-unit sums.
 MICRO = 1_000_000.0
@@ -64,7 +102,7 @@ def r6(x: float) -> float:
 
 #: The 80/20 train/validation split key of an order, as DuckDB SQL:
 #: the first 15 hex digits (60 bits) of md5(o_orderkey), mod 100.
-H60_OK_SQL = "('0x' || substr(md5(o_orderkey::VARCHAR), 1, 15))::BIGINT % 100"
+H60_OK_SQL = H60_SQL.format(x="o_orderkey::VARCHAR") + " % 100"
 
 
 def exact_sum(col: str | Column, alias: str | None = None) -> Column:
@@ -72,6 +110,20 @@ def exact_sum(col: str | Column, alias: str | None = None) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     out = F.sum(c.cast(MONEY_DEC)).cast("double")
     return out.alias(alias) if alias else out
+
+
+def rev_sum() -> Column:
+    """Spark twin of :data:`REV_SUM_SQL`: the decimal-exact revenue
+    sum over l_extendedprice / l_discount."""
+    p = F.col("l_extendedprice").cast(MONEY_DEC)
+    d = F.col("l_discount").cast(MONEY_DEC)
+    return F.sum(p * (F.lit(1) - d)).cast("double")
+
+
+def h52(c: Column) -> Column:
+    """Spark twin of :data:`H52_SQL` (same md5 hex prefix, same
+    52-bit integer)."""
+    return F.conv(F.substring(F.md5(c), 1, 13), 16, 10).cast("long")
 
 
 def exact_avg(col: str | Column, ndigits: int = 4, alias: str | None = None) -> Column:

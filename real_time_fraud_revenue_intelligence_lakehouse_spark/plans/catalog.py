@@ -17,6 +17,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
+    AVG_SQL,
+    R4_SQL,
+    SUM_SQL,
     amount_tier,
     exact_avg,
     exact_sum,
@@ -32,12 +35,6 @@ TIER_SQL = (
     "WHEN {c} < 1000 THEN 'medium' WHEN {c} < 5000 THEN 'high' "
     "ELSE 'premium' END"
 )
-
-# Deterministic money aggregates (see functions/scalars.py rationale).
-SUM_SQL = "cast(sum(cast({c} as decimal(18,2))) as double)"
-# Deterministic 4-digit rounding — same IEEE formula as det_round().
-R4 = "(floor(({c}) * 10000.0 + 0.5) / 10000.0)"
-AVG_SQL = R4.format(c="cast(sum(cast({c} as decimal(18,2))) as double) / count({c})")
 
 
 # ---------------------------------------------------------------------------
@@ -64,7 +61,7 @@ AVG_SQL = R4.format(c="cast(sum(cast({c} as decimal(18,2))) as double) / count({
       count(CASE WHEN o_orderstatus='O' THEN 1 END) AS open_orders,
       {AVG_SQL.format(c='o_totalprice')} AS avg_order_value,
       count(DISTINCT o_custkey) AS unique_customers,
-      {R4.format(c="count(CASE WHEN o_orderstatus='F' THEN 1 END) / (count(*) + 0.001)")} AS fulfilled_rate
+      {R4_SQL.format(c="count(CASE WHEN o_orderstatus='F' THEN 1 END) / (count(*) + 0.001)")} AS fulfilled_rate
     FROM base
     GROUP BY 1, 2, 3
     """,

@@ -41,24 +41,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
+    H52_SQL,
+    R4_SQL,
+    R6_SQL,
+    R8_SQL,
+    SUM_SQL,
+    TWO52,
+    det_round,
+    h52,
+)
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
-
-R4 = "(floor(({c}) * 10000.0 + 0.5) / 10000.0)"
-R6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
-R8 = "(floor(({c}) * 100000000.0 + 0.5) / 100000000.0)"
-
-# 52-bit md5 fraction: 13 hex chars = 52 bits < 2^53, so the integer
-# is EXACT in a double and h/2^52 is one correctly-rounded IEEE
-# division — bit-identical in any engine.
-H52 = "('0x' || substr(md5({x}), 1, 13))::BIGINT"
-TWO52 = float(2**52)
-
-
-def _h52(c: F.Column) -> F.Column:
-    """Spark twin of H52 (same md5 hex prefix, same 52-bit integer)."""
-    return F.conv(F.substring(F.md5(c), 1, 13), 16, 10).cast("long")
 
 
 # --- Markov transition matrix ----------------------------------------------
@@ -81,7 +75,7 @@ def _h52(c: F.Column) -> F.Column:
            {r6} AS p_trans
     FROM c
     """.format(
-        r6=R6.format(
+        r6=R6_SQL.format(
             c="cast(n as double) / cast(sum(n) OVER (PARTITION BY prev_type) as double)"
         )
     ),
@@ -164,8 +158,8 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH med AS (
       SELECT l_returnflag,
-             {R4.format(c="median(l_quantity)")} AS med_qty,
-             {R4.format(c="median(l_extendedprice)")} AS med_price,
+             {R4_SQL.format(c="median(l_quantity)")} AS med_qty,
+             {R4_SQL.format(c="median(l_extendedprice)")} AS med_price,
              count(*) AS n_rows
       FROM lineitem GROUP BY 1
     ),
@@ -222,12 +216,12 @@ PRIO_K = 200
     oracle=f"""
     WITH u AS (
       SELECT o_orderkey, o_totalprice,
-             cast({H52.format(x="cast(o_orderkey as varchar)")} as double)
+             cast({H52_SQL.format(x="cast(o_orderkey as varchar)")} as double)
                / {TWO52!r} AS unif
       FROM orders
     )
     SELECT o_orderkey, o_totalprice,
-           {R6.format(c="o_totalprice / unif")} AS priority
+           {R6_SQL.format(c="o_totalprice / unif")} AS priority
     FROM u
     ORDER BY o_totalprice / unif DESC, o_orderkey ASC
     LIMIT {PRIO_K}
@@ -250,7 +244,7 @@ def q_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = o.select(
         "o_orderkey",
         "o_totalprice",
-        (_h52(F.col("o_orderkey").cast("string")).cast("double") / F.lit(TWO52)).alias(
+        (h52(F.col("o_orderkey").cast("string")).cast("double") / F.lit(TWO52)).alias(
             "unif"
         ),
     )
@@ -285,11 +279,11 @@ def q_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
            {r6} AS entropy
     FROM terms GROUP BY source
     """.format(
-        r8=R8.format(
+        r8=R8_SQL.format(
             c="-(cast(c as double)/cast(n as double))"
             " * ln(cast(c as double)/cast(n as double))"
         ),
-        r6=R6.format(c="cast(sum(term) as double)"),
+        r6=R6_SQL.format(c="cast(sum(term) as double)"),
     ),
     tags=("ext", "text", "quality"),
 )
@@ -341,8 +335,8 @@ def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM base GROUP BY 1
     )
     SELECT b.c_custkey, b.c_mktsegment,
-           {R4.format(c="coalesce(b.bal, st.med)")} AS bal_imputed,
-           {R4.format(c="(coalesce(b.bal, st.med) - st.med) / st.iqr")} AS bal_scaled
+           {R4_SQL.format(c="coalesce(b.bal, st.med)")} AS bal_imputed,
+           {R4_SQL.format(c="(coalesce(b.bal, st.med) - st.med) / st.iqr")} AS bal_scaled
     FROM base b JOIN st USING (c_mktsegment)
     """,
     tags=("sampling", "feature-prep"),
@@ -385,7 +379,7 @@ def q_robust_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH daily AS (
       SELECT user_id, cast(ts as date) AS day,
-             cast(sum(cast(value as decimal(18,2))) as double) AS day_value
+             {SUM_SQL.format(c="value")} AS day_value
       FROM events WHERE user_id % 20 = 0 GROUP BY 1, 2
     ),
     rng AS (SELECT user_id, min(day) AS d0, max(day) AS d1 FROM daily GROUP BY 1),
@@ -414,7 +408,7 @@ def q_robust_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM j
     )
     SELECT user_id, day,
-      {R4.format(c=(
+      {R4_SQL.format(c=(
           "CASE WHEN day_value IS NOT NULL THEN day_value "
           "ELSE pv + (nv - pv) * (date_diff('day', pd, day)::DOUBLE"
           " / date_diff('day', pd, nd)) END"
@@ -480,7 +474,7 @@ def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_rolling_median",
     oracle=f"""
     SELECT event_id, user_id,
-           {R4.format(c=(
+           {R4_SQL.format(c=(
                "median(value) OVER (PARTITION BY user_id ORDER BY ts, event_id "
                "ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)"
            ))} AS roll_med
@@ -538,7 +532,7 @@ MAD_CUT = 3.5
       SELECT event_type, median(adev) AS mad FROM dev GROUP BY 1
     )
     SELECT d.event_id, d.event_type, d.value,
-           {R4.format(c=f"(d.value - d.med) / ({MAD_SCALE} * m.mad)")} AS rob_z
+           {R4_SQL.format(c=f"(d.value - d.med) / ({MAD_SCALE} * m.mad)")} AS rob_z
     FROM dev d JOIN mad m USING (event_type)
     WHERE abs((d.value - d.med) / ({MAD_SCALE} * m.mad)) > {MAD_CUT}
     """,
@@ -591,12 +585,12 @@ EWMA_SPAN = 16   # trailing frame length
       FROM events
     )
     SELECT event_id, user_id,
-           {R4.format(c=(
+           {R4_SQL.format(c=(
                "cast(list_sum(list_transform(range(len(a)), i -> "
-               f"CAST({R8.format(c=f'a[i+1] * pow({EWMA_DECAY}, len(a)-1-i)')} AS DECIMAL(28,8)))) as double)"
+               f"CAST({R8_SQL.format(c=f'a[i+1] * pow({EWMA_DECAY}, len(a)-1-i)')} AS DECIMAL(28,8)))) as double)"
                " / "
                "cast(list_sum(list_transform(range(len(a)), i -> "
-               f"CAST({R8.format(c=f'pow({EWMA_DECAY}, len(a)-1-i)')} AS DECIMAL(28,8)))) as double)"
+               f"CAST({R8_SQL.format(c=f'pow({EWMA_DECAY}, len(a)-1-i)')} AS DECIMAL(28,8)))) as double)"
            ))} AS ewma
     FROM base
     """,
@@ -654,7 +648,7 @@ HW_ALPHA, HW_BETA = 0.3, 0.1
     WITH RECURSIVE wk AS (
       SELECT o_orderpriority AS pri,
              CAST(date_trunc('week', o_orderdate) AS DATE) AS w,
-             cast(sum(cast(o_totalprice as decimal(18,2))) as double) AS x
+             {SUM_SQL.format(c="o_totalprice")} AS x
       FROM orders GROUP BY 1, 2
     ),
     s AS (
@@ -679,10 +673,10 @@ HW_ALPHA, HW_BETA = 0.3, 0.1
       FROM hw
     )
     SELECT pri AS priority, CAST(rn AS BIGINT) AS n_weeks,
-           {R4.format(c='l')} AS level_end,
-           {R4.format(c='b')} AS trend_end,
-           {R4.format(c='l + 4 * b')} AS forecast_4w,
-           {R4.format(c='CASE WHEN rn > 1 THEN sae / (rn - 1) ELSE 0.0 END')} AS mae_1step
+           {R4_SQL.format(c='l')} AS level_end,
+           {R4_SQL.format(c='b')} AS trend_end,
+           {R4_SQL.format(c='l + 4 * b')} AS forecast_4w,
+           {R4_SQL.format(c='CASE WHEN rn > 1 THEN sae / (rn - 1) ELSE 0.0 END')} AS mae_1step
     FROM last WHERE rk = 1
     """,
     tags=("timeseries", "forecast", "iterative"),
@@ -765,7 +759,7 @@ def q_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM orders GROUP BY 1
     ),
     slopes AS (
-      SELECT {R8.format(c="(b.y - a.y) / (b.x - a.x)")} AS s
+      SELECT {R8_SQL.format(c="(b.y - a.y) / (b.x - a.x)")} AS s
       FROM daily a JOIN daily b ON a.x < b.x
     ),
     ms AS (
@@ -775,7 +769,7 @@ def q_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
       ) WHERE rn = CAST(floor((n + 1) / 2) AS BIGINT)
     ),
     resid AS (
-      SELECT {R4.format(c="d.y - (SELECT s FROM ms) * d.x")} AS r FROM daily d
+      SELECT {R4_SQL.format(c="d.y - (SELECT s FROM ms) * d.x")} AS r FROM daily d
     ),
     mi AS (
       SELECT r FROM (
@@ -856,7 +850,6 @@ def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
 # --- price elasticity of demand -----------------------------------------------
 
 ELASTICITY_MIN_N = 30
@@ -867,8 +860,8 @@ ELASTICITY_MIN_N = 30
     oracle=f"""
     WITH pts AS (
       SELECT p.p_brand AS brand,
-             {R8.format(c="ln(l.l_extendedprice / l.l_quantity)")} AS x,
-             {R8.format(c="ln(l.l_quantity)")} AS y
+             {R8_SQL.format(c="ln(l.l_extendedprice / l.l_quantity)")} AS x,
+             {R8_SQL.format(c="ln(l.l_quantity)")} AS y
       FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
       WHERE l.l_quantity > 0 AND l.l_extendedprice > 0
     ),
@@ -876,12 +869,12 @@ ELASTICITY_MIN_N = 30
       SELECT brand, count(*) AS n,
              CAST(sum(CAST(x AS DECIMAL(38,8))) AS DOUBLE) AS sx,
              CAST(sum(CAST(y AS DECIMAL(38,8))) AS DOUBLE) AS sy,
-             CAST(sum(CAST({R8.format(c="x * y")} AS DECIMAL(38,8))) AS DOUBLE) AS sxy,
-             CAST(sum(CAST({R8.format(c="x * x")} AS DECIMAL(38,8))) AS DOUBLE) AS sxx
+             CAST(sum(CAST({R8_SQL.format(c="x * y")} AS DECIMAL(38,8))) AS DOUBLE) AS sxy,
+             CAST(sum(CAST({R8_SQL.format(c="x * x")} AS DECIMAL(38,8))) AS DOUBLE) AS sxx
       FROM pts GROUP BY 1
     )
     SELECT brand, CAST(n AS BIGINT) AS n,
-           {R6.format(c="(n * sxy - sx * sy) / (n * sxx - sx * sx)")} AS elasticity
+           {R6_SQL.format(c="(n * sxy - sx * sy) / (n * sxx - sx * sx)")} AS elasticity
     FROM m WHERE n >= {ELASTICITY_MIN_N}
     """,
     tags=("analytics", "econometrics", "regression"),
@@ -931,14 +924,14 @@ def q_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH rev AS (
       SELECT s.s_nationkey AS nation, l.l_suppkey AS supp,
-             sum(CAST({R4.format(c="l.l_extendedprice * (1 - l.l_discount)")} AS DECIMAL(38,4))) AS r
+             sum(CAST({R4_SQL.format(c="l.l_extendedprice * (1 - l.l_discount)")} AS DECIMAL(38,4))) AS r
       FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
       GROUP BY 1, 2
     ),
     tot AS (SELECT nation, sum(r) AS t, count(*) AS n_suppliers FROM rev GROUP BY 1)
     SELECT t.nation, CAST(t.n_suppliers AS BIGINT) AS n_suppliers,
-           CAST(sum(CAST({R8.format(c="(CAST(r.r AS DOUBLE) / CAST(t.t AS DOUBLE)) * (CAST(r.r AS DOUBLE) / CAST(t.t AS DOUBLE))")} AS DECIMAL(28,8))) AS DOUBLE) AS hhi,
-           {R6.format(c="1.0 / t.n_suppliers")} AS hhi_floor
+           CAST(sum(CAST({R8_SQL.format(c="(CAST(r.r AS DOUBLE) / CAST(t.t AS DOUBLE)) * (CAST(r.r AS DOUBLE) / CAST(t.t AS DOUBLE))")} AS DECIMAL(28,8))) AS DOUBLE) AS hhi,
+           {R6_SQL.format(c="1.0 / t.n_suppliers")} AS hhi_floor
     FROM rev r JOIN tot t ON r.nation = t.nation
     GROUP BY t.nation, t.n_suppliers
     """,

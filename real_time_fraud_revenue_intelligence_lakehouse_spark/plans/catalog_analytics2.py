@@ -36,23 +36,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
+    H52_SQL,
+    H60_SQL,
+    R2_SQL,
+    R4_SQL,
+    R6_SQL,
+    R8_SQL,
+    SUM_SQL,
+    TWO52,
+    det_round,
+    h52,
+)
 from real_time_fraud_revenue_intelligence_lakehouse_spark.operators.ranking import distributed_row_number, rank_distributed
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
-
-R2 = "(floor(({c}) * 100.0 + 0.5) / 100.0)"
-R4 = "(floor(({c}) * 10000.0 + 0.5) / 10000.0)"
-R6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
-R8 = "(floor(({c}) * 100000000.0 + 0.5) / 100000000.0)"
-
-H52 = "('0x' || substr(md5({x}), 1, 13))::BIGINT"
-TWO52 = float(2**52)
-
-
-def _h52(c: F.Column) -> F.Column:
-    """52-bit md5 fraction numerator (exact in a double; see H52)."""
-    return F.conv(F.substring(F.md5(c), 1, 13), 16, 10).cast("long")
 
 
 # --- salted two-stage top-k per group ---------------------------------------
@@ -158,13 +156,13 @@ def q_cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     agg AS (
       SELECT user_id,
-             sum(CAST({R4.format(c="value * dur_ms")} AS DECIMAL(38,4))) AS wsum,
+             sum(CAST({R4_SQL.format(c="value * dur_ms")} AS DECIMAL(38,4))) AS wsum,
              sum(dur_ms) AS tot_ms, count(*) AS n_intervals
       FROM seq WHERE dur_ms IS NOT NULL GROUP BY 1
     )
     SELECT user_id, CAST(n_intervals AS BIGINT) AS n_intervals,
            CAST(tot_ms AS BIGINT) AS tot_ms,
-           {R6.format(c="CAST(wsum AS DOUBLE) / tot_ms")} AS twap_value
+           {R6_SQL.format(c="CAST(wsum AS DOUBLE) / tot_ms")} AS twap_value
     FROM agg WHERE tot_ms > 0
     """,
     tags=("window", "timeseries"),
@@ -216,7 +214,7 @@ def q_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
       GROUP BY 1, 2
     )
     SELECT n_name, order_year, revenue,
-           {R4.format(c="(revenue - prev_rev) / prev_rev * 100.0")} AS yoy_pct
+           {R4_SQL.format(c="(revenue - prev_rev) / prev_rev * 100.0")} AS yoy_pct
     FROM (
       SELECT n_name, order_year, revenue,
              lag(revenue) OVER (PARTITION BY n_name ORDER BY order_year) AS prev_rev
@@ -279,8 +277,8 @@ def q_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     terms AS (
       SELECT
-        CAST({R8.format(c="pow(n_ab - CAST(n_a AS DOUBLE) * n_b / n, 2) / (CAST(n_a AS DOUBLE) * n_b / n)")} AS DECIMAL(38,8)) AS chi_term,
-        CAST({R8.format(c="CASE WHEN n_ab = 0 THEN 0.0 ELSE CAST(n_ab AS DOUBLE) / n * ln(CAST(n_ab AS DOUBLE) * n / (CAST(n_a AS DOUBLE) * n_b)) END")} AS DECIMAL(38,8)) AS mi_term
+        CAST({R8_SQL.format(c="pow(n_ab - CAST(n_a AS DOUBLE) * n_b / n, 2) / (CAST(n_a AS DOUBLE) * n_b / n)")} AS DECIMAL(38,8)) AS chi_term,
+        CAST({R8_SQL.format(c="CASE WHEN n_ab = 0 THEN 0.0 ELSE CAST(n_ab AS DOUBLE) / n * ln(CAST(n_ab AS DOUBLE) * n / (CAST(n_a AS DOUBLE) * n_b)) END")} AS DECIMAL(38,8)) AS mi_term
       FROM marg, tot
     ),
     dims AS (
@@ -288,9 +286,9 @@ def q_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT CAST(n AS BIGINT) AS n_rows,
            CAST((ka - 1) * (kb - 1) AS BIGINT) AS dof,
-           {R6.format(c="CAST(chi2 AS DOUBLE)")} AS chi2,
-           {R6.format(c="sqrt(CAST(chi2 AS DOUBLE) / (n * least(ka - 1, kb - 1)))")} AS cramers_v,
-           {R6.format(c="CAST(mi AS DOUBLE)")} AS mutual_info
+           {R6_SQL.format(c="CAST(chi2 AS DOUBLE)")} AS chi2,
+           {R6_SQL.format(c="sqrt(CAST(chi2 AS DOUBLE) / (n * least(ka - 1, kb - 1)))")} AS cramers_v,
+           {R6_SQL.format(c="CAST(mi AS DOUBLE)")} AS mutual_info
     FROM (SELECT sum(chi_term) AS chi2, sum(mi_term) AS mi FROM terms), tot, dims
     """,
     tags=("stats", "aggregate"),
@@ -368,12 +366,12 @@ WS_K = 20
     oracle=f"""
     WITH u AS (
       SELECT o_orderkey, o_totalprice,
-             cast({H52.format(x="'ws-' || cast(o_orderkey as varchar)")} as double)
+             cast({H52_SQL.format(x="'ws-' || cast(o_orderkey as varchar)")} as double)
                / {TWO52!r} AS unif
       FROM orders
     )
     SELECT o_orderkey, o_totalprice,
-           {R8.format(c="ln(unif) / o_totalprice")} AS es_key
+           {R8_SQL.format(c="ln(unif) / o_totalprice")} AS es_key
     FROM u
     ORDER BY ln(unif) / o_totalprice DESC, o_orderkey ASC
     LIMIT {WS_K}
@@ -396,7 +394,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_totalprice",
         (
-            _h52(F.concat(F.lit("ws-"), F.col("o_orderkey").cast("string"))).cast("double")
+            h52(F.concat(F.lit("ws-"), F.col("o_orderkey").cast("string"))).cast("double")
             / F.lit(TWO52)
         ).alias("unif"),
     )
@@ -502,10 +500,10 @@ TE_SMOOTH = 20  # prior pseudo-count for the smoothed variant
     CROSS JOIN prior
     GROUP BY l.category, g.n, g.n_pos, prior.p
     """.format(
-        r6mean="(floor((CAST(g.n_pos AS DOUBLE) / g.n) * 1000000.0 + 0.5) / 1000000.0)",
-        r6pos="(floor((sum(CASE WHEN l.y = 1 THEN l.enc END) / nullif(count(CASE WHEN l.y = 1 THEN 1 END), 0)) * 1000000.0 + 0.5) / 1000000.0)",
-        r6neg="(floor((sum(CASE WHEN l.y = 0 THEN l.enc END) / nullif(count(CASE WHEN l.y = 0 THEN 1 END), 0)) * 1000000.0 + 0.5) / 1000000.0)",
-        r6sm=f"(floor(((g.n_pos + {TE_SMOOTH} * prior.p) / (g.n + {TE_SMOOTH})) * 1000000.0 + 0.5) / 1000000.0)",
+        r6mean=R6_SQL.format(c="CAST(g.n_pos AS DOUBLE) / g.n"),
+        r6pos=R6_SQL.format(c="sum(CASE WHEN l.y = 1 THEN l.enc END) / nullif(count(CASE WHEN l.y = 1 THEN 1 END), 0)"),
+        r6neg=R6_SQL.format(c="sum(CASE WHEN l.y = 0 THEN l.enc END) / nullif(count(CASE WHEN l.y = 0 THEN 1 END), 0)"),
+        r6sm=R6_SQL.format(c=f"(g.n_pos + {TE_SMOOTH} * prior.p) / (g.n + {TE_SMOOTH})"),
     ),
     tags=("feature-prep", "encoding"),
 )
@@ -574,7 +572,7 @@ DID_PRE, DID_POST = 1996, 1997
       SELECT CASE WHEN p.p_type = 'PROMO' THEN 1 ELSE 0 END AS treated,
              CASE WHEN year(l.l_shipdate) = {DID_POST} THEN 1 ELSE 0 END AS post,
              count(*) AS n,
-             CAST(sum(CAST({R4.format(c="l.l_extendedprice * (1 - l.l_discount)")}
+             CAST(sum(CAST({R4_SQL.format(c="l.l_extendedprice * (1 - l.l_discount)")}
                   AS DECIMAL(38,4))) AS DOUBLE) AS rev
       FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
       WHERE year(l.l_shipdate) IN ({DID_PRE}, {DID_POST})
@@ -590,9 +588,9 @@ DID_PRE, DID_POST = 1996, 1997
       FROM cells
     )
     SELECT n_lines,
-           {R6.format(c="t_pre")} AS treated_pre, {R6.format(c="t_post")} AS treated_post,
-           {R6.format(c="c_pre")} AS control_pre, {R6.format(c="c_post")} AS control_post,
-           {R6.format(c="(t_post - t_pre) - (c_post - c_pre)")} AS did
+           {R6_SQL.format(c="t_pre")} AS treated_pre, {R6_SQL.format(c="t_post")} AS treated_post,
+           {R6_SQL.format(c="c_pre")} AS control_pre, {R6_SQL.format(c="c_post")} AS control_post,
+           {R6_SQL.format(c="(t_post - t_pre) - (c_post - c_pre)")} AS did
     FROM m
     """,
     tags=("stats", "causal", "aggregate"),
@@ -663,14 +661,14 @@ def q_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     nation_rows AS (
       SELECT 'nation' AS level, region, nation, revenue,
-             {R6.format(c="revenue / sum(revenue) OVER (PARTITION BY region)")}
+             {R6_SQL.format(c="revenue / sum(revenue) OVER (PARTITION BY region)")}
                AS share_of_parent
       FROM base
     ),
     region_rows AS (
       SELECT 'region' AS level, region, CAST(NULL AS VARCHAR) AS nation,
              CAST(sum(CAST(revenue AS DECIMAL(38,2))) AS DOUBLE) AS revenue,
-             {R6.format(c=(
+             {R6_SQL.format(c=(
                  "CAST(sum(CAST(revenue AS DECIMAL(38,2))) AS DOUBLE)"
                  " / sum(CAST(sum(CAST(revenue AS DECIMAL(38,2))) AS DOUBLE)) OVER ()"
              ))} AS share_of_parent
@@ -734,7 +732,7 @@ BRIDGE_Y1, BRIDGE_Y2 = 1996, 1997
     WITH y AS (
       SELECT year(l_shipdate) AS yr,
              CAST(sum(CAST(l_quantity AS DECIMAL(18,3))) AS DOUBLE) AS qty,
-             CAST(sum(CAST({R4.format(c="l_extendedprice * (1 - l_discount)")}
+             CAST(sum(CAST({R4_SQL.format(c="l_extendedprice * (1 - l_discount)")}
                   AS DECIMAL(38,4))) AS DOUBLE) AS rev
       FROM lineitem
       WHERE year(l_shipdate) IN ({BRIDGE_Y1}, {BRIDGE_Y2})
@@ -750,10 +748,10 @@ BRIDGE_Y1, BRIDGE_Y2 = 1996, 1997
     ),
     p AS (SELECT q1, r1, q2, r2, r1 / q1 AS p1, r2 / q2 AS p2 FROM w)
     SELECT r1 AS rev_pre, r2 AS rev_post,
-           {R4.format(c="r2 - r1")} AS delta_rev,
-           {R4.format(c="p1 * (q2 - q1)")} AS volume_effect,
-           {R4.format(c="q1 * (p2 - p1)")} AS price_effect,
-           {R4.format(c="(p2 - p1) * (q2 - q1)")} AS cross_effect
+           {R4_SQL.format(c="r2 - r1")} AS delta_rev,
+           {R4_SQL.format(c="p1 * (q2 - q1)")} AS volume_effect,
+           {R4_SQL.format(c="q1 * (p2 - p1)")} AS price_effect,
+           {R4_SQL.format(c="(p2 - p1) * (q2 - q1)")} AS cross_effect
     FROM p
     """,
     tags=("finance", "aggregate"),
@@ -898,14 +896,14 @@ def q_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     s AS (
       SELECT max(n) AS n,
              CAST(sum(CAST(rev AS DECIMAL(38,2))) AS DOUBLE) AS tot,
-             CAST(sum(CAST({R4.format(c="i * rev")} AS DECIMAL(38,4))) AS DOUBLE) AS iw,
+             CAST(sum(CAST({R4_SQL.format(c="i * rev")} AS DECIMAL(38,4))) AS DOUBLE) AS iw,
              CAST(sum(CAST(CASE WHEN top_rank <= n // 5 THEN rev ELSE 0 END
                   AS DECIMAL(38,2))) AS DOUBLE) AS top20
       FROM ranked
     )
     SELECT CAST(n AS BIGINT) AS n_customers, tot AS total_rev,
-           {R6.format(c="2.0 * iw / (n * tot) - (n + 1.0) / n")} AS gini,
-           {R6.format(c="top20 / tot")} AS top20_share
+           {R6_SQL.format(c="2.0 * iw / (n * tot) - (n + 1.0) / n")} AS gini,
+           {R6_SQL.format(c="top20 / tot")} AS top20_share
     FROM s
     """,
     tags=("stats", "concentration", "window"),
@@ -989,9 +987,9 @@ SLA_DAYS = 60
            {{r4br}} AS breach_rate
     FROM lat GROUP BY 1
     """.format(
-        r4p50="(floor((quantile_cont(days, 0.50)) * 10000.0 + 0.5) / 10000.0)",
-        r4p95="(floor((quantile_cont(days, 0.95)) * 10000.0 + 0.5) / 10000.0)",
-        r4br=f"(floor((CAST(sum(CASE WHEN days > {SLA_DAYS} THEN 1 ELSE 0 END) AS DOUBLE) / count(*)) * 10000.0 + 0.5) / 10000.0)",
+        r4p50=R4_SQL.format(c="quantile_cont(days, 0.50)"),
+        r4p95=R4_SQL.format(c="quantile_cont(days, 0.95)"),
+        r4br=R4_SQL.format(c=f"CAST(sum(CASE WHEN days > {SLA_DAYS} THEN 1 ELSE 0 END) AS DOUBLE) / count(*)"),
     ),
     tags=("operations", "aggregate", "percentile"),
 )
@@ -1046,7 +1044,7 @@ BOOT_B = 48  # replicates (one bit of the 60-bit order hash each)
     oracle=f"""
     WITH h AS (
       SELECT o_totalprice,
-             ('0x' || substr(md5('bs-' || CAST(o_orderkey AS VARCHAR)), 1, 15))::BIGINT AS h1
+             {H60_SQL.format(x="'bs-' || CAST(o_orderkey AS VARCHAR)")} AS h1
       FROM orders
     ),
     reps AS (SELECT unnest(range({BOOT_B})) AS b),
@@ -1057,19 +1055,19 @@ BOOT_B = 48  # replicates (one bit of the 60-bit order hash each)
     ),
     m AS (
       SELECT b,
-             cast(sum(cast(o_totalprice as decimal(18,2))) as double) / count(*) AS rep_mean
+             {SUM_SQL.format(c="o_totalprice")} / count(*) AS rep_mean
       FROM mem GROUP BY 1
     ),
-    g AS (SELECT {R6.format(c=f'sum(rep_mean) / {BOOT_B}.0')} AS grand FROM m),
+    g AS (SELECT {R6_SQL.format(c=f'sum(rep_mean) / {BOOT_B}.0')} AS grand FROM m),
     stats AS (
       SELECT CAST(count(*) AS BIGINT) AS n_reps,
-             {R4.format(c='quantile_cont(rep_mean, 0.025)')} AS ci_lo,
-             {R4.format(c='quantile_cont(rep_mean, 0.975)')} AS ci_hi,
-             {R4.format(c=f'sqrt(sum((rep_mean - grand) * (rep_mean - grand)) / ({BOOT_B} - 1))')} AS se_boot
+             {R4_SQL.format(c='quantile_cont(rep_mean, 0.025)')} AS ci_lo,
+             {R4_SQL.format(c='quantile_cont(rep_mean, 0.975)')} AS ci_hi,
+             {R4_SQL.format(c=f'sqrt(sum((rep_mean - grand) * (rep_mean - grand)) / ({BOOT_B} - 1))')} AS se_boot
       FROM m, g GROUP BY grand
     ),
     full_m AS (
-      SELECT {R4.format(c='cast(sum(cast(o_totalprice as decimal(18,2))) as double) / count(*)')} AS mean_full
+      SELECT {R4_SQL.format(c='cast(sum(cast(o_totalprice as decimal(18,2))) as double) / count(*)')} AS mean_full
       FROM orders
     )
     SELECT n_reps, mean_full, ci_lo, ci_hi, se_boot FROM stats, full_m
@@ -1168,8 +1166,8 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH v AS (
       SELECT l_returnflag AS flag,
-             {R2.format(c='l_extendedprice / l_quantity')} AS price,
-             cast(sum(cast(l_quantity as decimal(18,2))) as double) AS w
+             {R2_SQL.format(c='l_extendedprice / l_quantity')} AS price,
+             {SUM_SQL.format(c="l_quantity")} AS w
       FROM lineitem GROUP BY 1, 2
     ),
     c AS (
@@ -1180,7 +1178,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM v
     )
     SELECT flag, price AS wmedian,
-           {R2.format(c='tw')} AS total_weight
+           {R2_SQL.format(c='tw')} AS total_weight
     FROM (
       SELECT flag, price, tw,
              row_number() OVER (PARTITION BY flag ORDER BY price) AS rk

@@ -15,13 +15,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round, exact_sum
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
+    H52_SQL,
+    H60_SQL,
+    R4_SQL,
+    R6_SQL,
+    R8_SQL,
+    SUM_SQL,
+    det_round,
+    exact_sum,
+    h52,
+)
 from real_time_fraud_revenue_intelligence_lakehouse_spark.operators.ranking import ntile_banded, rank_distributed
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
-
-R4 = "(floor(({c}) * 10000.0 + 0.5) / 10000.0)"
-SUM_SQL = "cast(sum(cast({c} as decimal(18,2))) as double)"
 
 
 # --- funnel conversion -----------------------------------------------------
@@ -50,7 +57,7 @@ SUM_SQL = "cast(sum(cast({c} as decimal(18,2))) as double)"
       SELECT 3, 'view>click>purchase', count(*) FROM p
     )
     SELECT stage_no, stage, n_users,
-           {R4.format(c="n_users / (first_value(n_users) OVER (ORDER BY stage_no) + 0.001)")} AS conversion
+           {R4_SQL.format(c="n_users / (first_value(n_users) OVER (ORDER BY stage_no) + 0.001)")} AS conversion
     FROM counts
     """,
     tags=("behavior", "funnel"),
@@ -215,8 +222,8 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH bounds AS (
       SELECT event_type,
-             {R4.format(c='quantile_cont(value, 0.05)')} AS p05,
-             {R4.format(c='quantile_cont(value, 0.95)')} AS p95
+             {R4_SQL.format(c='quantile_cont(value, 0.05)')} AS p05,
+             {R4_SQL.format(c='quantile_cont(value, 0.95)')} AS p95
       FROM events GROUP BY 1
     )
     SELECT e.event_id, e.event_type, e.value,
@@ -276,7 +283,7 @@ _VD = "cast(value as decimal(18,3))"
       FROM m
     )
     SELECT e.event_id, e.event_type, e.value,
-           {R4.format(c='(e.value - s.mean_v) / s.std_v')} AS z
+           {R4_SQL.format(c='(e.value - s.mean_v) / s.std_v')} AS z
     FROM events e JOIN stats s ON e.event_type = s.event_type
     WHERE abs((e.value - s.mean_v) / s.std_v) >= 2.5
     """,
@@ -360,8 +367,6 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- forensic / fraud statistics -------------------------------------------
 
-R6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
-
 
 @query(
     "q_benford",
@@ -373,9 +378,9 @@ R6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
     ),
     tot AS (SELECT sum(n) AS total FROM d)
     SELECT digit, CAST(n AS BIGINT) AS n_orders,
-           {R6.format(c="cast(n as double) / total")} AS p_obs,
-           {R6.format(c="log10(1.0 + 1.0 / cast(digit as int))")} AS p_benford,
-           {R6.format(c="cast(n as double) / total - log10(1.0 + 1.0 / cast(digit as int))")} AS deviation
+           {R6_SQL.format(c="cast(n as double) / total")} AS p_obs,
+           {R6_SQL.format(c="log10(1.0 + 1.0 / cast(digit as int))")} AS p_benford,
+           {R6_SQL.format(c="cast(n as double) / total - log10(1.0 + 1.0 / cast(digit as int))")} AS deviation
     FROM d, tot
     """,
     tags=("behavior", "fraud", "statistics"),
@@ -486,8 +491,8 @@ ROUND_Z = 2.0
     ),
     g AS (SELECT cast(sum(r10) as double) / sum(n) AS p0 FROM per)
     SELECT o_custkey, CAST(n AS BIGINT) AS n_orders, CAST(r10 AS BIGINT) AS n_round,
-           {R6.format(c="cast(r10 as double) / n")} AS round_share,
-           {R6.format(c="(cast(r10 as double) / n - p0) / sqrt(p0 * (1 - p0) / n)")} AS z_score
+           {R6_SQL.format(c="cast(r10 as double) / n")} AS round_share,
+           {R6_SQL.format(c="(cast(r10 as double) / n - p0) / sqrt(p0 * (1 - p0) / n)")} AS z_score
     FROM per, g
     WHERE (cast(r10 as double) / n - p0) / sqrt(p0 * (1 - p0) / n) > {ROUND_Z}
     """,
@@ -534,8 +539,6 @@ def q_round_amount_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Kaplan-Meier survival --------------------------------------------------
 
-R6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
-R8 = "(floor(({c}) * 100000000.0 + 0.5) / 100000000.0)"
 KM_TARGET = "purchase"
 
 
@@ -567,7 +570,7 @@ KM_TARGET = "purchase"
     km AS (
       SELECT dur, d, c, n_risk,
              CASE WHEN d = 0 OR d = n_risk THEN CAST(0 AS DECIMAL(38,8))
-                  ELSE CAST({R8.format(c="ln(1 - CAST(d AS DOUBLE) / n_risk)")}
+                  ELSE CAST({R8_SQL.format(c="ln(1 - CAST(d AS DOUBLE) / n_risk)")}
                             AS DECIMAL(38,8)) END AS lnterm,
              CASE WHEN d = n_risk AND d > 0 THEN 1 ELSE 0 END AS hit_zero
       FROM r
@@ -577,7 +580,7 @@ KM_TARGET = "purchase"
            CAST(d AS BIGINT) AS n_events, CAST(c AS BIGINT) AS n_censored,
            CASE WHEN max(hit_zero) OVER (ORDER BY dur
                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) = 1 THEN 0.0
-                ELSE {R6.format(c="exp(CAST(sum(lnterm) OVER (ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE))")}
+                ELSE {R6_SQL.format(c="exp(CAST(sum(lnterm) OVER (ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE))")}
            END AS survival
     FROM km
     """,
@@ -668,7 +671,7 @@ ABANDON_DAYS = 7
     SELECT user_id,
            CAST(count(*) AS BIGINT) AS n_clicks,
            CAST(sum(abandoned) AS BIGINT) AS n_abandoned,
-           {R4.format(c="CAST(sum(abandoned) AS DOUBLE) / count(*)")} AS abandon_rate
+           {R4_SQL.format(c="CAST(sum(abandoned) AS DOUBLE) / count(*)")} AS abandon_rate
     FROM flagged GROUP BY 1
     """,
     tags=("behavior", "anti-join", "temporal"),
@@ -798,7 +801,7 @@ def q_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev AS (
       SELECT f.cohort,
              date_diff('day', f.cohort, CAST(e.ts AS DATE)) AS age_days,
-             sum(CAST({R4.format(c="e.value")} AS DECIMAL(38,4))) AS r
+             sum(CAST({R4_SQL.format(c="e.value")} AS DECIMAL(38,4))) AS r
       FROM events e JOIN firsts f ON e.user_id = f.user_id
       WHERE e.event_type = 'purchase'
       GROUP BY 1, 2
@@ -806,7 +809,7 @@ def q_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT r.cohort, CAST(r.age_days AS BIGINT) AS age_days,
            CAST(s.n_users AS BIGINT) AS n_users,
            CAST(r.r AS DOUBLE) AS revenue,
-           {R4.format(c=(
+           {R4_SQL.format(c=(
                "CAST(sum(r.r) OVER (PARTITION BY r.cohort ORDER BY r.age_days "
                "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) / s.n_users"
            ))} AS cum_ltv_per_user
@@ -887,7 +890,7 @@ FUNNEL_STEP2_H = 24  # click → purchase budget (hours)
     )
     SELECT CAST(stage_no AS BIGINT) AS stage_no, stage,
            CAST(n_users AS BIGINT) AS n_users,
-           {R4.format(c="CAST(n_users AS DOUBLE) / (SELECT n_users FROM counts WHERE stage_no = 1)")} AS conv_from_top
+           {R4_SQL.format(c="CAST(n_users AS DOUBLE) / (SELECT n_users FROM counts WHERE stage_no = 1)")} AS conv_from_top
     FROM counts
     """,
     tags=("behavior", "funnel", "temporal"),
@@ -949,7 +952,7 @@ AB_Z_CRIT = 1.96
     oracle=f"""
     WITH assign AS (
       SELECT user_id,
-             ('0x' || substr(md5('ab-' || cast(user_id as varchar)), 1, 13))::BIGINT % 2 AS arm
+             {H52_SQL.format(x="'ab-' || cast(user_id as varchar)")} % 2 AS arm
       FROM (SELECT DISTINCT user_id FROM events)
     ),
     conv AS (
@@ -984,11 +987,11 @@ AB_Z_CRIT = 1.96
       FROM w
     )
     SELECT CAST(n0 AS BIGINT) AS n_control, CAST(c0 AS BIGINT) AS conv_control,
-           {R4.format(c="p0")} AS rate_control,
+           {R4_SQL.format(c="p0")} AS rate_control,
            CAST(n1 AS BIGINT) AS n_treat, CAST(c1 AS BIGINT) AS conv_treat,
-           {R4.format(c="p1")} AS rate_treat,
+           {R4_SQL.format(c="p1")} AS rate_treat,
            CASE WHEN pp > 0 AND pp < 1
-                THEN {R6.format(c="(p1 - p0) / sqrt(pp * (1 - pp) * (1.0 / n0 + 1.0 / n1))")}
+                THEN {R6_SQL.format(c="(p1 - p0) / sqrt(pp * (1 - pp) * (1.0 / n0 + 1.0 / n1))")}
            END AS z_stat,
            CAST(CASE WHEN pp > 0 AND pp < 1
                       AND abs((p1 - p0) / sqrt(pp * (1 - pp) * (1.0 / n0 + 1.0 / n1)))
@@ -1010,7 +1013,7 @@ def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "events")
     users = e.select("user_id").distinct()
     arm = F.pmod(
-        F.conv(F.substring(F.md5(F.concat(F.lit("ab-"), F.col("user_id").cast("string"))), 1, 13), 16, 10).cast("long"),
+        h52(F.concat(F.lit("ab-"), F.col("user_id").cast("string"))),
         F.lit(2),
     ).alias("arm")
     assign = users.select("user_id", arm)
@@ -1077,7 +1080,7 @@ WAU_DAYS = 7
       GROUP BY 1
     )
     SELECT d.day, CAST(a.dau AS BIGINT) AS dau, CAST(w.wau AS BIGINT) AS wau,
-           {R4.format(c="CAST(a.dau AS DOUBLE) / w.wau")} AS stickiness
+           {R4_SQL.format(c="CAST(a.dau AS DOUBLE) / w.wau")} AS stickiness
     FROM days d JOIN dau a ON d.day = a.day JOIN wau w ON d.day = w.day
     """,
     tags=("behavior", "engagement", "window"),
@@ -1134,7 +1137,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_relation
     _HLL_NUM,
 )
 
-_UHLL_H_DUCK = "('0x' || substr(md5(cast(user_id as varchar)), 1, 15))::BIGINT"
+_UHLL_H_DUCK = H60_SQL.format(x="cast(user_id as varchar)")
 
 
 def hll_day_registers(events: DataFrame) -> DataFrame:
@@ -1231,8 +1234,8 @@ def hll_estimate(merged: DataFrame, group_cols: list[str]) -> DataFrame:
         wau=WAU_DAYS,
         m=_HLL_M,
         num=_HLL_NUM,
-        r4_est=R4.format(c="e.e"),
-        r4_err=R4.format(c="abs(e.e - x.wau_exact) / x.wau_exact"),
+        r4_est=R4_SQL.format(c="e.e"),
+        r4_err=R4_SQL.format(c="abs(e.e - x.wau_exact) / x.wau_exact"),
     ),
     tags=("behavior", "sketch", "engagement"),
 )
@@ -1310,7 +1313,7 @@ def q_active_users_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM seq WHERE event_type = 'purchase' GROUP BY 1
     )
     SELECT channel, CAST(n_purchases AS BIGINT) AS n_purchases, revenue,
-           {R4.format(c="revenue / sum(revenue) OVER ()")} AS revenue_share
+           {R4_SQL.format(c="revenue / sum(revenue) OVER ()")} AS revenue_share
     FROM agg
     """,
     tags=("behavior", "attribution", "window"),
@@ -1381,9 +1384,9 @@ def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM s
     )
     SELECT user_id, CAST(n_gaps + 1 AS BIGINT) AS n_events,
-           {R4.format(c="mean_s")} AS mean_gap_s,
-           {R4.format(c="std_s")} AS std_gap_s,
-           {R4.format(c="(std_s - mean_s) / (std_s + mean_s)")} AS burstiness
+           {R4_SQL.format(c="mean_s")} AS mean_gap_s,
+           {R4_SQL.format(c="std_s")} AS std_gap_s,
+           {R4_SQL.format(c="(std_s - mean_s) / (std_s + mean_s)")} AS burstiness
     FROM m
     """,
     tags=("behavior", "timeseries", "fraud-feature"),
@@ -1460,7 +1463,7 @@ ATTR_WINDOW_DAYS = 7
     credits AS (
       SELECT coalesce(channel, 'direct') AS channel,
              CASE WHEN channel IS NULL THEN value
-                  ELSE {R6.format(c="value / n_t")} END AS credit
+                  ELSE {R6_SQL.format(c="value / n_t")} END AS credit
       FROM counted
     ),
     agg AS (
@@ -1469,7 +1472,7 @@ ATTR_WINDOW_DAYS = 7
       FROM credits GROUP BY 1
     )
     SELECT channel, CAST(n_credits AS BIGINT) AS n_credits, revenue,
-           {R4.format(c="revenue / sum(revenue) OVER ()")} AS revenue_share
+           {R4_SQL.format(c="revenue / sum(revenue) OVER ()")} AS revenue_share
     FROM agg
     """,
     tags=("behavior", "attribution", "join"),
@@ -1543,8 +1546,8 @@ def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT count(*) AS n_converted,
            CAST(min(latency_s) AS BIGINT) AS min_s,
-           {R4.format(c="quantile_cont(latency_s, 0.5)")} AS p50_s,
-           {R4.format(c="quantile_cont(latency_s, 0.9)")} AS p90_s,
+           {R4_SQL.format(c="quantile_cont(latency_s, 0.5)")} AS p50_s,
+           {R4_SQL.format(c="quantile_cont(latency_s, 0.9)")} AS p90_s,
            CAST(max(latency_s) AS BIGINT) AS max_s
     FROM conv
     """,
@@ -1600,7 +1603,7 @@ def q_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(1 - is_new) AS BIGINT) AS n_returning_purchases,
            CAST(sum(CASE WHEN is_new = 1 THEN CAST(value AS DECIMAL(18,2)) ELSE 0 END) AS DOUBLE) AS new_revenue,
            CAST(sum(CASE WHEN is_new = 0 THEN CAST(value AS DECIMAL(18,2)) ELSE 0 END) AS DOUBLE) AS returning_revenue,
-           {R4.format(c=(
+           {R4_SQL.format(c=(
                "CAST(sum(CASE WHEN is_new = 1 THEN CAST(value AS DECIMAL(18,2)) ELSE 0 END) AS DOUBLE)"
                " / CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)"
            ))} AS new_share

@@ -13,6 +13,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
+    R2_SQL,
+    R6_SQL,
+    SUM_SQL,
     amount_tier,
     det_round,
     mask_dotted,
@@ -20,9 +23,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars impo
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
-
-R2 = "(floor(({c}) * 100.0 + 0.5) / 100.0)"
-R6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
 
 
 # --- P1/P2: null-key + range cleansing filter ------------------------------
@@ -118,14 +118,14 @@ def q_enum_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_bucket_tier",
-    oracle="""
+    oracle=f"""
     SELECT CASE WHEN o_totalprice < 50 THEN 'micro'
                 WHEN o_totalprice < 200 THEN 'low'
                 WHEN o_totalprice < 1000 THEN 'medium'
                 WHEN o_totalprice < 5000 THEN 'high'
                 ELSE 'premium' END AS amount_tier,
            count(*) AS n_orders,
-           cast(sum(cast(o_totalprice as decimal(18,2))) as double) AS tier_gmv
+           {SUM_SQL.format(c="o_totalprice")} AS tier_gmv
     FROM orders GROUP BY 1
     """,
     tags=("cleanse",),
@@ -197,11 +197,11 @@ def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_scalar_math",
     oracle=f"""
     SELECT l_orderkey, l_linenumber,
-      {R2.format(c='l_extendedprice * (1 - l_discount)')} AS net_price,
-      {R2.format(c='l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS charged_price,
-      {R2.format(c='l_extendedprice * 0.029 + 0.30')} AS processor_fee,
-      {R2.format(c='l_extendedprice - (l_extendedprice * 0.029 + 0.30)')} AS effective_amount,
-      {R6.format(c='ln(l_extendedprice + 1)')} AS amount_log,
+      {R2_SQL.format(c='l_extendedprice * (1 - l_discount)')} AS net_price,
+      {R2_SQL.format(c='l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS charged_price,
+      {R2_SQL.format(c='l_extendedprice * 0.029 + 0.30')} AS processor_fee,
+      {R2_SQL.format(c='l_extendedprice - (l_extendedprice * 0.029 + 0.30)')} AS effective_amount,
+      {R6_SQL.format(c='ln(l_extendedprice + 1)')} AS amount_log,
       l_orderkey % 7 AS key_mod,
       abs(l_discount - 0.05) AS disc_dev
     FROM lineitem
@@ -480,7 +480,7 @@ def q_derived_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o.o_orderkey,
       cast(o.o_orderstatus = 'F' as int) AS label,
       o.o_totalprice AS amount,
-      {R6.format(c='ln(o.o_totalprice + 1)')} AS amount_log,
+      {R6_SQL.format(c='ln(o.o_totalprice + 1)')} AS amount_log,
       CASE WHEN o.o_totalprice < 50 THEN 0 WHEN o.o_totalprice < 200 THEN 1
            WHEN o.o_totalprice < 1000 THEN 2 WHEN o.o_totalprice < 5000 THEN 3
            ELSE 4 END AS tier_encoded,

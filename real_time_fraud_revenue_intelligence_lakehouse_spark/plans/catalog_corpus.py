@@ -19,9 +19,15 @@ from pyspark.sql import functions as F
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import dedup as D
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import similarity as S
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import text as X
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
+    H60_SQL,
+    R4_SQL,
+    R6_SQL,
+    R8_SQL,
+    det_round,
+    det_round_sql,
+)
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_ext import (
-    H60,
     NORM,
     SHINGLES,
     TOKS,
@@ -37,8 +43,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames im
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
 
-R4 = "(floor(({c}) * 10000.0 + 0.5) / 10000.0)"
-R6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
 
 # --- BM25 lexical retrieval ------------------------------------------------
 
@@ -70,7 +74,7 @@ BM25_B = 0.75
       FROM tf
     )
     SELECT doc_id,
-      {R4.format(c=' + '.join(
+      {R4_SQL.format(c=' + '.join(
           f"ln(1 + (n_docs - df_{term} + 0.5) / (df_{term} + 0.5))"
           f" * (tf_{term} * ({BM25_K1} + 1))"
           f" / (tf_{term} + {BM25_K1} * (1 - {BM25_B} + {BM25_B} * dl / avgdl))"
@@ -147,7 +151,7 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id,
            len(sh) AS n_shingles,
            len(list_distinct(sh)) AS n_distinct,
-           {R4.format(c='1.0 - len(list_distinct(sh)) / greatest(len(sh), 1)')} AS rep_ratio,
+           {R4_SQL.format(c='1.0 - len(list_distinct(sh)) / greatest(len(sh), 1)')} AS rep_ratio,
            CAST(CASE WHEN 1.0 - len(list_distinct(sh)) / greatest(len(sh), 1) > 0.2
                 THEN 1 ELSE 0 END AS BIGINT) AS is_repetitive
     FROM sh
@@ -273,14 +277,14 @@ def q_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH n AS (
       SELECT label,
-             {R6.format(c=f"sqrt(list_dot_product({_DBL.format(v='embedding')}, {_DBL.format(v='embedding')}))")} AS nrm
+             {R6_SQL.format(c=f"sqrt(list_dot_product({_DBL.format(v='embedding')}, {_DBL.format(v='embedding')}))")} AS nrm
       FROM embeddings
     )
     SELECT label,
            count(*) AS n_vecs,
            min(nrm) AS min_norm,
            max(nrm) AS max_norm,
-           {R4.format(c='cast(sum(cast(nrm as decimal(18,6))) as double) / count(*)')} AS avg_norm
+           {R4_SQL.format(c='cast(sum(cast(nrm as decimal(18,6))) as double) / count(*)')} AS avg_norm
     FROM n GROUP BY 1
     """,
     tags=("ext", "similarity", "stats"),
@@ -346,7 +350,7 @@ def q_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 50),
     scored AS (
       SELECT query_id, c.vec_id AS match_id, c.label,
-             {R6.format(c='list_dot_product(qv, c.v) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c.v, c.v)))')} AS sim
+             {R6_SQL.format(c='list_dot_product(qv, c.v) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c.v, c.v)))')} AS sim
       FROM q JOIN e c ON c.vec_id <> query_id
     ),
     topk AS (
@@ -404,7 +408,7 @@ CMS_TOPK = 15
       SELECT unnest({TOKS.format(c=NORM.format(c='text'))}) AS tok FROM documents
     ),
     buckets AS (
-      SELECT j, ('0x' || substr(md5('cms' || j || ':' || tok), 1, 15))::BIGINT % {CMS_W} AS bucket
+      SELECT j, {H60_SQL.format(x="'cms' || j || ':' || tok")} % {CMS_W} AS bucket
       FROM tok CROSS JOIN (SELECT unnest(range({CMS_D})) AS j)
     ),
     counters AS (
@@ -416,7 +420,7 @@ CMS_TOPK = 15
     ),
     probes AS (
       SELECT e.tok, e.exact_count, j.j,
-             ('0x' || substr(md5('cms' || j.j || ':' || e.tok), 1, 15))::BIGINT % {CMS_W} AS bucket
+             {H60_SQL.format(x="'cms' || j.j || ':' || e.tok")} % {CMS_W} AS bucket
       FROM exact e CROSS JOIN (SELECT unnest(range({CMS_D})) AS j) j
     )
     SELECT p.tok AS token, p.exact_count,
@@ -785,7 +789,7 @@ QK_PROBES = (0.5, 0.9)
     SELECT source, p AS probe,
            CAST(lo_cents AS BIGINT) AS est_len,
            CAST(v AS BIGINT) AS exact_len,
-           (floor((CAST(v - lo_cents AS DOUBLE) / v) * 1000000.0 + 0.5) / 1000000.0)
+           {R6_SQL.format(c="CAST(v - lo_cents AS DOUBLE) / v")}
              AS rel_error
     FROM ranked WHERE rnb = want
     """,
@@ -918,7 +922,7 @@ def q_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: DuckDB twin of ext/text.hash60 applied to the raw text column
 #: (attach_exif_payload derives the planted dimensions from it).
-H60_EXPR = H60.format(x="text")
+H60_EXPR = H60_SQL.format(x="text")
 
 
 @query(
@@ -959,8 +963,6 @@ def q_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- unigram language-model scoring ----------------------------------------
 
-R8 = "(floor(({c}) * 100000000.0 + 0.5) / 100000000.0)"
-
 
 @query(
     "q_unigram_logprob",
@@ -976,8 +978,8 @@ R8 = "(floor(({c}) * 100000000.0 + 0.5) / 100000000.0)"
     stats AS (SELECT sum(cnt) AS n_tokens, count(*) AS v_size FROM vocab)
     SELECT ex.doc_id,
            CAST(ex.dl AS BIGINT) AS dl,
-           {R6.format(c=(
-               "cast(sum(cast(" + R8.format(
+           {R6_SQL.format(c=(
+               "cast(sum(cast(" + R8_SQL.format(
                    c="ln(cast(cnt + 1 as double) / cast(n_tokens + v_size as double))"
                ) + " as decimal(28,8))) as double) / ex.dl"
            ))} AS avg_logprob
@@ -1114,7 +1116,7 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH s AS (
       SELECT vec_id, {_DBL.format(v='embedding')} AS emb,
-             greatest({R8.format(c=f"list_max(list_transform({_DBL.format(v='embedding')}, x -> abs(x))) / 127.0")}, 1e-9) AS scale
+             greatest({R8_SQL.format(c=f"list_max(list_transform({_DBL.format(v='embedding')}, x -> abs(x))) / 127.0")}, 1e-9) AS scale
       FROM embeddings
     ),
     ex AS (
@@ -1125,9 +1127,9 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT vec_id,
            CAST(count(*) AS BIGINT) AS n_dims,
            scale,
-           {R8.format(c='max(err)')} AS max_abs_err,
-           {R8.format(c=(
-               "cast(sum(cast(" + "(floor((err) * 10000000000.0 + 0.5) / 10000000000.0)"
+           {R8_SQL.format(c='max(err)')} AS max_abs_err,
+           {R8_SQL.format(c=(
+               "cast(sum(cast(" + det_round_sql("err", 10)
                + " as decimal(28,10))) as double) / count(*)"
            ))} AS avg_err
     FROM ex
@@ -1194,8 +1196,8 @@ FEAT_DIM = 1024
     ),
     f AS (
       SELECT doc_id,
-             {H60.format(x='tok')} % {FEAT_DIM} AS f_idx,
-             CASE WHEN ({H60.format(x='tok')} >> 11) & 1 = 1 THEN 1 ELSE -1 END AS s
+             {H60_SQL.format(x='tok')} % {FEAT_DIM} AS f_idx,
+             CASE WHEN ({H60_SQL.format(x='tok')} >> 11) & 1 = 1 THEN 1 ELSE -1 END AS s
       FROM ex
     )
     SELECT doc_id, CAST(f_idx AS BIGINT) AS f_idx, CAST(sum(s) AS BIGINT) AS w
@@ -1258,9 +1260,9 @@ def q_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY ex.doc_id, ex.nb
     """.format(r6="{r6}").format(
         r6=(
-            "(floor((cast(sum(cast(" + R8.format(
+            R6_SQL.format(c="cast(sum(cast(" + R8_SQL.format(
                 c="ln(cast(cbg + 1 as double) / cast(cw + v as double))"
-            ) + " as decimal(28,8))) as double) / ex.nb) * 1000000.0 + 0.5) / 1000000.0)"
+            ) + " as decimal(28,8))) as double) / ex.nb")
         )
     ),
     tags=("ext", "text", "quality"),
@@ -1334,8 +1336,8 @@ MASK_TOKEN = "<mask>"
     ),
     dec AS (
       SELECT doc_id, pos, tok,
-             {H60.format(x="doc_id || ':' || pos || ':' || tok")} % {DROP_MOD} != 0 AS keep,
-             {H60.format(x=f"doc_id || '#' || (pos // {MASK_SPAN})")} % {MASK_MOD} = 0 AS masked
+             {H60_SQL.format(x="doc_id || ':' || pos || ':' || tok")} % {DROP_MOD} != 0 AS keep,
+             {H60_SQL.format(x=f"doc_id || '#' || (pos // {MASK_SPAN})")} % {MASK_MOD} = 0 AS masked
       FROM ex
     )
     SELECT doc_id,

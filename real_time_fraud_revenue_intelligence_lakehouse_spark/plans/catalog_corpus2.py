@@ -29,8 +29,8 @@ from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import similarity as S
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import text as X
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
-from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_ext import H60, NORM, SHINGLES, TOKS, _DBL
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import H60_SQL, R4_SQL, R6_SQL, det_round
+from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_ext import NORM, SHINGLES, TOKS, _DBL
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import (
     doc_lsh_candidates,
@@ -41,8 +41,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames im
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
 
-R4 = "(floor(({c}) * 10000.0 + 0.5) / 10000.0)"
-R6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
 
 # --- sub-document (paragraph-block) dedup ----------------------------------
 
@@ -70,7 +68,7 @@ BLOCK = 16
     SELECT b.doc_id,
            count(*) AS n_blocks,
            CAST(sum(CASE WHEN d.nd > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_shared_blocks,
-           {R4.format(c="sum(CASE WHEN d.nd > 1 THEN 1 ELSE 0 END)::DOUBLE / count(*)")} AS shared_ratio
+           {R4_SQL.format(c="sum(CASE WHEN d.nd > 1 THEN 1 ELSE 0 END)::DOUBLE / count(*)")} AS shared_ratio
     FROM blocks b JOIN docs_per d USING (bh)
     GROUP BY 1
     """,
@@ -149,7 +147,7 @@ _SQ = (
     ),
     scored AS (
       SELECT p.vec_id, p.sub_id, c.code,
-             {R6.format(c=_SQ.format(a='p.sv', b='c.cv'))} AS d
+             {R6_SQL.format(c=_SQ.format(a='p.sv', b='c.cv'))} AS d
       FROM sub p JOIN cb c USING (sub_id)
     )
     SELECT vec_id, sub_id,
@@ -250,10 +248,9 @@ IVFPQ_NPROBE = 2
 IVFPQ_K = 5
 IVFPQ_NQUERIES = 20  # queries = vec_id < 20 (matches the IVF tier)
 
-_COS6 = (
-    "(floor((list_dot_product({a}, {b}) / "
-    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))))"
-    " * 1000000.0 + 0.5) / 1000000.0)"
+_COS6 = R6_SQL.format(
+    c="list_dot_product({a}, {b}) / "
+    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
 )
 
 
@@ -293,13 +290,13 @@ _COS6 = (
     cb AS (SELECT sub_id, vec_id AS code, sv AS cv FROM sub WHERE vec_id < {PQ_K}),
     codes AS (
       SELECT p.vec_id AS match_id, p.sub_id,
-             (min({{'d': {R6.format(c=_SQ.format(a='p.sv', b='c.cv'))}, 'c': c.code}})).c AS code
+             (min({{'d': {R6_SQL.format(c=_SQ.format(a='p.sv', b='c.cv'))}, 'c': c.code}})).c AS code
       FROM sub p JOIN cb c USING (sub_id)
       GROUP BY 1, 2
     ),
     adc AS (
       SELECT c.query_id, c.match_id,
-             cast(sum(cast({R6.format(c=_SQ.format(a='qs.sv', b='w.cv'))} as decimal(18,6))) as double)
+             cast(sum(cast({R6_SQL.format(c=_SQ.format(a='qs.sv', b='w.cv'))} as decimal(18,6))) as double)
                AS approx_dist
       FROM cand c
       JOIN codes k ON k.match_id = c.match_id
@@ -395,7 +392,7 @@ PPJ_THETA_NUM, PPJ_THETA_DEN = 1, 2
       SELECT doc_id, {TOKS.format(c=NORM.format(c='text'))} AS toks FROM documents
     ),
     s AS (
-      SELECT doc_id, list_distinct(list_transform({SHINGLES.format(t='toks')}, s -> {H60.format(x='s')})) AS t FROM tk
+      SELECT doc_id, list_distinct(list_transform({SHINGLES.format(t='toks')}, s -> {H60_SQL.format(x='s')})) AS t FROM tk
     ),
     ex AS (SELECT doc_id, len(t) AS sz, u.sh FROM s, unnest(t) AS u(sh)),
     -- exact: a pair below misses ONLY when the intersection is empty,
@@ -410,7 +407,7 @@ PPJ_THETA_NUM, PPJ_THETA_DEN = 1, 2
     SELECT doc_a, doc_b,
            CAST(inter AS BIGINT) AS n_common,
            CAST(uni AS BIGINT) AS n_union,
-           {R6.format(c="cast(inter as double) / cast(uni as double)")} AS jaccard
+           {R6_SQL.format(c="cast(inter as double) / cast(uni as double)")} AS jaccard
     FROM pairs
     WHERE {PPJ_THETA_DEN} * inter >= {PPJ_THETA_NUM} * uni
     """,
@@ -480,7 +477,7 @@ def q_prefix_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     ranked AS (
       SELECT vec_id, CAST(dim AS BIGINT) AS dim,
-             {R6.format(c=(
+             {R6_SQL.format(c=(
                  "cast(row_number() OVER (PARTITION BY dim ORDER BY val, vec_id) - 1 as double)"
                  " / (count(*) OVER (PARTITION BY dim) - 1)"
              ))} AS qv
@@ -544,7 +541,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_ext impo
       FROM bands a JOIN bands b
         ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id
     ),
-    s AS (SELECT doc_id, list_distinct(list_transform(sh, s -> {H60.format(x='s')})) AS st FROM sh),
+    s AS (SELECT doc_id, list_distinct(list_transform(sh, s -> {H60_SQL.format(x='s')})) AS st FROM sh),
     exx AS (SELECT doc_id, len(st) AS sz, u.x AS shingle FROM s, unnest(st) AS u(x)),
     truth AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b
@@ -558,8 +555,8 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_ext impo
     SELECT CAST(n_truth AS BIGINT) AS n_truth,
            CAST(n_cand AS BIGINT) AS n_cand,
            CAST(n_hit AS BIGINT) AS n_hit,
-           {R6.format(c="cast(n_hit as double) / greatest(n_cand, 1)")} AS lsh_precision,
-           {R6.format(c="cast(n_hit as double) / greatest(n_truth, 1)")} AS lsh_recall
+           {R6_SQL.format(c="cast(n_hit as double) / greatest(n_cand, 1)")} AS lsh_precision,
+           {R6_SQL.format(c="cast(n_hit as double) / greatest(n_truth, 1)")} AS lsh_recall
     FROM hit, nc, nt
     """,
     tags=("ext", "dedup", "evaluation"),
@@ -620,7 +617,7 @@ _MH_EQ = " + ".join(
       FROM bands a JOIN bands b
         ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id
     ),
-    s AS (SELECT doc_id, list_distinct(list_transform(sh, s -> {H60.format(x='s')})) AS st FROM sh),
+    s AS (SELECT doc_id, list_distinct(list_transform(sh, s -> {H60_SQL.format(x='s')})) AS st FROM sh),
     est AS (
       SELECT c.id_a, c.id_b,
              ({_MH_EQ}) / {float(X.MINHASH_K)!r} AS est
@@ -630,8 +627,8 @@ _MH_EQ = " + ".join(
     ),
     ex AS (
       SELECT e.id_a, e.id_b,
-             {R6.format(c='e.est')} AS est_jaccard,
-             {R6.format(c=(
+             {R6_SQL.format(c='e.est')} AS est_jaccard,
+             {R6_SQL.format(c=(
                  "cast(len(list_intersect(sa.st, sb.st)) as double)"
                  " / (len(sa.st) + len(sb.st) - len(list_intersect(sa.st, sb.st)))"
              ))} AS exact_jaccard

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import H60_SQL, R4_SQL, R6_SQL, R8_SQL, det_round
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_ext import NORM, TOKS
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
@@ -323,8 +323,6 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- readability scoring ----------------------------------------------------
 
-R4 = "(floor(({c}) * 10000.0 + 0.5) / 10000.0)"
-R6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
 
 # Heuristic counts (identical RE2-compatible regexes on both engines):
 # sentences = punctuation runs [.!?]+ (min 1), words = whitespace
@@ -346,7 +344,7 @@ _SYL_RE = "[aeiouy]+"
     ),
     f AS (
       SELECT source, sentences, words, syllables,
-             CAST({R4.format(c=(
+             CAST({R4_SQL.format(c=(
                  "206.835 - 1.015 * (CAST(words AS DOUBLE) / sentences)"
                  " - 84.6 * (CAST(syllables AS DOUBLE) / words)"
              ))} AS DECIMAL(38,4)) AS flesch
@@ -354,7 +352,7 @@ _SYL_RE = "[aeiouy]+"
     )
     SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(words) AS BIGINT) AS total_words,
-           {R6.format(c="CAST(sum(flesch) AS DOUBLE) / count(*)")} AS avg_flesch
+           {R6_SQL.format(c="CAST(sum(flesch) AS DOUBLE) / count(*)")} AS avg_flesch
     FROM f GROUP BY 1
     """,
     tags=("ext", "text", "quality"),
@@ -419,8 +417,8 @@ def _bpe_encode_final(last: str) -> str:
     SELECT sw.source,
            CAST(sum(sw.cnt) AS BIGINT) AS n_words,
            CAST(sum(sw.cnt * len(a.toks)) AS BIGINT) AS n_tokens,
-           {R6.format(c="CAST(sum(sw.cnt * len(a.toks)) AS DOUBLE) / sum(sw.cnt)")} AS fertility,
-           {R6.format(c="CAST(sum(sw.cnt * (length(sw.word) + 1)) AS DOUBLE) / sum(sw.cnt * len(a.toks))")} AS compression
+           {R6_SQL.format(c="CAST(sum(sw.cnt * len(a.toks)) AS DOUBLE) / sum(sw.cnt)")} AS fertility,
+           {R6_SQL.format(c="CAST(sum(sw.cnt * (length(sw.word) + 1)) AS DOUBLE) / sum(sw.cnt * len(a.toks))")} AS compression
     FROM sw JOIN {last} a ON sw.word = a.word
     GROUP BY 1"""
 
@@ -659,7 +657,7 @@ PMI_TOP = 20
       FROM scored
     )
     WHERE rk <= {PMI_TOP}
-    """.format(r6="(floor((pmi) * 1000000.0 + 0.5) / 1000000.0)"),
+    """.format(r6=R6_SQL.format(c="pmi")),
     tags=("ext", "text", "collocation"),
 )
 def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -723,8 +721,6 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- embedding centroid drift -----------------------------------------------
 
-R8 = "(floor(({c}) * 100000000.0 + 0.5) / 100000000.0)"
-
 
 @query(
     "q_embed_drift",
@@ -735,7 +731,7 @@ R8 = "(floor(({c}) * 100000000.0 + 0.5) / 100000000.0)"
     ),
     c AS (
       SELECT period, dim,
-             CAST(sum(CAST({R8.format(c="val")} AS DECIMAL(38,8))) AS DOUBLE)
+             CAST(sum(CAST({R8_SQL.format(c="val")} AS DECIMAL(38,8))) AS DOUBLE)
                / count(*) AS m
       FROM x GROUP BY 1, 2
     ),
@@ -745,10 +741,10 @@ R8 = "(floor(({c}) * 100000000.0 + 0.5) / 100000000.0)"
     ),
     s AS (
       SELECT count(*) AS n_dims,
-             CAST(sum(CAST({R8.format(c="ma * mb")} AS DECIMAL(38,8))) AS DOUBLE) AS dot,
-             CAST(sum(CAST({R8.format(c="ma * ma")} AS DECIMAL(38,8))) AS DOUBLE) AS na2,
-             CAST(sum(CAST({R8.format(c="mb * mb")} AS DECIMAL(38,8))) AS DOUBLE) AS nb2,
-             CAST(sum(CAST({R8.format(c="(ma - mb) * (ma - mb)")} AS DECIMAL(38,8))) AS DOUBLE) AS d2
+             CAST(sum(CAST({R8_SQL.format(c="ma * mb")} AS DECIMAL(38,8))) AS DOUBLE) AS dot,
+             CAST(sum(CAST({R8_SQL.format(c="ma * ma")} AS DECIMAL(38,8))) AS DOUBLE) AS na2,
+             CAST(sum(CAST({R8_SQL.format(c="mb * mb")} AS DECIMAL(38,8))) AS DOUBLE) AS nb2,
+             CAST(sum(CAST({R8_SQL.format(c="(ma - mb) * (ma - mb)")} AS DECIMAL(38,8))) AS DOUBLE) AS d2
       FROM j
     ),
     counts AS (
@@ -761,8 +757,8 @@ R8 = "(floor(({c}) * 100000000.0 + 0.5) / 100000000.0)"
            {{r6l2}} AS l2_shift
     FROM s, counts
     """.format(
-        r6cos="(floor((dot / sqrt(na2 * nb2)) * 1000000.0 + 0.5) / 1000000.0)",
-        r6l2="(floor((sqrt(d2)) * 1000000.0 + 0.5) / 1000000.0)",
+        r6cos=R6_SQL.format(c="dot / sqrt(na2 * nb2)"),
+        r6l2=R6_SQL.format(c="sqrt(d2)"),
     ),
     tags=("ext", "embedding", "monitoring"),
 )
@@ -816,8 +812,6 @@ def q_embed_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SPAN_K = 8  # tokens per rolling shingle = minimum reported span length
 
-H60 = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
-
 
 @query(
     "q_dup_spans",
@@ -827,7 +821,7 @@ H60 = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
     ),
     sh AS (
       SELECT doc_id, len(toks) AS n_toks, i,
-             {H60.format(x=f"array_to_string(list_slice(toks, i, i + {SPAN_K} - 1), ' ')")} AS h
+             {H60_SQL.format(x=f"array_to_string(list_slice(toks, i, i + {SPAN_K} - 1), ' ')")} AS h
       FROM t, unnest(range(1, len(toks) - {SPAN_K} + 2)) AS u(i)
     ),
     dup AS (

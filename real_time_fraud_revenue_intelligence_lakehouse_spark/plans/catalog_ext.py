@@ -17,7 +17,13 @@ from pyspark.sql import functions as F
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import dedup as D
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import similarity as S
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import text as X
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R6_SQL, det_round
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
+    H60_SQL,
+    R4_SQL,
+    R6_SQL,
+    det_round,
+    det_round_sql,
+)
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import (
     doc_minhash_sig,
@@ -31,12 +37,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import 
 
 NORM = "lower(trim(regexp_replace({c}, '\\s+', ' ', 'g')))"
 TOKS = "regexp_split_to_array(trim({c}), '\\s+')"
-H60 = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
-R = "(floor(({c}) * {s} + 0.5) / {s})"  # det_round twin
-
-
-def _r(expr: str, digits: int = 4) -> str:
-    return R.format(c=expr, s=float(10**digits))
 
 
 UNIQ_RATIO = (
@@ -56,7 +56,7 @@ SHINGLES = (
 def _mh_sql(j: int, sh: str = "sh") -> str:
     """MinHash permutation j: min over XOR-permuted shingle hashes
     (one md5 per shingle, mask per permutation — ext/text.with_minhash)."""
-    h = H60.format(x="s")
+    h = H60_SQL.format(x="s")
     return f"list_min(list_transform({sh}, s -> xor({h}, {X.perm_mask(j)})))"
 
 
@@ -72,8 +72,8 @@ def _mh_sql(j: int, sh: str = "sh") -> str:
            length(text) AS n_chars,
            len({TOKS.format(c='text')}) AS n_tokens,
            len(regexp_extract_all(text, '\\w+|[^\\w\\s]')) AS n_tokens_bpe,
-           {_r(UNIQ_RATIO.format(c='text'))} AS unique_ratio,
-           {_r(PUNCT_RATIO.format(c='text'))} AS punct_ratio
+           {det_round_sql(UNIQ_RATIO.format(c='text'))} AS unique_ratio,
+           {det_round_sql(PUNCT_RATIO.format(c='text'))} AS punct_ratio
     FROM documents
     """,
     tags=("ext", "text"),
@@ -138,7 +138,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_quality_score",
     oracle=f"""
     SELECT doc_id,
-           {_r(
+           {det_round_sql(
                f"0.4 * least(len({TOKS.format(c='text')}) / 64.0, 1.0)"
                f" + 0.3 * (1.0 - least(4.0 * ({PUNCT_RATIO.format(c='text')}), 1.0))"
                f" + 0.3 * ({UNIQ_RATIO.format(c='text')})"
@@ -182,7 +182,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ROLL_TOKS = f"list_transform({TOKS.format(c=NORM.format(c='text'))}, t -> {H60.format(x='t')} % 2147483647)"
+_ROLL_TOKS = f"list_transform({TOKS.format(c=NORM.format(c='text'))}, t -> {H60_SQL.format(x='t')} % 2147483647)"
 
 
 @query(
@@ -236,7 +236,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH t AS (
       SELECT doc_id,
              list_distinct(list_transform(
-               {TOKS.format(c=NORM.format(c='text'))}, t -> {H60.format(x='t')}
+               {TOKS.format(c=NORM.format(c='text'))}, t -> {H60_SQL.format(x='t')}
              )) AS toks
       FROM documents WHERE doc_id % 10 = 0
     )
@@ -406,7 +406,7 @@ _BIT_SUM = " + ".join(
     WITH tok AS (
       SELECT doc_id, unnest({TOKS.format(c=NORM.format(c='text'))}) AS tok FROM documents
     ),
-    h AS (SELECT doc_id, {H60.format(x='tok')} AS h FROM tok),
+    h AS (SELECT doc_id, {H60_SQL.format(x='tok')} AS h FROM tok),
     votes AS (SELECT doc_id, {_V_COLS} FROM h GROUP BY doc_id)
     SELECT doc_id, CAST({_BIT_SUM} AS BIGINT) AS simhash FROM votes
     """,
@@ -426,7 +426,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, unnest({TOKS.format(c=NORM.format(c='text'))}) AS tok
       FROM documents
     ),
-    h AS (SELECT doc_id, {H60.format(x='tok')} AS h FROM tok),
+    h AS (SELECT doc_id, {H60_SQL.format(x='tok')} AS h FROM tok),
     votes AS (SELECT doc_id, {_V_COLS} FROM h GROUP BY doc_id),
     s AS (
       SELECT doc_id, CAST({_BIT_SUM} AS BIGINT) AS simhash FROM votes
@@ -471,7 +471,7 @@ _DBL = "list_transform({v}, x -> x::DOUBLE)"
     q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
     scored AS (
       SELECT query_id, c.vec_id AS match_id,
-             {_r(_COS.format(a='qv', b='c.v'), 6)} AS cosine_sim
+             {det_round_sql(_COS.format(a='qv', b='c.v'), 6)} AS cosine_sim
       FROM q, e c WHERE c.vec_id <> query_id
     )
     SELECT query_id, match_id, cosine_sim, rank FROM (
@@ -506,7 +506,7 @@ _UNIT = (
     q AS (SELECT vec_id AS query_id, u AS qu FROM e WHERE vec_id < 50),
     scored AS (
       SELECT query_id, c.vec_id AS match_id,
-             {_r('list_dot_product(qu, c.u)', 6)} AS cosine_sim
+             {det_round_sql('list_dot_product(qu, c.u)', 6)} AS cosine_sim
       FROM q, e c WHERE c.vec_id <> query_id
     )
     SELECT query_id, match_id, cosine_sim FROM (
@@ -536,9 +536,9 @@ def q_embed_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE vec_id % 5 = 0
     )
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           {_r(_COS.format(a='a.v', b='b.v'), 6)} AS cosine_sim
+           {det_round_sql(_COS.format(a='a.v', b='b.v'), 6)} AS cosine_sim
     FROM e a JOIN e b ON a.vec_id < b.vec_id
-    WHERE {_r(_COS.format(a='a.v', b='b.v'), 6)} >= 0.35
+    WHERE {det_round_sql(_COS.format(a='a.v', b='b.v'), 6)} >= 0.35
     """,
     tags=("ext", "dedup", "similarity"),
 )
@@ -587,7 +587,7 @@ def _buckets_sql() -> str:
     ),
     scored AS (
       SELECT query_id, match_id,
-             {_r(_COS.format(a='eq.v', b='ec.v'), 6)} AS cosine_sim
+             {det_round_sql(_COS.format(a='eq.v', b='ec.v'), 6)} AS cosine_sim
       FROM cand
       JOIN e eq ON eq.vec_id = query_id
       JOIN e ec ON ec.vec_id = match_id
@@ -621,7 +621,7 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT e.vec_id, cent.centroid_id,
                row_number() OVER (
                  PARTITION BY e.vec_id
-                 ORDER BY {_r(_COS.format(a='e.v', b='cent.cv'), 6)} DESC, cent.centroid_id
+                 ORDER BY {det_round_sql(_COS.format(a='e.v', b='cent.cv'), 6)} DESC, cent.centroid_id
                ) AS crank
         FROM e, cent
       )
@@ -636,7 +636,7 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     scored AS (
       SELECT query_id, match_id,
-             {_r(_COS.format(a='eq.v', b='ec.v'), 6)} AS cosine_sim
+             {det_round_sql(_COS.format(a='eq.v', b='ec.v'), 6)} AS cosine_sim
       FROM cand JOIN e eq ON eq.vec_id = query_id JOIN e ec ON ec.vec_id = match_id
     )
     SELECT query_id, match_id, cosine_sim, rank FROM (
@@ -672,7 +672,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_multimodal_meta",
     oracle=f"""
-    WITH h AS (SELECT doc_id, text, {H60.format(x='text')} AS h FROM documents)
+    WITH h AS (SELECT doc_id, text, {H60_SQL.format(x='text')} AS h FROM documents)
     SELECT doc_id,
            octet_length(encode(text)) AS byte_len,
            CASE WHEN doc_id % 2 = 0 THEN 'image/png' ELSE 'audio/wav' END AS mime,
@@ -772,7 +772,7 @@ def q_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
     scored AS (
       SELECT tf.doc_id, tf.term, tf.tf,
-        {_r('tf.tf * ln((nd.n_docs + 1.0) / (dfreq.df + 1.0))', 6)} AS tfidf
+        {det_round_sql('tf.tf * ln((nd.n_docs + 1.0) / (dfreq.df + 1.0))', 6)} AS tfidf
       FROM tf CROSS JOIN nd JOIN dfreq USING (term)
     )
     SELECT doc_id, term, tf, tfidf, term_rank FROM (
@@ -800,8 +800,8 @@ def q_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT source,
            count(*) AS n_docs,
            count(DISTINCT lang) AS n_langs,
-           {_r(f"avg(cast(length(text) as double))")} AS avg_chars,
-           {_r(
+           {det_round_sql(f"avg(cast(length(text) as double))")} AS avg_chars,
+           {det_round_sql(
                f"avg(0.4 * least(len({TOKS.format(c='text')}) / 64.0, 1.0)"
                f" + 0.3 * (1.0 - least(4.0 * ({PUNCT_RATIO.format(c='text')}), 1.0))"
                f" + 0.3 * ({UNIQ_RATIO.format(c='text')}))"
@@ -928,7 +928,7 @@ _BENCH_MOD = 97  # pseudo eval-set: every 97th doc
       SELECT doc_id, {TOKS.format(c=NORM.format(c='text'))} AS toks FROM documents
     ),
     sh AS (
-      SELECT DISTINCT doc_id, {H60.format(x='s')} AS sh FROM (
+      SELECT DISTINCT doc_id, {H60_SQL.format(x='s')} AS sh FROM (
         SELECT doc_id, unnest({SHINGLES.format(t='toks')}) AS s FROM t
       )
     ),
@@ -940,9 +940,9 @@ _BENCH_MOD = 97  # pseudo eval-set: every 97th doc
     )
     SELECT p.doc_id, p.n_shingles,
       CAST(coalesce(c.n_contaminated, 0) AS BIGINT) AS n_contaminated,
-      {_r('coalesce(c.n_contaminated, 0) / greatest(p.n_shingles, 1)', 6)}
+      {det_round_sql('coalesce(c.n_contaminated, 0) / greatest(p.n_shingles, 1)', 6)}
         AS contamination_rate,
-      {_r('coalesce(c.n_contaminated, 0) / greatest(p.n_shingles, 1)', 6)} >= 0.5
+      {det_round_sql('coalesce(c.n_contaminated, 0) / greatest(p.n_shingles, 1)', 6)} >= 0.5
         AS is_contaminated
     FROM per_doc p LEFT JOIN cont c ON p.doc_id = c.doc_id
     """,
@@ -1033,8 +1033,8 @@ _MEAN_TOK_LEN = (
     m AS (
       SELECT doc_id,
         len(toks) AS n_tokens,
-        {_r(_MEAN_TOK_LEN, 4)} AS mean_tok_len,
-        {_r("1.0 - len(list_distinct(" + SHINGLES.format(t='toks') + ")) / greatest(len(" + SHINGLES.format(t='toks') + "), 1)", 4)}
+        {det_round_sql(_MEAN_TOK_LEN, 4)} AS mean_tok_len,
+        {det_round_sql("1.0 - len(list_distinct(" + SHINGLES.format(t='toks') + ")) / greatest(len(" + SHINGLES.format(t='toks') + "), 1)", 4)}
           AS dup_3gram_frac
       FROM documents JOIN t USING (doc_id)
     )
@@ -1116,12 +1116,12 @@ MIX_TARGET_FRAC = 0.5  # keep ~half the corpus overall
     ),
     norm AS (
       SELECT source, n_docs,
-             {_r(f"least(raw_w / (SELECT sum(raw_w) FROM w) * (SELECT n_total FROM tot) * {MIX_TARGET_FRAC} / n_docs, 1.0)", 6)}
+             {det_round_sql(f"least(raw_w / (SELECT sum(raw_w) FROM w) * (SELECT n_total FROM tot) * {MIX_TARGET_FRAC} / n_docs, 1.0)", 6)}
                AS keep_prob
       FROM w
     )
     SELECT d.doc_id, d.source, n.keep_prob,
-           ({H60.format(x="'mix:' || CAST(d.doc_id AS VARCHAR)")} % 1000000) / 1000000.0
+           ({H60_SQL.format(x="'mix:' || CAST(d.doc_id AS VARCHAR)")} % 1000000) / 1000000.0
              < n.keep_prob AS selected
     FROM documents d JOIN norm n USING (source)
     """,
@@ -1217,7 +1217,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents
     )
     SELECT doc_id, mime FROM b
-    WHERE {H60.format(x='hx')} % 4 = 0
+    WHERE {H60_SQL.format(x='hx')} % 4 = 0
     """,
     tags=("ext", "multimodal"),
 )
@@ -1311,7 +1311,7 @@ def q_text_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
            {{r6}} AS recall_share
     FROM m
     """.format(
-        r6="(floor((CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY lang_true)) * 1000000.0 + 0.5) / 1000000.0)"
+        r6=R6_SQL.format(c="CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY lang_true)")
     ),
     tags=("ext", "text", "evaluation"),
 )
@@ -1367,7 +1367,7 @@ _DCG_CASE = "CASE rank " + " ".join(
         SELECT query_id, c.vec_id AS match_id,
                row_number() OVER (
                  PARTITION BY query_id
-                 ORDER BY {_r(_COS.format(a='qv', b='c.v'), 6)} DESC, c.vec_id
+                 ORDER BY {det_round_sql(_COS.format(a='qv', b='c.v'), 6)} DESC, c.vec_id
                ) AS rank
         FROM q, e c WHERE c.vec_id <> query_id
       ) WHERE rank <= 10
@@ -1378,7 +1378,7 @@ _DCG_CASE = "CASE rank " + " ".join(
         SELECT e.vec_id, cent.centroid_id,
                row_number() OVER (
                  PARTITION BY e.vec_id
-                 ORDER BY {_r(_COS.format(a='e.v', b='cent.cv'), 6)} DESC, cent.centroid_id
+                 ORDER BY {det_round_sql(_COS.format(a='e.v', b='cent.cv'), 6)} DESC, cent.centroid_id
                ) AS crank
         FROM e, cent
       )
@@ -1396,7 +1396,7 @@ _DCG_CASE = "CASE rank " + " ".join(
         SELECT cand.query_id, cand.match_id,
                row_number() OVER (
                  PARTITION BY cand.query_id
-                 ORDER BY {_r(_COS.format(a='eq.v', b='ec.v'), 6)} DESC, cand.match_id
+                 ORDER BY {det_round_sql(_COS.format(a='eq.v', b='ec.v'), 6)} DESC, cand.match_id
                ) AS rank
         FROM cand
         JOIN e eq ON eq.vec_id = cand.query_id
@@ -1411,8 +1411,8 @@ _DCG_CASE = "CASE rank " + " ".join(
     )
     SELECT query_id,
            CAST(sum(hit) AS BIGINT) AS n_hits,
-           {_r('sum(hit) / 10.0', 4)} AS recall_10,
-           {_r(f'sum(hit * ({_DCG_CASE})) / {_IDCG_10}', 4)} AS ndcg_10
+           {det_round_sql('sum(hit) / 10.0', 4)} AS recall_10,
+           {det_round_sql(f'sum(hit * ({_DCG_CASE})) / {_IDCG_10}', 4)} AS ndcg_10
     FROM hits GROUP BY 1
     """,
     tags=("ext", "similarity", "evaluation"),
@@ -1472,14 +1472,14 @@ _SIL_PANEL = 60  # evaluation panel size
         SELECT p.vec_id, cent.centroid_id,
                row_number() OVER (
                  PARTITION BY p.vec_id
-                 ORDER BY {_r(_COS.format(a='p.v', b='cent.cv'), 6)} DESC, cent.centroid_id
+                 ORDER BY {det_round_sql(_COS.format(a='p.v', b='cent.cv'), 6)} DESC, cent.centroid_id
                ) AS crank
         FROM panel p, cent
       ) WHERE crank = 1
     ),
     pairs AS (
       SELECT a.vec_id AS i, ca.centroid_id AS ci, cb.centroid_id AS cj,
-             CAST(1.0 - {_r(_COS.format(a='a.v', b='b.v'), 6)} AS DECIMAL(28,8)) AS d
+             CAST(1.0 - {det_round_sql(_COS.format(a='a.v', b='b.v'), 6)} AS DECIMAL(28,8)) AS d
       FROM panel a JOIN assign ca ON ca.vec_id = a.vec_id,
            panel b JOIN assign cb ON cb.vec_id = b.vec_id
       WHERE a.vec_id <> b.vec_id
@@ -1497,12 +1497,12 @@ _SIL_PANEL = 60  # evaluation panel size
     s AS (
       SELECT i, ci,
              CASE WHEN a IS NULL THEN 0.0
-                  ELSE {_r('(b - a) / greatest(a, b)', 6)} END AS sil
+                  ELSE {det_round_sql('(b - a) / greatest(a, b)', 6)} END AS sil
       FROM ab
     )
     SELECT ci AS cluster_id,
            CAST(count(*) AS BIGINT) AS n_points,
-           {_r('cast(sum(CAST(sil AS DECIMAL(28,8))) as double) / count(*)', 4)} AS mean_silhouette
+           {det_round_sql('cast(sum(CAST(sil AS DECIMAL(28,8))) as double) / count(*)', 4)} AS mean_silhouette
     FROM s GROUP BY 1
     """,
     tags=("ext", "similarity", "evaluation"),
@@ -1716,7 +1716,7 @@ def _trunc_oracle() -> str:
     WITH {','.join(branches)},
     h AS ({hits})
     SELECT d, CAST(hits AS BIGINT) AS n_hits,
-           (floor((CAST(hits AS DOUBLE) / {TRUNC_Q * TRUNC_K}) * 10000.0 + 0.5) / 10000.0)
+           {R4_SQL.format(c=f"CAST(hits AS DOUBLE) / {TRUNC_Q * TRUNC_K}")}
              AS recall_at_{TRUNC_K}
     FROM h
     """
@@ -1848,7 +1848,7 @@ def _nprobe_oracle() -> str:
                ) AS rn
         FROM (
           SELECT query_id, match_id,
-                 {_r(_COS.format(a='eq.v', b='ec.v'), 6)} AS cosine_sim
+                 {det_round_sql(_COS.format(a='eq.v', b='ec.v'), 6)} AS cosine_sim
           FROM cand{np_} JOIN e eq ON eq.vec_id = query_id
                         JOIN e ec ON ec.vec_id = match_id
         ) s
@@ -1869,7 +1869,7 @@ def _nprobe_oracle() -> str:
         SELECT e.vec_id, cent.centroid_id,
                row_number() OVER (
                  PARTITION BY e.vec_id
-                 ORDER BY {_r(_COS.format(a='e.v', b='cent.cv'), 6)} DESC, cent.centroid_id
+                 ORDER BY {det_round_sql(_COS.format(a='e.v', b='cent.cv'), 6)} DESC, cent.centroid_id
                ) AS crank
         FROM e, cent
       )
@@ -1880,7 +1880,7 @@ def _nprobe_oracle() -> str:
         SELECT q.vec_id AS query_id, c.vec_id AS match_id,
                row_number() OVER (
                  PARTITION BY q.vec_id
-                 ORDER BY {_r(_COS.format(a='q.v', b='c.v'), 6)} DESC, c.vec_id
+                 ORDER BY {det_round_sql(_COS.format(a='q.v', b='c.v'), 6)} DESC, c.vec_id
                ) AS rn
         FROM e q, e c
         WHERE q.vec_id < {NPROBE_Q} AND c.vec_id <> q.vec_id
@@ -1890,7 +1890,7 @@ def _nprobe_oracle() -> str:
     h AS ({hits})
     SELECT nprobe, CAST(n_candidates AS BIGINT) AS n_candidates,
            CAST(n_hits AS BIGINT) AS n_hits,
-           (floor((CAST(n_hits AS DOUBLE) / {NPROBE_Q * NPROBE_K}) * 10000.0 + 0.5) / 10000.0)
+           {R4_SQL.format(c=f"CAST(n_hits AS DOUBLE) / {NPROBE_Q * NPROBE_K}")}
              AS recall_at_{NPROBE_K}
     FROM h
     """

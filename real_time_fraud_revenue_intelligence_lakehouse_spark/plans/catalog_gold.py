@@ -14,6 +14,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
+    AVG_SQL,
+    R4_SQL,
+    SUM_SQL,
     det_round,
     exact_avg,
     exact_sum,
@@ -22,10 +25,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars impo
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
-
-R4 = "(floor(({c}) * 10000.0 + 0.5) / 10000.0)"
-SUM_SQL = "cast(sum(cast({c} as decimal(18,2))) as double)"
-AVG_SQL = "(floor((cast(sum(cast({c} as decimal(18,2))) as double) / count({c})) * 10000.0 + 0.5) / 10000.0)"
 
 
 # --- A8: time-truncated rollup --------------------------------------------
@@ -39,7 +38,7 @@ AVG_SQL = "(floor((cast(sum(cast({c} as decimal(18,2))) as double) / count({c}))
       {SUM_SQL.format(c='value')} AS total_value,
       {AVG_SQL.format(c='value')} AS avg_value,
       count(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase_events,
-      {R4.format(c="count(CASE WHEN event_type = 'error' THEN 1 END) / (count(*) + 0.001)")} AS error_rate
+      {R4_SQL.format(c="count(CASE WHEN event_type = 'error' THEN 1 END) / (count(*) + 0.001)")} AS error_rate
     FROM events GROUP BY 1
     """,
     tags=("aggregate", "time"),
@@ -115,8 +114,8 @@ def q_explode_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM orders GROUP BY 1
     ), scored AS (
       SELECT *,
-        {R4.format(c='fulfilled_orders / (total_orders + 0.001)')} AS fulfilled_rate,
-        {R4.format(c=('0.40 * (fulfilled_orders / (total_orders + 0.001))'
+        {R4_SQL.format(c='fulfilled_orders / (total_orders + 0.001)')} AS fulfilled_rate,
+        {R4_SQL.format(c=('0.40 * (fulfilled_orders / (total_orders + 0.001))'
                       ' + 0.35 * (urgent_orders / (total_orders + 0.001))'
                       ' + 0.15 * least(total_spend / 1000000.0, 1.0)'
                       ' + 0.10 * least(total_orders / 50.0, 1.0)'))} AS composite_score
@@ -173,10 +172,10 @@ def q_user_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_percentiles",
     oracle=f"""
     SELECT o_orderstatus,
-      {R4.format(c='quantile_cont(o_totalprice, 0.50)')} AS p50,
-      {R4.format(c='quantile_cont(o_totalprice, 0.90)')} AS p90,
-      {R4.format(c='quantile_cont(o_totalprice, 0.95)')} AS p95,
-      {R4.format(c='quantile_cont(o_totalprice, 0.99)')} AS p99
+      {R4_SQL.format(c='quantile_cont(o_totalprice, 0.50)')} AS p50,
+      {R4_SQL.format(c='quantile_cont(o_totalprice, 0.90)')} AS p90,
+      {R4_SQL.format(c='quantile_cont(o_totalprice, 0.95)')} AS p95,
+      {R4_SQL.format(c='quantile_cont(o_totalprice, 0.99)')} AS p99
     FROM orders GROUP BY 1
     """,
     tags=("aggregate", "percentile"),
@@ -484,7 +483,7 @@ def q_dim_users_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
       HAVING count(*) > 0
     )
     SELECT s.event_date, s.o_orderstatus, s.total_orders, s.gmv, s.unique_customers,
-      {R4.format(c='s.gmv / nullif(s.total_orders, 0)')} AS avg_order_value,
+      {R4_SQL.format(c='s.gmv / nullif(s.total_orders, 0)')} AS avg_order_value,
       year(s.event_date) AS d_year, month(s.event_date) AS d_month,
       CASE WHEN dayofweek(s.event_date) IN (0,6) THEN true ELSE false END AS d_is_weekend
     FROM stg s
@@ -530,8 +529,8 @@ def q_fact_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM orders GROUP BY 1, 2
     )
     SELECT event_date, o_orderpriority, total_orders, pending_orders, pending_gmv,
-      {R4.format(c='pending_orders / (total_orders + 0.001)')} AS pending_rate,
-      CASE WHEN {R4.format(c='pending_orders / (total_orders + 0.001)')} > 0.10
+      {R4_SQL.format(c='pending_orders / (total_orders + 0.001)')} AS pending_rate,
+      CASE WHEN {R4_SQL.format(c='pending_orders / (total_orders + 0.001)')} > 0.10
            THEN true ELSE false END AS high_pending_day
     FROM stg
     """,
@@ -566,7 +565,7 @@ def q_fact_fraud_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT d AS event_date, n_orders, n_fulfilled,
       CAST(sum(n_orders) OVER w AS BIGINT) AS orders_7d,
       CAST(sum(n_fulfilled) OVER w AS BIGINT) AS fulfilled_7d,
-      {R4.format(c='sum(n_fulfilled) OVER w / (sum(n_orders) OVER w + 0.001)')} AS fulfilled_rate_7d
+      {R4_SQL.format(c='sum(n_fulfilled) OVER w / (sum(n_orders) OVER w + 0.001)')} AS fulfilled_rate_7d
     FROM daily
     WINDOW w AS (ORDER BY d RANGE BETWEEN INTERVAL 6 DAYS PRECEDING AND CURRENT ROW)
     """,
@@ -605,7 +604,7 @@ def q_trend_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
       count(*) AS n_customers,
       {SUM_SQL.format(c='c.c_acctbal')} AS total_acctbal,
       {AVG_SQL.format(c='c.c_acctbal')} AS avg_acctbal,
-      {R4.format(c='count(CASE WHEN c.c_acctbal < 0 THEN 1 END) / (count(*) + 0.001)')} AS negative_rate
+      {R4_SQL.format(c='count(CASE WHEN c.c_acctbal < 0 THEN 1 END) / (count(*) + 0.001)')} AS negative_rate
     FROM customer c
     JOIN nation n ON c.c_nationkey = n.n_nationkey
     JOIN region r ON n.n_regionkey = r.r_regionkey
@@ -647,8 +646,8 @@ def q_country_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM orders GROUP BY 1, 2
     )
     SELECT order_month, o_orderpriority, total_orders, fulfilled_orders, gmv,
-      {R4.format(c='fulfilled_orders / nullif(total_orders, 0)')} AS fulfilled_share,
-      {R4.format(c='gmv / nullif(total_orders, 0)')} AS avg_order_value
+      {R4_SQL.format(c='fulfilled_orders / nullif(total_orders, 0)')} AS fulfilled_share,
+      {R4_SQL.format(c='gmv / nullif(total_orders, 0)')} AS avg_order_value
     FROM base
     """,
     tags=("marts",),

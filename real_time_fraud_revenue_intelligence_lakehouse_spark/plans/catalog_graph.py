@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.dedup import connected_components_star
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R6_SQL, det_round
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import (
     BASKET_MIN_SUP as MIN_SUP,  # orders containing both parts
@@ -43,7 +43,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames im
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
 
-R6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
 
 K_NN = 3  # neighbors kept per supplier node
 
@@ -69,8 +68,8 @@ K_NN = 3  # neighbors kept per supplier node
       HAVING count(*) >= {MIN_SUP}
     )
     SELECT p.part_a, p.part_b, CAST(p.pair_orders AS BIGINT) AS pair_orders,
-           {R6.format(c="CAST(p.pair_orders AS DOUBLE) / n.n_orders")} AS support,
-           {R6.format(c="CAST(p.pair_orders AS DOUBLE) * n.n_orders / (sa.part_orders * CAST(sb.part_orders AS DOUBLE))")} AS lift
+           {R6_SQL.format(c="CAST(p.pair_orders AS DOUBLE) / n.n_orders")} AS support,
+           {R6_SQL.format(c="CAST(p.pair_orders AS DOUBLE) * n.n_orders / (sa.part_orders * CAST(sb.part_orders AS DOUBLE))")} AS lift
     FROM pairs p
     JOIN singles sa ON p.part_a = sa.l_partkey
     JOIN singles sb ON p.part_b = sb.l_partkey
@@ -203,7 +202,7 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT CAST(n_nodes AS BIGINT) AS n_nodes, CAST(n_edges AS BIGINT) AS n_edges,
            n_wedges, CAST(n_triangles AS BIGINT) AS n_triangles,
-           {R6.format(c="3.0 * n_triangles / n_wedges")} AS clustering
+           {R6_SQL.format(c="3.0 * n_triangles / n_wedges")} AS clustering
     FROM summary
     """,
     tags=("graph", "triangles", "knn"),
@@ -343,7 +342,7 @@ ITEM_K = 3  # similar items kept per part
       JOIN singles sb ON d.neighbor = sb.l_partkey
     )
     SELECT part, neighbor, CAST(co AS BIGINT) AS co_orders,
-           {R6.format(c="sim")} AS sim, CAST(rk AS BIGINT) AS rk
+           {R6_SQL.format(c="sim")} AS sim, CAST(rk AS BIGINT) AS rk
     FROM (
       SELECT part, neighbor, co, sim,
              row_number() OVER (PARTITION BY part
@@ -515,7 +514,7 @@ def _bf_oracle() -> str:
         + ",".join(rounds)
         + f"""
     SELECT node,
-           (floor((dist) * 1000000.0 + 0.5) / 1000000.0) AS dist
+           {R6_SQL.format(c="dist")} AS dist
     FROM d{BF_ROUNDS}
     """
     )
@@ -646,7 +645,7 @@ def _route_oracle() -> str:
         ",".join(parts)
         + f"""
     SELECT node,
-           (floor((dist) * 1000000.0 + 0.5) / 1000000.0) AS dist,
+           {R6_SQL.format(c="dist")} AS dist,
            path, CAST(hops AS BIGINT) AS n_hops,
            head = src_node AS complete
     FROM w{WALK_STEPS}
@@ -763,7 +762,7 @@ def q_route_reconstruct(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM joined
     )
     SELECT CAST(n AS BIGINT) AS n_edges,
-           {R6.format(c="(n * sxy - sx * sy) / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy))")}
+           {R6_SQL.format(c="(n * sxy - sx * sy) / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy))")}
              AS assortativity
     FROM m
     """,

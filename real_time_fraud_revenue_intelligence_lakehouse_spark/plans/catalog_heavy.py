@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R4_SQL, WIDE_SUM_SQL, det_round
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import (
     cust_supp,
@@ -24,19 +24,16 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames im
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
 
-SUM_DEC = "cast(sum(cast({c} as decimal(38,4))) as double)"
-R4 = "(floor(({c}) * 10000.0 + 0.5) / 10000.0)"
-
 
 @query(
     "q_pricing_summary",
     oracle=f"""
     SELECT l_returnflag, l_linestatus,
-           {SUM_DEC.format(c='l_quantity')} AS sum_qty,
-           {SUM_DEC.format(c='l_extendedprice')} AS sum_base_price,
-           {SUM_DEC.format(c=R4.format(c='l_extendedprice * (1 - l_discount)'))} AS sum_disc_price,
-           {SUM_DEC.format(c=R4.format(c='l_extendedprice * (1 - l_discount) * (1 + l_tax)'))} AS sum_charge,
-           {R4.format(c=SUM_DEC.format(c='l_quantity') + ' / count(*)')} AS avg_qty,
+           {WIDE_SUM_SQL.format(c='l_quantity')} AS sum_qty,
+           {WIDE_SUM_SQL.format(c='l_extendedprice')} AS sum_base_price,
+           {WIDE_SUM_SQL.format(c=R4_SQL.format(c='l_extendedprice * (1 - l_discount)'))} AS sum_disc_price,
+           {WIDE_SUM_SQL.format(c=R4_SQL.format(c='l_extendedprice * (1 - l_discount) * (1 + l_tax)'))} AS sum_charge,
+           {R4_SQL.format(c=WIDE_SUM_SQL.format(c='l_quantity') + ' / count(*)')} AS avg_qty,
            count(*) AS count_order
     FROM lineitem
     WHERE l_shipdate <= DATE '1998-09-02'
@@ -79,7 +76,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_shipping_priority",
     oracle=f"""
     SELECT l.l_orderkey,
-           {SUM_DEC.format(c=R4.format(c='l.l_extendedprice * (1 - l.l_discount)'))} AS revenue,
+           {WIDE_SUM_SQL.format(c=R4_SQL.format(c='l.l_extendedprice * (1 - l.l_discount)'))} AS revenue,
            cast(o.o_orderdate as date) AS order_date,
            o.o_orderpriority
     FROM customer c
@@ -130,7 +127,7 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH flat AS (
       SELECT year(cast(o.o_orderdate as date)) AS o_year,
-             {R4.format(c='l.l_extendedprice * (1 - l.l_discount)')} AS volume,
+             {R4_SQL.format(c='l.l_extendedprice * (1 - l.l_discount)')} AS volume,
              ns.n_name AS supp_nation
       FROM lineitem l
       JOIN orders o   ON l.l_orderkey = o.o_orderkey
@@ -146,12 +143,12 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         AND o.o_orderdate < DATE '1998-01-01'
     )
     SELECT o_year,
-      {SUM_DEC.format(c="CASE WHEN supp_nation = 'NATION_1' THEN volume ELSE 0 END")}
+      {WIDE_SUM_SQL.format(c="CASE WHEN supp_nation = 'NATION_1' THEN volume ELSE 0 END")}
         AS nation_volume,
-      {SUM_DEC.format(c='volume')} AS total_volume,
-      {R4.format(c=(
-          SUM_DEC.format(c="CASE WHEN supp_nation = 'NATION_1' THEN volume ELSE 0 END")
-          + ' / ' + SUM_DEC.format(c='volume')
+      {WIDE_SUM_SQL.format(c='volume')} AS total_volume,
+      {R4_SQL.format(c=(
+          WIDE_SUM_SQL.format(c="CASE WHEN supp_nation = 'NATION_1' THEN volume ELSE 0 END")
+          + ' / ' + WIDE_SUM_SQL.format(c='volume')
       ))} AS mkt_share
     FROM flat
     GROUP BY 1
@@ -546,12 +543,12 @@ def q_pagerank_converge(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_volume_shipping",
     oracle=f"""
     SELECT supp_nation, cust_nation, l_year,
-           {SUM_DEC.format(c='volume')} AS revenue
+           {WIDE_SUM_SQL.format(c='volume')} AS revenue
     FROM (
       SELECT ns.n_name AS supp_nation,
              nc.n_name AS cust_nation,
              year(cast(l.l_shipdate as date)) AS l_year,
-             {R4.format(c='l.l_extendedprice * (1 - l.l_discount)')} AS volume
+             {R4_SQL.format(c='l.l_extendedprice * (1 - l.l_discount)')} AS volume
       FROM lineitem l
       JOIN orders o   ON l.l_orderkey = o.o_orderkey
       JOIN customer c ON o.o_custkey = c.c_custkey
@@ -611,11 +608,11 @@ def q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_product_profit",
     oracle=f"""
-    SELECT nation, o_year, {SUM_DEC.format(c='amount')} AS sum_profit
+    SELECT nation, o_year, {WIDE_SUM_SQL.format(c='amount')} AS sum_profit
     FROM (
       SELECT ns.n_name AS nation,
              year(cast(o.o_orderdate as date)) AS o_year,
-             {R4.format(c='l.l_extendedprice * (1 - l.l_discount) - p.p_retailprice * 0.6 * l.l_quantity')} AS amount
+             {R4_SQL.format(c='l.l_extendedprice * (1 - l.l_discount) - p.p_retailprice * 0.6 * l.l_quantity')} AS amount
       FROM lineitem l
       JOIN orders o   ON l.l_orderkey = o.o_orderkey
       JOIN part p     ON l.l_partkey = p.p_partkey
@@ -668,15 +665,15 @@ def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_promo_share",
     oracle=f"""
     SELECT
-      {SUM_DEC.format(c="CASE WHEN p.p_type = 'PROMO' THEN volume ELSE 0 END")} AS promo_revenue,
-      {SUM_DEC.format(c='volume')} AS total_revenue,
-      {R4.format(c=(
-          '100.0 * ' + SUM_DEC.format(c="CASE WHEN p.p_type = 'PROMO' THEN volume ELSE 0 END")
-          + ' / ' + SUM_DEC.format(c='volume')
+      {WIDE_SUM_SQL.format(c="CASE WHEN p.p_type = 'PROMO' THEN volume ELSE 0 END")} AS promo_revenue,
+      {WIDE_SUM_SQL.format(c='volume')} AS total_revenue,
+      {R4_SQL.format(c=(
+          '100.0 * ' + WIDE_SUM_SQL.format(c="CASE WHEN p.p_type = 'PROMO' THEN volume ELSE 0 END")
+          + ' / ' + WIDE_SUM_SQL.format(c='volume')
       ))} AS promo_pct
     FROM (
       SELECT l_partkey,
-             {R4.format(c='l_extendedprice * (1 - l_discount)')} AS volume
+             {R4_SQL.format(c='l_extendedprice * (1 - l_discount)')} AS volume
       FROM lineitem
       WHERE l_shipdate >= DATE '1997-03-01' AND l_shipdate < DATE '1997-04-01'
     ) l
@@ -717,7 +714,7 @@ def q_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_bracket_revenue",
     oracle=f"""
-    SELECT {SUM_DEC.format(c=R4.format(c='l.l_extendedprice * (1 - l.l_discount)'))} AS revenue,
+    SELECT {WIDE_SUM_SQL.format(c=R4_SQL.format(c='l.l_extendedprice * (1 - l.l_discount)'))} AS revenue,
            count(*) AS n_lines
     FROM lineitem l
     JOIN part p ON l.l_partkey = p.p_partkey

@@ -15,11 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
-    exact_avg,
-    exact_sum,
-    rate,
-)
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import SUM_SQL, exact_avg, exact_sum, rate
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
 
@@ -60,8 +56,8 @@ def revenue_for_period(df: DataFrame, period_start: str) -> DataFrame:
     oracle=f"""
     SELECT cast(o_orderdate as date) AS order_date,
            count(*) AS total_orders,
-           cast(sum(cast(o_totalprice as decimal(18,2))) as double) AS gmv,
-           (floor((cast(sum(cast(o_totalprice as decimal(18,2))) as double)
+           {SUM_SQL.format(c="o_totalprice")} AS gmv,
+           (floor(({SUM_SQL.format(c="o_totalprice")}
                    / count(o_totalprice)) * 10000.0 + 0.5) / 10000.0) AS avg_order_value,
            count(DISTINCT o_custkey) AS unique_customers,
            count(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS fulfilled_orders,
@@ -86,15 +82,15 @@ def q_incremental_month(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_time_travel_diff",
-    oracle="""
+    oracle=f"""
     WITH v0 AS (
       SELECT o_orderpriority AS priority,
-             cast(sum(cast(o_totalprice as decimal(18,2))) as double) AS rev
+             {SUM_SQL.format(c="o_totalprice")} AS rev
       FROM orders WHERE o_orderdate < DATE '1998-01-01' GROUP BY 1
     ),
     v1 AS (
       SELECT o_orderpriority AS priority,
-             cast(sum(cast(o_totalprice as decimal(18,2))) as double) AS rev
+             {SUM_SQL.format(c="o_totalprice")} AS rev
       FROM orders GROUP BY 1
     )
     SELECT coalesce(v1.priority, v0.priority) AS priority,

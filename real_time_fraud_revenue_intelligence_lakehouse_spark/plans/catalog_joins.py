@@ -11,7 +11,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round, exact_sum
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
+    R2_SQL,
+    R4_SQL,
+    R6_SQL,
+    SUM_SQL,
+    det_round,
+    exact_sum,
+)
 from real_time_fraud_revenue_intelligence_lakehouse_spark.operators.merge import merge_upsert
 from real_time_fraud_revenue_intelligence_lakehouse_spark.operators.ranking import (
     ntile_banded,
@@ -21,9 +28,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.operators.ranking impo
 from real_time_fraud_revenue_intelligence_lakehouse_spark.operators.velocity import velocity_rangeframe
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
-
-R4 = "(floor(({c}) * 10000.0 + 0.5) / 10000.0)"
-R6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
 
 
 # --- J1/J4: left equi-join with rename discipline -------------------------
@@ -68,7 +72,7 @@ def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem l
     LEFT JOIN part p ON l.l_partkey = p.p_partkey
     LEFT JOIN supplier s ON l.l_suppkey = s.s_suppkey
-    """.format(r2="(floor((l.l_extendedprice * (1 - l.l_discount)) * 100.0 + 0.5) / 100.0)"),
+    """.format(r2=R2_SQL.format(c="l.l_extendedprice * (1 - l.l_discount)")),
     tags=("join", "lookup"),
 )
 def q_join_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -92,15 +96,15 @@ def q_join_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_join",
-    oracle="""
+    oracle=f"""
     WITH day_orders AS (
       SELECT cast(o_orderdate as date) AS d, count(*) AS n_orders,
-             cast(sum(cast(o_totalprice as decimal(18,2))) as double) AS gmv
+             {SUM_SQL.format(c="o_totalprice")} AS gmv
       FROM orders GROUP BY 1
     ), day_returns AS (
       SELECT cast(l_shipdate as date) AS d,
              count(*) AS n_returns,
-             cast(sum(cast(l_quantity as decimal(18,2))) as double) AS return_qty
+             {SUM_SQL.format(c="l_quantity")} AS return_qty
       FROM lineitem WHERE l_returnflag = 'R' GROUP BY 1
     )
     SELECT o.d AS event_date, o.n_orders, o.gmv,
@@ -139,7 +143,7 @@ def q_agg_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_star_join",
-    oracle="""
+    oracle=f"""
     WITH bounds AS (
       SELECT min(cast(o_orderdate as date)) AS lo, max(cast(o_orderdate as date)) AS hi FROM orders
     ), spine AS (
@@ -152,7 +156,7 @@ def q_agg_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT d.d_year, d.d_quarter, d.d_is_weekend,
            count(o.o_orderkey) AS n_orders,
-           cast(sum(cast(o.o_totalprice as decimal(18,2))) as double) AS gmv
+           {SUM_SQL.format(c="o.o_totalprice")} AS gmv
     FROM orders o JOIN dim_dates d ON cast(o.o_orderdate as date) = d.date_key
     GROUP BY 1, 2, 3
     """,
@@ -217,8 +221,8 @@ def q_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_ratio_to_user_avg",
     oracle=f"""
     SELECT o_orderkey, o_custkey, o_totalprice,
-      {R4.format(c="cast(sum(cast(o_totalprice as decimal(18,2))) OVER w as double) / count(*) OVER w")} AS user_avg_amount,
-      {R6.format(c="o_totalprice / (cast(sum(cast(o_totalprice as decimal(18,2))) OVER w as double) / count(*) OVER w)")} AS amount_vs_user_avg
+      {R4_SQL.format(c="cast(sum(cast(o_totalprice as decimal(18,2))) OVER w as double) / count(*) OVER w")} AS user_avg_amount,
+      {R6_SQL.format(c="o_totalprice / (cast(sum(cast(o_totalprice as decimal(18,2))) OVER w as double) / count(*) OVER w)")} AS amount_vs_user_avg
     FROM orders
     WINDOW w AS (PARTITION BY o_custkey)
     """,
@@ -249,8 +253,8 @@ def q_ratio_to_user_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_ratio_to_user_p95",
     oracle=f"""
     SELECT o_orderkey, o_custkey, o_totalprice,
-      {R4.format(c="quantile_cont(o_totalprice, 0.95) OVER (PARTITION BY o_custkey)")} AS user_p95_amount,
-      {R6.format(c="o_totalprice / (quantile_cont(o_totalprice, 0.95) OVER (PARTITION BY o_custkey) + 0.001)")} AS amount_vs_user_p95
+      {R4_SQL.format(c="quantile_cont(o_totalprice, 0.95) OVER (PARTITION BY o_custkey)")} AS user_p95_amount,
+      {R6_SQL.format(c="o_totalprice / (quantile_cont(o_totalprice, 0.95) OVER (PARTITION BY o_custkey) + 0.001)")} AS amount_vs_user_p95
     FROM orders
     """,
     tags=("window",),
@@ -375,13 +379,13 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_merge_upsert",
-    oracle="""
+    oracle=f"""
     WITH target AS (
       SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus
       FROM orders WHERE o_orderkey % 3 <> 0
     ), source AS (
       SELECT o_orderkey, o_custkey,
-             (floor((o_totalprice * 1.05) * 100.0 + 0.5) / 100.0) AS o_totalprice,
+             {R2_SQL.format(c="o_totalprice * 1.05")} AS o_totalprice,
              'F' AS o_orderstatus
       FROM orders WHERE o_orderkey % 2 = 0
     )
@@ -416,10 +420,10 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ntile_quartiles",
-    oracle="""
+    oracle=f"""
     WITH spend AS (
       SELECT o_custkey,
-             cast(sum(cast(o_totalprice as decimal(18,2))) as double) AS total_spend
+             {SUM_SQL.format(c="o_totalprice")} AS total_spend
       FROM orders GROUP BY 1
     )
     SELECT o_custkey, total_spend,
@@ -460,10 +464,10 @@ def q_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_percent_rank",
-    oracle="""
+    oracle=f"""
     WITH spend AS (
       SELECT o_custkey,
-             cast(sum(cast(o_totalprice as decimal(18,2))) as double) AS total_spend
+             {SUM_SQL.format(c="o_totalprice")} AS total_spend
       FROM orders GROUP BY 1
     )
     SELECT o_custkey, total_spend,

@@ -25,14 +25,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import model_metrics, model_metrics_ctes
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R4_SQL, R6_SQL, R8_SQL, det_round
 from real_time_fraud_revenue_intelligence_lakehouse_spark.operators.ranking import distributed_cumsum, distributed_row_number
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
 
-R4 = "(floor(({c}) * 10000.0 + 0.5) / 10000.0)"
-R6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
-R8 = "(floor(({c}) * 100000000.0 + 0.5) / 100000000.0)"
 
 # The 5-way amount-tier ladder (same cuts as the cleanse tier).
 TIER = (
@@ -61,9 +59,9 @@ PSI_YEAR_A, PSI_YEAR_B = 1995, 1996
     ),
     t AS (SELECT sum(n_a) AS ta, sum(n_b) AS tb FROM c)
     SELECT tier, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-           {R6.format(c="cast(n_a as double) / ta")} AS p_a,
-           {R6.format(c="cast(n_b as double) / tb")} AS p_b,
-           {R8.format(c=(
+           {R6_SQL.format(c="cast(n_a as double) / ta")} AS p_a,
+           {R6_SQL.format(c="cast(n_b as double) / tb")} AS p_b,
+           {R8_SQL.format(c=(
                "(cast(n_a as double) / ta - cast(n_b as double) / tb)"
                " * ln((cast(n_a as double) / ta) / (cast(n_b as double) / tb))"
            ))} AS psi_term
@@ -130,7 +128,7 @@ def q_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM c
     )
     SELECT CAST(t.na AS BIGINT) AS n_a, CAST(t.nb AS BIGINT) AS n_b,
-           {R6.format(c=(
+           {R6_SQL.format(c=(
                "max(abs(cast(ca as double) / na - cast(cb as double) / nb))"
            ))} AS ks_stat
     FROM cum, t
@@ -163,7 +161,7 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint()
     # r16 (guide §1.2): the per-class totals ride distributed_cumsum's
     # already-eager boundary job as exact integer sums and fold back
-    # in as literals (the q_auc treatment) — drops the totals subtree
+    # in as literals (model_metrics' treatment) — drops the totals subtree
     # and its broadcast crossJoin; the CDF divisions see the identical
     # exact-int-derived doubles.
     cum, tot = distributed_cumsum(c, "v", ["a", "bb"], total_sums=["a", "bb"])
@@ -192,36 +190,20 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 AUC_POS = "F"
 
 
-@query(
-    "q_auc",
-    oracle=f"""
-    WITH s AS (
-      SELECT o_totalprice AS score,
-             CASE WHEN o_orderstatus = '{AUC_POS}' THEN 1 ELSE 0 END AS pos
+def _auc_oracle() -> str:
+    ctes, card = model_metrics_ctes()
+    return f"""WITH scored AS (
+      SELECT CASE WHEN o_orderstatus = '{AUC_POS}' THEN 1 ELSE 0 END AS label,
+             o_totalprice AS s
       FROM orders
     ),
-    c AS (
-      SELECT score, count(*) AS n, sum(pos) AS np FROM s GROUP BY 1
-    ),
-    cum AS (
-      SELECT score, n, np,
-             coalesce(sum(n) OVER (ORDER BY score
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before
-      FROM c
-    ),
-    t AS (SELECT sum(np) AS n_pos, sum(n) - sum(np) AS n_neg FROM c),
-    r AS (
-      SELECT sum(cast(np as decimal(28,1))
-                 * cast(before + (n + 1) / 2.0 as decimal(28,1))) AS rank_sum
-      FROM cum
-    )
-    SELECT CAST(t.n_pos AS BIGINT) AS n_pos, CAST(t.n_neg AS BIGINT) AS n_neg,
-           {R6.format(c=(
-               "(cast(r.rank_sum as double) - cast(t.n_pos as double) * (t.n_pos + 1) / 2)"
-               " / (cast(t.n_pos as double) * t.n_neg)"
-           ))} AS auc
-    FROM r, t
-    """,
+    {ctes}
+    SELECT n_pos, n - n_pos AS n_neg, roc_auc AS auc FROM {card}"""
+
+
+@query(
+    "q_auc",
+    oracle=_auc_oracle(),
     tags=("monitoring", "evaluation", "statistics"),
 )
 def q_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -230,45 +212,23 @@ def q_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     average-rank tie handling (each distinct score's rows take rank
     cum_before + (n+1)/2). AUC is invariant to monotone transforms,
     so the raw amount IS the score — no model inference needed to
-    exercise the metric. Everything reduces to the distinct-score
-    table, and the strictly-preceding rank offsets come from
-    `distributed_cumsum(..., exclusive=True)` (operators/ranking.py)
-    — bands-way parallel, no single-partition window even when a
-    continuous score makes |distinct scores| ≈ |rows|. The rank sum
-    accumulates in decimal(28,1) (ranks are integers or exact
-    halves), so the only float steps are the final three divisions —
-    an evaluation metric that hash-gates."""
+    exercise the metric. It is the model card's AUC
+    (ext/training.model_metrics on label = 'F' status, s = amount),
+    so the continuous-score case — |distinct scores| ≈ |rows| — runs
+    the same reduction every card does: distributed_cumsum offsets
+    (no single-partition window) and class totals folded in as
+    literals. The oracle is model_metrics_ctes under the same final
+    select. Degenerate inputs follow model_metrics on both engines: an
+    empty orders table gives no row, and one class gives auc 0.0."""
     o = read_table(spark, sf_dir, "orders")
-    s = o.select(
-        F.col("o_totalprice").alias("score"),
-        F.when(F.col("o_orderstatus") == AUC_POS, 1).otherwise(0).alias("pos"),
+    scored = o.select(
+        F.when(F.col("o_orderstatus") == AUC_POS, 1).otherwise(0).alias("label"),
+        F.col("o_totalprice").alias("s"),
     )
-    c = s.groupBy("score").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("pos").alias("np")
-    ).localCheckpoint()
-    # r16 (guide §1.2): the class totals ride distributed_cumsum's
-    # already-eager boundary-sketch job as two exact integer sums and
-    # fold back in as LITERALS — the old totals subtree re-scanned the
-    # checkpointed c and crossJoined back; values are the same exact
-    # ints, so the final three float divisions see identical doubles.
-    cum, tot = distributed_cumsum(
-        c, "score", ["n"], exclusive=True, total_sums=["n", "np"]
-    )
-    cum = cum.select("score", "n", "np", F.col("cum_n").alias("before"))
-    n_pos = int(tot["np"] or 0)
-    n_neg = int((tot["n"] or 0) - n_pos)
-    avg_rank = (F.col("before") + (F.col("n") + 1) / 2.0).cast("decimal(28,1)")
-    r = cum.select(
-        (F.col("np").cast("decimal(28,1)") * avg_rank).alias("rs")
-    ).agg(F.sum("rs").alias("rank_sum"))
-    auc = (
-        F.col("rank_sum").cast("double")
-        - F.lit(n_pos).cast("double") * (F.lit(n_pos) + 1) / 2
-    ) / (F.lit(n_pos).cast("double") * F.lit(n_neg))
-    return r.select(
-        F.lit(n_pos).cast("long").alias("n_pos"),
-        F.lit(n_neg).cast("long").alias("n_neg"),
-        det_round(auc, 6).alias("auc"),
+    return model_metrics(scored).select(
+        "n_pos",
+        (F.col("n") - F.col("n_pos")).alias("n_neg"),
+        F.col("roc_auc").alias("auc"),
     )
 
 
@@ -297,9 +257,9 @@ def q_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     t AS (SELECT sum(n_rows) AS nt, sum(n_pos) AS pt FROM g)
     SELECT decile, CAST(n_rows AS BIGINT) AS n,
            CAST(n_pos AS BIGINT) AS n_pos,
-           {R6.format(c="CAST(n_pos AS DOUBLE) / n_rows")} AS event_rate,
-           {R6.format(c="(CAST(n_pos AS DOUBLE) / n_rows) / (CAST(pt AS DOUBLE) / nt)")} AS lift,
-           {R6.format(c="CAST(sum(n_pos) OVER (ORDER BY decile ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) / pt")} AS cum_capture
+           {R6_SQL.format(c="CAST(n_pos AS DOUBLE) / n_rows")} AS event_rate,
+           {R6_SQL.format(c="(CAST(n_pos AS DOUBLE) / n_rows) / (CAST(pt AS DOUBLE) / nt)")} AS lift,
+           {R6_SQL.format(c="CAST(sum(n_pos) OVER (ORDER BY decile ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) / pt")} AS cum_capture
     FROM g, t
     """,
     tags=("monitoring", "evaluation"),
@@ -383,13 +343,13 @@ CUSUM_H = 5.0  # alarm threshold, in std units
       -- squares are ~1e12 — the det-rounded long stays far from 2^63
       -- (floor(rev^2 * 1e6) overflowed Spark's long-typed floor)
       SELECT n, mean,
-             sqrt(CAST(sum(CAST({R4.format(c="(rev - mean) * (rev - mean)")}
+             sqrt(CAST(sum(CAST({R4_SQL.format(c="(rev - mean) * (rev - mean)")}
                   AS DECIMAL(38,4))) AS DOUBLE) / (n - 1)) AS sd
       FROM daily, m GROUP BY n, mean
     ),
     d AS (
       SELECT day, rev,
-             CAST({R6.format(c="(rev - mean) / sd - " + repr(CUSUM_K))} AS DECIMAL(38,6)) AS dev
+             CAST({R6_SQL.format(c="(rev - mean) / sd - " + repr(CUSUM_K))} AS DECIMAL(38,6)) AS dev
       FROM daily, st
     ),
     c AS (
@@ -406,8 +366,8 @@ CUSUM_H = 5.0  # alarm threshold, in std units
       FROM c
     )
     SELECT day, rev AS revenue,
-           {R6.format(c="CAST(dev AS DOUBLE)")} AS zdev,
-           {R6.format(c="cusum")} AS cusum,
+           {R6_SQL.format(c="CAST(dev AS DOUBLE)")} AS zdev,
+           {R6_SQL.format(c="cusum")} AS cusum,
            CAST(CASE WHEN cusum > {CUSUM_H!r} THEN 1 ELSE 0 END AS BIGINT) AS alarm
     FROM s
     """,
@@ -492,16 +452,16 @@ OLS_HORIZON = 7  # days ahead to project
     ),
     c AS (
       SELECT n, tbar, ybar, tmax,
-             CAST(sum(CAST({R4.format(c="(t - tbar) * (rev - ybar)")} AS DECIMAL(38,4))) AS DOUBLE) AS sxy,
-             CAST(sum(CAST({R4.format(c="(t - tbar) * (t - tbar)")} AS DECIMAL(38,4))) AS DOUBLE) AS sxx,
-             CAST(sum(CAST({R4.format(c="(rev - ybar) * (rev - ybar)")} AS DECIMAL(38,4))) AS DOUBLE) AS syy
+             CAST(sum(CAST({R4_SQL.format(c="(t - tbar) * (rev - ybar)")} AS DECIMAL(38,4))) AS DOUBLE) AS sxy,
+             CAST(sum(CAST({R4_SQL.format(c="(t - tbar) * (t - tbar)")} AS DECIMAL(38,4))) AS DOUBLE) AS sxx,
+             CAST(sum(CAST({R4_SQL.format(c="(rev - ybar) * (rev - ybar)")} AS DECIMAL(38,4))) AS DOUBLE) AS syy
       FROM tx, m GROUP BY n, tbar, ybar, tmax
     )
     SELECT CAST(n AS BIGINT) AS n_days,
-           {R6.format(c="sxy / sxx")} AS slope,
-           {R6.format(c="ybar - (sxy / sxx) * tbar")} AS intercept,
-           {R6.format(c="(sxy * sxy) / (sxx * syy)")} AS r2,
-           {R6.format(c=f"(ybar - (sxy / sxx) * tbar) + (sxy / sxx) * (tmax + {OLS_HORIZON})")} AS forecast
+           {R6_SQL.format(c="sxy / sxx")} AS slope,
+           {R6_SQL.format(c="ybar - (sxy / sxx) * tbar")} AS intercept,
+           {R6_SQL.format(c="(sxy * sxy) / (sxx * syy)")} AS r2,
+           {R6_SQL.format(c=f"(ybar - (sxy / sxx) * tbar) + (sxy / sxx) * (tmax + {OLS_HORIZON})")} AS forecast
     FROM c
     """,
     tags=("monitoring", "regression", "timeseries"),
@@ -575,14 +535,14 @@ SEAS_Z = 3.0  # flag threshold in per-weekday std units
     ),
     sd AS (
       SELECT d.dow, m.n, m.mu,
-             sqrt(CAST(sum(CAST({R4.format(c="(d.rev - m.mu) * (d.rev - m.mu)")}
+             sqrt(CAST(sum(CAST({R4_SQL.format(c="(d.rev - m.mu) * (d.rev - m.mu)")}
                   AS DECIMAL(38,4))) AS DOUBLE) / (m.n - 1)) AS sigma
       FROM daily d JOIN m ON d.dow = m.dow
       GROUP BY d.dow, m.n, m.mu
     )
     SELECT d.day, CAST(d.dow AS BIGINT) AS dow, d.rev,
-           {R6.format(c="s.mu")} AS dow_mean,
-           {R6.format(c="(d.rev - s.mu) / s.sigma")} AS resid_z,
+           {R6_SQL.format(c="s.mu")} AS dow_mean,
+           {R6_SQL.format(c="(d.rev - s.mu) / s.sigma")} AS resid_z,
            CAST(CASE WHEN abs(d.rev - s.mu) > {SEAS_Z!r} * s.sigma
                      THEN 1 ELSE 0 END AS BIGINT) AS flag
     FROM daily d JOIN sd s ON d.dow = s.dow

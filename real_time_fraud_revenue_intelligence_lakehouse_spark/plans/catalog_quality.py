@@ -21,7 +21,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.operators.quality impo
     check_unique,
     run_suite,
 )
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R2_SQL, R6_SQL, det_round
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
 
@@ -202,7 +202,7 @@ KANON_K = 5
     SELECT CAST(c_nationkey AS INTEGER) AS c_nationkey, c_mktsegment,
            CAST(group_size AS BIGINT) AS group_size,
            CAST(CASE WHEN group_size < {KANON_K} THEN 1 ELSE 0 END AS BIGINT) AS violates_k,
-           (floor((cast(group_size as double) / total) * 1000000.0 + 0.5) / 1000000.0) AS row_share
+           {R6_SQL.format(c="cast(group_size as double) / total")} AS row_share
     FROM g, t
     """,
     tags=("quality", "privacy", "governance"),
@@ -239,7 +239,6 @@ def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- functional-dependency discovery ----------------------------------------
 
-R6Q = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
 
 #: Candidate FDs profiled over the part table (lhs → rhs).
 FD_CANDIDATES = (
@@ -343,8 +342,8 @@ RECON_TOL = 0.05  # relative-difference alarm threshold
                      THEN 1 ELSE 0 END AS BIGINT) AS alarm
     FROM o LEFT JOIN l ON o.month = l.month
     """.format(
-        r2="(floor((li.l_extendedprice * (1 - li.l_discount)) * 100.0 + 0.5) / 100.0)",
-        r6=R6Q.format(
+        r2=R2_SQL.format(c="li.l_extendedprice * (1 - li.l_discount)"),
+        r6=R6_SQL.format(
             c="abs(o.orders_total - coalesce(l.lineitem_total, 0.0)) / o.orders_total"
         ),
     ),

@@ -17,27 +17,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round, exact_avg, exact_sum
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
+    AVG_SQL,
+    H60_SQL,
+    R2_SQL,
+    R4_SQL,
+    R6_SQL,
+    REV_SUM_SQL,
+    SUM_SQL,
+    det_round,
+    exact_avg,
+    exact_sum,
+    rev_sum,
+)
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
-
-R4 = "(floor(({c}) * 10000.0 + 0.5) / 10000.0)"
-R2 = "(floor(({c}) * 100.0 + 0.5) / 100.0)"
-R6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
-SUM_SQL = "cast(sum(cast({c} as decimal(18,2))) as double)"
-AVG_SQL = R4.format(c="cast(sum(cast({c} as decimal(18,2))) as double) / count({c})")
-# Exact decimal revenue term: extendedprice * (1 - discount).
-REV_DEC = "cast(l_extendedprice as decimal(18,2)) * (1 - cast(l_discount as decimal(18,2)))"
-REV_SUM = f"cast(sum({REV_DEC}) as double)"
-
-
-def _rev(li_prefix: str = "") -> F.Column:
-    """Spark twin of REV_DEC/REV_SUM: decimal-exact revenue sum."""
-    p = f"{li_prefix}l_extendedprice"
-    d = f"{li_prefix}l_discount"
-    return F.sum(
-        F.col(p).cast("decimal(18,2)") * (F.lit(1) - F.col(d).cast("decimal(18,2)"))
-    ).cast("double")
 
 
 # --- left semi join --------------------------------------------------------
@@ -127,7 +121,7 @@ def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT p.p_brand,
            count(*) AS n_small_items,
-           {R2.format(c=f"{REV_SUM} / 7.0")} AS avg_weekly_revenue
+           {R2_SQL.format(c=f"{REV_SUM_SQL} / 7.0")} AS avg_weekly_revenue
     FROM lineitem l
     JOIN part p ON p.p_partkey = l.l_partkey
     WHERE l.l_quantity < (
@@ -157,7 +151,7 @@ def q_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p_brand")
         .agg(
             F.count(F.lit(1)).alias("n_small_items"),
-            det_round(_rev() / F.lit(7.0), 2).alias("avg_weekly_revenue"),
+            det_round(rev_sum() / F.lit(7.0), 2).alias("avg_weekly_revenue"),
         )
     )
 
@@ -363,9 +357,9 @@ _PD = "cast(l_extendedprice as decimal(18,3))"
       FROM lineitem GROUP BY 1
     )
     SELECT l_returnflag, n,
-           {R4.format(c="(n * sxy - sx * sy) / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))")} AS qty_price_corr,
-           {R4.format(c="sqrt((sxx - sx * sx / n) / (n - 1))")} AS qty_stddev,
-           {R4.format(c="(sxx - sx * sx / n) / (n - 1)")} AS qty_variance
+           {R4_SQL.format(c="(n * sxy - sx * sy) / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))")} AS qty_price_corr,
+           {R4_SQL.format(c="sqrt((sxx - sx * sx / n) / (n - 1))")} AS qty_stddev,
+           {R4_SQL.format(c="(sxx - sx * sx / n) / (n - 1)")} AS qty_variance
     FROM m
     """,
     tags=("aggregate", "stats"),
@@ -404,7 +398,7 @@ def q_stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_window_share",
     oracle=f"""
     SELECT o_orderkey, o_custkey, o_totalprice,
-           {R4.format(c="o_totalprice / cast(sum(cast(o_totalprice as decimal(18,2))) OVER (PARTITION BY o_custkey) as double)")} AS share_of_customer
+           {R4_SQL.format(c="o_totalprice / cast(sum(cast(o_totalprice as decimal(18,2))) OVER (PARTITION BY o_custkey) as double)")} AS share_of_customer
     FROM orders
     """,
     tags=("window",),
@@ -541,7 +535,7 @@ def q_decimal_money(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT n.n_name AS nation,
            count(*) AS n_items,
-           {R2.format(c=REV_SUM)} AS revenue
+           {R2_SQL.format(c=REV_SUM_SQL)} AS revenue
     FROM lineitem l
     JOIN orders o ON l.l_orderkey = o.o_orderkey
     JOIN customer c ON o.o_custkey = c.c_custkey
@@ -578,7 +572,7 @@ def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            det_round(_rev(), 2).alias("revenue"),
+            det_round(rev_sum(), 2).alias("revenue"),
         )
     )
 
@@ -589,7 +583,7 @@ def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_returned_revenue",
     oracle=f"""
     SELECT c.c_custkey, c.c_name,
-           {R2.format(c=REV_SUM)} AS lost_revenue,
+           {R2_SQL.format(c=REV_SUM_SQL)} AS lost_revenue,
            count(*) AS n_returned_items
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
@@ -615,7 +609,7 @@ def q_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy("c_custkey", "c_name")
         .agg(
-            det_round(_rev(), 2).alias("lost_revenue"),
+            det_round(rev_sum(), 2).alias("lost_revenue"),
             F.count(F.lit(1)).alias("n_returned_items"),
         )
         .orderBy(F.desc("lost_revenue"), F.asc("c_custkey"))
@@ -867,7 +861,7 @@ def q_profile_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KMV_K = 64
 # 60-bit md5 hash → uniform [0,1) via division by 2^60 (the same H60
 # bit pattern the MinHash tier uses — ext/text.hash60).
-_U_SQL = "(('0x' || substr(md5(cast(o_custkey as varchar)), 1, 15))::BIGINT / 1152921504606846976.0)"
+_U_SQL = f"({H60_SQL.format(x='cast(o_custkey as varchar)')} / 1152921504606846976.0)"
 
 
 @query(
@@ -879,8 +873,8 @@ _U_SQL = "(('0x' || substr(md5(cast(o_custkey as varchar)), 1, 15))::BIGINT / 11
     kth AS (SELECT max(u) AS u_k, count(*) AS k FROM (SELECT u FROM u ORDER BY u LIMIT {_KMV_K})),
     exact AS (SELECT count(DISTINCT o_custkey) AS n_exact FROM orders)
     SELECT n_exact,
-           {R4.format(c='(k - 1) / u_k')} AS n_estimated,
-           {R4.format(c='abs((k - 1) / u_k - n_exact) / n_exact')} AS rel_error
+           {R4_SQL.format(c='(k - 1) / u_k')} AS n_estimated,
+           {R4_SQL.format(c='abs((k - 1) / u_k - n_exact) / n_exact')} AS rel_error
     FROM kth, exact
     """,
     tags=("sketch", "aggregate"),
@@ -923,7 +917,7 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT o.o_orderpriority,
            count(*) AS n_items,
-           {R2.format(c=REV_SUM)} AS revenue
+           {R2_SQL.format(c=REV_SUM_SQL)} AS revenue
     FROM lineitem l
     JOIN orders o ON l.l_orderkey = o.o_orderkey
     WHERE o.o_orderpriority = '1-URGENT'
@@ -958,24 +952,22 @@ def q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            det_round(_rev(), 2).alias("revenue"),
+            det_round(rev_sum(), 2).alias("revenue"),
         )
     )
 
 
 # --- KMV sketch set algebra (theta-sketch-style union/intersection) --------
 
-_KMV_U = "(('0x' || substr(md5(cast(o_custkey as varchar)), 1, 15))::BIGINT / 1152921504606846976.0)"
-
 
 @query(
     "q_kmv_set_ops",
     oracle=f"""
     WITH a AS (
-      SELECT DISTINCT {_KMV_U} AS u FROM orders WHERE year(cast(o_orderdate as date)) = 1995
+      SELECT DISTINCT {_U_SQL} AS u FROM orders WHERE year(cast(o_orderdate as date)) = 1995
     ),
     b AS (
-      SELECT DISTINCT {_KMV_U} AS u FROM orders WHERE year(cast(o_orderdate as date)) = 1996
+      SELECT DISTINCT {_U_SQL} AS u FROM orders WHERE year(cast(o_orderdate as date)) = 1996
     ),
     sa AS (SELECT u FROM a ORDER BY u LIMIT {_KMV_K}),
     sb AS (SELECT u FROM b ORDER BY u LIMIT {_KMV_K}),
@@ -995,9 +987,9 @@ _KMV_U = "(('0x' || substr(md5(cast(o_custkey as varchar)), 1, 15))::BIGINT / 11
     )
     SELECT CAST(ex.n_union AS BIGINT) AS n_exact_union,
            CAST(ex.n_inter AS BIGINT) AS n_exact_inter,
-           {R4.format(c='(kth.k - 1) / kth.u_k')} AS est_union,
-           {R4.format(c='(cast(rho.n_both as double) / kth.k) * ((kth.k - 1) / kth.u_k)')} AS est_inter,
-           {R4.format(c='cast(rho.n_both as double) / kth.k')} AS jaccard_est
+           {R4_SQL.format(c='(kth.k - 1) / kth.u_k')} AS est_union,
+           {R4_SQL.format(c='(cast(rho.n_both as double) / kth.k) * ((kth.k - 1) / kth.u_k)')} AS est_inter,
+           {R4_SQL.format(c='cast(rho.n_both as double) / kth.k')} AS jaccard_est
     FROM kth, rho, ex
     """,
     tags=("sketch", "aggregate"),
@@ -1073,7 +1065,7 @@ _HLL_M = 256
 #: alpha_256 * m^2 * 2^53 as one double literal shared by BOTH
 #: engines, so the estimate is the same IEEE arithmetic everywhere.
 _HLL_NUM = "4.2399330249068963e+20"
-_HLL_H = "('0x' || substr(md5(cast(o_custkey as varchar)), 1, 15))::BIGINT"
+_HLL_H = H60_SQL.format(x="cast(o_custkey as varchar)")
 
 
 @query(
@@ -1107,8 +1099,8 @@ _HLL_H = "('0x' || substr(md5(cast(o_custkey as varchar)), 1, 15))::BIGINT"
     ),
     exact AS (SELECT count(DISTINCT o_custkey) AS n_exact FROM orders)
     SELECT n_exact,
-           {R4.format(c='e')} AS n_estimated,
-           {R4.format(c='abs(e - n_exact) / n_exact')} AS rel_error,
+           {R4_SQL.format(c='e')} AS n_estimated,
+           {R4_SQL.format(c='abs(e - n_exact) / n_exact')} AS rel_error,
            n_zero_registers
     FROM est, exact
     """,
@@ -1251,7 +1243,6 @@ def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- consistent-hash shard rebalancing audit -------------------------------
 
 _SH_OLD, _SH_NEW = 16, 17  # shard counts before/after the scale-out
-_SH_H = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 
 
 @query(
@@ -1259,11 +1250,11 @@ _SH_H = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
     oracle=f"""
     WITH k AS (SELECT DISTINCT o_custkey AS key FROM orders),
     h AS (
-      SELECT key, {_SH_H.format(x='cast(key as varchar)')} AS hk FROM k
+      SELECT key, {H60_SQL.format(x='cast(key as varchar)')} AS hk FROM k
     ),
     e AS (
       SELECT k.key, u.s,
-             {_SH_H.format(x="cast(k.key as varchar) || '#' || cast(u.s as varchar)")} AS sc
+             {H60_SQL.format(x="cast(k.key as varchar) || '#' || cast(u.s as varchar)")} AS sc
       FROM k, (SELECT unnest(range({_SH_NEW})) AS s) u
     ),
     hrw AS (
@@ -1280,9 +1271,9 @@ _SH_H = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
     )
     SELECT CAST(count(*) AS BIGINT) AS n_keys,
            CAST(sum(mv_mod) AS BIGINT) AS moved_mod,
-           {R4.format(c='sum(mv_mod) / CAST(count(*) AS DOUBLE)')} AS frac_mod,
+           {R4_SQL.format(c='sum(mv_mod) / CAST(count(*) AS DOUBLE)')} AS frac_mod,
            CAST(sum(mv_hrw) AS BIGINT) AS moved_hrw,
-           {R4.format(c='sum(mv_hrw) / CAST(count(*) AS DOUBLE)')} AS frac_hrw
+           {R4_SQL.format(c='sum(mv_hrw) / CAST(count(*) AS DOUBLE)')} AS frac_hrw
     FROM per_key
     """,
     tags=("scalar", "layout", "hash"),
@@ -1420,7 +1411,7 @@ _SKEW_PARTS = 32  # simulated hash-partition count
     kc AS (SELECT keycol, k, count(*) AS n FROM stacked GROUP BY 1, 2),
     parts AS (
       SELECT keycol,
-             ({_SH_H.format(x='k')}) % {_SKEW_PARTS} AS part,
+             ({H60_SQL.format(x='k')}) % {_SKEW_PARTS} AS part,
              sum(n) AS pn
       FROM kc GROUP BY 1, 2
     ),
@@ -1434,9 +1425,9 @@ _SKEW_PARTS = 32  # simulated hash-partition count
     SELECT k.keycol,
            CAST(k.n_rows AS BIGINT) AS n_rows,
            CAST(k.n_keys AS BIGINT) AS n_keys,
-           {R6.format(c='k.top1 / CAST(k.n_rows AS DOUBLE)')} AS top1_share,
-           {R6.format(c='p.max_pn / CAST(p.tot AS DOUBLE)')} AS max_part_share,
-           {R4.format(c=f'(p.max_pn / CAST(p.tot AS DOUBLE)) * {_SKEW_PARTS}')} AS part_skew_factor
+           {R6_SQL.format(c='k.top1 / CAST(k.n_rows AS DOUBLE)')} AS top1_share,
+           {R6_SQL.format(c='p.max_pn / CAST(p.tot AS DOUBLE)')} AS max_part_share,
+           {R4_SQL.format(c=f'(p.max_pn / CAST(p.tot AS DOUBLE)) * {_SKEW_PARTS}')} AS part_skew_factor
     FROM kstat k JOIN pstat p ON p.keycol = k.keycol
     """,
     tags=("quality", "skew", "layout"),
@@ -1536,7 +1527,7 @@ _FS_1ME = 1.0 - 1e-6
     )
     SELECT agree_seg, agree_bal, agree_sfx,
            CAST(count(*) AS BIGINT) AS n_pairs,
-           {R4.format(c=(
+           {R4_SQL.format(c=(
              f"(CASE WHEN agree_seg = 1 THEN log2({_FS_M} / u_seg) ELSE log2({1 - _FS_M} / (1 - u_seg)) END) + "
              f"(CASE WHEN agree_bal = 1 THEN log2({_FS_M} / u_bal) ELSE log2({1 - _FS_M} / (1 - u_bal)) END) + "
              f"(CASE WHEN agree_sfx = 1 THEN log2({_FS_M} / u_sfx) ELSE log2({1 - _FS_M} / (1 - u_sfx)) END)"

@@ -14,10 +14,11 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.sampling import (
     pack_sequences,
     stratified_sample,
 )
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import H60_SQL
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
 
-H60_ID = "('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT"
+H60_ID = H60_SQL.format(x="doc_id::VARCHAR")
 
 
 @query(

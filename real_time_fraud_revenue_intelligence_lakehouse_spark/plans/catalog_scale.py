@@ -31,12 +31,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round, exact_sum
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
+    R4_SQL,
+    SUM_SQL,
+    WIDE_SUM_SQL,
+    det_round,
+    exact_sum,
+)
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
 
-SUM_DEC = "cast(sum(cast({c} as decimal(38,4))) as double)"
-R4 = "(floor(({c}) * 10000.0 + 0.5) / 10000.0)"
 
 #: Scan-probe amplification: 64 generated copies of lineitem put
 #: ~38M decimal-summed rows through one aggregate at sf0.1 — enough
@@ -90,10 +94,10 @@ def _amp_sql(table: str, copies: int, shift: str | None = None) -> str:
     WITH amp AS ({_amp_sql("lineitem", AMP_SCAN)})
     SELECT l_returnflag, l_linestatus,
            count(*) AS n_rows,
-           {SUM_DEC.format(c='l_quantity')} AS sum_qty,
-           {SUM_DEC.format(c='l_extendedprice')} AS sum_price,
-           {SUM_DEC.format(c=R4.format(c='l_extendedprice * (1 - l_discount)'))} AS sum_disc,
-           {SUM_DEC.format(c=R4.format(c='l_extendedprice * (1 - l_discount) * (1 + l_tax)'))} AS sum_charge
+           {WIDE_SUM_SQL.format(c='l_quantity')} AS sum_qty,
+           {WIDE_SUM_SQL.format(c='l_extendedprice')} AS sum_price,
+           {WIDE_SUM_SQL.format(c=R4_SQL.format(c='l_extendedprice * (1 - l_discount)'))} AS sum_disc,
+           {WIDE_SUM_SQL.format(c=R4_SQL.format(c='l_extendedprice * (1 - l_discount) * (1 + l_tax)'))} AS sum_charge
     FROM amp
     GROUP BY 1, 2
     """,
@@ -136,7 +140,7 @@ def q_scale_probe_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
          o AS ({_amp_sql("orders", AMP_JOIN, "o_orderkey")})
     SELECT o.o_orderpriority,
            count(*) AS n_lines,
-           cast(sum(cast(li.l_extendedprice as decimal(18,2))) as double) AS revenue
+           {SUM_SQL.format(c="li.l_extendedprice")} AS revenue
     FROM li JOIN o ON li.l_orderkey = o.o_orderkey
     GROUP BY 1
     """,

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R4_SQL, det_round
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
 
@@ -129,7 +130,6 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     MERGE WHEN MATCHED DELETE/UPDATE/INSERT compiles to; both the
     change feed and snapshot are derived deterministically from
     orders so the oracle replays every branch."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
 
     o = read_table(spark, sf_dir, "orders")
     snap = o.filter(F.col("o_orderkey") % 4 != 0).select(
@@ -180,8 +180,6 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- SCD2 point-in-time lookup ----------------------------------------------
 
-R4 = "(floor(({c}) * 10000.0 + 0.5) / 10000.0)"
-
 
 @query(
     "q_scd2_lookup",
@@ -208,10 +206,10 @@ R4 = "(floor(({c}) * 10000.0 + 0.5) / 10000.0)"
     )
     SELECT d.segment,
            CAST(count(*) AS BIGINT) AS n_purchases,
-           CAST(sum(CAST({R4.format(c="f.value")} AS DECIMAL(38,4))) AS DOUBLE)
+           CAST(sum(CAST({R4_SQL.format(c="f.value")} AS DECIMAL(38,4))) AS DOUBLE)
              AS total_value,
-           {R4.format(c=(
-               "CAST(sum(CAST(" + R4.format(c="f.value") + " AS DECIMAL(38,4))) AS DOUBLE)"
+           {R4_SQL.format(c=(
+               "CAST(sum(CAST(" + R4_SQL.format(c="f.value") + " AS DECIMAL(38,4))) AS DOUBLE)"
                " / count(*)"
            ))} AS avg_value
     FROM facts f
@@ -249,7 +247,6 @@ def q_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("ts") > F.col("valid_from"))
         & (F.col("valid_to").isNull() | (F.col("ts") <= F.col("valid_to")))
     )
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
 
     vdec = det_round(F.col("value"), 4).cast("decimal(38,4)")
     return (

@@ -18,7 +18,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import (
     score_batch,
     weights_sql,
 )
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R6_SQL, det_round, r6
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R6_SQL, R8_SQL, SIGMOID6_F_SQL, SIGMOID6_SQL, det_round, r6
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans import catalog_cleanse  # noqa: F401  (registers q_feature_vector)
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans import registry
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
@@ -32,7 +32,7 @@ _FV_SQL = registry._REGISTRY["q_feature_vector"].oracle
     WITH fv AS ({_FV_SQL}),
     scored AS (
       SELECT o_orderkey, label,
-             {R6_SQL.format(c=f"1.0 / (1.0 + exp(-({weights_sql()})))")} AS fraud_score
+             {SIGMOID6_SQL.format(z=weights_sql())} AS fraud_score
       FROM fv
     )
     SELECT o_orderkey, label, fraud_score,
@@ -58,7 +58,7 @@ def q_fraud_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH fv AS ({_FV_SQL}),
     scored AS (
       SELECT o_orderkey, label,
-             {R6_SQL.format(c=f"1.0 / (1.0 + exp(-({gbt_sql()})))")} AS fraud_score
+             {SIGMOID6_SQL.format(z=gbt_sql())} AS fraud_score
       FROM fv
     )
     SELECT o_orderkey, label, fraud_score,
@@ -106,8 +106,8 @@ def q_gbt_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         r6_rate=R6_SQL.format(c="CAST(sum(label) AS DOUBLE) / count(*)"),
         r6_gap=R6_SQL.format(c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*) - CAST(sum(label) AS DOUBLE) / count(*)"),
         r6_brier=R6_SQL.format(c="CAST(sum(CAST({sq} AS DECIMAL(28,8))) AS DOUBLE) / count(*)".format(
-            sq="(floor(((s - label) * (s - label)) * 100000000.0 + 0.5) / 100000000.0)")),
-    ).format(fv=_FV_SQL, r6_score=R6_SQL.format(c=f"1.0 / (1.0 + exp(-({weights_sql()})))")),
+            sq=R8_SQL.format(c="(s - label) * (s - label)"))),
+    ).format(fv=_FV_SQL, r6_score=SIGMOID6_SQL.format(z=weights_sql())),
     tags=("scoring", "evaluation", "calibration"),
 )
 def q_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -444,8 +444,7 @@ _PSI_EPS = 1e-6
 
 def _score_drift_oracle() -> str:
     ctes, wk = logreg_train_ctes(_FV_SQL)
-    s = R6_SQL.format(c=f"1.0 / (1.0 + exp(-({_z_sql('w.', SCORE_FEATURES)})))")
-    r8 = "(floor(({c}) * 100000000.0 + 0.5) / 100000000.0)"
+    s = SIGMOID6_SQL.format(z=_z_sql('w.', SCORE_FEATURES))
     pa = "cast(n_a as double) / ta"
     pb = "cast(n_b as double) / tb"
     return f"""WITH {ctes},
@@ -464,7 +463,7 @@ def _score_drift_oracle() -> str:
     SELECT bin, n_a, n_b,
            {R6_SQL.format(c=pa)} AS p_a,
            {R6_SQL.format(c=pb)} AS p_b,
-           {r8.format(c=f"(({pa}) - ({pb})) * ln((({pa}) + {_PSI_EPS!r}) / (({pb}) + {_PSI_EPS!r}))")} AS psi_term
+           {R8_SQL.format(c=f"(({pa}) - ({pb})) * ln((({pa}) + {_PSI_EPS!r}) / (({pb}) + {_PSI_EPS!r}))")} AS psi_term
     FROM c, t"""
 
 
@@ -812,10 +811,9 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import ( 
 
 def _model_card_oracle() -> str:
     ctes, rows_k = _gbt_chain_ctes(_FV_SQL)
-    s = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
     return (
         f"WITH {ctes},\n"
-        f"    scored AS (SELECT label, {s} AS s FROM {rows_k}),\n"
+        f"    scored AS (SELECT label, {SIGMOID6_F_SQL} AS s FROM {rows_k}),\n"
         f"    {model_metrics_sql_tail()}"
     )
 
@@ -1384,19 +1382,18 @@ def _calibration_agg(scored: DataFrame) -> DataFrame:
 
 def _gbt_calibration_oracle() -> str:
     ctes, rows_k = _gbt_chain_ctes(_FV_SQL)
-    s = R6_SQL.format(c="1.0 / (1.0 + exp(-f))")
     r6_mean = R6_SQL.format(c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*)")
     r6_rate = R6_SQL.format(c="CAST(sum(label) AS DOUBLE) / count(*)")
     r6_gap = R6_SQL.format(
         c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*) "
         "- CAST(sum(label) AS DOUBLE) / count(*)"
     )
-    sq = "(floor(((s - label) * (s - label)) * 100000000.0 + 0.5) / 100000000.0)"
+    sq = R8_SQL.format(c="(s - label) * (s - label)")
     r6_brier = R6_SQL.format(
         c=f"CAST(sum(CAST({sq} AS DECIMAL(28,8))) AS DOUBLE) / count(*)"
     )
     return f"""WITH {ctes},
-    scored AS (SELECT label, {s} AS s FROM {rows_k}),
+    scored AS (SELECT label, {SIGMOID6_F_SQL} AS s FROM {rows_k}),
     binned AS (
       SELECT least(CAST(floor(s * 10) AS BIGINT), 9) AS bin, label, s FROM scored
     )

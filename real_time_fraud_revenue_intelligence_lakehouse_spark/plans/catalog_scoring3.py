@@ -16,7 +16,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scaler import (
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import logreg_weights_sql, train_logreg
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import r6
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round, r6
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_scoring import (
     _FV_SQL,
     _logreg_fv,
@@ -96,6 +96,7 @@ def q_logreg_train_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # noqa: E402
     GBT_ETA,
+    _rank_sum_aucs,
     early_stop_decision_auc,
     gbt_early_stop_auc_sql,
     tree_logit_raw,
@@ -104,64 +105,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # no
 #: patience window at test scale — the reference's
 #: early_stopping_rounds=20 shape at 3-round ladders.
 ES_PATIENCE = 2
-
-
-def holdout_auc_ladder(va: DataFrame, trees: list[dict],
-                       eta: float = GBT_ETA) -> list[float]:
-    """Per-round holdout AUCs from ONE stacked scan: every partial
-    ensemble's round6 sigmoid is a staged column, the stack unpivots
-    to (round, s, label), and the exact Mann-Whitney rank-sum
-    (q_model_card's machinery, windowed per round over the BOUNDED
-    distinct-score table — ≤ leaf-combination many distinct round6
-    scores per round, not |rows|) yields all rounds+1 AUCs in one
-    aggregate. Driver state: rounds+1 scalar triples."""
-    from pyspark.sql import Window
-
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
-
-    zs = [F.lit(0.0)]
-    for tr_ in trees:
-        zs.append(zs[-1] + F.lit(float(eta)) * tree_logit_raw(tr_))
-    staged = va.select(
-        "label",
-        *[
-            det_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias(f"s_{t}")
-            for t, z in enumerate(zs)
-        ],
-    )
-    pairs = ", ".join(f"{t}, s_{t}" for t in range(len(zs)))
-    scored = staged.selectExpr(
-        "label", f"stack({len(zs)}, {pairs}) AS (round, s)"
-    )
-    grp = scored.groupBy("round", "s").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("label").alias("np")
-    )
-    w = (
-        Window.partitionBy("round")
-        .orderBy("s")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = grp.withColumn("cum_n", F.coalesce(F.sum("n").over(w), F.lit(0)))
-    avg_rank = (F.col("cum_n") + (F.col("n") + 1) / 2.0).cast("decimal(28,1)")
-    rs = F.col("np").cast("decimal(28,1)") * avg_rank
-    agg = cum.groupBy("round").agg(
-        F.sum(rs).alias("rank_sum"),
-        F.sum("np").alias("n_pos"),
-        (F.sum("n") - F.sum("np")).alias("n_neg"),
-    )
-    by_round = {r["round"]: r for r in agg.collect()}
-    out = []
-    for t in range(len(zs)):
-        r = by_round[t]
-        n_pos, n_neg = int(r["n_pos"]), int(r["n_neg"])
-        if n_pos == 0 or n_neg == 0:
-            out.append(0.0)
-        else:
-            raw = (
-                float(r["rank_sum"]) - float(n_pos) * (n_pos + 1) / 2
-            ) / (float(n_pos) * n_neg)
-            out.append(r6(raw))
-    return out
 
 
 @query(
@@ -178,9 +121,12 @@ def q_gbt_early_stop_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     can improve calibration while hurting ranking, and vice versa —
     pinned by a planted test), which is exactly why the metric is a
     parameter of the reference's fit. Per-round holdout AUCs come
-    from ONE stacked scan + one exact rank-sum aggregate
-    (holdout_auc_ladder); the patience-k rule runs on the round6
-    ladder in the driver, identically to the oracle's
+    from ONE stacked scan: every partial ensemble's round6 sigmoid is
+    a staged column, the stack unpivots to (round, s, label, __cnt),
+    and the keyed rank-sum reduction (ext/gbt._rank_sum_aucs, windowed
+    per round over the BOUNDED distinct-score table) yields all
+    rounds+1 AUCs in one aggregate. The patience-k rule runs on the
+    round6 ladder in the driver, identically to the oracle's
     last-improving-round window form. The booster is
     q_gbt_early_stop's (catalog_scoring._default_booster)."""
     from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_scoring import (
@@ -189,8 +135,23 @@ def q_gbt_early_stop_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _tr, va = _fold_splits(spark, sf_dir)
-    trees = _default_booster(spark, sf_dir)
-    aucs = holdout_auc_ladder(va, trees)
+    zs = [F.lit(0.0)]
+    for tr_ in _default_booster(spark, sf_dir):
+        zs.append(zs[-1] + F.lit(float(GBT_ETA)) * tree_logit_raw(tr_))
+    staged = va.select(
+        "label",
+        F.lit(1).alias("__cnt"),
+        *[
+            det_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias(f"s_{t}")
+            for t, z in enumerate(zs)
+        ],
+    )
+    pairs = ", ".join(f"{t}, s_{t}" for t in range(len(zs)))
+    scored = staged.selectExpr(
+        "label", "__cnt", f"stack({len(zs)}, {pairs}) AS (round, s)"
+    )
+    by_round = _rank_sum_aucs(scored, ("round",))
+    aucs = [by_round[(t,)] for t in range(len(zs))]
     stop_at, best_round = early_stop_decision_auc(aucs, ES_PATIENCE)
     out = [
         (t, aucs[t], 1 if t <= stop_at else 0, 1 if t == best_round else 0)

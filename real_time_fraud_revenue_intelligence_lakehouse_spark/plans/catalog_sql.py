@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import SUM_SQL
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
 
@@ -34,11 +35,11 @@ FROM orders
 WHERE o_orderkey IS NOT NULL AND o_totalprice > 0
 """
 
-MART_MONTHLY_SQL = """
+MART_MONTHLY_SQL = f"""
 SELECT order_month,
        o_orderstatus,
        count(*) AS n_orders,
-       cast(sum(cast(o_totalprice as decimal(18,2))) as double) AS gmv,
+       {SUM_SQL.format(c="o_totalprice")} AS gmv,
        count(DISTINCT o_custkey) AS unique_customers,
        (floor((count(CASE WHEN o_totalprice >= 1000 THEN 1 END)
                / (count(*) + cast(0.001 as double)))

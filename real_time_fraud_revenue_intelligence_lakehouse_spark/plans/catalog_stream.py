@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import exact_sum
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import H60_SQL, SUM_SQL, exact_sum
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
 from real_time_fraud_revenue_intelligence_lakehouse_spark.streaming.ingest import (
@@ -24,12 +24,12 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.streaming.ingest impor
 
 @query(
     "q_stream_tumbling",
-    oracle="""
+    oracle=f"""
     SELECT date_trunc('hour', ts) AS window_start,
            date_trunc('hour', ts) + INTERVAL 1 HOUR AS window_end,
            event_type,
            count(*) AS n_events,
-           cast(sum(cast(value as decimal(18,2))) as double) AS total_value
+           {SUM_SQL.format(c="value")} AS total_value
     FROM events
     GROUP BY 1, 2, 3
     """,
@@ -57,7 +57,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_session_window",
-    oracle="""
+    oracle=f"""
     WITH marked AS (
       SELECT user_id, ts, value,
              CASE WHEN lag(ts) OVER w IS NULL
@@ -76,7 +76,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
            min(ts) AS session_start,
            max(ts) + INTERVAL 5 MINUTE AS session_end,
            count(*) AS n_events,
-           cast(sum(cast(value as decimal(18,2))) as double) AS total_value
+           {SUM_SQL.format(c="value")} AS total_value
     FROM numbered
     GROUP BY user_id, sess_id
     """,
@@ -208,7 +208,7 @@ def q_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_sliding_window",
-    oracle="""
+    oracle=f"""
     WITH slots AS (
       SELECT event_type, value, ts,
              unnest([time_bucket(INTERVAL '30 minutes', ts),
@@ -219,7 +219,7 @@ def q_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
            window_start + INTERVAL 1 HOUR AS window_end,
            event_type,
            count(*) AS n_events,
-           cast(sum(cast(value as decimal(18,2))) as double) AS total_value
+           {SUM_SQL.format(c="value")} AS total_value
     FROM slots
     WHERE ts < window_start + INTERVAL 1 HOUR
     GROUP BY 1, 2, 3
@@ -354,9 +354,9 @@ def q_ewma_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_distinct_hll_shards",
-    oracle="""
+    oracle=f"""
     WITH h AS (
-      SELECT ('0x' || substr(md5(cast(user_id as varchar)), 1, 15))::BIGINT AS h
+      SELECT {H60_SQL.format(x="cast(user_id as varchar)")} AS h
       FROM events
     ),
     rho AS (

@@ -26,22 +26,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round, exact_avg
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
+    AVG_SQL,
+    R2_SQL,
+    REV_SUM_SQL,
+    SUM_SQL,
+    det_round,
+    exact_avg,
+    rev_sum,
+)
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
-
-R2 = "(floor(({c}) * 100.0 + 0.5) / 100.0)"
-R4 = "(floor(({c}) * 10000.0 + 0.5) / 10000.0)"
-REV_DEC = "cast(l_extendedprice as decimal(18,2)) * (1 - cast(l_discount as decimal(18,2)))"
-REV_SUM = f"cast(sum({REV_DEC}) as double)"
-
-
-def _rev() -> F.Column:
-    """Decimal-exact revenue sum (Spark twin of REV_SUM)."""
-    return F.sum(
-        F.col("l_extendedprice").cast("decimal(18,2)")
-        * (F.lit(1) - F.col("l_discount").cast("decimal(18,2)"))
-    ).cast("double")
 
 
 # --- TPC-H Q4: order-priority checking (correlated EXISTS count) -----------
@@ -168,7 +163,7 @@ def q_cust_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_top_supplier",
     oracle=f"""
     WITH revenue0 AS (
-      SELECT l_suppkey AS supplier_no, {REV_SUM} AS total_revenue
+      SELECT l_suppkey AS supplier_no, {REV_SUM_SQL} AS total_revenue
       FROM lineitem
       WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1996-04-01'
       GROUP BY 1
@@ -194,7 +189,7 @@ def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("date"))
     )
     rev0 = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        _rev().alias("total_revenue")
+        rev_sum().alias("total_revenue")
     )
     mx = rev0.agg(F.max("total_revenue").alias("_mx"))
     s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
@@ -280,9 +275,7 @@ def q_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- TPC-H Q22: dormant high-balance customers -----------------------------
 
-_AVG_POS_BAL = R4.format(
-    c="cast(sum(cast(c_acctbal as decimal(18,2))) as double) / count(c_acctbal)"
-)
+_AVG_POS_BAL = AVG_SQL.format(c="c_acctbal")
 
 
 @query(
@@ -290,7 +283,7 @@ _AVG_POS_BAL = R4.format(
     oracle=f"""
     SELECT c.c_nationkey AS nation,
            count(*) AS numcust,
-           cast(sum(cast(c.c_acctbal as decimal(18,2))) as double) AS totacctbal
+           {SUM_SQL.format(c="c.c_acctbal")} AS totacctbal
     FROM customer c
     WHERE c.c_acctbal > (SELECT {_AVG_POS_BAL} FROM customer WHERE c_acctbal > 0)
       AND NOT EXISTS (SELECT 1 FROM orders o
@@ -372,7 +365,7 @@ def q_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_important_parts",
     oracle=f"""
     WITH pv AS (
-      SELECT l.l_partkey AS partkey, {REV_SUM} AS part_value
+      SELECT l.l_partkey AS partkey, {REV_SUM_SQL} AS part_value
       FROM lineitem l
       JOIN supplier s ON l.l_suppkey = s.s_suppkey
       WHERE s.s_nationkey IN (1, 2, 3)
@@ -405,7 +398,7 @@ def q_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pv = (
         li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
         .groupBy(F.col("l_partkey").alias("partkey"))
-        .agg(_rev().alias("part_value"))
+        .agg(rev_sum().alias("part_value"))
     )
     tot = pv.agg(
         (F.sum(F.col("part_value").cast("decimal(18,4)")).cast("double") * F.lit(0.001)).alias("_thr")
@@ -465,10 +458,10 @@ def q_part_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_excess_suppliers",
-    oracle="""
+    oracle=f"""
     WITH vol AS (
       SELECT l_suppkey, l_partkey,
-             cast(sum(cast(l_quantity as decimal(18,2))) as double) AS qty
+             {SUM_SQL.format(c="l_quantity")} AS qty
       FROM lineitem
       WHERE l_shipdate >= DATE '1997-01-01' AND l_shipdate < DATE '1998-01-01'
       GROUP BY 1, 2
@@ -524,7 +517,7 @@ def q_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH up AS (
       SELECT l_partkey, l_suppkey,
-             {R2.format(c='l_extendedprice / l_quantity')} AS unit_price
+             {R2_SQL.format(c='l_extendedprice / l_quantity')} AS unit_price
       FROM lineitem
     ),
     mn AS (
@@ -576,7 +569,7 @@ def q_groupwise_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH up AS (
       SELECT l_partkey, l_suppkey,
-             min({R2.format(c='l_extendedprice / l_quantity')}) AS cost
+             min({R2_SQL.format(c='l_extendedprice / l_quantity')}) AS cost
       FROM lineitem GROUP BY 1, 2
     ),
     eligible AS (

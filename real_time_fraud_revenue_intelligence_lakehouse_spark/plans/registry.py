@@ -62,31 +62,41 @@ def _load_all() -> None:
 # in dict order with a hard 50-entry per-round budget (every registered
 # id is green in the r01-r15 union), so ids needing a fresh driver row
 # come FIRST. Layout of this head:
-#   1-27:   the GBT and SHAP ids whose oracle text the one-oracle
-#           generators regenerate (q_gbt_* and the model card,
-#           promotion, CV selection and retrain ids);
-#   28-39:  the ids the one-loop graph change and the one-kernel
+#   1-5:    the ids the one-AUC-per-shape change touched: q_auc (its
+#           oracle is now model_metrics_ctes), then the four whose
+#           Spark AUC reduction changed (q_gbt_early_stop_auc onto
+#           the keyed _rank_sum_aucs; q_model_card, q_model_promotion
+#           and q_retrain_best onto model_metrics' literal totals);
+#   6-28:   the other GBT and SHAP ids whose oracle text the
+#           one-oracle generators regenerate (q_gbt_* and the CV
+#           selection ids);
+#   29-40:  the ids the one-loop graph change and the one-kernel
 #           vector and scoring change touched;
-#   40-52:  the other ids whose trained or selected artifact reads
+#   41-53:  the other ids whose trained or selected artifact reads
 #           through the one keyed memo (shared_frames.memo);
-#   53-54:  the stateful-fold batch twins (q_ewma_recursive,
+#   54-55:  the stateful-fold batch twins (q_ewma_recursive,
 #           q_stateful_profile);
-#   55-56:  the two scale probes;
-#   57:     the last round-16 id not above (q_score_input_gate);
-#   58-73:  the 16 ids whose last sampled row is r09;
-#   74-120: the ids whose last sampled row is r10 and that are not
+#   56-57:  the two scale probes;
+#   58:     the last round-16 id not above (q_score_input_gate);
+#   59-74:  the 16 ids whose last sampled row is r09;
+#   75-121: the ids whose last sampled row is r10 and that are not
 #           above.
 # Names not listed keep their registration order after these (the
 # r11-r15 blocks rotated out: all driver-green at r11-r15).
 # Planned-but-not-yet-registered names are harmless: _ordered()
 # filters on membership.
 _FRONT: tuple[str, ...] = (
+    # — one AUC reduction per shape (keyed / global) —
+    "q_auc",
+    "q_gbt_early_stop_auc",
+    "q_model_card",
+    "q_model_promotion",
+    "q_retrain_best",
     # — oracle regenerated by the one-oracle GBT/SHAP generators —
     "q_gbt_calibration",
     "q_gbt_deep_score",
     "q_gbt_depth_selection",
     "q_gbt_early_stop",
-    "q_gbt_early_stop_auc",
     "q_gbt_importance",
     "q_gbt_learning_curve",
     "q_gbt_model_selection",
@@ -104,11 +114,8 @@ _FRONT: tuple[str, ...] = (
     "q_gbt_train_score",
     "q_gbt_train_subsample",
     "q_gbt_train_weighted",
-    "q_model_card",
-    "q_model_promotion",
     "q_model_selection_cv",
     "q_model_selection_cv_full",
-    "q_retrain_best",
     # — one loop per graph algorithm; one vector / scoring kernel —
     "q_cheapest_route",
     "q_route_reconstruct",

@@ -458,9 +458,15 @@ def test_model_metrics_matches_sklearn_formulas(spark):
     an independent NumPy computation of the sklearn definitions —
     rank-sum AUC with average-rank ties, step-sum average precision,
     and zero_division=0 P/R/F1 at the 0.70 threshold — on a frame
-    with heavy score ties and a real signal."""
+    with heavy score ties and a real signal. The two AUC reductions
+    agree on it: the keyed ext.gbt._rank_sum_aucs per group equals
+    the global model_metrics on that group alone, a one-class group
+    included (0.0 in both)."""
     import math
 
+    from pyspark.sql import functions as F
+
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import _rank_sum_aucs
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import model_metrics
 
     rng = np.random.RandomState(31)
@@ -510,6 +516,21 @@ def test_model_metrics_matches_sklearn_formulas(spark):
     assert row["fn"] == n_pos - tp
     assert row["tn"] == len(y) - pp - (n_pos - tp)
     assert math.isclose(row["threshold"], 0.7)
+
+    # groups 0-2 split the frame; group 3 is one-class (all negative)
+    g = np.concatenate([np.arange(len(y)) % 3, np.full(40, 3)])
+    yg = np.concatenate([y, np.zeros(40, dtype=int)])
+    sg = np.concatenate([s, s[:40]])
+    grouped = spark.createDataFrame(
+        [(int(a), int(b), float(c)) for a, b, c in zip(g, yg, sg)],
+        "g int, label int, s double",
+    ).withColumn("__cnt", F.lit(1))
+    keyed = _rank_sum_aucs(grouped, ("g",))
+    assert sorted(keyed) == [(0,), (1,), (2,), (3,)]
+    for k in range(4):
+        card = model_metrics(grouped.where(F.col("g") == k)).collect()[0]
+        assert keyed[(k,)] == card["roc_auc"], k
+    assert keyed[(3,)] == 0.0
 
 
 def test_model_metrics_guards_degenerate_frames(spark):

@@ -4,7 +4,8 @@ Explains every registered query and flags:
 
 - CartesianProduct / BroadcastNestedLoopJoin outside the queries that
   are *deliberately* all-pairs (sampled ground-truth tiers, tiny-side
-  scoring cross joins, planted-pair generators);
+  scoring cross joins, planted-pair generators), and any of those
+  allowlisted queries whose plan no longer has one (a stale entry);
 - row-at-a-time Python (`BatchEvalPython`) anywhere — the engine
   policy is zero row-UDFs; Arrow stages (`ArrowEvalPython` /
   `MapInPandas` / `FlatMapGroupsInPandas`) are allowed only in ext
@@ -36,23 +37,22 @@ sys.path.insert(0, str(REPO))
 
 #: Queries where an all-pairs join IS the documented design (sampled
 #: exactness baselines, small-|Q| scoring tiers, 1-row broadcast).
+#: An audited entry whose plan has no all-pairs node is flagged as
+#: stale, so the list names only joins that are really there.
 ALLPAIRS_OK = {
     "q_ngram_jaccard",      # sampled ground-truth tier
-    "q_simhash_pairs",      # oracle twin of the blocked form is all-pairs on a sample
     "q_embed_topk",         # brute-force exactness baseline, |Q|=5
     "q_embed_top1",         # pre-normalized brute top-1, |Q|=50
     "q_embed_neardup",      # sampled exact all-pairs (distributed)
     "q_ivf_topk",           # centroid assignment: corpus × |C| broadcast
     "q_ivfpq_topk",         # same centroid-assignment broadcast tier
     "q_tfidf_terms",        # 1-row N aggregate cross joined (broadcast)
-    "q_dim_dates",          # date spine: 1-row sequence seed
     "q_source_mix",         # 1-row total/weight-sum aggregates cross joined (broadcast)
     "q_scalar_subquery",    # 1-row scalar aggregate cross joined (broadcast)
     "q_rfm_segments",       # 1-row max-date anchor cross joined (broadcast)
     "q_bm25",               # 1-row corpus-stats + df aggregates cross joined (broadcast)
     "q_knn_label_vote",     # brute-force exactness tier, |Q|=50 (ANN index is the scale path)
     "q_kmv_distinct",       # 1-row exact-count aggregate cross joined (broadcast)
-    "q_pagerank",           # 1-row node-count aggregate cross joined per round (broadcast)
     "q_unigram_logprob",    # 1-row (N, |V|) stats aggregate cross joined (broadcast)
     "q_dormant_customers",  # 1-row avg-balance threshold cross joined (broadcast)
     "q_important_parts",    # 1-row global-share threshold cross joined (broadcast)
@@ -63,9 +63,6 @@ ALLPAIRS_OK = {
     "q_benford",            # 1-row total cross joined (broadcast)
     "q_round_amount_anomaly",  # 1-row global-rate cross joined (broadcast)
     "q_psi",                # 1-row period-totals cross joined (broadcast)
-    "q_ks_test",            # 1-row sample-size totals cross joined (broadcast)
-    "q_auc",                # 1-row class-count totals cross joined (broadcast)
-    "q_model_card",         # 1-row class-count totals cross joined (broadcast) — the q_auc machinery over the trained booster's scores
     "q_k_anonymity",        # 1-row total cross joined (broadcast)
     "q_chi_square",         # 1-row n/dof/marginal-dims aggregates cross joined (broadcast)
     "q_basket_lift",        # 1-row order-count aggregate cross joined (broadcast)
@@ -88,10 +85,7 @@ ALLPAIRS_OK = {
     "q_quantile_sketch",    # 3 probes range-joined into the ≤few-hundred-row cumulative histogram (broadcast); the histogram IS the reduction
     "q_route_reconstruct",  # 1-row source anchor cross joined (broadcast) — the q_rfm_segments class
     "q_hits",               # 1-row L1-normalization totals cross joined per half-round (broadcast)
-    "q_theil_sen",          # |days|^2 pairwise-slope tier over the AGGREGATED day frame (calendar-bounded ~2.4k days at any fact scale) — the Theil-Sen definition
-    "q_personalized_pagerank",  # 1-row source-set-size aggregate cross joined (broadcast) — the q_pagerank class
     "q_embed_dim_truncation",   # brute-evaluation tier: |Q|=20 panel × corpus (the q_ann_recall class)
-    "q_ivf_nprobe_curve",       # brute-truth panel + IVF centroid broadcast (the q_ann_recall class)
 }
 
 #: Queries allowed an Exchange SinglePartition over a NON-aggregated
@@ -178,8 +172,11 @@ def main() -> int:
         sp = single_partition_over_base(tree)
         if sp and name not in SINGLE_PARTITION_OK:
             issues.append(f"SinglePartition over unreduced rows: {sp[0][:80]}")
-        if ("CartesianProduct" in p or "BroadcastNestedLoopJoin" in p) and name not in ALLPAIRS_OK:
+        all_pairs = "CartesianProduct" in p or "BroadcastNestedLoopJoin" in p
+        if all_pairs and name not in ALLPAIRS_OK:
             issues.append("all-pairs join outside the sanctioned tiers")
+        if not all_pairs and name in ALLPAIRS_OK:
+            issues.append("stale ALLPAIRS_OK entry: no all-pairs join in the plan")
         if "BatchEvalPython" in p:
             issues.append("row-at-a-time Python UDF (policy: zero)")
         has_arrow = any(tag in p for tag in ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas"))
