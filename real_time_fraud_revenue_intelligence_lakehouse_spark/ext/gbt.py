@@ -34,16 +34,18 @@ pipeline, so this module fits it as Spark aggregates:
   persisted ``__f_<m>`` column, so no plan holds more than one tree
   cascade per model.
 
-Every public trainer — :func:`train_gbt`, :func:`train_gbt_grid`,
-ext/gbt_deep's ``train_gbt_deep`` / ``train_gbt_grid_deep`` /
-``train_gbt_grid_full`` and ext/gbt_cv's ``train_gbt_grid_cv`` /
-``train_gbt_grid_full_cv`` — is a thin mapping of its arguments onto
-engine models, and every one returns the engine's heap trees as they
-come. One node recursion reads them: :func:`tree_logit_raw` (raw
-feature columns, the serving form), :func:`gbt_trained_logit_expr`
-(its ensemble) and :func:`deep_tree_logit_on_bins` (the engine's own
-bin columns); ext/shap explains them and ext/model_registry stores
-them, at any depth.
+Every public trainer — :func:`train_gbt`, :func:`train_gbt_grid` (any
+4-, 5- or nine-axis grid), ext/gbt_deep's ``train_gbt_deep`` and
+ext/gbt_cv's ``train_gbt_grid_cv`` — is a thin mapping of its
+arguments onto engine models, and every one returns the engine's heap
+trees as they come. One node recursion reads them:
+:func:`tree_logit_raw` (raw feature columns, the serving form),
+:func:`partial_logits` / :func:`gbt_trained_logit_expr` (its
+ensemble, per round or whole) and :func:`deep_tree_logit_on_bins` (the
+engine's own bin columns); ext/shap explains them and
+ext/model_registry stores them, at any depth. Every selection query
+builds its output with :func:`selection_frame` (the :func:`best_config`
+pick, the engine twin of :func:`_selection_sql`).
 
 Determinism contract (the q_logreg_train conventions, extended to
 tree structure): probabilities det-round to 6 before the gradient;
@@ -85,7 +87,7 @@ from __future__ import annotations
 import hashlib
 import math
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
@@ -724,6 +726,26 @@ def train_gbt(
     return _fit(fv, [cfg], features, bins, label, scales)[0]
 
 
+def partial_logits(
+    trees: list[dict],
+    features: tuple[str, ...] = SCORE_FEATURES,
+    bins: int = GBT_BINS,
+    eta: float = GBT_ETA,
+    scales: dict[str, float] | None = None,
+) -> list[Column]:
+    """The ensemble's logit after each round over RAW feature columns:
+    ``[0, η·t₀, η·t₀ + η·t₁, …]`` (round 0 is the 0-logit constant) —
+    the columns a loss or AUC ladder stages side by side.
+    Left-associated, term order = tree order (the determinism
+    contract shared with the oracles' rows{t} fold)."""
+    zs = [F.lit(0.0)]
+    for tr in trees:
+        zs.append(
+            zs[-1] + F.lit(float(eta)) * tree_logit_raw(tr, features, bins, scales)
+        )
+    return zs
+
+
 def gbt_trained_logit_expr(
     trees: list[dict],
     features: tuple[str, ...] = SCORE_FEATURES,
@@ -732,13 +754,9 @@ def gbt_trained_logit_expr(
     scales: dict[str, float] | None = None,
 ) -> Column:
     """The trained ensemble's logit over RAW feature columns (bins
-    recomputed row-locally) — the train→serve closure for any depth.
-    Left-associated, term order = tree order (the determinism
-    contract shared with the oracles' rows{t} fold)."""
-    z: Column = F.lit(0.0)
-    for tr in trees:
-        z = z + F.lit(float(eta)) * tree_logit_raw(tr, features, bins, scales)
-    return z
+    recomputed row-locally) — the train→serve closure for any depth:
+    the last of :func:`partial_logits`."""
+    return partial_logits(trees, features, bins, eta, scales)[-1]
 
 
 def gbt_trained_score_expr(trees: list[dict], eta: float = GBT_ETA) -> Column:
@@ -1227,18 +1245,20 @@ GBT_MS_CONFIGS: tuple[tuple[str, int, float, float], ...] = (
 
 def train_gbt_grid(
     fv: DataFrame,
-    configs: tuple[tuple[str, int, float, float], ...] = GBT_MS_CONFIGS,
+    configs=GBT_MS_CONFIGS,
     features: tuple[str, ...] = SCORE_FEATURES,
     bins: int = GBT_BINS,
     label: str = "label",
     scales: dict[str, float] | None = None,
 ) -> list[list[dict]]:
-    """Fit EVERY grid config in max(rounds)·2 shared scans — one engine
+    """Fit EVERY grid config — a 4-, 5- or nine-axis tuple, widened by
+    :func:`_cfg` — in max(rounds)·max(depth) shared scans: one engine
     model per config, so the tree lists are bit-identical to calling
-    train_gbt per config (law-pinned in tests/test_gbt.py) and the
-    unrolled per-config SQL oracle still gates them. At 100 TB each
-    extra config is ≤ 2·d·B more integer cells in the same map-side
-    combine."""
+    train_gbt / ext/gbt_deep.train_gbt_deep per config (law-pinned in
+    tests/test_gbt.py and tests/test_gbt_deep.py) and the unrolled
+    per-config SQL oracle still gates them. At 100 TB each extra
+    config adds ≤ 2^L·d·B integer cells to level L's map-side combine,
+    never a scan (the job-count law in tests/test_gbt_deep.py)."""
     return _fit(fv, [_cfg(*c) for c in configs], features, bins, label, scales)
 
 
@@ -1316,6 +1336,45 @@ _AXIS_OUT = (
     "CAST(depth AS INTEGER) AS depth",
     *(f"CAST({a} AS DOUBLE) AS {a}" for a in _AXES[5:]),
 )
+
+
+#: Each axis's Spark type: the engine-side selection frame's columns.
+_AXIS_TYPES = ("string", "int", "double", "double", "int", *("double",) * 5)
+
+
+def best_config(configs, scores: list[float], desc: bool = False) -> int:
+    """The winning config's index: the first by (score, config id),
+    scores descending when ``desc`` — the engine twin of
+    :func:`_selection_sql`'s ``ORDER BY {rank}, config``."""
+    return min(
+        range(len(configs)),
+        key=lambda i: (-scores[i] if desc else scores[i], configs[i][0]),
+    )
+
+
+def selection_frame(
+    spark: SparkSession,
+    configs,
+    scores: list[tuple[str, list[float]]],
+    desc: bool = False,
+    fields: str | None = None,
+) -> DataFrame:
+    """A selection query's output: per config its fields, each
+    (column, per-config value) score, and is_best — the
+    :func:`best_config` pick by the LAST score. ``fields`` is the
+    config columns' schema; by default the :data:`_AXES` prefix the
+    configs fill, typed by :data:`_AXIS_TYPES`."""
+    if fields is None:
+        fields = ", ".join(
+            f"{a} {t}" for a, t in zip(_AXES[: len(configs[0])], _AXIS_TYPES)
+        )
+    best = best_config(configs, scores[-1][1], desc)
+    rows = [
+        (*c, *(vals[i] for _n, vals in scores), 1 if i == best else 0)
+        for i, c in enumerate(configs)
+    ]
+    schema = ", ".join([fields, *(f"{n} double" for n, _v in scores), "is_best int"])
+    return spark.createDataFrame(rows, schema)
 
 
 def _longf_cte(configs, scores: list[tuple[str, list[str]]]) -> str:
@@ -1546,6 +1605,21 @@ def gbt_early_stop_auc_sql(
                   ORDER BY f.val_auc DESC, f.round) = 1
                 THEN 1 ELSE 0 END AS INTEGER) AS is_best
     FROM st f CROSS JOIN sp s"""
+
+
+def early_stop_frame(
+    spark: SparkSession, metric: str, ladder: list[float], stop_at: int, best_round: int
+) -> DataFrame:
+    """An early-stopping query's output: per round t its ``metric``
+    value ``ladder[t]``, whether boosting reached it (t ≤ stop_at) and
+    is_best (t = best_round)."""
+    rows = [
+        (t, v, 1 if t <= stop_at else 0, 1 if t == best_round else 0)
+        for t, v in enumerate(ladder)
+    ]
+    return spark.createDataFrame(
+        rows, f"round int, {metric} double, reached int, is_best int"
+    )
 
 
 def early_stop_decision_auc(

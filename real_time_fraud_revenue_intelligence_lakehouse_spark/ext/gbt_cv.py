@@ -78,37 +78,40 @@ _H60_FOLD = H60_SQL.format(x="o_orderkey::VARCHAR") + " % {folds}"
 def train_gbt_grid_cv(
     fv: DataFrame,
     fold_col: Column,
-    configs: tuple[tuple[str, int, float, float], ...] = GBT_MS_CONFIGS,
+    configs=GBT_MS_CONFIGS,
     folds: int = CV_FOLDS,
     features: tuple[str, ...] = SCORE_FEATURES,
     bins: int = GBT_BINS,
     label: str = "label",
     scales: dict[str, float] | None = None,
 ) -> list[list[list[dict]]]:
-    """Fit EVERY (fold, config) depth-2 model in max(rounds)·2 shared
-    scans: model (f, c) sums the identical integer micros over the
-    identical rows as ``train_gbt_grid(fv.filter(fold_col != f))``, so
-    the trees are bit-identical to the per-fold loop (law-pinned).
-    Returns ``trees[fold][cfg]``."""
+    """Fit EVERY (fold, config) model — any 4-, 5- or nine-axis grid —
+    in max(rounds)·max(depth) shared scans: model (f, c) sums the
+    identical integer micros over the identical rows as
+    ``train_gbt_grid(fv.filter(fold_col != f))``, so the trees are
+    bit-identical to the per-fold loop (law-pinned). Returns
+    ``trees[fold][cfg]``."""
     k = len(configs)
     trees = _fit(fv, [_cfg(*c) for c in configs], features, bins, label,
                  scales, fold_col, folds)
     return [trees[f * k:(f + 1) * k] for f in range(folds)]
 
 
-def _cv_fold_aucs(
+def gbt_cv_fold_aucs(
     fv: DataFrame,
-    configs,
-    folds: int,
-    features: tuple[str, ...],
-    scales: dict[str, float] | None,
+    configs=GBT_MS_CONFIGS,
+    folds: int = CV_FOLDS,
+    features: tuple[str, ...] = SCORE_FEATURES,
+    scales: dict[str, float] | None = None,
 ) -> list[list[float]]:
     """The one holdout scorer: ``out[cfg][fold]`` round6 AUCs of every
-    nine-axis config under ``folds``-fold CV. ONE compressed frame,
-    built here from the same configs, feeds both the engine and the
-    per-fold holdout scoring (the held-out rows are exactly the
-    frame's ``__fold == f`` vectors, weighted by __cnt); it is
-    released when the call ends, also on failure."""
+    config (a 4-, 5- or nine-axis tuple, widened by :func:`_cfg`)
+    under ``folds``-fold CV. ONE compressed frame, built here from the
+    same configs, feeds both the engine and the per-fold holdout
+    scoring (the held-out rows are exactly the frame's ``__fold == f``
+    vectors, weighted by __cnt); it is released when the call ends,
+    also on failure."""
+    configs = [_cfg(*c) for c in configs]
     fold_col = F.pmod(hash60(F.col("o_orderkey").cast("string")), F.lit(folds))
     binned = _binned_frame(
         fv, configs, features, GBT_BINS, "label", scales, fold_col
@@ -130,18 +133,6 @@ def _cv_fold_aucs(
     return [[auc[(f, i)] for f in range(folds)] for i in range(k)]
 
 
-def gbt_cv_fold_aucs(
-    fv: DataFrame,
-    configs: tuple[tuple[str, int, float, float], ...] = GBT_MS_CONFIGS,
-    folds: int = CV_FOLDS,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    scales: dict[str, float] | None = None,
-) -> list[list[float]]:
-    """Per-config per-fold round6 holdout AUCs: ``out[cfg][fold]`` for
-    the depth-2 grid (see :func:`_cv_fold_aucs`)."""
-    return _cv_fold_aucs(fv, [_cfg(*c) for c in configs], folds, features, scales)
-
-
 def cv_mean(aucs: list[float]) -> float:
     """round6 of the left-associated float mean — the exact text the
     oracle's scalar-subquery chain computes."""
@@ -149,6 +140,17 @@ def cv_mean(aucs: list[float]) -> float:
     for a in aucs:
         s = s + a
     return r6(s / float(len(aucs)))
+
+
+def cv_scores(aucs: list[list[float]]) -> list[tuple[str, list[float]]]:
+    """A CV selection's score columns from ``aucs[cfg][fold]``: each
+    fold's AUCs, then the :func:`cv_mean` the selection ranks by — the
+    columns :func:`gbt_cv_selection_sql` writes."""
+    folds = len(aucs[0])
+    return [
+        *((f"auc_fold{f}", [a[f] for a in aucs]) for f in range(folds)),
+        ("cv_auc", [cv_mean(a) for a in aucs]),
+    ]
 
 
 def gbt_cv_selection_sql(
@@ -189,33 +191,3 @@ def gbt_cv_selection_sql(
 #: proved tractable, while every one of the nine dimensions still
 #: varies across the four trials.
 CV_FULL_TRIALS = 4
-
-
-def train_gbt_grid_full_cv(
-    fv: DataFrame,
-    fold_col: Column,
-    configs,
-    folds: int = CV_FOLDS,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    bins: int = GBT_BINS,
-    label: str = "label",
-    scales: dict[str, float] | None = None,
-) -> list[list[list[dict]]]:
-    """:func:`train_gbt_grid_cv` over FULL nine-axis trials: every
-    axis rides exactly as in ext/gbt_deep.train_gbt_grid_full, and the
-    fold filter restricts model (f, c) to its complement rows — trees
-    bit-identical to the per-fold loop. Returns ``trees[fold][cfg]``."""
-    k = len(configs)
-    trees = _fit(fv, list(configs), features, bins, label, scales, fold_col, folds)
-    return [trees[f * k:(f + 1) * k] for f in range(folds)]
-
-
-def gbt_cv_fold_aucs_full(
-    fv: DataFrame,
-    configs,
-    folds: int = CV_FOLDS,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    scales: dict[str, float] | None = None,
-) -> list[list[float]]:
-    """:func:`gbt_cv_fold_aucs` over FULL nine-axis trials."""
-    return _cv_fold_aucs(fv, list(configs), folds, features, scales)

@@ -72,12 +72,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
     _stack_scores,
     _trial_parts,
 )
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # noqa: F401  (re-exports)
-    _argmax_split_sub,
-    _leaf_w,
-    _thr,
-    col_subset,
-)
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R6_SQL
 
@@ -200,33 +194,47 @@ GBT_DEPTH_CONFIGS: tuple[tuple[str, int, float, float, int], ...] = (
 )
 
 
-
-def train_gbt_grid_deep(
-    fv: DataFrame,
-    configs: tuple[tuple[str, int, float, float, int], ...] = GBT_DEPTH_CONFIGS,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    bins: int = GBT_BINS,
-    label: str = "label",
-    scales: dict[str, float] | None = None,
-) -> list[list[dict]]:
-    """Fit every depth-grid config in max(rounds)·max(depth) shared
-    scans — one engine model per config, so the tree lists are
-    bit-identical to the sequential :func:`train_gbt_deep` fold
-    (law-pinned in tests/test_gbt_deep.py). At 100 TB each extra
-    config adds ≤ 2^L·d·B integer cells to level L's map-side
-    combine."""
-    return _fit(fv, [_cfg(*c) for c in configs], features, bins, label, scales)
-
-
 # --- hash-sampled random search (the reference's 30-trial study) ---------------
 
-#: Swept ranges for the sampled study — test-scale projections of the
-#: reference's Optuna space (`fraud_detector.py:249-266`:
-#: n_estimators 100-500 → rounds 2-3; learning_rate 0.01-0.3 → eta
-#: 0.1-0.5; reg_lambda 0-5 → λ ∈ {0.5, 1, 2}; max_depth 3-9 →
-#: depth 2-3). Part of the query identity: the oracle is generated
-#: from the identical draws.
+#: Trial count for the sampled study over rounds/eta/λ/depth. Part of
+#: the query identity: the oracle is generated from the identical
+#: draws.
 RS_TRIALS = 8
+
+#: The study's nine dimensions in config order: each one's md5 draw
+#: key and its bucket values — test-scale projections of the swept
+#: ranges (`fraud_detector.py:249-267`): n_estimators 100-500 →
+#: rounds 2-3; learning_rate 0.01-0.3 → eta 0.1-0.5; reg_lambda 0-5 →
+#: {0.5, 1, 2}; max_depth 3-9 → depth 2-3; subsample 0.6-1.0 →
+#: {0.7, 0.85, 1.0}; colsample_bytree 0.6-1.0 → {0.75, 1.0};
+#: min_child_weight 1-10 → {0, 0.5, 1}; reg_alpha 0-1 → {0, 0.25,
+#: 0.5}; scale_pos_weight ~n0/n1 → {1, 2, 5}.
+_STUDY_SPACE = (
+    ("n_estimators", (2, 3)),
+    ("learning_rate", (0.1, 0.2, 0.3, 0.4, 0.5)),
+    ("reg_lambda", (0.5, 1.0, 2.0)),
+    ("max_depth", (2, 3)),
+    ("subsample", (0.7, 0.85, 1.0)),
+    ("colsample_bytree", (0.75, 1.0)),
+    ("min_child_weight", (0.0, 0.5, 1.0)),
+    ("reg_alpha", (0.0, 0.25, 0.5)),
+    ("scale_pos_weight", (1.0, 2.0, 5.0)),
+)
+
+
+def _sampled_trials(n: int, prefix: str, space) -> tuple:
+    """``n`` trials named ``<prefix>00…``: trial i's value on each
+    dimension is bucket ``int(md5("trial-<i>#<param>")[:8], 16) mod
+    |values|`` — the one md5 draw both samplers share."""
+
+    def draw(i: int, param: str, values: tuple):
+        d = hashlib.md5(f"trial-{i}#{param}".encode()).hexdigest()
+        return values[int(d[:8], 16) % len(values)]
+
+    return tuple(
+        (f"{prefix}{i:02d}", *(draw(i, p, vals) for p, vals in space))
+        for i in range(n)
+    )
 
 
 def sampled_search_configs(
@@ -240,20 +248,9 @@ def sampled_search_configs(
     the sampled config list is a CONSTANT of the query and the
     DuckDB oracle unrolls exactly the same trials. Trials may
     collide (two draws of the same config) exactly like a real
-    random study; ranking tie-breaks on trial id."""
-    out = []
-    for i in range(n):
-
-        def h(param: str, i=i) -> int:
-            d = hashlib.md5(f"trial-{i}#{param}".encode()).hexdigest()
-            return int(d[:8], 16)
-
-        rounds = 2 + h("n_estimators") % 2
-        eta = (1 + h("learning_rate") % 5) / 10.0
-        lam = (0.5, 1.0, 2.0)[h("reg_lambda") % 3]
-        depth = 2 + h("max_depth") % 2
-        out.append((f"t{i:02d}", rounds, eta, lam, depth))
-    return tuple(out)
+    random study; ranking tie-breaks on trial id. Sweeps rounds, eta,
+    λ and depth (the first four :data:`_STUDY_SPACE` dimensions)."""
+    return _sampled_trials(n, "t", _STUDY_SPACE[:4])
 
 
 def grid_holdout_aucs(
@@ -309,55 +306,9 @@ RS_FULL_TRIALS = 8
 def sampled_search_configs_full(n: int = RS_FULL_TRIALS) -> tuple[FullConfig, ...]:
     """:func:`sampled_search_configs` extended to the study's FULL
     space — every Optuna dimension of `fraud_detector.py:249-267`
-    drawn per trial from an md5 bucket of "trial-<i>#<param>"
+    (:data:`_STUDY_SPACE`) drawn per trial from the same md5 buckets
     (RNG-free, bit-stable; the oracle unrolls the identical draws).
-    Bucket sets are test-scale projections of the swept ranges:
-    n_estimators 100-500 → rounds 2-3; learning_rate 0.01-0.3 → eta
-    0.1-0.5; reg_lambda 0-5 → {0.5, 1, 2}; max_depth 3-9 → depth 2-3;
-    subsample 0.6-1.0 → {0.7, 0.85, 1.0}; colsample_bytree 0.6-1.0 →
-    {0.75, 1.0}; min_child_weight 1-10 → {0, 0.5, 1}; reg_alpha 0-1 →
-    {0, 0.25, 0.5}; scale_pos_weight ~n0/n1 → {1, 2, 5}. The
-    stochastic axes draw from the gated domain at the correctness
+    The stochastic axes draw from the gated domain at the correctness
     scales (sf0.01/sf0.1) — like every GBT id, the toy sf0.001 frame
     is out of domain for depth-3 trials."""
-    out = []
-    for i in range(n):
-
-        def h(param: str, i=i) -> int:
-            d = hashlib.md5(f"trial-{i}#{param}".encode()).hexdigest()
-            return int(d[:8], 16)
-
-        rounds = 2 + h("n_estimators") % 2
-        eta = (1 + h("learning_rate") % 5) / 10.0
-        lam = (0.5, 1.0, 2.0)[h("reg_lambda") % 3]
-        depth = 2 + h("max_depth") % 2
-        subsample = (0.7, 0.85, 1.0)[h("subsample") % 3]
-        colsample = (0.75, 1.0)[h("colsample_bytree") % 2]
-        mcw = (0.0, 0.5, 1.0)[h("min_child_weight") % 3]
-        alpha = (0.0, 0.25, 0.5)[h("reg_alpha") % 3]
-        spw = (1.0, 2.0, 5.0)[h("scale_pos_weight") % 3]
-        out.append(
-            (f"f{i:02d}", rounds, eta, lam, depth, subsample, colsample,
-             mcw, alpha, spw)
-        )
-    return tuple(out)
-
-
-def train_gbt_grid_full(
-    fv: DataFrame,
-    configs: tuple[FullConfig, ...],
-    features: tuple[str, ...] = SCORE_FEATURES,
-    bins: int = GBT_BINS,
-    label: str = "label",
-    scales: dict[str, float] | None = None,
-) -> list[list[dict]]:
-    """:func:`train_gbt_grid_deep` widened to the FULL study space —
-    one engine model per nine-axis trial, so per (round, level) still
-    ONE stacked aggregate: subsample rides one shared per-round bucket
-    column and a per-trial post-stack threshold, colsample the trial's
-    plan-time stack entries, scale_pos_weight the trial's staged
-    gm/hm, min_child_weight / reg_alpha the driver-side argmax.
-    Per-trial trees are bit-identical to the sequential
-    :func:`train_gbt_deep` with the same axes (law-pinned), and extra
-    trials only add integer histogram cells, never scans."""
-    return _fit(fv, list(configs), features, bins, label, scales)
+    return _sampled_trials(n, "f", _STUDY_SPACE)

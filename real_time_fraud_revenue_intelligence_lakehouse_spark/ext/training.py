@@ -143,78 +143,29 @@ def train_logreg(
     iters: int = ITERS,
     label: str = "label",
     scales: dict[str, float] | None = None,
-    pos_weight: float | None = None,
-    n_eff: float | None = None,
+    weighted: bool = False,
 ) -> tuple[dict[str, float], int]:
-    """K fixed iterations of full-batch gradient descent on log-loss.
+    """K fixed iterations of full-batch gradient descent on log-loss —
+    the one-config case of :func:`train_logreg_grid`'s descent.
 
     Each iteration: p = round6(σ(w·x)), then for every weight j one
     exact decimal sum of floor((p−y)·x_j·1e6 + 0.5) — all d+1 sums in
     ONE aggregate job. Returns (weights, n_rows). Weights are
     full-precision doubles; round only at the output boundary.
 
-    With ``pos_weight`` (and its matching ``n_eff`` from
-    :func:`scale_pos_weight`), every positive row's gradient
-    contribution is multiplied by the weight before micro-flooring
-    and the update divides by n_eff instead of n — the class-weighted
+    ``weighted`` trains the class-weighted fold: every positive row's
+    gradient contribution is multiplied by pw = n0/n1
+    (:func:`scale_pos_weight`) before micro-flooring and the update
+    divides by n_eff = n0 + pw·n1 instead of n — the class-weighted
     gradient of weighted log-loss, i.e. the scale-correct counterpart
     of the reference's SMOTE resampling (`fraud_detector.py:134-148`):
     SMOTE is a driver-side pandas resampler that dies at 100 TB, while
     a weight is one extra literal in the fold.
     """
-    names = ["bias"] + list(features)
-    w = {m: 0.0 for m in names}
-    n = 0
-    spark = fv.sparkSession
-    if (pos_weight is None) != (n_eff is None):
-        raise ValueError("pos_weight and n_eff come as a pair (scale_pos_weight)")
-    wgt: Column | None = (
-        None
-        if pos_weight is None
-        else F.when(F.col(label) == 1, F.lit(float(pos_weight))).otherwise(F.lit(1.0))
+    ws, n = _logreg_descent(
+        fv, (("", lr, iters, int(weighted)),), features, label, scales
     )
-    w_schema = ", ".join(f"w_{m} double" for m in names)
-    # Weights enter as a broadcast 1-row frame, not literals: every
-    # iteration then compiles to the IDENTICAL generated code (only
-    # the broadcast row's values change), so whole-stage-codegen
-    # caches across iterations — measured ~0.7 s/iter → ~0.25 s/iter
-    # of driver compile saved. Also the exact shape the SQL oracle
-    # uses (fv CROSS JOIN w_{t-1}).
-    for _ in range(iters):
-        wrow = spark.createDataFrame([tuple(w[m] for m in names)], w_schema)
-        j = fv.crossJoin(F.broadcast(wrow))
-        z: Column = F.col("w_bias")
-        for f in features:
-            z = z + F.col(f"w_{f}") * _x_expr(f, scales)
-        p = det_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
-        resid = p - F.col(label).cast("double")
-        bias_c = (
-            resid * F.lit(MICRO) if wgt is None else resid * wgt * F.lit(MICRO)
-        )
-        aggs = [
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.floor(bias_c + F.lit(0.5)).cast("decimal(38,0)")).alias(
-                "g_bias"
-            ),
-        ]
-        for f in features:
-            contrib = resid * _x_expr(f, scales)
-            contrib = (
-                contrib * F.lit(MICRO)
-                if wgt is None
-                else contrib * wgt * F.lit(MICRO)
-            )
-            aggs.append(
-                F.sum(F.floor(contrib + F.lit(0.5)).cast("decimal(38,0)")).alias(
-                    f"g_{f}"
-                )
-            )
-        row = j.agg(*aggs).first()
-        n = row["n"]
-        denom = float(n) if n_eff is None else float(n_eff)
-        for m in names:
-            w[m] = w[m] - lr * (float(row[f"g_{m}"]) / MICRO / denom)
-    return w, n
+    return ws[0], n
 
 
 def trained_score_expr(
@@ -506,25 +457,39 @@ def train_logreg_grid(
     standard way to amortize hyperparameter search: the scan and
     shuffle are shared, each extra config is just 9 more decimal
     columns in the same map-side combine."""
+    return _logreg_descent(fv, configs, features, label, scales)[0]
+
+
+def _logreg_descent(
+    fv: DataFrame,
+    configs: tuple[tuple[str, float, int, int], ...],
+    features: tuple[str, ...],
+    label: str,
+    scales: dict[str, float] | None,
+) -> tuple[list[dict[str, float]], int]:
+    """(weights per config, n_rows): the one stacked descent. A
+    weighted config's contributions gain the factor pw (positive rows)
+    before the micro-floor and its updates divide by n_eff, both from
+    ONE :func:`scale_pos_weight` aggregate when any config is
+    weighted."""
     spark = fv.sparkSession
     names = ["bias"] + list(features)
     k = len(configs)
     ws: list[dict[str, float]] = [{m: 0.0 for m in names} for _ in configs]
-    pws: list[float | None] = []
-    n_effs: list[float | None] = []
-    for _name, _lr, _iters, weighted in configs:
-        if weighted:
-            pw, n_eff = scale_pos_weight(fv, label)
-            pws.append(pw)
-            n_effs.append(n_eff)
-        else:
-            pws.append(None)
-            n_effs.append(None)
-    max_iters = max(it for _n, _l, it, _w in configs)
+    n = 0
+    if any(c[3] for c in configs):
+        pw, n_eff = scale_pos_weight(fv, label)
+        wgt = F.when(F.col(label) == 1, F.lit(float(pw))).otherwise(F.lit(1.0))
     w_schema = ", ".join(
         f"c{c}_w_{m} double" for c in range(k) for m in names
     )
-    for t in range(1, max_iters + 1):
+    # Weights enter as a broadcast 1-row frame, not literals: every
+    # iteration then compiles to the IDENTICAL generated code (only
+    # the broadcast row's values change), so whole-stage-codegen
+    # caches across iterations — measured ~0.7 s/iter → ~0.25 s/iter
+    # of driver compile saved. Also the exact shape the SQL oracle
+    # uses (fv CROSS JOIN w_{t-1}).
+    for t in range(1, max(c[2] for c in configs) + 1):
         active = [c for c in range(k) if configs[c][2] >= t]
         wrow = spark.createDataFrame(
             [tuple(ws[c][m] for c in range(k) for m in names)], w_schema
@@ -537,45 +502,27 @@ def train_logreg_grid(
                 z = z + F.col(f"c{c}_w_{f}") * _x_expr(f, scales)
             p = det_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
             resid = p - F.col(label).cast("double")
-            wgt: Column | None = (
-                None
-                if pws[c] is None
-                else F.when(F.col(label) == 1, F.lit(float(pws[c]))).otherwise(
-                    F.lit(1.0)
-                )
-            )
-            bias_c = (
-                resid * F.lit(MICRO)
-                if wgt is None
-                else resid * wgt * F.lit(MICRO)
-            )
-            aggs.append(
-                F.sum(F.floor(bias_c + F.lit(0.5)).cast("decimal(38,0)")).alias(
-                    f"c{c}_g_bias"
-                )
-            )
-            for f in features:
-                contrib = resid * _x_expr(f, scales)
-                contrib = (
-                    contrib * F.lit(MICRO)
-                    if wgt is None
-                    else contrib * wgt * F.lit(MICRO)
-                )
+            for m in names:
+                contrib = resid if m == "bias" else resid * _x_expr(m, scales)
+                if configs[c][3]:
+                    contrib = contrib * wgt
                 aggs.append(
                     F.sum(
-                        F.floor(contrib + F.lit(0.5)).cast("decimal(38,0)")
-                    ).alias(f"c{c}_g_{f}")
+                        F.floor(contrib * F.lit(MICRO) + F.lit(0.5)).cast(
+                            "decimal(38,0)"
+                        )
+                    ).alias(f"c{c}_g_{m}")
                 )
         row = j.agg(*aggs).first()
         n = row["n"]
         for c in active:
             lr_c = configs[c][1]
-            denom = float(n) if n_effs[c] is None else float(n_effs[c])
+            denom = float(n_eff) if configs[c][3] else float(n)
             for m in names:
                 ws[c][m] = ws[c][m] - lr_c * (
                     float(row[f"c{c}_g_{m}"]) / MICRO / denom
                 )
-    return ws
+    return ws, n
 
 
 # --- Naive Bayes: counting-based training ------------------------------------
@@ -829,6 +776,22 @@ ROC_SWEEP_SQL = f"""sweep AS (
     FROM sweep GROUP BY 1"""
 
 
+#: The calibration tail, to append after a ``scored`` CTE of (label, s)
+#: — q_calibration's and q_gbt_calibration's reliability diagram: 10
+#: fixed-width score bins (top cell closed), per bin the round6 mean
+#: score, event rate and their gap, and the round6 mean of round8
+#: squared errors (Brier), each a decimal fold.
+CALIBRATION_SQL = f"""binned AS (
+      SELECT least(CAST(floor(s * 10) AS BIGINT), 9) AS bin, label, s FROM scored
+    )
+    SELECT bin, count(*) AS n,
+           {R6_SQL.format(c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*)")} AS mean_score,
+           {R6_SQL.format(c="CAST(sum(label) AS DOUBLE) / count(*)")} AS event_rate,
+           {R6_SQL.format(c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*) - CAST(sum(label) AS DOUBLE) / count(*)")} AS calib_gap,
+           {R6_SQL.format(c="CAST(sum(CAST(" + R8_SQL.format(c="(s - label) * (s - label)") + " AS DECIMAL(28,8))) AS DOUBLE) / count(*)")} AS brier
+    FROM binned GROUP BY 1"""
+
+
 def logreg_roc_sql(
     fv_sql: str,
     features: tuple[str, ...] = SCORE_FEATURES,
@@ -1071,11 +1034,12 @@ def _km_init(k: int, features: tuple[str, ...]) -> list[dict[str, float]]:
     return [{f: (i + 0.5) / k for f in features} for i in range(k)]
 
 
-def _km_assign_expr(
+def _km_dists(
     cents: list[dict[str, float]],
     features: tuple[str, ...],
     scales: dict[str, float] | None,
-) -> Column:
+) -> list[Column]:
+    """Each centroid's squared distance to the row."""
     dists = []
     for c in cents:
         d: Column = F.lit(0.0)
@@ -1083,6 +1047,15 @@ def _km_assign_expr(
             diff = _x_expr(f, scales) - F.lit(float(c[f]))
             d = d + diff * diff
         dists.append(d)
+    return dists
+
+
+def _km_assign_expr(
+    cents: list[dict[str, float]],
+    features: tuple[str, ...],
+    scales: dict[str, float] | None,
+) -> Column:
+    dists = _km_dists(cents, features, scales)
     k = len(cents)
     expr = None
     for i in range(k - 1):
@@ -1134,34 +1107,31 @@ def train_kmeans(
     return cents, sizes
 
 
-def kmeans_sql(
-    fv_sql: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    k: int = KM_K,
-    iters: int = KM_ITERS,
-) -> str:
-    """Oracle for q_kmeans_train: unrolled Lloyd iterations; final
-    select emits one row per cluster (long form) referencing the last
-    centroid CTE exactly once via an id VALUES join + CASE unpivot
-    (the logreg_weights_sql single-reference discipline)."""
+def _km_dist_sql(i: int, features: tuple[str, ...]) -> str:
+    """Squared distance of a row to centroid ``i`` of the 1-row weight
+    CTE aliased ``w``."""
+    terms = [
+        f"(({_x_sql(f)}) - w.c{i}_{f}) * (({_x_sql(f)}) - w.c{i}_{f})"
+        for f in features
+    ]
+    return "(" + " + ".join(terms) + ")"
 
-    def x(f: str) -> str:
-        return _x_sql(f)
 
-    def dist(i: int) -> str:
-        terms = [
-            f"(({x(f)}) - w.c{i}_{f}) * (({x(f)}) - w.c{i}_{f})"
-            for f in features
-        ]
-        return "(" + " + ".join(terms) + ")"
+def _km_assign_sql(k: int) -> str:
+    """The argmin over staged distances d0…d{k-1}, ties to the
+    smallest cluster id (the engine's <= cascade)."""
+    whens = []
+    for i in range(k - 1):
+        conds = " AND ".join(f"d{i} <= d{j}" for j in range(i + 1, k))
+        whens.append(f"WHEN {conds} THEN {i}")
+    return "CASE " + " ".join(whens) + f" ELSE {k - 1} END"
 
-    def assign_from_d() -> str:
-        whens = []
-        for i in range(k - 1):
-            conds = " AND ".join(f"d{i} <= d{j}" for j in range(i + 1, k))
-            whens.append(f"WHEN {conds} THEN {i}")
-        return "CASE " + " ".join(whens) + f" ELSE {k - 1} END"
 
+def _kmeans_ctes(
+    fv_sql: str, features: tuple[str, ...], k: int, iters: int
+) -> tuple[str, str]:
+    """(cte_block, final_centroid_cte): the unrolled Lloyd iterations
+    over the feature CTE ``fv``."""
     init_cols = ", ".join(
         f"CAST({(i + 0.5) / k!r} AS DOUBLE) AS c{i}_{f}"
         for i in range(k)
@@ -1173,9 +1143,9 @@ def kmeans_sql(
         # stage distances then the assignment, each written ONCE —
         # inlining the cascade into every conditional sum blows the
         # statement up ~50x (measured 1.2 MB of SQL)
-        dists = ", ".join(f"{dist(i)} AS d{i}" for i in range(k))
+        dists = ", ".join(f"{_km_dist_sql(i, features)} AS d{i}" for i in range(k))
         parts.append(
-            f"a{t} AS (SELECT {feat_cols}, {assign_from_d()} AS asg "
+            f"a{t} AS (SELECT {feat_cols}, {_km_assign_sql(k)} AS asg "
             f"FROM (SELECT {feat_cols}, {dists} FROM fv CROSS JOIN k{t - 1} w))"
         )
         gsel = []
@@ -1186,7 +1156,7 @@ def kmeans_sql(
             for f in features:
                 gsel.append(
                     f"sum(CASE WHEN asg = {i} THEN "
-                    f"CAST({R8_SQL.format(c=x(f))} AS DECIMAL(28,8)) END) AS s_{i}_{f}"
+                    f"CAST({R8_SQL.format(c=_x_sql(f))} AS DECIMAL(28,8)) END) AS s_{i}_{f}"
                 )
         parts.append(f"g{t} AS (SELECT {', '.join(gsel)} FROM a{t})")
         usel = []
@@ -1202,7 +1172,20 @@ def kmeans_sql(
             f"k{t} AS (SELECT {', '.join(usel)}, {nsel} "
             f"FROM g{t} CROSS JOIN k{t - 1} w)"
         )
-    wk = f"k{iters}"
+    return ",\n    ".join(parts), f"k{iters}"
+
+
+def kmeans_sql(
+    fv_sql: str,
+    features: tuple[str, ...] = SCORE_FEATURES,
+    k: int = KM_K,
+    iters: int = KM_ITERS,
+) -> str:
+    """Oracle for q_kmeans_train: unrolled Lloyd iterations; final
+    select emits one row per cluster (long form) referencing the last
+    centroid CTE exactly once via an id VALUES join + CASE unpivot
+    (the logreg_weights_sql single-reference discipline)."""
+    cte_block, wk = _kmeans_ctes(fv_sql, features, k, iters)
     ids = ", ".join(f"({i})" for i in range(k))
     n_case = " ".join(f"WHEN {i} THEN n_{i}" for i in range(k))
     cols = []
@@ -1211,7 +1194,6 @@ def kmeans_sql(
             f"WHEN {i} THEN {R6_SQL.format(c=f'c{i}_{f}')}" for i in range(k)
         )
         cols.append(f"CASE u.cluster {c_case} END AS c_{f}")
-    cte_block = ",\n    ".join(parts)
     return (
         f"WITH {cte_block}\n    "
         f"SELECT u.cluster, CASE u.cluster {n_case} END AS n, {', '.join(cols)}\n    "
@@ -1230,16 +1212,9 @@ def kmeans_inertia(
     and folds through DECIMAL(28,8), so the inertia is exact on any
     layout. The clustering-quality artifact (elbow/inertia) of the
     train→evaluate family."""
-    dists = []
-    for c in cents:
-        d: Column = F.lit(0.0)
-        for f in features:
-            diff = _x_expr(f, scales) - F.lit(float(c[f]))
-            d = d + diff * diff
-        dists.append(d)
     staged = fv.withColumn(
         "__asg", _km_assign_expr(cents, features, scales)
-    ).withColumn("__dmin", F.least(*dists))
+    ).withColumn("__dmin", F.least(*_km_dists(cents, features, scales)))
     return staged.groupBy(F.col("__asg").alias("cluster")).agg(
         F.count(F.lit(1)).alias("n"),
         det_round(
@@ -1257,32 +1232,12 @@ def kmeans_inertia_sql(
 ) -> str:
     """Oracle for q_kmeans_inertia: the same unrolled training CTEs,
     then one assign+least staging pass and per-cluster decimal SSE."""
-    full = kmeans_sql(fv_sql, features, k, iters)
-    # reuse everything up to the final select: rebuild the CTE block
-    head, _sep, _tail = full.rpartition("\n    SELECT u.cluster")
-    ctes = head[len("WITH "):]
-    wk = f"k{iters}"
-
-    def x(f: str) -> str:
-        return _x_sql(f)
-
-    def dist(i: int) -> str:
-        terms = [
-            f"(({x(f)}) - w.c{i}_{f}) * (({x(f)}) - w.c{i}_{f})"
-            for f in features
-        ]
-        return "(" + " + ".join(terms) + ")"
-
-    dists = ", ".join(f"{dist(i)} AS d{i}" for i in range(k))
-    whens = []
-    for i in range(k - 1):
-        conds = " AND ".join(f"d{i} <= d{j}" for j in range(i + 1, k))
-        whens.append(f"WHEN {conds} THEN {i}")
-    asg = "CASE " + " ".join(whens) + f" ELSE {k - 1} END"
+    ctes, wk = _kmeans_ctes(fv_sql, features, k, iters)
+    dists = ", ".join(f"{_km_dist_sql(i, features)} AS d{i}" for i in range(k))
     least = "least(" + ", ".join(f"d{i}" for i in range(k)) + ")"
     return f"""WITH {ctes},
     ev AS (
-      SELECT {asg} AS cluster, {least} AS dmin
+      SELECT {_km_assign_sql(k)} AS cluster, {least} AS dmin
       FROM (SELECT {", ".join(features)}, {dists} FROM fv CROSS JOIN {wk} w)
     )
     SELECT cluster, CAST(count(*) AS BIGINT) AS n,
@@ -1401,6 +1356,24 @@ def _loss_expr(z: Column, label: str = "label") -> Column:
         -F.log(F.lit(1.0) - p)
     )
     return det_round(raw, 6)
+
+
+def mean_log_losses(
+    frame: DataFrame, logits: list[Column], label: str = "label"
+) -> list[float]:
+    """The round6 mean log-loss of each logit over ``frame``, all from
+    ONE scan: per-row :func:`_loss_expr` losses fold through
+    DECIMAL(18,6) sums beside one row count, and each mean rounds to 6
+    on the driver — the loss ladder every selection and early-stopping
+    query reads (the oracles' ``_MEAN_LOSS_SQL`` twin)."""
+    row = frame.agg(
+        F.count(F.lit(1)).alias("n"),
+        *[
+            F.sum(_loss_expr(z, label).cast("decimal(18,6)")).alias(f"L_{i}")
+            for i, z in enumerate(logits)
+        ],
+    ).first()
+    return [r6(float(row[f"L_{i}"]) / row["n"]) for i in range(len(logits))]
 
 
 def logreg_ablation(

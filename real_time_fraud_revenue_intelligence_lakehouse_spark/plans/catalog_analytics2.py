@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
     H52_SQL,
     H60_SQL,
@@ -1093,9 +1094,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     h = o.select(
         "o_totalprice",
-        F.expr(
-            "cast(conv(substr(md5('bs-' || cast(o_orderkey as string)), 1, 15), 16, 10) as bigint)"
-        ).alias("h1"),
+        hash60(F.concat(F.lit("bs-"), F.col("o_orderkey").cast("string"))).alias("h1"),
     )
     # r16 (guide §2.3 "aggregate before you shuffle"): the old plan
     # expanded every order {BOOT_B}-ways (crossJoin + bit filter ≈

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
     H52_SQL,
     H60_SQL,
@@ -1149,9 +1150,7 @@ def hll_day_registers(events: DataFrame) -> DataFrame:
     is an elementwise-max merge of the day rows, never a rescan."""
     h = events.select(
         F.to_date("ts").alias("day"),
-        F.expr("conv(substr(md5(cast(user_id as string)), 1, 15), 16, 10)")
-        .cast("long")
-        .alias("h"),
+        hash60(F.col("user_id").cast("string")).alias("h"),
     )
     rho = h.select(
         "day",

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
     AVG_SQL,
     H60_SQL,
@@ -887,8 +888,6 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the data, so it hash-gates. The k smallest hashes come from
     TakeOrderedAndProject (per-partition heaps of 64, driver merge) —
     the mergeable-sketch shape that needs no global sort at 100 TB."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
-
     o = read_table(spark, sf_dir, "orders")
     u = (
         o.select(F.col("o_custkey").cast("string").alias("k")).distinct()
@@ -1006,8 +1005,6 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     along for the error columns. Deterministic end-to-end — the same
     sketches any engine building from these bytes would produce —
     which is what lets an *approximate* algorithm hash-gate."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
-
     o = read_table(spark, sf_dir, "orders").select(
         "o_custkey", F.year("o_orderdate").alias("y")
     )
@@ -1123,11 +1120,7 @@ def q_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB (partial registers merge by elementwise max, no rescan).
     No pre-distinct: duplicates cannot change a max."""
     o = read_table(spark, sf_dir, "orders")
-    h = o.select(
-        F.expr(
-            "conv(substr(md5(cast(o_custkey as string)), 1, 15), 16, 10)"
-        ).cast("long").alias("h")
-    )
+    h = o.select(hash60(F.col("o_custkey").cast("string")).alias("h"))
     rho = h.select(
         F.expr("shiftright(h, 52)").alias("idx"),
         F.expr(
@@ -1294,15 +1287,13 @@ def q_shard_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     one key-grouped struct-max agg, one 1-row reduction."""
     o = read_table(spark, sf_dir, "orders")
     k = o.select(F.col("o_custkey").alias("key")).distinct()
-    hk = F.expr(
-        "cast(conv(substr(md5(cast(key as string)), 1, 15), 16, 10) as bigint)"
-    )
+    hk = hash60(F.col("key").cast("string"))
     shards = spark.range(_SH_NEW).select(F.col("id").alias("s"))
     e = k.crossJoin(F.broadcast(shards)).select(
         "key",
         "s",
-        F.expr(
-            "cast(conv(substr(md5(cast(key as string) || '#' || cast(s as string)), 1, 15), 16, 10) as bigint)"
+        hash60(
+            F.concat(F.col("key").cast("string"), F.lit("#"), F.col("s").cast("string"))
         ).alias("sc"),
     )
     pair = F.struct(F.col("sc").alias("sc"), (-F.col("s")).alias("ns"))
@@ -1466,7 +1457,7 @@ def q_data_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     kc = stacked.groupBy("keycol", "k").agg(F.count(F.lit(1)).alias("n"))
-    hk = F.expr("cast(conv(substr(md5(k), 1, 15), 16, 10) as bigint)")
+    hk = hash60(F.col("k"))
     parts = kc.groupBy(
         "keycol", (hk % _SKEW_PARTS).alias("part")
     ).agg(F.sum("n").alias("pn"))

@@ -18,6 +18,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import (
     score_batch,
     weights_sql,
 )
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import CALIBRATION_SQL
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R6_SQL, R8_SQL, SIGMOID6_F_SQL, SIGMOID6_SQL, det_round, r6
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans import catalog_cleanse  # noqa: F401  (registers q_feature_vector)
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans import registry
@@ -84,30 +85,14 @@ def q_gbt_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_calibration",
     oracle=f"""
-    WITH fv AS ({{fv}}),
+    WITH fv AS ({_FV_SQL}),
     scored AS (
       SELECT label,
-             {{r6_score}} AS s
+             {SIGMOID6_SQL.format(z=weights_sql())} AS s
       FROM fv
     ),
-    binned AS (
-      SELECT least(CAST(floor(s * 10) AS BIGINT), 9) AS bin, label, s FROM scored
-    )
-    SELECT bin, count(*) AS n,
-           {{r6_mean}} AS mean_score,
-           {{r6_rate}} AS event_rate,
-           {{r6_gap}} AS calib_gap,
-           {{r6_brier}} AS brier
-    FROM binned GROUP BY 1
-    """.format(
-        fv="{fv}",
-        r6_score="{r6_score}",
-        r6_mean=R6_SQL.format(c="CAST(sum(CAST({r6s} AS DECIMAL(28,6))) AS DOUBLE) / count(*)".format(r6s="s")),
-        r6_rate=R6_SQL.format(c="CAST(sum(label) AS DOUBLE) / count(*)"),
-        r6_gap=R6_SQL.format(c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*) - CAST(sum(label) AS DOUBLE) / count(*)"),
-        r6_brier=R6_SQL.format(c="CAST(sum(CAST({sq} AS DECIMAL(28,8))) AS DOUBLE) / count(*)".format(
-            sq=R8_SQL.format(c="(s - label) * (s - label)"))),
-    ).format(fv=_FV_SQL, r6_score=SIGMOID6_SQL.format(z=weights_sql())),
+    {CALIBRATION_SQL}
+    """,
     tags=("scoring", "evaluation", "calibration"),
 )
 def q_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -141,6 +126,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import (  
     SCORE_FEATURES,
     risk_label,
 )
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60  # noqa: E402
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import (  # noqa: E402
     memo,
     memo_get,
@@ -168,6 +154,24 @@ def _logreg_fv(spark: SparkSession, sf_dir: str) -> DataFrame:
         return fv.select("o_orderkey", "label", *SCORE_FEATURES).repartition(4)
 
     return shared_frame(spark, sf_dir, "logreg_fv", build)
+
+
+def _fold_splits(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(train, holdout) — the 80/20 hash split every selection query
+    trains and scores on (bucket(o_orderkey) < 80, the
+    q_train_test_split discipline: append-stable and RNG-free)."""
+    fv = _logreg_fv(spark, sf_dir)
+    b = hash60(F.col("o_orderkey").cast("string")) % 100
+    return fv.filter(b < 80), fv.filter(b >= 80)
+
+
+def _weight_rows(spark: SparkSession, w: dict[str, float]) -> DataFrame:
+    """(feature, weight) per model term, weights round6 — the output
+    of every logistic trainer query."""
+    return spark.createDataFrame(
+        [(m, r6(w[m])) for m in ["bias", *SCORE_FEATURES]],
+        "feature string, weight double",
+    )
 
 
 def _trained_weights(spark: SparkSession, sf_dir: str) -> tuple[dict, int]:
@@ -205,23 +209,21 @@ def q_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterations as generated CTE pairs — training itself hash-gates
     (the q_holt_winters recursive-fold-as-oracle pattern, extended
     from a 1-D series fold to a d-dimensional descent)."""
-    import math
-
-    w, _n = _trained_weights(spark, sf_dir)
-    names = ["bias"] + list(SCORE_FEATURES)
-    rows = [(m, math.floor(w[m] * 1e6 + 0.5) / 1e6) for m in names]
-    return spark.createDataFrame(rows, "feature string, weight double")
+    return _weight_rows(spark, _trained_weights(spark, sf_dir)[0])
 
 
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # noqa: E402
+    best_config,
+    selection_frame,
+)
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import (  # noqa: E402
     MS_CONFIGS,
-    _loss_expr,
     _z_expr,
+    mean_log_losses,
     model_selection_sql,
     scale_pos_weight,
     train_logreg_grid,
 )
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60  # noqa: E402
 
 # The weighted weights and the grid's holdout row below are memoized
 # like _trained_weights (pure functions of the input tables; bench.py's
@@ -248,17 +250,11 @@ def q_logreg_train_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     mass n0 + pw·n1. pw derives from one exact count aggregate, so
     the oracle computes the identical double from its own counts and
     the whole weighted descent hash-gates like the unweighted one."""
-    import math
-
-    def build():
-        fv = _logreg_fv(spark, sf_dir)
-        pw, n_eff = scale_pos_weight(fv)
-        return train_logreg(fv, pos_weight=pw, n_eff=n_eff)
-
-    w, _n = memo(spark, sf_dir, "logreg_weighted", build)
-    names = ["bias"] + list(SCORE_FEATURES)
-    rows = [(m, math.floor(w[m] * 1e6 + 0.5) / 1e6) for m in names]
-    return spark.createDataFrame(rows, "feature string, weight double")
+    w, _n = memo(
+        spark, sf_dir, "logreg_weighted",
+        lambda: train_logreg(_logreg_fv(spark, sf_dir), weighted=True),
+    )
+    return _weight_rows(spark, w)
 
 
 @query(
@@ -282,38 +278,18 @@ def q_model_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECTION ITSELF hash-gates — the q_ivf_nprobe_curve
     decision-artifact pattern applied to training."""
     def build():
-        fv = _logreg_fv(spark, sf_dir)
-        b = hash60(F.col("o_orderkey").cast("string")) % 100
-        tr = fv.filter(b < 80)
-        va = fv.filter(b >= 80)
+        tr, va = _fold_splits(spark, sf_dir)
         # fused grid descent: all 4 configs share each step's scan
         # (5 aggregates total instead of 17) — bit-identical weights
         # to the sequential per-config fold, law-pinned in
         # tests/test_training.py
         ws = train_logreg_grid(tr)
-        aggs = [F.count(F.lit(1)).alias("n")]
-        for i, w in enumerate(ws):
-            aggs.append(
-                F.sum(
-                    _loss_expr(_z_expr(w, SCORE_FEATURES)).cast("decimal(18,6)")
-                ).alias(f"L_{i}")
-            )
-        return va.agg(*aggs).first()
+        return mean_log_losses(va, [_z_expr(w, SCORE_FEATURES) for w in ws])
 
-    row = memo(spark, sf_dir, "logreg_model_selection", build)
-    n = row["n"]
-    losses = [r6(float(row[f"L_{i}"]) / n) for i in range(len(MS_CONFIGS))]
-    best = min(
-        range(len(MS_CONFIGS)), key=lambda i: (losses[i], MS_CONFIGS[i][0])
-    )
-    out = [
-        (name, lr_c, iters_c, weighted, losses[i], 1 if i == best else 0)
-        for i, (name, lr_c, iters_c, weighted) in enumerate(MS_CONFIGS)
-    ]
-    return spark.createDataFrame(
-        out,
-        "config string, lr double, iters int, weighted int, "
-        "val_logloss double, is_best int",
+    losses = memo(spark, sf_dir, "logreg_model_selection", build)
+    return selection_frame(
+        spark, MS_CONFIGS, [("val_logloss", losses)],
+        fields="config string, lr double, iters int, weighted int",
     )
 
 
@@ -617,8 +593,8 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # no
     gbt_score_band_sql,
     gbt_train_sql,
     gbt_trained_score_expr,
+    partial_logits,
     train_gbt,
-    tree_logit_raw,
 )
 
 def _trained_gbt(spark: SparkSession, sf_dir: str) -> list[dict]:
@@ -699,7 +675,6 @@ def q_gbt_train_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # noqa: E402
-    GBT_ETA,
     gbt_importance_sql,
     gbt_learning_curve_sql,
     gbt_roc_sql,
@@ -786,20 +761,12 @@ def q_gbt_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the boosting axis); per-row losses det-round to 6 and fold
     through DECIMAL(18,6). The oracle reuses the MATERIALIZED rows{t}
     frames, whose f column IS the partial logit."""
-    fv = _logreg_fv(spark, sf_dir)
-    trees = _trained_gbt(spark, sf_dir)
-    zs = [F.lit(0.0)]
-    for tr in trees:
-        zs.append(zs[-1] + F.lit(float(GBT_ETA)) * tree_logit_raw(tr))
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for t, z in enumerate(zs):
-        aggs.append(
-            F.sum(_loss_expr(z).cast("decimal(18,6)")).alias(f"L_{t}")
-        )
-    row = fv.agg(*aggs).first()
-    n = row["n"]
-    out = [(t, r6(float(row[f"L_{t}"]) / n)) for t in range(len(zs))]
-    return spark.createDataFrame(out, "round int, train_logloss double")
+    losses = mean_log_losses(
+        _logreg_fv(spark, sf_dir), partial_logits(_trained_gbt(spark, sf_dir))
+    )
+    return spark.createDataFrame(
+        list(enumerate(losses)), "round int, train_logloss double"
+    )
 
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import _gbt_chain_ctes  # noqa: E402
@@ -986,18 +953,13 @@ def q_logreg_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # noqa: E402
     GBT_MS_CONFIGS,
+    early_stop_decision,
+    early_stop_frame,
     gbt_early_stop_sql,
     gbt_model_selection_sql,
+    gbt_trained_logit_expr,
     train_gbt_grid,
 )
-
-def _fold_splits(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(train, holdout) — the q_model_selection hash split
-    (bucket(o_orderkey) < 80, append-stable and RNG-free)."""
-    fv = _logreg_fv(spark, sf_dir)
-    b = hash60(F.col("o_orderkey").cast("string")) % 100
-    return fv.filter(b < 80), fv.filter(b >= 80)
-
 
 def _grid_trees(spark: SparkSession, sf_dir: str) -> tuple[list[list[dict]], DataFrame, DataFrame]:
     """(trees per config, train split, holdout split) — the grid
@@ -1022,27 +984,23 @@ def _default_booster(spark: SparkSession, sf_dir: str) -> list[dict]:
     )
 
 
-def _gbt_selection(spark: SparkSession, sf_dir: str) -> tuple[list[float], int]:
-    """(round6 holdout losses per config, winner index) — ONE
-    4-ensemble holdout loss aggregate over the grid's trees, memoized
-    per process; the winner tie-breaks (val_logloss, config id)."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import gbt_trained_logit_expr
+def _holdout_losses(va: DataFrame, trees_all: list[list[dict]], configs) -> list[float]:
+    """Round6 holdout log-loss per config: ONE ensemble-per-config
+    loss ladder over the holdout split."""
+    return mean_log_losses(
+        va, [gbt_trained_logit_expr(t, eta=c[2]) for t, c in zip(trees_all, configs)]
+    )
+
+
+def _gbt_selection(spark: SparkSession, sf_dir: str) -> list[float]:
+    """Round6 holdout losses per GBT_MS_CONFIGS config over the grid's
+    trees, memoized per process."""
 
     def build():
         trees_all, _tr, va = _grid_trees(spark, sf_dir)
-        aggs = [F.count(F.lit(1)).alias("n")]
-        for i, (name, rounds, eta, lam) in enumerate(GBT_MS_CONFIGS):
-            z = gbt_trained_logit_expr(trees_all[i], eta=eta)
-            aggs.append(F.sum(_loss_expr(z).cast("decimal(18,6)")).alias(f"L_{i}"))
-        return va.agg(*aggs).first()
+        return _holdout_losses(va, trees_all, GBT_MS_CONFIGS)
 
-    row = memo(spark, sf_dir, "gbt_selection", build)
-    n = row["n"]
-    losses = [r6(float(row[f"L_{i}"]) / n) for i in range(len(GBT_MS_CONFIGS))]
-    best = min(
-        range(len(GBT_MS_CONFIGS)), key=lambda i: (losses[i], GBT_MS_CONFIGS[i][0])
-    )
-    return losses, best
+    return memo(spark, sf_dir, "gbt_selection", build)
 
 
 @query(
@@ -1068,15 +1026,8 @@ def q_gbt_model_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     namespaced unrolled chains and replays each one's splits on the
     holdout fold — the GBT MODEL SELECTION itself hash-gates, closing
     VERDICT r13's 'the grid machinery transfers directly' item."""
-    losses, best = _gbt_selection(spark, sf_dir)
-    out = [
-        (name, rounds, eta, lam, losses[i], 1 if i == best else 0)
-        for i, (name, rounds, eta, lam) in enumerate(GBT_MS_CONFIGS)
-    ]
-    return spark.createDataFrame(
-        out,
-        "config string, rounds int, eta double, lam double, "
-        "val_logloss double, is_best int",
+    return selection_frame(
+        spark, GBT_MS_CONFIGS, [("val_logloss", _gbt_selection(spark, sf_dir))]
     )
 
 
@@ -1100,30 +1051,9 @@ def q_gbt_early_stop(spark: SparkSession, sf_dir: str) -> DataFrame:
     ladder in the driver, identically to the oracle's window-function
     form. The booster is _default_booster's (the grid's config 0 when
     already trained, else one config-0 fit)."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import GBT_ETA as _ETA
-
     _tr, va = _fold_splits(spark, sf_dir)
-    trees = _default_booster(spark, sf_dir)
-    zs = [F.lit(0.0)]
-    for tr_ in trees:
-        zs.append(zs[-1] + F.lit(float(_ETA)) * tree_logit_raw(tr_))
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for t, z in enumerate(zs):
-        aggs.append(F.sum(_loss_expr(z).cast("decimal(18,6)")).alias(f"L_{t}"))
-    row = va.agg(*aggs).first()
-    n = row["n"]
-    losses = [r6(float(row[f"L_{t}"]) / n) for t in range(len(zs))]
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import early_stop_decision
-
-    stop_at, best_round = early_stop_decision(losses)
-    reached = [1 if t <= stop_at else 0 for t in range(len(losses))]
-    out = [
-        (t, losses[t], reached[t], 1 if t == best_round else 0)
-        for t in range(len(losses))
-    ]
-    return spark.createDataFrame(
-        out, "round int, val_logloss double, reached int, is_best int"
-    )
+    losses = mean_log_losses(va, partial_logits(_default_booster(spark, sf_dir)))
+    return early_stop_frame(spark, "val_logloss", losses, *early_stop_decision(losses))
 
 
 # --- r14: exact TreeSHAP for the trained boosters -----------------------------
@@ -1302,7 +1232,8 @@ def q_retrain_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         promote_model,
     )
 
-    losses, best = _gbt_selection(spark, sf_dir)
+    losses = _gbt_selection(spark, sf_dir)
+    best = best_config(GBT_MS_CONFIGS, losses)
     name, rounds, eta, lam = GBT_MS_CONFIGS[best]
     fv = _logreg_fv(spark, sf_dir)
 
@@ -1382,27 +1313,9 @@ def _calibration_agg(scored: DataFrame) -> DataFrame:
 
 def _gbt_calibration_oracle() -> str:
     ctes, rows_k = _gbt_chain_ctes(_FV_SQL)
-    r6_mean = R6_SQL.format(c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*)")
-    r6_rate = R6_SQL.format(c="CAST(sum(label) AS DOUBLE) / count(*)")
-    r6_gap = R6_SQL.format(
-        c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*) "
-        "- CAST(sum(label) AS DOUBLE) / count(*)"
-    )
-    sq = R8_SQL.format(c="(s - label) * (s - label)")
-    r6_brier = R6_SQL.format(
-        c=f"CAST(sum(CAST({sq} AS DECIMAL(28,8))) AS DOUBLE) / count(*)"
-    )
     return f"""WITH {ctes},
     scored AS (SELECT label, {SIGMOID6_F_SQL} AS s FROM {rows_k}),
-    binned AS (
-      SELECT least(CAST(floor(s * 10) AS BIGINT), 9) AS bin, label, s FROM scored
-    )
-    SELECT bin, count(*) AS n,
-           {r6_mean} AS mean_score,
-           {r6_rate} AS event_rate,
-           {r6_gap} AS calib_gap,
-           {r6_brier} AS brier
-    FROM binned GROUP BY 1"""
+    {CALIBRATION_SQL}"""
 
 
 @query(

@@ -14,17 +14,17 @@ identical arithmetic.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
     gbt_model_selection_sql,
     gbt_score_band_sql,
-    gbt_trained_logit_expr,
     gbt_trained_score_expr,
+    selection_frame,
+    train_gbt_grid,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_cv import (
     GBT_MS_CONFIGS,
-    cv_mean,
+    cv_scores,
     gbt_cv_fold_aucs,
     gbt_cv_selection_sql,
 )
@@ -33,15 +33,14 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
     GBT_DEPTH_CONFIGS,
     gbt_train_deep_sql,
     train_gbt_deep,
-    train_gbt_grid_deep,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import _loss_expr
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import r6
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_scoring import (
     _FV_SQL,
     _band_summary,
+    _fold_splits,
+    _holdout_losses,
     _logreg_fv,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
@@ -172,12 +171,6 @@ def q_gbt_train_subsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(_deep_tree_rows(trees), _DEEP_SCHEMA)
 
 
-def _fold_splits2(spark: SparkSession, sf_dir: str):
-    fv = _logreg_fv(spark, sf_dir)
-    b = hash60(F.col("o_orderkey").cast("string")) % 100
-    return fv.filter(b < 80), fv.filter(b >= 80)
-
-
 @query(
     "q_gbt_depth_selection",
     oracle=gbt_model_selection_sql(_FV_SQL, GBT_DEPTH_CONFIGS),
@@ -189,10 +182,10 @@ def q_gbt_depth_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`fraud_detector.py:258`: max_depth 3-9; the engine brackets its
     depth-2 default against depth 3 at two round counts and two
     learning rates). All 4 configs fit on the hash-split train fold
-    via the FUSED deep grid trainer (train_gbt_grid_deep: per round
-    per LEVEL one shared stacked aggregate carries every config still
-    active at that (round, level) — trees bit-identical to the
-    sequential fold, law-pinned); ONE holdout scan sums every
+    via the FUSED grid trainer (train_gbt_grid: per round per LEVEL
+    one shared stacked aggregate carries every config still active at
+    that (round, level) — trees bit-identical to the sequential fold,
+    law-pinned); ONE holdout scan sums every
     config's decimal-folded log-loss; is_best ranks by (val_logloss,
     config). The oracle re-trains all four via namespaced unrolled
     deep chains and replays each on the holdout fold.
@@ -205,34 +198,12 @@ def q_gbt_depth_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-domain, as is any realistic scale — the depth axis exists FOR
     large data."""
     def build():
-        tr, va = _fold_splits2(spark, sf_dir)
-        grid = train_gbt_grid_deep(tr)
-        aggs = [F.count(F.lit(1)).alias("n")]
-        for i, (_name, _r, eta, _l, _d) in enumerate(GBT_DEPTH_CONFIGS):
-            z = gbt_trained_logit_expr(grid[i], eta=eta)
-            aggs.append(
-                F.sum(_loss_expr(z).cast("decimal(18,6)")).alias(f"L_{i}")
-            )
-        return va.agg(*aggs).first()
+        tr, va = _fold_splits(spark, sf_dir)
+        trees_all = train_gbt_grid(tr, GBT_DEPTH_CONFIGS)
+        return _holdout_losses(va, trees_all, GBT_DEPTH_CONFIGS)
 
-    row = memo(spark, sf_dir, "gbt_depth_grid", build)
-    n = row["n"]
-    losses = [
-        r6(float(row[f"L_{i}"]) / n) for i in range(len(GBT_DEPTH_CONFIGS))
-    ]
-    best = min(
-        range(len(GBT_DEPTH_CONFIGS)),
-        key=lambda i: (losses[i], GBT_DEPTH_CONFIGS[i][0]),
-    )
-    out = [
-        (name, rounds, eta, lam, depth, losses[i], 1 if i == best else 0)
-        for i, (name, rounds, eta, lam, depth) in enumerate(GBT_DEPTH_CONFIGS)
-    ]
-    return spark.createDataFrame(
-        out,
-        "config string, rounds int, eta double, lam double, depth int, "
-        "val_logloss double, is_best int",
-    )
+    losses = memo(spark, sf_dir, "gbt_depth_grid", build)
+    return selection_frame(spark, GBT_DEPTH_CONFIGS, [("val_logloss", losses)])
 
 
 @query(
@@ -257,36 +228,7 @@ def q_model_selection_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     aucs = memo(
         spark, sf_dir, "gbt_cv", lambda: gbt_cv_fold_aucs(_logreg_fv(spark, sf_dir))
     )
-    means = [cv_mean(a) for a in aucs]
-    # max with config-id tie-break ASC == the oracle's row_number
-    # ORDER BY cv_auc DESC, config
-    best = 0
-    for i in range(1, len(GBT_MS_CONFIGS)):
-        if means[i] > means[best] or (
-            means[i] == means[best]
-            and GBT_MS_CONFIGS[i][0] < GBT_MS_CONFIGS[best][0]
-        ):
-            best = i
-    out = [
-        (
-            name,
-            rounds,
-            eta,
-            lam,
-            aucs[i][0],
-            aucs[i][1],
-            aucs[i][2],
-            means[i],
-            1 if i == best else 0,
-        )
-        for i, (name, rounds, eta, lam) in enumerate(GBT_MS_CONFIGS)
-    ]
-    return spark.createDataFrame(
-        out,
-        "config string, rounds int, eta double, lam double, "
-        "auc_fold0 double, auc_fold1 double, auc_fold2 double, "
-        "cv_auc double, is_best int",
-    )
+    return selection_frame(spark, GBT_MS_CONFIGS, cv_scores(aucs), desc=True)
 
 
 # --- exact TreeSHAP for the depth-3 booster (ext/shap.py) ---------------------

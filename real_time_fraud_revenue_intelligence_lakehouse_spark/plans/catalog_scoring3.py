@@ -16,10 +16,13 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scaler import (
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import logreg_weights_sql, train_logreg
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round, r6
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_scoring import (
     _FV_SQL,
+    _default_booster,
+    _fold_splits,
     _logreg_fv,
+    _weight_rows,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import memo
@@ -85,21 +88,19 @@ def q_logreg_train_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
         w, _n = train_logreg(_logreg_fv(spark, sf_dir), scales=stats)
         return w
 
-    w = memo(spark, sf_dir, "logreg_scaled", build)
-    names = ["bias"] + list(SCORE_FEATURES)
-    return spark.createDataFrame(
-        [(m, r6(w[m])) for m in names], "feature string, weight double"
-    )
+    return _weight_rows(spark, memo(spark, sf_dir, "logreg_scaled", build))
 
 
 # --- patience-k early stopping on holdout AUC ---------------------------------
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (  # noqa: E402
-    GBT_ETA,
     _rank_sum_aucs,
     early_stop_decision_auc,
+    early_stop_frame,
     gbt_early_stop_auc_sql,
-    tree_logit_raw,
+    partial_logits,
+    selection_frame,
+    train_gbt_grid,
 )
 
 #: patience window at test scale — the reference's
@@ -129,15 +130,8 @@ def q_gbt_early_stop_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     round6 ladder in the driver, identically to the oracle's
     last-improving-round window form. The booster is
     q_gbt_early_stop's (catalog_scoring._default_booster)."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_scoring import (
-        _default_booster,
-        _fold_splits,
-    )
-
     _tr, va = _fold_splits(spark, sf_dir)
-    zs = [F.lit(0.0)]
-    for tr_ in _default_booster(spark, sf_dir):
-        zs.append(zs[-1] + F.lit(float(GBT_ETA)) * tree_logit_raw(tr_))
+    zs = partial_logits(_default_booster(spark, sf_dir))
     staged = va.select(
         "label",
         F.lit(1).alias("__cnt"),
@@ -152,13 +146,8 @@ def q_gbt_early_stop_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     by_round = _rank_sum_aucs(scored, ("round",))
     aucs = [by_round[(t,)] for t in range(len(zs))]
-    stop_at, best_round = early_stop_decision_auc(aucs, ES_PATIENCE)
-    out = [
-        (t, aucs[t], 1 if t <= stop_at else 0, 1 if t == best_round else 0)
-        for t in range(len(aucs))
-    ]
-    return spark.createDataFrame(
-        out, "round int, val_auc double, reached int, is_best int"
+    return early_stop_frame(
+        spark, "val_auc", aucs, *early_stop_decision_auc(aucs, ES_PATIENCE)
     )
 
 
@@ -168,10 +157,24 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import ( 
     gbt_random_search_sql,
     grid_holdout_aucs,
     sampled_search_configs,
-    train_gbt_grid_deep,
+    sampled_search_configs_full,
 )
 
 RS_CONFIGS = sampled_search_configs()
+
+
+def _random_search(spark: SparkSession, sf_dir: str, key: str, configs) -> DataFrame:
+    """A sampled study's selection: every trial fit by the fused grid
+    trainer on the hash-split train fold, holdout rank-sum AUCs from
+    one stacked scan (grid_holdout_aucs, memoized under ``key``), and
+    is_best = (val_auc DESC, trial id)."""
+
+    def build():
+        tr, va = _fold_splits(spark, sf_dir)
+        return grid_holdout_aucs(va, train_gbt_grid(tr, configs), configs)
+
+    aucs = memo(spark, sf_dir, key, build)
+    return selection_frame(spark, configs, [("val_auc", aucs)], desc=True)
 
 
 @query(
@@ -185,7 +188,7 @@ def q_gbt_random_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic random search: 8 trials whose per-dimension draws
     are md5 buckets of "trial-<i>#<param>" (RNG-free, append-stable;
     sampled_search_configs), swept over rounds/eta/λ/depth and fit by
-    the FUSED deep grid trainer. The fused fold's cost is
+    the FUSED grid trainer (train_gbt_grid). The fused fold's cost is
     CONFIG-WIDTH INDEPENDENT in scan count: per (round, level) ONE
     shared stacked aggregate carries every active trial (job-count
     law pinned in tests/test_gbt_deep.py — 8 trials schedule exactly
@@ -199,35 +202,10 @@ def q_gbt_random_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth-3 trials are out of the gated domain on the toy sf0.001
     frame's 80% fold (gated ValueError on both engines); the
     correctness gate (sf0.01) and bench (sf0.1) are in-domain."""
-    def build():
-        from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_scoring import _fold_splits
-
-        tr, va = _fold_splits(spark, sf_dir)
-        trees_all = train_gbt_grid_deep(tr, configs=RS_CONFIGS)
-        return grid_holdout_aucs(va, trees_all, RS_CONFIGS)
-
-    aucs = memo(spark, sf_dir, "gbt_random_search", build)
-    best = 0
-    for i in range(1, len(RS_CONFIGS)):
-        if aucs[i] > aucs[best]:
-            best = i
-    out = [
-        (name, rounds, eta, lam, depth, aucs[i], 1 if i == best else 0)
-        for i, (name, rounds, eta, lam, depth) in enumerate(RS_CONFIGS)
-    ]
-    return spark.createDataFrame(
-        out,
-        "config string, rounds int, eta double, lam double, depth int, "
-        "val_auc double, is_best int",
-    )
+    return _random_search(spark, sf_dir, "gbt_random_search", RS_CONFIGS)
 
 
 # --- FULL-space sampled search (all nine study dimensions per trial) -------------
-
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (  # noqa: E402
-    sampled_search_configs_full,
-    train_gbt_grid_full,
-)
 
 RS_FULL_CONFIGS = sampled_search_configs_full()
 
@@ -244,7 +222,7 @@ def q_gbt_random_search_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     reg_lambda, max_depth, subsample, colsample_bytree,
     min_child_weight, reg_alpha, scale_pos_weight) from md5 buckets
     of "trial-<i>#<param>" and fits through ONE fused fold
-    (train_gbt_grid_full): per (round, level) a single stacked
+    (train_gbt_grid): per (round, level) a single stacked
     aggregate carries every active trial — subsample rides as ONE
     shared per-round hash column with per-trial thresholds, colsample
     as per-trial plan-time stack entries, scale_pos_weight inside
@@ -258,38 +236,15 @@ def q_gbt_random_search_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     Domain note: depth-3 trials are outside the gated domain on the
     toy sf0.001 frame (ValueError on both engines); the correctness
     gate (sf0.01) and bench (sf0.1) are in-domain."""
-    def build():
-        from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_scoring import _fold_splits
-
-        tr, va = _fold_splits(spark, sf_dir)
-        trees_all = train_gbt_grid_full(tr, configs=RS_FULL_CONFIGS)
-        return grid_holdout_aucs(va, trees_all, RS_FULL_CONFIGS)
-
-    aucs = memo(spark, sf_dir, "gbt_random_search_full", build)
-    best = 0
-    for i in range(1, len(RS_FULL_CONFIGS)):
-        if aucs[i] > aucs[best]:
-            best = i
-    out = [
-        (nm, rounds, eta, lam, depth, sub, csam, mcw, alpha, spw,
-         aucs[i], 1 if i == best else 0)
-        for i, (nm, rounds, eta, lam, depth, sub, csam, mcw, alpha, spw)
-        in enumerate(RS_FULL_CONFIGS)
-    ]
-    return spark.createDataFrame(
-        out,
-        "config string, rounds int, eta double, lam double, depth int, "
-        "subsample double, colsample double, min_child_weight double, "
-        "reg_alpha double, pos_weight double, val_auc double, is_best int",
-    )
+    return _random_search(spark, sf_dir, "gbt_random_search_full", RS_FULL_CONFIGS)
 
 
 # --- CV over the full space: the study's exact trial x fold objective ------------
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_cv import (  # noqa: E402
     CV_FULL_TRIALS,
-    cv_mean,
-    gbt_cv_fold_aucs_full,
+    cv_scores,
+    gbt_cv_fold_aucs,
     gbt_cv_selection_sql,
 )
 
@@ -311,8 +266,8 @@ def q_model_selection_cv_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's actual objective, 3-fold cross-validated ROC AUC
     (`fraud_detector.py:249-271`: the trial dict feeds
     cross_val_score(cv=3, scoring='roc_auc').mean()). Composition of
-    two proven folds: per fold the fused FULL-space trainer
-    (train_gbt_grid_full) fits all 4 trials on the complement —
+    two proven folds: per fold the fused trainer (the CV scorer
+    gbt_cv_fold_aucs) fits all 4 trials on the complement —
     subsample/colsample/scale_pos_weight/mcw/L1 riding the shared
     per-(round, level) scan — then ONE stacked scan per fold and one
     rank-sum aggregate yield all 12 (fold, trial) AUCs; per trial the
@@ -323,31 +278,9 @@ def q_model_selection_cv_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-domain."""
     aucs = memo(
         spark, sf_dir, "gbt_cv_full",
-        lambda: gbt_cv_fold_aucs_full(_logreg_fv(spark, sf_dir), CV_FULL_CONFIGS),
+        lambda: gbt_cv_fold_aucs(_logreg_fv(spark, sf_dir), CV_FULL_CONFIGS),
     )
-    means = [cv_mean(a) for a in aucs]
-    best = 0
-    for i in range(1, len(CV_FULL_CONFIGS)):
-        if means[i] > means[best] or (
-            means[i] == means[best]
-            and CV_FULL_CONFIGS[i][0] < CV_FULL_CONFIGS[best][0]
-        ):
-            best = i
-    out = [
-        (nm, rounds, eta, lam, depth, sub, csam, mcw, alpha, spw,
-         aucs[i][0], aucs[i][1], aucs[i][2], means[i],
-         1 if i == best else 0)
-        for i, (nm, rounds, eta, lam, depth, sub, csam, mcw, alpha, spw)
-        in enumerate(CV_FULL_CONFIGS)
-    ]
-    return spark.createDataFrame(
-        out,
-        "config string, rounds int, eta double, lam double, depth int, "
-        "subsample double, colsample double, min_child_weight double, "
-        "reg_alpha double, pos_weight double, "
-        "auc_fold0 double, auc_fold1 double, auc_fold2 double, "
-        "cv_auc double, is_best int",
-    )
+    return selection_frame(spark, CV_FULL_CONFIGS, cv_scores(aucs), desc=True)
 
 
 # --- pre-scoring validation gate -------------------------------------------------

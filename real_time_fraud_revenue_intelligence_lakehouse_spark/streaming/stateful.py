@@ -67,6 +67,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
+
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
@@ -837,9 +839,7 @@ def hll_rho_cols(events: DataFrame, key_col: str = "user_id") -> DataFrame:
     q_hll_registers md5-60 construction — 8 index bits, string-search
     leading-zero rank of the 52-bit tail — as Catalyst expressions, so
     only (shard, idx, r) triples cross Arrow into the state op."""
-    h = F.expr(
-        f"conv(substr(md5(cast({key_col} as string)), 1, 15), 16, 10)"
-    ).cast("long")
+    h = hash60(F.col(key_col).cast("string"))
     return events.select(h.alias("h")).select(
         F.expr("shiftright(h, 52)").alias("idx"),
         F.expr(

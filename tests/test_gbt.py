@@ -317,6 +317,38 @@ def test_grid_fold_matches_sequential_fold_bit_exactly(spark):
         assert fused[i] == seq, f"config {i} diverged from sequential fold"
 
 
+def test_selection_tie_breaks_on_config_id_in_both_directions(spark):
+    """selection_frame's best-config rule with a planted tie, for an
+    ascending score (log-loss) and a descending one (AUC): the smaller
+    config id wins — listed second, so index order cannot stand in for
+    the rule, and the smallest id overall has the worst score, so the
+    score still ranks first. The oracle twin (_selection_sql's
+    ``ORDER BY {rank}, config``) picks the same row and writes the
+    same columns."""
+    import duckdb
+
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
+        _selection_sql,
+        selection_frame,
+    )
+
+    configs = (("c2", 3, 0.3, 1.0), ("c1", 2, 0.3, 1.0), ("c0", 3, 0.1, 1.0))
+    for col, vals, desc in (
+        ("val_logloss", [0.61, 0.61, 0.70], False),
+        ("val_auc", [0.74, 0.74, 0.52], True),
+    ):
+        frame = selection_frame(spark, configs, [(col, vals)], desc=desc)
+        got = {r["config"]: r["is_best"] for r in frame.collect()}
+        assert got == {"c2": 0, "c1": 1, "c0": 0}, (col, got)
+        sql = _selection_sql(
+            [], configs, [(col, [repr(v) for v in vals])],
+            f"{col} DESC" if desc else col,
+        )
+        res = duckdb.connect().execute(sql)
+        assert [d[0] for d in res.description] == frame.columns
+        assert {r[0]: r[-1] for r in res.fetchall()} == got
+
+
 def test_early_stop_decision_rule():
     """The patience-1 rule, pinned: stop at the first non-improving
     round; best = argmin among reached rounds, earliest on ties."""

@@ -36,15 +36,13 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
     GBT_ETA,
     GBT_LAMBDA,
     GBT_ROUNDS,
-    train_gbt,
-)
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
     _argmax_split_sub,
     _leaf_w,
     col_subset,
-    train_gbt_deep,
-    train_gbt_grid_deep,
+    train_gbt,
+    train_gbt_grid,
 )
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import train_gbt_deep
 
 
 def _h60(s: str) -> int:
@@ -242,7 +240,7 @@ def test_fused_deep_grid_matches_sequential(spark):
         ("b_d3", 2, 0.3, 1.0, 3),
         ("c_d3_e01", 1, 0.1, 1.0, 3),
     )
-    grid = train_gbt_grid_deep(df, configs=configs, features=FEATS, scales={})
+    grid = train_gbt_grid(df, configs=configs, features=FEATS, scales={})
     for i, (_n, r, e, lam, d) in enumerate(configs):
         seq = train_gbt_deep(
             df, features=FEATS, scales={}, rounds=r, eta=e, lam=lam, depth=d
@@ -349,7 +347,7 @@ def test_zero_regularization_is_the_identity(spark):
 
 
 def test_thr_is_exact_integer_soft_threshold():
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import _thr
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import _thr
 
     assert _thr(1_000_000, 500_000) == 500_000
     assert _thr(-1_000_000, 500_000) == -500_000
@@ -453,7 +451,7 @@ def test_fused_grid_job_count_is_config_width_independent(spark):
     def jobs_for(configs, group):
         sc.setJobGroup(group, group)
         try:
-            train_gbt_grid_deep(df, configs=configs, features=FEATS, scales={})
+            train_gbt_grid(df, configs=configs, features=FEATS, scales={})
         finally:
             sc.setJobGroup(None, None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
@@ -491,7 +489,6 @@ def test_random_search_winner_matches_independent_sweep(spark):
         grid_holdout_aucs,
         sampled_search_configs,
         train_gbt_deep,
-        train_gbt_grid_deep,
     )
 
     cfgs = sampled_search_configs()
@@ -505,7 +502,7 @@ def test_random_search_winner_matches_independent_sweep(spark):
     b = hash60(F.col("o_orderkey").cast("string")) % 100
     tr, va = df.filter(b < 80), df.filter(b >= 80)
 
-    fused = train_gbt_grid_deep(tr, configs=cfgs, features=FEATS, scales={})
+    fused = train_gbt_grid(tr, configs=cfgs, features=FEATS, scales={})
     got = grid_holdout_aucs(va, fused, cfgs, features=FEATS, scales={})
 
     # independent: sequential fits + NumPy AUC on the holdout fold
@@ -546,7 +543,7 @@ def test_depth4_fit_matches_numpy_replay_bit_exactly(spark):
         assert len(t["splits"]) == 15 and len(t["leaves"]) == 16
 
 
-# --- FULL-space sampled search (train_gbt_grid_full) ----------------------------
+# --- FULL-space sampled search (train_gbt_grid over nine-axis trials) ------------
 
 
 def test_full_sampler_is_bit_stable_and_sweeps_every_dimension():
@@ -602,14 +599,11 @@ def test_fused_full_grid_matches_sequential(spark):
     """Every sampled full-space trial fit by the fused fold is
     bit-identical to the sequential train_gbt_deep with the same nine
     axes — the law that lets the oracle unroll sequential chains."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
-        sampled_search_configs_full,
-        train_gbt_grid_full,
-    )
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import sampled_search_configs_full
 
     cfgs = sampled_search_configs_full()
     df, *_ = _frame(spark, n=1200, seed=19)
-    fused = train_gbt_grid_full(df, configs=cfgs, features=FEATS, scales={})
+    fused = train_gbt_grid(df, configs=cfgs, features=FEATS, scales={})
     for i, (_n, r, e, lam, d, sub, cs, mcw, a, spw) in enumerate(cfgs):
         seq = train_gbt_deep(
             df, features=FEATS, scales={}, rounds=r, eta=e, lam=lam,
@@ -628,10 +622,7 @@ def test_fused_full_grid_job_count_is_config_width_independent(spark):
     trials with the same (rounds, depth) envelope — the stochastic
     axes ride the shared scan (one hash column + a post-stack filter),
     never add one."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
-        sampled_search_configs_full,
-        train_gbt_grid_full,
-    )
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import sampled_search_configs_full
 
     df, *_ = _frame(spark, n=1200, seed=19)
     sc = spark.sparkContext
@@ -639,7 +630,7 @@ def test_fused_full_grid_job_count_is_config_width_independent(spark):
     def jobs_for(configs, group):
         sc.setJobGroup(group, group)
         try:
-            train_gbt_grid_full(df, configs=configs, features=FEATS, scales={})
+            train_gbt_grid(df, configs=configs, features=FEATS, scales={})
         finally:
             sc.setJobGroup(None, None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
@@ -669,7 +660,7 @@ def test_cv_full_fold_aucs_match_independent_replay(spark):
     train_gbt_deep per (fold, trial) (bit-identical to the fused fold
     by the full-grid law), NumPy deep-tree walk for the holdout
     scores, NumPy rank-sum AUC. Must agree bit-for-bit."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_cv import gbt_cv_fold_aucs_full
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_cv import gbt_cv_fold_aucs
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import sampled_search_configs_full
 
     cfgs = sampled_search_configs_full()[:4]
@@ -678,7 +669,7 @@ def test_cv_full_fold_aucs_match_independent_replay(spark):
         assert len({c[idx] for c in cfgs}) > 1, f"dimension {idx} constant"
 
     df, X, y, ids = _frame(spark, n=1500, seed=29)
-    got = gbt_cv_fold_aucs_full(df, configs=cfgs, features=FEATS, scales={})
+    got = gbt_cv_fold_aucs(df, configs=cfgs, features=FEATS, scales={})
 
     folds = 3
     fold = np.array([_h60(str(i)) % folds for i in ids])
@@ -747,20 +738,13 @@ def test_sampled_study_identities_are_pinned_literally():
 
 def test_fold_fused_cv_trainers_match_per_fold_loop(spark):
     """r17: the CV fold loop is fused into ONE stacked aggregate per
-    (round, level) (train_gbt_grid_cv / train_gbt_grid_full_cv); the
+    (round, level) (train_gbt_grid_cv, any grid width); the
     trees must be bit-identical to training each fold's complement
     separately through the single-fold fused trainers — splits, gains
     AND leaf doubles."""
     from pyspark.sql import functions as F
 
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import train_gbt_grid
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_cv import (
-        train_gbt_grid_cv,
-        train_gbt_grid_full_cv,
-    )
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
-        train_gbt_grid_full,
-    )
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_cv import train_gbt_grid_cv
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
 
     df, *_ = _frame(spark, n=1200, seed=19)
@@ -781,9 +765,9 @@ def test_fold_fused_cv_trainers_match_per_fold_loop(spark):
         ("f1", 1, 0.2, 1.0, 3, 1.0, 1.0, 0.0, 0.0, 1.0),
         ("f2", 2, 0.4, 0.5, 2, 0.85, 1.0, 0.0, 0.5, 5.0),
     )
-    fusedF = train_gbt_grid_full_cv(df, fold_col, cfgsF, features=FEATS, scales={})
+    fusedF = train_gbt_grid_cv(df, fold_col, cfgsF, features=FEATS, scales={})
     for f in range(3):
-        seqF = train_gbt_grid_full(
+        seqF = train_gbt_grid(
             df.filter(fold_col != f), configs=cfgsF, features=FEATS, scales={}
         )
         assert fusedF[f] == seqF, f"full-space fold {f} diverged"

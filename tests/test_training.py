@@ -354,10 +354,10 @@ def test_weighted_fold_matches_numpy_replay_exactly(spark):
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import scale_pos_weight
 
     df, X, y = _imbalanced_df(spark)
-    pw, n_eff = scale_pos_weight(df)
+    pw, _n_eff = scale_pos_weight(df)
     assert pw == float((y == 0).sum()) / float((y == 1).sum())
     w, n = train_logreg(
-        df, features=("x1",), lr=1.0, iters=5, scales={}, pos_weight=pw, n_eff=n_eff
+        df, features=("x1",), lr=1.0, iters=5, scales={}, weighted=True
     )
     want = numpy_replay_weighted(X, y, ("x1",), 1.0, 5, pw, scales={})
     assert [w["bias"], w["x1"]] == list(want)  # bit-identical
@@ -371,8 +371,6 @@ def test_weighting_recovers_imbalanced_boundary_unweighted_does_not(spark):
     all of them."""
     import math
 
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import scale_pos_weight
-
     df, X, y = _imbalanced_df(spark)
 
     def recall(w):
@@ -382,9 +380,8 @@ def test_weighting_recovers_imbalanced_boundary_unweighted_does_not(spark):
         return tp / int((y == 1).sum())
 
     w_plain, _ = train_logreg(df, features=("x1",), lr=1.0, iters=5, scales={})
-    pw, n_eff = scale_pos_weight(df)
     w_wtd, _ = train_logreg(
-        df, features=("x1",), lr=1.0, iters=5, scales={}, pos_weight=pw, n_eff=n_eff
+        df, features=("x1",), lr=1.0, iters=5, scales={}, weighted=True
     )
     assert recall(w_plain) < 0.2, (recall(w_plain), w_plain)
     assert recall(w_wtd) > 0.8, (recall(w_wtd), w_wtd)
@@ -553,7 +550,6 @@ def test_fused_grid_descent_equals_sequential_folds(spark):
     train_logreg calls — the fusion only shares scans, never
     arithmetic."""
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import (
-        scale_pos_weight,
         train_logreg_grid,
     )
 
@@ -566,12 +562,8 @@ def test_fused_grid_descent_equals_sequential_folds(spark):
     )
     fused = train_logreg_grid(df, configs, features=("x1",), scales={})
     for i, (_name, lr, iters, weighted) in enumerate(configs):
-        if weighted:
-            pw, n_eff = scale_pos_weight(df)
-            w, _ = train_logreg(
-                df, features=("x1",), lr=lr, iters=iters, scales={},
-                pos_weight=pw, n_eff=n_eff,
-            )
-        else:
-            w, _ = train_logreg(df, features=("x1",), lr=lr, iters=iters, scales={})
+        w, _ = train_logreg(
+            df, features=("x1",), lr=lr, iters=iters, scales={},
+            weighted=bool(weighted),
+        )
         assert fused[i] == w, configs[i]
