@@ -28,7 +28,11 @@ from pyspark.sql import functions as F
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import (
     LSH_BANDS,
     MINHASH_K,
+    NORM,
+    SHINGLES,
+    SIG_COLS,
     SIMHASH_BITS,
+    TOKS,
     fingerprint,
     hash60,
     norm_text,
@@ -171,6 +175,31 @@ def lsh_candidates(
         .select("id_a", "id_b")
         .distinct()
     )
+
+
+def _bands_sql() -> str:
+    r = MINHASH_K // LSH_BANDS
+    parts = []
+    for b in range(LSH_BANDS):
+        key = " || ',' || ".join(f"mh{b * r + i}::VARCHAR" for i in range(r))
+        parts.append(
+            f"SELECT doc_id, toks, {b} AS band_idx, {key} AS band_key FROM sig"
+        )
+    return " UNION ALL ".join(parts)
+
+
+#: DuckDB twin of :func:`lsh_candidates` (uncapped) over ``documents``:
+#: CTEs t (tokens), sh (distinct tokens + shingles), sig (MinHash),
+#: bands, and cand (id_a < id_b).
+LSH_CANDIDATES_SQL = f"""t AS (SELECT doc_id, {TOKS.format(c=NORM.format(c='text'))} AS toks FROM documents),
+    sh AS (SELECT doc_id, list_distinct(toks) AS toks, {SHINGLES.format(t='toks')} AS sh FROM t),
+    sig AS (SELECT doc_id, toks, {SIG_COLS} FROM sh),
+    bands AS ({_bands_sql()}),
+    cand AS (
+      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM bands a JOIN bands b
+        ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id
+    )"""
 
 
 def minhash_lsh_pairs(
@@ -434,6 +463,31 @@ def connected_components_star(
         "cluster_id", F.col("node")
     )
     return members.unionByName(roots).distinct()
+
+
+#: DuckDB twin of :func:`dup_clusters`' labels (needs WITH RECURSIVE):
+#: :data:`LSH_CANDIDATES_SQL`, Jaccard ≥ 0.5 verification, and a
+#: recursive reachability closure; ``labels (node, cluster_id)``.
+DUP_LABELS_SQL = f"""{LSH_CANDIDATES_SQL},
+    verified AS (
+      SELECT id_a, id_b FROM cand
+      JOIN sh ta ON ta.doc_id = id_a
+      JOIN sh tb ON tb.doc_id = id_b
+      WHERE len(list_intersect(ta.toks, tb.toks))
+              / greatest(len(list_distinct(ta.toks || tb.toks)), 1) >= 0.5
+    ),
+    edges AS (
+      SELECT id_a AS src, id_b AS dst FROM verified
+      UNION ALL
+      SELECT id_b AS src, id_a AS dst FROM verified
+    ),
+    nodes AS (SELECT DISTINCT src AS node FROM edges),
+    comp(node, lbl) AS (
+      SELECT node, node FROM nodes
+      UNION
+      SELECT e.dst, c.lbl FROM comp c JOIN edges e ON e.src = c.node
+    ),
+    labels AS (SELECT node, min(lbl) AS cluster_id FROM comp GROUP BY node)"""
 
 
 def dup_clusters(

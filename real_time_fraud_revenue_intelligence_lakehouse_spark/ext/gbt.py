@@ -34,11 +34,12 @@ pipeline, so this module fits it as Spark aggregates:
   persisted ``__f_<m>`` column, so no plan holds more than one tree
   cascade per model.
 
-Every public trainer — :func:`train_gbt`, :func:`train_gbt_grid` (any
-4-, 5- or nine-axis grid), ext/gbt_deep's ``train_gbt_deep`` and
-ext/gbt_cv's ``train_gbt_grid_cv`` — is a thin mapping of its
-arguments onto engine models, and every one returns the engine's heap
-trees as they come. One node recursion reads them:
+Every trainer — :func:`train_gbt`, :func:`train_gbt_grid` (any 4-,
+5- or nine-axis grid), ext/gbt_deep's ``train_gbt_deep`` and the
+k-fold models of ext/gbt_cv's ``gbt_cv_fold_aucs`` (:func:`_fit` with
+a fold column: one model per (fold, config)) — is a thin mapping of
+its arguments onto engine models, and every one returns the engine's
+heap trees as they come. One node recursion reads them:
 :func:`tree_logit_raw` (raw feature columns, the serving form),
 :func:`partial_logits` / :func:`gbt_trained_logit_expr` (its
 ensemble, per round or whole) and :func:`deep_tree_logit_on_bins` (the

@@ -10,13 +10,14 @@ closes that gap on ext/gbt.py's one boosting engine:
 - **Folds**: ``hash60(o_orderkey) % 3`` — q_kfold's deterministic
   assignment (disjoint + exhaustive by construction, RNG-free,
   append-stable).
-- **Training**: every (fold, config) pair is one engine model over
-  ONE compressed (label, fold, bins) frame; per (round, level) one
-  stacked aggregate carries them all and a post-stack
-  ``fold != __fold`` filter keeps each model's complement rows, so
-  the trees are bit-identical to training each fold separately
-  (law-pinned in tests/test_gbt_deep.py).
-- **Scoring** (:func:`_cv_fold_aucs`): the same frame, persisted,
+- **Training** (:func:`gbt_cv_fold_aucs`): every (fold, config) pair
+  is one engine model over ONE compressed (label, fold, bins) frame;
+  per (round, level) one stacked aggregate carries them all and a
+  post-stack ``fold != __fold`` filter keeps each model's complement
+  rows, so the trees are bit-identical to training each fold
+  separately (ext/gbt._fit with a fold column, law-pinned in
+  tests/test_gbt_deep.py).
+- **Scoring**: the same frame, persisted,
   feeds the holdout scorer — per fold every config's sigmoid is a
   staged column stacked long, and one (fold, cfg, s) score-group
   aggregate counts Σ __cnt / Σ __cnt·label over the distinct vectors.
@@ -47,7 +48,7 @@ reproduced, execution re-architected.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
@@ -57,7 +58,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
     _binned_frame,
     _cfg,
     _descend,
-    _fit,
     _models,
     _rank_sum_aucs,
     _selection_sql,
@@ -73,28 +73,6 @@ CV_FOLDS = 3
 #: An order's fold, DuckDB side: hash60(o_orderkey) mod ``folds``, the
 #: engine's ``pmod(hash60(o_orderkey), folds)``.
 _H60_FOLD = H60_SQL.format(x="o_orderkey::VARCHAR") + " % {folds}"
-
-
-def train_gbt_grid_cv(
-    fv: DataFrame,
-    fold_col: Column,
-    configs=GBT_MS_CONFIGS,
-    folds: int = CV_FOLDS,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    bins: int = GBT_BINS,
-    label: str = "label",
-    scales: dict[str, float] | None = None,
-) -> list[list[list[dict]]]:
-    """Fit EVERY (fold, config) model — any 4-, 5- or nine-axis grid —
-    in max(rounds)·max(depth) shared scans: model (f, c) sums the
-    identical integer micros over the identical rows as
-    ``train_gbt_grid(fv.filter(fold_col != f))``, so the trees are
-    bit-identical to the per-fold loop (law-pinned). Returns
-    ``trees[fold][cfg]``."""
-    k = len(configs)
-    trees = _fit(fv, [_cfg(*c) for c in configs], features, bins, label,
-                 scales, fold_col, folds)
-    return [trees[f * k:(f + 1) * k] for f in range(folds)]
 
 
 def gbt_cv_fold_aucs(

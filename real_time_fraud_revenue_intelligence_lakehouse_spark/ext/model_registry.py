@@ -9,8 +9,8 @@ object — so the registry stores them as versioned JSON documents with
 the same commit discipline sources/versioned.py uses for tables:
 
 - **Atomic commit**: the document is FULLY written under a temp name
-  first, then committed via `os.link` (put-if-absent hard link, the
-  same primitive sources/versioned.py write_version uses) — the
+  first, then committed via `os.link` (put-if-absent hard link,
+  sources/versioned.commit_json, the primitive table commits use) — the
   version name exists only once the bytes behind it are complete, so
   a reader never sees a half-written model and a crash mid-publish
   leaves only an unreferenced temp file, never a committed-looking
@@ -41,9 +41,10 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import time
 import uuid
+
+from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.versioned import commit_json, json_versions
 
 
 class ModelExistsError(RuntimeError):
@@ -58,21 +59,7 @@ def _doc_path(path: str, version: int) -> str:
 def list_models(path: str) -> list[int]:
     """Committed version numbers, ascending. Strict name match: a
     stray file in the registry directory must not brick every load."""
-    if not os.path.isdir(path):
-        return []
-    out = []
-    for name in os.listdir(path):
-        # (\d{6}|[1-9]\d{6,}): exactly the names _doc_path's :06d
-        # padding can produce — 6 digits zero-padded, or 7+ digits
-        # with no leading zero (version 1,000,000 stays visible, per
-        # ADVICE r13). A non-canonical zero-padded 7-digit name like
-        # v0000007.json is NOT listed: it would report version 7 while
-        # _doc_path resolves 7 to v000007.json, so load_model(7) on a
-        # listed version would raise FileNotFoundError (ADVICE r14).
-        m = re.fullmatch(r"v(\d{6}|[1-9]\d{6,})\.json", name)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+    return json_versions(path)
 
 
 def save_model(
@@ -103,30 +90,17 @@ def save_model(
         "committed_at": time.time(),
     }
     tmp = os.path.join(path, f"_tmp_{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as fh:
-        json.dump(doc, fh, indent=1)
-    target = _doc_path(path, version)
-    # Put-if-absent commit: the fully-written temp document becomes
-    # the version via a hard link — one atomic syscall that both
-    # claims the slot and publishes complete bytes (mirrors
-    # sources/versioned.py write_version). A pre-claim O_CREAT|O_EXCL
-    # would expose an empty committed-looking file between claim and
-    # publish (ADVICE r13); link cannot.
+    # Put-if-absent commit (sources/versioned.commit_json, which also
+    # removes the temp document on every exit path). A pre-claim
+    # O_CREAT|O_EXCL would expose an empty committed-looking file
+    # between claim and publish (ADVICE r13); link cannot. Crashes
+    # before the remove are covered by _sweep_stale_tmps on the next save.
     try:
-        os.link(tmp, target)
+        commit_json(doc, tmp, _doc_path(path, version), indent=1)
     except FileExistsError as e:
         raise ModelExistsError(
             f"version {version} already committed at {path}"
         ) from e
-    finally:
-        # The temp name is garbage the moment link() returns OR
-        # raises — remove it on every exit path so a lost race can't
-        # leave an orphan (ADVICE r14); crashes BETWEEN write and
-        # here are covered by _sweep_stale_tmps on the next save.
-        try:
-            os.remove(tmp)
-        except FileNotFoundError:
-            pass
     return version
 
 

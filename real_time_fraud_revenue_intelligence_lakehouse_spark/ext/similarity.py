@@ -41,6 +41,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round, det_round_sql
+
 #: Multi-table LSH geometry: L tables of r planes each. A table's
 #: bucket must match on ALL r sign bits (AND); a candidate needs to
 #: match in ANY table (OR) — the classic amplification that trades
@@ -87,6 +89,38 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+#: DuckDB twins (oracle SQL text): :func:`as_double` of the list ``v``
+#: and :func:`cosine` of the lists ``a`` and ``b``.
+DBL_SQL = "list_transform({v}, x -> x::DOUBLE)"
+COS_SQL = (
+    "list_dot_product({a}, {b}) / "
+    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
+)
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """Keep each query's ``k`` best rows of ``scored`` (query_id,
+    match_id, cosine_sim): similarity descending, match id ascending,
+    numbered by ``rank``. :func:`topk_sql` is the SQL twin."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("match_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "match_id", "cosine_sim", "rank")
+    )
+
+
+def topk_sql(k: int) -> str:
+    """DuckDB twin of :func:`_topk` over a ``scored`` CTE; top-1 keeps
+    no rank column."""
+    rank, cols, keep = ("rn", "", "rn = 1") if k == 1 else ("rank", ", rank", f"rank <= {k}")
+    return f"""SELECT query_id, match_id, cosine_sim{cols} FROM (
+      SELECT *, row_number() OVER (
+        PARTITION BY query_id ORDER BY cosine_sim DESC, match_id
+      ) AS {rank} FROM scored
+    ) WHERE {keep}"""
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -109,8 +143,6 @@ def brute_force_topk(
     ``defaultParallelism`` first (a one-file panel corpus otherwise
     scans as one split); pair values are row-local and det-rounded
     before ranking, so results are layout-free, bit-identical."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
-
     # Norms projected once per side: the O(|Q|·n) stage then runs ONE
     # fold per pair (dot) instead of three — algebraically identical
     # to the oracle's per-pair cosine, bit-for-bit (same doubles).
@@ -134,12 +166,7 @@ def brute_force_topk(
             ).alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("match_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "match_id", "cosine_sim", "rank")
-    )
+    return _topk(scored, k)
 
 
 def unit_vectors(
@@ -179,8 +206,6 @@ def brute_force_top1(
       break to the smallest match id, same as the rank-based form.
     The plan contains no Window/Sort node (pinned in
     tests/test_plans.py)."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
-
     q = unit_vectors(queries, id_col, vec_col).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
@@ -244,8 +269,6 @@ def neardup_pairs(
     quadratic: at q_embed_neardup's 1/5 sample it ran 1.31 s against
     the JVM fold's 1.52 s (sf0.1, 6 interleaved pairs), and 9.1 s
     against 23.3 s at 2M pairs."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
-
     v = df.select(F.col(id_col), as_double(F.col(vec_col)).alias("v")).select(
         id_col, "v", norm(F.col("v")).alias("nrm")
     )
@@ -263,6 +286,11 @@ def neardup_pairs(
 
 
 CENTROID_MOD = 37  # every 37th vector seeds an IVF centroid
+
+#: DuckDB twin of the centroid set over an ``e (vec_id, v)`` CTE.
+IVF_CENT_SQL = (
+    f"cent AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id % {CENTROID_MOD} = 0)"
+)
 
 
 def ivf_assignments(
@@ -285,8 +313,6 @@ def ivf_assignments(
     a median 3.88 s with it and 4.21 s with this kernel, inside the
     former's quartile spread of 3.71–4.48 s (sf0.1, local[4], 10
     interleaved pairs)."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
-
     v = vectors.select(
         F.col(id_col), as_double(F.col("embedding")).alias("v")
     ).withColumn("vn", norm(F.col("v")))
@@ -306,6 +332,37 @@ def ivf_assignments(
         .filter(F.col("crank") <= nprobe)
         .select(id_col, "centroid_id", "crank")
     )
+
+
+#: DuckDB twin of the corpus-wide :func:`ivf_assignments` pass
+#: (plans/shared_frames.ivf_corpus_cells) over an ``e`` CTE: cent,
+#: assign (every vector's centroid ranks), corpus_cells (crank = 1).
+IVF_CELLS_SQL = f"""{IVF_CENT_SQL},
+    assign AS (
+      SELECT vec_id, centroid_id, crank FROM (
+        SELECT e.vec_id, cent.centroid_id,
+               row_number() OVER (
+                 PARTITION BY e.vec_id
+                 ORDER BY {det_round_sql(COS_SQL.format(a='e.v', b='cent.cv'), 6)} DESC, cent.centroid_id
+               ) AS crank
+        FROM e, cent
+      )
+    ),
+    corpus_cells AS (SELECT vec_id AS match_id, centroid_id FROM assign WHERE crank = 1)"""
+
+
+def ivf_cand_sql(nprobe: int, n_queries: int) -> str:
+    """DuckDB twin of :func:`ivf_topk`'s candidates for the queries
+    vec_id < ``n_queries``: :data:`IVF_CELLS_SQL`, query_cells (the
+    ``nprobe`` nearest cells) and cand (query_id, match_id)."""
+    return f"""{IVF_CELLS_SQL},
+    query_cells AS (SELECT vec_id AS query_id, centroid_id FROM assign
+                    WHERE crank <= {nprobe} AND vec_id < {n_queries}),
+    cand AS (
+      SELECT DISTINCT query_id, match_id
+      FROM query_cells JOIN corpus_cells USING (centroid_id)
+      WHERE query_id <> match_id
+    )"""
 
 
 def ivf_topk(
@@ -328,8 +385,6 @@ def ivf_topk(
     centroids without touching the search. At 100 TB the corpus is
     written partitioned by centroid_id, so a query scans nprobe/|C|
     of the data — the classic IVF cost model."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
-
     centroids = corpus.filter(F.col(id_col) % centroid_mod == 0)
     if corpus_cells is None:
         # the expensive corpus-wide pass — callers sharing one
@@ -360,12 +415,7 @@ def ivf_topk(
             dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), round_digits
         ).alias("cosine_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("match_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "match_id", "cosine_sim", "rank")
-    )
+    return _topk(scored, k)
 
 
 def kmeans_centroids(
@@ -558,8 +608,6 @@ def ann_topk(
     q_ann_topk they took 1.47 s against 6.14 s for the same index and
     dots as interpreted JVM folds (sf0.1, 6 interleaved pairs, Arrow
     faster in all 6), with equal outputs."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
-
     q_idx = lsh_index_pandas(queries, id_col, vec_col, n_tables).select(
         F.col(id_col).alias("query_id"), "bucket", F.col("vn").alias("qn")
     )
@@ -591,9 +639,4 @@ def ann_topk(
             ).alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("match_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "match_id", "cosine_sim", "rank")
-    )
+    return _topk(scored, k)

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import H60_SQL, det_round
+
 # --------------------------------------------------------------------------
 # Shared constants (catalog_ext embeds the same values in oracle SQL).
 # --------------------------------------------------------------------------
@@ -63,6 +65,17 @@ def tokens(c: Column) -> Column:
 def hash60(c: Column) -> Column:
     """Portable 60-bit hash (see module docstring)."""
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
+
+
+def hll_register(h: Column) -> tuple[Column, Column]:
+    """HyperLogLog register of a :func:`hash60` column: ``(idx, r)`` =
+    its top 8 bits and the leading-zero rank of its 52-bit tail (53
+    for a zero tail), found by string search over the zero-padded
+    binary — no float log2, so every engine agrees bit for bit.
+    ``functions/scalars.HLL_REGISTER_SQL`` is the SQL twin."""
+    tail = h.bitwiseAND(F.lit(4503599627370495))
+    rank = F.locate("1", F.lpad(F.bin(tail), 52, "0"))
+    return F.shiftright(h, 52), F.when(tail == 0, 53).otherwise(rank)
 
 
 def token_count_ws(c: Column) -> Column:
@@ -240,6 +253,29 @@ def minhash_of_tokens(staged, id_col: str, toks_col: str, k: int = MINHASH_K, n:
     )
 
 
+# --------------------------------------------------------------------------
+# DuckDB twins of the tokenizer and MinHash above (oracle SQL text).
+# --------------------------------------------------------------------------
+
+#: :func:`norm_text` of the VARCHAR ``c``.
+NORM = "lower(trim(regexp_replace({c}, '\\s+', ' ', 'g')))"
+#: :func:`tokens` of the VARCHAR ``c``.
+TOKS = "regexp_split_to_array(trim({c}), '\\s+')"
+#: :func:`shingles_of` the token list ``t`` (3-grams, or the one
+#: whole-text shingle under 3 tokens).
+SHINGLES = (
+    "CASE WHEN len({t}) >= 3 THEN "
+    "list_transform(range(len({t}) - 2), i -> array_to_string(({t})[i+1:i+3], ' ')) "
+    "ELSE [array_to_string({t}, ' ')] END"
+)
+#: :func:`minhash_of_tokens`' columns mh0..mh{k-1} over a shingle-list
+#: column ``sh``: per permutation, the min of the XOR-masked shingle hashes.
+SIG_COLS = ", ".join(
+    f"list_min(list_transform(sh, s -> xor({H60_SQL.format(x='s')}, {perm_mask(j)}))) AS mh{j}"
+    for j in range(MINHASH_K)
+)
+
+
 def tfidf_top_terms(
     df, id_col: str, text_col: str, top_n: int = 3, round_digits: int = 6
 ):
@@ -259,8 +295,6 @@ def tfidf_top_terms(
     window over the doc id. At 100 TB the only large shuffle is the
     (doc, term) count; vocab-sized sides stay broadcast."""
     from pyspark.sql import Window
-
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
 
     tok = df.select(
         F.col(id_col), F.explode(tokens(norm_text(F.col(text_col)))).alias("term")
@@ -397,8 +431,6 @@ def contamination_check(
     shingles computes total and contaminated counts together — the
     corpus shingle set is scanned once, not once per count plus a
     rejoin, and corpus text is never re-attached."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
-
     def sh(d):
         # Stage tokens BEFORE shingling: higher-order functions run
         # interpreted, so shingles over a nested split(...) would

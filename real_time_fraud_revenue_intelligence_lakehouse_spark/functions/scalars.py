@@ -91,6 +91,14 @@ TWO52 = float(2**52)
 #: The first 15 hex digits (60 bits) of md5 of the VARCHAR ``x`` (SQL).
 H60_SQL = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 
+#: HyperLogLog register (idx, r) of a 60-bit hash column ``h`` (SQL):
+#: the top 8 bits, and the leading-zero rank of the 52-bit tail (53
+#: for a zero tail). ext/text.hll_register is the Spark twin.
+HLL_REGISTER_SQL = """(h >> 52) AS idx,
+             CASE WHEN (h & 4503599627370495) = 0 THEN 53
+                  ELSE strpos(lpad(bin(h & 4503599627370495), 52, '0'), '1')
+             END AS r"""
+
 #: 10**6 as a float: the fixed-point scale of 6-digit micro-unit sums.
 MICRO = 1_000_000.0
 

@@ -15,10 +15,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60, hll_register
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
     H52_SQL,
     H60_SQL,
+    HLL_REGISTER_SQL,
     R4_SQL,
     R6_SQL,
     R8_SQL,
@@ -1152,14 +1153,8 @@ def hll_day_registers(events: DataFrame) -> DataFrame:
         F.to_date("ts").alias("day"),
         hash60(F.col("user_id").cast("string")).alias("h"),
     )
-    rho = h.select(
-        "day",
-        F.expr("shiftright(h, 52)").alias("idx"),
-        F.expr(
-            "CASE WHEN (h & 4503599627370495) = 0 THEN 53 "
-            "ELSE locate('1', lpad(bin(h & 4503599627370495), 52, '0')) END"
-        ).alias("r"),
-    )
+    idx, r = hll_register(F.col("h"))
+    rho = h.select("day", idx.alias("idx"), r.alias("r"))
     return rho.groupBy("day", "idx").agg(F.max("r").alias("m_j"))
 
 
@@ -1192,10 +1187,7 @@ def hll_estimate(merged: DataFrame, group_cols: list[str]) -> DataFrame:
       SELECT CAST(ts AS DATE) AS day, {_UHLL_H_DUCK} AS h FROM events
     ),
     rho AS (
-      SELECT day, (h >> 52) AS idx,
-             CASE WHEN (h & 4503599627370495) = 0 THEN 53
-                  ELSE strpos(lpad(bin(h & 4503599627370495), 52, '0'), '1')
-             END AS r
+      SELECT day, {HLL_REGISTER_SQL}
       FROM h
     ),
     dreg AS (SELECT day, idx, max(r) AS m_j FROM rho GROUP BY 1, 2),

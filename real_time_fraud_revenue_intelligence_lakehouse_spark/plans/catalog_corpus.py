@@ -19,6 +19,9 @@ from pyspark.sql import functions as F
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import dedup as D
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import similarity as S
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import text as X
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.dedup import DUP_LABELS_SQL
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.similarity import DBL_SQL
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import NORM, SHINGLES, TOKS
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
     H60_SQL,
     R4_SQL,
@@ -26,14 +29,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars impo
     R8_SQL,
     det_round,
     det_round_sql,
-)
-from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_ext import (
-    NORM,
-    SHINGLES,
-    TOKS,
-    _bands_sql,
-    _DBL,
-    _SIG_COLS,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import (
@@ -190,36 +185,11 @@ def q_dup_ngram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- end-to-end dedup pipeline ---------------------------------------------
 
-_SURVIVORS_ORACLE = f"""
+@query(
+    "q_dedup_pipeline",
+    oracle=f"""
     WITH RECURSIVE
-    t AS (SELECT doc_id, {TOKS.format(c=NORM.format(c='text'))} AS toks FROM documents),
-    sh AS (SELECT doc_id, list_distinct(toks) AS toks, {SHINGLES.format(t='toks')} AS sh FROM t),
-    sig AS (SELECT doc_id, toks, {_SIG_COLS} FROM sh),
-    bands AS ({_bands_sql()}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-    ),
-    verified AS (
-      SELECT id_a, id_b FROM cand
-      JOIN sh ta ON ta.doc_id = id_a
-      JOIN sh tb ON tb.doc_id = id_b
-      WHERE len(list_intersect(ta.toks, tb.toks))
-              / greatest(len(list_distinct(ta.toks || tb.toks)), 1) >= 0.5
-    ),
-    edges AS (
-      SELECT id_a AS src, id_b AS dst FROM verified
-      UNION ALL
-      SELECT id_b AS src, id_a AS dst FROM verified
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    comp(node, lbl) AS (
-      SELECT node, node FROM nodes
-      UNION
-      SELECT e.dst, c.lbl FROM comp c JOIN edges e ON e.src = c.node
-    ),
-    labels AS (SELECT node, min(lbl) AS cluster_id FROM comp GROUP BY node),
+    {DUP_LABELS_SQL},
     dropped AS (SELECT node FROM labels WHERE node <> cluster_id)
     SELECT d.doc_id, d.source, d.n_chars,
            CAST(CASE WHEN l.node IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS is_cluster_rep
@@ -227,12 +197,7 @@ _SURVIVORS_ORACLE = f"""
     LEFT JOIN dropped x ON d.doc_id = x.node
     LEFT JOIN labels l ON d.doc_id = l.node AND l.node = l.cluster_id
     WHERE x.node IS NULL
-    """
-
-
-@query(
-    "q_dedup_pipeline",
-    oracle=_SURVIVORS_ORACLE,
+    """,
     tags=("ext", "dedup", "pipeline"),
 )
 def q_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -277,7 +242,7 @@ def q_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH n AS (
       SELECT label,
-             {R6_SQL.format(c=f"sqrt(list_dot_product({_DBL.format(v='embedding')}, {_DBL.format(v='embedding')}))")} AS nrm
+             {R6_SQL.format(c=f"sqrt(list_dot_product({DBL_SQL.format(v='embedding')}, {DBL_SQL.format(v='embedding')}))")} AS nrm
       FROM embeddings
     )
     SELECT label,
@@ -345,7 +310,7 @@ def q_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_knn_label_vote",
     oracle=f"""
     WITH e AS (
-      SELECT vec_id, label, {_DBL.format(v='embedding')} AS v FROM embeddings
+      SELECT vec_id, label, {DBL_SQL.format(v='embedding')} AS v FROM embeddings
     ),
     q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 50),
     scored AS (
@@ -1115,8 +1080,8 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_embed_quantize",
     oracle=f"""
     WITH s AS (
-      SELECT vec_id, {_DBL.format(v='embedding')} AS emb,
-             greatest({R8_SQL.format(c=f"list_max(list_transform({_DBL.format(v='embedding')}, x -> abs(x))) / 127.0")}, 1e-9) AS scale
+      SELECT vec_id, {DBL_SQL.format(v='embedding')} AS emb,
+             greatest({R8_SQL.format(c=f"list_max(list_transform({DBL_SQL.format(v='embedding')}, x -> abs(x))) / 127.0")}, 1e-9) AS scale
       FROM embeddings
     ),
     ex AS (

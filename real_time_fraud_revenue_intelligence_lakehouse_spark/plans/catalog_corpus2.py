@@ -29,8 +29,10 @@ from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import similarity as S
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import text as X
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.dedup import LSH_CANDIDATES_SQL
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.similarity import DBL_SQL, ivf_cand_sql
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import NORM, SHINGLES, TOKS
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import H60_SQL, R4_SQL, R6_SQL, det_round
-from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_ext import NORM, SHINGLES, TOKS, _DBL
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import (
     doc_lsh_candidates,
@@ -135,7 +137,7 @@ _SQ = (
     "q_embed_pq",
     oracle=f"""
     WITH e AS (
-      SELECT vec_id, {_DBL.format(v='embedding')} AS v FROM embeddings
+      SELECT vec_id, {DBL_SQL.format(v='embedding')} AS v FROM embeddings
     ),
     sub AS (
       SELECT vec_id, s AS sub_id,
@@ -248,35 +250,12 @@ IVFPQ_NPROBE = 2
 IVFPQ_K = 5
 IVFPQ_NQUERIES = 20  # queries = vec_id < 20 (matches the IVF tier)
 
-_COS6 = R6_SQL.format(
-    c="list_dot_product({a}, {b}) / "
-    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
-)
-
 
 @query(
     "q_ivfpq_topk",
     oracle=f"""
-    WITH e AS (SELECT vec_id, {_DBL.format(v='embedding')} AS v FROM embeddings),
-    cent AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id % {S.CENTROID_MOD} = 0),
-    assign AS (
-      SELECT vec_id, centroid_id, crank FROM (
-        SELECT e.vec_id, cent.centroid_id,
-               row_number() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY {_COS6.format(a='e.v', b='cent.cv')} DESC, cent.centroid_id
-               ) AS crank
-        FROM e, cent
-      )
-    ),
-    corpus_cells AS (SELECT vec_id AS match_id, centroid_id FROM assign WHERE crank = 1),
-    query_cells AS (SELECT vec_id AS query_id, centroid_id FROM assign
-                    WHERE crank <= {IVFPQ_NPROBE} AND vec_id < {IVFPQ_NQUERIES}),
-    cand AS (
-      SELECT DISTINCT query_id, match_id
-      FROM query_cells JOIN corpus_cells USING (centroid_id)
-      WHERE query_id <> match_id
-    ),
+    WITH e AS (SELECT vec_id, {DBL_SQL.format(v='embedding')} AS v FROM embeddings),
+    {ivf_cand_sql(IVFPQ_NPROBE, IVFPQ_NQUERIES)},
     eu AS (
       SELECT vec_id,
              list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS nv
@@ -469,7 +448,7 @@ def q_prefix_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_quantile_norm",
     oracle=f"""
     WITH e AS (
-      SELECT vec_id, {_DBL.format(v='embedding')} AS emb FROM embeddings
+      SELECT vec_id, {DBL_SQL.format(v='embedding')} AS emb FROM embeddings
     ),
     ex AS (
       SELECT vec_id, u.i AS dim, emb[u.i + 1] AS val
@@ -526,21 +505,10 @@ def q_quantile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- LSH blocker quality vs the exact tier ---------------------------------
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_ext import _bands_sql, _SIG_COLS  # noqa: E402
-
-
 @query(
     "q_lsh_quality",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {TOKS.format(c=NORM.format(c='text'))} AS toks FROM documents),
-    sh AS (SELECT doc_id, list_distinct(toks) AS toks, {SHINGLES.format(t='toks')} AS sh FROM t),
-    sig AS (SELECT doc_id, toks, {_SIG_COLS} FROM sh),
-    bands AS ({_bands_sql()}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-    ),
+    WITH {LSH_CANDIDATES_SQL},
     s AS (SELECT doc_id, list_distinct(list_transform(sh, s -> {H60_SQL.format(x='s')})) AS st FROM sh),
     exx AS (SELECT doc_id, len(st) AS sz, u.x AS shingle FROM s, unnest(st) AS u(x)),
     truth AS (
@@ -608,15 +576,7 @@ _MH_EQ = " + ".join(
 @query(
     "q_minhash_accuracy",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {TOKS.format(c=NORM.format(c='text'))} AS toks FROM documents),
-    sh AS (SELECT doc_id, list_distinct(toks) AS toks, {SHINGLES.format(t='toks')} AS sh FROM t),
-    sig AS (SELECT doc_id, toks, {_SIG_COLS} FROM sh),
-    bands AS ({_bands_sql()}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-    ),
+    WITH {LSH_CANDIDATES_SQL},
     s AS (SELECT doc_id, list_distinct(list_transform(sh, s -> {H60_SQL.format(x='s')})) AS st FROM sh),
     est AS (
       SELECT c.id_a, c.id_b,

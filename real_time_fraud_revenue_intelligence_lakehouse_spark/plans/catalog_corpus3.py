@@ -31,8 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import NORM, TOKS, hash60
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import H60_SQL, R4_SQL, R6_SQL, R8_SQL, det_round
-from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.catalog_ext import NORM, TOKS
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import (
@@ -881,23 +881,20 @@ def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # < SPAN_K tokens emits i=0 and slice(toks, 0, ...) throws
     # INVALID_PARAMETER_VALUE.START — while the DuckDB oracle's
     # range(1, n) is empty and returns normally.
-    shingle_expr = (
-        f"if(size(toks) < {SPAN_K}, "
-        f"cast(array() as array<struct<istart:int,hs:string>>), "
-        f"transform(sequence(1, size(toks) - {SPAN_K} + 1), "
-        f"i -> struct(i AS istart, "
-        f"conv(substring(md5(array_join(slice(toks, i, {SPAN_K}), ' ')), 1, 15), 16, 10) AS hs)))"
+    toks = F.col("toks")
+    shingles = F.transform(
+        F.sequence(F.lit(1), F.size(toks) - SPAN_K + 1),
+        lambda i: F.struct(
+            i.alias("istart"),
+            hash60(F.array_join(F.slice(toks, i, SPAN_K), " ")).alias("h"),
+        ),
     )
+    none = F.array().cast("array<struct<istart:int,h:bigint>>")
     sh = t.select(
         "doc_id",
-        F.size("toks").alias("n_toks"),
-        F.explode(F.expr(shingle_expr)).alias("s"),
-    ).select(
-        "doc_id",
-        "n_toks",
-        F.col("s.istart").alias("istart"),
-        F.col("s.hs").cast("long").alias("h"),
-    )
+        F.size(toks).alias("n_toks"),
+        F.explode(F.when(F.size(toks) < SPAN_K, none).otherwise(shingles)).alias("s"),
+    ).select("doc_id", "n_toks", "s.istart", "s.h")
     # r16 (guide §1.2): sh feeds BOTH the dup-hash aggregate and the
     # position join, and the md5-per-position shingle hashing is the
     # query's dominant CPU — materialize it once instead of hashing

@@ -17,6 +17,16 @@ from pyspark.sql import functions as F
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import dedup as D
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import similarity as S
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext import text as X
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.dedup import DUP_LABELS_SQL, LSH_CANDIDATES_SQL
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.similarity import (
+    COS_SQL,
+    DBL_SQL,
+    IVF_CELLS_SQL,
+    IVF_CENT_SQL,
+    ivf_cand_sql,
+    topk_sql,
+)
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import NORM, SHINGLES, SIG_COLS, TOKS
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
     H60_SQL,
     R4_SQL,
@@ -35,29 +45,10 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import 
 
 # ---- SQL fragment builders (DuckDB twins of ext/text.py) -----------------
 
-NORM = "lower(trim(regexp_replace({c}, '\\s+', ' ', 'g')))"
-TOKS = "regexp_split_to_array(trim({c}), '\\s+')"
-
-
 UNIQ_RATIO = (
     f"len(list_distinct({TOKS.format(c='{c}')})) / greatest(len({TOKS.format(c='{c}')}), 1)"
 )
 PUNCT_RATIO = "len(regexp_extract_all({c}, '[^\\w\\s]')) / greatest(length({c}), 1)"
-
-# Shingle array (3-gram over normalized tokens), with the <3-token
-# single-shingle fallback ext/text.shingles uses.
-SHINGLES = (
-    "CASE WHEN len({t}) >= 3 THEN "
-    "list_transform(range(len({t}) - 2), i -> array_to_string(({t})[i+1:i+3], ' ')) "
-    "ELSE [array_to_string({t}, ' ')] END"
-)
-
-
-def _mh_sql(j: int, sh: str = "sh") -> str:
-    """MinHash permutation j: min over XOR-permuted shingle hashes
-    (one md5 per shingle, mask per permutation — ext/text.with_minhash)."""
-    h = H60_SQL.format(x="s")
-    return f"list_min(list_transform({sh}, s -> xor({h}, {X.perm_mask(j)})))"
 
 
 # ---------------------------------------------------------------------------
@@ -262,15 +253,12 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SIG_COLS = ", ".join(f"{_mh_sql(j)} AS mh{j}" for j in range(X.MINHASH_K))
-
-
 @query(
     "q_minhash_signature",
     oracle=f"""
     WITH t AS (SELECT doc_id, {TOKS.format(c=NORM.format(c='text'))} AS toks FROM documents),
     sh AS (SELECT doc_id, {SHINGLES.format(t='toks')} AS sh FROM t)
-    SELECT doc_id, {_SIG_COLS} FROM sh
+    SELECT doc_id, {SIG_COLS} FROM sh
     """,
     tags=("ext", "dedup"),
 )
@@ -283,29 +271,10 @@ def q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doc_minhash_sig(spark, sf_dir)
 
 
-def _bands_sql() -> str:
-    r = X.MINHASH_K // X.LSH_BANDS
-    parts = []
-    for b in range(X.LSH_BANDS):
-        key = " || ',' || ".join(f"mh{b * r + i}::VARCHAR" for i in range(r))
-        parts.append(
-            f"SELECT doc_id, toks, {b} AS band_idx, {key} AS band_key FROM sig"
-        )
-    return " UNION ALL ".join(parts)
-
-
 @query(
     "q_lsh_pairs",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {TOKS.format(c=NORM.format(c='text'))} AS toks FROM documents),
-    sh AS (SELECT doc_id, list_distinct(toks) AS toks, {SHINGLES.format(t='toks')} AS sh FROM t),
-    sig AS (SELECT doc_id, toks, {_SIG_COLS} FROM sh),
-    bands AS ({_bands_sql()}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-    )
+    WITH {LSH_CANDIDATES_SQL}
     SELECT id_a, id_b,
            len(list_intersect(ta.toks, tb.toks))
              / greatest(len(list_distinct(ta.toks || tb.toks)), 1) AS jaccard
@@ -332,46 +301,16 @@ def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DUP_CLUSTERS_ORACLE = f"""
+@query(
+    "q_dup_clusters",
+    oracle=f"""
     WITH RECURSIVE
-    t AS (SELECT doc_id, {TOKS.format(c=NORM.format(c='text'))} AS toks FROM documents),
-    sh AS (SELECT doc_id, list_distinct(toks) AS toks, {SHINGLES.format(t='toks')} AS sh FROM t),
-    sig AS (SELECT doc_id, toks, {_SIG_COLS} FROM sh),
-    bands AS ({_bands_sql()}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-    ),
-    verified AS (
-      SELECT id_a, id_b FROM cand
-      JOIN sh ta ON ta.doc_id = id_a
-      JOIN sh tb ON tb.doc_id = id_b
-      WHERE len(list_intersect(ta.toks, tb.toks))
-              / greatest(len(list_distinct(ta.toks || tb.toks)), 1) >= 0.5
-    ),
-    edges AS (
-      SELECT id_a AS src, id_b AS dst FROM verified
-      UNION ALL
-      SELECT id_b AS src, id_a AS dst FROM verified
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    comp(node, lbl) AS (
-      SELECT node, node FROM nodes
-      UNION
-      SELECT e.dst, c.lbl FROM comp c JOIN edges e ON e.src = c.node
-    ),
-    labels AS (SELECT node, min(lbl) AS cluster_id FROM comp GROUP BY node)
+    {DUP_LABELS_SQL}
     SELECT l.node AS doc_id, l.cluster_id, s.cluster_size
     FROM labels l
     JOIN (SELECT cluster_id, count(*) AS cluster_size FROM labels GROUP BY 1) s
       USING (cluster_id)
-    """
-
-
-@query(
-    "q_dup_clusters",
-    oracle=_DUP_CLUSTERS_ORACLE,
+    """,
     tags=("ext", "dedup", "iterative"),
 )
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -457,28 +396,17 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Embedding similarity
 # ---------------------------------------------------------------------------
 
-_COS = (
-    "list_dot_product({a}, {b}) / "
-    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
-)
-_DBL = "list_transform({v}, x -> x::DOUBLE)"
-
-
 @query(
     "q_embed_topk",
     oracle=f"""
-    WITH e AS (SELECT vec_id, {_DBL.format(v='embedding')} AS v FROM embeddings),
+    WITH e AS (SELECT vec_id, {DBL_SQL.format(v='embedding')} AS v FROM embeddings),
     q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
     scored AS (
       SELECT query_id, c.vec_id AS match_id,
-             {det_round_sql(_COS.format(a='qv', b='c.v'), 6)} AS cosine_sim
+             {det_round_sql(COS_SQL.format(a='qv', b='c.v'), 6)} AS cosine_sim
       FROM q, e c WHERE c.vec_id <> query_id
     )
-    SELECT query_id, match_id, cosine_sim, rank FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine_sim DESC, match_id
-      ) AS rank FROM scored
-    ) WHERE rank <= 10
+    {topk_sql(10)}
     """,
     tags=("ext", "similarity"),
 )
@@ -500,7 +428,7 @@ _UNIT = (
     "q_embed_top1",
     oracle=f"""
     WITH e AS (
-      SELECT vec_id, {_UNIT.format(v=_DBL.format(v='embedding'))} AS u
+      SELECT vec_id, {_UNIT.format(v=DBL_SQL.format(v='embedding'))} AS u
       FROM embeddings
     ),
     q AS (SELECT vec_id AS query_id, u AS qu FROM e WHERE vec_id < 50),
@@ -509,11 +437,7 @@ _UNIT = (
              {det_round_sql('list_dot_product(qu, c.u)', 6)} AS cosine_sim
       FROM q, e c WHERE c.vec_id <> query_id
     )
-    SELECT query_id, match_id, cosine_sim FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine_sim DESC, match_id
-      ) AS rn FROM scored
-    ) WHERE rn = 1
+    {topk_sql(1)}
     """,
     tags=("ext", "similarity"),
 )
@@ -532,13 +456,13 @@ def q_embed_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_embed_neardup",
     oracle=f"""
     WITH e AS (
-      SELECT vec_id, {_DBL.format(v='embedding')} AS v FROM embeddings
+      SELECT vec_id, {DBL_SQL.format(v='embedding')} AS v FROM embeddings
       WHERE vec_id % 5 = 0
     )
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           {det_round_sql(_COS.format(a='a.v', b='b.v'), 6)} AS cosine_sim
+           {det_round_sql(COS_SQL.format(a='a.v', b='b.v'), 6)} AS cosine_sim
     FROM e a JOIN e b ON a.vec_id < b.vec_id
-    WHERE {det_round_sql(_COS.format(a='a.v', b='b.v'), 6)} >= 0.35
+    WHERE {det_round_sql(COS_SQL.format(a='a.v', b='b.v'), 6)} >= 0.35
     """,
     tags=("ext", "dedup", "similarity"),
 )
@@ -576,7 +500,7 @@ def _buckets_sql() -> str:
 @query(
     "q_ann_topk",
     oracle=f"""
-    WITH e AS (SELECT vec_id, {_DBL.format(v='embedding')} AS v FROM embeddings),
+    WITH e AS (SELECT vec_id, {DBL_SQL.format(v='embedding')} AS v FROM embeddings),
     bucketed AS (
       SELECT vec_id, v, CAST(unnest({_buckets_sql()}) AS BIGINT) AS bucket FROM e
     ),
@@ -587,16 +511,12 @@ def _buckets_sql() -> str:
     ),
     scored AS (
       SELECT query_id, match_id,
-             {det_round_sql(_COS.format(a='eq.v', b='ec.v'), 6)} AS cosine_sim
+             {det_round_sql(COS_SQL.format(a='eq.v', b='ec.v'), 6)} AS cosine_sim
       FROM cand
       JOIN e eq ON eq.vec_id = query_id
       JOIN e ec ON ec.vec_id = match_id
     )
-    SELECT query_id, match_id, cosine_sim, rank FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine_sim DESC, match_id
-      ) AS rank FROM scored
-    ) WHERE rank <= 5
+    {topk_sql(5)}
     """,
     tags=("ext", "similarity"),
 )
@@ -614,36 +534,14 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ivf_topk",
     oracle=f"""
-    WITH e AS (SELECT vec_id, {_DBL.format(v='embedding')} AS v FROM embeddings),
-    cent AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id % {S.CENTROID_MOD} = 0),
-    assign AS (
-      SELECT vec_id, centroid_id, crank FROM (
-        SELECT e.vec_id, cent.centroid_id,
-               row_number() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY {det_round_sql(_COS.format(a='e.v', b='cent.cv'), 6)} DESC, cent.centroid_id
-               ) AS crank
-        FROM e, cent
-      )
-    ),
-    corpus_cells AS (SELECT vec_id AS match_id, centroid_id FROM assign WHERE crank = 1),
-    query_cells AS (SELECT vec_id AS query_id, centroid_id FROM assign
-                    WHERE crank <= 2 AND vec_id < 20),
-    cand AS (
-      SELECT DISTINCT query_id, match_id
-      FROM query_cells JOIN corpus_cells USING (centroid_id)
-      WHERE query_id <> match_id
-    ),
+    WITH e AS (SELECT vec_id, {DBL_SQL.format(v='embedding')} AS v FROM embeddings),
+    {ivf_cand_sql(2, 20)},
     scored AS (
       SELECT query_id, match_id,
-             {det_round_sql(_COS.format(a='eq.v', b='ec.v'), 6)} AS cosine_sim
+             {det_round_sql(COS_SQL.format(a='eq.v', b='ec.v'), 6)} AS cosine_sim
       FROM cand JOIN e eq ON eq.vec_id = query_id JOIN e ec ON ec.vec_id = match_id
     )
-    SELECT query_id, match_id, cosine_sim, rank FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine_sim DESC, match_id
-      ) AS rank FROM scored
-    ) WHERE rank <= 5
+    {topk_sql(5)}
     """,
     tags=("ext", "similarity"),
 )
@@ -1360,43 +1258,25 @@ _DCG_CASE = "CASE rank " + " ".join(
 @query(
     "q_ann_recall",
     oracle=f"""
-    WITH e AS (SELECT vec_id, {_DBL.format(v='embedding')} AS v FROM embeddings),
+    WITH e AS (SELECT vec_id, {DBL_SQL.format(v='embedding')} AS v FROM embeddings),
     q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 20),
     truth AS (
       SELECT query_id, match_id, rank FROM (
         SELECT query_id, c.vec_id AS match_id,
                row_number() OVER (
                  PARTITION BY query_id
-                 ORDER BY {det_round_sql(_COS.format(a='qv', b='c.v'), 6)} DESC, c.vec_id
+                 ORDER BY {det_round_sql(COS_SQL.format(a='qv', b='c.v'), 6)} DESC, c.vec_id
                ) AS rank
         FROM q, e c WHERE c.vec_id <> query_id
       ) WHERE rank <= 10
     ),
-    cent AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id % {S.CENTROID_MOD} = 0),
-    assign AS (
-      SELECT vec_id, centroid_id, crank FROM (
-        SELECT e.vec_id, cent.centroid_id,
-               row_number() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY {det_round_sql(_COS.format(a='e.v', b='cent.cv'), 6)} DESC, cent.centroid_id
-               ) AS crank
-        FROM e, cent
-      )
-    ),
-    corpus_cells AS (SELECT vec_id AS match_id, centroid_id FROM assign WHERE crank = 1),
-    query_cells AS (SELECT vec_id AS query_id, centroid_id FROM assign
-                    WHERE crank <= 2 AND vec_id < 20),
-    cand AS (
-      SELECT DISTINCT query_id, match_id
-      FROM query_cells JOIN corpus_cells USING (centroid_id)
-      WHERE query_id <> match_id
-    ),
+    {ivf_cand_sql(2, 20)},
     approx AS (
       SELECT query_id, match_id, rank FROM (
         SELECT cand.query_id, cand.match_id,
                row_number() OVER (
                  PARTITION BY cand.query_id
-                 ORDER BY {det_round_sql(_COS.format(a='eq.v', b='ec.v'), 6)} DESC, cand.match_id
+                 ORDER BY {det_round_sql(COS_SQL.format(a='eq.v', b='ec.v'), 6)} DESC, cand.match_id
                ) AS rank
         FROM cand
         JOIN e eq ON eq.vec_id = cand.query_id
@@ -1464,22 +1344,22 @@ _SIL_PANEL = 60  # evaluation panel size
 @query(
     "q_silhouette",
     oracle=f"""
-    WITH e AS (SELECT vec_id, {_DBL.format(v='embedding')} AS v FROM embeddings),
-    cent AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id % {S.CENTROID_MOD} = 0),
+    WITH e AS (SELECT vec_id, {DBL_SQL.format(v='embedding')} AS v FROM embeddings),
+    {IVF_CENT_SQL},
     panel AS (SELECT vec_id, v FROM e WHERE vec_id < {_SIL_PANEL}),
     assign AS (
       SELECT vec_id, centroid_id FROM (
         SELECT p.vec_id, cent.centroid_id,
                row_number() OVER (
                  PARTITION BY p.vec_id
-                 ORDER BY {det_round_sql(_COS.format(a='p.v', b='cent.cv'), 6)} DESC, cent.centroid_id
+                 ORDER BY {det_round_sql(COS_SQL.format(a='p.v', b='cent.cv'), 6)} DESC, cent.centroid_id
                ) AS crank
         FROM panel p, cent
       ) WHERE crank = 1
     ),
     pairs AS (
       SELECT a.vec_id AS i, ca.centroid_id AS ci, cb.centroid_id AS cj,
-             CAST(1.0 - {det_round_sql(_COS.format(a='a.v', b='b.v'), 6)} AS DECIMAL(28,8)) AS d
+             CAST(1.0 - {det_round_sql(COS_SQL.format(a='a.v', b='b.v'), 6)} AS DECIMAL(28,8)) AS d
       FROM panel a JOIN assign ca ON ca.vec_id = a.vec_id,
            panel b JOIN assign cb ON cb.vec_id = b.vec_id
       WHERE a.vec_id <> b.vec_id
@@ -1848,7 +1728,7 @@ def _nprobe_oracle() -> str:
                ) AS rn
         FROM (
           SELECT query_id, match_id,
-                 {det_round_sql(_COS.format(a='eq.v', b='ec.v'), 6)} AS cosine_sim
+                 {det_round_sql(COS_SQL.format(a='eq.v', b='ec.v'), 6)} AS cosine_sim
           FROM cand{np_} JOIN e eq ON eq.vec_id = query_id
                         JOIN e ec ON ec.vec_id = match_id
         ) s
@@ -1862,25 +1742,14 @@ def _nprobe_oracle() -> str:
         for np_ in NPROBE_TIERS
     )
     return f"""
-    WITH e AS (SELECT vec_id, {_DBL.format(v='embedding')} AS v FROM embeddings),
-    cent AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id % {S.CENTROID_MOD} = 0),
-    assign AS (
-      SELECT vec_id, centroid_id, crank FROM (
-        SELECT e.vec_id, cent.centroid_id,
-               row_number() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY {det_round_sql(_COS.format(a='e.v', b='cent.cv'), 6)} DESC, cent.centroid_id
-               ) AS crank
-        FROM e, cent
-      )
-    ),
-    corpus_cells AS (SELECT vec_id AS match_id, centroid_id FROM assign WHERE crank = 1),
+    WITH e AS (SELECT vec_id, {DBL_SQL.format(v='embedding')} AS v FROM embeddings),
+    {IVF_CELLS_SQL},
     truth AS (
       SELECT query_id, match_id FROM (
         SELECT q.vec_id AS query_id, c.vec_id AS match_id,
                row_number() OVER (
                  PARTITION BY q.vec_id
-                 ORDER BY {det_round_sql(_COS.format(a='q.v', b='c.v'), 6)} DESC, c.vec_id
+                 ORDER BY {det_round_sql(COS_SQL.format(a='q.v', b='c.v'), 6)} DESC, c.vec_id
                ) AS rn
         FROM e q, e c
         WHERE q.vec_id < {NPROBE_Q} AND c.vec_id <> q.vec_id

@@ -34,12 +34,15 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars impo
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames import (
     BASKET_MIN_SUP as MIN_SUP,  # orders containing both parts
+    CO_SERVICE_SQL,
+    CUST_SUPP_SQL,
     basket_pair_counts,
     basket_singles,
     co_service_sim,
     cust_supp,
     note_dropped_checkpoints,
     shared_frame,
+    trade_graph_sql,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
 
@@ -152,21 +155,10 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shared_frame(spark, sf_dir, "knn_edges", build)
 
 
-# --- kNN graph + triangle count ---------------------------------------------
-
-
-@query(
-    "q_knn_triangles",
-    oracle=f"""
-    WITH cs AS (
-      SELECT DISTINCT o.o_custkey AS cust, l.l_suppkey AS supp
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    ),
-    sim AS (
-      SELECT a.supp AS s1, b.supp AS s2, count(*) AS common_cust
-      FROM cs a JOIN cs b ON a.cust = b.cust AND a.supp < b.supp
-      GROUP BY 1, 2
-    ),
+#: DuckDB twin of :func:`_knn_edges` before its canonical distinct:
+#: :data:`CO_SERVICE_SQL`, directed (both orientations) and knn (each
+#: supplier's K_NN best neighbours).
+_KNN_SQL = f"""{CO_SERVICE_SQL},
     directed AS (
       SELECT s1 AS src, s2 AS dst, common_cust FROM sim
       UNION ALL
@@ -179,7 +171,16 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   ORDER BY common_cust DESC, dst ASC) AS rn
         FROM directed
       ) WHERE rn <= {K_NN}
-    ),
+    )"""
+
+
+# --- kNN graph + triangle count ---------------------------------------------
+
+
+@query(
+    "q_knn_triangles",
+    oracle=f"""
+    WITH {_KNN_SQL},
     edges AS (
       SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM knn
     ),
@@ -256,11 +257,8 @@ def q_knn_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_graph_degree",
-    oracle="""
-    WITH cs AS (
-      SELECT DISTINCT o.o_custkey AS cust, l.l_suppkey AS supp
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    ),
+    oracle=f"""
+    WITH {CUST_SUPP_SQL},
     deg AS (
       SELECT 'supplier' AS side, supp AS node, count(*) AS d FROM cs GROUP BY 2
       UNION ALL
@@ -399,28 +397,7 @@ def q_item_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_graph_communities",
     oracle=f"""
     WITH RECURSIVE
-    cs AS (
-      SELECT DISTINCT o.o_custkey AS cust, l.l_suppkey AS supp
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    ),
-    sim AS (
-      SELECT a.supp AS s1, b.supp AS s2, count(*) AS common_cust
-      FROM cs a JOIN cs b ON a.cust = b.cust AND a.supp < b.supp
-      GROUP BY 1, 2
-    ),
-    directed AS (
-      SELECT s1 AS src, s2 AS dst, common_cust FROM sim
-      UNION ALL
-      SELECT s2 AS src, s1 AS dst, common_cust FROM sim
-    ),
-    knn AS (
-      SELECT src, dst FROM (
-        SELECT src, dst,
-               row_number() OVER (PARTITION BY src
-                                  ORDER BY common_cust DESC, dst ASC) AS rn
-        FROM directed
-      ) WHERE rn <= {K_NN}
-    ),
+    {_KNN_SQL},
     e AS (
       SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM knn
     ),
@@ -475,16 +452,8 @@ BF_ROUNDS = 4
 
 #: co-service graph + source CTEs shared by the Bellman-Ford oracle
 #: and the route-reconstruction oracle.
-_BF_GRAPH_CTES = """
-    WITH cs AS (
-      SELECT DISTINCT o.o_custkey AS cust, l.l_suppkey AS supp
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    ),
-    sim AS (
-      SELECT a.supp AS s1, b.supp AS s2, count(*) AS common_cust
-      FROM cs a JOIN cs b ON a.cust = b.cust AND a.supp < b.supp
-      GROUP BY 1, 2
-    ),
+_BF_GRAPH_CTES = f"""
+    WITH {CO_SERVICE_SQL},
     ew AS (
       SELECT s1 AS src, s2 AS dst, 1.0 / common_cust AS w FROM sim
       UNION ALL
@@ -739,15 +708,7 @@ def q_route_reconstruct(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_degree_assortativity",
     oracle=f"""
-    WITH pairs AS (
-      SELECT DISTINCT -(l.l_suppkey + 1) AS s_node, o.o_custkey AS c_node
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    ),
-    edges AS (
-      SELECT s_node AS src, c_node AS dst FROM pairs
-      UNION ALL
-      SELECT c_node AS src, s_node AS dst FROM pairs
-    ),
+    WITH {trade_graph_sql()},
     deg AS (SELECT src AS node, count(*) AS d FROM edges GROUP BY 1),
     joined AS (
       SELECT CAST(a.d AS DECIMAL(38,0)) AS dx, CAST(b.d AS DECIMAL(38,0)) AS dy

@@ -21,6 +21,7 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.shared_frames im
     cust_supp,
     note_dropped_checkpoints,
     shared_frame,
+    trade_graph_sql,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
 
@@ -240,15 +241,7 @@ def _pr_oracle() -> str:
     )""")
         prev = f"it{k}"
     return f"""
-    WITH pairs AS (
-      SELECT DISTINCT -(l.l_suppkey + 1) AS s_node, o.o_custkey AS c_node
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    ),
-    edges AS (
-      SELECT s_node AS src, c_node AS dst FROM pairs
-      UNION ALL
-      SELECT c_node AS src, s_node AS dst FROM pairs
-    ),
+    WITH {trade_graph_sql()},
     nodes AS (SELECT DISTINCT src AS node FROM edges),
     stats AS (SELECT count(*) AS n FROM nodes),
     deg AS (SELECT src AS node, count(*) AS outdeg FROM edges GROUP BY 1),
@@ -299,7 +292,8 @@ def _trade_graph(spark, sf_dir, year: int | None = None) -> DataFrame:
     restricts to one order year (partition-prunable at scale) for the
     convergence variant's smaller per-round scans; the unfiltered
     graph derives from the shared cust_supp distinct instead of
-    re-joining the facts."""
+    re-joining the facts. shared_frames.trade_graph_sql is the DuckDB
+    twin."""
 
     def build_edges() -> DataFrame:
         if year is None:
@@ -438,16 +432,7 @@ def _pr_conv_oracle() -> str:
     for _ in range(PR_CHECK_EVERY):
         prev = round_sql.format(prev=prev)
     return f"""
-    WITH RECURSIVE pairs AS (
-      SELECT DISTINCT -(l.l_suppkey + 1) AS s_node, o.o_custkey AS c_node
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-      WHERE year(cast(o.o_orderdate AS date)) = {PR_CONV_YEAR}
-    ),
-    edges AS (
-      SELECT s_node AS src, c_node AS dst FROM pairs
-      UNION ALL
-      SELECT c_node AS src, s_node AS dst FROM pairs
-    ),
+    WITH RECURSIVE {trade_graph_sql(year=PR_CONV_YEAR)},
     nodes AS (SELECT DISTINCT src AS node FROM edges),
     stats AS (SELECT count(*) AS n FROM nodes),
     deg AS (SELECT src AS node, count(*) AS outdeg FROM edges GROUP BY 1),
@@ -880,11 +865,7 @@ def _hits_oracle() -> str:
     )""")
         prev_hub = f"hub{k}"
     return f"""
-    WITH pairs AS (
-      SELECT DISTINCT -(l.l_suppkey + 1) AS s_node, o.o_custkey AS c_node
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    ),
-    edges AS (SELECT s_node AS src, c_node AS dst FROM pairs),
+    WITH {trade_graph_sql(both_ways=False)},
     hub0 AS (SELECT DISTINCT src AS node, 1.0 AS score FROM edges),
     {','.join(steps)}
     SELECT node, 'hub' AS role, (floor(score * 100000000.0 + 0.5) / 100000000.0) AS score
@@ -990,15 +971,7 @@ def _ppr_oracle() -> str:
     )""")
         prev = f"it{k}"
     return f"""
-    WITH pairs AS (
-      SELECT DISTINCT -(l.l_suppkey + 1) AS s_node, o.o_custkey AS c_node
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    ),
-    edges AS (
-      SELECT s_node AS src, c_node AS dst FROM pairs
-      UNION ALL
-      SELECT c_node AS src, s_node AS dst FROM pairs
-    ),
+    WITH {trade_graph_sql()},
     deg AS (SELECT src AS node, count(*) AS outdeg FROM edges GROUP BY 1),
     snodes AS (
       SELECT DISTINCT -(s_suppkey + 1) AS node FROM supplier

@@ -17,10 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60, hll_register
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
     AVG_SQL,
     H60_SQL,
+    HLL_REGISTER_SQL,
     R2_SQL,
     R4_SQL,
     R6_SQL,
@@ -1070,10 +1071,7 @@ _HLL_H = H60_SQL.format(x="cast(o_custkey as varchar)")
     oracle=f"""
     WITH h AS (SELECT {_HLL_H} AS h FROM orders),
     rho AS (
-      SELECT (h >> 52) AS idx,
-             CASE WHEN (h & 4503599627370495) = 0 THEN 53
-                  ELSE strpos(lpad(bin(h & 4503599627370495), 52, '0'), '1')
-             END AS r
+      SELECT {HLL_REGISTER_SQL}
       FROM h
     ),
     reg AS (
@@ -1121,13 +1119,8 @@ def q_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     No pre-distinct: duplicates cannot change a max."""
     o = read_table(spark, sf_dir, "orders")
     h = o.select(hash60(F.col("o_custkey").cast("string")).alias("h"))
-    rho = h.select(
-        F.expr("shiftright(h, 52)").alias("idx"),
-        F.expr(
-            "CASE WHEN (h & 4503599627370495) = 0 THEN 53 "
-            "ELSE locate('1', lpad(bin(h & 4503599627370495), 52, '0')) END"
-        ).alias("r"),
-    )
+    idx, r = hll_register(F.col("h"))
+    rho = h.select(idx.alias("idx"), r.alias("r"))
     grid = spark.range(_HLL_M).select(F.col("id").alias("idx"))
     reg = (
         grid.join(rho.groupBy("idx").agg(F.max("r").alias("mx")), "idx", "left")

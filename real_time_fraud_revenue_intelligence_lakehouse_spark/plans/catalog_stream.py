@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import H60_SQL, SUM_SQL, exact_sum
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import H60_SQL, HLL_REGISTER_SQL, SUM_SQL, exact_sum
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
 from real_time_fraud_revenue_intelligence_lakehouse_spark.streaming.ingest import (
@@ -360,10 +360,7 @@ def q_ewma_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM events
     ),
     rho AS (
-      SELECT (h >> 52) AS idx,
-             CASE WHEN (h & 4503599627370495) = 0 THEN 53
-                  ELSE strpos(lpad(bin(h & 4503599627370495), 52, '0'), '1')
-             END AS r
+      SELECT {HLL_REGISTER_SQL}
       FROM h
     ),
     cells AS (

@@ -239,6 +239,35 @@ def cust_supp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shared_frame(spark, sf_dir, "cust_supp", build)
 
 
+#: DuckDB twin of :func:`cust_supp`: the CTE cs (cust, supp).
+CUST_SUPP_SQL = """cs AS (
+      SELECT DISTINCT o.o_custkey AS cust, l.l_suppkey AS supp
+      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+    )"""
+
+
+def trade_graph_sql(year: int | None = None, both_ways: bool = True) -> str:
+    """DuckDB twin of plans/catalog_heavy._trade_graph: CTEs pairs
+    (s_node = -(supp + 1), c_node = cust) and edges (src, dst), within
+    one order ``year`` if given; ``both_ways=False`` keeps only the
+    supplier → customer edges."""
+    where = f"\n      WHERE year(cast(o.o_orderdate AS date)) = {year}" if year is not None else ""
+    edges = (
+        """edges AS (
+      SELECT s_node AS src, c_node AS dst FROM pairs
+      UNION ALL
+      SELECT c_node AS src, s_node AS dst FROM pairs
+    )"""
+        if both_ways
+        else "edges AS (SELECT s_node AS src, c_node AS dst FROM pairs)"
+    )
+    return f"""pairs AS (
+      SELECT DISTINCT -(l.l_suppkey + 1) AS s_node, o.o_custkey AS c_node
+      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey{where}
+    ),
+    {edges}"""
+
+
 def co_service_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Supplier co-service pairs (s1 < s2, #common customers) — the
     weighted-edge tier under the kNN graph and the cheapest-route
@@ -262,6 +291,16 @@ def co_service_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return shared_frame(spark, sf_dir, "co_service_sim", build)
+
+
+#: DuckDB twin of :func:`co_service_sim`: :data:`CUST_SUPP_SQL` and
+#: sim (s1, s2, common_cust).
+CO_SERVICE_SQL = f"""{CUST_SUPP_SQL},
+    sim AS (
+      SELECT a.supp AS s1, b.supp AS s2, count(*) AS common_cust
+      FROM cs a JOIN cs b ON a.cust = b.cust AND a.supp < b.supp
+      GROUP BY 1, 2
+    )"""
 
 
 BASKET_MIN_SUP = 2  # orders containing both parts (the association-mining floor)

@@ -12,9 +12,9 @@ manifest replay, history is the manifest list. That is precisely
 Delta's transaction-log design reduced to its load-bearing minimum:
 
 - **Atomic commit**: data files land first, then the manifest
-  appears via `os.replace` (atomic on POSIX) — a reader never sees a
-  half-written version; a crash before the rename leaves garbage
-  data files but NO new version (cleaned by vacuum).
+  appears via a put-if-absent `os.link` (atomic on POSIX) — a reader
+  never sees a half-written version; a crash before the link leaves
+  garbage data files but NO new version (cleaned by vacuum).
 - **Snapshot isolation**: manifests are immutable; reading version N
   while version N+1 commits is safe by construction.
 - **Append vs overwrite**: append's manifest = parent's file list +
@@ -51,29 +51,54 @@ class ConcurrentCommitError(RuntimeError):
     list_versions and retry with the new head."""
 
 
+def json_versions(dirpath: str) -> list[int]:
+    """Version numbers of the committed ``v<NNNNNN>.json`` documents in
+    ``dirpath``, ascending (a missing directory has none) — the one
+    listing behind table manifests and ext/model_registry."""
+    if not os.path.isdir(dirpath):
+        return []
+    out = []
+    for name in os.listdir(dirpath):
+        # strict match: a stray 'vfinal.json' or editor backup must not
+        # brick every read/history call with a ValueError (ADVICE r12)
+        # — non-conforming names are ignored.
+        # (\d{6}|[1-9]\d{6,}): exactly the names :06d can produce —
+        # 6 digits zero-padded, or 7+ with no leading zero (version
+        # 1,000,000 stays listed, ADVICE r13) — and nothing else: a
+        # non-canonical v0000007.json would list as version 7 while
+        # the :06d path of 7 is v000007.json, so reads of a listed
+        # version would FileNotFoundError (ADVICE r14).
+        m = re.fullmatch(r"v(\d{6}|[1-9]\d{6,})\.json", name)
+        if m:
+            out.append(int(m.group(1)))
+    return sorted(out)
+
+
+def commit_json(doc: dict, staged: str, target: str, indent: int | None = None) -> None:
+    """Write ``doc`` to the temp name ``staged``, then publish it as
+    ``target`` put-if-absent: ``os.link`` raises FileExistsError if
+    another writer claimed ``target`` first. ``os.replace`` would
+    silently OVERWRITE that writer's document and lose its commit. The
+    link claims the name and publishes complete bytes in one syscall,
+    so a reader never sees a half-written version. ``staged`` is
+    removed on every exit path, failed links included."""
+    try:
+        with open(staged, "w") as fh:
+            json.dump(doc, fh, indent=indent)
+        os.link(staged, target)
+    finally:
+        try:
+            os.remove(staged)
+        except FileNotFoundError:
+            pass
+
+
 def _manifest_path(path: str, version: int) -> str:
     return os.path.join(path, _MANIFEST_DIR, f"v{version:06d}.json")
 
 
 def list_versions(path: str) -> list[int]:
-    mdir = os.path.join(path, _MANIFEST_DIR)
-    if not os.path.isdir(mdir):
-        return []
-    out = []
-    for name in os.listdir(mdir):
-        # strict match: a stray 'vfinal.json' or editor backup in
-        # _manifests must not brick every read/history call with a
-        # ValueError (ADVICE r12) — non-conforming names are ignored.
-        # (\d{6}|[1-9]\d{6,}): exactly the names :06d can produce —
-        # 6 digits zero-padded, or 7+ with no leading zero (version
-        # 1,000,000 stays listed, ADVICE r13) — and nothing else: a
-        # non-canonical v0000007.json would list as version 7 while
-        # _manifest_path resolves 7 to v000007.json, so reads of a
-        # listed version would FileNotFoundError (ADVICE r14).
-        m = re.fullmatch(r"v(\d{6}|[1-9]\d{6,})\.json", name)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+    return json_versions(os.path.join(path, _MANIFEST_DIR))
 
 
 def _read_manifest(path: str, version: int) -> dict:
@@ -91,8 +116,8 @@ def write_version(
 
     Data files are written to a fresh uuid-suffixed directory (never
     reused, so concurrent/failed writers cannot collide), then the
-    manifest is staged to a temp name and `os.replace`d into place —
-    the version EXISTS only from that atomic rename onward.
+    manifest is committed by :func:`commit_json` — the version EXISTS
+    only from that atomic link onward.
     """
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
@@ -118,22 +143,16 @@ def write_version(
     }
     os.makedirs(os.path.join(path, _MANIFEST_DIR), exist_ok=True)
     staged = _manifest_path(path, n) + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(staged, "w") as fh:
-        json.dump(manifest, fh)
-    # put-if-absent, not replace: os.link fails with EEXIST if another
-    # writer claimed version n between our list_versions and now — the
-    # optimistic-concurrency commit Delta's log uses. os.replace here
-    # would silently OVERWRITE the racing writer's manifest and lose
-    # its commit (and, under append, orphan its data files).
+    # put-if-absent: another writer that claimed version n between our
+    # list_versions and now wins — the optimistic-concurrency commit
+    # Delta's log uses.
     try:
-        os.link(staged, _manifest_path(path, n))
+        commit_json(manifest, staged, _manifest_path(path, n))
     except FileExistsError as e:
-        os.remove(staged)
         raise ConcurrentCommitError(
             f"version {n} at {path} was committed by another writer; "
             "re-read list_versions and retry"
         ) from e
-    os.remove(staged)
     return n
 
 

@@ -67,7 +67,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60, hll_register
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
@@ -840,12 +840,9 @@ def hll_rho_cols(events: DataFrame, key_col: str = "user_id") -> DataFrame:
     leading-zero rank of the 52-bit tail — as Catalyst expressions, so
     only (shard, idx, r) triples cross Arrow into the state op."""
     h = hash60(F.col(key_col).cast("string"))
+    idx, r = hll_register(F.col("h"))
     return events.select(h.alias("h")).select(
-        F.expr("shiftright(h, 52)").alias("idx"),
-        F.expr(
-            "CASE WHEN (h & 4503599627370495) = 0 THEN 53 "
-            "ELSE locate('1', lpad(bin(h & 4503599627370495), 52, '0')) END"
-        ).cast("long").alias("r"),
+        idx.alias("idx"), r.cast("long").alias("r")
     ).withColumn("shard", F.pmod(F.col("idx"), F.lit(HLL_SHARDS)).cast("long"))
 
 

@@ -738,20 +738,27 @@ def test_sampled_study_identities_are_pinned_literally():
 
 def test_fold_fused_cv_trainers_match_per_fold_loop(spark):
     """r17: the CV fold loop is fused into ONE stacked aggregate per
-    (round, level) (train_gbt_grid_cv, any grid width); the
-    trees must be bit-identical to training each fold's complement
-    separately through the single-fold fused trainers — splits, gains
-    AND leaf doubles."""
+    (round, level) (ext/gbt._fit with a fold column — the
+    _binned_frame + _descend pair gbt_cv_fold_aucs runs, any grid
+    width); the trees must be bit-identical to training each fold's
+    complement separately through the single-fold fused trainers —
+    splits, gains AND leaf doubles."""
     from pyspark.sql import functions as F
 
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_cv import train_gbt_grid_cv
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import _cfg, _fit
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
 
     df, *_ = _frame(spark, n=1200, seed=19)
     fold_col = F.pmod(hash60(F.col("o_orderkey").cast("string")), F.lit(3))
 
+    def fused(configs):
+        k = len(configs)
+        trees = _fit(df, [_cfg(*c) for c in configs], FEATS, GBT_BINS, "label",
+                     {}, fold_col, 3)
+        return [trees[f * k:(f + 1) * k] for f in range(3)]
+
     cfgs2 = (("a", 2, 0.3, 1.0), ("b", 1, 0.3, 1.0), ("c", 2, 0.1, 5.0))
-    fused2 = train_gbt_grid_cv(df, fold_col, configs=cfgs2, features=FEATS, scales={})
+    fused2 = fused(cfgs2)
     for f in range(3):
         seq = train_gbt_grid(
             df.filter(fold_col != f), configs=cfgs2, features=FEATS, scales={}
@@ -765,7 +772,7 @@ def test_fold_fused_cv_trainers_match_per_fold_loop(spark):
         ("f1", 1, 0.2, 1.0, 3, 1.0, 1.0, 0.0, 0.0, 1.0),
         ("f2", 2, 0.4, 0.5, 2, 0.85, 1.0, 0.0, 0.5, 5.0),
     )
-    fusedF = train_gbt_grid_cv(df, fold_col, cfgsF, features=FEATS, scales={})
+    fusedF = fused(cfgsF)
     for f in range(3):
         seqF = train_gbt_grid(
             df.filter(fold_col != f), configs=cfgsF, features=FEATS, scales={}

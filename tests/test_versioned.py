@@ -170,6 +170,23 @@ def test_concurrent_commit_is_put_if_absent(spark, tmp_path, monkeypatch):
     assert {r["k"] for r in read_version(spark, p, 2).collect()} == {2}
 
 
+def test_failed_commit_link_leaves_no_staged_manifest(spark, tmp_path, monkeypatch):
+    """A manifest link that fails for any reason, not only a lost
+    race, removes the staged temp manifest and commits nothing."""
+    p = str(tmp_path / "t")
+    write_version(_df(spark, [(1, "a")]), p)
+
+    def deny(src, dst):
+        raise PermissionError("link denied")
+
+    monkeypatch.setattr(os, "link", deny)
+    with pytest.raises(PermissionError):
+        write_version(_df(spark, [(2, "b")]), p)
+    monkeypatch.undo()
+    assert [f for f in os.listdir(os.path.join(p, "_manifests")) if ".tmp-" in f] == []
+    assert list_versions(p) == [0]
+
+
 def test_stray_manifest_files_are_ignored(spark, tmp_path):
     """ADVICE r12: a foreign file in _manifests (editor backup,
     'vfinal.json') must not brick list_versions/read/history with a
