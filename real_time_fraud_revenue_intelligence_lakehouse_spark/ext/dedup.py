@@ -202,19 +202,21 @@ LSH_CANDIDATES_SQL = f"""t AS (SELECT doc_id, {TOKS.format(c=NORM.format(c='text
     )"""
 
 
+#: The near-duplicate cut: verified pairs have token-set Jaccard ≥
+#: this (the reference-corpus convention every dedup query shares).
+DUP_JACCARD = 0.5
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    threshold: float = 0.5,
-    k: int = MINHASH_K,
-    bands: int = LSH_BANDS,
     max_bucket: int | None = LSH_MAX_BUCKET,
     sig: DataFrame | None = None,
     toks: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup candidate pairs via banded MinHash LSH, verified with
-    exact Jaccard ≥ threshold.
+    exact Jaccard ≥ :data:`DUP_JACCARD`.
 
     Plan: one scan computes (signature, band keys, distinct tokens)
     via staged projections (ext/text.with_minhash — each stage
@@ -232,9 +234,7 @@ def minhash_lsh_pairs(
     tests/test_ext.py::test_lsh_bucket_cap); docs only reachable
     through a dropped bucket fall back to the exact-fingerprint tier,
     which already catches identical-boilerplate groups."""
-    cand = lsh_candidates(
-        df, id_col, text_col, k=k, bands=bands, max_bucket=max_bucket, sig=sig
-    )
+    cand = lsh_candidates(df, id_col, text_col, max_bucket=max_bucket, sig=sig)
     if toks is None:
         toks = df.select(
             F.col(id_col),
@@ -247,10 +247,10 @@ def minhash_lsh_pairs(
     )
     return pairs.select(
         "id_a", "id_b", jaccard(F.col("toks_a"), F.col("toks_b")).alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
+    ).filter(F.col("jaccard") >= DUP_JACCARD)
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = SIMHASH_BITS) -> DataFrame:
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Frequency-weighted SimHash: every token occurrence votes ±1 per
     bit according to its 60-bit hash; bit = 1 where the vote sum is
     positive. Explode + one groupBy shuffle on the doc id — at scale
@@ -263,22 +263,26 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = SIMHASH_BITS)
             F.sum(
                 F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
             ).alias(f"v{b}")
-            for b in range(bits)
+            for b in range(SIMHASH_BITS)
         ]
     )
     sim = None
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         term = F.when(F.col(f"v{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
         sim = term if sim is None else sim + term
     return votes.select(F.col(id_col), sim.cast("long").alias("simhash"))
 
 
+#: SimHash near-dup radius: pairs within this many differing bits.
+SIMHASH_MAX_HAMMING = 3
+
+
 def simhash_pairs(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3,
-    bits: int = SIMHASH_BITS, sample_mod: int | None = None,
+    df: DataFrame, id_col: str, text_col: str, sample_mod: int | None = None,
     blocked: bool = True,
 ) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ max_hamming.
+    """Near-dup pairs by SimHash Hamming distance ≤ :data:`SIMHASH_MAX_HAMMING`
+    (``max_hamming`` below).
 
     Default (``blocked=True``) is the scale path: split each
     signature into ``max_hamming + 1`` bit-blocks; by pigeonhole, two
@@ -295,7 +299,8 @@ def simhash_pairs(
     signature of near-empty docs) can be capped exactly like LSH
     buckets; reuse the same window-count guard if a corpus shows
     skew here."""
-    s = simhash(df, id_col, text_col, bits)
+    max_hamming, bits = SIMHASH_MAX_HAMMING, SIMHASH_BITS
+    s = simhash(df, id_col, text_col)
     if sample_mod is not None:
         s = s.filter(F.col(id_col) % sample_mod == 0)
     if not blocked:
@@ -357,8 +362,14 @@ def _canon_edges(pairs: DataFrame) -> DataFrame:
     )
 
 
+#: Round caps of the two connected-components loops: the star
+#: algorithm's round pairs and dup_clusters' label propagation.
+CC_MAX_ITERS = 25
+DUP_MAX_ITERS = 20
+
+
 def connected_components_star(
-    edges: DataFrame, max_iters: int = 25, assume_canonical: bool = False
+    edges: DataFrame, assume_canonical: bool = False
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond") →
@@ -430,7 +441,7 @@ def connected_components_star(
         # of edge hashes — overflow-free under ANSI mode, unlike a
         # sum). Comparing fingerprints replaces an exceptAll shuffle
         # per round; a collision would only delay convergence
-        # detection by a round (max_iters still caps), never corrupt
+        # detection by a round (CC_MAX_ITERS still caps), never corrupt
         # the result.
         row = e.agg(
             F.count(F.lit(1)).alias("n"),
@@ -447,7 +458,7 @@ def connected_components_star(
     # round-pairs late, and a round-pair costs far more than the
     # 1-row fingerprint job it saves.)
     fp = fingerprint_of(E)
-    for _ in range(max_iters):
+    for _ in range(CC_MAX_ITERS):
         E2 = round_pair(E).localCheckpoint()
         fp2 = fingerprint_of(E2)
         E = E2
@@ -474,7 +485,7 @@ DUP_LABELS_SQL = f"""{LSH_CANDIDATES_SQL},
       JOIN sh ta ON ta.doc_id = id_a
       JOIN sh tb ON tb.doc_id = id_b
       WHERE len(list_intersect(ta.toks, tb.toks))
-              / greatest(len(list_distinct(ta.toks || tb.toks)), 1) >= 0.5
+              / greatest(len(list_distinct(ta.toks || tb.toks)), 1) >= {DUP_JACCARD}
     ),
     edges AS (
       SELECT id_a AS src, id_b AS dst FROM verified
@@ -494,8 +505,6 @@ def dup_clusters(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    threshold: float = 0.5,
-    max_iters: int = 20,
     sig: DataFrame | None = None,
     toks: DataFrame | None = None,
 ) -> DataFrame:
@@ -509,7 +518,7 @@ def dup_clusters(
     labels to edges, takes the per-node min of neighbor labels, and
     stops when no label changes. Iterations = component diameter —
     near-dup clusters are shallow (dup chains, not paths), so this
-    converges in 2-4 rounds in practice; ``max_iters`` only guards
+    converges in 2-4 rounds in practice; :data:`DUP_MAX_ITERS` only guards
     against pathological chains.
 
     Scale notes: the loop runs ONLY over pair-connected docs — a tiny
@@ -519,9 +528,9 @@ def dup_clusters(
     flat. For graphs with deep components swap the loop for the
     alternating large-star/small-star algorithm (same join shapes,
     O(log d) rounds)."""
-    pairs = minhash_lsh_pairs(
-        df, id_col, text_col, threshold=threshold, sig=sig, toks=toks
-    ).select("id_a", "id_b")
+    pairs = minhash_lsh_pairs(df, id_col, text_col, sig=sig, toks=toks).select(
+        "id_a", "id_b"
+    )
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
@@ -539,7 +548,7 @@ def dup_clusters(
         .select("node", F.least(F.col("node"), F.col("_nbr_min")).alias("lbl"))
         .localCheckpoint()
     )
-    for _ in range(max_iters):
+    for _ in range(DUP_MAX_ITERS):
         nbr_min = (
             edges.join(labels, edges["src"] == labels["node"])
             .groupBy(F.col("dst").alias("node"))
@@ -576,13 +585,12 @@ def prefix_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    theta_num: int = 1,
-    theta_den: int = 2,
     shingle_n: int = 3,
     sets: DataFrame | None = None,
 ) -> DataFrame:
     """EXACT set-similarity self-join (distinct shingle-set Jaccard
-    ≥ theta_num/theta_den) via lossless prefix filtering
+    ≥ theta_num/theta_den = 1/2, :data:`DUP_JACCARD` as an integer
+    ratio) via lossless prefix filtering
     (SSJoin/PPJoin) — the zero-recall-loss alternative to
     :func:`minhash_lsh_pairs`. See q_prefix_jaccard_join for the
     lemma and the measured execution notes; the threshold test is the
@@ -594,6 +602,7 @@ def prefix_jaccard_pairs(
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import shingles_of
     from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
 
+    theta_num, theta_den = 1, 2
     par = df.sparkSession.sparkContext.defaultParallelism
     if sets is None:
         toks = df.select(

@@ -91,7 +91,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import RISK_LABEL_SQL, SCORE_FEATURES
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import ROC_SWEEP_SQL, _x_expr, _x_sql, model_metrics_ctes
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
@@ -115,18 +115,18 @@ GBT_BINS = 16
 GBT_LAMBDA = 1.0
 GBT_ETA = 0.3
 
-def _bin_expr(f: str, scales: dict[str, float] | None, bins: int) -> Column:
-    """least(greatest(floor(x_scaled·B), 0), B−1) — identical text in
-    :func:`_bin_sql`; features are scaled into [0,1] so the clamp only
-    catches the exact-1.0 boundary."""
-    raw = F.floor(_x_expr(f, scales) * F.lit(float(bins)))
-    return F.least(F.greatest(raw, F.lit(0)), F.lit(bins - 1)).cast("long")
+def _bin_expr(f: str, scales: dict[str, float] | None) -> Column:
+    """least(greatest(floor(x_scaled·B), 0), B−1) with B = GBT_BINS —
+    identical text in :func:`_bin_sql`; features are scaled into [0,1]
+    so the clamp only catches the exact-1.0 boundary."""
+    raw = F.floor(_x_expr(f, scales) * F.lit(float(GBT_BINS)))
+    return F.least(F.greatest(raw, F.lit(0)), F.lit(GBT_BINS - 1)).cast("long")
 
 
-def _bin_sql(f: str, bins: int) -> str:
+def _bin_sql(f: str) -> str:
     return (
-        f"CAST(least(greatest(floor(({_x_sql(f)}) * {float(bins)!r}), 0), "
-        f"{bins - 1}) AS BIGINT)"
+        f"CAST(least(greatest(floor(({_x_sql(f)}) * {float(GBT_BINS)!r}), 0), "
+        f"{GBT_BINS - 1}) AS BIGINT)"
     )
 
 
@@ -332,12 +332,11 @@ def deep_tree_logit_on_bins(tree: dict, features: tuple[str, ...]) -> Column:
 def tree_logit_raw(
     tree: dict,
     features: tuple[str, ...] = SCORE_FEATURES,
-    bins: int = GBT_BINS,
     scales: dict[str, float] | None = None,
 ) -> Column:
     """Heap tree value over RAW feature columns (bins recomputed
     row-locally) — the serving form, at any depth."""
-    return _tree_logit(tree, lambda fidx: _bin_expr(features[fidx], scales, bins))
+    return _tree_logit(tree, lambda fidx: _bin_expr(features[fidx], scales))
 
 
 def _ensemble_on_bins(
@@ -449,8 +448,6 @@ def _binned_frame(
     fv: DataFrame,
     configs,
     features: tuple[str, ...],
-    bins: int,
-    label: str,
     scales: dict[str, float] | None,
     fold_col: Column | None = None,
 ) -> DataFrame:
@@ -484,10 +481,10 @@ def _binned_frame(
         return b.alias(f"__k_{t}")
 
     vec = fv.select(
-        F.col(label).alias("label"),
+        "label",
         *([] if fold_col is None else [fold_col.cast("int").alias("__fold")]),
         *[bucket(t) for t in range(key_rounds)],
-        *[_bin_expr(f, scales, bins).alias(f"b_{f}") for f in features],
+        *[_bin_expr(f, scales).alias(f"b_{f}") for f in features],
     )
     dp = fv.sparkSession.sparkContext.defaultParallelism
     return (
@@ -690,8 +687,6 @@ def _fit(
     fv: DataFrame,
     configs,
     features: tuple[str, ...],
-    bins: int,
-    label: str,
     scales: dict[str, float] | None,
     fold_col: Column | None = None,
     folds: int | None = None,
@@ -699,7 +694,7 @@ def _fit(
     """Build the engine frame for ``configs`` and descend it: one model
     per config, or per (fold, config) fold-major when ``fold_col``
     assigns ``folds`` folds (each model trains on its complement)."""
-    binned = _binned_frame(fv, configs, features, bins, label, scales, fold_col)
+    binned = _binned_frame(fv, configs, features, scales, fold_col)
     return _descend(binned, _models(configs, folds), features)
 
 
@@ -707,10 +702,8 @@ def train_gbt(
     fv: DataFrame,
     features: tuple[str, ...] = SCORE_FEATURES,
     rounds: int = GBT_ROUNDS,
-    bins: int = GBT_BINS,
     lam: float = GBT_LAMBDA,
     eta: float = GBT_ETA,
-    label: str = "label",
     scales: dict[str, float] | None = None,
     pos_weight: float | None = None,
 ) -> list[dict]:
@@ -724,13 +717,12 @@ def train_gbt(
     micro-floor, so splits optimize weighted loss and leaves
     −G/(H+λ) are naturally weighted."""
     cfg = _cfg("", rounds, eta, lam, pos_weight=pos_weight)
-    return _fit(fv, [cfg], features, bins, label, scales)[0]
+    return _fit(fv, [cfg], features, scales)[0]
 
 
 def partial_logits(
     trees: list[dict],
     features: tuple[str, ...] = SCORE_FEATURES,
-    bins: int = GBT_BINS,
     eta: float = GBT_ETA,
     scales: dict[str, float] | None = None,
 ) -> list[Column]:
@@ -742,7 +734,7 @@ def partial_logits(
     zs = [F.lit(0.0)]
     for tr in trees:
         zs.append(
-            zs[-1] + F.lit(float(eta)) * tree_logit_raw(tr, features, bins, scales)
+            zs[-1] + F.lit(float(eta)) * tree_logit_raw(tr, features, scales)
         )
     return zs
 
@@ -750,14 +742,13 @@ def partial_logits(
 def gbt_trained_logit_expr(
     trees: list[dict],
     features: tuple[str, ...] = SCORE_FEATURES,
-    bins: int = GBT_BINS,
     eta: float = GBT_ETA,
     scales: dict[str, float] | None = None,
 ) -> Column:
     """The trained ensemble's logit over RAW feature columns (bins
     recomputed row-locally) — the train→serve closure for any depth:
     the last of :func:`partial_logits`."""
-    return partial_logits(trees, features, bins, eta, scales)[-1]
+    return partial_logits(trees, features, eta, scales)[-1]
 
 
 def gbt_trained_score_expr(trees: list[dict], eta: float = GBT_ETA) -> Column:
@@ -816,7 +807,6 @@ def _gbt_chain_ctes(
     fv_sql: str,
     features: tuple[str, ...] = SCORE_FEATURES,
     rounds: int = GBT_ROUNDS,
-    bins: int = GBT_BINS,
     lam: float = GBT_LAMBDA,
     eta: float = GBT_ETA,
     depth: int = 2,
@@ -857,7 +847,7 @@ def _gbt_chain_ctes(
     arms are unconditional scan it, and the first level guard reads it
     before its own error, so on an empty frame nz's error fires."""
     p_ = prefix
-    bin_cols = ", ".join(f"{_bin_sql(f, bins)} AS b_{f}" for f in features)
+    bin_cols = ", ".join(f"{_bin_sql(f)} AS b_{f}" for f in features)
     stack_case = " ".join(f"WHEN {i} THEN g.b_{f}" for i, f in enumerate(features))
     b_star = ", ".join(f"b_{f}" for f in features)
     sub = subsample is not None and subsample < 1.0
@@ -987,13 +977,7 @@ def _gbt_chain_ctes(
 
 
 def _gbt_replay_ctes(
-    prefix: str,
-    holdout_from: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    rounds: int = GBT_ROUNDS,
-    bins: int = GBT_BINS,
-    eta: float = GBT_ETA,
-    depth: int = 2,
+    prefix: str, holdout_from: str, rounds: int, eta: float, depth: int
 ) -> tuple[str, str]:
     """(cte_block, final_holdout_cte): replay the splits of the chain
     ``prefix`` trained on a holdout frame — per round, walk its
@@ -1001,8 +985,8 @@ def _gbt_replay_ctes(
     f += eta·w from lw{t} in the exact operation order rows{t} uses,
     so the holdout logit hr{t} is the same left-associated double the
     engine's compiled ensemble computes."""
-    p_ = prefix
-    bin_cols = ", ".join(f"{_bin_sql(f, bins)} AS b_{f}" for f in features)
+    p_, features = prefix, SCORE_FEATURES
+    bin_cols = ", ".join(f"{_bin_sql(f)} AS b_{f}" for f in features)
     stack_case = " ".join(f"WHEN {i} THEN g.b_{f}" for i, f in enumerate(features))
     all_fidx = ", ".join(f"({i})" for i in range(len(features)))
     st = f"{p_}hst"
@@ -1078,13 +1062,7 @@ def _auc_ctes(p_: str, scored: str, key: str | None = None) -> tuple[str, str]:
 
 
 def gbt_train_sql(
-    fv_sql: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    rounds: int = GBT_ROUNDS,
-    bins: int = GBT_BINS,
-    lam: float = GBT_LAMBDA,
-    eta: float = GBT_ETA,
-    weighted: bool = False,
+    fv_sql: str, features: tuple[str, ...] = SCORE_FEATURES, weighted: bool = False
 ) -> str:
     """Complete oracle for q_gbt_train (and its scale_pos_weight
     twin): one row per depth-2 tree — split features by NAME, split
@@ -1098,7 +1076,7 @@ def gbt_train_sql(
             f"CAST(sum(label) AS DOUBLE) AS n1 FROM ({fv_sql})),\n    "
         )
     ctes, _ = _gbt_chain_ctes(
-        fv_sql, features, rounds, bins, lam, eta,
+        fv_sql, features,
         pos_weight="(SELECT n0 / n1 FROM cnts)" if weighted else None,
     )
     fname = "CASE fidx " + " ".join(
@@ -1106,7 +1084,7 @@ def gbt_train_sql(
     ) + " END"
     w6 = R6_SQL.format(c="w")
     tree_sels = []
-    for t in range(1, rounds + 1):
+    for t in range(1, GBT_ROUNDS + 1):
         cols = [f"CAST({t - 1} AS INTEGER) AS tree"]
         for pos, node in (("root", 1), ("l", 2), ("r", 3)):
             src = f"FROM b{t}_{node // 2} WHERE node = {node}"
@@ -1125,25 +1103,18 @@ def gbt_train_sql(
     return f"WITH {cnts}{ctes}\n    " + "\n    UNION ALL\n    ".join(tree_sels)
 
 
-def gbt_importance_sql(
-    fv_sql: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    rounds: int = GBT_ROUNDS,
-    bins: int = GBT_BINS,
-    lam: float = GBT_LAMBDA,
-    eta: float = GBT_ETA,
-) -> str:
+def gbt_importance_sql(fv_sql: str) -> str:
     """Oracle for q_gbt_importance: total split gain per feature over
     all rounds×levels (XGBoost's gain-mode feature_importances_).
     Per-split gains round6 to decimals BEFORE summing so the per-
     feature total is order-independent across the UNION arms."""
-    ctes, _ = _gbt_chain_ctes(fv_sql, features, rounds, bins, lam, eta)
+    ctes, _ = _gbt_chain_ctes(fv_sql)
     splits = " UNION ALL ".join(
         f"SELECT fidx, gain FROM b{t}_{lvl}"
-        for t in range(1, rounds + 1)
+        for t in range(1, GBT_ROUNDS + 1)
         for lvl in range(2)
     )
-    fvals = ", ".join(f"({i}, '{f}')" for i, f in enumerate(features))
+    fvals = ", ".join(f"({i}, '{f}')" for i, f in enumerate(SCORE_FEATURES))
     g6 = R6_SQL.format(c="s.gain")
     return f"""WITH {ctes},
     splits AS ({splits})
@@ -1155,59 +1126,37 @@ def gbt_importance_sql(
     GROUP BY 1"""
 
 
-def gbt_learning_curve_sql(
-    fv_sql: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    rounds: int = GBT_ROUNDS,
-    bins: int = GBT_BINS,
-    lam: float = GBT_LAMBDA,
-    eta: float = GBT_ETA,
-) -> str:
+def gbt_learning_curve_sql(fv_sql: str) -> str:
     """Oracle for q_gbt_learning_curve: in-sample mean log-loss of
     the partial ensemble after each boosting round (round 0 = the
     constant 0-logit model) — the loss ladder that proves each tree
     earns its keep. Every rows{t} CTE already carries the partial
     logit f, so each arm is one aggregate over a MATERIALIZED frame."""
-    ctes, _ = _gbt_chain_ctes(fv_sql, features, rounds, bins, lam, eta)
+    ctes, _ = _gbt_chain_ctes(fv_sql)
     body = "\n    UNION ALL ".join(
         f"SELECT CAST({t} AS INTEGER) AS round, {_MEAN_LOSS_SQL} AS train_logloss "
         f"FROM rows{t}"
-        for t in range(rounds + 1)
+        for t in range(GBT_ROUNDS + 1)
     )
     return f"WITH {ctes}\n    {body}"
 
 
-def gbt_roc_sql(
-    fv_sql: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    rounds: int = GBT_ROUNDS,
-    bins: int = GBT_BINS,
-    lam: float = GBT_LAMBDA,
-    eta: float = GBT_ETA,
-) -> str:
+def gbt_roc_sql(fv_sql: str) -> str:
     """Oracle for q_gbt_roc: re-train via the unrolled rounds, then
     logreg_roc_sql's sweep tail (:data:`ROC_SWEEP_SQL`) — only the
     scored CTE differs."""
-    ctes, rows_k = _gbt_chain_ctes(fv_sql, features, rounds, bins, lam, eta)
+    ctes, rows_k = _gbt_chain_ctes(fv_sql)
     return f"""WITH {ctes},
     scored AS (SELECT label, {SIGMOID6_F_SQL} AS s FROM {rows_k}),
     {ROC_SWEEP_SQL}"""
 
 
-def gbt_score_band_sql(
-    fv_sql: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    rounds: int = GBT_ROUNDS,
-    bins: int = GBT_BINS,
-    lam: float = GBT_LAMBDA,
-    eta: float = GBT_ETA,
-    depth: int = 2,
-) -> str:
+def gbt_score_band_sql(fv_sql: str, depth: int = 2) -> str:
     """Complete oracle for q_gbt_train_score (and, at depth 3,
     q_gbt_deep_score): re-train via the unrolled rounds, score every
     row with the final ensemble logit, band 3-way, aggregate — the
     logreg_score_sql shape for trees."""
-    ctes, rows_k = _gbt_chain_ctes(fv_sql, features, rounds, bins, lam, eta, depth)
+    ctes, rows_k = _gbt_chain_ctes(fv_sql, depth=depth)
     mean_s = R6_SQL.format(
         c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*)"
     )
@@ -1215,11 +1164,7 @@ def gbt_score_band_sql(
     return f"""WITH {ctes},
     scored AS (SELECT label, {SIGMOID6_F_SQL} AS s FROM {rows_k}),
     banded AS (
-      SELECT label, s,
-             CASE WHEN s >= 0.7 THEN 'high'
-                  WHEN s >= 0.4 THEN 'medium'
-                  ELSE 'low' END AS risk_label
-      FROM scored
+      SELECT label, s, {RISK_LABEL_SQL.format(s="s")} AS risk_label FROM scored
     )
     SELECT risk_label, count(*) AS n, {mean_s} AS mean_score,
            {rate} AS event_rate
@@ -1248,8 +1193,6 @@ def train_gbt_grid(
     fv: DataFrame,
     configs=GBT_MS_CONFIGS,
     features: tuple[str, ...] = SCORE_FEATURES,
-    bins: int = GBT_BINS,
-    label: str = "label",
     scales: dict[str, float] | None = None,
 ) -> list[list[dict]]:
     """Fit EVERY grid config — a 4-, 5- or nine-axis tuple, widened by
@@ -1260,7 +1203,7 @@ def train_gbt_grid(
     per-config SQL oracle still gates them. At 100 TB each extra
     config adds ≤ 2^L·d·B integer cells to level L's map-side combine,
     never a scan (the job-count law in tests/test_gbt_deep.py)."""
-    return _fit(fv, [_cfg(*c) for c in configs], features, bins, label, scales)
+    return _fit(fv, [_cfg(*c) for c in configs], features, scales)
 
 
 #: The q_model_selection 80/20 train/holdout split as one (train,
@@ -1277,18 +1220,16 @@ def _split_ctes(fv_sql: str, splits=_HOLDOUT_80) -> list[str]:
     return parts
 
 
-def _trial_ctes(
-    prefix: str, f: int, cfg, features: tuple[str, ...], bins: int
-) -> tuple[str, str]:
+def _trial_ctes(prefix: str, f: int, cfg) -> tuple[str, str]:
     """(cte_block, final_holdout_cte): one grid config (a 4-, 5- or
     nine-axis tuple, widened by :func:`_cfg`) trained on tr{f} and
     replayed on va{f}."""
     _name, rounds, eta, lam, depth, sub, csam, mcw, alpha, spw = _cfg(*cfg)
     ctes, _ = _gbt_chain_ctes(
-        f"SELECT * FROM tr{f}", features, rounds, bins, lam, eta, depth,
+        f"SELECT * FROM tr{f}", SCORE_FEATURES, rounds, lam, eta, depth,
         sub, csam, prefix, mcw, alpha, spw,
     )
-    hctes, hk = _gbt_replay_ctes(prefix, f"va{f}", features, rounds, bins, eta, depth)
+    hctes, hk = _gbt_replay_ctes(prefix, f"va{f}", rounds, eta, depth)
     return f"{ctes},\n    {hctes}", hk
 
 
@@ -1310,7 +1251,7 @@ def _auc_score(p_: str, rows: str) -> tuple[str, str]:
 
 
 def _trial_parts(
-    fv_sql: str, configs, features: tuple[str, ...], bins: int, score, splits=_HOLDOUT_80
+    fv_sql: str, configs, score, splits=_HOLDOUT_80
 ) -> tuple[list[str], dict[tuple[int, int], str]]:
     """The selection scaffold: (CTE parts, {(split, config): score
     SQL}). Per (split f, config i) one chain on tr{f}, its replay on
@@ -1320,7 +1261,7 @@ def _trial_parts(
     for f in range(len(splits)):
         for i, cfg in enumerate(configs):
             p_ = f"k{f}c{i}_"
-            ctes, hk = _trial_ctes(p_, f, cfg, features, bins)
+            ctes, hk = _trial_ctes(p_, f, cfg)
             sctes, out[f, i] = score(p_, hk)
             parts += [ctes, sctes]
     return parts, out
@@ -1413,48 +1354,35 @@ def _selection_sql(
     FROM longf"""
 
 
-def gbt_model_selection_sql(
-    fv_sql: str,
-    configs=GBT_MS_CONFIGS,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    bins: int = GBT_BINS,
-) -> str:
+def gbt_model_selection_sql(fv_sql: str, configs=GBT_MS_CONFIGS) -> str:
     """Oracle for q_gbt_model_selection and, over the depth grid,
     q_gbt_depth_selection: hash-split train/holdout (the
     q_model_selection split), one unrolled boosting chain per config,
     a holdout split-replay per config, then per-config decimal-folded
     holdout log-loss and an is_best rank (val_logloss asc, config id
     tie-break)."""
-    parts, loss = _trial_parts(fv_sql, configs, features, bins, _loss_score)
+    parts, loss = _trial_parts(fv_sql, configs, _loss_score)
     scores = [("val_logloss", [loss[0, i] for i in range(len(configs))])]
     return _selection_sql(parts, configs, scores, "val_logloss")
 
 
-def gbt_retrain_best_sql(
-    fv_sql: str,
-    configs: tuple[tuple[str, int, float, float], ...] = GBT_MS_CONFIGS,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    bins: int = GBT_BINS,
-    gates: dict[str, float] | None = None,
-) -> str:
+def gbt_retrain_best_sql(fv_sql: str) -> str:
     """Oracle for q_retrain_best — the reference `train.py` main flow
     in one statement: the selection chains pick the winner, every
     config ALSO re-trains on the FULL frame with its card computed
     (SQL cannot branch the unrolled training on the data-dependent
     winner — the engine trains only the winner; this all-configs form
     is an oracle artifact), and the winner's card is gated against
-    the promotion floors."""
-    if gates is None:
-        from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.model_registry import QUALITY_GATES
+    the promotion floors (:data:`ext.model_registry.QUALITY_GATES`)."""
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.model_registry import QUALITY_GATES
 
-        gates = QUALITY_GATES
-
-    parts, loss = _trial_parts(fv_sql, configs, features, bins, _loss_score)
+    configs, gates = GBT_MS_CONFIGS, QUALITY_GATES
+    parts, loss = _trial_parts(fv_sql, configs, _loss_score)
     card_arms = []
     for i, (name, rounds, eta, lam) in enumerate(configs):
         p_ = f"f{i}_"
         ctes, rk = _gbt_chain_ctes(
-            "SELECT * FROM base", features, rounds, bins, lam, eta, prefix=p_
+            "SELECT * FROM base", rounds=rounds, lam=lam, eta=eta, prefix=p_
         )
         parts.append(ctes)
         parts.append(f"{p_}scored AS (SELECT label, {SIGMOID6_F_SQL} AS s FROM {rk})")
@@ -1488,25 +1416,16 @@ def gbt_retrain_best_sql(
     FROM wcard CROSS JOIN win w CROSS JOIN (VALUES {gate_vals}) g(metric, floor)"""
 
 
-def _ladder_parts(
-    fv_sql: str, prefix: str, cfg, features: tuple[str, ...], bins: int, arm
-) -> list[str]:
+def _ladder_parts(fv_sql: str, prefix: str, cfg, arm) -> list[str]:
     """The early-stopping scaffold: the 80/20 split, one chain on tr0
     and its replay on va0, then ``lad`` — per round t the
     ``arm(t, holdout_rows_t)`` select, UNION ALL."""
-    ctes, _hk = _trial_ctes(prefix, 0, cfg, features, bins)
+    ctes, _hk = _trial_ctes(prefix, 0, cfg)
     arms = "\n      UNION ALL ".join(arm(t, f"{prefix}hr{t}") for t in range(cfg[1] + 1))
     return [*_split_ctes(fv_sql), ctes, f"lad AS ({arms})"]
 
 
-def gbt_early_stop_sql(
-    fv_sql: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    rounds: int = GBT_ROUNDS,
-    bins: int = GBT_BINS,
-    lam: float = GBT_LAMBDA,
-    eta: float = GBT_ETA,
-) -> str:
+def gbt_early_stop_sql(fv_sql: str) -> str:
     """Oracle for q_gbt_early_stop: train on the hash-split train
     fold, replay the splits on the holdout fold, emit the per-round
     HOLDOUT log-loss ladder, then apply the patience-1 rule in SQL:
@@ -1514,7 +1433,7 @@ def gbt_early_stop_sql(
     (eval_set + early_stopping_rounds, `fraud_detector.py:157,246`);
     is_best marks the argmin among reached rounds."""
     parts = _ladder_parts(
-        fv_sql, "es_", ("es", rounds, eta, lam), features, bins,
+        fv_sql, "es_", ("es", GBT_ROUNDS, GBT_ETA, GBT_LAMBDA),
         lambda t, rows: (
             f"SELECT CAST({t} AS INTEGER) AS round, {_MEAN_LOSS_SQL} AS val_logloss "
             f"FROM {rows}"
@@ -1533,7 +1452,7 @@ def gbt_early_stop_sql(
     )
     parts.append(
         f"sp AS (SELECT coalesce(min(CASE WHEN improved = 0 THEN round END), "
-        f"{rounds}) AS stop_at FROM fl)"
+        f"{GBT_ROUNDS}) AS stop_at FROM fl)"
     )
     cte_block = ",\n    ".join(parts)
     return f"""WITH {cte_block}
@@ -1548,15 +1467,7 @@ def gbt_early_stop_sql(
     FROM fl f CROSS JOIN sp s"""
 
 
-def gbt_early_stop_auc_sql(
-    fv_sql: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    rounds: int = GBT_ROUNDS,
-    bins: int = GBT_BINS,
-    lam: float = GBT_LAMBDA,
-    eta: float = GBT_ETA,
-    patience: int = 2,
-) -> str:
+def gbt_early_stop_auc_sql(fv_sql: str, patience: int = 2) -> str:
     """Oracle for q_gbt_early_stop_auc: train on the hash-split train
     fold, replay the splits on the holdout fold, emit the per-round
     HOLDOUT rank-sum AUC ladder (:func:`_auc_ctes` keyed by round),
@@ -1566,7 +1477,7 @@ def gbt_early_stop_auc_sql(
     eval_metric='auc' + early_stopping_rounds, `fraud_detector.py:
     245-247`); is_best marks the argmax among reached rounds."""
     parts = _ladder_parts(
-        fv_sql, "esa_", ("esa", rounds, eta, lam), features, bins,
+        fv_sql, "esa_", ("esa", GBT_ROUNDS, GBT_ETA, GBT_LAMBDA),
         lambda t, rows: (
             f"SELECT CAST({t} AS INTEGER) AS round, {SIGMOID6_F_SQL} AS s, label FROM {rows}"
         ),
@@ -1593,7 +1504,7 @@ def gbt_early_stop_auc_sql(
     )
     parts.append(
         f"sp AS (SELECT coalesce(min(CASE WHEN streak >= {patience} "
-        f"THEN round END), {rounds}) AS stop_at FROM st)"
+        f"THEN round END), {GBT_ROUNDS}) AS stop_at FROM st)"
     )
     cte_block = ",\n    ".join(parts)
     return f"""WITH {cte_block}

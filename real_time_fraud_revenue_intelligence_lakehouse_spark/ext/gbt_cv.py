@@ -52,7 +52,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
-    GBT_BINS,
     GBT_MS_CONFIGS,
     _auc_score,
     _binned_frame,
@@ -78,22 +77,19 @@ _H60_FOLD = H60_SQL.format(x="o_orderkey::VARCHAR") + " % {folds}"
 def gbt_cv_fold_aucs(
     fv: DataFrame,
     configs=GBT_MS_CONFIGS,
-    folds: int = CV_FOLDS,
     features: tuple[str, ...] = SCORE_FEATURES,
     scales: dict[str, float] | None = None,
 ) -> list[list[float]]:
     """The one holdout scorer: ``out[cfg][fold]`` round6 AUCs of every
     config (a 4-, 5- or nine-axis tuple, widened by :func:`_cfg`)
-    under ``folds``-fold CV. ONE compressed frame, built here from the
+    under CV_FOLDS-fold CV. ONE compressed frame, built here from the
     same configs, feeds both the engine and the per-fold holdout
     scoring (the held-out rows are exactly the frame's ``__fold == f``
     vectors, weighted by __cnt); it is released when the call ends,
     also on failure."""
-    configs = [_cfg(*c) for c in configs]
+    configs, folds = [_cfg(*c) for c in configs], CV_FOLDS
     fold_col = F.pmod(hash60(F.col("o_orderkey").cast("string")), F.lit(folds))
-    binned = _binned_frame(
-        fv, configs, features, GBT_BINS, "label", scales, fold_col
-    ).persist()
+    binned = _binned_frame(fv, configs, features, scales, fold_col).persist()
     k = len(configs)
     etas = [c[2] for c in configs]
     try:
@@ -131,22 +127,17 @@ def cv_scores(aucs: list[list[float]]) -> list[tuple[str, list[float]]]:
     ]
 
 
-def gbt_cv_selection_sql(
-    fv_sql: str,
-    configs=GBT_MS_CONFIGS,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    bins: int = GBT_BINS,
-    folds: int = CV_FOLDS,
-) -> str:
+def gbt_cv_selection_sql(fv_sql: str, configs=GBT_MS_CONFIGS) -> str:
     """Oracle for q_model_selection_cv and, over nine-axis trials,
     q_model_selection_cv_full: per (fold, config) an unrolled boosting
     chain carrying all of the config's axes on the fold complement, a
     split-replay on the held-out fold and a rank-sum AUC; per config
     the round6 left-associated mean of its fold AUCs; is_best ranks by
     (cv_auc DESC, config)."""
+    folds = CV_FOLDS
     fold = _H60_FOLD.format(folds=folds)
     splits = tuple((f"{fold} <> {f}", f"{fold} = {f}") for f in range(folds))
-    parts, auc = _trial_parts(fv_sql, configs, features, bins, _auc_score, splits)
+    parts, auc = _trial_parts(fv_sql, configs, _auc_score, splits)
     cfgs = range(len(configs))
     scores = [(f"auc_fold{f}", [auc[f, i] for i in cfgs]) for f in range(folds)]
     scores.append((

@@ -57,7 +57,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
-    GBT_BINS,
     GBT_ETA,
     GBT_LAMBDA,
     GBT_ROUNDS,
@@ -88,11 +87,9 @@ def train_gbt_deep(
     fv: DataFrame,
     features: tuple[str, ...] = SCORE_FEATURES,
     rounds: int = GBT_ROUNDS,
-    bins: int = GBT_BINS,
     lam: float = GBT_LAMBDA,
     eta: float = GBT_ETA,
     depth: int = GBT_DEPTH,
-    label: str = "label",
     scales: dict[str, float] | None = None,
     subsample: float | None = None,
     colsample: float | None = None,
@@ -120,7 +117,7 @@ def train_gbt_deep(
     At depth=2 the trees are :func:`ext.gbt.train_gbt`'s exactly."""
     cfg = _cfg("", rounds, eta, lam, depth, subsample, colsample,
                min_child_weight, reg_alpha, pos_weight)
-    return _fit(fv, [cfg], features, bins, label, scales)[0]
+    return _fit(fv, [cfg], features, scales)[0]
 
 
 # --- generated DuckDB oracle -----------------------------------------------------
@@ -130,9 +127,6 @@ def gbt_train_deep_sql(
     fv_sql: str,
     features: tuple[str, ...] = SCORE_FEATURES,
     rounds: int = GBT_ROUNDS,
-    bins: int = GBT_BINS,
-    lam: float = GBT_LAMBDA,
-    eta: float = GBT_ETA,
     depth: int = GBT_DEPTH,
     subsample: float | None = None,
     colsample: float | None = None,
@@ -147,8 +141,8 @@ def gbt_train_deep_sql(
     non-terminal split rows carry w_left = w_right = 0.0 and
     is_leaf_parent = 0."""
     ctes, _ = _gbt_chain_ctes(
-        fv_sql, features, rounds, bins, lam, eta, depth, subsample, colsample,
-        min_child_weight=min_child_weight, reg_alpha=reg_alpha,
+        fv_sql, features, rounds, depth=depth, subsample=subsample,
+        colsample=colsample, min_child_weight=min_child_weight, reg_alpha=reg_alpha,
     )
     fname_case = " ".join(
         f"WHEN {i} THEN '{f}'" for i, f in enumerate(features)
@@ -237,10 +231,8 @@ def _sampled_trials(n: int, prefix: str, space) -> tuple:
     )
 
 
-def sampled_search_configs(
-    n: int = RS_TRIALS,
-) -> tuple[tuple[str, int, float, float, int], ...]:
-    """The reference's RANDOM hyperparameter search
+def sampled_search_configs() -> tuple[tuple[str, int, float, float, int], ...]:
+    """:data:`RS_TRIALS` draws of the reference's RANDOM hyperparameter search
     (`fraud_detector.py:274`: study.optimize(n_trials=30)) without an
     RNG: each trial's draw for each dimension is an md5 bucket of
     "trial-<i>#<param>" — bit-stable across processes, machines, and
@@ -250,7 +242,7 @@ def sampled_search_configs(
     collide (two draws of the same config) exactly like a real
     random study; ranking tie-breaks on trial id. Sweeps rounds, eta,
     λ and depth (the first four :data:`_STUDY_SPACE` dimensions)."""
-    return _sampled_trials(n, "t", _STUDY_SPACE[:4])
+    return _sampled_trials(RS_TRIALS, "t", _STUDY_SPACE[:4])
 
 
 def grid_holdout_aucs(
@@ -271,26 +263,21 @@ def grid_holdout_aucs(
     vab = va.select(
         "label",
         F.lit(1).alias("__cnt"),
-        *[_bin_expr(f, scales, GBT_BINS).alias(f"b_{f}") for f in features],
+        *[_bin_expr(f, scales).alias(f"b_{f}") for f in features],
     )
     etas = [c[2] for c in configs]
     auc = _rank_sum_aucs(_stack_scores(vab, trees_all, etas, features), ("cfg",))
     return [auc[(i,)] for i in range(len(configs))]
 
 
-def gbt_random_search_sql(
-    fv_sql: str,
-    configs=None,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    bins: int = GBT_BINS,
-) -> str:
+def gbt_random_search_sql(fv_sql: str, configs=None) -> str:
     """Oracle for q_gbt_random_search and, over nine-axis trials,
     q_gbt_random_search_full: per sampled trial one unrolled boosting
     chain carrying all of the trial's axes on the hash-split train
     fold, its holdout replay and a rank-sum AUC; is_best ranks by
     (val_auc DESC, config)."""
     configs = sampled_search_configs() if configs is None else configs
-    parts, auc = _trial_parts(fv_sql, configs, features, bins, _auc_score)
+    parts, auc = _trial_parts(fv_sql, configs, _auc_score)
     scores = [("val_auc", [auc[0, i] for i in range(len(configs))])]
     return _selection_sql(parts, configs, scores, "val_auc DESC")
 
@@ -303,12 +290,12 @@ def gbt_random_search_sql(
 RS_FULL_TRIALS = 8
 
 
-def sampled_search_configs_full(n: int = RS_FULL_TRIALS) -> tuple[FullConfig, ...]:
-    """:func:`sampled_search_configs` extended to the study's FULL
+def sampled_search_configs_full() -> tuple[FullConfig, ...]:
+    """:func:`sampled_search_configs` (:data:`RS_FULL_TRIALS` draws) extended to the study's FULL
     space — every Optuna dimension of `fraud_detector.py:249-267`
     (:data:`_STUDY_SPACE`) drawn per trial from the same md5 buckets
     (RNG-free, bit-stable; the oracle unrolls the identical draws).
     The stochastic axes draw from the gated domain at the correctness
     scales (sf0.01/sf0.1) — like every GBT id, the toy sf0.001 frame
     is out of domain for depth-3 trials."""
-    return _sampled_trials(n, "f", _STUDY_SPACE)
+    return _sampled_trials(RS_FULL_TRIALS, "f", _STUDY_SPACE)

@@ -154,15 +154,12 @@ QUALITY_GATES: dict[str, float] = {
 }
 
 
-def quality_gate(
-    metrics: dict, gates: dict[str, float] | None = None
-) -> tuple[bool, dict]:
-    """(passed, report): every gated metric must exist and clear its
-    floor — a MISSING metric rejects, exactly like the DAG's
-    can't-read-metrics branch (`ml_training_dag.py:59-61`)."""
-    gates = QUALITY_GATES if gates is None else gates
+def quality_gate(metrics: dict) -> tuple[bool, dict]:
+    """(passed, report): every :data:`QUALITY_GATES` metric must exist
+    and clear its floor — a MISSING metric rejects, exactly like the
+    DAG's can't-read-metrics branch (`ml_training_dag.py:59-61`)."""
     report = {}
-    for name, floor in gates.items():
+    for name, floor in QUALITY_GATES.items():
         value = metrics.get(name)
         report[name] = {
             "value": value,
@@ -178,7 +175,6 @@ def promote_model(
     params: dict,
     features: list[str],
     metrics: dict,
-    gates: dict[str, float] | None = None,
 ) -> tuple[int | None, dict]:
     """The DAG's quality_gate → promote_model/reject_model branch
     (`ml_training_dag.py:51-75,145-165`) against this registry:
@@ -186,7 +182,7 @@ def promote_model(
     never becomes a version, so serving (which loads the head) can't
     regress. Returns (version | None, gate_report); the report is
     stored on promoted models under metrics['gate_report']."""
-    passed, report = quality_gate(metrics, gates)
+    passed, report = quality_gate(metrics)
     if not passed:
         return None, report
     doc_metrics = dict(metrics)

@@ -140,8 +140,12 @@ def resize_media(df: DataFrame, target_w: int = 256, target_h: int = 256) -> Dat
     )
 
 
-def frame_sample(df: DataFrame, every_n: int = 4) -> DataFrame:
-    """Frame-sampling stand-in: keep every ``every_n``-th payload by
+#: Frame-sampling rate: one payload in this many survives.
+FRAME_EVERY_N = 4
+
+
+def frame_sample(df: DataFrame) -> DataFrame:
+    """Frame-sampling stand-in: keep every :data:`FRAME_EVERY_N`-th payload by
     content hash — the shape of a video frame-sampling stage (filter
     before decode, so skipped frames never reach the codec).
 
@@ -150,7 +154,7 @@ def frame_sample(df: DataFrame, every_n: int = 4) -> DataFrame:
     is the portable binary→text bridge for oracle parity."""
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
 
-    return df.filter(hash60(F.hex(F.col("payload"))) % every_n == 0)
+    return df.filter(hash60(F.hex(F.col("payload"))) % FRAME_EVERY_N == 0)
 
 
 def frame_windows(

@@ -27,9 +27,9 @@ from pyspark.sql import functions as F
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
 
 
-def split_bucket(id_col: Column, buckets: int = 100) -> Column:
-    """Stable [0, buckets) assignment from the id's md5."""
-    return hash60(id_col.cast("string")) % buckets
+def split_bucket(id_col: Column) -> Column:
+    """Stable [0, 100) assignment from the id's md5."""
+    return hash60(id_col.cast("string")) % 100
 
 
 def hash_split(

@@ -151,13 +151,12 @@ def scaler_ctes(
     return ",\n    ".join(parts), f"{p_}scstats"
 
 
-def scaler_stats_sql(
-    fv_sql: str, features: tuple[str, ...] = SCORE_FEATURES
-) -> str:
+def scaler_stats_sql(fv_sql: str) -> str:
     """Complete oracle for q_standard_scale_train: one
     (feature, mu, sd) row per feature (the unpivot reads the 1-row
     stats CTE once — the logreg_weights_sql VALUES-cross-join
     discipline)."""
+    features = SCORE_FEATURES
     ctes, sk = scaler_ctes(fv_sql, features)
     values = ", ".join(f"('{f}')" for f in features)
     mu_case = " ".join(f"WHEN '{f}' THEN mu_{f}" for f in features)

@@ -53,23 +53,38 @@ def weight(feature: str) -> float:
     return (int(h[:15], 16) % 1000) / 1000.0 - 0.5
 
 
-def logit_expr(features: tuple[str, ...] = SCORE_FEATURES) -> Column:
+def logit_expr() -> Column:
     z: Column = F.lit(float(BIAS))
-    for f in features:
+    for f in SCORE_FEATURES:
         z = z + F.lit(weight(f)) * F.col(f).cast("double")
     return z
 
 
-def score_expr(features: tuple[str, ...] = SCORE_FEATURES) -> Column:
+def score_expr() -> Column:
     """P(fraud) = sigmoid(w·x + b) as a pure Catalyst expression."""
-    z = logit_expr(features)
+    z = logit_expr()
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
+
+
+#: The 3-way risk band's cuts (`fraud_summary.py:117-133`): high at
+#: or above RISK_HIGH, medium at or above RISK_MEDIUM, else low.
+RISK_HIGH = 0.7
+RISK_MEDIUM = 0.4
+
+
+#: SQL twin of :func:`risk_label` over a score expression ``{s}``.
+RISK_LABEL_SQL = (
+    f"CASE WHEN {{s}} >= {RISK_HIGH} THEN 'high' "
+    f"WHEN {{s}} >= {RISK_MEDIUM} THEN 'medium' ELSE 'low' END"
+)
 
 
 def risk_label(score: Column) -> Column:
     """3-way banding, mirroring `fraud_summary.py:117-133`."""
     return (
-        F.when(score >= 0.7, "high").when(score >= 0.4, "medium").otherwise("low")
+        F.when(score >= RISK_HIGH, "high")
+        .when(score >= RISK_MEDIUM, "medium")
+        .otherwise("low")
     )
 
 
@@ -119,10 +134,11 @@ def _seeded(tag: str, lo: float, hi: float) -> float:
     return lo + (int(h[:15], 16) % 10_000) / 10_000.0 * (hi - lo)
 
 
-def tree_spec(t: int, features: tuple[str, ...] = SCORE_FEATURES) -> dict:
+def tree_spec(t: int) -> dict:
     """Depth-2 tree t: root split + two child splits + 4 leaf values.
-    Pure function of (t, features) — the single source of truth for
-    the Spark expression and the SQL oracle."""
+    Pure function of (t, SCORE_FEATURES) — the single source of truth
+    for the Spark expression and the SQL oracle."""
+    features = SCORE_FEATURES
     n = len(features)
     f_root = features[int(hashlib.md5(f"t{t}:root".encode()).hexdigest()[:8], 16) % n]
     f_l = features[int(hashlib.md5(f"t{t}:l".encode()).hexdigest()[:8], 16) % n]
@@ -150,30 +166,26 @@ def _tree_expr(spec: dict) -> Column:
     return F.when(F.col(fr).cast("double") < tr, left).otherwise(right)
 
 
-def gbt_logit_expr(
-    n_trees: int = N_TREES, features: tuple[str, ...] = SCORE_FEATURES
-) -> Column:
+def gbt_logit_expr(n_trees: int = N_TREES) -> Column:
     z: Column = F.lit(float(GBT_BIAS))
     for t in range(n_trees):
-        z = z + _tree_expr(tree_spec(t, features))
+        z = z + _tree_expr(tree_spec(t))
     return z
 
 
-def gbt_score_expr(
-    n_trees: int = N_TREES, features: tuple[str, ...] = SCORE_FEATURES
-) -> Column:
+def gbt_score_expr(n_trees: int = N_TREES) -> Column:
     """P(fraud) from the tree ensemble — sigmoid(bias + Σ tree_t(x))."""
-    z = gbt_logit_expr(n_trees, features)
+    z = gbt_logit_expr(n_trees)
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
 
 
-def gbt_sql(n_trees: int = N_TREES, features: tuple[str, ...] = SCORE_FEATURES) -> str:
-    """The ensemble logit as ANSI SQL (DuckDB oracle twin), generated
-    from the same tree specs — term order matches gbt_logit_expr so
-    double accumulation is bit-identical."""
+def gbt_sql() -> str:
+    """The :data:`N_TREES` ensemble logit as ANSI SQL (DuckDB oracle
+    twin), generated from the same tree specs — term order matches
+    gbt_logit_expr so double accumulation is bit-identical."""
     terms = [repr(float(GBT_BIAS))]
-    for t in range(n_trees):
-        s = tree_spec(t, features)
+    for t in range(N_TREES):
+        s = tree_spec(t)
         fr, tr = s["root"]
         fl, tl = s["left"]
         frr, trr = s["right"]

@@ -60,12 +60,11 @@ import math
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
     GBT_BINS,
     GBT_ETA,
-    GBT_LAMBDA,
     GBT_ROUNDS,
     _bin_expr,
     _gbt_chain_ctes,
 )
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import RISK_LABEL_SQL, SCORE_FEATURES
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R6_SQL, SIGMOID6_F_SQL
 
 #: The deepest tree the exact engine explains (128 branch patterns).
@@ -168,7 +167,6 @@ def tree_covers(
     trees: list[dict],
     features: tuple[str, ...] = SCORE_FEATURES,
     scales: dict[str, float] | None = None,
-    bins: int = GBT_BINS,
 ) -> list[dict[int, int]]:
     """Per-tree training covers {heap node: row count} from ONE count
     aggregate over the feature frame: a node's reach is its parent's
@@ -183,7 +181,7 @@ def tree_covers(
         reach = {1: F.lit(True)}
         for k in _internal(tr):
             fidx, b = tr["splits"][k]
-            ind = _bin_expr(features[fidx], scales, bins) <= b
+            ind = _bin_expr(features[fidx], scales) <= b
             reach[2 * k] = reach[k] & ind
             reach[2 * k + 1] = reach[k] & ~ind
         for node in nodes[t]:
@@ -196,7 +194,7 @@ def tree_covers(
 
 
 def _pattern_sql(
-    tree: dict, features: tuple[str, ...], scales: dict[str, float] | None, bins: int
+    tree: dict, features: tuple[str, ...], scales: dict[str, float] | None
 ) -> str:
     """The row's branch pattern Σ i_k · 2^(k−1) as SQL text over RAW
     feature columns; each bin is rendered byte-for-byte as
@@ -208,7 +206,7 @@ def _pattern_sql(
         fidx, b = tree["splits"][k]
         bin_sql = (
             f"CAST(least(greatest(floor(({_x_sql(features[fidx], scales)})"
-            f" * {float(bins)!r}), 0), {bins - 1}) AS BIGINT)"
+            f" * {float(GBT_BINS)!r}), 0), {GBT_BINS - 1}) AS BIGINT)"
         )
         terms.append(f"(CAST(({bin_sql} <= {int(b)}) AS INT) * {1 << (k - 1)})")
     return "(" + " + ".join(terms) + ")"
@@ -218,13 +216,12 @@ def branch_pattern(
     tree: dict,
     features: tuple[str, ...] = SCORE_FEATURES,
     scales: dict[str, float] | None = None,
-    bins: int = GBT_BINS,
 ):
     """The row's branch pattern over RAW feature columns — the index
     :func:`shap_terms` keys its table by."""
     from pyspark.sql import functions as F
 
-    return F.expr(_pattern_sql(tree, features, scales, bins))
+    return F.expr(_pattern_sql(tree, features, scales))
 
 
 def shap_phi_columns(
@@ -232,7 +229,6 @@ def shap_phi_columns(
     tables: list[dict[int, dict[int, int]]],
     features: tuple[str, ...] = SCORE_FEATURES,
     scales: dict[str, float] | None = None,
-    bins: int = GBT_BINS,
 ) -> list:
     """Per-feature φ6 Spark columns ``phi6_<feature>`` for a fitted
     ensemble, given the per-(tree, branch-pattern) tables
@@ -244,7 +240,7 @@ def shap_phi_columns(
     (streaming/scoring.explain_stream rides them inside ingest)."""
     from pyspark.sql import functions as F
 
-    pats = [_pattern_sql(tr, features, scales, bins) for tr in trees]
+    pats = [_pattern_sql(tr, features, scales) for tr in trees]
     cols = []
     for fidx in range(len(features)):
         col = F.lit(0).cast("long")
@@ -268,15 +264,7 @@ def shap_phi_columns(
 # --- generated DuckDB oracle -------------------------------------------------
 
 
-def _shap_ctes(
-    fv_sql: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    rounds: int = GBT_ROUNDS,
-    bins: int = GBT_BINS,
-    lam: float = GBT_LAMBDA,
-    eta: float = GBT_ETA,
-    depth: int = 2,
-) -> list[str]:
+def _shap_ctes(fv_sql: str, depth: int = 2) -> list[str]:
     """The TreeSHAP oracle's CTE parts, through the per-row
     per-feature φ6 table (``phis``) and the score banding
     (``banded``), for the depth-``depth`` booster (depth ≤
@@ -290,7 +278,7 @@ def _shap_ctes(
     micro-floor each term."""
     if depth > MAX_SHAP_DEPTH:
         raise ValueError(f"exact TreeSHAP explains trees of depth <= {MAX_SHAP_DEPTH}")
-    ctes, rows_k = _gbt_chain_ctes(fv_sql, features, rounds, bins, lam, eta, depth)
+    ctes, rows_k = _gbt_chain_ctes(fv_sql, depth=depth)
     internal = range(1, 1 << depth)
     leaves = range(1 << depth, 2 << depth)
     size = " + ".join(f"((p.m >> {i}) & 1)" for i in range(len(internal)))
@@ -313,7 +301,7 @@ def _shap_ctes(
     v1 = v(1, lambda k: f"(({m1} >> (rk.r{k} - 1)) & 1)")
     masks = ", ".join(f"({m})" for m in range(1 << len(internal)))
     parts = [ctes]
-    for t in range(1, rounds + 1):
+    for t in range(1, GBT_ROUNDS + 1):
 
         def cover(k: int, t=t) -> str:
             lvl = k.bit_length() - 1
@@ -367,7 +355,7 @@ def _shap_ctes(
         )
         parts.append(
             f"terms{t} AS (SELECT i.o_orderkey, p.fidx, "
-            f"CAST(floor(({coef} * ({v1} - {v0})) * {eta!r} * 1000000.0 + 0.5) "
+            f"CAST(floor(({coef} * ({v1} - {v0})) * {GBT_ETA!r} * 1000000.0 + 0.5) "
             f"AS BIGINT) AS t6 "
             f"FROM ind{t} i CROSS JOIN pm{t} p CROSS JOIN covs{t} "
             f"CROSS JOIN struct{t} CROSS JOIN rks{t} rk)"
@@ -376,35 +364,25 @@ def _shap_ctes(
             f"phi{t} AS MATERIALIZED (SELECT o_orderkey, fidx, "
             f"sum(t6) AS p6 FROM terms{t} GROUP BY 1, 2)"
         )
-    phi_arms = " UNION ALL ".join(f"SELECT * FROM phi{t}" for t in range(1, rounds + 1))
+    phi_arms = " UNION ALL ".join(f"SELECT * FROM phi{t}" for t in range(1, GBT_ROUNDS + 1))
     parts.append(
         f"phis AS MATERIALIZED (SELECT o_orderkey, fidx, sum(p6) AS p6 FROM ("
         f"{phi_arms}) GROUP BY 1, 2)"
     )
     parts.append(
         f"banded AS MATERIALIZED (SELECT o_orderkey, "
-        f"CASE WHEN {SIGMOID6_F_SQL} >= 0.7 THEN 'high' "
-        f"WHEN {SIGMOID6_F_SQL} >= 0.4 THEN 'medium' ELSE 'low' END AS risk_label "
-        f"FROM {rows_k})"
+        f"{RISK_LABEL_SQL.format(s=SIGMOID6_F_SQL)} AS risk_label FROM {rows_k})"
     )
     return parts
 
 
-def gbt_shap_sql(
-    fv_sql: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    rounds: int = GBT_ROUNDS,
-    bins: int = GBT_BINS,
-    lam: float = GBT_LAMBDA,
-    eta: float = GBT_ETA,
-    depth: int = 2,
-) -> str:
+def gbt_shap_sql(fv_sql: str, depth: int = 2) -> str:
     """Complete oracle for q_gbt_shap (and, at depth 3,
     q_gbt_shap_deep): the :func:`_shap_ctes` φ6 table, aggregated to
     mean φ / mean |φ| per (risk band, feature) over the full feature
     grid."""
-    parts = _shap_ctes(fv_sql, features, rounds, bins, lam, eta, depth)
-    fvals = ", ".join(f"({i}, '{f}')" for i, f in enumerate(features))
+    parts = _shap_ctes(fv_sql, depth)
+    fvals = ", ".join(f"({i}, '{f}')" for i, f in enumerate(SCORE_FEATURES))
     mean_phi = R6_SQL.format(c="CAST(sum(p6) AS DOUBLE) / count(*) / 1000000.0")
     mean_abs = R6_SQL.format(c="CAST(sum(abs(p6)) AS DOUBLE) / count(*) / 1000000.0")
     cte_block = ",\n    ".join(parts)
@@ -420,20 +398,13 @@ def gbt_shap_sql(
     FROM grid GROUP BY 1, 2"""
 
 
-def gbt_shap_top_sql(
-    fv_sql: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    rounds: int = GBT_ROUNDS,
-    bins: int = GBT_BINS,
-    lam: float = GBT_LAMBDA,
-    eta: float = GBT_ETA,
-) -> str:
+def gbt_shap_top_sql(fv_sql: str) -> str:
     """Complete oracle for q_gbt_shap_top: per row, the feature with
     the largest |φ6| (FIRST index on ties — matching the engine's
     array_position-of-max fold), aggregated per (risk band, top
     feature) with the mean |φ| it carried when on top."""
-    parts = _shap_ctes(fv_sql, features, rounds, bins, lam, eta)
-    fvals = ", ".join(f"({i}, '{f}')" for i, f in enumerate(features))
+    parts = _shap_ctes(fv_sql)
+    fvals = ", ".join(f"({i}, '{f}')" for i, f in enumerate(SCORE_FEATURES))
     mean_abs = R6_SQL.format(c="CAST(sum(abs(p6)) AS DOUBLE) / count(*) / 1000000.0")
     cte_block = ",\n    ".join(parts)
     return f"""WITH {cte_block},

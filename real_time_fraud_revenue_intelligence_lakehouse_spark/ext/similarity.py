@@ -53,6 +53,11 @@ N_TABLES = 8
 PLANES_PER_TABLE = 4
 EMBED_DIM = 64
 
+#: Digits every cosine similarity det-rounds to before ranking — the
+#: oracles round with det_round_sql(…, SIM_DIGITS), so both engines
+#: rank the same values.
+SIM_DIGITS = 6
+
 
 def _plane_value(table: int, plane: int, dim: int) -> float:
     """Deterministic pseudo-random plane component in [-1, 1):
@@ -61,10 +66,11 @@ def _plane_value(table: int, plane: int, dim: int) -> float:
     return (int(h[:15], 16) % 2000) / 1000.0 - 1.0
 
 
-def hyperplanes(
-    table: int, n_planes: int = PLANES_PER_TABLE, dim: int = EMBED_DIM
-) -> list[list[float]]:
-    return [[_plane_value(table, p, d) for d in range(dim)] for p in range(n_planes)]
+def hyperplanes(table: int) -> list[list[float]]:
+    return [
+        [_plane_value(table, p, d) for d in range(EMBED_DIM)]
+        for p in range(PLANES_PER_TABLE)
+    ]
 
 
 def as_double(vec: Column) -> Column:
@@ -127,7 +133,6 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Exact cosine top-k per query vector. Ties break on corpus id so
     results are deterministic; similarity is rounded *before* ranking
@@ -162,7 +167,7 @@ def brute_force_topk(
             "match_id",
             det_round(
                 dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-                round_digits,
+                SIM_DIGITS,
             ).alias("cosine_sim"),
         )
     )
@@ -192,7 +197,6 @@ def brute_force_top1(
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Exact nearest neighbor (k=1) over PRE-NORMALIZED vectors via a
     single max-aggregate — the two embedding-depth optimizations from
@@ -231,7 +235,7 @@ def brute_force_top1(
         .select(
             "query_id",
             "match_id",
-            det_round(dot(F.col("qv"), F.col("cv")), round_digits).alias("cosine_sim"),
+            det_round(dot(F.col("qv"), F.col("cv")), SIM_DIGITS).alias("cosine_sim"),
         )
     )
     best = scored.groupBy("query_id").agg(
@@ -248,17 +252,17 @@ def brute_force_top1(
     )
 
 
+#: The embedding near-dup cut: pairs with cosine ≥ this.
+NEARDUP_COSINE = 0.35
+
+
 def neardup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.35,
-    round_digits: int = 6,
+    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
-    """All pairs with cosine ≥ threshold — the embedding near-dup
-    tier's exact form, meant for a (sampled) corpus; the scale path
-    takes candidates from the LSH/IVF index first and applies this
-    threshold to candidates only.
+    """All pairs with cosine ≥ :data:`NEARDUP_COSINE` — the embedding
+    near-dup tier's exact form, meant for a (sampled) corpus; the
+    scale path takes candidates from the LSH/IVF index first and
+    applies this threshold to candidates only.
 
     Fully distributed: norms projected once per side (JVM fold), the
     ``id_a < id_b`` self-join generates pairs on executors, and the
@@ -276,12 +280,12 @@ def neardup_pairs(
     b = v.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
     seq_dot = seq_dot_pandas_udf()
     sim = det_round(
-        seq_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), round_digits
+        seq_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), SIM_DIGITS
     )
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", sim.alias("cosine_sim"))
-        .filter(F.col("cosine_sim") >= threshold)
+        .filter(F.col("cosine_sim") >= NEARDUP_COSINE)
     )
 
 
@@ -298,7 +302,6 @@ def ivf_assignments(
     centroids: DataFrame,
     nprobe: int = 1,
     id_col: str = "vec_id",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Assign each vector to its ``nprobe`` nearest centroids by
     cosine (rounded before ranking; centroid-id tie-break).
@@ -323,7 +326,7 @@ def ivf_assignments(
         id_col,
         "centroid_id",
         det_round(
-            dot(F.col("v"), F.col("cv")) / (F.col("vn") * F.col("cn")), round_digits
+            dot(F.col("v"), F.col("cv")) / (F.col("vn") * F.col("cn")), SIM_DIGITS
         ).alias("centroid_sim"),
     )
     w = Window.partitionBy(id_col).orderBy(F.desc("centroid_sim"), F.asc("centroid_id"))
@@ -343,7 +346,7 @@ IVF_CELLS_SQL = f"""{IVF_CENT_SQL},
         SELECT e.vec_id, cent.centroid_id,
                row_number() OVER (
                  PARTITION BY e.vec_id
-                 ORDER BY {det_round_sql(COS_SQL.format(a='e.v', b='cent.cv'), 6)} DESC, cent.centroid_id
+                 ORDER BY {det_round_sql(COS_SQL.format(a='e.v', b='cent.cv'), SIM_DIGITS)} DESC, cent.centroid_id
                ) AS crank
         FROM e, cent
       )
@@ -372,7 +375,6 @@ def ivf_topk(
     k: int = 5,
     nprobe: int = 2,
     centroid_mod: int = CENTROID_MOD,
-    round_digits: int = 6,
     corpus_cells: DataFrame | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors live in their single
@@ -412,7 +414,7 @@ def ivf_topk(
         "query_id",
         "match_id",
         det_round(
-            dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), round_digits
+            dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), SIM_DIGITS
         ).alias("cosine_sim"),
     )
     return _topk(scored, k)
@@ -495,19 +497,15 @@ def kmeans_inertia(corpus: DataFrame, centroids: DataFrame, id_col: str = "vec_i
     return float(best.agg(F.avg(F.lit(1.0) - F.col("best"))).collect()[0][0])
 
 
-def _planes_matrix(
-    n_tables: int = N_TABLES,
-    n_planes: int = PLANES_PER_TABLE,
-    dim: int = EMBED_DIM,
-) -> np.ndarray:
+def _planes_matrix(n_tables: int = N_TABLES) -> np.ndarray:
     """All L·r hyperplanes as a (dim, L·r) float64 matrix, column
     order = (table-major, plane-minor): table t's columns are
     :func:`hyperplanes` (t), the planes the oracle's bucket SQL reads."""
     return np.array(
         [
-            [_plane_value(t, p, d) for d in range(dim)]
+            [_plane_value(t, p, d) for d in range(EMBED_DIM)]
             for t in range(n_tables)
-            for p in range(n_planes)
+            for p in range(PLANES_PER_TABLE)
         ]
     ).T
 
@@ -591,7 +589,6 @@ def ann_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    round_digits: int = 6,
     n_tables: int = N_TABLES,
 ) -> DataFrame:
     """Approximate top-k: exact cosine ranking restricted to LSH
@@ -635,7 +632,7 @@ def ann_topk(
             "match_id",
             det_round(
                 seq_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-                round_digits,
+                SIM_DIGITS,
             ).alias("cosine_sim"),
         )
     )

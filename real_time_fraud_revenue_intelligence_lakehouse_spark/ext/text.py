@@ -46,6 +46,10 @@ LSH_BANDS = 4  # rows per band = MINHASH_K // LSH_BANDS = 2
 
 SIMHASH_BITS = 16
 
+#: Token n-gram width of every shingle set (MinHash signatures,
+#: contamination scans).
+SHINGLE_N = 3
+
 TOKEN_SPLIT = r"\s+"
 BPE_TOKEN_RE = r"\w+|[^\w\s]"
 PUNCT_RE = r"[^\w\s]"
@@ -168,7 +172,7 @@ def rolling_hash(c: Column) -> Column:
     )
 
 
-def shingles_of(t: Column, n: int = 3) -> Column:
+def shingles_of(t: Column, n: int = SHINGLE_N) -> Column:
     """Token n-gram shingles from an (ideally already-projected)
     token-array column; single whole-text shingle when the text has
     fewer than ``n`` tokens.
@@ -188,10 +192,10 @@ def shingles_of(t: Column, n: int = 3) -> Column:
     ).otherwise(F.array(F.concat_ws(" ", t)))
 
 
-def shingles(c: Column, n: int = 3) -> Column:
+def shingles(c: Column) -> Column:
     """Shingles straight from a text column — convenience form for
     one-shot uses; hot paths should stage tokens first (with_minhash)."""
-    return shingles_of(tokens(norm_text(c)), n)
+    return shingles_of(tokens(norm_text(c)))
 
 
 def perm_mask(j: int) -> int:
@@ -214,7 +218,7 @@ def salted(j: int):
     return lambda s: hash60(F.concat(F.lit(prefix), s))
 
 
-def with_minhash(df, id_col: str, text_col: str, k: int = MINHASH_K, n: int = 3):
+def with_minhash(df, id_col: str, text_col: str, k: int = MINHASH_K):
     """MinHash signature table ``(id_col, mh0..mh{k-1})`` via
     explode → one hash → k XOR permutations → min-aggregate.
 
@@ -233,16 +237,16 @@ def with_minhash(df, id_col: str, text_col: str, k: int = MINHASH_K, n: int = 3)
       `xor()` reproduces it exactly for the oracle.
     """
     staged = df.select(F.col(id_col), tokens(norm_text(F.col(text_col))).alias("_toks"))
-    return minhash_of_tokens(staged, id_col, "_toks", k=k, n=n)
+    return minhash_of_tokens(staged, id_col, "_toks", k=k)
 
 
-def minhash_of_tokens(staged, id_col: str, toks_col: str, k: int = MINHASH_K, n: int = 3):
+def minhash_of_tokens(staged, id_col: str, toks_col: str, k: int = MINHASH_K):
     """`with_minhash` from an already-tokenized frame — the entry
     point for callers that share one materialized token projection
     across queries (plans/shared_frames.doc_tokens). Same bits: the
     signature is a pure function of the token arrays."""
     sh_rows = staged.select(
-        F.col(id_col), F.explode(shingles_of(F.col(toks_col), n)).alias("_s")
+        F.col(id_col), F.explode(shingles_of(F.col(toks_col))).alias("_s")
     )
     hashed = sh_rows.select(id_col, hash60(F.col("_s")).alias("_h"))
     return hashed.groupBy(id_col).agg(
@@ -276,9 +280,7 @@ SIG_COLS = ", ".join(
 )
 
 
-def tfidf_top_terms(
-    df, id_col: str, text_col: str, top_n: int = 3, round_digits: int = 6
-):
+def tfidf_top_terms(df, id_col: str, text_col: str, top_n: int = 3):
     """Per-document top-``top_n`` TF-IDF terms → (id, term, tf,
     tfidf, term_rank) — the standard keyword-extraction pass over a
     training corpus (what "what is this document about" reduces to
@@ -314,7 +316,7 @@ def tfidf_top_terms(
             det_round(
                 F.col("tf")
                 * F.log((F.col("_n_docs") + 1.0) / (F.col("df").cast("double") + 1.0)),
-                round_digits,
+                6,
             ).alias("tfidf"),
         )
     )
@@ -411,19 +413,18 @@ def pii_stats(df, id_col: str, text_col: str):
     )
 
 
-def contamination_check(
-    corpus,
-    benchmark,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.5,
-):
+#: A corpus doc is contaminated when at least this share of its
+#: shingles occur in the benchmark set.
+CONTAMINATION_RATE = 0.5
+
+
+def contamination_check(corpus, benchmark, id_col: str, text_col: str):
     """Benchmark-contamination scan: fraction of each corpus doc's
-    distinct n-gram shingles that appear ANYWHERE in the benchmark
-    set → (id, n_shingles, n_contaminated, contamination_rate,
-    is_contaminated). The standard eval-leakage gate run before
-    training on a scraped corpus.
+    distinct :data:`SHINGLE_N`-gram shingles that appear ANYWHERE in
+    the benchmark set → (id, n_shingles, n_contaminated,
+    contamination_rate, is_contaminated ≥ :data:`CONTAMINATION_RATE`).
+    The standard eval-leakage gate run before training on a scraped
+    corpus.
 
     Plan: both sides reduce to distinct 60-bit shingle hashes; the
     benchmark side collapses to a distinct-hash set (it is eval-sized,
@@ -440,7 +441,7 @@ def contamination_check(
             F.col(id_col), tokens(norm_text(F.col(text_col))).alias("_toks")
         )
         return (
-            staged.select(id_col, F.explode(shingles_of(F.col("_toks"), n)).alias("_s"))
+            staged.select(id_col, F.explode(shingles_of(F.col("_toks"))).alias("_s"))
             .select(id_col, hash60(F.col("_s")).alias("sh"))
             .distinct()
         )
@@ -464,7 +465,7 @@ def contamination_check(
             "n_shingles",
             "n_contaminated",
             rate.alias("contamination_rate"),
-            (rate >= threshold).alias("is_contaminated"),
+            (rate >= CONTAMINATION_RATE).alias("is_contaminated"),
         )
     )
 

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import RISK_LABEL_SQL, SCORE_FEATURES
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
     H60_OK_SQL,
     MICRO,
@@ -114,7 +114,7 @@ def _z_expr(
     return z
 
 
-def scale_pos_weight(fv: DataFrame, label: str = "label") -> tuple[float, float]:
+def scale_pos_weight(fv: DataFrame) -> tuple[float, float]:
     """(pos_weight, n_eff) for class-weighted training — the
     reference's `fraud_detector.py:148` scale_pos_weight =
     (y==0).sum()/(y==1).sum(), derived from one exact count aggregate
@@ -123,8 +123,8 @@ def scale_pos_weight(fv: DataFrame, label: str = "label") -> tuple[float, float]
     by (written in this exact operation order in Python, Spark, and
     the generated SQL)."""
     row = fv.agg(
-        F.sum(F.lit(1) - F.col(label)).alias("n0"),
-        F.sum(label).alias("n1"),
+        F.sum(F.lit(1) - F.col("label")).alias("n0"),
+        F.sum("label").alias("n1"),
     ).first()
     n0d, n1d = float(row["n0"]), float(row["n1"])
     if n1d == 0.0 or n0d == 0.0:
@@ -141,7 +141,6 @@ def train_logreg(
     features: tuple[str, ...] = SCORE_FEATURES,
     lr: float = LR,
     iters: int = ITERS,
-    label: str = "label",
     scales: dict[str, float] | None = None,
     weighted: bool = False,
 ) -> tuple[dict[str, float], int]:
@@ -162,9 +161,7 @@ def train_logreg(
     SMOTE is a driver-side pandas resampler that dies at 100 TB, while
     a weight is one extra literal in the fold.
     """
-    ws, n = _logreg_descent(
-        fv, (("", lr, iters, int(weighted)),), features, label, scales
-    )
+    ws, n = _logreg_descent(fv, (("", lr, iters, int(weighted)),), features, scales)
     return ws[0], n
 
 
@@ -191,20 +188,15 @@ def _x_sql(f: str, scales: dict | None = None) -> str:
     return x if s == 1.0 else f"{x} / {s!r}"
 
 
-def _z_sql(
-    w_prefix: str,
-    features: tuple[str, ...],
-    scales: dict[str, float] | None = None,
-) -> str:
+def _z_sql(w_prefix: str, features: tuple[str, ...]) -> str:
     terms = [f"{w_prefix}w_bias"] + [
-        f"{w_prefix}w_{f} * ({_x_sql(f, scales)})" for f in features
+        f"{w_prefix}w_{f} * ({_x_sql(f)})" for f in features
     ]
     return " + ".join(terms)
 
 
 def logreg_train_ctes(
     fv_sql: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
     lr: float = LR,
     iters: int = ITERS,
     weighted: bool = False,
@@ -234,6 +226,7 @@ def logreg_train_ctes(
     1-row CTE, and each gradient aggregate cross-joins it — so the
     oracle derives fit AND train end-to-end from the data, with no
     engine-computed literal smuggled in."""
+    features = SCORE_FEATURES
     names = ["bias"] + list(features)
     p_ = prefix
     parts = [f"{p_}fv AS ({fv_sql})"]
@@ -298,12 +291,7 @@ def logreg_train_ctes(
 
 
 def logreg_weights_sql(
-    fv_sql: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    lr: float = LR,
-    iters: int = ITERS,
-    weighted: bool = False,
-    standardized: bool = False,
+    fv_sql: str, weighted: bool = False, standardized: bool = False
 ) -> str:
     """Complete oracle for q_logreg_train (and its class-weighted
     twin): one (feature, weight) row per model term, weights round6
@@ -311,10 +299,8 @@ def logreg_weights_sql(
     weight CTE exactly ONCE (a VALUES cross join + CASE, not 9 UNION
     ALL arms — DuckDB re-evaluates the whole unrolled CTE chain per
     reference, measured 59 s → 5 s)."""
-    ctes, wk = logreg_train_ctes(
-        fv_sql, features, lr, iters, weighted=weighted, standardized=standardized
-    )
-    names = ["bias"] + list(features)
+    ctes, wk = logreg_train_ctes(fv_sql, weighted=weighted, standardized=standardized)
+    names = ["bias"] + list(SCORE_FEATURES)
     values = ", ".join(f"('{m}')" for m in names)
     case = " ".join(
         f"WHEN '{m}' THEN {R6_SQL.format(c=f'w_{m}')}" for m in names
@@ -326,18 +312,13 @@ def logreg_weights_sql(
     )
 
 
-def logreg_score_sql(
-    fv_sql: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    lr: float = LR,
-    iters: int = ITERS,
-) -> str:
+def logreg_score_sql(fv_sql: str) -> str:
     """Complete oracle for q_logreg_train_score: the oracle re-trains
     (same unrolled CTEs), scores every row with the trained weights,
     and aggregates per risk band — the full train→apply loop in one
     statement."""
-    ctes, wk = logreg_train_ctes(fv_sql, features, lr, iters)
-    z = _z_sql("w.", features)
+    ctes, wk = logreg_train_ctes(fv_sql)
+    z = _z_sql("w.", SCORE_FEATURES)
     s = SIGMOID6_SQL.format(z=z)
     mean_s = R6_SQL.format(
         c="CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*)"
@@ -348,11 +329,7 @@ def logreg_score_sql(
       SELECT fv.label, {s} AS s FROM fv CROSS JOIN {wk} w
     ),
     banded AS (
-      SELECT label, s,
-             CASE WHEN s >= 0.7 THEN 'high'
-                  WHEN s >= 0.4 THEN 'medium'
-                  ELSE 'low' END AS risk_label
-      FROM scored
+      SELECT label, s, {RISK_LABEL_SQL.format(s="s")} AS risk_label FROM scored
     )
     SELECT risk_label, count(*) AS n, {mean_s} AS mean_score,
            {rate} AS event_rate
@@ -373,15 +350,12 @@ MS_CONFIGS: tuple[tuple[str, float, int, int], ...] = (
     ("lr1.0_k5_w", 1.0, 5, 1),
 )
 
-def model_selection_sql(
-    fv_sql: str,
-    configs: tuple[tuple[str, float, int, int], ...] = MS_CONFIGS,
-    features: tuple[str, ...] = SCORE_FEATURES,
-) -> str:
+def model_selection_sql(fv_sql: str) -> str:
     """Oracle for q_model_selection: hash-split train/holdout, one
     unrolled CTE chain per config (namespaced by prefix), then ONE
     holdout scan summing every config's decimal-folded log-loss, and
     an is_best rank (val_logloss asc, config id tie-break)."""
+    configs = MS_CONFIGS
     parts = [
         f"base AS ({fv_sql})",
         f"tr AS MATERIALIZED (SELECT * FROM base WHERE {H60_OK_SQL} < 80)",
@@ -391,7 +365,6 @@ def model_selection_sql(
     for i, (_name, lr, iters, weighted) in enumerate(configs):
         ctes, wk = logreg_train_ctes(
             "SELECT * FROM tr",
-            features,
             lr=lr,
             iters=iters,
             weighted=bool(weighted),
@@ -401,7 +374,7 @@ def model_selection_sql(
         finals.append(wk)
     sums = []
     for i in range(len(configs)):
-        z = _z_sql(f"m{i}.", features)
+        z = _z_sql(f"m{i}.", SCORE_FEATURES)
         p = SIGMOID6_SQL.format(z=z)
         raw = f"CASE WHEN label = 1 THEN -ln({p}) ELSE -ln(1.0 - {p}) END"
         sums.append(
@@ -441,7 +414,6 @@ def train_logreg_grid(
     fv: DataFrame,
     configs: tuple[tuple[str, float, int, int], ...] = MS_CONFIGS,
     features: tuple[str, ...] = SCORE_FEATURES,
-    label: str = "label",
     scales: dict[str, float] | None = None,
 ) -> list[dict[str, float]]:
     """Train EVERY grid config in max(iters) shared scans — the
@@ -457,14 +429,13 @@ def train_logreg_grid(
     standard way to amortize hyperparameter search: the scan and
     shuffle are shared, each extra config is just 9 more decimal
     columns in the same map-side combine."""
-    return _logreg_descent(fv, configs, features, label, scales)[0]
+    return _logreg_descent(fv, configs, features, scales)[0]
 
 
 def _logreg_descent(
     fv: DataFrame,
     configs: tuple[tuple[str, float, int, int], ...],
     features: tuple[str, ...],
-    label: str,
     scales: dict[str, float] | None,
 ) -> tuple[list[dict[str, float]], int]:
     """(weights per config, n_rows): the one stacked descent. A
@@ -478,8 +449,8 @@ def _logreg_descent(
     ws: list[dict[str, float]] = [{m: 0.0 for m in names} for _ in configs]
     n = 0
     if any(c[3] for c in configs):
-        pw, n_eff = scale_pos_weight(fv, label)
-        wgt = F.when(F.col(label) == 1, F.lit(float(pw))).otherwise(F.lit(1.0))
+        pw, n_eff = scale_pos_weight(fv)
+        wgt = F.when(F.col("label") == 1, F.lit(float(pw))).otherwise(F.lit(1.0))
     w_schema = ", ".join(
         f"c{c}_w_{m} double" for c in range(k) for m in names
     )
@@ -501,7 +472,7 @@ def _logreg_descent(
             for f in features:
                 z = z + F.col(f"c{c}_w_{f}") * _x_expr(f, scales)
             p = det_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
-            resid = p - F.col(label).cast("double")
+            resid = p - F.col("label").cast("double")
             for m in names:
                 contrib = resid if m == "bias" else resid * _x_expr(m, scales)
                 if configs[c][3]:
@@ -672,9 +643,9 @@ def nb_score_confusion(
     )
 
 
-def _nb_ctes(fv_sql: str, features: tuple[str, ...] = NB_FEATURES) -> str:
-    cols = ", ".join(features)
-    casts = ", ".join(f"CAST({f} AS BIGINT) AS {f}" for f in features)
+def _nb_ctes(fv_sql: str) -> str:
+    cols = ", ".join(NB_FEATURES)
+    casts = ", ".join(f"CAST({f} AS BIGINT) AS {f}" for f in NB_FEATURES)
     return f"""fv AS ({fv_sql}),
     f AS (SELECT o_orderkey, label, {casts} FROM fv),
     st AS (
@@ -699,14 +670,14 @@ def _nb_ctes(fv_sql: str, features: tuple[str, ...] = NB_FEATURES) -> str:
     )"""
 
 
-def nb_train_sql(fv_sql: str, features: tuple[str, ...] = NB_FEATURES) -> str:
+def nb_train_sql(fv_sql: str) -> str:
     return (
-        f"WITH {_nb_ctes(fv_sql, features)}\n    "
+        f"WITH {_nb_ctes(fv_sql)}\n    "
         "SELECT feature, value, label, cnt, p FROM probs"
     )
 
 
-def nb_score_sql(fv_sql: str, features: tuple[str, ...] = NB_FEATURES) -> str:
+def nb_score_sql(fv_sql: str) -> str:
     """Oracle for nb_score_confusion. The per-term join is a LEFT
     JOIN with the smoothed unseen-value fallback round6(ln(1/(n_c+V)))
     — the same Laplace law the Spark scorer compiles into each CASE's
@@ -716,7 +687,7 @@ def nb_score_sql(fv_sql: str, features: tuple[str, ...] = NB_FEATURES) -> str:
     t6 = R6_SQL.format(c="ln(p.p)")
     unseen = R6_SQL.format(c="ln(1.0 / (l.n_c + d.v))")
     lp = R6_SQL.format(c="ln(CAST(n_c AS DOUBLE) / (SELECT count(*) FROM f))")
-    return f"""WITH {_nb_ctes(fv_sql, features)},
+    return f"""WITH {_nb_ctes(fv_sql)},
     priors AS (
       SELECT label, CAST({lp} AS DECIMAL(18,6)) AS lp FROM lbls
     ),
@@ -792,16 +763,11 @@ CALIBRATION_SQL = f"""binned AS (
     FROM binned GROUP BY 1"""
 
 
-def logreg_roc_sql(
-    fv_sql: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    lr: float = LR,
-    iters: int = ITERS,
-) -> str:
+def logreg_roc_sql(fv_sql: str) -> str:
     """Oracle for q_logreg_roc: re-train via the unrolled CTEs, score,
     then the :data:`ROC_SWEEP_SQL` tail."""
-    ctes, wk = logreg_train_ctes(fv_sql, features, lr, iters)
-    s = SIGMOID6_SQL.format(z=_z_sql("w.", features))
+    ctes, wk = logreg_train_ctes(fv_sql)
+    s = SIGMOID6_SQL.format(z=_z_sql("w.", SCORE_FEATURES))
     return f"""WITH {ctes},
     scored AS (
       SELECT fv.label, {s} AS s FROM fv CROSS JOIN {wk} w
@@ -809,19 +775,18 @@ def logreg_roc_sql(
     {ROC_SWEEP_SQL}"""
 
 
-def logreg_roc(
-    scored: DataFrame, thresholds: tuple[float, ...] = ROC_THRESHOLDS
-) -> DataFrame:
-    """ROC sweep over a (label, s) frame: explode the fixed threshold
-    ladder in-row (no join) and take confusion counts per threshold —
-    one shuffle of 10·|rows| tiny tuples, map-side combined. All three
+def logreg_roc(scored: DataFrame) -> DataFrame:
+    """ROC sweep over a (label, s) frame: explode the fixed
+    :data:`ROC_THRESHOLDS` ladder in-row (no join) and take confusion
+    counts per threshold — one shuffle of 10·|rows| tiny tuples,
+    map-side combined. All three
     rates pin to 0.0 when their denominator is empty (no positives /
     no negatives / no predictions), matching the oracle's CASE guards
     so degenerate frames hash identically across engines."""
     sw = scored.select(
         "label",
         "s",
-        F.explode(F.array(*[F.lit(t) for t in thresholds])).alias("tau"),
+        F.explode(F.array(*[F.lit(t) for t in ROC_THRESHOLDS])).alias("tau"),
     )
     pred = (F.col("s") >= F.col("tau")).cast("int")
     tp = F.sum(pred * F.col("label")).alias("tp")
@@ -851,7 +816,7 @@ def logreg_roc(
 MODEL_CARD_TAU = 0.7
 
 
-def model_metrics(scored: DataFrame, tau: float = MODEL_CARD_TAU) -> DataFrame:
+def model_metrics(scored: DataFrame) -> DataFrame:
     """The reference's ModelMetrics dataclass (`fraud_detector.py:
     76-89`, computed by `_evaluate` :278-320) as ONE distributed
     query over a (label, s) frame: exact ROC AUC (Mann-Whitney
@@ -859,8 +824,8 @@ def model_metrics(scored: DataFrame, tau: float = MODEL_CARD_TAU) -> DataFrame:
     Σ(R_k−R_{k−1})·P_k step sum over descending score groups, each
     term round8-decimal-folded so the sum is order-independent),
     precision/recall/F1 at the reference's 0.70 threshold
-    (zero_division=0 guards, like sklearn's; a one-class frame scores
-    AUC 0.0), and the confusion counts. The global (ungrouped) AUC
+    (:data:`MODEL_CARD_TAU`; zero_division=0 guards, like sklearn's; a
+    one-class frame scores AUC 0.0), and the confusion counts. The global (ungrouped) AUC
     reduction: q_auc, q_model_card, q_model_promotion and
     q_retrain_best all read it; :func:`ext.gbt._rank_sum_aucs` is the
     keyed one. Everything reduces to the distinct-score table, which
@@ -876,6 +841,7 @@ def model_metrics(scored: DataFrame, tau: float = MODEL_CARD_TAU) -> DataFrame:
         distributed_cumsum,
     )
 
+    tau = MODEL_CARD_TAU
     c = scored.groupBy("s").agg(
         F.count(F.lit(1)).alias("n"), F.sum("label").alias("np")
     ).localCheckpoint()
@@ -930,17 +896,15 @@ def model_metrics(scored: DataFrame, tau: float = MODEL_CARD_TAU) -> DataFrame:
     )
 
 
-def model_metrics_sql_tail(tau: float = MODEL_CARD_TAU) -> str:
+def model_metrics_sql_tail() -> str:
     """The SQL twin of :func:`model_metrics`, to append after a
     ``scored`` CTE of (label, s) — shared by any trained scorer's
     card."""
-    ctes, card = model_metrics_ctes(tau)
+    ctes, card = model_metrics_ctes()
     return f"{ctes}\n    SELECT * FROM {card}"
 
 
-def model_metrics_ctes(
-    tau: float = MODEL_CARD_TAU, prefix: str = "", scored_from: str = "scored"
-) -> tuple[str, str]:
+def model_metrics_ctes(prefix: str = "", scored_from: str = "scored") -> tuple[str, str]:
     """(cte_block, card_cte_name): the :func:`model_metrics` SQL as
     namespaced CTEs over an arbitrary (label, s) source — several
     models' cards can share one statement (q_retrain_best computes
@@ -948,7 +912,7 @@ def model_metrics_ctes(
     training on the data-dependent winner; the ENGINE trains only the
     winner — that asymmetry is an oracle artifact, not a scale
     concern)."""
-    p_ = prefix
+    p_, tau = prefix, MODEL_CARD_TAU
     ap_term = R8_SQL.format(
         c=(
             "CASE WHEN n_pos = 0 THEN 0.0 ELSE "
@@ -1127,11 +1091,11 @@ def _km_assign_sql(k: int) -> str:
     return "CASE " + " ".join(whens) + f" ELSE {k - 1} END"
 
 
-def _kmeans_ctes(
-    fv_sql: str, features: tuple[str, ...], k: int, iters: int
-) -> tuple[str, str]:
+def _kmeans_ctes(fv_sql: str) -> tuple[str, str]:
     """(cte_block, final_centroid_cte): the unrolled Lloyd iterations
-    over the feature CTE ``fv``."""
+    (:data:`KM_K` centroids, :data:`KM_ITERS` steps) over the feature
+    CTE ``fv``."""
+    features, k, iters = SCORE_FEATURES, KM_K, KM_ITERS
     init_cols = ", ".join(
         f"CAST({(i + 0.5) / k!r} AS DOUBLE) AS c{i}_{f}"
         for i in range(k)
@@ -1175,17 +1139,13 @@ def _kmeans_ctes(
     return ",\n    ".join(parts), f"k{iters}"
 
 
-def kmeans_sql(
-    fv_sql: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    k: int = KM_K,
-    iters: int = KM_ITERS,
-) -> str:
+def kmeans_sql(fv_sql: str) -> str:
     """Oracle for q_kmeans_train: unrolled Lloyd iterations; final
     select emits one row per cluster (long form) referencing the last
     centroid CTE exactly once via an id VALUES join + CASE unpivot
     (the logreg_weights_sql single-reference discipline)."""
-    cte_block, wk = _kmeans_ctes(fv_sql, features, k, iters)
+    cte_block, wk = _kmeans_ctes(fv_sql)
+    features, k = SCORE_FEATURES, KM_K
     ids = ", ".join(f"({i})" for i in range(k))
     n_case = " ".join(f"WHEN {i} THEN n_{i}" for i in range(k))
     cols = []
@@ -1224,15 +1184,11 @@ def kmeans_inertia(
     )
 
 
-def kmeans_inertia_sql(
-    fv_sql: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    k: int = KM_K,
-    iters: int = KM_ITERS,
-) -> str:
+def kmeans_inertia_sql(fv_sql: str) -> str:
     """Oracle for q_kmeans_inertia: the same unrolled training CTEs,
     then one assign+least staging pass and per-cluster decimal SSE."""
-    ctes, wk = _kmeans_ctes(fv_sql, features, k, iters)
+    ctes, wk = _kmeans_ctes(fv_sql)
+    features, k = SCORE_FEATURES, KM_K
     dists = ", ".join(f"{_km_dist_sql(i, features)} AS d{i}" for i in range(k))
     least = "least(" + ", ".join(f"d{i}" for i in range(k)) + ")"
     return f"""WITH {ctes},
@@ -1262,10 +1218,10 @@ def kmeans_inertia_sql(
 HBOS_TOP_K = 20
 
 
-def hbos_train(fv: DataFrame, features: tuple[str, ...] = NB_FEATURES) -> DataFrame:
+def hbos_train(fv: DataFrame) -> DataFrame:
     """(feature, value, cnt, p) — per-feature value frequencies.
     In-sample scoring never sees a zero bin, so no smoothing term."""
-    st = _nb_stack(fv, features)
+    st = _nb_stack(fv, NB_FEATURES)
     cnts = st.groupBy("feature", "value").agg(F.count(F.lit(1)).alias("cnt"))
     n = fv.count()
     return cnts.select(
@@ -1276,28 +1232,21 @@ def hbos_train(fv: DataFrame, features: tuple[str, ...] = NB_FEATURES) -> DataFr
     )
 
 
-def hbos_top_anomalies(
-    fv: DataFrame,
-    features: tuple[str, ...] = NB_FEATURES,
-    top_k: int = HBOS_TOP_K,
-    probs: DataFrame | None = None,
-) -> DataFrame:
+def hbos_top_anomalies(fv: DataFrame) -> DataFrame:
     """Score every row by compiled decimal surprise and return the
-    top-k most anomalous (o_orderkey tie-break) — the triage list a
+    :data:`HBOS_TOP_K` most anomalous (o_orderkey tie-break) — the triage list a
     fraud analyst reviews. Deterministic: per-bin −ln p det-rounds to
     6 then folds through DECIMAL(18,6) additions; the final ranking
     compares decimals."""
     import math
 
-    if probs is None:
-        probs = hbos_train(fv, features)
-    rows = probs.collect()  # ≤ a few hundred — the model-broadcast class
+    rows = hbos_train(fv).collect()  # ≤ a few hundred — the model-broadcast class
     by_f: dict[str, list] = {}
     for r in rows:
         by_f.setdefault(r["feature"], []).append(r)
 
     score = None
-    for f in features:
+    for f in NB_FEATURES:
         expr = None
         for r in sorted(by_f[f], key=lambda r: r["value"]):
             cond = F.col(f).cast("bigint") == int(r["value"])
@@ -1308,20 +1257,16 @@ def hbos_top_anomalies(
     return (
         fv.select("o_orderkey", score.alias("hbos"))
         .orderBy(F.desc("hbos"), F.asc("o_orderkey"))
-        .limit(top_k)
+        .limit(HBOS_TOP_K)
         .select("o_orderkey", F.col("hbos").cast("double").alias("hbos"))
     )
 
 
-def hbos_sql(
-    fv_sql: str,
-    features: tuple[str, ...] = NB_FEATURES,
-    top_k: int = HBOS_TOP_K,
-) -> str:
+def hbos_sql(fv_sql: str) -> str:
     """Oracle: the same histograms via UNPIVOT counts, the same
     decimal surprise via a probs join, the same top-k ordering."""
-    cols = ", ".join(features)
-    casts = ", ".join(f"CAST({f} AS BIGINT) AS {f}" for f in features)
+    cols = ", ".join(NB_FEATURES)
+    casts = ", ".join(f"CAST({f} AS BIGINT) AS {f}" for f in NB_FEATURES)
     t6 = R6_SQL.format(c="-ln(p.p)")
     return f"""WITH fv AS ({fv_sql}),
     f AS (SELECT o_orderkey, {casts} FROM fv),
@@ -1341,26 +1286,24 @@ def hbos_sql(
       GROUP BY 1
     )
     SELECT o_orderkey, CAST(hbos AS DOUBLE) AS hbos
-    FROM scored ORDER BY hbos DESC, o_orderkey LIMIT {top_k}"""
+    FROM scored ORDER BY hbos DESC, o_orderkey LIMIT {HBOS_TOP_K}"""
 
 
 # --- drop-one ablation importance ---------------------------------------------
 
 
-def _loss_expr(z: Column, label: str = "label") -> Column:
+def _loss_expr(z: Column) -> Column:
     """Per-row log-loss under p = round6(σ(z)), det-rounded to 6 —
     safe here because scaled features + small trained weights keep z
     in a narrow band, so p never saturates to exactly 0/1."""
     p = det_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
-    raw = F.when(F.col(label) == 1, -F.log(p)).otherwise(
+    raw = F.when(F.col("label") == 1, -F.log(p)).otherwise(
         -F.log(F.lit(1.0) - p)
     )
     return det_round(raw, 6)
 
 
-def mean_log_losses(
-    frame: DataFrame, logits: list[Column], label: str = "label"
-) -> list[float]:
+def mean_log_losses(frame: DataFrame, logits: list[Column]) -> list[float]:
     """The round6 mean log-loss of each logit over ``frame``, all from
     ONE scan: per-row :func:`_loss_expr` losses fold through
     DECIMAL(18,6) sums beside one row count, and each mean rounds to 6
@@ -1369,19 +1312,14 @@ def mean_log_losses(
     row = frame.agg(
         F.count(F.lit(1)).alias("n"),
         *[
-            F.sum(_loss_expr(z, label).cast("decimal(18,6)")).alias(f"L_{i}")
+            F.sum(_loss_expr(z).cast("decimal(18,6)")).alias(f"L_{i}")
             for i, z in enumerate(logits)
         ],
     ).first()
     return [r6(float(row[f"L_{i}"]) / row["n"]) for i in range(len(logits))]
 
 
-def logreg_ablation(
-    fv: DataFrame,
-    w: dict[str, float],
-    features: tuple[str, ...] = SCORE_FEATURES,
-    scales: dict[str, float] | None = None,
-) -> DataFrame:
+def logreg_ablation(fv: DataFrame, w: dict[str, float]) -> DataFrame:
     """Drop-one feature importance for the TRAINED model: mean
     log-loss of the full model and of each variant with ONE feature's
     term removed (weights otherwise unchanged — ablation, not
@@ -1392,13 +1330,13 @@ def logreg_ablation(
 
     def z_without(skip: str | None) -> Column:
         z: Column = F.lit(float(w["bias"]))
-        for f in features:
+        for f in SCORE_FEATURES:
             if f != skip:
-                z = z + F.lit(float(w[f])) * _x_expr(f, scales)
+                z = z + F.lit(float(w[f])) * _x_expr(f, None)
         return z
 
     aggs = [F.count(F.lit(1)).alias("n")]
-    names = ["full"] + list(features)
+    names = ["full"] + list(SCORE_FEATURES)
     for name in names:
         skip = None if name == "full" else name
         aggs.append(
@@ -1421,15 +1359,11 @@ def logreg_ablation(
     )
 
 
-def logreg_ablation_sql(
-    fv_sql: str,
-    features: tuple[str, ...] = SCORE_FEATURES,
-    lr: float = LR,
-    iters: int = ITERS,
-) -> str:
+def logreg_ablation_sql(fv_sql: str) -> str:
     """Oracle: re-train via the unrolled CTEs, then the same one-scan
     multi-variant loss aggregate and in-row unpivot."""
-    ctes, wk = logreg_train_ctes(fv_sql, features, lr, iters)
+    ctes, wk = logreg_train_ctes(fv_sql)
+    features = SCORE_FEATURES
     names = ["full"] + list(features)
 
     def z_without(skip: str | None) -> str:

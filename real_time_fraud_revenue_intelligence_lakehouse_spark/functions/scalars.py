@@ -134,21 +134,21 @@ def h52(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 13), 16, 10).cast("long")
 
 
-def exact_avg(col: str | Column, ndigits: int = 4, alias: str | None = None) -> Column:
-    """Deterministic mean: exact decimal sum / count, rounded.
+def exact_avg(col: str | Column, alias: str | None = None) -> Column:
+    """Deterministic mean: exact decimal sum / count, rounded to 4.
 
     Plain `avg(double)` differs across partition orders; this form is
     reproducible on any cluster layout.
     """
     c = F.col(col) if isinstance(col, str) else col
-    out = det_round(F.sum(c.cast(MONEY_DEC)).cast("double") / F.count(c), ndigits)
+    out = det_round(F.sum(c.cast(MONEY_DEC)).cast("double") / F.count(c), 4)
     return out.alias(alias) if alias else out
 
 
-def rate(num: Column, den: Column, ndigits: int = 4, eps: float = 0.001) -> Column:
+def rate(num: Column, den: Column) -> Column:
     """ε-guarded ratio, reproducing the reference's hash-visible
     `round(x / (y + 0.001), 4)` convention (`revenue_aggregations.py:80-85`)."""
-    return det_round(num / (den + F.lit(eps)), ndigits)
+    return det_round(num / (den + F.lit(0.001)), 4)
 
 
 def epoch_ms(ts: str | Column) -> Column:
@@ -158,24 +158,34 @@ def epoch_ms(ts: str | Column) -> Column:
     return F.unix_millis(c)
 
 
+#: The 5-way amount tiering ladder (`transform_transactions.py:109-117`):
+#: (upper cut, tier) pairs, then the tier at or above the last cut.
+AMOUNT_TIERS = ((50, "micro"), (200, "low"), (1000, "medium"), (5000, "high"))
+AMOUNT_TIER_TOP = "premium"
+
+#: SQL twin of :func:`amount_tier` over an amount expression ``{c}``.
+AMOUNT_TIER_SQL = (
+    "CASE "
+    + " ".join(f"WHEN {{c}} < {cut} THEN '{tier}'" for cut, tier in AMOUNT_TIERS)
+    + f" ELSE '{AMOUNT_TIER_TOP}' END"
+)
+
+
 def amount_tier(amount: str | Column) -> Column:
     """5-way amount tiering ladder, cuts 50/200/1000/5000
-    (`transform_transactions.py:109-117`)."""
+    (:data:`AMOUNT_TIERS`)."""
     c = F.col(amount) if isinstance(amount, str) else amount
-    return (
-        F.when(c < 50, "micro")
-        .when(c < 200, "low")
-        .when(c < 1000, "medium")
-        .when(c < 5000, "high")
-        .otherwise("premium")
-    )
+    out = None
+    for cut, tier in AMOUNT_TIERS:
+        out = F.when(c < cut, tier) if out is None else out.when(c < cut, tier)
+    return out.otherwise(AMOUNT_TIER_TOP)
 
 
-def mask_dotted(col: str | Column, keep: int = 2, total: int = 4) -> Column:
-    """PII masking: keep the first ``keep`` dot-separated octets,
-    star the rest (`transform_transactions.py:118-123`)."""
+def mask_dotted(col: str | Column) -> Column:
+    """PII masking: keep the first two of four dot-separated octets,
+    star the other two (`transform_transactions.py:118-123`)."""
     c = F.col(col) if isinstance(col, str) else col
-    parts = [F.split(c, r"\.")[i] for i in range(keep)] + [F.lit("*")] * (total - keep)
+    parts = [F.split(c, r"\.")[i] for i in range(2)] + [F.lit("*")] * 2
     return F.concat_ws(".", *parts)
 
 

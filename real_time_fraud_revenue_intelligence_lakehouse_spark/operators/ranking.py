@@ -166,18 +166,17 @@ def rank_positions(
     df: DataFrame,
     score: str,
     tiebreak: list[Column],
-    descending: bool = False,
     bands: int = 32,
     pct_col: str | None = "pct_rank",
     cume_col: str | None = "cume_dist",
 ) -> DataFrame:
-    """``percent_rank`` / ``cume_dist`` over a TOTAL order (the
-    tiebreak makes every row's rank unique, so percent_rank's
+    """``percent_rank`` / ``cume_dist`` over a TOTAL ascending order
+    (the tiebreak makes every row's rank unique, so percent_rank's
     tie-group semantics reduce to (rn−1)/(n−1) and cume_dist's to
     rn/n) — again rank-distributed instead of single-partition.
     n = 1 degenerates percent_rank to 0 (the SQL convention)."""
     ranked = distributed_row_number(
-        df, score, tiebreak, descending=descending, bands=bands,
+        df, score, tiebreak, descending=False, bands=bands,
         rn_col="__rn", total_col="__n",
     )
     if pct_col is not None:
@@ -195,14 +194,13 @@ def distributed_cumsum(
     df: DataFrame,
     order_col: str,
     value_cols: list[str],
-    descending: bool = False,
     bands: int = 32,
     exclusive: bool = False,
     prefix: str = "cum_",
     total_sums: list[str] | None = None,
 ):
-    """Exact global cumulative sums of ``value_cols`` in ``order_col``
-    order without a single-partition window — the prefix-sum sibling
+    """Exact global cumulative sums of ``value_cols`` in ascending
+    ``order_col`` order without a single-partition window — the prefix-sum sibling
     of :func:`distributed_row_number` (CDFs, rank sums, gains curves):
     sketch-banded boundaries, per-band local cumulative windows
     (bands-way parallel), and per-band totals prefix-summed over the
@@ -233,13 +231,13 @@ def distributed_cumsum(
         else None
     )
     raw = row["b"] if row is not None and row["b"] is not None else []
-    bounds = sorted(set(raw), reverse=descending)
+    bounds = sorted(set(raw))
     od = F.col(order_col).cast("double")
     band = F.lit(0)
     for b in bounds:
-        band = band + F.when(od < F.lit(b) if descending else od > F.lit(b), 1).otherwise(0)
+        band = band + F.when(od > F.lit(b), 1).otherwise(0)
 
-    order = [F.desc(order_col) if descending else F.asc(order_col)]
+    order = [F.asc(order_col)]
     banded = df.withColumn(_BAND, band.cast("int"))
     frame_end = -1 if exclusive else 0
     w_local = (

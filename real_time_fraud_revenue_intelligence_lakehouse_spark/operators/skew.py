@@ -58,14 +58,17 @@ def salted_agg(
     return phase2
 
 
-def salted_broadcast_join(
-    big: DataFrame, small: DataFrame, key: str, salt: int = 8
-) -> DataFrame:
-    """Replicate the small side ``salt``× with a salt column; salt the
+#: Replication factor of :func:`salted_broadcast_join`'s small side.
+SALT = 8
+
+
+def salted_broadcast_join(big: DataFrame, small: DataFrame, key: str) -> DataFrame:
+    """Replicate the small side :data:`SALT`× with a salt column; salt the
     big side's key; equi-join on (key, salt). Shown for the pattern —
     prefer plain ``big.join(F.broadcast(small), key)`` whenever the
     small side fits in memory (Spark replicates a broadcast to every
     executor anyway, which is strictly better)."""
+    salt = SALT
     salts = F.explode(F.sequence(F.lit(0), F.lit(salt - 1))).alias("_salt")
     small_rep = small.select("*", salts)
     # pmod: abs(Integer.MIN_VALUE) is negative — a %-salted value with

@@ -53,7 +53,6 @@ def velocity_selfjoin(
     user_col: str,
     ts_col: str,
     key_cols: list[str],
-    windows: dict[str, int] = MS,
     prefix: str = "velocity_",
 ) -> DataFrame:
     """Reference-shaped form (`build_fraud_features.py:68-134`): a
@@ -67,7 +66,7 @@ def velocity_selfjoin(
         F.col(user_col).alias("_h_user"), F.col("_ms").alias("_h_ms")
     )
     out = cur
-    for name, width in windows.items():
+    for name, width in MS.items():
         cond = (
             (F.col(user_col) == F.col("_h_user"))
             & (F.col("_h_ms") >= F.col("_ms") - width)
@@ -79,4 +78,4 @@ def velocity_selfjoin(
             .agg(F.count("_h_ms").alias(prefix + name))
         )
         out = out.join(counts, key_cols, "left")
-    return out.drop("_ms").fillna({prefix + n: 0 for n in windows})
+    return out.drop("_ms").fillna({prefix + n: 0 for n in MS})

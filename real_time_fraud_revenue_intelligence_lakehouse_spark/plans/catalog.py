@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
+    AMOUNT_TIER_SQL,
     AVG_SQL,
     R4_SQL,
     SUM_SQL,
@@ -27,14 +28,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars impo
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
-
-# Shared SQL fragment: the 5-way amount-tier ladder
-# (`transform_transactions.py:109-117`), cuts 50/200/1000/5000.
-TIER_SQL = (
-    "CASE WHEN {c} < 50 THEN 'micro' WHEN {c} < 200 THEN 'low' "
-    "WHEN {c} < 1000 THEN 'medium' WHEN {c} < 5000 THEN 'high' "
-    "ELSE 'premium' END"
-)
 
 
 # ---------------------------------------------------------------------------
@@ -49,7 +42,7 @@ TIER_SQL = (
     WITH base AS (
       SELECT date_trunc('month', o_orderdate) AS order_month,
              o_orderpriority,
-             {TIER_SQL.format(c='o_totalprice')} AS amount_tier,
+             {AMOUNT_TIER_SQL.format(c='o_totalprice')} AS amount_tier,
              o_orderstatus, o_totalprice, o_custkey
       FROM orders
     )

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
+    AMOUNT_TIER_SQL,
     R2_SQL,
     R6_SQL,
     SUM_SQL,
@@ -119,11 +120,7 @@ def q_enum_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_bucket_tier",
     oracle=f"""
-    SELECT CASE WHEN o_totalprice < 50 THEN 'micro'
-                WHEN o_totalprice < 200 THEN 'low'
-                WHEN o_totalprice < 1000 THEN 'medium'
-                WHEN o_totalprice < 5000 THEN 'high'
-                ELSE 'premium' END AS amount_tier,
+    SELECT {AMOUNT_TIER_SQL.format(c="o_totalprice")} AS amount_tier,
            count(*) AS n_orders,
            {SUM_SQL.format(c="o_totalprice")} AS tier_gmv
     FROM orders GROUP BY 1

@@ -213,7 +213,6 @@ def q_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         d,
         "doc_id",
         "text",
-        threshold=0.5,
         sig=doc_minhash_sig(spark, sf_dir),
         toks=doc_token_sets(spark, sf_dir),
     )

@@ -225,23 +225,14 @@ def _codebook(sub: DataFrame) -> DataFrame:
     )
 
 
-def _sqdist(a: str = "sv", b: str = "cv") -> F.Column:
-    """L2² between two subvector columns via the dot identity (see
-    _SQ — the bit-portable form both engines evaluate identically)."""
-    return (
-        S.dot(F.col(a), F.col(a))
-        + S.dot(F.col(b), F.col(b))
-        - F.lit(2) * S.dot(F.col(a), F.col(b))
-    )
-
-
-def _sqdist_pre(a: str = "sv", b: str = "cv") -> F.Column:
-    """``_sqdist`` with both self-dots projected ONCE per side below
+def _sqdist_pre() -> F.Column:
+    """L2² between the ``sv`` and ``cv`` subvector columns via the dot
+    identity (see _SQ — the bit-portable form both engines evaluate
+    identically), with both self-dots projected ONCE per side below
     the pair join (``_saa`` on the streamed side, ``_sbb`` on the
-    codebook) — the association stays (aa + bb) - 2·ab over the same
-    doubles, so the value is bit-identical while the per-pair fold
-    count drops from 3 to 1."""
-    return F.col("_saa") + F.col("_sbb") - F.lit(2) * S.dot(F.col(a), F.col(b))
+    codebook): (aa + bb) - 2·ab over the same doubles as the oracle,
+    at one fold per pair."""
+    return F.col("_saa") + F.col("_sbb") - F.lit(2) * S.dot(F.col("sv"), F.col("cv"))
 
 
 # --- IVF-PQ: cell-pruned candidates, ADC-scored ----------------------------

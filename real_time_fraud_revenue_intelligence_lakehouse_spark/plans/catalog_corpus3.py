@@ -115,6 +115,50 @@ BPE_VOCAB = 60  # word types kept (by corpus frequency, tie → lexicographic)
 BPE_ROUNDS = 4  # greedy merges learned
 
 
+def _bpe_round_cte(r: int, train: bool) -> str:
+    """One run-parity merge round of the pair in p{r}: x{r} flags
+    matches, y{r} numbers their runs, z{r} keeps odd offsets per run,
+    w{r} re-joins the symbols. A training round (over w{r-1}) carries
+    each word's freq for the next pair count; an apply round (over
+    aw{r-1}, CTEs prefixed ``a``) does not. The learned-merges oracle
+    takes p{r} from the training CTEs, the external-merges oracle from
+    a constant row of the shipped list."""
+    a, cols, group = ("", "word, freq", "1, 2") if train else ("a", "word", "1")
+    return f"""
+    {a}x{r} AS (
+      SELECT {cols}, i, toks[i] AS tok,
+             CASE WHEN i < len(toks) AND toks[i] = p.bl AND toks[i + 1] = p.br
+                  THEN 1 ELSE 0 END AS m
+      FROM {a}w{r - 1}, p{r} p, unnest(range(1, len(toks) + 1)) AS u(i)
+    ),
+    {a}y{r} AS (
+      SELECT {cols}, i, tok, m,
+             i - row_number() OVER (PARTITION BY word, m ORDER BY i) AS grp
+      FROM {a}x{r}
+    ),
+    {a}z{r} AS (
+      SELECT {cols}, i, tok,
+             CASE WHEN m = 1 AND (row_number() OVER (
+                    PARTITION BY word, m, grp ORDER BY i)) % 2 = 1
+                  THEN 1 ELSE 0 END AS ms
+      FROM {a}y{r}
+    ),
+    {a}w{r} AS (
+      SELECT {cols},
+             string_split(string_agg(
+               CASE WHEN ms = 1 THEN tok || nxt ELSE tok END, ' ' ORDER BY i), ' ')
+               AS toks
+      FROM (
+        SELECT {cols}, i, tok, ms,
+               lead(tok) OVER (PARTITION BY word ORDER BY i) AS nxt,
+               lag(ms, 1, 0) OVER (PARTITION BY word ORDER BY i) AS prev_ms
+        FROM {a}z{r}
+      )
+      WHERE prev_ms = 0
+      GROUP BY {group}
+    )"""
+
+
 def _bpe_train_ctes() -> list:
     """Unrolled {BPE_ROUNDS}-round BPE training CTEs. Each round:
     count adjacent symbol pairs weighted by word frequency, pick
@@ -140,49 +184,17 @@ def _bpe_train_ctes() -> list:
     )"""
     ]
     for r in range(1, BPE_ROUNDS + 1):
-        prev = f"w{r - 1}"
         parts.append(
             f"""
     p{r} AS (
       SELECT bl, br, cnt FROM (
         SELECT toks[i] AS bl, toks[i + 1] AS br, sum(freq) AS cnt
-        FROM {prev}, unnest(range(1, len(toks))) AS u(i)
+        FROM w{r - 1}, unnest(range(1, len(toks))) AS u(i)
         GROUP BY 1, 2
       ) ORDER BY cnt DESC, bl ASC, br ASC LIMIT 1
-    ),
-    x{r} AS (
-      SELECT word, freq, i, toks[i] AS tok,
-             CASE WHEN i < len(toks) AND toks[i] = p.bl AND toks[i + 1] = p.br
-                  THEN 1 ELSE 0 END AS m
-      FROM {prev}, p{r} p, unnest(range(1, len(toks) + 1)) AS u(i)
-    ),
-    y{r} AS (
-      SELECT word, freq, i, tok, m,
-             i - row_number() OVER (PARTITION BY word, m ORDER BY i) AS grp
-      FROM x{r}
-    ),
-    z{r} AS (
-      SELECT word, freq, i, tok,
-             CASE WHEN m = 1 AND (row_number() OVER (
-                    PARTITION BY word, m, grp ORDER BY i)) % 2 = 1
-                  THEN 1 ELSE 0 END AS ms
-      FROM y{r}
-    ),
-    w{r} AS (
-      SELECT word, freq,
-             string_split(string_agg(
-               CASE WHEN ms = 1 THEN tok || nxt ELSE tok END, ' ' ORDER BY i), ' ')
-               AS toks
-      FROM (
-        SELECT word, freq, i, tok, ms,
-               lead(tok) OVER (PARTITION BY word ORDER BY i) AS nxt,
-               lag(ms, 1, 0) OVER (PARTITION BY word ORDER BY i) AS prev_ms
-        FROM z{r}
-      )
-      WHERE prev_ms = 0
-      GROUP BY 1, 2
     )"""
         )
+        parts.append(_bpe_round_cte(r, train=True))
     return parts
 
 
@@ -430,49 +442,40 @@ def _bpe_encode_oracle() -> str:
     parts = list(_bpe_train_ctes())
     parts.append(_SW_AW0_CTES)
     for r in range(1, BPE_ROUNDS + 1):
-        parts.append(_bpe_apply_round_cte(r))
+        parts.append(_bpe_round_cte(r, train=False))
     return "WITH " + ",".join(parts) + "\n    " + _bpe_encode_final(f"aw{BPE_ROUNDS}")
 
 
-def _bpe_apply_round_cte(r: int) -> str:
-    """One run-parity merge-application round over aw{r-1} using the
-    pair in p{r} — shared by the learned-merges oracle (p{r} comes
-    from the training CTEs) and the external-merges oracle (p{r} is a
-    constant row from the shipped list)."""
-    prev = f"aw{r - 1}"
-    return f"""
-    ax{r} AS (
-      SELECT word, i, toks[i] AS tok,
-             CASE WHEN i < len(toks) AND toks[i] = p.bl AND toks[i + 1] = p.br
-                  THEN 1 ELSE 0 END AS m
-      FROM {prev}, p{r} p, unnest(range(1, len(toks) + 1)) AS u(i)
-    ),
-    ay{r} AS (
-      SELECT word, i, tok, m,
-             i - row_number() OVER (PARTITION BY word, m ORDER BY i) AS grp
-      FROM ax{r}
-    ),
-    az{r} AS (
-      SELECT word, i, tok,
-             CASE WHEN m = 1 AND (row_number() OVER (
-                    PARTITION BY word, m, grp ORDER BY i)) % 2 = 1
-                  THEN 1 ELSE 0 END AS ms
-      FROM ay{r}
-    ),
-    aw{r} AS (
-      SELECT word,
-             string_split(string_agg(
-               CASE WHEN ms = 1 THEN tok || nxt ELSE tok END, ' ' ORDER BY i), ' ')
-               AS toks
-      FROM (
-        SELECT word, i, tok, ms,
-               lead(tok) OVER (PARTITION BY word ORDER BY i) AS nxt,
-               lag(ms, 1, 0) OVER (PARTITION BY word ORDER BY i) AS prev_ms
-        FROM az{r}
-      )
-      WHERE prev_ms = 0
-      GROUP BY 1
-    )"""
+def _source_words(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(source, word, cnt): per-source word counts — the ``sw`` CTE
+    both encode oracles share."""
+    d = read_table(spark, sf_dir, "documents")
+    return (
+        d.select(
+            "source",
+            F.explode(
+                F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
+            ).alias("word"),
+        )
+        .groupBy("source", "word")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def _encode_stats(sw: DataFrame, aw: DataFrame) -> DataFrame:
+    """Per-source n_words, n_tokens, fertility and compression of the
+    encoded word types ``aw`` (word, toks) — :func:`_bpe_encode_final`'s
+    twin."""
+    enc = sw.join(aw, "word")
+    n_tokens = F.sum(F.col("cnt") * F.size("toks"))
+    return enc.groupBy("source").agg(
+        F.sum("cnt").cast("long").alias("n_words"),
+        n_tokens.cast("long").alias("n_tokens"),
+        det_round(n_tokens.cast("double") / F.sum("cnt"), 6).alias("fertility"),
+        det_round(
+            F.sum(F.col("cnt") * (F.length("word") + 1)).cast("double") / n_tokens, 6
+        ).alias("compression"),
+    )
 
 
 @query("q_bpe_encode", oracle=_bpe_encode_oracle(), tags=("ext", "text", "bpe", "iterative"))
@@ -489,17 +492,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle unrolls the same apply rounds with run-parity merges over
     the whole vocabulary."""
     bests = _bpe_train_shared(spark, sf_dir)
-    d = read_table(spark, sf_dir, "documents")
-    sw = (
-        d.select(
-            "source",
-            F.explode(
-                F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
-            ).alias("word"),
-        )
-        .groupBy("source", "word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    sw = _source_words(spark, sf_dir)
     aw = (
         sw.select("word")
         .distinct()
@@ -509,16 +502,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     for best in bests:
         aw = _bpe_apply(aw, best, ["word"])
     note_dropped_checkpoints(spark)  # per-round aw checkpoints dropped above
-    enc = sw.join(aw, "word")
-    n_tokens = F.sum(F.col("cnt") * F.size("toks"))
-    return enc.groupBy("source").agg(
-        F.sum("cnt").cast("long").alias("n_words"),
-        n_tokens.cast("long").alias("n_tokens"),
-        det_round(n_tokens.cast("double") / F.sum("cnt"), 6).alias("fertility"),
-        det_round(
-            F.sum(F.col("cnt") * (F.length("word") + 1)).cast("double") / n_tokens, 6
-        ).alias("compression"),
-    )
+    return _encode_stats(sw, aw)
 
 
 # --- BPE encoding with a SHIPPED merge list ----------------------------------
@@ -564,7 +548,7 @@ def _bpe_encode_external_oracle() -> str:
             f"""
     p{r} AS (SELECT '{bl}' AS bl, '{br}' AS br)"""
         )
-        parts.append(_bpe_apply_round_cte(r))
+        parts.append(_bpe_round_cte(r, train=False))
     return (
         "WITH " + ",".join(parts) + "\n    "
         + _bpe_encode_final(f"aw{len(BPE_EXT_MERGES)}")
@@ -588,33 +572,14 @@ def q_bpe_encode_external(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round action, nothing iterative: the cheapest possible shape
     for the most common BPE operation. Oracle unrolls the same four
     merges as constant rows through the shared run-parity rounds."""
-    d = read_table(spark, sf_dir, "documents")
-    sw = (
-        d.select(
-            "source",
-            F.explode(
-                F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
-            ).alias("word"),
-        )
-        .groupBy("source", "word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    sw = _source_words(spark, sf_dir)
     aw = (
         sw.select("word")
         .distinct()
         .select("word", _bpe_toks(F.col("word")).alias("toks"))
     )
     aw = bpe_apply_external(aw, BPE_EXT_MERGES, ["word"])
-    enc = sw.join(aw, "word")
-    n_tokens = F.sum(F.col("cnt") * F.size("toks"))
-    return enc.groupBy("source").agg(
-        F.sum("cnt").cast("long").alias("n_words"),
-        n_tokens.cast("long").alias("n_tokens"),
-        det_round(n_tokens.cast("double") / F.sum("cnt"), 6).alias("fertility"),
-        det_round(
-            F.sum(F.col("cnt") * (F.length("word") + 1)).cast("double") / n_tokens, 6
-        ).alias("compression"),
-    )
+    return _encode_stats(sw, aw)
 
 
 # --- PMI collocations -------------------------------------------------------

@@ -22,7 +22,6 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.similarity import 
     COS_SQL,
     DBL_SQL,
     IVF_CELLS_SQL,
-    IVF_CENT_SQL,
     ivf_cand_sql,
     topk_sql,
 )
@@ -295,7 +294,6 @@ def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_table(spark, sf_dir, "documents"),
         "doc_id",
         "text",
-        threshold=0.5,
         sig=doc_minhash_sig(spark, sf_dir),
         toks=doc_token_sets(spark, sf_dir),
     )
@@ -324,7 +322,6 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_table(spark, sf_dir, "documents"),
         "doc_id",
         "text",
-        threshold=0.5,
         sig=doc_minhash_sig(spark, sf_dir),
         toks=doc_token_sets(spark, sf_dir),
     )
@@ -387,8 +384,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle stays the all-pairs SQL because the results are
     provably identical."""
     return D.simhash_pairs(
-        read_table(spark, sf_dir, "documents"), "doc_id", "text",
-        max_hamming=3, sample_mod=5,
+        read_table(spark, sf_dir, "documents"), "doc_id", "text", sample_mod=5,
     )
 
 
@@ -403,7 +399,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
     scored AS (
       SELECT query_id, c.vec_id AS match_id,
-             {det_round_sql(COS_SQL.format(a='qv', b='c.v'), 6)} AS cosine_sim
+             {det_round_sql(COS_SQL.format(a='qv', b='c.v'), S.SIM_DIGITS)} AS cosine_sim
       FROM q, e c WHERE c.vec_id <> query_id
     )
     {topk_sql(10)}
@@ -460,9 +456,9 @@ def q_embed_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE vec_id % 5 = 0
     )
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           {det_round_sql(COS_SQL.format(a='a.v', b='b.v'), 6)} AS cosine_sim
+           {det_round_sql(COS_SQL.format(a='a.v', b='b.v'), S.SIM_DIGITS)} AS cosine_sim
     FROM e a JOIN e b ON a.vec_id < b.vec_id
-    WHERE {det_round_sql(COS_SQL.format(a='a.v', b='b.v'), 6)} >= 0.35
+    WHERE {det_round_sql(COS_SQL.format(a='a.v', b='b.v'), S.SIM_DIGITS)} >= {S.NEARDUP_COSINE}
     """,
     tags=("ext", "dedup", "similarity"),
 )
@@ -478,7 +474,7 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     list_dot_product mirrors — no driver materialization anywhere in
     the plan (pinned by test_neardup_default_plan_has_no_driver_collect)."""
     e = read_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 5 == 0)
-    return S.neardup_pairs(e, threshold=0.35)
+    return S.neardup_pairs(e)
 
 
 def _table_bucket_sql(table: int) -> str:
@@ -511,7 +507,7 @@ def _buckets_sql() -> str:
     ),
     scored AS (
       SELECT query_id, match_id,
-             {det_round_sql(COS_SQL.format(a='eq.v', b='ec.v'), 6)} AS cosine_sim
+             {det_round_sql(COS_SQL.format(a='eq.v', b='ec.v'), S.SIM_DIGITS)} AS cosine_sim
       FROM cand
       JOIN e eq ON eq.vec_id = query_id
       JOIN e ec ON ec.vec_id = match_id
@@ -538,7 +534,7 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     {ivf_cand_sql(2, 20)},
     scored AS (
       SELECT query_id, match_id,
-             {det_round_sql(COS_SQL.format(a='eq.v', b='ec.v'), 6)} AS cosine_sim
+             {det_round_sql(COS_SQL.format(a='eq.v', b='ec.v'), S.SIM_DIGITS)} AS cosine_sim
       FROM cand JOIN e eq ON eq.vec_id = query_id JOIN e ec ON ec.vec_id = match_id
     )
     {topk_sql(5)}
@@ -1131,7 +1127,7 @@ def q_multimodal_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
         frame_sample,
     )
 
-    d = frame_sample(attach_binary(read_table(spark, sf_dir, "documents")), every_n=4)
+    d = frame_sample(attach_binary(read_table(spark, sf_dir, "documents")))
     return d.select("doc_id", F.col("media_meta.mime").alias("mime"))
 
 
@@ -1261,27 +1257,21 @@ _DCG_CASE = "CASE rank " + " ".join(
     WITH e AS (SELECT vec_id, {DBL_SQL.format(v='embedding')} AS v FROM embeddings),
     q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 20),
     truth AS (
-      SELECT query_id, match_id, rank FROM (
+      WITH scored AS (
         SELECT query_id, c.vec_id AS match_id,
-               row_number() OVER (
-                 PARTITION BY query_id
-                 ORDER BY {det_round_sql(COS_SQL.format(a='qv', b='c.v'), 6)} DESC, c.vec_id
-               ) AS rank
+               {det_round_sql(COS_SQL.format(a='qv', b='c.v'), S.SIM_DIGITS)} AS cosine_sim
         FROM q, e c WHERE c.vec_id <> query_id
-      ) WHERE rank <= 10
+      )
+      {topk_sql(10)}
     ),
     {ivf_cand_sql(2, 20)},
     approx AS (
-      SELECT query_id, match_id, rank FROM (
-        SELECT cand.query_id, cand.match_id,
-               row_number() OVER (
-                 PARTITION BY cand.query_id
-                 ORDER BY {det_round_sql(COS_SQL.format(a='eq.v', b='ec.v'), 6)} DESC, cand.match_id
-               ) AS rank
-        FROM cand
-        JOIN e eq ON eq.vec_id = cand.query_id
-        JOIN e ec ON ec.vec_id = cand.match_id
-      ) WHERE rank <= 10
+      WITH scored AS (
+        SELECT query_id, match_id,
+               {det_round_sql(COS_SQL.format(a='eq.v', b='ec.v'), S.SIM_DIGITS)} AS cosine_sim
+        FROM cand JOIN e eq ON eq.vec_id = query_id JOIN e ec ON ec.vec_id = match_id
+      )
+      {topk_sql(10)}
     ),
     hits AS (
       SELECT a.query_id, a.rank,
@@ -1345,23 +1335,13 @@ _SIL_PANEL = 60  # evaluation panel size
     "q_silhouette",
     oracle=f"""
     WITH e AS (SELECT vec_id, {DBL_SQL.format(v='embedding')} AS v FROM embeddings),
-    {IVF_CENT_SQL},
+    {IVF_CELLS_SQL},
     panel AS (SELECT vec_id, v FROM e WHERE vec_id < {_SIL_PANEL}),
-    assign AS (
-      SELECT vec_id, centroid_id FROM (
-        SELECT p.vec_id, cent.centroid_id,
-               row_number() OVER (
-                 PARTITION BY p.vec_id
-                 ORDER BY {det_round_sql(COS_SQL.format(a='p.v', b='cent.cv'), 6)} DESC, cent.centroid_id
-               ) AS crank
-        FROM panel p, cent
-      ) WHERE crank = 1
-    ),
     pairs AS (
       SELECT a.vec_id AS i, ca.centroid_id AS ci, cb.centroid_id AS cj,
-             CAST(1.0 - {det_round_sql(COS_SQL.format(a='a.v', b='b.v'), 6)} AS DECIMAL(28,8)) AS d
-      FROM panel a JOIN assign ca ON ca.vec_id = a.vec_id,
-           panel b JOIN assign cb ON cb.vec_id = b.vec_id
+             CAST(1.0 - {det_round_sql(COS_SQL.format(a='a.v', b='b.v'), S.SIM_DIGITS)} AS DECIMAL(28,8)) AS d
+      FROM panel a JOIN corpus_cells ca ON ca.match_id = a.vec_id,
+           panel b JOIN corpus_cells cb ON cb.match_id = b.vec_id
       WHERE a.vec_id <> b.vec_id
     ),
     md AS (
@@ -1576,16 +1556,13 @@ def _trunc_oracle() -> str:
       SELECT vec_id, {udim.format(d=d)} AS u FROM embeddings
     ),
     top{d} AS (
-      SELECT query_id, match_id FROM (
+      WITH scored AS (
         SELECT q.vec_id AS query_id, c.vec_id AS match_id,
-               row_number() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY (floor(list_dot_product(q.u, c.u) * 1000000.0 + 0.5) / 1000000.0) DESC,
-                          c.vec_id
-               ) AS rn
+               {det_round_sql('list_dot_product(q.u, c.u)', 6)} AS cosine_sim
         FROM e{d} q, e{d} c
         WHERE q.vec_id < {TRUNC_Q} AND c.vec_id <> q.vec_id
-      ) WHERE rn <= {TRUNC_K}
+      )
+      {topk_sql(TRUNC_K)}
     )""")
     hits = " UNION ALL ".join(
         f"SELECT {d} AS d, count(*) AS hits FROM top{d} t JOIN top64 f"
@@ -1721,18 +1698,12 @@ def _nprobe_oracle() -> str:
       WHERE q.query_id <> c.match_id
     ),
     top{np_} AS (
-      SELECT query_id, match_id FROM (
-        SELECT s.query_id, s.match_id,
-               row_number() OVER (
-                 PARTITION BY s.query_id ORDER BY s.cosine_sim DESC, s.match_id
-               ) AS rn
-        FROM (
-          SELECT query_id, match_id,
-                 {det_round_sql(COS_SQL.format(a='eq.v', b='ec.v'), 6)} AS cosine_sim
-          FROM cand{np_} JOIN e eq ON eq.vec_id = query_id
-                        JOIN e ec ON ec.vec_id = match_id
-        ) s
-      ) WHERE rn <= {NPROBE_K}
+      WITH scored AS (
+        SELECT query_id, match_id,
+               {det_round_sql(COS_SQL.format(a='eq.v', b='ec.v'), S.SIM_DIGITS)} AS cosine_sim
+        FROM cand{np_} JOIN e eq ON eq.vec_id = query_id JOIN e ec ON ec.vec_id = match_id
+      )
+      {topk_sql(NPROBE_K)}
     )""")
     hits = " UNION ALL ".join(
         f"SELECT {np_} AS nprobe,"
@@ -1745,15 +1716,13 @@ def _nprobe_oracle() -> str:
     WITH e AS (SELECT vec_id, {DBL_SQL.format(v='embedding')} AS v FROM embeddings),
     {IVF_CELLS_SQL},
     truth AS (
-      SELECT query_id, match_id FROM (
+      WITH scored AS (
         SELECT q.vec_id AS query_id, c.vec_id AS match_id,
-               row_number() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY {det_round_sql(COS_SQL.format(a='q.v', b='c.v'), 6)} DESC, c.vec_id
-               ) AS rn
+               {det_round_sql(COS_SQL.format(a='q.v', b='c.v'), S.SIM_DIGITS)} AS cosine_sim
         FROM e q, e c
         WHERE q.vec_id < {NPROBE_Q} AND c.vec_id <> q.vec_id
-      ) WHERE rn <= {NPROBE_K}
+      )
+      {topk_sql(NPROBE_K)}
     ),
     {','.join(branches)},
     h AS ({hits})

@@ -492,7 +492,7 @@ def q_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     spend = o.groupBy("o_custkey").agg(exact_sum("o_totalprice", "total_spend"))
     if rank_distributed(spark):
         return rank_positions(
-            spend, "total_spend", [F.asc("o_custkey")], descending=False,
+            spend, "total_spend", [F.asc("o_custkey")],
             pct_col="__p", cume_col="__c",
         ).select(
             "o_custkey",

@@ -26,18 +26,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import model_metrics, model_metrics_ctes
-from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import R4_SQL, R6_SQL, R8_SQL, det_round
+from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import (
+    AMOUNT_TIER_SQL,
+    R4_SQL,
+    R6_SQL,
+    R8_SQL,
+    amount_tier,
+    det_round,
+)
 from real_time_fraud_revenue_intelligence_lakehouse_spark.operators.ranking import distributed_cumsum, distributed_row_number
 from real_time_fraud_revenue_intelligence_lakehouse_spark.plans.registry import query
 from real_time_fraud_revenue_intelligence_lakehouse_spark.sources.tables import read_table
 
-
-# The 5-way amount-tier ladder (same cuts as the cleanse tier).
-TIER = (
-    "CASE WHEN {c} < 50 THEN 'micro' WHEN {c} < 200 THEN 'low' "
-    "WHEN {c} < 1000 THEN 'medium' WHEN {c} < 5000 THEN 'high' "
-    "ELSE 'premium' END"
-)
 
 PSI_YEAR_A, PSI_YEAR_B = 1995, 1996
 
@@ -46,7 +46,7 @@ PSI_YEAR_A, PSI_YEAR_B = 1995, 1996
     "q_psi",
     oracle=f"""
     WITH b AS (
-      SELECT {TIER.format(c='o_totalprice')} AS tier,
+      SELECT {AMOUNT_TIER_SQL.format(c='o_totalprice')} AS tier,
              year(cast(o_orderdate as date)) AS y
       FROM orders
       WHERE year(cast(o_orderdate as date)) IN ({PSI_YEAR_A}, {PSI_YEAR_B})
@@ -82,12 +82,7 @@ def q_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = read_table(spark, sf_dir, "orders")
     y = F.year("o_orderdate")
     b = o.filter(y.isin(PSI_YEAR_A, PSI_YEAR_B)).select(
-        F.when(F.col("o_totalprice") < 50, "micro")
-        .when(F.col("o_totalprice") < 200, "low")
-        .when(F.col("o_totalprice") < 1000, "medium")
-        .when(F.col("o_totalprice") < 5000, "high")
-        .otherwise("premium")
-        .alias("tier"),
+        amount_tier("o_totalprice").alias("tier"),
         y.alias("y"),
     )
     c = b.groupBy("tier").agg(

@@ -46,10 +46,11 @@ def scd2_from_events(
     )
 
 
-@query(
-    "q_scd2_segments",
-    oracle="""
-    WITH ordered AS (
+#: DuckDB twin of :func:`scd2_from_events`' change rows over the
+#: events stream (user_id, event_type by (ts, event_id)): ``ordered``
+#: carries each row's predecessor segment, ``changes`` keeps the rows
+#: whose segment differs from it.
+_SCD2_CHANGES_SQL = """ordered AS (
       SELECT user_id, event_type, ts, event_id,
              lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
                AS prev_seg
@@ -59,7 +60,13 @@ def scd2_from_events(
       SELECT user_id, event_type AS segment, ts AS valid_from, event_id
       FROM ordered
       WHERE prev_seg IS NULL OR prev_seg <> event_type
-    )
+    )"""
+
+
+@query(
+    "q_scd2_segments",
+    oracle=f"""
+    WITH {_SCD2_CHANGES_SQL}
     SELECT user_id, segment, valid_from,
            lead(valid_from) OVER w2 AS valid_to,
            lead(valid_from) OVER w2 IS NULL AS is_current
@@ -184,17 +191,7 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_scd2_lookup",
     oracle=f"""
-    WITH ordered AS (
-      SELECT user_id, event_type, ts, event_id,
-             lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-               AS prev_seg
-      FROM events
-    ),
-    changes AS (
-      SELECT user_id, event_type AS segment, ts AS valid_from, event_id
-      FROM ordered
-      WHERE prev_seg IS NULL OR prev_seg <> event_type
-    ),
+    WITH {_SCD2_CHANGES_SQL},
     dim AS (
       SELECT user_id, segment, valid_from,
              lead(valid_from) OVER (PARTITION BY user_id

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import (
+    RISK_LABEL_SQL,
     gbt_score_batch,
     gbt_sql,
     score_batch,
@@ -37,9 +38,7 @@ _FV_SQL = registry._REGISTRY["q_feature_vector"].oracle
       FROM fv
     )
     SELECT o_orderkey, label, fraud_score,
-           CASE WHEN fraud_score >= 0.7 THEN 'high'
-                WHEN fraud_score >= 0.4 THEN 'medium'
-                ELSE 'low' END AS risk_label
+           {RISK_LABEL_SQL.format(s="fraud_score")} AS risk_label
     FROM scored
     """,
     tags=("features", "scoring"),
@@ -63,9 +62,7 @@ def q_fraud_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM fv
     )
     SELECT o_orderkey, label, fraud_score,
-           CASE WHEN fraud_score >= 0.7 THEN 'high'
-                WHEN fraud_score >= 0.4 THEN 'medium'
-                ELSE 'low' END AS risk_label
+           {RISK_LABEL_SQL.format(s="fraud_score")} AS risk_label
     FROM scored
     """,
     tags=("features", "scoring"),
@@ -834,6 +831,36 @@ def q_model_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame([tuple(row)], _CARD_SCHEMA)
 
 
+def _promoted_gate_rows(trees: list[dict], card: dict) -> list[tuple]:
+    """Run promote_model for the booster ``trees`` with model card
+    ``card`` against a scratch registry (a rejected candidate commits
+    nothing) and return, per QUALITY_GATES metric, (metric, value,
+    min_required, ok, promoted) — the gate report both promotion
+    queries emit."""
+    import shutil
+    import tempfile
+
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.model_registry import (
+        QUALITY_GATES,
+        gbt_doc,
+        promote_model,
+    )
+
+    kind, params = gbt_doc(trees, SCORE_FEATURES)
+    tdir = tempfile.mkdtemp(prefix="rtfril_registry_")
+    try:
+        version, report = promote_model(
+            tdir, kind, params, list(SCORE_FEATURES), card
+        )
+    finally:
+        shutil.rmtree(tdir, ignore_errors=True)
+    promoted = 1 if version is not None else 0
+    return [
+        (m, float(card[m]), float(QUALITY_GATES[m]), 1 if report[m]["ok"] else 0, promoted)
+        for m in QUALITY_GATES
+    ]
+
+
 def _model_promotion_oracle() -> str:
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.model_registry import QUALITY_GATES
 
@@ -873,30 +900,8 @@ def q_model_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     its threshold. The oracle re-derives the identical report from
     the re-trained card; the registry side effect is covered by
     tests/test_model_registry.py."""
-    import shutil
-    import tempfile
-
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.model_registry import (
-        QUALITY_GATES,
-        gbt_doc,
-        promote_model,
-    )
-
     card = _card_row(spark, sf_dir).asDict()
-    trees = _trained_gbt(spark, sf_dir)
-    kind, params = gbt_doc(trees, SCORE_FEATURES)
-    tdir = tempfile.mkdtemp(prefix="rtfril_registry_")
-    try:
-        version, report = promote_model(
-            tdir, kind, params, list(SCORE_FEATURES), card
-        )
-    finally:
-        shutil.rmtree(tdir, ignore_errors=True)
-    promoted = 1 if version is not None else 0
-    rows = [
-        (m, float(card[m]), float(QUALITY_GATES[m]), 1 if report[m]["ok"] else 0, promoted)
-        for m in QUALITY_GATES
-    ]
+    rows = _promoted_gate_rows(_trained_gbt(spark, sf_dir), card)
     return spark.createDataFrame(
         rows, "metric string, value double, min_required double, ok int, promoted int"
     )
@@ -1223,15 +1228,6 @@ def q_retrain_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch the unrolled training on a data-dependent winner, so the
     all-configs form is an oracle artifact, not the engine's scale
     shape."""
-    import shutil
-    import tempfile
-
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.model_registry import (
-        QUALITY_GATES,
-        gbt_doc,
-        promote_model,
-    )
-
     losses = _gbt_selection(spark, sf_dir)
     best = best_config(GBT_MS_CONFIGS, losses)
     name, rounds, eta, lam = GBT_MS_CONFIGS[best]
@@ -1246,30 +1242,9 @@ def q_retrain_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (trees, card)
 
     trees, card_row = memo(spark, sf_dir, f"gbt_best:{name}", build)
-    card = card_row.asDict()
-    kind, params = gbt_doc(trees, SCORE_FEATURES)
-    tdir = tempfile.mkdtemp(prefix="rtfril_retrain_")
-    try:
-        version, report = promote_model(
-            tdir, kind, params, list(SCORE_FEATURES), card
-        )
-    finally:
-        shutil.rmtree(tdir, ignore_errors=True)
-    promoted = 1 if version is not None else 0
     rows = [
-        (
-            name,
-            rounds,
-            eta,
-            lam,
-            losses[best],
-            m,
-            float(card[m]),
-            float(QUALITY_GATES[m]),
-            1 if report[m]["ok"] else 0,
-            promoted,
-        )
-        for m in QUALITY_GATES
+        (name, rounds, eta, lam, losses[best], *gate)
+        for gate in _promoted_gate_rows(trees, card_row.asDict())
     ]
     return spark.createDataFrame(
         rows,

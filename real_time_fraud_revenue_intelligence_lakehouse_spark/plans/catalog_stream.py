@@ -442,4 +442,4 @@ def q_fraud_alert_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = read_table(spark, sf_dir, "events")
     scored = score_stream(ev, _ALERT_W, ("value",), {"value": 500.0})
-    return high_risk_alerts(scored, threshold=0.7, window="1 hour", watermark=None)
+    return high_risk_alerts(scored, watermark=None)

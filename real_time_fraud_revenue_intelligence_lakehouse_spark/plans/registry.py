@@ -62,6 +62,16 @@ def _load_all() -> None:
 # in dict order with a hard 50-entry per-round budget (every registered
 # id is green in the r01-r15 union), so ids needing a fresh driver row
 # come FIRST. Layout of this head:
+#   1-10:   the ids whose oracle text the one-value-one-constant change
+#           regenerated: the risk-band and amount-tier templates
+#           (functions/scalars.AMOUNT_TIER_SQL, ext/scoring.RISK_LABEL_SQL)
+#           and the exact top-k ranks folded into
+#           ext/similarity.topk_sql / IVF_CELLS_SQL (results hash-equal);
+#   11-15:  the ids whose Spark side moved onto one shared helper
+#           (_promoted_gate_rows, _source_words/_encode_stats,
+#           amount_tier) — plans unchanged;
+#   then the previous layout's blocks in order (numbered as they were
+#   before this head; the ids moved up above are listed only there):
 #   1-5:    the ids the one-AUC-per-shape change touched: q_auc (its
 #           oracle is now model_metrics_ctes), then the four whose
 #           Spark AUC reduction changed (q_gbt_early_stop_auc onto
@@ -86,15 +96,30 @@ def _load_all() -> None:
 # Planned-but-not-yet-registered names are harmless: _ordered()
 # filters on membership.
 _FRONT: tuple[str, ...] = (
+    # — oracle text regenerated by the one risk-band, amount-tier and
+    #   top-k templates —
+    "q_fraud_scores",
+    "q_gbt_scores",
+    "q_logreg_train_score",
+    "q_gbt_train_score",
+    "q_gbt_deep_score",
+    "q_bucket_tier",
+    "q_ann_recall",
+    "q_embed_dim_truncation",
+    "q_ivf_nprobe_curve",
+    "q_silhouette",
+    # — Spark side folded onto one promotion / encode / tier helper —
+    "q_model_promotion",
+    "q_retrain_best",
+    "q_bpe_encode",
+    "q_bpe_encode_external",
+    "q_psi",
     # — one AUC reduction per shape (keyed / global) —
     "q_auc",
     "q_gbt_early_stop_auc",
     "q_model_card",
-    "q_model_promotion",
-    "q_retrain_best",
     # — oracle regenerated by the one-oracle GBT/SHAP generators —
     "q_gbt_calibration",
-    "q_gbt_deep_score",
     "q_gbt_depth_selection",
     "q_gbt_early_stop",
     "q_gbt_importance",
@@ -111,7 +136,6 @@ _FRONT: tuple[str, ...] = (
     "q_gbt_train_depth4",
     "q_gbt_train_l1",
     "q_gbt_train_mcw",
-    "q_gbt_train_score",
     "q_gbt_train_subsample",
     "q_gbt_train_weighted",
     "q_model_selection_cv",
@@ -123,14 +147,10 @@ _FRONT: tuple[str, ...] = (
     "q_pagerank_converge",
     "q_dup_clusters",
     "q_ivf_topk",
-    "q_ann_recall",
     "q_ann_topk",
     "q_embed_neardup",
     "q_ivfpq_topk",
-    "q_fraud_scores",
-    "q_gbt_scores",
     # — read through the one keyed memo (shared_frames.memo) —
-    "q_bpe_encode",
     "q_bpe_merges",
     "q_kmeans_inertia",
     "q_kmeans_train",
@@ -138,7 +158,6 @@ _FRONT: tuple[str, ...] = (
     "q_logreg_roc",
     "q_logreg_train",
     "q_logreg_train_scaled",
-    "q_logreg_train_score",
     "q_logreg_train_weighted",
     "q_model_selection",
     "q_score_drift_psi",
@@ -171,8 +190,6 @@ _FRONT: tuple[str, ...] = (
     # — last sampled row r10 (47 ids here; q_bpe_encode and q_bpe_merges
     #   are in the memo block, q_route_reconstruct in the graph one) —
     "q_agg_join",
-    "q_bpe_encode_external",
-    "q_bucket_tier",
     "q_casts",
     "q_clean_filter",
     "q_country_risk",

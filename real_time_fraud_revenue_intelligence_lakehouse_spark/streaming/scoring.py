@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import risk_label
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import RISK_HIGH, risk_label
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import trained_score_expr
 
 
@@ -47,17 +47,21 @@ def score_stream(
     )
 
 
+#: The alert rollup's tumbling window — the reference dashboard's
+#: hourly bucket (`fraud_summary.py:117-133`).
+ALERT_WINDOW = "1 hour"
+
+
 def high_risk_alerts(
     scored: DataFrame,
-    threshold: float = 0.7,
-    window: str = "1 hour",
     ts_col: str = "ts",
     watermark: str | None = "30 minutes",
 ) -> DataFrame:
     """Tumbling-window alert rollup over the scored stream: rows at or
-    above ``threshold``, counted per window with their exact decimal
-    score mass — the live face of the reference's fraud-summary
-    dashboard query. Watermark bounds the window state; pass None on
+    above the high-risk cut (:data:`ext.scoring.RISK_HIGH`), counted
+    per :data:`ALERT_WINDOW` window with their exact decimal score
+    mass — the live face of the reference's fraud-summary dashboard
+    query. Watermark bounds the window state; pass None on
     batch frames (the twin used for equality tests).
 
     WATERMARK TRAP, round 3 (found by this module's own test): the
@@ -77,9 +81,9 @@ def high_risk_alerts(
     output."""
     if watermark is not None:
         scored = scored.withWatermark(ts_col, watermark)
-    is_hit = F.col("fraud_score") >= threshold
+    is_hit = F.col("fraud_score") >= RISK_HIGH
     return (
-        scored.groupBy(F.window(ts_col, window).alias("w"))
+        scored.groupBy(F.window(ts_col, ALERT_WINDOW).alias("w"))
         .agg(
             F.sum(is_hit.cast("long")).alias("n_alerts"),
             F.sum(
@@ -105,8 +109,6 @@ def explain_stream(
     tables: list[dict],
     feature_cols: tuple[str, ...],
     scales: dict[str, float] | None = None,
-    bins: int | None = None,
-    eta: float | None = None,
 ) -> DataFrame:
     """Scored-AND-EXPLAINED projection for the GBT ensemble: appends
     fraud_score / risk_label plus the row's top SHAP driver
@@ -124,25 +126,16 @@ def explain_stream(
     micro-batch and its batch twin (tests/test_streaming.py). At
     100 TB ingest the explanation adds one codegen projection — no
     Python, no joins, no state."""
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
-        GBT_BINS,
-        GBT_ETA,
-        gbt_trained_logit_expr,
-    )
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import gbt_trained_logit_expr
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.shap import shap_phi_columns
     from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
 
-    bins = GBT_BINS if bins is None else bins
-    eta = GBT_ETA if eta is None else eta
     s = det_round(
         F.lit(1.0)
-        / (
-            F.lit(1.0)
-            + F.exp(-gbt_trained_logit_expr(trees, feature_cols, bins, eta, scales))
-        ),
+        / (F.lit(1.0) + F.exp(-gbt_trained_logit_expr(trees, feature_cols, scales=scales))),
         6,
     )
-    phis = shap_phi_columns(trees, tables, feature_cols, scales, bins)
+    phis = shap_phi_columns(trees, tables, feature_cols, scales)
     # stage the |φ| array once (the staged-argmin discipline), then
     # argmax + element_at read the staged column
     staged = features.withColumn("fraud_score", s).withColumn(

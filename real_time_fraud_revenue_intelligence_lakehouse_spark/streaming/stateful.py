@@ -670,17 +670,21 @@ def _cusum_spec(mean: float, std: float, k: float, h: float) -> _Fold:
     )
 
 
+#: The stream's CUSUM slack ``k`` and alarm threshold ``h`` (z-units).
+CUSUM_K = 0.5
+CUSUM_H = 5.0
+
+
 def running_cusum(
     events: DataFrame,
     mean: float,
     std: float,
-    k: float = 0.5,
-    h: float = 5.0,
     key_col: str = "event_type",
     expire_after_ms: int | None = None,
 ) -> DataFrame:
     """Streaming CUSUM drift alarm: per key, the one-sided
-    s = max(0, s + ((value − mean)/std − k)) recursion maintained
+    s = max(0, s + ((value − mean)/std − k)) recursion (k =
+    :data:`CUSUM_K`, alarm above h = :data:`CUSUM_H`) maintained
     across micro-batches with O(keys) state — the incremental form of
     q_cusum's batch reflection closed form, for when the drift gate
     must fire WITHIN the stream instead of at the nightly rollup.
@@ -702,15 +706,17 @@ def running_cusum(
     so state is bounded without expiry — and expiring a shard would
     silently discard the whole-history summary those sketches exist
     to maintain."""
-    return _stateful(events, key_col, _cusum_spec(mean, std, k, h), expire_after_ms)
+    return _stateful(
+        events, key_col, _cusum_spec(mean, std, CUSUM_K, CUSUM_H), expire_after_ms
+    )
 
 
 def running_cusum_batch(
     events: DataFrame,
     mean: float,
     std: float,
-    k: float = 0.5,
-    h: float = 5.0,
+    k: float = CUSUM_K,
+    h: float = CUSUM_H,
     key_col: str = "event_type",
 ) -> DataFrame:
     """Batch twin: one applyInPandas pass per key over the full
@@ -742,9 +748,7 @@ EWMA_STATE_SCHEMA = "s_micros BIGINT, total_rows BIGINT, started BOOLEAN"
 EWMA_ALPHA_MICROS = 200_000  # α = 0.2 in millionths
 
 
-def _ewma_fold(
-    s_micros: int, started: bool, values, alpha_micros: int
-) -> tuple[int, bool, int]:
+def _ewma_fold(s_micros: int, started: bool, values) -> tuple[int, bool, int]:
     """THE shared per-row fold: seed at the first value, then the
     integer convex combination. floor-division is the quantization —
     both twins apply it identically per row, so state is split-point
@@ -755,23 +759,22 @@ def _ewma_fold(
     HALF_UP both assume it)."""
     import math
 
+    a = EWMA_ALPHA_MICROS
     n = 0
     for v in values:
         x = int(math.floor(v * _M + 0.5))
         if not started:
             s_micros, started = x, True
         else:
-            s_micros = (alpha_micros * x + (_M - alpha_micros) * s_micros) // _M
+            s_micros = (a * x + (_M - a) * s_micros) // _M
         n += 1
     return s_micros, started, n
 
 
-def _ewma_spec(alpha_micros: int) -> _Fold:
+def _ewma_spec() -> _Fold:
     def step(st: tuple, pdf: "pd.DataFrame") -> tuple[tuple, int]:
         s_micros, total_rows, started = st
-        s_micros, started, n = _ewma_fold(
-            s_micros, started, pdf["value"].tolist(), alpha_micros
-        )
+        s_micros, started, n = _ewma_fold(s_micros, started, pdf["value"].tolist())
         return (s_micros, total_rows + n, started), n
 
     return _Fold(
@@ -791,32 +794,28 @@ def _ewma_spec(alpha_micros: int) -> _Fold:
 
 def running_ewma(
     events: DataFrame,
-    alpha_micros: int = EWMA_ALPHA_MICROS,
     key_col: str = "event_type",
     expire_after_ms: int | None = None,
 ) -> DataFrame:
     """Streaming recursive EWMA per key — the infinite-history
-    smoother (s' = α·x + (1−α)·s) next to the batch q_ewma's
-    trailing-frame form: where the frame EWMA re-reads its window
-    every run, this carries ONE integer across micro-batches, the
-    level a latency/price monitor consults mid-stream. Same state
+    smoother (s' = α·x + (1−α)·s, α = :data:`EWMA_ALPHA_MICROS`) next
+    to the batch q_ewma's trailing-frame form: where the frame EWMA
+    re-reads its window every run, this carries ONE integer across
+    micro-batches, the level a latency/price monitor consults
+    mid-stream. Same state
     policy as running_cusum: unbounded-cardinality keys should pass
     ``expire_after_ms`` (EventTimeTimeout; a returning key re-seeds
     at its next value — exactly a fresh smoother); the default
     event_type key is bounded. Stream ≡ batch twin exactly under
     in-order arrival (integer-micros state; the same caveat as
     running_cusum_batch documents)."""
-    return _stateful(events, key_col, _ewma_spec(alpha_micros), expire_after_ms)
+    return _stateful(events, key_col, _ewma_spec(), expire_after_ms)
 
 
-def running_ewma_batch(
-    events: DataFrame,
-    alpha_micros: int = EWMA_ALPHA_MICROS,
-    key_col: str = "event_type",
-) -> DataFrame:
+def running_ewma_batch(events: DataFrame, key_col: str = "event_type") -> DataFrame:
     """Batch twin: one applyInPandas pass per key over the full
     history in (ts, event_id) order — the stream's FINAL state."""
-    return _replay(events, key_col, _ewma_spec(alpha_micros))
+    return _replay(events, key_col, _ewma_spec())
 
 
 # --- streaming HyperLogLog distinct count -------------------------------------

@@ -53,7 +53,7 @@ def test_lsh_finds_planted_near_dups(spark):
     planted = {(b * 2, b * 2 + 1) for b in range(20)}
     lsh = {
         (r["id_a"], r["id_b"])
-        for r in D.minhash_lsh_pairs(df, "doc_id", "text", threshold=0.5).collect()
+        for r in D.minhash_lsh_pairs(df, "doc_id", "text").collect()
     }
     missed = planted - lsh
     assert len(missed) <= 2, f"LSH missed planted pairs {missed}"
@@ -84,11 +84,11 @@ def test_lsh_bucket_cap(spark):
 
     uncapped = {
         (r["id_a"], r["id_b"])
-        for r in D.minhash_lsh_pairs(df, "doc_id", "text", threshold=0.5, max_bucket=None).collect()
+        for r in D.minhash_lsh_pairs(df, "doc_id", "text", max_bucket=None).collect()
     }
     capped = {
         (r["id_a"], r["id_b"])
-        for r in D.minhash_lsh_pairs(df, "doc_id", "text", threshold=0.5, max_bucket=10).collect()
+        for r in D.minhash_lsh_pairs(df, "doc_id", "text", max_bucket=10).collect()
     }
     skew = set(skew_ids)
     boiler_pairs = {(a, b) for a, b in uncapped if a in skew and b in skew}
@@ -130,12 +130,12 @@ def test_dup_clusters_merges_transitive_chain(spark):
     df = _docs(spark, [(10, base), (11, mid), (12, far), (13, other)])
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in D.minhash_lsh_pairs(df, "doc_id", "text", threshold=0.5).collect()
+        for r in D.minhash_lsh_pairs(df, "doc_id", "text").collect()
     }
     assert (10, 11) in pairs and (11, 12) in pairs and (10, 12) not in pairs, pairs
     got = {
         r["doc_id"]: (r["cluster_id"], r["cluster_size"])
-        for r in D.dup_clusters(df, "doc_id", "text", threshold=0.5).collect()
+        for r in D.dup_clusters(df, "doc_id", "text").collect()
     }
     assert got == {10: (10, 3), 11: (10, 3), 12: (10, 3)}
 
@@ -163,12 +163,12 @@ def test_simhash_blocked_equals_brute_force(spark, sf_dir):
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     blocked = sorted(
         tuple(r)
-        for r in D.simhash_pairs(d, "doc_id", "text", max_hamming=3, sample_mod=4).collect()
+        for r in D.simhash_pairs(d, "doc_id", "text", sample_mod=4).collect()
     )
     brute = sorted(
         tuple(r)
         for r in D.simhash_pairs(
-            d, "doc_id", "text", max_hamming=3, sample_mod=4, blocked=False
+            d, "doc_id", "text", sample_mod=4, blocked=False
         ).collect()
     )
     assert blocked == brute
@@ -195,7 +195,7 @@ def test_neardup_pairs_equal_the_duckdb_oracle(spark, sf_dir):
     from real_time_fraud_revenue_intelligence_lakehouse_spark.plans import registry
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(F.col("vec_id") % 5 == 0)
-    got = sorted(tuple(r) for r in S.neardup_pairs(e, threshold=0.35).collect())
+    got = sorted(tuple(r) for r in S.neardup_pairs(e).collect())
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{sf_dir}/embeddings.parquet')"
@@ -217,7 +217,7 @@ def test_neardup_default_plan_has_no_driver_collect(spark, sf_dir, monkeypatch):
     # patch the concrete class: pyspark.sql.DataFrame is only its base
     monkeypatch.setattr(type(e), "collect", _boom)
     monkeypatch.setattr(type(e), "toPandas", _boom)
-    df = S.neardup_pairs(e, threshold=0.35)  # build only — must not collect
+    df = S.neardup_pairs(e)  # build only — must not collect
     assert "cosine_sim" in df.columns
 
 
@@ -309,8 +309,8 @@ def test_resize_media_updates_payload_and_meta(spark):
 def test_frame_sample_is_deterministic_subset(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     binary = M.attach_binary(docs)
-    a = sorted(r["doc_id"] for r in M.frame_sample(binary, 4).select("doc_id").collect())
-    b = sorted(r["doc_id"] for r in M.frame_sample(binary, 4).select("doc_id").collect())
+    a = sorted(r["doc_id"] for r in M.frame_sample(binary).select("doc_id").collect())
+    b = sorted(r["doc_id"] for r in M.frame_sample(binary).select("doc_id").collect())
     assert a == b
     assert 0 < len(a) < binary.count()
 
@@ -387,8 +387,8 @@ def test_star_cc_equals_label_propagation(spark, sf_dir):
     identically to min-label propagation (same components, same
     min-id cluster labels, same sizes)."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(F.col("doc_id") % 2 == 0)
-    a = sorted(tuple(r) for r in D.dup_clusters(d, "doc_id", "text", threshold=0.5).collect())
-    pairs = D.minhash_lsh_pairs(d, "doc_id", "text", threshold=0.5).select("id_a", "id_b")
+    a = sorted(tuple(r) for r in D.dup_clusters(d, "doc_id", "text").collect())
+    pairs = D.minhash_lsh_pairs(d, "doc_id", "text").select("id_a", "id_b")
     labels = D.connected_components_star(pairs)
     sizes = labels.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("cluster_size"))
     star = labels.join(sizes, "cluster_id").select(
@@ -409,7 +409,7 @@ def test_dup_clusters_notes_dropped_checkpoints(spark):
     df = _docs(spark, [(1, base), (2, base + " extra"), (3, "unrelated text entirely")])
     shared_frames.clear_cache()
     assert spark.sparkContext.applicationId not in shared_frames._ITER_CONTEXTS
-    D.dup_clusters(df, "doc_id", "text", threshold=0.5).collect()
+    D.dup_clusters(df, "doc_id", "text").collect()
     assert spark.sparkContext.applicationId in shared_frames._ITER_CONTEXTS
 
 

@@ -753,8 +753,7 @@ def test_fold_fused_cv_trainers_match_per_fold_loop(spark):
 
     def fused(configs):
         k = len(configs)
-        trees = _fit(df, [_cfg(*c) for c in configs], FEATS, GBT_BINS, "label",
-                     {}, fold_col, 3)
+        trees = _fit(df, [_cfg(*c) for c in configs], FEATS, {}, fold_col, 3)
         return [trees[f * k:(f + 1) * k] for f in range(3)]
 
     cfgs2 = (("a", 2, 0.3, 1.0), ("b", 1, 0.3, 1.0), ("c", 2, 0.1, 5.0))

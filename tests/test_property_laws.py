@@ -56,9 +56,7 @@ def test_prefix_jaccard_lossless_vs_brute(spark, docs):
     )
     got = {
         (r["id_a"], r["id_b"]): (r["n_common"], r["n_union"])
-        for r in prefix_jaccard_pairs(
-            df, "doc_id", "text", theta_num=1, theta_den=2, shingle_n=1
-        ).collect()
+        for r in prefix_jaccard_pairs(df, "doc_id", "text", shingle_n=1).collect()
     }
     # Brute force over the same token-set semantics: whitespace split
     # of the trimmed text; empty text is the single empty shingle.

@@ -69,7 +69,7 @@ def test_simhash_pigeonhole_equals_python_brute(spark, docs):
 
     got = sorted(
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in simhash_pairs(df, "doc_id", "text", max_hamming=3).collect()
+        for r in simhash_pairs(df, "doc_id", "text").collect()
     )
     want = []
     for a in range(len(docs)):

@@ -110,7 +110,7 @@ def test_dedup_pipeline_drops_only_cluster_members(spark, sf_dir, qs):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     survivors = qs["q_dedup_pipeline"](spark, sf_dir)
-    clusters = D.dup_clusters(docs, "doc_id", "text", threshold=0.5)
+    clusters = D.dup_clusters(docs, "doc_id", "text")
     n_dropped = clusters.filter(F.col("doc_id") != F.col("cluster_id")).count()
     assert survivors.count() == docs.count() - n_dropped
     reps = set(

@@ -152,7 +152,7 @@ def test_signal_feature_dominates_attribution(spark):
     mean |φ| must load on x2 — attribution finds the signal."""
     from pyspark.sql import functions as F
 
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import GBT_BINS, _bin_expr
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import _bin_expr
 
     rng = np.random.RandomState(11)
     n = 600
@@ -169,7 +169,7 @@ def test_signal_feature_dominates_attribution(spark):
     feats = ("x1", "x2")
 
     def bcol(fidx):
-        return _bin_expr(feats[fidx], {}, GBT_BINS)
+        return _bin_expr(feats[fidx], {})
 
     mean_abs = {0: 0.0, 1: 0.0}
     for tr in trees:

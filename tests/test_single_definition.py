@@ -40,6 +40,9 @@ ANCHORS: dict[str, set[tuple[str, str]]] = {
     r'Window\.partitionBy\("query_id"\)\.orderBy\(F\.desc\("cosine_sim"\), F\.asc\("match_id"\)\)': {
         ("ext/similarity.py", "_topk"),
     },
+    # a per-query rank by det-rounded cosine written in place: only
+    # the IVF cell assignment; every other top-k goes through topk_sql
+    r"ORDER BY \{det_round_sql\(COS_SQL": {("ext/similarity.py", "IVF_CELLS_SQL")},
     # co-service graph and its kNN continuation
     r"SELECT DISTINCT o\.o_custkey AS cust, l\.l_suppkey AS supp": {
         ("plans/shared_frames.py", "CUST_SUPP_SQL"),
@@ -56,6 +59,24 @@ ANCHORS: dict[str, set[tuple[str, str]]] = {
     r"4503599627370495": {
         ("functions/scalars.py", "HLL_REGISTER_SQL"),
         ("ext/text.py", "hll_register"),
+    },
+    # the 5-way amount tier and the 3-way risk band: one cut list or
+    # cut pair each, read by the Spark ladder and its SQL template
+    r"THEN 'micro'|\"micro\"": {("functions/scalars.py", "AMOUNT_TIERS")},
+    r">= (0\.7|\{RISK_HIGH\}) THEN 'high'": {("ext/scoring.py", "RISK_LABEL_SQL")},
+    # the BPE run-parity merge round, training and applying
+    r"PARTITION BY word, m, grp ORDER BY i": {("plans/catalog_corpus3.py", "_bpe_round_cte")},
+    # the encode queries' per-source word count and fertility tail
+    r'F\.col\("text"\)\), F\.lit\("\[a-z\]\+"\), 0\)\s*\)\.alias\("word"\),': {
+        ("plans/catalog_corpus3.py", "_source_words"),
+    },
+    r'F\.length\("word"\) \+ 1': {("plans/catalog_corpus3.py", "_encode_stats")},
+    # the SCD2 change rows
+    r"prev_seg IS NULL OR prev_seg <> event_type": {("plans/catalog_scd2.py", "_SCD2_CHANGES_SQL")},
+    # promote a booster into a scratch registry, then report its gates
+    r"promote_model\(": {
+        ("ext/model_registry.py", "promote_model"),
+        ("plans/catalog_scoring.py", "_promoted_gate_rows"),
     },
     # the 60-bit md5 hash as Spark SQL text: only ext/text's docstring
     r"conv\(substr(?:ing)?\(md5\(": {("ext/text.py", "__doc__")},

@@ -70,7 +70,7 @@ def test_salted_broadcast_join_equals_plain_join(spark):
     )
     plain = big.join(small, "user_id").groupBy("segment").count().collect()
     salted = (
-        salted_broadcast_join(big, small, "user_id", salt=8)
+        salted_broadcast_join(big, small, "user_id")
         .groupBy("segment")
         .count()
         .collect()

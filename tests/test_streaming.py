@@ -961,7 +961,7 @@ def test_streaming_cusum_state_carries_and_matches_batch_twin(spark, tmp_path):
     )
     stream = running_cusum(
         read_file_stream(spark, str(src), max_files_per_trigger=1),
-        mean=10.0, std=2.0, k=0.5, h=5.0, key_col="event_type",
+        mean=10.0, std=2.0, key_col="event_type",
     )
     q = (
         stream.writeStream.format("memory")
@@ -984,7 +984,7 @@ def test_streaming_cusum_state_carries_and_matches_batch_twin(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
     ).json(str(src))
     twin = running_cusum_batch(
-        hist, mean=10.0, std=2.0, k=0.5, h=5.0, key_col="event_type"
+        hist, mean=10.0, std=2.0, key_col="event_type"
     ).collect()[0]
     assert twin["s_end"] == final_stream["s_end"]
     assert twin["n_alarms"] == final_stream["n_alarms"]
@@ -1036,7 +1036,7 @@ def test_cusum_state_expiry_drops_and_recreates(spark, tmp_path):
     def run(src: str, qname: str, expire_ms):
         out = running_cusum(
             with_watermark(read_file_stream(spark, src, max_files_per_trigger=1)),
-            mean=10.0, std=2.0, k=0.5, h=5.0,
+            mean=10.0, std=2.0,
             key_col="event_type", expire_after_ms=expire_ms,
         )
         q = (
@@ -1407,7 +1407,7 @@ def _chunk_twins():
     from real_time_fraud_revenue_intelligence_lakehouse_spark.streaming import stateful as S
 
     def cusum(fn):
-        return lambda ev: fn(ev, mean=10.0, std=2.0, k=0.5, h=5.0)
+        return lambda ev: fn(ev, mean=10.0, std=2.0)
 
     return {
         "running_user_profiles": (
@@ -1635,7 +1635,7 @@ def test_stream_scoring_matches_batch_and_alert_rollup(spark, tmp_path):
 
     # alert rollup: stream (watermarked, append) ≡ batch twin
     qa = (
-        high_risk_alerts(scored_s, threshold=0.7, window="1 hour")
+        high_risk_alerts(scored_s)
         .writeStream.format("memory")
         .queryName("alerts_stream")
         .outputMode("append")
@@ -1649,8 +1649,7 @@ def test_stream_scoring_matches_batch_and_alert_rollup(spark, tmp_path):
     }
     want_a = {
         r["window_start"].isoformat(): (r["n_alerts"], str(r["score_mass"]))
-        for r in high_risk_alerts(scored_b, threshold=0.7, window="1 hour",
-                                  watermark=None).collect()
+        for r in high_risk_alerts(scored_b, watermark=None).collect()
     }
     # the stream emits only watermark-finalized windows — every one of
     # them must match the batch twin cell for cell
@@ -1673,7 +1672,7 @@ def test_stream_explained_scoring_matches_batch(spark, tmp_path):
     from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.shap import shap_terms
     from real_time_fraud_revenue_intelligence_lakehouse_spark.streaming.scoring import explain_stream
     from pyspark.sql import functions as F
-    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import GBT_BINS, _bin_expr
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import _bin_expr
 
     # train on a separable batch frame over the stream's value column
     rng = np.random.RandomState(5)
@@ -1689,7 +1688,7 @@ def test_stream_explained_scoring_matches_batch(spark, tmp_path):
     tables = []
     for tr in trees:
         i_a, i_b, i_c = (
-            _bin_expr("value", scales, GBT_BINS) <= tr["splits"][k][1] for k in (1, 2, 3)
+            _bin_expr("value", scales) <= tr["splits"][k][1] for k in (1, 2, 3)
         )
         row = train.agg(
             F.count(F.lit(1)).alias("n"),
